@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StringType}
 
+import scala.util.control.NonFatal
+
 /** GeoParquet interop — the `geo` parquet file-metadata contract that
   * makes the engine's vector frames readable as SPATIAL data by
   * geopandas/GDAL/DuckDB-spatial, and their GeoParquet artifacts
@@ -15,9 +17,10 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
   * parquet-native half next to the GPKG/SHP codecs.
   *
   * Write: WKT geometry column → WKB binary (the GeoParquet 1.0 encoding)
-  * via the engine's own WKB bridge, a one-pass stats aggregation for the
-  * file-level bbox + geometry_types, a normal distributed parquet write,
-  * then a per-file footer rewrite appending the `geo` key-value entry
+  * via the engine's own WKB bridge, in a normal distributed parquet write
+  * that also gathers the file-level bbox + geometry_types (an accumulator
+  * — no separate stats pass over the input), then a per-file footer
+  * rewrite appending the `geo` key-value entry
   * (parquet-mr `ParquetFileWriter.appendFile` — row groups are copied
   * byte-for-byte, only the footer changes). The rewrite runs ON THE
   * EXECUTORS (one task per part-file), so a 100 TB store never routes
@@ -56,12 +59,6 @@ object GeoParquet {
     s"""{"version":"1.0.0","primary_column":${q(geomCol)},"columns":{${q(geomCol)}:{"encoding":"WKB","geometry_types":$types$bb$crs}}}"""
   }
 
-  /** WKT string → WKB bytes as a column (null-propagating). */
-  private[graft] def wktToWkbCol(wkt: Column): Column = {
-    val f = udf((s: String) => if (s == null) null else GeoPackage.wktToWkb(s))
-    f(wkt)
-  }
-
   /** WKB bytes → WKT string as a column (null-propagating). */
   private[graft] def wkbToWktCol(wkb: Column): Column = {
     val f = udf((b: Array[Byte]) => if (b == null) null else GeoPackage.wkbToWkt(b, 0))
@@ -70,9 +67,10 @@ object GeoParquet {
 
   /** Write `df` as GeoParquet: `geomCol` (WKT strings) becomes a WKB
     * binary column and every part-file footer carries the `geo` entry.
-    * Stats (bbox + geometry_types) cost ONE extra aggregation pass over
-    * the two envelope columns — the scan is column-pruned to the
-    * geometry column only.
+    * `df` is evaluated once: the stats (bbox + geometry_types) are
+    * gathered by the write itself and read once it has finished. A
+    * geometry type outside the six GeoParquet types fails the call and
+    * removes the written store.
     */
   def writeGeoParquet(
       df: DataFrame,
@@ -88,21 +86,38 @@ object GeoParquet {
     require(df.schema(geomCol).dataType == StringType,
       s"$geomCol must be WKT strings, got ${df.schema(geomCol).dataType.simpleString}")
     val crsJson = crsProjjson.orElse(crsWkt.map(CrsWkt.toProjjson))
-    val stats = df.select(
-        SpatialOps.wktEnvelope(col(geomCol)).as("env"),
-        upper(regexp_extract(col(geomCol), "^\\s*([A-Za-z]+)", 1)).as("t"))
-      .agg(min(col("env.xmin")).as("x0"), min(col("env.ymin")).as("y0"),
-        max(col("env.xmax")).as("x1"), max(col("env.ymax")).as("y1"),
-        collect_set(col("t")).as("types"))
-      .head()
-    val bbox = if (stats.isNullAt(0)) None
-      else Some((stats.getDouble(0), stats.getDouble(1),
-        stats.getDouble(2), stats.getDouble(3)))
+    // The stats ride the write: the WKT→WKB conversion also feeds each
+    // row's envelope and type word into an accumulator, so `df` is
+    // evaluated once. (Not `Dataset.observe`: on Spark 4.1 it leaves a
+    // non-serializable ObservationManager on the session, and an RF
+    // model's training summary carries the session into inference tasks —
+    // m1_rf_classify failed "Task not serializable" after a write.) The type
+    // word is taken as written and upper-cased on the driver: Spark's
+    // `upper` goes through ICU case mapping, whose first use in a JVM is a
+    // costly class init.
+    val stats = new GeoStats
+    df.sparkSession.sparkContext.register(stats)
+    val toWkb = udf { (wkt: String, x0: java.lang.Double, y0: java.lang.Double,
+        x1: java.lang.Double, y1: java.lang.Double, word: String) =>
+      stats.add(GeoStats.Obs(Array(x0, y0, x1, y1), word))
+      if (wkt == null) null else GeoPackage.wktToWkb(wkt)
+    }
+    val env = SpatialOps.wktEnvelope(col(geomCol))
+    df.withColumn(geomCol, toWkb(col(geomCol),
+        env.getField("xmin"), env.getField("ymin"), env.getField("xmax"), env.getField("ymax"),
+        regexp_extract(col(geomCol), "^\\s*([A-Za-z]+)", 1)))
+      .write.mode("overwrite").parquet(path)
+    val bbox = stats.extremes match {
+      case Array(Some(x0), Some(y0), Some(x1), Some(y1)) => Some((x0, y0, x1, y1))
+      case _ => None
+    }
     // WKT word → the six spec spellings, fail-closed: a value whose first
     // word the regex couldn't extract (empty string) or that isn't one of
     // the spec's geometry types must not pass through in a non-spec
     // spelling — readers key dispatch on these strings.
-    val types = stats.getSeq[String](4).filter(_.nonEmpty).map {
+    val words = stats.words.toSeq
+      .filter(_.nonEmpty).map(_.toUpperCase(java.util.Locale.ROOT)).distinct
+    val types = try words.map {
       case "POINT" => "Point"; case "LINESTRING" => "LineString"
       case "POLYGON" => "Polygon"; case "MULTIPOINT" => "MultiPoint"
       case "MULTILINESTRING" => "MultiLineString"
@@ -110,10 +125,13 @@ object GeoParquet {
       case other => throw new IllegalArgumentException(
         s"$geomCol carries WKT type '$other' — GeoParquet geometry_types " +
           "admits only the six simple-features types")
+    }.toSeq catch {
+      case e: IllegalArgumentException =>
+        val p = new org.apache.hadoop.fs.Path(path)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+        throw e
     }
     val json = geoJson(geomCol, types, bbox, crsJson)
-    df.withColumn(geomCol, wktToWkbCol(col(geomCol)))
-      .write.mode("overwrite").parquet(path)
     // footer rewrite, one executor task per part-file (Hadoop FS listing —
     // the store can live on HDFS/S3, not just a local directory)
     val spark = df.sparkSession
@@ -165,7 +183,7 @@ object GeoParquet {
       w.end(kv)
     } catch {
       case e: Throwable =>
-        try fs.delete(tmp, false) catch { case _: Throwable => }
+        try fs.delete(tmp, false) catch { case NonFatal(_) => }
         throw e
     }
     // Swap via rename-aside (never delete-then-rename): a crash at any
@@ -221,4 +239,51 @@ object GeoParquet {
       s"primary geometry column $primary is ${df.schema(primary).dataType.simpleString}, not binary WKB")
     df.withColumn(primary, wkbToWktCol(col(primary)))
   }
+}
+
+/** Accumulated GeoParquet stats of a write: per-axis envelope extremes
+  * (xmin, ymin, xmax, ymax — NULL envelopes skipped, as SQL `min`/`max`
+  * skip them) and the distinct WKT type words. Merging is min/max/union,
+  * which is idempotent, so a retried or speculative task's updates change
+  * nothing.
+  */
+private[operators] final class GeoStats
+    extends org.apache.spark.util.AccumulatorV2[GeoStats.Obs, GeoStats] {
+  var extremes: Array[Option[Double]] = Array.fill(4)(None)
+  var words: Set[String] = Set.empty
+
+  // NaN orders above every value, as in Spark SQL
+  private def include(i: Int, v: Double): Unit = {
+    val keep = extremes(i).exists { cur =>
+      val c = java.lang.Double.compare(v, cur)
+      if (i < 2) c >= 0 else c <= 0
+    }
+    if (!keep) extremes(i) = Some(v)
+  }
+
+  override def isZero: Boolean = extremes.forall(_.isEmpty) && words.isEmpty
+  override def copy(): GeoStats = {
+    val c = new GeoStats
+    c.extremes = extremes.clone(); c.words = words
+    c
+  }
+  override def reset(): Unit = { extremes = Array.fill(4)(None); words = Set.empty }
+  override def add(o: GeoStats.Obs): Unit = {
+    var i = 0
+    while (i < 4) { if (o.env(i) != null) include(i, o.env(i).doubleValue); i += 1 }
+    if (o.word != null) words += o.word
+  }
+  override def merge(other: org.apache.spark.util.AccumulatorV2[GeoStats.Obs, GeoStats]): Unit = {
+    val o = other.value
+    (0 until 4).foreach(i => o.extremes(i).foreach(include(i, _)))
+    words ++= o.words
+  }
+  override def value: GeoStats = this
+}
+
+private[operators] object GeoStats {
+  /** One row: its envelope (xmin, ymin, xmax, ymax; entries may be NULL)
+    * and its WKT type word (NULL for a NULL geometry).
+    */
+  final case class Obs(env: Array[java.lang.Double], word: String)
 }

@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
   * Spark-first: Spark ML Pipelines (VectorAssembler + RandomForestClassifier).
   * Inference is a model transform — executors apply the broadcast model
   * per partition; no driver loops, no collect. Per-combo dispatch filters
-  * the frame per combo (a handful of passes over a cached projection, the
-  * Spark analog of the reference's 15-model batches) and unions results —
-  * each pass is a pure map, so AQE fuses scans and nothing shuffles.
+  * the frame per combo (the Spark analog of the reference's 15-model
+  * batches) and unions the results — each branch is a pure map of the
+  * apply frame, so nothing shuffles. Training is eager: Spark ML's fit
+  * reads its input several times (label range, split sampling, bagging),
+  * so fit inputs are persisted for the duration of the fit and released
+  * before the call returns.
   */
 object MlOps {
 
@@ -32,7 +35,12 @@ object MlOps {
   val DefaultDepth = 20
   val DefaultSeed = 42L
 
-  /** M2/M4 — assemble features and train an RF (reference hyperparams). */
+  /** M2/M4 — assemble features and train an RF (reference hyperparams).
+    * The fit reads its input four to five times (label range, first row,
+    * split sampling, bagging), so the columns it reads are persisted for
+    * the fit — the upstream plan runs once — and released before
+    * returning. A frame the caller already persisted is used as is.
+    */
   def trainRf(
       df: DataFrame,
       featureCols: Seq[String],
@@ -47,7 +55,18 @@ object MlOps {
       .setFeaturesCol("features").setLabelCol(labelCol)
       .setNumTrees(numTrees).setMaxDepth(math.min(maxDepth, 30)).setSeed(seed)
       .setProbabilityCol("probability")
-    new Pipeline().setStages(Array(assembler, rf)).fit(df)
+    val pipeline = new Pipeline().setStages(Array(assembler, rf))
+    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) pipeline.fit(df)
+    else {
+      // exactly the columns the fit reads, in the frame's order: the
+      // projection an unpersisted fit prunes its input to, so the rows
+      // reach the fit in the same partitions (a round-robin repartition
+      // below it deals rows out by their projected bytes)
+      val input = df.select(df.columns
+        .filter(c => c == labelCol || featureCols.contains(c)).map(col).toIndexedSeq: _*)
+        .persist()
+      try pipeline.fit(input) finally input.unpersist()
+    }
   }
 
   /** S7 — model artifact store: persist/load pipelines keyed by a stable
@@ -295,10 +314,14 @@ object MlOps {
     * (imputing only the combo's present bands). Returns the union of
     * per-combo classified frames.
     *
-    * Scale shape: K (small) filtered passes over a cached projection; each
-    * pass is map-only. Mirrors pixel_classifier_stream.py:96-136 without the
+    * Routes are the combos present on both sides: one distinct query over
+    * the apply frame, one over the training frame (persisted for the
+    * duration of the call, as every per-combo fit reads it). The returned
+    * frame is lazy: K (small) filtered map-only passes over `apply`,
+    * unioned. Mirrors pixel_classifier_stream.py:96-136 without the
     * in-place output merge — batches partition the combo key space so each
-    * row is labeled exactly once (SURVEY.md §7 hard part e).
+    * row is labeled exactly once (SURVEY.md §7 hard part e); apply combos
+    * with no training rows are dropped.
     */
   def dispatchByCombo(
       train: DataFrame,
@@ -313,11 +336,17 @@ object MlOps {
     // column name, so this key round-trips exactly.
     val routeOf = concat_ws("",
       bandCols.map(b => when(col(b).isNotNull, lit(b))): _*)
-    val trainK = train.withColumn("combo", comboOf).withColumn("__route", routeOf)
-    val applyK = apply.withColumn("combo", comboOf).withColumn("__route", routeOf).cache()
+    // the training columns the fits read, in the frame's order (see trainRf)
+    val trainK = train
+      .select(train.columns.filter(c => c == labelCol || bandCols.contains(c)).map(col).toIndexedSeq: _*)
+      .withColumn("__route", routeOf)
+      .persist()
+    val applyK = apply.withColumn("combo", comboOf).withColumn("__route", routeOf)
+    def routesOf(df: DataFrame): Set[String] =
+      df.select("__route").distinct().collect().map(_.getString(0)).toSet
     try {
-      val combos = applyK.select("__route").distinct().collect().map(_.getString(0))
-        .filter(_.nonEmpty).sorted
+      val combos = (routesOf(applyK) intersect routesOf(trainK))
+        .filter(_.nonEmpty).toSeq.sorted
       // Train per-combo models concurrently (driver threads submitting
       // independent Spark jobs — the scheduler interleaves their stages);
       // results are re-sorted by combo so the union stays deterministic.
@@ -328,24 +357,20 @@ object MlOps {
       val parts =
         try {
           implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-          val futures = combos.toSeq.map { route =>
+          val futures = combos.map { route =>
             Future {
               val bands = route.split('').toSeq
               val trainPart = trainK.filter(col("__route") === route)
-              if (trainPart.isEmpty) None
-              else {
-                val model = trainRf(trainPart.na.fill(0.0, bands), bands, labelCol, seed = seed)
-                Some(route -> classify(model, applyK.filter(col("__route") === route).na.fill(0.0, bands)))
-              }
+              val model = trainRf(trainPart.na.fill(0.0, bands), bands, labelCol, seed = seed)
+              route -> classify(model, applyK.filter(col("__route") === route).na.fill(0.0, bands))
             }
           }
-          Await.result(Future.sequence(futures), Duration.Inf)
-            .flatten.sortBy(_._1).map(_._2)
+          Await.result(Future.sequence(futures), Duration.Inf).sortBy(_._1).map(_._2)
         } finally pool.shutdown()
       parts.reduceOption(_ unionByName _)
         .getOrElse(classify(trainRf(trainK.na.fill(0.0, bandCols), bandCols, labelCol), applyK.limit(0)))
         .drop("__route")
-    } finally applyK.unpersist()
+    } finally trainK.unpersist()
   }
 
   /** J2 — dual-model fallback: prefer the precomputed lookup prediction

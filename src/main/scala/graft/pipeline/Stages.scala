@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.functions.ScalarOps
-import graft.operators.{Composite, MlOps, Regrid, Segmentation}
+import graft.operators.{Composite, MlOps, Regrid, Segmentation, TilePca}
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,6 +14,13 @@ import org.apache.spark.sql.functions._
   * rasters; tiling is partitioning, not windowing. Each stage is
   * DataFrame-in/DataFrame-out so the whole pipeline is one lazy Catalyst
   * plan unless checkpointed through parquet via `runIfMissing`.
+  *
+  * Passes: `featureStack` scans its input once (one aggregation);
+  * `prepareSegmentationFeatures` three times (PCA moments, stretch cuts,
+  * output). Two stages do eager work when called: `classifyPixels`
+  * trains its per-combo models (training columns persisted for the
+  * training, released before it returns), and `segment` runs the tile
+  * kernel once, into a local checkpoint that the returned frame reads.
   */
 object Stages {
 
@@ -69,9 +76,15 @@ object Stages {
     else Regrid.regridNearest(master, aux, masterGrid, auxGrid, valueCols)
 
   /** Stage-0 composite: per-month median NDVI bands + winter max-NDVI
-    * 7-band composite, band-concat joined into one stack per pixel
-    * (§3.1 steps 4-6). One aggregation per composite + co-partitioned
-    * joins on the pixel key — no per-scene passes.
+    * band composite, one stack row per pixel (§3.1 steps 4-6). One scan
+    * and ONE aggregation keyed by pixel compute every composite, each
+    * restricted to its months by a `when` inside the aggregate — the
+    * reference's one-sweep-per-window loop (feature_stacking.py:106-167),
+    * with no per-composite aggregation and no band-concat join.
+    *
+    * Rows: a pixel is kept when it has a row in a monthly month (its
+    * median may be NULL) or a winter row with non-NULL NDVI — the row set
+    * of a band-concat outer join of the separate composites.
     */
   def featureStack(
       scenes: DataFrame,
@@ -80,22 +93,21 @@ object Stages {
       winterMonths: Seq[Int]): DataFrame = {
     val px = Seq("px_row", "px_col")
     val indexed = withIndices(normalizeScenes(scenes, bands))
-
-    // monthly median-NDVI layers, one column per month (A1)
-    val monthly = monthlyMonths.map { m =>
-      Composite
-        .medianComposite(indexed.filter(col("month") === m), px, Seq("ndvi"))
-        .withColumnRenamed("ndvi", s"ndvi_m$m")
-    }
-
-    // winter argmax composite: full band vector at max NDVI (A2)
-    val winter = Composite
-      .argmaxComposite(indexed.filter(col("month").isin(winterMonths: _*)),
-        px, "scene_id", "ndvi", bands)
-      .select(px.map(col) ++ bands.map(b => col(b).as(s"win_$b")): _*)
-
-    // J3 — K-way band-concat equi-join on the pixel key
-    (monthly :+ winter).reduceLeft((a, b) => a.join(b, px, "outer"))
+      .filter(col("month").isin(monthlyMonths ++ winterMonths: _*))
+    val inMonthly = col("month").isin(monthlyMonths: _*)
+    val stacked = indexed.groupBy(px.map(col): _*).agg(
+      // pixel has a monthly row: the monthly side's row set
+      max(inMonthly).as("__monthly"),
+      // monthly median-NDVI layers, one column per month (A1)
+      monthlyMonths.map(m =>
+        Composite.median(when(col("month") === m, col("ndvi"))).as(s"ndvi_m$m")) :+
+        // winter argmax composite: full band vector at max NDVI (A2)
+        Composite.argmax("scene_id", "ndvi", bands,
+          where = col("month").isin(winterMonths: _*)).as("__win"): _*)
+    stacked
+      .filter(col("__monthly") || col("__win").isNotNull)
+      .select(px.map(col) ++ monthlyMonths.map(m => col(s"ndvi_m$m")) ++
+        bands.map(b => col("__win").getField(b).as(s"win_$b")): _*)
   }
 
   // ---------- Stage 1 — pixel classification (pixel_classifier_stream.py) ----------
@@ -122,10 +134,12 @@ object Stages {
     * percentile stretch of every channel, all before the gaussian+felz
     * kernel. Tiles here are derived from pixel coords (`tileSize`); the
     * PCA is the moments+power-iteration operator (A8), the stretch the
-    * two-pass percentile cuts (A4/M8) — one aggregation each, broadcast
-    * joins back.
+    * two-pass percentile cuts of every channel, pca1 included (A4/M8) —
+    * one aggregation each, one broadcast join back each. The input is
+    * scanned three times: the moments, the cuts and the output pass (the
+    * moments' broadcast is reused by the later two).
     *
-    * Returns the frame with `featOut` columns (stretched originals +
+    * Returns the frame with `<band>_8bit` columns (stretched originals +
     * stretched pca1) ready for `segment`.
     */
   def prepareSegmentationFeatures(
@@ -136,12 +150,9 @@ object Stages {
       .withColumn("seg_tile_x", floor(col("px_col") / tileSize).cast("int"))
       .withColumn("seg_tile_y", floor(col("px_row") / tileSize).cast("int"))
     val tileKey = Seq("seg_tile_x", "seg_tile_y")
-    val withPca = graft.operators.TilePca.withPca1(withTile, tileKey, bands)
-    val stretched = (bands :+ "pca1").foldLeft(withPca) { (df, b) =>
-      graft.operators.Composite.withStretch(df, tileKey, b)
-        .drop("cut_lo", "cut_hi")
-    }
-    stretched.drop("seg_tile_x", "seg_tile_y")
+    val withPca = TilePca.withPca1(withTile, tileKey, bands)
+    Composite.withStretch(withPca, tileKey, bands :+ "pca1")
+      .drop(tileKey: _*)
   }
 
   /** Halo'd felzenszwalb over tiles + polygonize; see Segmentation. */

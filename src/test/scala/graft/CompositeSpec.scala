@@ -66,7 +66,7 @@ class CompositeSpec extends AnyFunSuite {
 
   test("withStretch joins per-group cuts back and bounds output (A4/M8)") {
     val df = (1 to 100).map(i => ("t1", i.toDouble)).toDF("tile", "v")
-    val out = Composite.withStretch(df, Seq("tile"), "v")
+    val out = Composite.withStretch(df, Seq("tile"), Seq("v"))
     val vals = out.select("v_8bit").as[Double].collect()
     assert(vals.forall(v => v >= 0.0 && v <= 255.0))
     assert(vals.min == 0.0 && vals.max == 255.0) // 2%/98% cuts saturate tails

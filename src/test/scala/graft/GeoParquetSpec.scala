@@ -154,4 +154,32 @@ class GeoParquetSpec extends AnyFunSuite {
     val e2 = intercept[IllegalArgumentException](GeoParquet.readGeoParquet(spark, bad))
     assert(e2.getMessage.contains("not binary WKB"), e2.getMessage)
   }
+
+  test("stats ride the write: input evaluated once, any-case type words, fail-closed types") {
+    // every input row is evaluated once: the bbox/types are observed on
+    // the write itself, not gathered by a separate pass
+    val evals = spark.sparkContext.longAccumulator("gpq_evals")
+    val touch = udf { (s: String) => evals.add(1); s }.asNondeterministic()
+    val dir = java.nio.file.Files.createTempDirectory("graft_gpq7").toString + "/store"
+    GeoParquet.writeGeoParquet(features.withColumn("geom", touch(col("geom"))), dir, "geom")
+    assert(evals.sum == 4)
+    assert(GeoParquet.geoMetadata(dir).get.contains("\"bbox\":[0.0,-3.0,10.0,5.0]"))
+    // type words in any case map to the spec spellings
+    val mixed = Seq((1L, "point (1 2)"), (2L, "Point (3 4)"), (3L, "LineString (0 0, 1 1)"))
+      .toDF("fid", "geom")
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_gpq8").toString + "/store"
+    GeoParquet.writeGeoParquet(mixed, dir2, "geom")
+    assert(GeoParquet.geoMetadata(dir2).get
+      .contains("\"geometry_types\":[\"LineString\",\"Point\"]"))
+    // an empty frame writes a store with no bbox and no types
+    val dir3 = java.nio.file.Files.createTempDirectory("graft_gpq9").toString + "/store"
+    GeoParquet.writeGeoParquet(features.limit(0), dir3, "geom")
+    val empty = GeoParquet.geoMetadata(dir3).getOrElse("")
+    assert(empty.contains("\"geometry_types\":[]") && !empty.contains("bbox"), empty)
+    // a word outside the six types fails and leaves no GeoParquet store
+    val dir4 = java.nio.file.Files.createTempDirectory("graft_gpq10").toString + "/store"
+    val bad = Seq((1L, "POINT (1 2)"), (2L, "TRIANGLE ((0 0, 1 0, 0 1, 0 0))")).toDF("fid", "geom")
+    intercept[Exception](GeoParquet.writeGeoParquet(bad, dir4, "geom"))
+    assert(!new java.io.File(dir4).exists() || GeoParquet.geoMetadata(dir4).isEmpty)
+  }
 }
