@@ -35,6 +35,14 @@ import scala.util.control.NonFatal
   */
 object GeoParquet {
 
+  /** WKT type word (upper case) → its GeoParquet `geometry_types`
+    * spelling: the six simple-features types the spec admits.
+    */
+  private val GeometryTypes = Map(
+    "POINT" -> "Point", "LINESTRING" -> "LineString", "POLYGON" -> "Polygon",
+    "MULTIPOINT" -> "MultiPoint", "MULTILINESTRING" -> "MultiLineString",
+    "MULTIPOLYGON" -> "MultiPolygon")
+
   /** GeoParquet 1.0.0 `geo` metadata JSON (hand-emitted — keys ordered,
     * all strings escaped; the repo's Verify JSON rules).
     */
@@ -69,8 +77,10 @@ object GeoParquet {
     * binary column and every part-file footer carries the `geo` entry.
     * `df` is evaluated once: the stats (bbox + geometry_types) are
     * gathered by the write itself and read once it has finished. A
-    * geometry type outside the six GeoParquet types fails the call and
-    * removes the written store.
+    * geometry type outside the six GeoParquet types fails the write task
+    * with an IllegalArgumentException (the cause of the write's
+    * SparkException). Like any failed overwrite, a failed write leaves
+    * `path` cleared: a store that was there before is gone.
     */
   def writeGeoParquet(
       df: DataFrame,
@@ -95,10 +105,19 @@ object GeoParquet {
     // word is taken as written and upper-cased on the driver: Spark's
     // `upper` goes through ICU case mapping, whose first use in a JVM is a
     // costly class init.
+    //
+    // Fail-closed: a type word outside the six spec types must not reach
+    // geometry_types in a non-spec spelling — readers key dispatch on
+    // these strings — so it fails the row. A value whose first word the
+    // regex couldn't extract (empty) is left to the WKB encoder.
     val stats = new GeoStats
     df.sparkSession.sparkContext.register(stats)
     val toWkb = udf { (wkt: String, x0: java.lang.Double, y0: java.lang.Double,
         x1: java.lang.Double, y1: java.lang.Double, word: String) =>
+      if (word != null && word.nonEmpty && !GeometryTypes.keys.exists(_.equalsIgnoreCase(word)))
+        throw new IllegalArgumentException(
+          s"$geomCol carries WKT type '${word.toUpperCase(java.util.Locale.ROOT)}' — " +
+            "GeoParquet geometry_types admits only the six simple-features types")
       stats.add(GeoStats.Obs(Array(x0, y0, x1, y1), word))
       if (wkt == null) null else GeoPackage.wktToWkb(wkt)
     }
@@ -111,26 +130,9 @@ object GeoParquet {
       case Array(Some(x0), Some(y0), Some(x1), Some(y1)) => Some((x0, y0, x1, y1))
       case _ => None
     }
-    // WKT word → the six spec spellings, fail-closed: a value whose first
-    // word the regex couldn't extract (empty string) or that isn't one of
-    // the spec's geometry types must not pass through in a non-spec
-    // spelling — readers key dispatch on these strings.
-    val words = stats.words.toSeq
-      .filter(_.nonEmpty).map(_.toUpperCase(java.util.Locale.ROOT)).distinct
-    val types = try words.map {
-      case "POINT" => "Point"; case "LINESTRING" => "LineString"
-      case "POLYGON" => "Polygon"; case "MULTIPOINT" => "MultiPoint"
-      case "MULTILINESTRING" => "MultiLineString"
-      case "MULTIPOLYGON" => "MultiPolygon"
-      case other => throw new IllegalArgumentException(
-        s"$geomCol carries WKT type '$other' — GeoParquet geometry_types " +
-          "admits only the six simple-features types")
-    }.toSeq catch {
-      case e: IllegalArgumentException =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
-        throw e
-    }
+    // WKT words → the spec spellings (every word passed the check above)
+    val types = stats.words.toSeq.filter(_.nonEmpty)
+      .map(w => GeometryTypes(w.toUpperCase(java.util.Locale.ROOT))).distinct
     val json = geoJson(geomCol, types, bbox, crsJson)
     // footer rewrite, one executor task per part-file (Hadoop FS listing —
     // the store can live on HDFS/S3, not just a local directory)

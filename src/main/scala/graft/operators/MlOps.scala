@@ -39,7 +39,7 @@ object MlOps {
     * The fit reads its input four to five times (label range, first row,
     * split sampling, bagging), so the columns it reads are persisted for
     * the fit — the upstream plan runs once — and released before
-    * returning. A frame the caller already persisted is used as is.
+    * returning.
     */
   def trainRf(
       df: DataFrame,
@@ -55,18 +55,15 @@ object MlOps {
       .setFeaturesCol("features").setLabelCol(labelCol)
       .setNumTrees(numTrees).setMaxDepth(math.min(maxDepth, 30)).setSeed(seed)
       .setProbabilityCol("probability")
-    val pipeline = new Pipeline().setStages(Array(assembler, rf))
-    if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) pipeline.fit(df)
-    else {
-      // exactly the columns the fit reads, in the frame's order: the
-      // projection an unpersisted fit prunes its input to, so the rows
-      // reach the fit in the same partitions (a round-robin repartition
-      // below it deals rows out by their projected bytes)
-      val input = df.select(df.columns
-        .filter(c => c == labelCol || featureCols.contains(c)).map(col).toIndexedSeq: _*)
-        .persist()
-      try pipeline.fit(input) finally input.unpersist()
-    }
+    // exactly the columns the fit reads, in the frame's order: the
+    // projection an unpersisted fit prunes its input to, so the rows
+    // reach the fit in the same partitions (a round-robin repartition
+    // below it deals rows out by their projected bytes)
+    val input = df.select(df.columns
+      .filter(c => c == labelCol || featureCols.contains(c)).map(col).toIndexedSeq: _*)
+      .persist()
+    try new Pipeline().setStages(Array(assembler, rf)).fit(input)
+    finally input.unpersist()
   }
 
   /** S7 — model artifact store: persist/load pipelines keyed by a stable

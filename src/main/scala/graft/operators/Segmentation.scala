@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable
 
@@ -205,8 +204,7 @@ object Segmentation {
       tx: Int, ty: Int,
       rs: Array[Int], cs: Array[Int], cores: Array[Boolean],
       feats: Array[Array[Float]],
-      nCh: Int, scale: Double, minSize: Int, sigma: Double,
-      kernelRuns: LongAccumulator): Iterator[InternalRow] = {
+      nCh: Int, scale: Double, minSize: Int, sigma: Double): Iterator[InternalRow] = {
     val n = rs.length
     if (n == 0) return Iterator.empty
     var rMin = Int.MaxValue; var rMax = Int.MinValue
@@ -222,7 +220,6 @@ object Segmentation {
     // halo-only group (grid edge without bounds info): nothing to emit,
     // skip the kernel entirely
     if (!anyCore) return Iterator.empty
-    kernelRuns.add(1)
     val h = rMax - rMin + 1; val w = cMax - cMin + 1
     val grid = Array.ofDim[Float](nCh, h * w)
     val present = new Array[Boolean](h * w)
@@ -251,20 +248,16 @@ object Segmentation {
     out.iterator
   }
 
-  /** Name of the accumulator that counts tile-kernel runs (one per tile
-    * with core pixels per evaluation of the kernel), visible in the task
-    * and stage metrics of the Spark listener bus and UI.
-    */
-  val KernelRunsMetric = "segmentTiles.kernel_runs"
-
   /** Segment a pixel table. Input columns: global `rowCol`/`colCol` ints +
     * `featureCols` floats. Output: (px_row, px_col, tile_x, tile_y, seg_id)
     * with globally-unique, deterministic seg ids.
     *
-    * The kernel runs once per tile: its output is local-checkpointed
-    * (eagerly, one job), and both the id offsets and the returned frame
-    * read the checkpoint. The checkpoint's blocks are released with the
-    * returned frame (ContextCleaner), like BpeTrain's round checkpoints.
+    * The kernel runs once per tile: its output is persisted
+    * (MEMORY_AND_DISK, filled by the first offset pass), and the id
+    * offsets and the returned frame both read it. The persisted blocks
+    * outlive the call — the returned frame reads them — and are released
+    * when that frame is garbage-collected (ContextCleaner); a lost block
+    * is recomputed from lineage.
     */
   def segmentTiles(
       df: DataFrame,
@@ -306,7 +299,6 @@ object Segmentation {
       org.apache.spark.sql.types.StructField("local_id", org.apache.spark.sql.types.IntegerType, nullable = false)))
 
     val (nChL, scaleL, minSizeL, sigmaL) = (nCh, scale, minSize, sigma)
-    val kernelRuns = spark.sparkContext.longAccumulator(KernelRunsMetric)
     val outRdd = prepared.queryExecution.toRdd.mapPartitions { iter =>
       val rows = iter.buffered // NB: `buffered` unqualified would resolve to Iterator's own method inside the subclass below
       // one buffered tile: primitive builders filled field-by-field from
@@ -335,17 +327,16 @@ object Segmentation {
           (tx, ty, rs.result(), cs.result(), cores.result(), feats.map(_.result()))
         }
       }.flatMap { case (tx, ty, rs, cs, cores, feats) =>
-        runTileKernel(tx, ty, rs, cs, cores, feats, nChL, scaleL, minSizeL, sigmaL, kernelRuns)
+        runTileKernel(tx, ty, rs, cs, cores, feats, nChL, scaleL, minSizeL, sigmaL)
       }
     }
 
-    // Materialized once: the offsets need every tile's segment count
-    // before any id can be emitted, so without the checkpoint the prefix
-    // sum's eager passes and both sides of the join below each re-ran
-    // the kernel.
-    val labeled = org.apache.spark.sql.GraftBridge
-      .internalCreateDataFrame(spark, outRdd, outSchema)
-      .localCheckpoint()
+    // Computed once: the offsets need every tile's segment count before
+    // any id can be emitted, so without the persist the prefix sum's eager
+    // passes and both sides of the join below each re-ran the kernel. The
+    // RDD (not the Dataset) is persisted so no cache-manager entry pins it.
+    val labeled = org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
+      spark, outRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), outSchema)
 
     // W2 — running id offset over deterministic tile order (one row per
     // tile). Routed through the two-pass partition-offset prefix sum so no

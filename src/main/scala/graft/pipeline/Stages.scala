@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * output). Two stages do eager work when called: `classifyPixels`
   * trains its per-combo models (training columns persisted for the
   * training, released before it returns), and `segment` runs the tile
-  * kernel once, into a local checkpoint that the returned frame reads.
+  * kernel once, into a persisted RDD that the returned frame reads (its
+  * blocks outlive the call, until that frame is garbage-collected).
   */
 object Stages {
 

@@ -176,10 +176,22 @@ class GeoParquetSpec extends AnyFunSuite {
     GeoParquet.writeGeoParquet(features.limit(0), dir3, "geom")
     val empty = GeoParquet.geoMetadata(dir3).getOrElse("")
     assert(empty.contains("\"geometry_types\":[]") && !empty.contains("bbox"), empty)
-    // a word outside the six types fails and leaves no GeoParquet store
+    // a word outside the six types fails the write with the type named;
+    // the overwrite has cleared the store that was at the path before
     val dir4 = java.nio.file.Files.createTempDirectory("graft_gpq10").toString + "/store"
-    val bad = Seq((1L, "POINT (1 2)"), (2L, "TRIANGLE ((0 0, 1 0, 0 1, 0 0))")).toDF("fid", "geom")
-    intercept[Exception](GeoParquet.writeGeoParquet(bad, dir4, "geom"))
-    assert(!new java.io.File(dir4).exists() || GeoParquet.geoMetadata(dir4).isEmpty)
+    GeoParquet.writeGeoParquet(mixed, dir4, "geom")
+    assert(GeoParquet.geoMetadata(dir4).isDefined)
+    // (read from parquet: over a local frame the optimizer would evaluate
+    // the conversion while planning, before the write clears the path)
+    val badDir = java.nio.file.Files.createTempDirectory("graft_gpq11").toString + "/in"
+    Seq((1L, "POINT (1 2)"), (2L, "triangle ((0 0, 1 0, 0 1, 0 0))")).toDF("fid", "geom")
+      .write.parquet(badDir)
+    val bad = spark.read.parquet(badDir)
+    val e = intercept[Exception](GeoParquet.writeGeoParquet(bad, dir4, "geom"))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i }
+    assert(cause.exists(_.getMessage.contains("geom carries WKT type 'TRIANGLE'")), e)
+    val left = Option(new java.io.File(dir4).list()).getOrElse(Array.empty[String])
+    assert(!left.exists(_.endsWith(".parquet")), left.mkString(","))
   }
 }

@@ -1,10 +1,9 @@
 package graft
 
 import graft.functions.ScalarOps
-import graft.operators.{Composite, Segmentation, TilePca}
+import graft.operators.{Composite, Halo, Segmentation, TilePca}
 import graft.pipeline.Stages
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -180,23 +179,39 @@ class StagePassesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("segmentTiles runs the tile kernel once per tile") {
-    val runs = new java.util.concurrent.atomic.AtomicLong
+    // Counted on the test side from stage metrics: every run of the kernel
+    // (the mapPartitions in Segmentation.scala) over a tile reads that
+    // tile's rows, core and halo, from the tile shuffle; a stage that
+    // reads the kernel's stored output reads none of them.
+    val kernelRows = new java.util.concurrent.atomic.AtomicLong
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val marker = "stage-passes-drain"
+    @volatile var markerJob = -1
     val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        e.taskInfo.accumulables.filter(_.name.contains(Segmentation.KernelRunsMetric))
-          .foreach(_.update.foreach { case n: java.lang.Long => runs.addAndGet(n) })
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.callSite.startsWith("mapPartitions at Segmentation.scala")))
+          kernelRows.addAndGet(e.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
     }
     val grid = (for { r <- 0 until 16; c <- 0 until 16 } yield
       (r, c, if (c < 8) 0.0f else 100.0f)).toDF("px_row", "px_col", "B1")
+    val tileRows = Halo.withHalo(grid, "px_row", "px_col", 8, 8, 2).count()
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
       val out = Segmentation.segmentTiles(grid, Seq("B1"), tileH = 8, tileW = 8, pad = 2,
         scale = 10.0, minSize = 2).collect()
-      ListenerBusAccess.waitUntilEmpty(sc)
+      // listener events arrive in order: once a later job's end is seen,
+      // every stage of segmentTiles has been counted
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
       val tiles = out.map(r => (r.getAs[Int]("tile_x"), r.getAs[Int]("tile_y"))).distinct
       assert(tiles.length == 4 && out.length == 256)
-      assert(runs.get == tiles.length, s"${runs.get} kernel runs for ${tiles.length} tiles")
+      assert(kernelRows.get == tileRows, s"kernel read ${kernelRows.get} rows of $tileRows tile rows")
     } finally sc.removeSparkListener(listener)
   }
 }
