@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -20,221 +21,62 @@ object Bench {
     val bannerLine = s"[bench] run $runId ${"=" * 60}"
     for (_ <- 1 to (2000 / bannerLine.length + 2)) println(bannerLine)
     println(s"[bench] run $runId begin")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so the first measured query isn't charged for
-    // session initialization. The engine's text-hash expression trees
-    // (shingles → md5 minhash → band buckets → jaccard verify) compile
-    // once per session (~3-8 s of Janino work); running them over a
-    // two-row literal frame moves that one-time cost out of whichever
-    // query happens to touch them first, so the per-query numbers report
-    // steady-state execution, not compile-order luck.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    locally {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val tiny = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
-      // Janino caches compiled classes by generated SOURCE, and literals are
-      // inlined into it — fuzzyDupPairs(threshold=0.0) does NOT warm the
-      // threshold=0.5 tree the dedup queries actually run (measured: e10
-      // cold 6.0s vs 1.6s steady from exactly this mismatch). Warm the
-      // EXACT parameterizations e10/e12/cc1 use.
-      val pairsW = operators.Dedup.fuzzyDupPairs(tiny, threshold = 0.5, numHashes = 8, rowsPerBand = 2)
-      val compW = operators.Graph.connectedComponents(pairsW)
-      tiny.join(compW.filter(col("node") =!= col("component")).select(col("node").as("doc_id")),
-        Seq("doc_id"), "left_anti").count()
-      // e12's keep-best window over quality + coalesce-singleton shape
-      val membersW = tiny.select(col("doc_id"), functions.TextOps.qualityScore(col("text")).as("__q"))
-        .join(compW, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"), col("__q"))
-      val byCompW = org.apache.spark.sql.expressions.Window.partitionBy("component")
-      membersW.withColumn("rn", row_number().over(byCompW.orderBy(col("__q").desc, col("doc_id").asc)))
-        .filter(col("rn") === 1).count()
-      // candidate-pair + connected-components compiled stages (cc1)
-      val edges = operators.Dedup.minhashCandidatePairs(tiny, numHashes = 8, rowsPerBand = 2)
-      operators.Graph.componentSummary(operators.Graph.connectedComponents(edges)).count()
-      // Spark ML tree/forest classes + fit-job machinery (m1)
-      val mlTiny = Seq((0.0, 1.0, 0.0, 0), (1.0, 0.0, 1.0, 1), (0.5, 0.5, 0.5, 0), (0.2, 0.8, 0.1, 1))
-        .toDF("f1", "f2", "f3", "label")
-      val m = operators.MlOps.trainRf(mlTiny, Seq("f1", "f2", "f3"), "label", numTrees = 2, maxDepth = 2)
-      operators.MlOps.classify(m, mlTiny).count()
-      // parquet write committer path (s5 and the index sinks)
-      val wdir = java.nio.file.Files.createTempDirectory("graft_warm").toString
-      spark.range(8).withColumn("p", col("id") % 2)
-        .write.mode("overwrite").partitionBy("p").parquet(wdir)
-      spark.read.parquet(wdir).count()
-      // quality-gate + repetition-fold expression trees (gate1/rep1/pipe2):
-      // the pushed gate predicate and the inline'd counter fold each
-      // compile once per session (~2 s of Janino)
-      val tinyDocs = Seq((1L, "a b a b", "en"), (2L, "c d", "de"))
-        .toDF("doc_id", "text", "lang")
-      operators.Curation.qualityGate(tinyDocs).filter(col("keep")).select("doc_id").count()
-      tinyDocs.select(inline(array(functions.TextOps.repetitionCounts(
-        sort_array(functions.TextOps.shingles(functions.TextOps.tokens(col("text")), 2)))))).count()
-    }
     // optional subset for local bisection: SPARK_GRAFT_BENCH_FILTER=q1,e7
-    // (read BEFORE the warmup so bisection runs only warm what they measure)
-    val filter = sys.env.get("SPARK_GRAFT_BENCH_FILTER")
-      .map(_.split(",").toSet)
-    // Generated-code warmup against the REAL sf0.001 tables: codegen'd
-    // classes are keyed on the generated source, which bakes in the input
-    // SCHEMA — the tiny literal frames above share the operators'
-    // parameter literals but not the testdata schemas, so the heavy
-    // queries still paid 3-8 s of first-run Janino work (measured: e10
-    // 6.0 s cold vs 1.6 s steady). Running the known-heavy queries once
-    // at the smallest SF compiles the exact classes the measured run
-    // uses; the measured numbers then report steady-state execution.
+    // (the warm-up runs it too, so bisection runs only warm what they
+    // measure); fixed name order: Map iteration order varies with build,
+    // which made round-over-round per-query deltas partly an artifact of
+    // which query paid session-warmup costs
+    val selected = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.split(",").toSet)
+      .fold(SparkEntry.queries)(f => SparkEntry.queries.filter { case (k, _) => f(k) })
+      .toSeq.sortBy(_._1)
+    // The whole plan runs to a no-op sink: `count()` lets the optimizer
+    // prune most queries' plans down to a scan under the aggregate, so it
+    // would time (and warm) a different plan from the one the query is.
+    def runPlan(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    // Warm-up: every selected query once, in name order, at sf0.01, so
+    // the measured run pays neither first-run codegen (generated classes
+    // are keyed on the generated source, which bakes in the input schema
+    // and the query's literals) nor the JIT ramp of the hot loops, which
+    // only tier up at real data volume. Skipped when sf0.01 is absent or
+    // is the measured SF itself (never warm at the measured scale).
+    // Per-JVM fixture memos are keyed on the data dir (rfModelCache,
+    // dedupIdxCache, s22b) or on data-independent config (g11PrjCache),
+    // so nothing computed here can serve a measured query.
     locally {
-      val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (warmDir.isDirectory) {
-        // r16: the warm list below grew one cold-flagged query at a time
-        // (r10-r13 bisect dossiers) while the cold-vs-warm gap stayed
-        // spread across the WHOLE registry — BENCH_r15 driver-cold 305 s
-        // vs committed warm 187 s, ~135 s of it per-query first-run
-        // codegen/planning in the long tail (0.1-0.7 s × 300 queries, the
-        // same Janino cost the list's 30 entries already shift). Warm
-        // EVERY registered query at sf0.001: generated classes are keyed
-        // on generated source (schema + literals baked in), so only the
-        // exact parameterization a query runs is compiled, and the
-        // measured sf0.1 numbers report steady-state execution for all
-        // queries instead of list membership luck. Per-JVM fixture memos
-        // are keyed on the data dir (rfModelCache/dedupIdxCache/s22b) or
-        // on data-independent config (g11PrjCache), so a sf0.001 warmup
-        // cannot leak results into the measured scale factor — every
-        // measured query still computes from the sf0.1 parquet.
-        val heavy = Seq(
-          "e10_fuzzy_dedup_keep", "e12_keep_best_quality", "cc1_dup_components",
-          "e14_simhash_neardup",
-          "e2b_lsh_pairs", "e7_jaccard_verify", "e3b_ivf_topk", "e8_embedding_neardup",
-          "e11_decontaminate", "pipe1_curation", "pipe2_curation_v2",
-          "url1_domain_filter", "tfidf1_top_terms", "rep1_ngram_repetition",
-          "m5_segment_polygonize", "j6_range_join",
-          "q3_shipping_priority", "st4_interval_join", "samp2_stratified",
-          "e13_bloom_decontaminate", "inc1_incremental_dedup",
-          "span1_repeated_spans", "cap1_source_cap",
-          "leak1_split_leakage", "pipe3_mix_construction",
-          // r10: tfidf2's driver-cold flag bisected to host noise (three
-          // isolated colds 2.34/2.56/2.80 s, warm 2.69 s, same code the r9
-          // builder-cold measured at 2.11 s); warming its window+HOF+agg
-          // shapes shrinks the first-run surface a steal burst can amplify
-          "tfidf2_pair_similarity",
-          // r11: bm25_1's 7.75 s r10 driver-cold survived the min-of-two
-          // rescue (burst spanned both samples) while two judge colds and
-          // the builder bisect all land 1.7-2.1 s — same e14/tfidf2
-          // treatment: warm its posting+TopKPerKey shapes at sf0.001
-          "bm25_1_ranked_retrieval",
-          // r12: g11/g13 r11 driver-colds (6.16/3.21 s) vs judge's
-          // controlled fresh-JVM reruns (2.09/2.12 s) — same host-steal
-          // signature as bm25_1; warming compiles the staged Snyder-series
-          // Column chains + coordinate-array HOFs once at sf0.001 so a
-          // steal burst can't amplify first-run codegen (bisect dossier in
-          // NOTES_BUILDER.md)
-          "g11_wkt_reproject", "g13_vector_reproject",
-          // r12: the new scale-path queries — fz2's triple-Generate +
-          // three-key equi-join and e14b's 60-lane kernel are exactly
-          // the codegen-heavy first-run shapes this list exists for
-          "fz2_segment_match", "e14b_simhash_wide", "e8b_embedding_banded",
-          // r13: q8_cube/q7b r12 driver-colds (6.58/3.69 s) vs 0.28/0.57 s
-          // warm on code untouched since r4, adjacent in run order — the
-          // bm25_1/g11 host-steal signature; warming compiles the Expand
-          // cube plan and the double-broadcast dim join once at sf0.001
-          // (bisect dossier in NOTES_BUILDER.md)
-          "q8_cube", "q7b_volume_shipping")
-        // historical list first (its entries carry the bisect dossiers),
-        // then the rest of the registry in name order
-        val allNames = heavy ++
-          (SparkEntry.queries.keys.toSeq.sorted.filterNot(heavy.toSet))
-        val toWarm = filter match {
-          case Some(f) => allNames.filter(f)
-          case None => allNames
-        }
-        for (n <- toWarm; fn <- SparkEntry.queries.get(n))
-          try fn(spark, warmDir.toString).count() catch { case _: Throwable => }
-        // Drop anything the warmup left cached (Spark ML fits persist
+      val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01")
+      if (warmDir.isDirectory &&
+          warmDir.getCanonicalPath != new java.io.File(sfDir).getCanonicalPath) {
+        val t0 = System.nanoTime()
+        for ((_, fn) <- selected)
+          try runPlan(fn(spark, warmDir.toString)) catch { case NonFatal(_) => }
+        // Drop anything the warm-up left cached (Spark ML fits persist
         // training frames internally): measured queries must not compete
-        // with warmup leftovers for storage/execution memory.
+        // with warm-up leftovers for storage/execution memory.
         spark.sqlContext.clearCache()
+        System.err.println(f"[bench] warm-up: ${selected.size} queries at sf0.01 in " +
+          f"${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
-    }
-    // r17 (measurement hygiene, VERDICT r16 item 6 — disclosed in
-    // OPTIMIZATION_r17.md): the sf0.001 warmup compiles the generated
-    // classes but leaves the C2 JIT ramp — the md5/shingle/token loops
-    // only get hot at real data volume, so the slow-tail queries' FIRST
-    // sf0.1 runs measured 1.5-6x their steady state even fully
-    // code-warmed (cap1 6.06 s driver-cold vs 0.95 s steady; e7/hist2/
-    // fz2 similar). One pass at sf0.01 for the measured slow-tail list
-    // (BENCH_r16's slowest-60) tiers the ramp OUTSIDE the timed loop.
-    // Same leak rules as the sf0.001 warmup: per-JVM fixture memos are
-    // keyed on the data dir, so nothing computed here can serve a
-    // measured sf0.1 query; the guard skips the pass when the measured
-    // SF IS sf0.01 (never warm at the measured scale).
-    locally {
-      val rampDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.01")
-      val measured = new java.io.File(sfDir)
-      if (rampDir.isDirectory &&
-          rampDir.getCanonicalPath != measured.getCanonicalPath) {
-        val ramp = Seq(
-          "b1_bucketed_join", "bm25_1_ranked_retrieval", "bpe2_bpe_train",
-          "cap1_source_cap", "cc2_components_distributed", "cms2_heavy_hitters",
-          "cms4_cms_merge", "dsir1_importance_resample", "e12_keep_best_quality",
-          "e13_bloom_decontaminate", "e14_simhash_neardup", "e16b_semdedup_sqrtn",
-          "e2b_lsh_pairs", "e3b_ivf_topk", "e3f_ivf_trained", "e7_jaccard_verify",
-          "e8b_embedding_banded", "fz2_segment_match", "g10_albers_reproject",
-          "g11_wkt_reproject", "g13_vector_reproject", "g13b_multipoint_reproject",
-          "g14_epsg_reproject", "g4_regrid_cubic", "g5_reproject",
-          "g6_utm_reproject", "g7_webmercator_reproject", "g9_datum_shift",
-          "gh1_geohash_bucket", "gh3_proximity_join", "gh4_geohash_cover",
-          "hist2_price_deciles", "hn1_hard_negatives", "j22_clip_pair",
-          "j28_clip_general_geom", "km2_kmeans_train", "kmv1_distinct_sketch",
-          "kmv3_set_difference", "kmv4_jaccard", "lm2_bigram_logprob",
-          "m1_rf_classify", "pipe2_curation_v2", "pipe3_mix_construction",
-          "pmi1_collocations", "pr1_dup_pagerank", "q10_returned_rev",
-          "q21_last_shipper", "qs3_grouped_quantiles", "qs4_quantile_rollup",
-          "s20_geotiff_sink", "s22_geoparquet_roundtrip", "s5_partitioned_sink",
-          "tfidf1_top_terms", "tfidf2_pair_similarity", "tri1_dup_triangles",
-          "zm1_zonemap_skip", "zo1_zorder_skip", "zo2_hilbert_skip",
-          "zo3_hilbert_ranges", "zo4_hilbert_frontdoor")
-        val toRamp = filter match {
-          case Some(f) => ramp.filter(f)
-          case None => ramp
-        }
-        for (n <- toRamp; fn <- SparkEntry.queries.get(n))
-          try fn(spark, rampDir.toString).count() catch { case _: Throwable => }
-        spark.sqlContext.clearCache()
-      }
-    }
-    val selected = filter match {
-      case Some(f) => SparkEntry.queries.filter { case (k, _) => f(k) }
-      case None => SparkEntry.queries
     }
     // local bisection: SPARK_GRAFT_BENCH_REPEAT=N times each query N times
-    // and keeps the LAST timing (separates steady-state cost from one-time
-    // codegen/broadcast compile). The driver never sets it (default 1).
+    // and reports the min of the runs after the first (separates
+    // steady-state cost from one-time codegen/broadcast compile). A cold
+    // run leaves it unset (default 1).
     val repeat = sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt).getOrElse(1)
-    // fixed name order: Map iteration order varies with build, which made
-    // round-over-round per-query deltas partly an artifact of which query
-    // paid session-warmup costs
-    // Per-query exceptions are NEVER anonymous: every throw is recorded
-    // (query name, class, message, first in-repo trace frame) and dumped
-    // to _bench_errors.json + counted in the metric line — the r7 bench
-    // log ended with an unattributable stack trace because this swallowed
-    // Throwable silently.
+    // Per-query exceptions are NEVER anonymous: every non-fatal throw is
+    // recorded (query name, class, message, first in-repo trace frame) and
+    // dumped to _bench_errors.json + counted in the metric line — the r7
+    // bench log ended with an unattributable stack trace because this
+    // swallowed Throwable silently. A fatal error (OOM) is not one query's
+    // failure: it escapes to `attributable` below and stops the run.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timeOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
+      try runPlan(fn(spark, sfDir)) catch {
+        case NonFatal(e) =>
           val frame = e.getStackTrace.find(_.getClassName.startsWith("graft"))
             .map(f => s"${f.getClassName}.${f.getMethodName}:${f.getLineNumber}")
             .getOrElse("<no graft frame>")
@@ -298,7 +140,7 @@ object Bench {
             try {
               val p = java.nio.file.Paths.get("_bench_errors.json")
               new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim
-            } catch { case _: Throwable => "" }
+            } catch { case NonFatal(_) => "" }
           val inner =
             if (t.startsWith("{") && t.endsWith("}")) t.substring(1, t.length - 1).trim
             else ""
@@ -309,7 +151,7 @@ object Bench {
         val prefix = if (priorInner.isEmpty) "" else priorInner + ","
         val w = new java.io.PrintWriter("_bench_errors.json")
         try w.println("{" + prefix + s"${jstr(runId)}:$thisRun" + "}") finally w.close()
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
     // Runner-level failures (anything that escapes timeOnce's per-query
     // guard — an OOM in the map itself, a crash while rendering) must be
     // as attributable as per-query ones: record under "__runner__", dump
@@ -325,7 +167,7 @@ object Bench {
           dumpErrors()
           throw e
       }
-    val results = attributable { selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = attributable { selected.map { case (name, fn) =>
       // repeat > 1 (local warm mode): report the MIN of the post-first
       // samples, not the last — keeping the last let a single CPU-steal
       // burst write a 15.4 s g13 into BENCH_WARM (real: 2.0-2.7 s). The
@@ -385,7 +227,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter(artifact)
       try w.println(render(results, 0)) finally w.close()
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     spark.stop()
   }
 }

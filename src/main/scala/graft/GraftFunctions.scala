@@ -1,14 +1,13 @@
 package graft
 
 import graft.functions.{BBoxIntersectsExpr, CosineSimExpr, PointInRingsExpr, RegionDistSqExpr, RingsIntersectExpr, SortedIntersectCountExpr, TextOps, WithinDistExpr}
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The engine's SQL function catalog — ONE list consumed both by
-  * `GraftExtensions.injectFunction` (builder-time install) and by
-  * `register(spark)` (post-hoc install on plain-builder sessions such as
-  * Verify/Bench). Custom codegen'd expressions and Column-composition
+/** The engine's SQL function catalog — ONE list, installed by
+  * `GraftExtensions.injectFunction` when `GraftSession.builder` builds
+  * the session. Custom codegen'd expressions and Column-composition
   * functions share the registry so SQL and DataFrame users get the same
   * engine with no drift.
   */
@@ -333,17 +332,4 @@ object GraftFunctions {
         "adjacent-consecutive clustering key behind writeHilbertOrdered — " +
         "quantize and CAST coordinates to BIGINT first (fail-closed on range)", 3)(
       (cs, p) => graft.functions.HilbertExprs.indexCol(cs(0), cs(1), p)))
-
-  /** Idempotent post-hoc registration on a live session: the function
-    * catalog plus the spatial-join rewrite rule (via the public
-    * `experimental.extraOptimizations` hook — plain-builder sessions have
-    * no SparkSessionExtensions), so `st_bbox_intersects` joins re-plan as
-    * the binned equi-join everywhere, not just under GraftSession.
-    */
-  def register(spark: SparkSession): Unit = {
-    all.foreach { case (id, i, b) => GraftBridge.registerFunction(spark, id, i, b) }
-    val ex = spark.experimental
-    if (!ex.extraOptimizations.exists(_.isInstanceOf[graft.plans.SpatialJoinRewrite]))
-      ex.extraOptimizations = ex.extraOptimizations :+ graft.plans.SpatialJoinRewrite(spark)
-  }
 }

@@ -3020,13 +3020,12 @@ object SparkEntry {
       .orderBy("doc_id")
 
   /** sql1 — the pure-SQL user path through the driver gate: the engine's
-    * registered SQL functions (GraftFunctions catalog, installed post-hoc
-    * on this plain-builder session) over a temp view — no DataFrame API in
-    * the query itself. Hash-matching the oracle proves the SQL surface is
+    * registered SQL functions (the GraftFunctions catalog the session
+    * was built with) over a temp view — no DataFrame API in the query
+    * itself. Hash-matching the oracle proves the SQL surface is
     * the same engine as the Column surface.
     */
   private def sql1(s: SparkSession, d: String) = {
-    GraftFunctions.register(s)
     Tables.documents(s, d).createOrReplaceTempView("graft_docs")
     s.sql(
       """SELECT doc_id, graft_token_count(text) AS n_tokens,
@@ -5711,13 +5710,11 @@ object SparkEntry {
 
   /** sql2 — the SQL-first SPATIAL path through the driver gate: the
     * registered `st_bbox_intersects` predicate in a plain SQL inner join,
-    * re-planned by SpatialJoinRewrite (installed post-hoc via
-    * experimental.extraOptimizations on this plain-builder session) into
-    * the binned PBSM equi-join. Same pair set as j11's DataFrame operator.
+    * re-planned by SpatialJoinRewrite (a GraftExtensions optimizer rule)
+    * into the binned PBSM equi-join. Same pair set as j11's DataFrame operator.
     */
   private def sql2(s: SparkSession, d: String) = {
     import graft.functions.SpatialOps
-    GraftFunctions.register(s)
     def box(key: Column): Seq[Column] = Seq(
       key % 97, key % 89, key % 97 + lit(1) + key % 5, key % 89 + lit(1) + key % 7)
     Tables.supplier(s, d).select(col("s_suppkey"),

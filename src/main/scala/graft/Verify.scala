@@ -1,9 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** The dump session's only departure from `GraftSession.builder`.
+    * INT96 timestamps read back in DuckDB as `TIMESTAMP`, the type the
+    * oracle's results carry; TIMESTAMP_MICROS (the engine default, which
+    * the zone map's footer stats need) reads as `TIMESTAMP WITH TIME
+    * ZONE`, so every window-timestamp result would fail the oracle on
+    * schema and hash although its rows are identical. The override is
+    * session-wide: stores the queries write during the dump are INT96
+    * too, and `ZoneMap.build` reads their timestamp columns through its
+    * scan fallback instead of footer stats (same result).
+    */
+  val sessionOverrides: Map[String, String] =
+    Map("spark.sql.parquet.outputTimestampType" -> "INT96")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only; the driver passes 2): run
@@ -11,14 +25,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config(sessionOverrides).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A throwing query must surface as an explicit failure, never a silently
@@ -30,7 +38,7 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
       }

@@ -73,15 +73,6 @@ object SpatialOps {
 
   private def ringPts(r: Column): Column = WktParse.ptsCol(r)
 
-  /** Pre-r17 chain spelling of [[ringPts]] — WktEmitSpec's parse
-    * equivalence reference only (regex + interpreted HOF lambdas per
-    * vertex; [[WktParse]] is the single-pass twin).
-    */
-  private[graft] def ringPtsChain(r: Column): Column =
-    transform(filter(split(r, ","), s => trim(s) =!= ""), p => struct(
-      element_at(split(trim(p), " +"), 1).cast("double").as("x"),
-      element_at(split(trim(p), " +"), 2).cast("double").as("y")))
-
   /** WKT POLYGON (or MULTIPOLYGON / MULTILINESTRING — any innermost
     * coordinate group) → array of rings, each an array of (x,y) structs
     * (closed: first point repeats last, as WKT requires for rings). The
@@ -91,14 +82,6 @@ object SpatialOps {
     * subtract), perimeter/moments/counts are plain sums over rings.
     */
   def wktRings(wkt: Column): Column = WktParse.ringsCol(wkt)
-
-  /** Pre-r17 chain spelling of [[wktRings]] — WktEmitSpec's parse
-    * equivalence reference only.
-    */
-  private[graft] def wktRingsChain(wkt: Column): Column =
-    transform(
-      regexp_extract_all(wkt, lit("\\(([^()]+)\\)"), lit(1)),
-      r => ringPtsChain(r))
 
   /** The INVERSE of [[wktRings]] — parsed rings back to a WKT POLYGON
     * string, so computed geometry (the clip_*_geom emissions, traced
@@ -110,25 +93,6 @@ object SpatialOps {
     * all-empty input renders the OGC `POLYGON EMPTY`.
     */
   def ringsToWkt(rings: Column): Column = WktEmit.polygon(rings)
-
-  /** The pre-r17 Column-chain spelling of [[ringsToWkt]], kept ONLY as
-    * the equivalence reference for WktEmitSpec's kernel ≡ chain gate —
-    * the `transform` HOF lambdas here are interpreted per vertex with a
-    * UTF8String allocation per concat node (guide §4), which is what
-    * the kernel removes.
-    */
-  private[graft] def ringsToWktChain(rings: Column): Column = {
-    val nonEmpty = filter(rings, r => size(r) > 0)
-    when(size(nonEmpty) === 0, lit("POLYGON EMPTY")).otherwise(
-      concat(lit("POLYGON ("),
-        array_join(transform(nonEmpty, r =>
-          concat(lit("("),
-            array_join(transform(r, p =>
-              concat(p.getField("x").cast("string"), lit(" "),
-                p.getField("y").cast("string"))), ", "),
-            lit(")"))), ", "),
-        lit(")")))
-  }
 
   // ---- WKT-level geometry constructors (r16): parse → construct → emit
   // in one Column composition, so a WKT store round-trips through the
@@ -718,15 +682,6 @@ object SpatialOps {
     * engine's own WKT.
     */
   private def ringsToWktBody(rings: Column): Column = WktEmit.body(rings)
-
-  /** Pre-r17 chain spelling of [[ringsToWktBody]] — WktEmitSpec's
-    * equivalence reference only (see [[ringsToWktChain]]).
-    */
-  private[graft] def ringsToWktBodyChain(rings: Column): Column =
-    concat_ws(", ", transform(rings, r => concat(lit("("),
-      concat_ws(", ", transform(r, p => concat(
-        p.getField("x").cast("string"), lit(" "), p.getField("y").cast("string")))),
-      lit(")"))))
 
   private def mapPts(pts: Column, t: graft.operators.Regrid.Transform2D): Column =
     transform(pts, p => {

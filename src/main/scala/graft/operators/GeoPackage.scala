@@ -203,8 +203,10 @@ object GeoPackage {
     wkbParse(b, off0)._1
 
   /** Cursor parser: one walk yields both the WKT text and the byte
-    * count consumed (nested MultiPolygon members advance the parent
-    * cursor with no second parse). */
+    * count consumed (nested Multi* members advance the parent cursor
+    * with no second parse). MULTIPOINT members print parenthesized,
+    * `MULTIPOINT ((1 2), (3 4))`, the spelling the engine's WKT emitters
+    * use. */
   private def wkbParse(b: Array[Byte], off0: Int): (String, Int) = {
     var off = off0
     val le = b(off) == 1; off += 1
@@ -228,23 +230,24 @@ object GeoPackage {
       val n = rd32().toInt
       (0 until n).map(_ => pt()).mkString("(", ", ", ")")
     }
+    def members(kind: String): String =
+      (0 until rd32().toInt).map { _ =>
+        val (sub, consumed) = wkbParse(b, off)
+        require(sub.startsWith(kind + " "), s"MULTI$kind member is not a ${kind.toLowerCase}: $sub")
+        off += consumed
+        sub.stripPrefix(kind + " ")
+      }.mkString("(", ", ", ")")
     val wkt = rd32() match {
       case 1 => s"POINT (${pt()})"
       case 2 => s"LINESTRING ${ring()}"
       case 3 =>
         val nRings = rd32().toInt
         s"POLYGON ${(0 until nRings).map(_ => ring()).mkString("(", ", ", ")")}"
-      case 6 =>
-        // MultiPolygon: each member is a COMPLETE nested WKB polygon
-        // (its own byte-order byte + type 3), per the WKB spec
-        val nPolys = rd32().toInt
-        val members = (0 until nPolys).map { _ =>
-          val (sub, consumed) = wkbParse(b, off)
-          require(sub.startsWith("POLYGON "), s"MULTIPOLYGON member is not a polygon: $sub")
-          off += consumed
-          sub.stripPrefix("POLYGON ")
-        }
-        s"MULTIPOLYGON ${members.mkString("(", ", ", ")")}"
+      // Multi* geometries: each member is a COMPLETE nested WKB geometry
+      // (its own byte-order byte + type word), per the WKB spec
+      case 4 => s"MULTIPOINT ${members("POINT")}"
+      case 5 => s"MULTILINESTRING ${members("LINESTRING")}"
+      case 6 => s"MULTIPOLYGON ${members("POLYGON")}"
       case other => throw new IllegalArgumentException(s"WKB type $other unsupported")
     }
     (wkt, off - off0)
@@ -429,10 +432,11 @@ object GeoPackage {
     gpkgBlobOfWkb(wkb.array(), srsId)
   }
 
-  /** WKT POINT/LINESTRING/POLYGON → little-endian WKB — the encode half of
-    * [[wkbToWkt]] (the write path the reference exercises,
+  /** WKT → little-endian WKB, for the six simple-features types — the
+    * encode half of [[wkbToWkt]] (the write path the reference exercises,
     * object_classifier.py:193-213). Round-trip contract: wkbToWkt ∘
     * wktToWkb is the identity on the engine's canonical WKT spelling.
+    * MULTIPOINT takes both spellings, `(1 2, 3 4)` and `((1 2), (3 4))`.
     */
   private[graft] def wktToWkb(wkt: String): Array[Byte] = {
     val s = wkt.trim
@@ -446,55 +450,52 @@ object GeoPackage {
         require(nums.length == 2, s"bad WKT coordinate '$p'")
         (nums(0).toDouble, nums(1).toDouble)
       }
-    // split "(...), (...)" at top-level commas between ring groups
-    def rings(b: String): Seq[Seq[(Double, Double)]] = {
+    // the top-level groups of "(g1, g2, …)", each without its own
+    // enclosing parentheses (nested ones kept): ring lists of a POLYGON,
+    // member bodies of a MULTILINESTRING/MULTIPOLYGON
+    def groups(b: String): Seq[String] = {
       val inner = b.trim.stripPrefix("(").stripSuffix(")")
       val out = scala.collection.mutable.ArrayBuffer.empty[String]
       var depth = 0; val cur = new StringBuilder
       inner.foreach {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) { out += cur.toString; cur.clear() }
+        case '(' => if (depth > 0) cur += '('; depth += 1
+        case ')' => depth -= 1; if (depth == 0) { out += cur.toString; cur.clear() } else cur += ')'
         case c if depth > 0 => cur += c
-        case _ => // separators between ring groups
+        case _ => // separators between groups
       }
-      out.toSeq.map(pts)
+      out.toSeq
     }
     def buf(cap: Int) = java.nio.ByteBuffer.allocate(cap)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).put(1.toByte)
+    def point(x: Double, y: Double) = buf(1 + 4 + 16).putInt(1).putDouble(x).putDouble(y).array()
+    def line(ps: Seq[(Double, Double)]) = {
+      val b = buf(1 + 4 + 4 + 16 * ps.length).putInt(2).putInt(ps.length)
+      ps.foreach { case (x, y) => b.putDouble(x).putDouble(y) }
+      b.array()
+    }
+    // Multi*: a count, then each member as a complete nested WKB geometry
+    def multi(code: Int, parts: Seq[Array[Byte]]) = {
+      require(parts.nonEmpty, s"empty $kind body: $wkt")
+      val b = buf(1 + 4 + 4 + parts.map(_.length).sum).putInt(code).putInt(parts.length)
+      parts.foreach(b.put)
+      b.array()
+    }
     kind match {
       case "POINT" =>
         val Seq((x, y)) = pts(body.stripPrefix("(").stripSuffix(")"))
-        buf(1 + 4 + 16).putInt(1).putDouble(x).putDouble(y).array()
-      case "LINESTRING" =>
-        val ps = pts(body.stripPrefix("(").stripSuffix(")"))
-        val b = buf(1 + 4 + 4 + 16 * ps.length).putInt(2).putInt(ps.length)
-        ps.foreach { case (x, y) => b.putDouble(x).putDouble(y) }
-        b.array()
+        point(x, y)
+      case "LINESTRING" => line(pts(body.stripPrefix("(").stripSuffix(")")))
       case "POLYGON" =>
-        val rs = rings(body)
+        val rs = groups(body).map(pts)
         val b = buf(1 + 4 + 4 + rs.map(4 + 16 * _.length).sum).putInt(3).putInt(rs.length)
         rs.foreach { r =>
           b.putInt(r.length)
           r.foreach { case (x, y) => b.putDouble(x).putDouble(y) }
         }
         b.array()
-      case "MULTIPOLYGON" =>
-        // split "((...)), ((...))" into member polygon groups at depth 1,
-        // encode each as a complete nested WKB polygon (WKB spec)
-        val inner = body.trim.stripPrefix("(").stripSuffix(")")
-        val members = scala.collection.mutable.ArrayBuffer.empty[String]
-        var depth = 0; val cur = new StringBuilder
-        inner.foreach {
-          case '(' => depth += 1; cur += '('
-          case ')' => depth -= 1; cur += ')'; if (depth == 0) { members += cur.toString; cur.clear() }
-          case c if depth > 0 => cur += c
-          case _ => // separators between member groups
-        }
-        require(members.nonEmpty, s"empty MULTIPOLYGON body: $wkt")
-        val parts = members.toSeq.map { m => wktToWkb(s"POLYGON $m") }
-        val b = buf(1 + 4 + 4 + parts.map(_.length).sum).putInt(6).putInt(parts.length)
-        parts.foreach(b.put)
-        b.array()
+      case "MULTIPOINT" => multi(4, pts(body.filterNot("()".contains(_))).map { case (x, y) => point(x, y) })
+      case "MULTILINESTRING" => multi(5, groups(body).map(g => line(pts(g))))
+      case "MULTIPOLYGON" => multi(6, groups(body).map(m => wktToWkb(s"POLYGON ($m)")))
       case other => throw new IllegalArgumentException(s"WKT type $other unsupported")
     }
   }

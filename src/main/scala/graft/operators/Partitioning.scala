@@ -27,7 +27,7 @@ object Partitioning {
       case _: RepartitionOperation | _: Join | _: Aggregate | _: WindowPlan | _: Sort => true
       case _ => false
     }
-    val files = try df.inputFiles.length catch { case _: Throwable => 0 }
+    val files = try df.inputFiles.length catch { case scala.util.control.NonFatal(_) => 0 }
     if (!reshuffled && files > 0 && files < target) df.repartition(target) else df
   }
 }

@@ -21,18 +21,6 @@ object GraftBridge {
   def toCatalyst(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
 
-  /** Register a SQL function on an ALREADY-BUILT session (sessionState is
-    * private[sql]) — the post-hoc twin of SparkSessionExtensions
-    * .injectFunction for plain-builder sessions (Verify/Bench).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      id: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(id, info, builder)
-
   /** DataFrame from a hand-built LogicalPlan (Dataset.ofRows is
     * private[sql]) — needed to insert custom logical nodes like
     * graft.plans.TopKPerKey.

@@ -92,7 +92,6 @@ class BufferSpec extends AnyFunSuite {
   }
 
   test("SQL surface matches the Column form") {
-    GraftFunctions.register(spark)
     Seq("POLYGON ((2 3, 6 3, 6 7, 2 7, 2 3))").toDF("g").createOrReplaceTempView("buffix")
     val viaSql = spark.sql(
       "SELECT st_buffer_convex(element_at(st_rings(g), 1), CAST(1.5 AS DOUBLE))[0] FROM buffix")

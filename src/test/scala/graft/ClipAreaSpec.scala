@@ -330,7 +330,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("SQL surface: st_clip_area_multipolygon matches the Column form") {
-    GraftFunctions.register(spark)
     val dartHole = "POLYGON ((5 7, 3 3, 5 4, 7 3, 5 7), " +
       "(5.5 4.5, 5.75 4.75, 6 4.5, 5.5 4.5))"
     Seq((arrowHole, dartHole)).toDF("g", "c").createOrReplaceTempView("clipmulti")
@@ -345,7 +344,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("SQL surface: st_clip_area_poly/general/polygon match the Column forms") {
-    GraftFunctions.register(spark)
     Seq((arrowHole, dartWkt(5, 5, 2))).toDF("g", "c").createOrReplaceTempView("clipgen")
     val viaSql = spark.sql(
       """SELECT st_clip_area_general(st_rings(g), element_at(st_rings(c), 1)) AS a,
@@ -404,7 +402,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("SQL surface: st_clip_area matches the Column form") {
-    GraftFunctions.register(spark)
     Seq(arrowHole).toDF("g").createOrReplaceTempView("clipspec")
     val viaSql = spark.sql(
       """SELECT st_clip_area(st_rings(g), named_struct(
@@ -542,7 +539,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("SQL surface: st_clip_box_geom / st_clip_poly_geom / st_rings_wkt match the Column forms") {
-    GraftFunctions.register(spark)
     Seq(arrowHole).toDF("g").createOrReplaceTempView("clipgeospec")
     val viaSql = spark.sql(
       """SELECT st_rings_wkt(st_clip_box_geom(st_rings(g), named_struct(
@@ -583,7 +579,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("general emission: WKT front door renders a valid tiling, fail-closed on bowties") {
-    GraftFunctions.register(spark)
     // a dart overlapping the arrow: pieces render as POLYGON/MULTIPOLYGON
     // via the winding-aware auto emitter; re-parsing measures the same
     // total area the general kernel reports (Column re-fold: ulp-close)
@@ -643,7 +638,6 @@ class ClipAreaSpec extends AnyFunSuite {
   }
 
   test("box difference: WKT front door + SQL surface match the Column forms") {
-    GraftFunctions.register(spark)
     Seq(arrowHole).toDF("g").createOrReplaceTempView("diffspec")
     val viaSql = spark.sql(
       """SELECT st_rings_wkt_auto(st_difference_box_geom(st_rings(g), named_struct(

@@ -97,6 +97,24 @@ class GeoPackageSpec extends AnyFunSuite {
     assert(back.filter(col("fid") === 99).head().getString(1) == hole)
   }
 
+  test("writeLayer round-trips all six geometry types; both MULTIPOINT spellings") {
+    import spark.implicits._
+    val six = Seq(
+      "POINT (4.5 -1.25)",
+      "LINESTRING (0.0 0.0, 1.5 2.5, 3.0 0.0)",
+      "POLYGON ((0.0 0.0, 2.0 0.0, 2.0 1.0, 0.0 0.0))",
+      "MULTIPOINT ((1.0 2.0), (3.0 4.0))",
+      "MULTILINESTRING ((0.0 0.0, 1.0 1.0), (2.0 2.0, 3.0 1.0, 4.0 4.0))",
+      "MULTIPOLYGON (((0.0 0.0, 1.0 0.0, 1.0 1.0, 0.0 0.0)), " +
+        "((5.0 5.0, 9.0 5.0, 9.0 9.0, 5.0 5.0), (6.0 6.0, 7.0 6.0, 7.0 7.0, 6.0 6.0)))",
+      "MULTIPOINT (5.0 6.0, -7.5 8.25)")
+    val src = six.zipWithIndex.map { case (g, i) => (i.toLong + 1, g) }.toDF("fid", "geom")
+    val back = GeoPackage.readLayer(spark, GeoPackage.writeLayer(src, "six"), "six")
+      .orderBy("fid").select("geom").as[String].collect().toSeq
+    // the bare MULTIPOINT spelling comes back parenthesized (canonical)
+    assert(back == six.updated(6, "MULTIPOINT ((5.0 6.0), (-7.5 8.25))"))
+  }
+
   test("writeLayerFiles shards one file per key and reads back as a union") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_gpkg_w").toString

@@ -194,4 +194,25 @@ class GeoParquetSpec extends AnyFunSuite {
     val left = Option(new java.io.File(dir4).list()).getOrElse(Array.empty[String])
     assert(!left.exists(_.endsWith(".parquet")), left.mkString(","))
   }
+
+  test("all six geometry types round-trip through writeGeoParquet; both MULTIPOINT spellings") {
+    val six = Seq(
+      (1L, "POINT (3.5 -2.25)"),
+      (2L, "LINESTRING (0.0 0.0, 4.5 1.25, 6.0 -3.0)"),
+      (3L, "POLYGON ((0.0 0.0, 10.0 0.0, 10.0 5.0, 0.0 0.0), (2.0 1.0, 3.0 1.0, 3.0 2.0, 2.0 1.0))"),
+      (4L, "MULTIPOINT ((1.0 2.0), (3.0 4.0))"),
+      (5L, "MULTIPOINT (5.0 6.0, -7.5 8.25)"),
+      (6L, "MULTILINESTRING ((0.0 0.0, 1.0 1.0), (2.0 2.0, 3.0 1.0, 4.0 4.0))"),
+      (7L, "MULTIPOLYGON (((0.0 0.0, 1.0 0.0, 1.0 1.0, 0.0 0.0)), " +
+        "((5.0 5.0, 9.0 5.0, 9.0 9.0, 5.0 5.0), (6.0 6.0, 7.0 6.0, 7.0 7.0, 6.0 6.0)))"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_gpq12").toString + "/store"
+    GeoParquet.writeGeoParquet(six.toDF("fid", "geom"), dir, "geom")
+    val back = GeoParquet.readGeoParquet(spark, dir).orderBy("fid")
+      .select("geom").as[String].collect().toSeq
+    // the bare MULTIPOINT spelling comes back parenthesized (canonical)
+    assert(back == six.map(_._2).updated(4, "MULTIPOINT ((5.0 6.0), (-7.5 8.25))"))
+    assert(GeoParquet.geoMetadata(dir).get.contains("\"geometry_types\":[\"LineString\"," +
+      "\"MultiLineString\",\"MultiPoint\",\"MultiPolygon\",\"Point\",\"Polygon\"]"))
+    assert(GeoParquet.geoMetadata(dir).get.contains("\"bbox\":[-7.5,-3.0,10.0,9.0]"))
+  }
 }

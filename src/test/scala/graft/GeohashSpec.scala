@@ -207,7 +207,6 @@ class GeohashSpec extends AnyFunSuite {
   }
 
   test("SQL surface: st_geohash / st_geohash_bbox / st_geohash_neighbors") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT st_geohash(10.40744, 57.64911, 11) AS gh, " +
         "st_geohash_bbox('ezs42', 5) AS b, " +

@@ -131,7 +131,6 @@ class GeomValiditySpec extends AnyFunSuite {
   }
 
   test("SQL surface matches the Column form; predicate gates the clip contract") {
-    GraftFunctions.register(spark)
     Seq(("POLYGON ((0 0, 4 4, 4 0, 0 4, 0 0))", false),
         ("POLYGON ((5 7, 3 3, 5 4, 7 3, 5 7))", true))
       .toDF("g", "want").createOrReplaceTempView("valfix")

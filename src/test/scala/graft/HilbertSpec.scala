@@ -80,7 +80,6 @@ class HilbertSpec extends AnyFunSuite {
     rows.foreach { case (id, x, y) =>
       assert(got(id) == HilbertExprs.xy2d(16, x, y), s"mismatch at id=$id")
     }
-    GraftFunctions.register(spark)
     df.createOrReplaceTempView("hilspec")
     val viaSql = spark.sql(
       "SELECT id, graft_hilbert(x, y, 16) AS h FROM hilspec ORDER BY id")

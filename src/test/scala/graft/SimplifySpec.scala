@@ -103,7 +103,6 @@ class SimplifySpec extends AnyFunSuite {
         struct(lit(null).cast("double").as("x"), lit(1.0).as("y")),
         struct(lit(0.0).as("x"), lit(0.0).as("y"))), lit(1.0))).collect())
     assert(e2.getMessage.contains("null coordinate"))
-    GraftFunctions.register(spark)
     Seq("POLYGON ((0 0, 4 0.25, 8 0, 8 8, 0 8, 0 0))").toDF("g")
       .createOrReplaceTempView("simpfix")
     val viaSql = spark.sql(

@@ -687,7 +687,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     val e = intercept[Exception](cOf("POLYGON ((0 0, 2 0, 4 0, 0 0))"))
     assert(e.getMessage.contains("no centroid"), e.getMessage)
     // SQL surface
-    GraftFunctions.register(spark)
     Seq("POLYGON ((2 3, 6 3, 6 5, 2 5, 2 3))").toDF("g").createOrReplaceTempView("censpec")
     val viaSql = spark.sql(
       "SELECT st_centroid(st_rings(g)) AS c FROM censpec").head.getStruct(0)
@@ -760,7 +759,6 @@ class SpatialOpsSpec extends AnyFunSuite {
       }
     }
     // SQL surface
-    GraftFunctions.register(spark)
     val viaSqlPath = spark.sql(
       """SELECT st_clip_path_box(
         |  array(named_struct('x', CAST(0 AS DOUBLE), 'y', CAST(3 AS DOUBLE)),
@@ -841,7 +839,6 @@ class SpatialOpsSpec extends AnyFunSuite {
       }
     }
     // SQL surface
-    GraftFunctions.register(spark)
     val viaSql = spark.sql(
       """SELECT st_convex_hull(array(
         |  named_struct('x', CAST(0 AS DOUBLE), 'y', CAST(0 AS DOUBLE)),
@@ -901,7 +898,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("closed"), e.getMessage)
     // SQL surface + hull composition
-    GraftFunctions.register(spark)
     val viaSql = spark.sql(
       """SELECT st_min_bbox_area(st_convex_hull(array(
         |  named_struct('x', CAST(0 AS DOUBLE), 'y', CAST(2 AS DOUBLE)),

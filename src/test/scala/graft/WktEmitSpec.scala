@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.{RingsWkt, SpatialOps}
 import graft.operators.CoverageArea
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -112,7 +113,6 @@ class WktEmitSpec extends AnyFunSuite {
   }
 
   test("WKT front doors: clip/simplify/buffer round-trip as WKT; SQL surface") {
-    GraftFunctions.register(spark)
     val arrow = "POLYGON ((0 0, 6 0, 6 8, 3 4, 0 8, 0 0), (1 1, 1 2, 2 2, 2 1, 1 1))"
     val r = Seq(arrow).toDF("g").select(
       SpatialOps.wktArea(SpatialOps.wktClipToBox(col("g"),
@@ -167,9 +167,9 @@ class WktEmitSpec extends AnyFunSuite {
   test("r17 emit kernels reproduce the Column chains byte-for-byte") {
     val df = emitDomain.select(
       SpatialOps.ringsToWkt(col("rings")).as("poly_k"),
-      SpatialOps.ringsToWktChain(col("rings")).as("poly_c"),
+      WktChains.ringsToWktChain(col("rings")).as("poly_c"),
       graft.functions.WktEmit.body(col("rings")).as("body_k"),
-      SpatialOps.ringsToWktBodyChain(col("rings")).as("body_c"),
+      WktChains.ringsToWktBodyChain(col("rings")).as("body_c"),
       // getItem, not element_at: ElementAt-over-CreateArray trips a stock
       // Spark codegen fallback (undeclared isNull var) that would bury the
       // kernel's own codegen in noise — unrelated to what's gated here
@@ -218,8 +218,8 @@ class WktEmitSpec extends AnyFunSuite {
     val df = wkts.toDF("w").union(Seq.fill(1)(null.asInstanceOf[String]).toDF("w"))
       .select(col("w"),
         SpatialOps.wktRings(col("w")).as("rings_k"),
-        SpatialOps.wktRingsChain(col("w")).as("rings_c"),
-        SpatialOps.ringPtsChain(col("w")).as("pts_c"),
+        WktChains.wktRingsChain(col("w")).as("rings_c"),
+        WktChains.ringPtsChain(col("w")).as("pts_c"),
         graft.functions.WktParse.ptsCol(col("w")).as("pts_k"))
     val bad = df.filter(not(col("rings_k") <=> col("rings_c")) ||
       not(col("pts_k") <=> col("pts_c"))).select("w").collect()
@@ -251,7 +251,7 @@ class WktEmitSpec extends AnyFunSuite {
       val d = rings.select(
         graft.functions.WktEmit.body(
           graft.functions.TmForward.col(col("rings"), p)).as("k"),
-        SpatialOps.ringsToWktBodyChain(hof(t)).as("c"))
+        WktChains.ringsToWktBodyChain(hof(t)).as("c"))
       assert(d.filter(not(col("k") <=> col("c"))).count() == 0, s"$t")
     }
   }
@@ -269,4 +269,45 @@ class WktEmitSpec extends AnyFunSuite {
     assert(back.getDouble(1) == back.getDouble(2),
       "re-ingested MULTIPOLYGON area must equal the dissolve's union area")
   }
+}
+
+/** The pre-kernel Column-chain spellings of the WKT parse and emit paths
+  * (regex + interpreted HOF lambdas per vertex, a UTF8String allocation per
+  * concat node) — kept only as WktEmitSpec's byte-equality references for
+  * the `WktParse` / `WktEmit` kernels that replaced them in SpatialOps.
+  */
+object WktChains {
+
+  /** [[SpatialOps.wktRings]]'s per-group point parse (`WktParse.ptsCol`). */
+  def ringPtsChain(r: Column): Column =
+    transform(filter(split(r, ","), s => trim(s) =!= ""), p => struct(
+      element_at(split(trim(p), " +"), 1).cast("double").as("x"),
+      element_at(split(trim(p), " +"), 2).cast("double").as("y")))
+
+  /** [[SpatialOps.wktRings]]. */
+  def wktRingsChain(wkt: Column): Column =
+    transform(
+      regexp_extract_all(wkt, lit("\\(([^()]+)\\)"), lit(1)),
+      r => ringPtsChain(r))
+
+  /** [[SpatialOps.ringsToWkt]]. */
+  def ringsToWktChain(rings: Column): Column = {
+    val nonEmpty = filter(rings, r => size(r) > 0)
+    when(size(nonEmpty) === 0, lit("POLYGON EMPTY")).otherwise(
+      concat(lit("POLYGON ("),
+        array_join(transform(nonEmpty, r =>
+          concat(lit("("),
+            array_join(transform(r, p =>
+              concat(p.getField("x").cast("string"), lit(" "),
+                p.getField("y").cast("string"))), ", "),
+            lit(")"))), ", "),
+        lit(")")))
+  }
+
+  /** `WktEmit.body`: rings → the WKT body `((x y, …), (…))`. */
+  def ringsToWktBodyChain(rings: Column): Column =
+    concat_ws(", ", transform(rings, r => concat(lit("("),
+      concat_ws(", ", transform(r, p => concat(
+        p.getField("x").cast("string"), lit(" "), p.getField("y").cast("string")))),
+      lit(")"))))
 }

@@ -3,7 +3,9 @@
 
 Reads the Verify dump (<outDir>/<name>/ parquet + oracle_sql.json), runs each
 oracle SQL in DuckDB over the raw testdata tables, and compares: columns
-sorted by name, rows compared exactly (NaN==NaN), dtypes value-compatible.
+sorted by name, each column's DuckDB type family (the dump read through
+DuckDB against the oracle result), rows compared exactly (NaN==NaN), dtypes
+value-compatible.
 
 Usage: python3 tools/parity.py <sfDir> <verifyOutDir>
 """
@@ -42,6 +44,41 @@ def cell_eq(a, b) -> bool:
 
 DTYPE_CLASS = {"i": "int", "u": "int", "f": "float", "b": "bool",
                "O": "obj", "S": "obj", "U": "obj", "M": "ts", "m": "td"}
+
+# DuckDB's pandas bridge, which the t2 gate compares through, hands DECIMAL
+# and HUGEINT over as float64, so they share the floating family: the
+# t2 schema check passes mm5_tiff_header (DOUBLE against the oracle's
+# DECIMAL(2,1)) and fails a BIGINT sum the oracle leaves as HUGEINT.
+FAMILY = {
+    **{t: "integer" for t in ("tinyint", "smallint", "integer", "bigint",
+                              "utinyint", "usmallint", "uinteger", "ubigint")},
+    **{t: "floating" for t in ("float", "double", "decimal", "hugeint", "uhugeint")},
+    "varchar": "string",
+    **{t: "timestamp" for t in ("timestamp", "timestamp_s", "timestamp_ms", "timestamp_ns")},
+    "timestamp with time zone": "timestamptz",
+}
+
+def family(t) -> str:
+    """DuckDB type -> the family the t2 schema check tells apart:
+    timestamp vs timestamp-with-tz, integer, floating (decimal included),
+    string; other types by name, nested types by their members' families."""
+    if t.id in ("list", "struct", "map"):
+        inner = ",".join(f"{n}:{family(c)}" for n, c in t.children)
+        return f"{t.id}<{inner}>"
+    return FAMILY.get(t.id, t.id)
+
+def type_check(name, spark_rel, duck_rel):
+    """The t2 gate reads the dump through DuckDB: a column whose type
+    family differs from the oracle result's (e.g. parquet TIMESTAMP_MICROS
+    read as TIMESTAMP WITH TIME ZONE against the oracle's TIMESTAMP) fails
+    its schema and hash check even when every value compares equal."""
+    duck = dict(zip(duck_rel.columns, duck_rel.types))
+    for col, st in sorted(zip(spark_rel.columns, spark_rel.types)):
+        dt = duck.get(col)
+        if dt is not None and family(st) != family(dt):
+            return (f"FAIL {name}: col {col} type family {family(st)} (spark "
+                    f"{st}) vs {family(dt)} (duck {dt}) — t2 schema would differ")
+    return None
 
 def compare(name, spark_df, duck_df):
     s, d = canon(spark_df), canon(duck_df)
@@ -99,10 +136,12 @@ def main():
             print(f"FAIL {name}: no spark output"); failures += 1; continue
         spark_df = pd.concat([pd.read_parquet(f) for f in files])
         try:
-            duck_df = con.execute(oracle[name]).df()
+            duck_rel = con.sql(oracle[name])
+            duck_df = duck_rel.df()
         except Exception as e:
             print(f"FAIL {name}: oracle error: {e}"); failures += 1; continue
-        r = compare(name, spark_df, duck_df)
+        r = (type_check(name, con.sql(f"SELECT * FROM read_parquet({files!r})"), duck_rel)
+             or compare(name, spark_df, duck_df))
         print(r)
         if r.startswith("FAIL"):
             failures += 1
