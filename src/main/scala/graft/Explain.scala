@@ -1,24 +1,18 @@
 package graft
 
-/** Plan auditor: prints formatted physical plans for key queries so
-  * pushdown/broadcast/codegen properties can be checked per round
-  * (run: sbt "runMain graft.Explain [sfDir]").
+/** Plan auditor: prints formatted physical plans for the named queries so
+  * pushdown/broadcast/codegen properties can be checked
+  * (run: sbt "runMain graft.Explain <sfDir> <query> [query ...]").
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
+    if (args.length < 2) {
+      System.err.println("usage: graft.Explain <sfDir> <query> [query ...]")
+      sys.exit(1)
+    }
+    val sf = args(0)
     val spark = GraftSession.getOrCreate()
-    // extra args select specific queries (sbt "runMain graft.Explain <sf> q1 e7")
-    val targets = if (args.length > 1) args.drop(1).toSeq
-    else Seq("s2_pruned_scan", "j3_multiway", "a1_median_groups",
-      "a5_count_sum", "e3_cosine_topk", "j6_range_join", "w3_rank_top1",
-      "o3_topk_per_key", "w4_range_frame", "q8_cube", "pack1_token_budget",
-      "j11_bbox_join", "g1_wkt_measures", "pipe1_curation", "e11_decontaminate",
-      // round-4 shapes worth eyeballing per round
-      "e13_bloom_decontaminate", "q21_last_shipper", "w8_window_distinct",
-      "ts1_gapfill_resample", "span1_repeated_spans", "pipe3_mix_construction",
-      "lm1_unigram_logprob", "leak1_split_leakage")
-    targets.foreach { name =>
+    args.drop(1).foreach { name =>
       println(s"\n========== $name ==========")
       println(SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))

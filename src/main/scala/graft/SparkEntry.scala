@@ -1,14 +1,12 @@
 package graft
 
-import graft.functions.{ScalarOps, TextOps, VectorOps, WebOps}
-import graft.operators.{Bucketing, Composite, Curation, Dedup, Maintenance, MlOps, Similarity, Skew}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql` for the t2
+  * SURVEY.md §2, each defined once in its family's file under
+  * `graft/queries/`, beside the DuckDB-equivalent SQL of the t2
   * correctness gate.
   *
   * Oracle-parity rules used throughout (SURVEY.md §5.2, FIXTURES.md):
@@ -24,25 +22,6 @@ import org.apache.spark.sql.types.DecimalType
   *   - dot products are strict in-order left folds in both engines.
   */
 object SparkEntry {
-
-  /** g11's per-JVM .prj round-trip memo (WKT string → the crs column
-    * value the vector reader surfaced) — fixture setup, not query work.
-    */
-  private val g11PrjCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** s22b's store directory per sf-dir — the write is fixture setup,
-    * memoized per JVM (the g11 pattern).
-    */
-  private val s22bDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val D2 = DecimalType(18, 2)
-
-  /** SUM(x) through exact decimal, emitted as double. */
-  private def dsum(c: Column): Column = sum(c.cast(D2)).cast("double")
-
-  // ---------- flagship ----------
 
   /** Flagship query on sf=0.001 (driver smoke-checks rows>0): TPC-H-Q5-ish
     * revenue rollup across 6 tables — exercises scan, broadcast joins,
@@ -62,13395 +41,21 @@ object SparkEntry {
       .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("n_name"))
-      .agg(dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
+      .agg(Helpers.dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"))
       .orderBy(col("revenue").desc, col("r_name"), col("n_name"))
   }
 
-  // ---------- §2.1 scans / sources / sinks ----------
-
-  private def s1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d).agg(count(lit(1)).as("cnt"))
-
-  private def s2(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .filter(col("l_orderkey").between(1, 100))
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-        "l_quantity", "l_extendedprice", "l_shipdate")
-      .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
-        "l_quantity", "l_extendedprice", "l_shipdate")
-
-  private def s3(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"), "left")
-      .select("l_orderkey", "l_linenumber", "p_name")
-      .orderBy("l_orderkey", "l_linenumber", "p_name")
-
-  private def s4(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .groupBy(regexp_extract(col("o_orderpriority"), "(\\d+)", 1).as("prio"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("prio")
-
-  /** S5 — tiled/partitioned sink: write partitioned parquet, read it back,
-    * aggregate the round-trip (oracle checks the aggregate over the source).
-    */
-  private def s5(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    // repartition by the partition column first: without it every task
-    // writes a file into every partition dir (tasks × values small files —
-    // the classic partitioned-sink mistake at scale); with it each value's
-    // rows land in one task → one compact file per partition.
-    Tables.lineitem(s, d)
-      .repartition(col("l_returnflag"))
-      .write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    s.read.parquet(out)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("l_returnflag")
-  }
-
-  /** zm1 — zone-map data skipping: range-repartition lineitem by ship
-    * date into 8 unpartitioned files, build the per-file min/max index,
-    * then answer a 3-month predicate reading ONLY the files the index
-    * cannot rule out (~2/8; ZoneMapSpec asserts the prune). The oracle is
-    * the plain filter over the source — skipping must be invisible.
-    */
-  private def zm1(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zm").toString
-    Tables.lineitem(s, d)
-      .repartitionByRange(8, col("l_shipdate"))
-      .write.mode("overwrite").parquet(out)
-    val idx = operators.ZoneMap.build(s, out, Seq("l_shipdate"))
-    operators.ZoneMap.prunedRead(s, out, idx, "l_shipdate",
-        java.sql.Timestamp.valueOf("1996-06-01 00:00:00"),
-        java.sql.Timestamp.valueOf("1996-09-01 00:00:00"))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** ZO1 — Z-ORDER clustering (r9; the lakehouse OPTIMIZE ZORDER BY):
-    * lineitem rewritten with `ZoneMap.writeZOrdered` on (l_partkey,
-    * l_suppkey), zone-mapped, and a TWO-dimensional box predicate read
-    * through the composed file prune. The oracle is the plain filtered
-    * scan — the clustering, interleaved keys, and multi-column skipping
-    * must be exactly invisible in the result (the zm1 recipe, one
-    * dimension up). ZoneMapSpec separately proves the layout actually
-    * prunes on BOTH dimensions.
-    */
-  private def zo1(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zo").toString
-    operators.ZoneMap.writeZOrdered(Tables.lineitem(s, d), out,
-      Seq("l_partkey", "l_suppkey"), nFiles = 12)
-    val idx = operators.ZoneMap.build(s, out, Seq("l_partkey", "l_suppkey"))
-    operators.ZoneMap.prunedReadBox(s, out, idx,
-        Seq(("l_partkey", 200L, 400L), ("l_suppkey", 10L, 60L)))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** ZO2 — HILBERT clustering (the zo1 recipe one curve up): lineitem
-    * rewritten with `ZoneMap.writeHilbertOrdered`, zone-mapped, and a
-    * 2-D box read through the composed prune. Same oracle doctrine as
-    * zo1/zm1: the layout must be exactly invisible — the oracle is the
-    * plain filtered scan. HilbertSpec separately proves the curve's
-    * adjacency theorem and that the layout prunes FEWER files than
-    * Z-order needs key ranges (the reason this operator exists).
-    */
-  private def zo2(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zo2").toString
-    operators.ZoneMap.writeHilbertOrdered(Tables.lineitem(s, d), out,
-      Seq("l_partkey", "l_suppkey"), nFiles = 12)
-    val idx = operators.ZoneMap.build(s, out, Seq("l_partkey", "l_suppkey"))
-    operators.ZoneMap.prunedReadBox(s, out, idx,
-        Seq(("l_partkey", 300L, 600L), ("l_suppkey", 20L, 80L)))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** ZO3 — Hilbert RANGED reads (the read path that cashes in the
-    * adjacency theorem): lineitem keyed by the curve distance of its
-    * (partkey, suppkey) cell, zone-mapped ON THE KEY, and a 40x50 cell
-    * box served as the contiguous key ranges boxRanges plans — files
-    * prune by key-range intersection, each surviving scan is one
-    * contiguous run. The oracle is the plain modular-box scan: curve,
-    * ranges, and layout must all be exactly invisible, which also
-    * re-proves boxRanges' cell/range equivalence on real data.
-    */
-  private def zo3(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zo3").toString
-    val li = Tables.lineitem(s, d)
-      .withColumn("cx", col("l_partkey") % 256)
-      .withColumn("cy", col("l_suppkey") % 256)
-    operators.ZoneMap.writeHilbertCells(li, out, "cx", "cy", bits = 8, nFiles = 12)
-    val idx = operators.ZoneMap.build(s, out, Seq("__hkey"))
-    val ranges = graft.functions.HilbertExprs.boxRanges(8, 40, 10, 79, 59)
-    operators.ZoneMap.prunedReadRanges(s, out, idx, "__hkey", ranges)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** ZO4 — Hilbert ranged reads from the prunedReadBox FRONT DOOR (the
-    * r13 mandate: the path a naive caller gets): writeHilbertCells now
-    * leaves a layout sidecar, so the SAME prunedReadBox call that would
-    * per-column-prune a plain store routes this box through
-    * boxRanges/prunedReadRanges — note the index carries ONLY the curve
-    * key's bounds (no cx/cy stats), which per-column pruning could not
-    * serve at all. Oracle = the plain modular-box scan: the routing must
-    * be exactly invisible.
-    */
-  private def zo4(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zo4").toString
-    val li = Tables.lineitem(s, d)
-      .withColumn("cx", col("l_partkey") % 256)
-      .withColumn("cy", col("l_suppkey") % 256)
-    operators.ZoneMap.writeHilbertCells(li, out, "cx", "cy", bits = 8, nFiles = 12)
-    val idx = operators.ZoneMap.build(s, out, Seq("__hkey"))
-    operators.ZoneMap.prunedReadBox(s, out, idx,
-        Seq(("cx", 100L, 140L), ("cy", 60L, 120L)))
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-  }
-
-  /** HB1 — the Hilbert index arithmetic itself, cross-engine: part keys
-    * spread over the 2^16 grid by modular multipliers (all-integer, no
-    * float quantizer in the loop), indexed by the codegen kernel; the
-    * oracle unrolls the identical 16-level rotate/reflect walk as a CTE
-    * chain. Integer-exact both sides → hash equality proves the curve
-    * transform itself, not just its layout-invisibility (zo2).
-    */
-  private def hb1(s: SparkSession, d: String) =
-    Tables.part(s, d)
-      .select(col("p_partkey"),
-        (col("p_partkey") * lit(48271L) % lit(65536L)).as("x"),
-        (col("p_partkey") * lit(69621L) % lit(65536L)).as("y"))
-      .withColumn("hilbert",
-        graft.functions.HilbertExprs.indexCol(col("x"), col("y"), 16))
-      .orderBy("p_partkey")
-
-  private def s6(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("n_chars"),
-        octet_length(col("text")).cast("long").as("text_bytes"))
-      .orderBy("doc_id")
-
-  // ---------- §2.2 projections / filters / scalar maps ----------
-
-  private def p1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select("l_orderkey", "l_linenumber", "l_quantity")
-      .orderBy("l_orderkey", "l_linenumber", "l_quantity")
-
-  private def p2(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        col("l_quantity").cast("float").as("qty_f"))
-      .orderBy("l_orderkey", "l_linenumber", "qty_f")
-
-  private def p3(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        when(col("l_discount") === 0.0, lit(null)).otherwise(col("l_discount")).as("disc_n"))
-      .orderBy("l_orderkey", "l_linenumber", "disc_n")
-
-  private def p4(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        ScalarOps.fillNoData(
-          when(col("l_tax") === 0.0, lit(null)).otherwise(col("l_tax")), 0.0).as("tax_f"))
-      .orderBy("l_orderkey", "l_linenumber", "tax_f")
-
-  private def p5(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        round(ScalarOps.normalizedDiff(col("l_extendedprice"), col("l_discount")), 6).as("nd"),
-        round(ScalarOps.normalizedDiffNull(col("l_extendedprice"), col("l_discount")), 6).as("nd_null"))
-      .orderBy("l_orderkey", "l_linenumber", "nd", "nd_null")
-
-  private def p6(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .filter(ScalarOps.allValid(Seq(col("l_quantity"))) && col("l_discount") > 0.02)
-      .agg(count(lit(1)).as("cnt"))
-
-  private def p7(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        ScalarOps.clamp(col("l_discount"), lit(0.01), lit(0.05)).as("disc_c"))
-      .orderBy("l_orderkey", "l_linenumber", "disc_c")
-
-  private def p8(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        when(col("l_returnflag") === "R" && col("l_discount") < 0.06, lit("N"))
-          .when(col("l_returnflag") === "A", lit("N"))
-          .otherwise(col("l_returnflag")).as("flag_rw"))
-      .orderBy("l_orderkey", "l_linenumber", "flag_rw")
-
-  private def p9(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .groupBy(concat_ws("_",
-        when(col("l_quantity") > 25, lit("Q")),
-        when(col("l_discount") > 0.03, lit("D"))).as("combo"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy("combo")
-
-  private def p10(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"),
-        md5(concat(col("l_returnflag"), col("l_linestatus"))).as("key_md5"))
-      .orderBy("l_orderkey", "l_linenumber", "key_md5")
-
-  private def p11(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_linenumber"))
-      .withColumn("n", explode(sequence(lit(1), lit(3))))
-      .orderBy("l_orderkey", "l_linenumber", "n")
-
-  private def p12(s: SparkSession, d: String) =
-    Tables.events(s, d)
-      .select(col("event_id"),
-        get_json_object(col("props"), "$.k").as("k_str"),
-        get_json_object(col("props"), "$.k").cast("int").as("k_int"))
-      .orderBy("event_id")
-
-  // ---------- §2.3 aggregations ----------
-
-  private def a1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag")
-      .agg(
-        round(percentile(col("l_quantity"), lit(0.5)), 6).as("med_qty"),
-        count(lit(1)).as("n"),
-        dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-
-  private def a2(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .groupBy("l_orderkey")
-      .agg(max(struct(col("l_extendedprice").as("e"), col("l_partkey").as("p"))).as("b"))
-      .select(col("l_orderkey"), col("b.p").as("best_pk"))
-      .orderBy("l_orderkey")
-
-  private def a3(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .agg(max(col("l_extendedprice")).as("max_ep"),
-        min(col("l_shipdate")).as("min_sd"),
-        max(col("l_shipdate")).as("max_sd"))
-
-  private def a4(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .agg(
-        round(percentile(col("l_extendedprice"), lit(0.02)), 6).as("cut_lo"),
-        round(percentile(col("l_extendedprice"), lit(0.98)), 6).as("cut_hi"))
-
-  private def a5(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .agg(
-        count(lit(1)).as("cnt"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-          .cast("double").as("revenue"))
-
-  private def a6(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .groupBy("l_orderkey")
-      .agg(concat_ws(",",
-        sort_array(collect_list(col("l_linenumber"))).cast("array<string>")).as("lns"))
-      .orderBy("l_orderkey")
-
-  private def a7(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .agg(
-        countDistinct(concat(col("l_returnflag"), col("l_linestatus"))).as("n_combo"),
-        countDistinct(col("l_partkey")).as("n_part"))
-
-  private def a9(s: SparkSession, d: String) =
-    Tables.lineitem(s, d).agg((max(col("l_orderkey")) + 1).as("next_id"))
-
-  // ---------- §2.4 joins ----------
-
-  private def j1(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"), "left")
-      .select("o_orderkey", "c_name", "c_mktsegment")
-      .orderBy("o_orderkey")
-
-  private def j2(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .join(broadcast(Tables.customer(s, d)),
-        col("o_custkey") === col("c_custkey") && col("c_acctbal") > 0, "left")
-      .select(col("o_orderkey"), coalesce(col("c_name"), lit("UNKNOWN")).as("cust"))
-      .orderBy("o_orderkey")
-
-  private def j3(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d)), col("l_partkey") === col("p_partkey"))
-      .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-      .select("l_orderkey", "l_linenumber", "p_retailprice", "s_acctbal", "n_name")
-      .orderBy("l_orderkey", "l_linenumber", "p_retailprice", "s_acctbal", "n_name")
-
-  private def j4(s: SparkSession, d: String) = {
-    import s.implicits._
-    val models = Seq("RF", "NO").toDF("combo")
-    Tables.lineitem(s, d)
-      .select(concat(col("l_returnflag"), col("l_linestatus")).as("combo"))
-      .join(broadcast(models), Seq("combo"))
-      .groupBy("combo")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("combo")
-  }
-
-  /** J6 — banded interval self-join. The naive shape (equi-join on user_id,
-    * then the time predicate as a post-filter) builds every within-user pair
-    * first — quadratic in events-per-user, and a heavy user becomes a
-    * straggler at scale. Because the window length (1 min) equals the band
-    * width, `b_ts ∈ [a_ts, a_ts+1min]` implies `bucket(b) - bucket(a) ∈
-    * {0,1}`, so replicating the right side into its own and the previous
-    * minute bucket and equi-joining on (user_id, bucket) yields each
-    * candidate pair exactly once and caps the blow-up at the events that
-    * share a two-minute span — the standard banded range-join rewrite
-    * (same family as the PBSM grid in SpatialJoin).
-    */
-  private def j6(s: SparkSession, d: String) = {
-    val bktWidthUs = 60L * 1000000L
-    val a = Tables.events(s, d).select(col("user_id"), col("ts").as("a_ts"))
-      .withColumn("bkt", expr(s"unix_micros(a_ts) div $bktWidthUs"))
-    val b = Tables.events(s, d).select(col("user_id"), col("ts").as("b_ts"))
-      .withColumn("bkt", expr(s"unix_micros(b_ts) div $bktWidthUs"))
-    val bRep = b.unionByName(b.withColumn("bkt", col("bkt") - 1))
-    a.join(bRep, Seq("user_id", "bkt"))
-      .filter(col("b_ts").between(col("a_ts"), col("a_ts") + expr("INTERVAL 1 MINUTE")))
-      .agg(count(lit(1)).as("n_pairs"))
-  }
-
-  private def j7(s: SparkSession, d: String) =
-    Tables.events(s, d)
-      .groupBy("user_id")
-      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("m"))
-      .select(col("user_id"), col("m.value").as("last_val"))
-      .orderBy("user_id")
-
-  /** J10 — as-of join: for each error event, the user's most recent prior
-    * (or simultaneous) click. One window pass (carry-forward last match via
-    * IGNORE NULLS) — no range join, no per-key loop; the scalable as-of
-    * formulation.
-    */
-  private def j10(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(s, d)
-      .withColumn("click_id",
-        last(when(col("event_type") === "click", col("event_id")), ignoreNulls = true).over(w))
-      .filter(col("event_type") === "error")
-      .select(col("event_id"), col("user_id"), col("click_id"))
-      .orderBy("event_id")
-  }
-
-  /** J14 — FORWARD as-of with tolerance (the pandas merge_asof direction
-    * surface): each purchase attaches the EARLIEST subsequent click value
-    * within 10 minutes. The right side is pre-aggregated per (user, ts)
-    * so the carried value is deterministic under ties.
-    */
-  private def j14(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts").agg(min(col("value")).as("value"))
-    operators.AsOf.asofJoin(purchases, clicks, "user_id", "ts", Seq("value"),
-        direction = "forward", toleranceSec = Some(600))
-      .select(col("event_id"), col("user_id"), col("asof_value").as("next_click_val"))
-      .orderBy("event_id")
-  }
-
-  /** J15 — NEAREST as-of (closer of the two directions, ties prefer
-    * backward — pandas semantics) with a 15-minute tolerance.
-    */
-  private def j15(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts").agg(min(col("value")).as("value"))
-    operators.AsOf.asofJoin(purchases, clicks, "user_id", "ts", Seq("value"),
-        direction = "nearest", toleranceSec = Some(900))
-      .select(col("event_id"), col("user_id"), col("asof_value").as("near_click_val"))
-      .orderBy("event_id")
-  }
-
-  /** J11 — binned bbox spatial join (PBSM): suppliers and customers get
-    * synthetic integer-derived envelopes; SpatialJoin.bboxJoin bins them
-    * onto a grid and equi-joins on cell keys with reference-point dedup —
-    * no cartesian product. Oracle is the equivalent theta join in DuckDB.
-    */
-  private def j11(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    def box(key: Column): Seq[Column] = Seq(
-      key % 97, key % 89, key % 97 + lit(1) + key % 5, key % 89 + lit(1) + key % 7)
-    val sb = Tables.supplier(s, d).select(col("s_suppkey"),
-      SpatialOps.bbox(box(col("s_suppkey"))(0), box(col("s_suppkey"))(1),
-        box(col("s_suppkey"))(2), box(col("s_suppkey"))(3)).as("env"))
-    val cb = Tables.customer(s, d).select(col("c_custkey"),
-      SpatialOps.bbox(box(col("c_custkey"))(0), box(col("c_custkey"))(1),
-        box(col("c_custkey"))(2), box(col("c_custkey"))(3)).as("env_r"))
-    operators.SpatialJoin.bboxJoin(sb, cb, "env", "env_r", cellSize = 8.0)
-      .select("s_suppkey", "c_custkey")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J13 — bbox join under a DELIBERATELY skewed distribution (the
-    * one-dense-city shape): 80% of each side's boxes crowd into grid cell
-    * (0,0), the rest spread. Runs through the SALTED join path (salts=8):
-    * the hot cell's key fans out over 8 sub-keys, so no task owns the
-    * whole city, while the oracle — a direct all-pairs intersect join —
-    * proves the salting changes nothing about the result.
-    */
-  private def j13(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    def boxes(key: Column): (Column, Column, Column, Column) = {
-      val hot = key % 5 =!= 0
-      val x0 = when(hot, (key % 13) * 0.5).otherwise((key % 97) * 2)
-      val y0 = when(hot, (key % 11) * 0.5).otherwise((key % 89) * 2)
-      (x0, y0, x0 + lit(1) + key % 3, y0 + lit(1) + key % 4)
-    }
-    val (sx0, sy0, sx1, sy1) = boxes(col("s_suppkey"))
-    val sb = Tables.supplier(s, d).select(col("s_suppkey"),
-      SpatialOps.bbox(sx0, sy0, sx1, sy1).as("env"))
-    val (cx0, cy0, cx1, cy1) = boxes(col("c_custkey"))
-    val cb = Tables.customer(s, d).select(col("c_custkey"),
-      SpatialOps.bbox(cx0, cy0, cx1, cy1).as("env_r"))
-    operators.SpatialJoin.bboxJoin(sb, cb, "env", "env_r", cellSize = 8.0, salts = 8)
-      .select("s_suppkey", "c_custkey")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  // ---- J16/J17/J18: exact-geometry refine (filter-refine spatial joins) ----
-  //
-  // The r12 gap: the PBSM join was envelope-exact only. These queries prove
-  // the TRUE-geometry refine stage (SpatialOps.ringsContainPoint /
-  // ringsIntersectPolys) end-to-end against pure-arithmetic DuckDB oracles:
-  // every coordinate is an integer-derived dyadic double, and the crossing /
-  // orientation algebra is IEEE +,−,×,÷ evaluated in the same order by both
-  // engines, so the oracle replays each geometric DECISION bit-for-bit.
-
-  /** Concave "arrow" polygon (notch at top center) with a square hole —
-    * the j16 fixture family: its bbox genuinely over-approximates (notch +
-    * hole), so refine does real work. All coordinates dyadic-exact.
-    */
-  private[graft] def arrowWkt(k: Column, withHole: Boolean): Column = {
-    val x0 = (k % 90).cast("double"); val y0 = (k % 80).cast("double")
-    val w = (k % 5 + 4).cast("double"); val h = (k % 7 + 4).cast("double")
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val outer = concat_ws(", ",
-      pt(x0, y0), pt(x0 + w, y0), pt(x0 + w, y0 + h),
-      pt(x0 + w / 2, y0 + h / 2), pt(x0, y0 + h), pt(x0, y0))
-    val hole = concat_ws(", ",
-      pt(x0 + 0.5, y0 + 0.5), pt(x0 + 0.5, y0 + 1.5),
-      pt(x0 + 1.5, y0 + 1.5), pt(x0 + 1.5, y0 + 0.5), pt(x0 + 0.5, y0 + 0.5))
-    if (withHole) concat(lit("POLYGON (("), outer, lit("), ("), hole, lit("))"))
-    else concat(lit("POLYGON (("), outer, lit("))"))
-  }
-
-  /** J16 — TRUE point-in-polygon on the WKT surface: crossing number,
-    * boundary detection, and closed containment per supplier arrow against
-    * a per-key probe point sweeping interior / hole / notch / edge / vertex
-    * / outside positions. The Spark side PARSES the WKT it built (the
-    * production path); the oracle recomputes the identical crossing
-    * arithmetic directly from the generating integers.
-    */
-  private def j16(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val k = col("s_suppkey")
-    val x0 = (k % 90).cast("double"); val y0 = (k % 80).cast("double")
-    val px = x0 + (k % 9).cast("double") * lit(0.5)
-    val py = y0 + (k % 11).cast("double") * lit(0.5)
-    Tables.supplier(s, d)
-      .select(k, arrowWkt(k, withHole = true).as("geom"), px.as("px"), py.as("py"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"),
-        col("px"), col("py"))
-      .select(col("s_suppkey"),
-        SpatialOps.ringsCrossingNumber(col("_r"), col("px"), col("py")).as("crossings"),
-        SpatialOps.ringsPointOnBoundary(col("_r"), col("px"), col("py"))
-          .cast("int").as("on_boundary"),
-        SpatialOps.ringsContainPoint(col("_r"), col("px"), col("py"))
-          .cast("int").as("inside"))
-      .orderBy("s_suppkey")
-  }
-
-  /** J17 — filter-refine point-in-polygon JOIN: customers (points) into
-    * supplier arrows through SpatialJoin.bboxJoin with the exact
-    * containment refine ANDed join-local. The oracle is the UNFILTERED
-    * theta join evaluating the same crossing arithmetic — the refine path
-    * must be result-identical to brute force.
-    */
-  private def j17(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_r")))
-    val c = col("c_custkey")
-    val pts = Tables.customer(s, d).select(c,
-        ((c % 93).cast("double") + (c % 3).cast("double") * lit(0.5)).as("px"),
-        ((c % 83).cast("double") + (c % 7).cast("double") * lit(0.25)).as("py"))
-      .withColumn("env_r", SpatialOps.bbox(col("px"), col("py"), col("px"), col("py")))
-    // codegen refine (GeomPredExprs): bit-identical decisions to the
-    // ringsContainPoint HOF algebra (spec-asserted), one static call per
-    // candidate inside whole-stage codegen instead of interpreted HOFs
-    operators.SpatialJoin.bboxJoin(polys, pts, "env", "env_r", cellSize = 8.0,
-        refine = graft.functions.GeomPredExprs.pointInRings(
-          col("_r"), col("px"), col("py")))
-      .select("s_suppkey", "c_custkey")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J18 — filter-refine polygon-OVERLAP join: supplier arrows (concave,
-    * no hole) against customer diamonds (no axis-aligned edges) through
-    * bboxJoin with the exact intersection refine (segment orientation
-    * tests + representative-vertex containment). Oracle = unfiltered theta
-    * join over the same orientation algebra.
-    */
-  private def j18(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = false).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val diamond = concat(lit("POLYGON (("),
-      concat_ws(", ", pt(cx, cy - r), pt(cx + r, cy), pt(cx, cy + r),
-        pt(cx - r, cy), pt(cx, cy - r)), lit("))"))
-    val b = Tables.customer(s, d)
-      .select(c, diamond.as("geom_b"))
-      .select(col("c_custkey"), SpatialOps.wktRings(col("geom_b")).as("_rb"))
-      .withColumn("env_r", SpatialOps.ringsEnvelope(col("_rb")))
-    // codegen refine — the probe measured the interpreted HOF form at
-    // ~340 µs/candidate (12.7 s at sf0.1 over 205 k bbox candidates); the
-    // fused kernel runs the identical IEEE algebra as one static call
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0,
-        refine = graft.functions.GeomPredExprs.ringsIntersect(col("_ra"), col("_rb")))
-      .select("s_suppkey", "c_custkey")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J19 — ST_DWithin refine join (the buffer query — the most common
-    * real spatial predicate after containment): customers within 1.5
-    * units of the supplier arrows' REGION (inside counts as distance 0;
-    * a point in the hole measures to the hole ring). The filter stage
-    * expands each polygon's envelope by the distance so bbox pruning
-    * stays complete; the refine is the codegen clamped-segment-projection
-    * kernel. Oracle = unfiltered theta join over the identical IEEE
-    * arithmetic (contains OR boundary-dist² ≤ 2.25).
-    */
-  private def j19(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val dist = 1.5
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", {
-        val e = SpatialOps.ringsEnvelope(col("_r"))
-        SpatialOps.bbox(e.getField("xmin") - dist, e.getField("ymin") - dist,
-          e.getField("xmax") + dist, e.getField("ymax") + dist)
-      })
-    val c = col("c_custkey")
-    val pts = Tables.customer(s, d).select(c,
-        ((c % 93).cast("double") + (c % 3).cast("double") * lit(0.5)).as("px"),
-        ((c % 83).cast("double") + (c % 7).cast("double") * lit(0.25)).as("py"))
-      .withColumn("env_r", SpatialOps.bbox(col("px"), col("py"), col("px"), col("py")))
-    operators.SpatialJoin.bboxJoin(polys, pts, "env", "env_r", cellSize = 8.0,
-        refine = graft.functions.GeomPredExprs.withinDistCol(
-          col("_r"), col("px"), col("py"), lit(dist)))
-      .select("s_suppkey", "c_custkey")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J20 — NEAREST-NEIGHBOR spatial join (k = 1 with a search radius —
-    * "snap each point to its closest parcel"): for every customer point,
-    * the supplier arrow with the minimum REGION distance (0 inside; else
-    * boundary distance) within radius 3, ties to the lower key. The
-    * filter stage is the j19 expanded-envelope bbox join; ranking is a
-    * lexicographic `min(struct(d2, key))` per point — one aggregation
-    * exchange, no window over a global sort. The oracle replays the
-    * identical distance arithmetic over the unfiltered theta join and
-    * ranks with row_number(ORDER BY d2, key); the d2 DOUBLES hash-match
-    * bit-for-bit because every op chain is identical.
-    */
-  private def j20(s: SparkSession, d: String) = {
-    import graft.functions.{GeomPredExprs, SpatialOps}
-    val radius = 3.0
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", {
-        val e = SpatialOps.ringsEnvelope(col("_r"))
-        SpatialOps.bbox(e.getField("xmin") - radius, e.getField("ymin") - radius,
-          e.getField("xmax") + radius, e.getField("ymax") + radius)
-      })
-    val c = col("c_custkey")
-    val pts = Tables.customer(s, d).select(c,
-        ((c % 93).cast("double") + (c % 3).cast("double") * lit(0.5)).as("px"),
-        ((c % 83).cast("double") + (c % 7).cast("double") * lit(0.25)).as("py"))
-      .withColumn("env_r", SpatialOps.bbox(col("px"), col("py"), col("px"), col("py")))
-    operators.SpatialJoin.bboxJoin(polys, pts, "env", "env_r", cellSize = 8.0)
-      .withColumn("d2", GeomPredExprs.regionDistSqCol(col("_r"), col("px"), col("py")))
-      .filter(col("d2") <= lit(radius * radius))
-      .groupBy("c_custkey")
-      .agg(min(struct(col("d2"), col("s_suppkey"))).as("best"))
-      .select(col("c_custkey"), col("best.s_suppkey").as("s_suppkey"),
-        col("best.d2").as("d2"))
-      .orderBy("c_custkey")
-  }
-
-  /** J24 — k-NEAREST-NEIGHBOR spatial join, k > 1 ("snap each point to
-    * its 3 nearest parcels within radius 3"): j20's expanded-envelope
-    * bbox filter + the identical region-distance refine, ranked by the
-    * [[graft.plans.TopK]] bounded-heap physical operator on the total
-    * order (d2, key) instead of j20's k=1 min-struct. Plan shape: the
-    * partial pass caps each (point, input-partition) at k rows BEFORE
-    * the one exchange — shuffle volume is k·points, never the candidate
-    * set; no window, no per-partition full sort. The oracle replays the
-    * identical distance arithmetic over the unfiltered theta join and
-    * ranks with row_number(ORDER BY d2, key) <= k — the heap must keep
-    * exactly the window's rows, d2 doubles bit-for-bit.
-    */
-  private def j24(s: SparkSession, d: String) = {
-    import graft.functions.{GeomPredExprs, SpatialOps}
-    val radius = 3.0
-    val k = 3
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", {
-        val e = SpatialOps.ringsEnvelope(col("_r"))
-        SpatialOps.bbox(e.getField("xmin") - radius, e.getField("ymin") - radius,
-          e.getField("xmax") + radius, e.getField("ymax") + radius)
-      })
-    val c = col("c_custkey")
-    val pts = Tables.customer(s, d).select(c,
-        ((c % 93).cast("double") + (c % 3).cast("double") * lit(0.5)).as("px"),
-        ((c % 83).cast("double") + (c % 7).cast("double") * lit(0.25)).as("py"))
-      .withColumn("env_r", SpatialOps.bbox(col("px"), col("py"), col("px"), col("py")))
-    val cand = operators.SpatialJoin.bboxJoin(polys, pts, "env", "env_r", cellSize = 8.0)
-      .withColumn("d2", GeomPredExprs.regionDistSqCol(col("_r"), col("px"), col("py")))
-      .filter(col("d2") <= lit(radius * radius))
-      .select("c_custkey", "s_suppkey", "d2")
-    graft.plans.TopK.perKey(cand,
-        Seq(col("c_custkey")), Seq(col("d2").asc, col("s_suppkey").asc), k)
-      .orderBy("c_custkey", "d2", "s_suppkey")
-  }
-
-  // --- geohash oracle-SQL generators: the engine's Column algebra
-  // (SpatialOps geohash family) re-spelled term-for-term in DuckDB SQL.
-  // Integer bit ops are exact in both engines; the only floating step is
-  // the quantizer's ((v+off)/span)·2^k, whose op chain mirrors 1:1.
-  private def ghSqlQuant(v: String, off: String, span: String, k: Int): String =
-    s"least(greatest(CAST(floor((($v + $off) / $span) * ${(1L << k).toDouble}) AS BIGINT), 0), ${(1L << k) - 1})"
-
-  private def ghSqlInterleave(lonQ: String, latQ: String, p: Int): String = {
-    val n = 5 * p; val nLon = (n + 1) / 2; val nLat = n / 2
-    val terms = (0 until nLon).map { k =>
-      s"((($lonQ) >> ${nLon - 1 - k}) & 1) * ${1L << (n - 1 - 2 * k)}"
-    } ++ (0 until nLat).map { k =>
-      s"((($latQ) >> ${nLat - 1 - k}) & 1) * ${1L << (n - 2 - 2 * k)}"
-    }
-    terms.mkString("(", " + ", ")")
-  }
-
-  private def ghSqlBase32(comb: String, p: Int): String = {
-    val n = 5 * p
-    (0 until p).map { i =>
-      s"substr('0123456789bcdefghjkmnpqrstuvwxyz', CAST((($comb) >> ${n - 5 * (i + 1)}) & 31 AS INT) + 1, 1)"
-    }.mkString("concat(", ", ", ")")
-  }
-
-  /** GH1 — geohash bucket census: the standard prefix-nesting lat/lon
-    * bucketing key (the string-keyed sibling of zorderKey — at 100 TB this
-    * is the layout/partition column for geographic stores, and the
-    * equi-join key for proximity grouping). Coordinates derive from
-    * user_id modular arithmetic (events carry no geography; the derivation
-    * mirrors into the oracle exactly). Plan: one projection (the whole
-    * encode is codegen'd integer algebra, no UDF) + one hash aggregate on
-    * the 5-char cell id.
-    */
-  private def gh1(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val u = col("user_id")
-    Tables.events(s, d).select(u,
-        ((u * 131 % 3600).cast("double") / lit(10.0) - lit(180.0)).as("lon"),
-        ((u * 89 % 1700).cast("double") / lit(10.0) - lit(85.0)).as("lat"))
-      .withColumn("gh", SpatialOps.geohash(col("lon"), col("lat"), 5))
-      .groupBy("gh")
-      .agg(count(lit(1)).as("cnt"), countDistinct(col("user_id")).as("users"),
-        min(col("user_id")).as("min_uid"))
-      .orderBy("gh")
-  }
-
-  /** GH2 — geohash cell decode + topology audit: per occupied cell, the
-    * EXACT decoded envelope (dyadic fractions — bit-identical doubles both
-    * engines), proof that every member point lies in its cell
-    * (all_in_cell), that the precision-4 parent both prefixes and contains
-    * the cell (nested), and the east/north shifted neighbors (wrap/clamp
-    * semantics). Everything after the group-by is per-cell string algebra.
-    */
-  private def gh2(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val c = col("c_custkey")
-    val enriched = Tables.customer(s, d).select(c,
-        ((c * 131 % 3600).cast("double") / lit(10.0) - lit(180.0)).as("lon"),
-        ((c * 89 % 1700).cast("double") / lit(10.0) - lit(85.0)).as("lat"))
-      .withColumn("gh", SpatialOps.geohash(col("lon"), col("lat"), 5))
-      .withColumn("ghp", SpatialOps.geohash(col("lon"), col("lat"), 4))
-      .withColumn("cell", SpatialOps.geohashBbox(col("gh"), 5))
-      .withColumn("par", SpatialOps.geohashBbox(col("ghp"), 4))
-    enriched.groupBy("gh")
-      .agg(count(lit(1)).as("n"), min(c).as("min_key"),
-        bool_and(SpatialOps.bboxContainsPoint(col("cell"), col("lon"), col("lat")))
-          .as("all_in_cell"),
-        bool_and(col("gh").substr(lit(1), lit(4)) === col("ghp") &&
-          col("cell.xmin") >= col("par.xmin") && col("cell.xmax") <= col("par.xmax") &&
-          col("cell.ymin") >= col("par.ymin") && col("cell.ymax") <= col("par.ymax"))
-          .as("nested"))
-      .select(col("gh"), col("n"), col("min_key"), col("all_in_cell"), col("nested"),
-        SpatialOps.geohashShift(col("gh"), 1, 0, 5).as("east"),
-        SpatialOps.geohashShift(col("gh"), 0, 1, 5).as("north"),
-        SpatialOps.geohashBbox(col("gh"), 5).getField("xmin").as("xmin"),
-        SpatialOps.geohashBbox(col("gh"), 5).getField("ymin").as("ymin"),
-        SpatialOps.geohashBbox(col("gh"), 5).getField("xmax").as("xmax"),
-        SpatialOps.geohashBbox(col("gh"), 5).getField("ymax").as("ymax"))
-      .orderBy("gh")
-  }
-
-  /** GH3 — geohash proximity join: every (customer, supplier) point pair
-    * within 0.15° at precision 4 (cell 0.352°×0.176° — dist ≤ both, the
-    * complete-recall precondition). Candidates = 9-key equi-join (cell +
-    * neighbors), refine = exact euclidean; the oracle is the UNFILTERED
-    * theta join on the identical distance chain, so the blocking must be
-    * invisible — the same ≡-brute-force discipline as j17/j19.
-    */
-  private def gh3(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val c = col("c_custkey"); val k = col("s_suppkey")
-    val cust = Tables.customer(s, d).select(c,
-      ((c * 131 % 3600).cast("double") / lit(10.0) - lit(180.0)).as("px"),
-      ((c * 89 % 1700).cast("double") / lit(10.0) - lit(85.0)).as("py"))
-    val supp = Tables.supplier(s, d).select(k,
-      ((k * 127 % 3600).cast("double") / lit(10.0) - lit(180.0) + lit(0.03)).as("qx"),
-      ((k * 83 % 1700).cast("double") / lit(10.0) - lit(85.0) + lit(0.04)).as("qy"))
-    SpatialOps.geohashProximityJoin(cust, col("px"), col("py"),
-        supp, col("qx"), col("qy"), precision = 4, dist = 0.15)
-      .select(col("c_custkey"), col("s_suppkey"), col("d2"))
-      .orderBy("c_custkey", "s_suppkey")
-  }
-
-  /** TRAJ1 — per-user trajectory statistics over the event stream: order
-    * each user's derived lon/lat points by (ts, event_id), sum the
-    * per-step great-circle distances (per-row fixed-point floors so the
-    * sum is an integer aggregation — order-proof), measure net
-    * displacement first→last (lexicographic min/max struct — no second
-    * window), and the visited bbox. The moving-object analytics a
-    * spatial event pipeline runs (total distance vs displacement =
-    * tortuosity; bbox = coverage). One window + one aggregation, both
-    * partitioned by user — no global sort anywhere.
-    */
-  private def traj1(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val ev = col("event_id")
-    val pts = Tables.events(s, d).select(col("user_id"), col("ts"), ev,
-      ((ev * 37 % 3000).cast("double") / lit(100.0) - lit(15.0)).as("lon"),
-      ((ev * 53 % 2000).cast("double") / lit(100.0) + lit(40.0)).as("lat"))
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    pts
-      .withColumn("plon", lag("lon", 1).over(w))
-      .withColumn("plat", lag("lat", 1).over(w))
-      .withColumn("step_fp", when(col("plon").isNull, lit(0L)).otherwise(
-        floor(SpatialOps.pointDistGeodesic(col("plon"), col("plat"), col("lon"), col("lat"))
-          * lit(1024.0)).cast("long")))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_points"),
-        sum(col("step_fp")).as("path_fp"),
-        min(struct(col("ts"), col("event_id"), col("lon"), col("lat"))).as("__f"),
-        max(struct(col("ts"), col("event_id"), col("lon"), col("lat"))).as("__l"),
-        min(col("lon")).as("lon_min"), max(col("lon")).as("lon_max"),
-        min(col("lat")).as("lat_min"), max(col("lat")).as("lat_max"))
-      .select(col("user_id"), col("n_points"), col("path_fp"),
-        floor(SpatialOps.pointDistGeodesic(col("__f.lon"), col("__f.lat"),
-          col("__l.lon"), col("__l.lat")) * lit(1024.0)).cast("long").as("disp_fp"),
-        col("lon_min"), col("lon_max"), col("lat_min"), col("lat_max"))
-      .orderBy("user_id")
-  }
-
-  /** GH4 — geohash cover census: tile every supplier arrow (hole
-    * included) with the precision-4 cells its REGION touches — the
-    * pruning/bucketing primitive of a geohash-partitioned store. Census
-    * per polygon: cell count, lexicographic id range, and the
-    * order-independent Σ(lonq·2^31 + latq) fingerprint that pins the
-    * exact cell SET. Cells strictly inside the hole are excluded by the
-    * exact refine (the oracle replays edge-intersection + both
-    * representative-vertex containments symbolically).
-    */
-  private def gh4(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val polys = Tables.supplier(s, d).select(col("s_suppkey"),
-      SpatialOps.wktRings(arrowWkt(col("s_suppkey"), withHole = true)).as("_r"))
-    SpatialOps.geohashCoverCells(polys, "_r", precision = 4, packedCol = Some("pq"))
-      .groupBy("s_suppkey")
-      .agg(count(lit(1)).as("n_cells"),
-        min(col("gh")).as("gh_min"), max(col("gh")).as("gh_max"),
-        sum(col("pq")).as("cells_fp"))
-      .orderBy("s_suppkey")
-  }
-
-  /** S25 — JPEG-in-TIFF ingest (compression 7, TIFF Tech Note 2: the
-    * profile real aerial-imagery GeoTIFF archives ship — r12 verdict
-    * missing-item 4). Two scenes through the strip walk: a 3-strip
-    * grayscale file whose shared DQT/DHT live in the JPEGTables tag
-    * (abbreviated strip streams; the last strip's 8-row JPEG crops to its
-    * 4-row grid cell) and a self-contained single-strip YCbCr file
-    * (tables inline, no 347). DC-only blocks keep the mm7 one-product
-    * closed form, so the oracle regenerates every sample exactly — the
-    * table splice, the strip walk, and the crop must all be invisible.
-    */
-  private def s25(s: SparkSession, d: String) = {
-    import s.implicits._
-    val qG = Array.fill(64)(16)
-    val gray = operators.Tiff.synthJpegTiff(20, 20, 1, 8, useJpegTables = true) { si =>
-      operators.Jpeg.synthJpeg(20, 8, 1, Seq(qG)) { (_, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = ((si * 5 + by * 3 + bx) * 7) % 40 - 20
-        nat
-      }
-    }
-    val qY = Array.fill(64)(10); val qC = Array.fill(64)(12)
-    val color = operators.Tiff.synthJpegTiff(16, 16, 3, 16, useJpegTables = false) { _ =>
-      operators.Jpeg.synthJpeg(16, 16, 3, Seq(qY, qC)) { (ch, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = (ch * 11 + by + bx * 5) % 30 - 15
-        nat
-      }
-    }
-    def pixels(id: Long, bytes: Array[Byte], bh: Int, bw: Int) = {
-      val blocks = operators.Tiff.tiffToBandBlocks(
-        Seq((id, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw,
-          nodata = -9999f)
-        .select(col("scene_id"), col("band"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, gray, 8, 20).unionAll(pixels(2L, color, 16, 16))
-      .orderBy("scene_id", "band", "px_row", "px_col")
-  }
-
-  // WGS84 constants for the g23 oracle — ALIASES of the SpatialOps values
-  // the Column algebra bakes in (one derivation; the oracle's
-  // interpolated doubles can never silently desynchronize)
-  private val EllE2: Double = graft.functions.SpatialOps.Wgs84E2
-  private val EllE: Double = graft.functions.SpatialOps.Wgs84E
-  private val EllB2: Double = graft.functions.SpatialOps.Wgs84B2
-  private val EllK: Double = graft.functions.SpatialOps.Deg2Rad
-
-  /** G23 — TRUE-ellipsoid area/perimeter (r12 verdict stretch 8): the
-    * g13-family lon/lat quads through `wktAreaEllipsoidal` /
-    * `wktPerimeterEllipsoidal`. The quads are parallel/meridian-bounded,
-    * where the trapezoidal zone sum is EXACT (zone area =
-    * Δλ·(b²/2)·(F(φ2)−F(φ1))), so the oracle evaluates the closed form.
-    * Outputs are fixed-point floors (area at 16 m² spacing, perimeter at
-    * 1 m) — cross-engine sin/ln drift is ≤ ~1e-13·value while the margin
-    * scan (tools/g23_margin_scan.py) shows every row's distance to a
-    * floor boundary is orders above it.
-    */
-  private def g23(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-96.0) + (col("p_partkey") % 50).cast("double") * lit(0.01)).as("lon0"),
-      (lit(30.0) + (col("p_size") % 40).cast("double") * lit(0.01)).as("lat0"),
-      (lit(0.01) + (col("p_partkey") % 7).cast("double") * lit(0.001)).as("dx"),
-      (lit(0.008) + (col("p_size") % 5).cast("double") * lit(0.001)).as("dy"))
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val wkt = concat(lit("POLYGON (("),
-      pt(col("lon0"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0")), lit("))"))
-    val g = graft.functions.SpatialOps
-    base.withColumn("geom", wkt)
-      .select(col("pk"),
-        floor(g.wktAreaEllipsoidal(col("geom")) / lit(16.0)).cast("long").as("area_fp"),
-        floor(g.wktPerimeterEllipsoidal(col("geom"))).cast("long").as("perim_fp"))
-      .orderBy("pk")
-  }
-
-  /** G24 — RING-VALIDITY CENSUS (the r14 verdict's checkable-contract
-    * mandate): every clip/refine kernel declares "SIMPLE ring is caller
-    * contract"; [[graft.functions.RingIsSimpleExpr]] makes the contract
-    * enforceable by classifying geometry scan-side, so a 100 TB ingest
-    * of third-party parcels turns invalid rings into COUNTABLE REJECTS
-    * (the media-census doctrine applied to vectors). Fixture: five
-    * parameterized ring families per customer — bowtie (self-crossing,
-    * the classic invalid quad), the concave j23 dart (valid), a
-    * collinear spike double-back (invalid), a convex diamond (valid),
-    * and a figure-eight pinch (repeated vertex, invalid) — censused by
-    * class × verdict. The predicate's verdict is CLASS-CONSTANT across
-    * every (cx, cy, r) parameterization, which is exactly what the
-    * oracle replays; one wrong verdict anywhere splits a census row and
-    * breaks the hash.
-    */
-  private def g24(s: SparkSession, d: String) = {
-    val c = col("c_custkey")
-    val cls = (c % 5).cast("int")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val bowtie = array(pt(cx - r, cy - r), pt(cx + r, cy + r),
-      pt(cx + r, cy - r), pt(cx - r, cy + r), pt(cx - r, cy - r))
-    val dart = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx + r, cy - r), pt(cx, cy + r))
-    val spike = array(pt(cx - r, cy), pt(cx + r, cy), pt(cx, cy),
-      pt(cx, cy + r), pt(cx - r, cy))
-    val diamond = array(pt(cx, cy - r), pt(cx + r, cy),
-      pt(cx, cy + r), pt(cx - r, cy), pt(cx, cy - r))
-    val pinch = array(pt(cx, cy), pt(cx - r, cy - r), pt(cx + r, cy - r),
-      pt(cx, cy), pt(cx + r, cy + r), pt(cx - r, cy + r), pt(cx, cy))
-    val ring = when(cls === 0, bowtie).when(cls === 1, dart)
-      .when(cls === 2, spike).when(cls === 3, diamond).otherwise(pinch)
-    Tables.customer(s, d)
-      .select(cls.as("cls"),
-        graft.functions.GeomValidity.ringIsSimpleCol(ring).as("is_simple"))
-      .groupBy("cls", "is_simple").agg(count(lit(1)).as("n"))
-      .orderBy("cls", "is_simple")
-  }
-
-  /** G26 — GUARDED MEASURE (the enforcement flow the validity
-    * predicates exist for, as one query): the g24 ring families pass
-    * through `st_is_simple_ring` scan-side; VALID rings contribute
-    * their shoelace area (fixed-point floor(area·2²⁰) — integer sums,
-    * order-proof), invalid rings become counted rejects — wrong areas
-    * never enter the measure. The oracle replays the class verdicts AND
-    * the valid shapes' closed-form areas (dart 1.5r², diamond 2r² —
-    * exact dyadic chains, so the engine's shoelace equals them
-    * bitwise).
-    */
-  private def g26(s: SparkSession, d: String) = {
-    val c = col("c_custkey")
-    val cls = (c % 5).cast("int")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val bowtie = array(pt(cx - r, cy - r), pt(cx + r, cy + r),
-      pt(cx + r, cy - r), pt(cx - r, cy + r), pt(cx - r, cy - r))
-    val dart = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx + r, cy - r), pt(cx, cy + r))
-    val spike = array(pt(cx - r, cy), pt(cx + r, cy), pt(cx, cy),
-      pt(cx, cy + r), pt(cx - r, cy))
-    val diamond = array(pt(cx, cy - r), pt(cx + r, cy),
-      pt(cx, cy + r), pt(cx - r, cy), pt(cx, cy - r))
-    val pinch = array(pt(cx, cy), pt(cx - r, cy - r), pt(cx + r, cy - r),
-      pt(cx, cy), pt(cx + r, cy + r), pt(cx - r, cy + r), pt(cx, cy))
-    val ring = when(cls === 0, bowtie).when(cls === 1, dart)
-      .when(cls === 2, spike).when(cls === 3, diamond).otherwise(pinch)
-    val ok = graft.functions.GeomValidity.ringIsSimpleCol(ring)
-    Tables.customer(s, d)
-      .select(cls.as("cls"), ok.as("__ok"),
-        when(ok, floor(graft.functions.SpatialOps.ringsArea(array(ring))
-          * lit(1048576L)).cast("long")).otherwise(lit(0L)).as("__a"))
-      .groupBy("cls")
-      .agg(sum(when(col("__ok"), 1).otherwise(0)).cast("long").as("n_valid"),
-        sum(when(col("__ok"), 0).otherwise(1)).cast("long").as("n_rejects"),
-        sum(col("__a")).as("area_fp"))
-      .orderBy("cls")
-  }
-
-  /** G25 — POLYGON-validity census (the g24 predicate one level up —
-    * the whole-geometry ingest gate): outer + holes judged as a unit by
-    * [[graft.functions.PolygonIsValidExpr]] (all rings simple, holes
-    * opposite-wound, no cross-ring edge crossing/overlap, holes
-    * contained, holes not nested, interior connected). Eight
-    * parameterized families with CLASS-CONSTANT verdicts: proper hole
-    * (valid), boundary-straddling hole, escaped hole, overlapping
-    * holes, bowtie outer, two disjoint holes (valid), and — the r16
-    * interior-connectivity pair — a two-hole chain wall-to-wall through
-    * the center (each touch individually legal, the CHAIN splits the
-    * interior top/bottom: invalid) vs a single tangent hole touching
-    * one wall at one point (valid — the OGC rule the chain class
-    * proves we don't over-reject).
-    */
-  private def g25(s: SparkSession, d: String) = {
-    val c = col("c_custkey")
-    val cls = (c % 8).cast("int")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val outer = array(pt(cx - r, cy - r), pt(cx + r, cy - r),
-      pt(cx + r, cy + r), pt(cx - r, cy + r), pt(cx - r, cy - r))
-    val bowtie = array(pt(cx - r, cy - r), pt(cx + r, cy + r),
-      pt(cx + r, cy - r), pt(cx - r, cy + r), pt(cx - r, cy - r))
-    // CW rectangle hole
-    def hole(x0: Column, y0: Column, x1: Column, y1: Column) =
-      array(pt(x0, y0), pt(x0, y1), pt(x1, y1), pt(x1, y0), pt(x0, y0))
-    val q = lit(0.25) * r
-    val rings = when(cls === 0,
-        array(outer, hole(cx - q * 2, cy - q * 2, cx, cy)))
-      .when(cls === 1,
-        array(outer, hole(cx, cy - q, cx + q * 8, cy + q)))
-      .when(cls === 2,
-        array(outer, hole(cx + q * 8, cy, cx + q * 12, cy + q * 2)))
-      .when(cls === 3,
-        array(outer, hole(cx - q * 2, cy - q * 2, cx + q, cy + q),
-          hole(cx - q, cy - q, cx + q * 2, cy + q * 2)))
-      .when(cls === 4, array(bowtie))
-      .when(cls === 5,
-        array(outer, hole(cx - q * 3, cy - q, cx - q, cy + q),
-          hole(cx + q, cy - q, cx + q * 3, cy + q)))
-      .when(cls === 6, {
-        // CW diamond holes chaining left wall -> center -> right wall:
-        // every touch is a legal point-touch, the chain disconnects
-        val dA = array(pt(cx - r, cy), pt(cx - q * 2, cy + q), pt(cx, cy),
-          pt(cx - q * 2, cy - q), pt(cx - r, cy))
-        val dB = array(pt(cx, cy), pt(cx + q * 2, cy + q), pt(cx + r, cy),
-          pt(cx + q * 2, cy - q), pt(cx, cy))
-        array(outer, dA, dB)
-      })
-      .otherwise(
-        // single tangent CW diamond hole touching the bottom wall once
-        array(outer, array(pt(cx, cy - r), pt(cx - q, cy - q * 3), pt(cx, cy - q * 2),
-          pt(cx + q, cy - q * 3), pt(cx, cy - r))))
-    Tables.customer(s, d)
-      .select(cls.as("cls"),
-        graft.functions.GeomValidity.polygonIsValidCol(rings).as("is_valid"))
-      .groupBy("cls", "is_valid").agg(count(lit(1)).as("n"))
-      .orderBy("cls", "is_valid")
-  }
-
-  /** G27 — SIMPLIFICATION census (Douglas–Peucker, the vertex-thinning
-    * constructor next to the r16 clip emitters): a parameterized square
-    * ring carrying one bottom-edge bump per customer — sub-tolerance
-    * (0.25, dropped) on even classes, super-tolerance (3.0, kept) on
-    * odd — through [[graft.functions.SimplifyExprs.simplifyRingCol]] at
-    * eps = 1. The DP recursion on this fixture is hand-traceable
-    * (top-level closed-ring span → farthest corner → the bump judged
-    * against the bottom edge, deviation exactly b), so the oracle
-    * states the kept-vertex count AND the simplified ring's exact
-    * dyadic area per class — one wrong split anywhere splits a census
-    * row.
-    */
-  private def g27(s: SparkSession, d: String) = {
-    val c = col("c_custkey")
-    val cls = (c % 2).cast("int")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val b = when(cls === 0, lit(0.25)).otherwise(lit(3.0))
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val ring = array(pt(cx, cy), pt(cx + 4, cy + b), pt(cx + 8, cy),
-      pt(cx + 8, cy + 8), pt(cx, cy + 8), pt(cx, cy))
-    val simp = graft.functions.SimplifyExprs.simplifyRingCol(ring, lit(1.0))
-    Tables.customer(s, d)
-      .select(cls.as("cls"), size(simp).as("n_out"),
-        floor(graft.functions.SpatialOps.ringsArea(array(simp)) * lit(1048576L))
-          .cast("long").as("area_fp"))
-      .groupBy("cls", "n_out", "area_fp").agg(count(lit(1)).as("n"))
-      .orderBy("cls", "n_out", "area_fp")
-  }
-
-  /** G28 — CONVEX miter BUFFER (the outward-growth constructor, the
-    * r15 verdict's other named gap beside simplify): the j22 customer
-    * diamonds buffered by a parameterized distance through
-    * [[graft.functions.BufferExprs.bufferConvexCol]], vertices exploded
-    * to rows — the oracle replays the whole chain (edge vectors, IEEE
-    * sqrt lengths, unit outward normals, offset anchors, the
-    * t = ((p2−p1)×e2)/(e1×e2) line intersection) operation for
-    * operation, so the buffered coordinates hash-gate as raw doubles
-    * (sqrt and ÷ correctly rounded in both engines — the km1 sqlL2
-    * precedent).
-    */
-  private def g28(s: SparkSession, d: String) = {
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    val dd = lit(0.25) + (c % 4).cast("double") * lit(0.125)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val diamond = array(pt(cx, cy - r), pt(cx + r, cy), pt(cx, cy + r),
-      pt(cx - r, cy), pt(cx, cy - r))
-    val buf = graft.functions.BufferExprs.bufferConvexCol(diamond, dd)
-    Tables.customer(s, d)
-      .select(c.as("c_custkey"), posexplode(buf).as(Seq("pt_i", "pt")))
-      .select(col("c_custkey"), col("pt_i"), col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("c_custkey", "pt_i")
-  }
-
-  /** g28's oracle — the miter chain replayed symbolically per diamond
-    * vertex (CCW, so the engine's s = 1 factor is the bitwise identity
-    * and drops from the spelling). */
-  private def sqlBufferConvex: String = {
-    val vx = Seq("cx", "(cx + r)", "cx", "(cx - r)")
-    val vy = Seq("(cy - r)", "cy", "(cy + r)", "cy")
-    def vertex(i: Int): (String, String) = {
-      val p = (i + 3) % 4; val nx = (i + 1) % 4
-      val e1x = s"(${vx(i)} - ${vx(p)})"; val e1y = s"(${vy(i)} - ${vy(p)})"
-      val e2x = s"(${vx(nx)} - ${vx(i)})"; val e2y = s"(${vy(nx)} - ${vy(i)})"
-      val l1 = s"sqrt($e1x * $e1x + $e1y * $e1y)"
-      val l2 = s"sqrt($e2x * $e2x + $e2y * $e2y)"
-      val n1x = s"($e1y / $l1)"; val n1y = s"((-$e1x) / $l1)"
-      val n2x = s"($e2y / $l2)"; val n2y = s"((-$e2x) / $l2)"
-      val p1x = s"(${vx(p)} + d * $n1x)"; val p1y = s"(${vy(p)} + d * $n1y)"
-      val p2x = s"(${vx(i)} + d * $n2x)"; val p2y = s"(${vy(i)} + d * $n2y)"
-      val denom = s"($e1x * $e2y - $e1y * $e2x)"
-      val t = s"((($p2x - $p1x) * $e2y - ($p2y - $p1y) * $e2x) / $denom)"
-      (s"($p1x + $t * $e1x)", s"($p1y + $t * $e1y)")
-    }
-    val structs = (0 until 4).map { i =>
-      val (x, y) = vertex(i)
-      s"struct_pack(pt_i := CAST($i AS INT), x := $x, y := $y)"
-    } :+ {
-      val (x, y) = vertex(0)
-      s"struct_pack(pt_i := CAST(4 AS INT), x := $x, y := $y)"
-    }
-    s"""WITH t AS (SELECT c_custkey,
-       |  CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-       |  CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-       |  1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r,
-       |  0.25 + CAST(c_custkey % 4 AS DOUBLE) * 0.125 AS d
-       |  FROM customer)
-       |SELECT c_custkey, v.pt_i AS pt_i, v.x AS x, v.y AS y
-       |FROM (SELECT c_custkey, unnest([${structs.mkString(",\n  ")}]) AS v FROM t)
-       |ORDER BY c_custkey, pt_i""".stripMargin
-  }
-
-  /** J4B — model-BATCH dispatch at its design shape (r12 verdict stretch
-    * 9; pixel_classifier_stream.py:90-96's memory-bounded loop): 18
-    * frozen single-tree rules tables — more than the reference's batch
-    * bound — dispatched by `l_suppkey % 18` in batches of 5, so four
-    * map-only passes each compile at most five vote expressions. The
-    * models are synthetic forestRules-shaped box tables (dyadic leaf
-    * probabilities), so the oracle regenerates every leaf decision
-    * closed-form — no training, no artifact.
-    */
-  private def j4b(s: SparkSession, d: String) = {
-    import s.implicits._
-    val li = Tables.lineitem(s, d).select(
-      (col("l_suppkey") % 18).cast("int").as("mk"),
-      col("l_quantity").cast("double").as("q"))
-    def fp(p: Double) = math.rint(p * operators.MlOps.RuleProbScale).toLong
-    val rules = (0 until 18).map { k =>
-      val a = (10 + k % 13).toDouble
-      val b = (25 + k % 17).toDouble
-      val p1 = if (k % 2 == 0) 0.25 else 0.75
-      val p2 = if (k % 3 == 0) 0.75 else 0.25
-      val p3 = if (k % 5 == 0) 0.875 else 0.125
-      k -> Seq(
-        (0, 0, -1e18, a, fp(p1)),
-        (0, 1, a, b, fp(p2)),
-        (0, 2, b, 1e18, fp(p3))).toDF("tree_id", "leaf_id", "q_lo", "q_hi", "p1_fp")
-    }
-    operators.MlOps.classifyFromRulesBatched(rules, li, "mk", Seq("q"), batchSize = 5)
-      .groupBy("mk", "pred_label").agg(count(lit(1)).as("n"))
-      .orderBy("mk", "pred_label")
-  }
-
-  /** Z1 — z-order (Morton) layout key: the write-side spatial-clustering
-    * primitive (SpatialOps.zorderKey / clusterByZOrder). Hash-checks the
-    * bit-interleave against an explicit bit-arithmetic DuckDB oracle.
-    */
-  private def z1(s: SparkSession, d: String) =
-    Tables.supplier(s, d)
-      .select(col("s_suppkey"),
-        graft.functions.SpatialOps.zorderKey(
-          col("s_suppkey") % 97, col("s_suppkey") % 89, bits = 7).as("zkey"))
-      .orderBy("zkey", "s_suppkey")
-
-  /** DuckDB bit-sum replica of zorderKey for the z1 oracle. */
-  private def zorderSqlExpr(x: String, y: String, bits: Int): String =
-    (0 until bits).flatMap(i => Seq(
-      s"(((($x) >> $i) & 1) << ${2 * i})",
-      s"(((($y) >> $i) & 1) << ${2 * i + 1})")).mkString(" + ")
-
-  // ---- DuckDB replicas of the exact-geometry refine predicates (j16-j18).
-  // Every operand is re-parenthesized on substitution so the SQL groups
-  // identically to the Column algebra (e.g. `py - y1` with y1 = "y0 + h"
-  // must read `py - (y0 + h)`, not `py - y0 + h`); all ops are IEEE
-  // +,-,*,/ and comparisons, correctly rounded in both engines, so each
-  // geometric decision replays bit-for-bit.
-
-  /** Consecutive segments of a closed ring given its point list. */
-  private def sqlRingSegs(pts: Seq[(String, String)]): Seq[((String, String), (String, String))] =
-    pts.map { case (x, y) => (s"($x)", s"($y)") }.zip(
-      pts.tail.map { case (x, y) => (s"($x)", s"($y)") })
-
-  /** Rightward-ray crossing count (SpatialOps.ringsCrossingNumber). */
-  private def sqlCrossings(segs: Seq[((String, String), (String, String))],
-      px: String, py: String): String =
-    segs.map { case ((x1, y1), (x2, y2)) =>
-      s"(CASE WHEN (($y1 > $py) <> ($y2 > $py)) AND " +
-        s"($px < $x1 + ($py - $y1) * ($x2 - $x1) / ($y2 - $y1)) THEN 1 ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-
-  /** Exact point-on-segment test (SpatialOps.ringsPointOnBoundary). */
-  private def sqlOnBoundary(segs: Seq[((String, String), (String, String))],
-      px: String, py: String): String =
-    segs.map { case ((x1, y1), (x2, y2)) =>
-      s"((($x2 - $x1) * ($py - $y1) - ($y2 - $y1) * ($px - $x1) = 0) AND " +
-        s"$px >= least($x1, $x2) AND $px <= greatest($x1, $x2) AND " +
-        s"$py >= least($y1, $y2) AND $py <= greatest($y1, $y2))"
-    }.mkString("(", " OR ", ")")
-
-  /** Closed containment = boundary OR odd parity (SpatialOps.ringsContainPoint). */
-  private def sqlContains(segs: Seq[((String, String), (String, String))],
-      px: String, py: String): String =
-    s"(${sqlOnBoundary(segs, px, py)} OR ${sqlCrossings(segs, px, py)} % 2 = 1)"
-
-  /** J21 — zonal clip AREAS: supplier arrows (holes included) against an
-    * 8-unit tile grid through bboxJoin, each surviving pair measured by
-    * the exact Sutherland–Hodgman clip area ([[ClipExprs]]). The oracle
-    * computes the SAME S-H passes + shoelace fold over ALL polygon×cell
-    * pairs and keeps clip_area > 0 — so the bbox prune is proven
-    * semantically invisible AND the clipped-vertex arithmetic itself is
-    * hash-gated (every intersection-point divide replayed in order).
-    */
-  private def j21(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_r")))
-    val cells = s.range(156).select(
-        col("id").as("cell_id"),
-        ((col("id") % 13) * 8).cast("double").as("gx"),
-        ((col("id") / 13).cast("long") * 8).cast("double").as("gy"))
-      .withColumn("cenv", SpatialOps.bbox(col("gx"), col("gy"),
-        col("gx") + lit(8.0), col("gy") + lit(8.0)))
-    operators.SpatialJoin.bboxJoin(polys, cells, "env", "cenv", cellSize = 8.0)
-      .withColumn("clip_area", graft.functions.ClipExprs.clipArea(col("_r"), col("cenv")))
-      .filter(col("clip_area") > 0.0)
-      .select("s_suppkey", "cell_id", "clip_area")
-      .orderBy("s_suppkey", "cell_id")
-  }
-
-  /** ZS2 — EXACT area-weighted zonal statistics (the query the clip-area
-    * kernels exist FOR): j21's polygon×cell clip areas rolled up per
-    * polygon into the area-weighted mean of a per-cell value — "what is
-    * this parcel's average cell value, weighted by how much of the
-    * parcel each cell actually contains". Weights fixed-point
-    * (floor(area·2²⁰) — exact on IEEE doubles) so the weighted sums are
-    * integer aggregations (commutative, partition-order-proof); the
-    * final mean is ONE divide of exact integers. Oracle wraps the j21
-    * replay in the identical rollup.
-    */
-  private def zs2(s: SparkSession, d: String) = {
-    val afp = floor(col("clip_area") * lit(1048576.0)).cast("long")
-    j21(s, d)
-      .select(col("s_suppkey"), col("cell_id"), afp.as("afp"))
-      .groupBy("s_suppkey")
-      .agg(count(lit(1)).as("n_cells"),
-        sum(col("afp")).as("area_fp"),
-        sum(col("afp") * col("cell_id")).as("wsum_fp"))
-      .withColumn("mean_cell",
-        when(col("area_fp") > 0,
-          round(col("wsum_fp").cast("double") / col("area_fp").cast("double"), 6)))
-      .orderBy("s_suppkey")
-  }
-
-  /** J22 — polygon∩polygon intersection AREAS (the measure form of j18's
-    * boolean overlap): supplier arrows (concave + hole) against customer
-    * diamonds (convex, no axis-aligned edge) through bboxJoin, each pair
-    * measured by the convex-window Sutherland–Hodgman kernel. Same
-    * discipline as j21, general half-planes: the oracle replays each
-    * edge's side values and t = s_p/(s_p−s_q) intersections in identical
-    * IEEE order over the envelope-overlap candidates (exact pre-filter:
-    * a positive intersection area implies overlapping envelopes).
-    */
-  private def j22(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val diamond = concat(lit("POLYGON (("),
-      concat_ws(", ", pt(cx, cy - r), pt(cx + r, cy), pt(cx, cy + r),
-        pt(cx - r, cy), pt(cx, cy - r)), lit("))"))
-    val b = Tables.customer(s, d)
-      .select(c, diamond.as("geom_b"))
-      .select(col("c_custkey"),
-        element_at(SpatialOps.wktRings(col("geom_b")), 1).as("_rc"),
-        SpatialOps.ringsEnvelope(SpatialOps.wktRings(col("geom_b"))).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .withColumn("inter_area",
-        graft.functions.ClipExprs.clipAreaPoly(col("_ra"), col("_rc")))
-      .filter(col("inter_area") > 0.0)
-      .select("s_suppkey", "c_custkey", "inter_area")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J23 — CONCAVE × CONCAVE polygon intersection AREAS (the r13 top
-    * gap): supplier arrows (concave + hole) against customer DARTS
-    * (concave quads with a reflex notch — the first fixture whose clip
-    * side S-H cannot take), measured by the ear-clipping general kernel:
-    * the dart triangulates into its two ears (tip,bl,notch) and
-    * (tip,notch,br) — deterministic, structurally constant across the
-    * whole fixture family — and each ear runs the UNCHANGED convex
-    * kernel over the subject. The oracle replays both triangles' passes
-    * in the kernel's emission order; ClipAreaSpec proves the engine-side
-    * decomposition is BITWISE the convex kernel over those ears, which
-    * is what makes the replay exact rather than approximate.
-    */
-  private def j23(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val dart = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx + r, cy - r), pt(cx, cy + r))
-    val b = Tables.customer(s, d)
-      .select(c, dart.as("_rc"),
-        SpatialOps.bbox(cx - r, cy - r, cx + r, cy + r).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .withColumn("inter_area",
-        graft.functions.ClipExprs.clipAreaGeneralCol(col("_ra"), col("_rc")))
-      .filter(col("inter_area") > 0.0)
-      .select("s_suppkey", "c_custkey", "inter_area")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J25 — polygon-WITH-HOLES × polygon-WITH-HOLES intersection AREAS
-    * (the fully general zonal-stats measure): supplier arrows (concave
-    * + hole) against customer darts carrying a triangular hole in the
-    * right lobe, via [[graft.functions.ClipExprs.clipAreaPolygonCol]]:
-    * area(S ∩ outer) − area(S ∩ hole), each term the ear-decomposed
-    * general kernel. The oracle extends j23's replay with the hole
-    * triangle's three passes (CW winding → the ≤ 0 inside test) and
-    * subtracts its area last — the kernel's exact emission order.
-    */
-  private def j25(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val dart = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx + r, cy - r), pt(cx, cy + r))
-    // CW triangular hole inside the dart's right lobe (ear T2)
-    val hole = array(
-      pt(cx + lit(0.25) * r, cy - lit(0.25) * r),
-      pt(cx + lit(0.375) * r, cy - lit(0.125) * r),
-      pt(cx + lit(0.5) * r, cy - lit(0.25) * r),
-      pt(cx + lit(0.25) * r, cy - lit(0.25) * r))
-    val b = Tables.customer(s, d)
-      .select(c, array(dart, hole).as("_rc"),
-        SpatialOps.bbox(cx - r, cy - r, cx + r, cy + r).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .withColumn("inter_area",
-        graft.functions.ClipExprs.clipAreaPolygonCol(col("_ra"), col("_rc")))
-      .filter(col("inter_area") > 0.0)
-      .select("s_suppkey", "c_custkey", "inter_area")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J26 — polygon × MULTIPOLYGON-window intersection AREAS (the
-    * archipelago clip the single-outer j25 kernel rejects): the same
-    * supplier arrows against the customer dart PRE-SPLIT into its two
-    * ear triangles as separate CCW members — member 1 the left ear
-    * (tip, bl, notch), member 2 the right ear (tip, notch, br) carrying
-    * the CW hole triangle — via
-    * [[graft.functions.ClipExprs.clipAreaMultiPolygonCol]], which
-    * splits members by ring orientation and left-folds
-    * Σ outers − Σ holes. Each member triangle is exactly the ear the
-    * general kernel cuts from the whole dart and the fold order matches
-    * j25's ((A₁+A₂)−A₃), so the values are BITWISE j25's
-    * (ClipAreaSpec gates that identity) and the oracle is j25's replay
-    * verbatim — same arithmetic, reached through the MULTIPOLYGON front
-    * door.
-    */
-  private def j26(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    // the dart's two CCW ears as standalone members (the kernel's own
-    // deterministic decomposition of the j23/j25 dart)
-    val earLeft = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx, cy + r))
-    val earRight = array(pt(cx, cy + r), pt(cx, cy - lit(0.5) * r),
-      pt(cx + r, cy - r), pt(cx, cy + r))
-    // CW triangular hole inside the right member (as in j25)
-    val hole = array(
-      pt(cx + lit(0.25) * r, cy - lit(0.25) * r),
-      pt(cx + lit(0.375) * r, cy - lit(0.125) * r),
-      pt(cx + lit(0.5) * r, cy - lit(0.25) * r),
-      pt(cx + lit(0.25) * r, cy - lit(0.25) * r))
-    val b = Tables.customer(s, d)
-      .select(c, array(earLeft, earRight, hole).as("_rc"),
-        SpatialOps.bbox(cx - r, cy - r, cx + r, cy + r).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .withColumn("inter_area",
-        graft.functions.ClipExprs.clipAreaMultiPolygonCol(col("_ra"), col("_rc")))
-      .filter(col("inter_area") > 0.0)
-      .select("s_suppkey", "c_custkey", "inter_area")
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** J27 — GEOMETRY-EMITTING clip (the r15 verdict's top gap: the
-    * engine could MEASURE every overlay but never CONSTRUCT one): the
-    * j21 polygon×cell pairs with the clipped polygon's RINGS emitted by
-    * [[graft.functions.ClipExprs.clipRingsBoxCol]] (the identical S-H
-    * passes, vertex lists returned instead of folded), exploded to one
-    * row per vertex — the raw IEEE coordinates hash-gate directly
-    * because the oracle replays every pass and unnests the SAME final
-    * lists (the j21 discipline, one step further: the first oracled
-    * emitted GEOMETRY). Pairs survive on a nonempty vertex list (the
-    * emission-side analog of j21's clip_area > 0 — degenerate
-    * zero-area slivers are geometry here, not measure). The WKT bridge
-    * and GeoParquet round trip (clipped rings → st_rings_wkt → sink →
-    * re-ingest → areas ≡ st_clip_area bitwise) are gated in
-    * ClipAreaSpec/GeoSinkSpec.
-    */
-  private def j27(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_r")))
-    val cells = s.range(156).select(
-        col("id").as("cell_id"),
-        ((col("id") % 13) * 8).cast("double").as("gx"),
-        ((col("id") / 13).cast("long") * 8).cast("double").as("gy"))
-      .withColumn("cenv", SpatialOps.bbox(col("gx"), col("gy"),
-        col("gx") + lit(8.0), col("gy") + lit(8.0)))
-    operators.SpatialJoin.bboxJoin(polys, cells, "env", "cenv", cellSize = 8.0)
-      .withColumn("clipped",
-        graft.functions.ClipExprs.clipRingsBoxCol(col("_r"), col("cenv")))
-      .select(col("s_suppkey"), col("cell_id"),
-        posexplode(col("clipped")).as(Seq("ring_i", "ring")))
-      .filter(size(col("ring")) > 0)
-      .select(col("s_suppkey"), col("cell_id"), col("ring_i"),
-        posexplode(col("ring")).as(Seq("pt_i", "pt")))
-      .select(col("s_suppkey"), col("cell_id"), col("ring_i"), col("pt_i"),
-        col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("s_suppkey", "cell_id", "ring_i", "pt_i")
-  }
-
-  /** J28 — GEOMETRY-EMITTING general (concave-window) clip: j23's
-    * arrow × dart pairs with the ear-tiled PIECES of subject ∩ dart
-    * emitted by [[graft.functions.ClipExprs.clipRingsGeneralCol]]
-    * (clipAreaGeneral's deterministic ear decomposition, the per-ear
-    * vertex lists returned instead of folded). Piece order is ear-major,
-    * subject-ring-minor with empties kept, so piece_i names the
-    * (ear, ring) pair: 0 = earA⊗outer, 1 = earA⊗hole, 2 = earB⊗outer,
-    * 3 = earB⊗hole for the dart's proven two-ear decomposition (the
-    * j23 oracle's hash is the proof the kernel cuts exactly those
-    * ears). Pieces tile the intersection — seam edges along the ear
-    * cut are geometry here (adjacent, not dissolved; ClipAreaSpec
-    * gates the per-ear area fold ≡ clipAreaGeneral bitwise and the
-    * dissolve path for merged boundaries). Raw IEEE vertex coordinates
-    * hash-gate because the oracle replays both ears' passes and
-    * unnests the SAME final lists (the j27 discipline on the concave
-    * kernel).
-    */
-  private def j28(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val dart = array(pt(cx, cy + r), pt(cx - r, cy - r),
-      pt(cx, cy - lit(0.5) * r), pt(cx + r, cy - r), pt(cx, cy + r))
-    val b = Tables.customer(s, d)
-      .select(c, dart.as("_rc"),
-        SpatialOps.bbox(cx - r, cy - r, cx + r, cy + r).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .withColumn("pieces",
-        graft.functions.ClipExprs.clipRingsGeneralCol(col("_ra"), col("_rc")))
-      .select(col("s_suppkey"), col("c_custkey"),
-        posexplode(col("pieces")).as(Seq("piece_i", "piece")))
-      .filter(size(col("piece")) > 0)
-      .select(col("s_suppkey"), col("c_custkey"), col("piece_i"),
-        posexplode(col("piece")).as(Seq("pt_i", "pt")))
-      .select(col("s_suppkey"), col("c_custkey"), col("piece_i"), col("pt_i"),
-        col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("s_suppkey", "c_custkey", "piece_i", "pt_i")
-  }
-
-  /** j28's oracle — sqlClipConcave's two-ear replay with the FINAL
-    * closed lists unnested to vertex rows instead of folded to areas:
-    * pieces (earA⊗outer, earA⊗hole, earB⊗outer, earB⊗hole) emit their
-    * post-pass-3 vertices with 0-based positions when nonempty — the
-    * engine's posexplode-over-emitted-pieces rule on the ear-major
-    * order.
-    */
-  private def sqlClipGeneralGeom: String = {
-    val concave = sqlClipConcave
-    val upToFinal = concave.substring(0,
-      concave.indexOf("SELECT s_suppkey, c_custkey, inter_area"))
-    def vtx(piece: String, pi: Int): String =
-      s"""SELECT s_suppkey, c_custkey, CAST($pi AS INT) AS piece_i,
-         |  unnest(list_transform(range(1, length($piece) + 1), i ->
-         |    struct_pack(pt_i := CAST(i - 1 AS INT), x := $piece[i].x, y := $piece[i].y))) AS v
-         |FROM c3 WHERE length($piece) > 0""".stripMargin
-    upToFinal +
-      s"""SELECT s_suppkey, c_custkey, piece_i, v.pt_i AS pt_i, v.x AS x, v.y AS y
-         |FROM (${vtx("oa3", 0)}
-         |UNION ALL
-         |${vtx("ha3", 1)}
-         |UNION ALL
-         |${vtx("ob3", 2)}
-         |UNION ALL
-         |${vtx("hb3", 3)})
-         |ORDER BY s_suppkey, c_custkey, piece_i, pt_i""".stripMargin
-  }
-
-  /** J29 — GEOMETRY-EMITTING box DIFFERENCE (the overlay family's other
-    * half: j27 constructs subject ∩ box, this constructs subject − box):
-    * the j21/j27 polygon × cell pairs with the four-strip complement
-    * tiling emitted by
-    * [[graft.functions.ClipExprs.clipRingsBoxComplementCol]] — the box
-    * complement decomposed into four DISJOINT convex strips (left,
-    * right, bottom-middle, top-middle), each the ordinary S-H pass
-    * chain, pieces strip-major × subject-ring-minor with empties kept.
-    * Unlike j27 the emitted pieces are nonempty even when poly ∩ cell
-    * is empty, so the oracle replicates the bboxJoin PAIR SET exactly
-    * (closed envelope-overlap on the arrow's [x0,x0+w]×[y0,y0+h] vs the
-    * cell) rather than relying on a nonempty-output filter to do the
-    * joining. Raw IEEE coordinates hash-gate via the strip-pass replay.
-    */
-  private def j29(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val polys = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_r"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_r")))
-    val cells = s.range(156).select(
-        col("id").as("cell_id"),
-        ((col("id") % 13) * 8).cast("double").as("gx"),
-        ((col("id") / 13).cast("long") * 8).cast("double").as("gy"))
-      .withColumn("cenv", SpatialOps.bbox(col("gx"), col("gy"),
-        col("gx") + lit(8.0), col("gy") + lit(8.0)))
-    operators.SpatialJoin.bboxJoin(polys, cells, "env", "cenv", cellSize = 8.0)
-      .withColumn("pieces",
-        graft.functions.ClipExprs.clipRingsBoxComplementCol(col("_r"), col("cenv")))
-      .select(col("s_suppkey"), col("cell_id"),
-        posexplode(col("pieces")).as(Seq("piece_i", "piece")))
-      .filter(size(col("piece")) > 0)
-      .select(col("s_suppkey"), col("cell_id"), col("piece_i"),
-        posexplode(col("piece")).as(Seq("pt_i", "pt")))
-      .select(col("s_suppkey"), col("cell_id"), col("piece_i"), col("pt_i"),
-        col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("s_suppkey", "cell_id", "piece_i", "pt_i")
-  }
-
-  /** j29's oracle — the four strip chains replayed with sqlClipZonal's
-    * pass/close machinery (strip 0: x≤gx; strip 1: x≥gx+8; strips 2/3:
-    * both x walls then y≤gy / y≥gy+8 — the kernel's fixed order), over
-    * the EXACT bboxJoin pair set (closed envelope overlap), final lists
-    * unnested with piece_i = strip·2 + ring.
-    */
-  private def sqlBoxDiffGeom: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    def pass(in: String, onX: Boolean, bound: String, keepGE: Boolean): String = {
-      val f = if (onX) "x" else "y"
-      val cmp = if (keepGE) ">=" else "<="
-      val isect =
-        if (onX)
-          s"struct_pack(x := CAST($bound AS DOUBLE), y := $in[i].y + ((CAST($bound AS DOUBLE) - $in[i].x) / ($in[i+1].x - $in[i].x)) * ($in[i+1].y - $in[i].y))"
-        else
-          s"struct_pack(x := $in[i].x + ((CAST($bound AS DOUBLE) - $in[i].y) / ($in[i+1].y - $in[i].y)) * ($in[i+1].x - $in[i].x), y := CAST($bound AS DOUBLE))"
-      s"""flatten(list_transform(range(1, length($in)), i ->
-         |    CASE WHEN $in[i+1].$f $cmp ($bound) AND $in[i].$f $cmp ($bound) THEN [$in[i+1]]
-         |         WHEN $in[i+1].$f $cmp ($bound) THEN [$isect, $in[i+1]]
-         |         WHEN $in[i].$f $cmp ($bound) THEN [$isect]
-         |         ELSE [] END))""".stripMargin
-    }
-    def close(v: String) =
-      s"CASE WHEN length($v) = 0 THEN $v ELSE list_append($v, $v[1]) END"
-    val strips: Seq[Seq[(Boolean, String, Boolean)]] = Seq(
-      Seq((true, "gx", false)),
-      Seq((true, "gx + 8", true)),
-      Seq((true, "gx", true), (true, "gx + 8", false), (false, "gy", false)),
-      Seq((true, "gx", true), (true, "gx + 8", false), (false, "gy + 8", true)))
-    val base =
-      s"""lvl0 AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-         |  ${ptsList(rings(0))} AS o0, ${ptsList(rings(1))} AS h0
-         |FROM ($arrowSqlBase) a JOIN
-         |  (SELECT range AS cell_id, CAST((range % 13) * 8 AS DOUBLE) AS gx,
-         |     CAST((range // 13) * 8 AS DOUBLE) AS gy FROM range(156)) c
-         |  ON x0 <= gx + 8 AND gx <= x0 + w AND y0 <= gy + 8 AND gy <= y0 + h)""".stripMargin
-    val chains = strips.zipWithIndex.flatMap { case (passes, si) =>
-      passes.zipWithIndex.flatMap { case ((onX, bound, ge), k) =>
-        val src = if (k == 0) "lvl0" else s"t${si}c$k"
-        Seq(
-          s"""t${si}p${k + 1} AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-             |  ${pass(s"o$k", onX, bound, ge)} AS oraw,
-             |  ${pass(s"h$k", onX, bound, ge)} AS hraw FROM $src)""".stripMargin,
-          s"""t${si}c${k + 1} AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-             |  ${close("oraw")} AS o${k + 1}, ${close("hraw")} AS h${k + 1} FROM t${si}p${k + 1})""".stripMargin)
-      }
-    }
-    def vtx(si: Int, piece: String, pi: Int): String = {
-      val last = s"t${si}c${strips(si).length}"
-      s"""SELECT s_suppkey, cell_id, CAST($pi AS INT) AS piece_i,
-         |  unnest(list_transform(range(1, length($piece) + 1), i ->
-         |    struct_pack(pt_i := CAST(i - 1 AS INT), x := $piece[i].x, y := $piece[i].y))) AS v
-         |FROM $last WHERE length($piece) > 0""".stripMargin
-    }
-    val parts = strips.indices.flatMap { si =>
-      val n = strips(si).length
-      Seq(vtx(si, s"o$n", si * 2), vtx(si, s"h$n", si * 2 + 1))
-    }
-    (base +: chains).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT s_suppkey, cell_id, piece_i, v.pt_i AS pt_i, v.x AS x, v.y AS y
-         |FROM (${parts.mkString("\nUNION ALL\n")})
-         |ORDER BY s_suppkey, cell_id, piece_i, pt_i""".stripMargin
-  }
-
-  /** G29 — area-weighted centroid of the concave arrow-WITH-HOLE as a
-    * CODEGEN kernel measure ([[graft.functions.CentroidExprs]]): g1
-    * already oracles the Column centroid on axis-aligned rectangles
-    * with round-6; this gates RAW IEEE doubles on concave geometry
-    * where the hole's opposite winding subtracts its first moment. The
-    * kernel folds per-ring subtotals (one wᵢ = p − q term per edge,
-    * terms left-assoc, rings left-assoc) so the oracle mirrors
-    * term-for-term in DuckDB list algebra and the quotient
-    * sx/(3·a2) hashes bitwise.
-    */
-  private def g29(s: SparkSession, d: String) = {
-    import graft.functions.{CentroidExprs, SpatialOps}
-    Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"),
-        CentroidExprs.centroidCol(SpatialOps.wktRings(col("geom"))).as("c"))
-      .select(col("s_suppkey"), col("c.x").as("cx"), col("c.y").as("cy"))
-      .orderBy("s_suppkey")
-  }
-
-  /** g29's oracle — the centroid kernel's folds in list algebra: per
-    * ring the cross terms and moment terms left-assoc summed, rings
-    * added in order, one divide at the end.
-    */
-  private def sqlCentroid: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    def crossOf(v: String) =
-      s"""list_reduce(list_transform(range(1, length($v)), i ->
-         |      $v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y), (a, b) -> a + b)""".stripMargin
-    def momentOf(v: String, ax: String) =
-      s"""list_reduce(list_transform(range(1, length($v)), i ->
-         |      ($v[i].$ax + $v[i+1].$ax) * ($v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y)),
-         |      (a, b) -> a + b)""".stripMargin
-    s"""WITH b AS ($arrowSqlBase),
-       |pts AS MATERIALIZED (SELECT s_suppkey,
-       |  ${ptsList(rings(0))} AS o, ${ptsList(rings(1))} AS h FROM b),
-       |m AS MATERIALIZED (SELECT s_suppkey,
-       |  (${crossOf("o")}) + (${crossOf("h")}) AS a2,
-       |  (${momentOf("o", "x")}) + (${momentOf("h", "x")}) AS sx,
-       |  (${momentOf("o", "y")}) + (${momentOf("h", "y")}) AS sy FROM pts)
-       |SELECT s_suppkey, sx / (3.0 * a2) AS cx, sy / (3.0 * a2) AS cy
-       |FROM m ORDER BY s_suppkey""".stripMargin
-  }
-
-  /** J30 — LINESTRING (open path) clip: a 4-point zigzag trajectory per
-    * supplier clipped to its row's box via
-    * [[graft.functions.SpatialOps.clipSegmentsBox]] (the Liang–Barsky
-    * parametric slab test as pure Column algebra — the path family's
-    * counterpart of the polygon clips), kept sub-segments emitted with
-    * their raw IEEE endpoints and lengths. The fixture varies slope,
-    * inside/outside, and the d=0 vertical case by key mods; the oracle
-    * replays each segment's t₀/t₁ CASE chain symbolically (the
-    * j16/j19 discipline — greatest/least select one bit-identical
-    * operand, divisions replayed with identical operand order).
-    */
-  private def j30(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val k = col("s_suppkey")
-    val x0 = (k % 90).cast("double")
-    val y0 = (k % 80).cast("double")
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val path = array(
-      pt(x0, y0),
-      pt(x0 + lit(3.0), y0 + (k % 5).cast("double") + lit(1.0)),
-      pt(x0 + lit(3.0) + (k % 4).cast("double"), y0 - (k % 7).cast("double") + lit(3.0)),
-      pt(x0 + lit(9.0), y0 + lit(2.0)))
-    val box = SpatialOps.bbox(x0 + lit(2.0), y0 - lit(1.0), x0 + lit(7.0), y0 + lit(4.0))
-    Tables.supplier(s, d).select(k, path.as("_p"), box.as("_b"))
-      .select(k, explode(SpatialOps.clipSegmentsBox(col("_p"), col("_b"))).as("seg"))
-      .select(k, col("seg.seg_i").as("seg_i"),
-        col("seg.ax").as("ax"), col("seg.ay").as("ay"),
-        col("seg.bx").as("bx"), col("seg.by").as("by"))
-      .withColumn("seg_len", sqrt((col("bx") - col("ax")) * (col("bx") - col("ax"))
-        + (col("by") - col("ay")) * (col("by") - col("ay"))))
-      .orderBy("s_suppkey", "seg_i")
-  }
-
-  /** The j30/j31 zigzag's symbolic points over base columns x0,y0,m5,m4,m7. */
-  private val zigzagSqlPts: Seq[(String, String)] = Seq(
-    ("x0", "y0"),
-    ("x0 + 3", "y0 + m5 + 1"),
-    ("x0 + 3 + m4", "y0 - m7 + 3"),
-    ("x0 + 9", "y0 + 2"))
-
-  /** Shared Liang–Barsky t-chain CTE generator (j30/j31 — ONE spelling
-    * of clipSegmentsBox's CASE chains, r16b review): per segment a
-    * MATERIALIZED CTE `s$i` over base CTE `b`, clipping against the
-    * given slab bounds, projecting `keyCols(i)` plus the clipped
-    * endpoints.
-    */
-  private def sqlSegClipCtes(pts: Seq[(String, String)],
-      lox: String, hix: String, loy: String, hiy: String,
-      keyCols: Int => String): Seq[String] = {
-    def t0Of(dd: String, c: String, lo: String, hi: String): String =
-      s"""CASE WHEN ($dd) > 0 THEN (($lo) - ($c)) / ($dd)
-         |     WHEN ($dd) < 0 THEN (($hi) - ($c)) / ($dd)
-         |     ELSE CASE WHEN ($c) >= ($lo) AND ($c) <= ($hi)
-         |               THEN CAST(0 AS DOUBLE) ELSE CAST(2 AS DOUBLE) END END""".stripMargin
-    def t1Of(dd: String, c: String, lo: String, hi: String): String =
-      s"""CASE WHEN ($dd) > 0 THEN (($hi) - ($c)) / ($dd)
-         |     WHEN ($dd) < 0 THEN (($lo) - ($c)) / ($dd)
-         |     ELSE CASE WHEN ($c) >= ($lo) AND ($c) <= ($hi)
-         |               THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END END""".stripMargin
-    (0 until pts.length - 1).map { i =>
-      val (px, py) = pts(i)
-      val (qx, qy) = pts(i + 1)
-      val dx = s"(($qx) - ($px))"
-      val dy = s"(($qy) - ($py))"
-      val t0 = s"GREATEST(CAST(0 AS DOUBLE), ${t0Of(dx, px, lox, hix)}, ${t0Of(dy, py, loy, hiy)})"
-      val t1 = s"LEAST(CAST(1 AS DOUBLE), ${t1Of(dx, px, lox, hix)}, ${t1Of(dy, py, loy, hiy)})"
-      s"""s$i AS MATERIALIZED (SELECT ${keyCols(i)},
-         |  ($px) + t0 * $dx AS ax, ($py) + t0 * $dy AS ay,
-         |  ($px) + t1 * $dx AS bx, ($py) + t1 * $dy AS by
-         |FROM (SELECT *, $t0 AS t0, $t1 AS t1 FROM b) WHERE t0 <= t1)""".stripMargin
-    }
-  }
-
-  /** j30's oracle — one CTE per segment computing the t₀/t₁ chains
-    * (GREATEST/LEAST over the sign-of-direction CASEs, the engine's
-    * fixed argument order), clipped endpoints projected, seg_len from
-    * the PROJECTED columns (exactly the engine's staged withColumn).
-    */
-  private def sqlClipPath: String = {
-    val segCtes = sqlSegClipCtes(zigzagSqlPts,
-      "x0 + 2", "x0 + 7", "y0 - 1", "y0 + 4",
-      i => s"s_suppkey, CAST($i AS INT) AS seg_i")
-    s"""WITH b AS (SELECT s_suppkey,
-       |  CAST(s_suppkey % 90 AS DOUBLE) AS x0, CAST(s_suppkey % 80 AS DOUBLE) AS y0,
-       |  CAST(s_suppkey % 5 AS DOUBLE) AS m5, CAST(s_suppkey % 4 AS DOUBLE) AS m4,
-       |  CAST(s_suppkey % 7 AS DOUBLE) AS m7 FROM supplier),
-       |${segCtes.mkString(",\n")}
-       |SELECT s_suppkey, seg_i, ax, ay, bx, by,
-       |  sqrt((bx - ax) * (bx - ax) + (by - ay) * (by - ay)) AS seg_len
-       |FROM (SELECT * FROM s0 UNION ALL SELECT * FROM s1 UNION ALL SELECT * FROM s2)
-       |ORDER BY s_suppkey, seg_i""".stripMargin
-  }
-
-  /** G30 — convex hull per group: customer-derived integer lattice
-    * points grouped mod 23, hulled by
-    * [[graft.functions.ConvexHullExprs.convexHullCol]] (monotone chain,
-    * STRICT — collinear boundary points dropped), the closed CCW ring
-    * emitted vertex-by-vertex. The oracle is a genuinely INDEPENDENT
-    * algorithm: hull EDGES found by the all-points-strictly-left census
-    * (an edge survives iff every other point is strictly left of it or
-    * collinear-between — the O(n³) definition, not a chain build), the
-    * vertex set taken from edge endpoints, and the ring ORDER
-    * reconstructed from the set alone via the min→max chord
-    * classification (lower side ascending, upper side descending) —
-    * possible only because the kernel's emission order is a pure
-    * function of the hull SET. Integer-valued doubles keep every
-    * orientation test exact on both engines.
-    */
-  private def g30(s: SparkSession, d: String) = {
-    import graft.functions.ConvexHullExprs
-    val c = col("c_custkey")
-    Tables.customer(s, d).select(
-        (c % 23).cast("int").as("grp"),
-        ((c % 5) * 4).cast("double").as("x"),
-        ((c % 7) * 3).cast("double").as("y"))
-      .groupBy("grp")
-      .agg(collect_list(struct(col("x"), col("y"))).as("pts"))
-      .select(col("grp"),
-        posexplode(ConvexHullExprs.convexHullCol(col("pts"))).as(Seq("pt_i", "pt")))
-      .select(col("grp"), col("pt_i"), col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("grp", "pt_i")
-  }
-
-  /** G31 — hull METRICS: g30's constructed hull ring fed straight into
-    * the measure kernels (the constructor-feeds-measures composition):
-    * vertex count, shoelace area, centroid, perimeter, and squared
-    * diameter per group. Exactness stratification drives the oracle:
-    * area/centroid/diameter² are INTEGER-EXACT on the lattice fixture
-    * (any faithful summation matches bitwise, so the oracle may fold
-    * over the un-ordered hull-edge census); the perimeter's sqrt terms
-    * are irrational, so it ships FIXED-POINT per edge (⌊len·2²⁰⌋ — each
-    * edge length is bitwise-replayed, floors are identical, and the
-    * integer sum is order-free; a round-6 over differently-ordered
-    * float sums would be the repo's one boundary-flaky gate — r16b
-    * review finding).
-    */
-  private def g31(s: SparkSession, d: String) = {
-    import graft.functions.{CentroidExprs, ConvexHullExprs}
-    val c = col("c_custkey")
-    val ring = col("ring")
-    val perimFp = aggregate(sequence(lit(1), size(ring) - 1), lit(0L), (a, i) =>
-      a + floor(sqrt(
-        (element_at(ring, i + 1).getField("x") - element_at(ring, i).getField("x")) *
-          (element_at(ring, i + 1).getField("x") - element_at(ring, i).getField("x")) +
-          (element_at(ring, i + 1).getField("y") - element_at(ring, i).getField("y")) *
-            (element_at(ring, i + 1).getField("y") - element_at(ring, i).getField("y")))
-        * lit(1048576.0)).cast("long"))
-    val diam2 = aggregate(ring, lit(0.0), (acc, p) =>
-      greatest(acc, aggregate(ring, lit(0.0), (a2, q) =>
-        greatest(a2,
-          (p.getField("x") - q.getField("x")) * (p.getField("x") - q.getField("x")) +
-            (p.getField("y") - q.getField("y")) * (p.getField("y") - q.getField("y"))))))
-    Tables.customer(s, d).select(
-        (c % 23).cast("int").as("grp"),
-        ((c % 5) * 4).cast("double").as("x"),
-        ((c % 7) * 3).cast("double").as("y"))
-      .groupBy("grp")
-      .agg(collect_list(struct(col("x"), col("y"))).as("pts"))
-      .withColumn("ring", ConvexHullExprs.convexHullCol(col("pts")))
-      .select(col("grp"),
-        (size(ring) - 1).cast("int").as("n_vertices"),
-        graft.functions.SpatialOps.ringsArea(array(ring)).as("hull_area"),
-        CentroidExprs.centroidCol(array(ring)).as("c"),
-        perimFp.as("perim_fp"),
-        diam2.as("diameter2"))
-      .select(col("grp"), col("n_vertices"), col("hull_area"),
-        col("c.x").as("cx"), col("c.y").as("cy"), col("perim_fp"), col("diameter2"))
-      .orderBy("grp")
-  }
-
-  /** g31's oracle — metrics from the EDGE CENSUS alone (no ring order):
-    * area = ½|Σ_edges cross|, centroid = Σ(a+b)·w / 3Σw (integer-exact
-    * sums → identical quotients), diameter² = max pairwise over the
-    * vertex set, perimeter = Σ⌊edge·2²⁰⌋ integer fixed-point.
-    */
-  private def sqlHullMetrics: String = {
-    val census = sqlConvexHull
-    val upToHull = census.substring(0, census.indexOf("mm AS MATERIALIZED"))
-    upToHull +
-      """em AS MATERIALIZED (SELECT grp,
-        |  sum(ax * by - bx * ay) AS a2,
-        |  sum((ax + bx) * (ax * by - bx * ay)) AS sx,
-        |  sum((ay + by) * (ax * by - bx * ay)) AS sy,
-        |  CAST(sum(CAST(floor(sqrt((bx - ax) * (bx - ax) + (by - ay) * (by - ay))
-        |    * 1048576.0) AS BIGINT)) AS BIGINT) AS perim_fp,
-        |  CAST(count(*) AS INT) AS n_vertices
-        |  FROM edges GROUP BY grp),
-        |dm AS MATERIALIZED (SELECT a.grp,
-        |  max((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)) AS diameter2
-        |  FROM hullv a JOIN hullv b ON a.grp = b.grp GROUP BY a.grp)
-        |SELECT e.grp, e.n_vertices, abs(e.a2) / 2 AS hull_area,
-        |  e.sx / (3.0 * e.a2) AS cx, e.sy / (3.0 * e.a2) AS cy,
-        |  e.perim_fp, d.diameter2
-        |FROM em e JOIN dm d ON e.grp = d.grp ORDER BY e.grp""".stripMargin
-  }
-
-  /** J31 — length-weighted ZONAL stats for paths (the linestring analog
-    * of zs1/zs2: "how much trajectory crosses each tile"): the j30
-    * zigzag paths bbox-joined to the j27 grid cells, each pair's
-    * sub-segments from [[graft.functions.SpatialOps.clipSegmentsBox]],
-    * rolled up per cell as a segment count and a FIXED-POINT length sum
-    * (⌊len·2²⁰⌋ per row — the zs2 idiom, but with NO boundary risk at
-    * all: the per-row doubles are bitwise-replayed, so both engines
-    * floor identical values, and the integer sum is order-free).
-    */
-  private def j31(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val k = col("s_suppkey")
-    val x0 = (k % 90).cast("double")
-    val y0 = (k % 80).cast("double")
-    val m5 = (k % 5).cast("double")
-    val m4 = (k % 4).cast("double")
-    val m7 = (k % 7).cast("double")
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val paths = Tables.supplier(s, d).select(k,
-        array(pt(x0, y0), pt(x0 + lit(3.0), y0 + m5 + lit(1.0)),
-          pt(x0 + lit(3.0) + m4, y0 - m7 + lit(3.0)),
-          pt(x0 + lit(9.0), y0 + lit(2.0))).as("_p"))
-      .withColumn("env", SpatialOps.bbox(
-        x0, y0 + least(lit(0.0), lit(3.0) - m7),
-        x0 + lit(9.0), y0 + greatest(m5 + lit(1.0), lit(3.0) - m7, lit(2.0))))
-    val cells = s.range(156).select(
-        col("id").as("cell_id"),
-        ((col("id") % 13) * 8).cast("double").as("gx"),
-        ((col("id") / 13).cast("long") * 8).cast("double").as("gy"))
-      .withColumn("cenv", SpatialOps.bbox(col("gx"), col("gy"),
-        col("gx") + lit(8.0), col("gy") + lit(8.0)))
-    operators.SpatialJoin.bboxJoin(paths, cells, "env", "cenv", cellSize = 8.0)
-      .select(col("cell_id"),
-        explode(SpatialOps.clipSegmentsBox(col("_p"), col("cenv"))).as("seg"))
-      .select(col("cell_id"), sqrt(
-        (col("seg.bx") - col("seg.ax")) * (col("seg.bx") - col("seg.ax")) +
-          (col("seg.by") - col("seg.ay")) * (col("seg.by") - col("seg.ay"))).as("len"))
-      .groupBy("cell_id")
-      .agg(count(lit(1)).as("n_segs"),
-        sum(floor(col("len") * lit(1048576.0)).cast("long")).as("len_fp"))
-      .orderBy("cell_id")
-  }
-
-  /** j31's oracle — the j30 t-chain replay against each cell's walls
-    * over the exact bboxJoin pair set, per-row fixed-point floors,
-    * integer rollup per cell.
-    */
-  private def sqlPathZonal: String = {
-    val segCtes = sqlSegClipCtes(zigzagSqlPts,
-      "gx", "gx + 8", "gy", "gy + 8", _ => "cell_id")
-    s"""WITH sup AS (SELECT s_suppkey,
-       |  CAST(s_suppkey % 90 AS DOUBLE) AS x0, CAST(s_suppkey % 80 AS DOUBLE) AS y0,
-       |  CAST(s_suppkey % 5 AS DOUBLE) AS m5, CAST(s_suppkey % 4 AS DOUBLE) AS m4,
-       |  CAST(s_suppkey % 7 AS DOUBLE) AS m7 FROM supplier),
-       |b AS MATERIALIZED (SELECT * FROM sup JOIN
-       |  (SELECT range AS cell_id, CAST((range % 13) * 8 AS DOUBLE) AS gx,
-       |     CAST((range // 13) * 8 AS DOUBLE) AS gy FROM range(156)) c
-       |  ON x0 <= gx + 8 AND gx <= x0 + 9
-       |  AND y0 + LEAST(CAST(0 AS DOUBLE), 3 - m7) <= gy + 8
-       |  AND gy <= y0 + GREATEST(m5 + 1, 3 - m7, CAST(2 AS DOUBLE))),
-       |${segCtes.mkString(",\n")}
-       |SELECT cell_id, CAST(count(*) AS BIGINT) AS n_segs,
-       |  CAST(sum(CAST(floor(sqrt((bx - ax) * (bx - ax) + (by - ay) * (by - ay))
-       |    * 1048576.0) AS BIGINT)) AS BIGINT) AS len_fp
-       |FROM (SELECT * FROM s0 UNION ALL SELECT * FROM s1 UNION ALL SELECT * FROM s2)
-       |GROUP BY cell_id ORDER BY cell_id""".stripMargin
-  }
-
-  /** J32 — boundary Hausdorff join (shape-similarity measure between
-    * polygon pairs — "how far apart are these boundaries at worst"):
-    * the j18 arrow × diamond bbox candidates scored by
-    * [[graft.functions.GeomPredExprs.hausdorffBoundarySq]] — ONE static
-    * codegen call per candidate (the j20 cost class; the interpreted
-    * HOF spelling would re-walk ~17 vertices × ~16 segments per
-    * candidate through nested lambdas). Value-max over bitwise-replayed
-    * per-vertex boundary minima, so the raw distance² hashes: the
-    * oracle spells GREATEST over every vertex's LEAST-over-segments
-    * term (sqlBoundaryDistSq, the j19/j20 discipline).
-    */
-  private def j32(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val a = Tables.supplier(s, d)
-      .select(col("s_suppkey"), arrowWkt(col("s_suppkey"), withHole = true).as("geom"))
-      .select(col("s_suppkey"), SpatialOps.wktRings(col("geom")).as("_ra"))
-      .withColumn("env", SpatialOps.ringsEnvelope(col("_ra")))
-    val c = col("c_custkey")
-    val cx = (c % 88).cast("double") + lit(2.0)
-    val cy = (c % 78).cast("double") + lit(2.0)
-    val r = lit(1.0) + (c % 3).cast("double") * lit(0.5)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val diamond = array(array(pt(cx, cy - r), pt(cx + r, cy), pt(cx, cy + r),
-      pt(cx - r, cy), pt(cx, cy - r)))
-    val b = Tables.customer(s, d)
-      .select(c, diamond.as("_rb"),
-        SpatialOps.bbox(cx - r, cy - r, cx + r, cy + r).as("env_r"))
-    operators.SpatialJoin.bboxJoin(a, b, "env", "env_r", cellSize = 8.0)
-      .select(col("s_suppkey"), col("c_custkey"),
-        graft.functions.GeomPredExprs.hausdorffBoundarySqCol(
-          col("_ra"), col("_rb")).as("hausdorff2"))
-      .orderBy("s_suppkey", "c_custkey")
-  }
-
-  /** j32's oracle — GREATEST over all 17+5 vertex terms, each a
-    * LEAST-over-segments clamped projection (both directions), on the
-    * envelope-overlap pair set. */
-  private def sqlHausdorff: String = {
-    val arrowRings = arrowSqlPts(withHole = true)
-    val arrowVerts = arrowRings.flatten
-    val arrowSegs = arrowRings.flatMap(sqlRingSegs)
-    val diamondVerts = diamondSqlPts
-    val diamondSegs = sqlRingSegs(diamondSqlPts)
-    val terms =
-      arrowVerts.map { case (vx, vy) => sqlBoundaryDistSq(diamondSegs, s"($vx)", s"($vy)") } ++
-        diamondVerts.map { case (vx, vy) => sqlBoundaryDistSq(arrowSegs, s"($vx)", s"($vy)") }
-    s"""WITH pairs AS (SELECT s_suppkey, c_custkey, x0, y0, w, h, cx, cy, r
-       |FROM ($arrowSqlBase) a JOIN
-       |  (SELECT c_custkey,
-       |     CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-       |     CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-       |     1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r FROM customer) b
-       |  ON x0 <= cx + r AND cx - r <= x0 + w AND y0 <= cy + r AND cy - r <= y0 + h)
-       |SELECT s_suppkey, c_custkey,
-       |  GREATEST(${terms.mkString(",\n    ")}) AS hausdorff2
-       |FROM pairs ORDER BY s_suppkey, c_custkey""".stripMargin
-  }
-
-  /** G33 — OPEN-PATH Douglas–Peucker (trajectory simplification): the
-    * g27 ring kernel applied to open polylines — [[graft.functions
-    * .SimplifyExprs.simplifyRing]] never assumed closure (endpoints
-    * always kept, point-to-LINE deviation), so GPS-trace thinning rides
-    * the same oracled kernel. Four hand-traced classes at eps = 1
-    * (translation-exact: all coordinates integer-valued doubles, so
-    * deviations are identical for every row of a class): collinear →
-    * endpoints only; one spike → spike + its chord-split survivor;
-    * amplitude-1 zigzag → dropped ENTIRELY (deviation² == eps²
-    * exactly — the strict-> contract as a driver-gated boundary case);
-    * amplitude-2 zigzag → all kept.
-    */
-  private def g33(s: SparkSession, d: String) = {
-    import graft.functions.SimplifyExprs
-    val k = col("s_suppkey")
-    val x0 = (k % 90).cast("double")
-    val y0 = (k % 80).cast("double")
-    val cls = (k % 4).cast("int")
-    def pt(dx: Column, dy: Column) = struct((x0 + dx).as("x"), (y0 + dy).as("y"))
-    val y1 = when(cls === 1, lit(3.0)).when(cls === 2, lit(1.0))
-      .when(cls === 3, lit(2.0)).otherwise(lit(0.0))
-    val y2 = when(cls === 2, lit(-1.0)).when(cls === 3, lit(-2.0)).otherwise(lit(0.0))
-    val y3 = when(cls === 2, lit(1.0)).when(cls === 3, lit(2.0)).otherwise(lit(0.0))
-    val y4 = when(cls === 2, lit(-1.0)).when(cls === 3, lit(-2.0)).otherwise(lit(0.0))
-    val path = array(pt(lit(0.0), lit(0.0)), pt(lit(2.0), y1), pt(lit(4.0), y2),
-      pt(lit(6.0), y3), pt(lit(8.0), y4), pt(lit(10.0), lit(0.0)))
-    Tables.supplier(s, d).select(k, cls.as("cls"), path.as("_p"))
-      .select(k, col("cls"),
-        posexplode(SimplifyExprs.simplifyRingCol(col("_p"), lit(1.0))).as(Seq("pt_i", "pt")))
-      .select(k, col("cls"), col("pt_i"), col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("s_suppkey", "pt_i")
-  }
-
-  /** g33's oracle — the four classes' kept offset lists derived BY HAND
-    * from the first-strict-max recursion (class 1's chord-split
-    * deviations 324/73 and the class-2 boundary 100/100 == eps²
-    * worked in the scaladoc), emitted per supplier at its (x0, y0)
-    * translation.
-    */
-  private def sqlSimplifyPath: String = {
-    def kept(cls: Int): Seq[(Int, Int)] = cls match {
-      case 0 => Seq((0, 0), (10, 0))
-      case 1 => Seq((0, 0), (2, 3), (4, 0), (10, 0))
-      case 2 => Seq((0, 0), (10, 0))
-      case _ => Seq((0, 0), (2, 2), (4, -2), (6, 2), (8, -2), (10, 0))
-    }
-    def listOf(cls: Int): String =
-      kept(cls).zipWithIndex.map { case ((dx, dy), i) =>
-        s"struct_pack(pt_i := CAST($i AS INT), x := x0 + $dx, y := y0 + ($dy))"
-      }.mkString("[", ", ", "]")
-    s"""WITH b AS (SELECT s_suppkey,
-       |  CAST(s_suppkey % 90 AS DOUBLE) AS x0, CAST(s_suppkey % 80 AS DOUBLE) AS y0,
-       |  CAST(s_suppkey % 4 AS INT) AS cls FROM supplier)
-       |SELECT s_suppkey, cls, v.pt_i AS pt_i, v.x AS x, v.y AS y FROM (
-       |  SELECT s_suppkey, cls, unnest(CASE cls
-       |    WHEN 0 THEN ${listOf(0)}
-       |    WHEN 1 THEN ${listOf(1)}
-       |    WHEN 2 THEN ${listOf(2)}
-       |    ELSE ${listOf(3)} END) AS v FROM b)
-       |ORDER BY s_suppkey, pt_i""".stripMargin
-  }
-
-  /** G32 — minimum bounding rectangle area per group (rotating calipers
-    * via the edge-flush theorem on g30's hull): mbr ≤ axis-aligned bbox,
-    * with the tightness ratio emitted. Every projection span is an
-    * exact integer product on the lattice fixture, so the per-edge
-    * rational and the min VALUE replay bitwise with no fold-order
-    * coupling — the oracle computes the same rectangle areas
-    * relationally over the independent edge census.
-    */
-  private def g32(s: SparkSession, d: String) = {
-    import graft.functions.ConvexHullExprs
-    val c = col("c_custkey")
-    Tables.customer(s, d).select(
-        (c % 23).cast("int").as("grp"),
-        ((c % 5) * 4).cast("double").as("x"),
-        ((c % 7) * 3).cast("double").as("y"))
-      .groupBy("grp")
-      .agg(collect_list(struct(col("x"), col("y"))).as("pts"),
-        max(col("x")).as("mxx"), min(col("x")).as("mnx"),
-        max(col("y")).as("mxy"), min(col("y")).as("mny"))
-      .withColumn("ring", ConvexHullExprs.convexHullCol(col("pts")))
-      .select(col("grp"),
-        ConvexHullExprs.mbrAreaCol(col("ring")).as("mbr_area"),
-        ((col("mxx") - col("mnx")) * (col("mxy") - col("mny"))).as("bbox_area"))
-      .withColumn("tightness", col("mbr_area") / col("bbox_area"))
-      .orderBy("grp")
-  }
-
-  /** g32's oracle — per-edge projection spans over the census, the same
-    * rational per edge, min value per group. */
-  private def sqlMinBbox: String = {
-    val census = sqlConvexHull
-    val upToHull = census.substring(0, census.indexOf("mm AS MATERIALIZED"))
-    upToHull +
-      """em AS MATERIALIZED (SELECT e.grp, e.ax, e.ay, e.bx, e.by,
-        |  min((v.x - e.ax) * (e.bx - e.ax) + (v.y - e.ay) * (e.by - e.ay)) AS mind,
-        |  max((v.x - e.ax) * (e.bx - e.ax) + (v.y - e.ay) * (e.by - e.ay)) AS maxd,
-        |  min((e.bx - e.ax) * (v.y - e.ay) - (e.by - e.ay) * (v.x - e.ax)) AS minc,
-        |  max((e.bx - e.ax) * (v.y - e.ay) - (e.by - e.ay) * (v.x - e.ax)) AS maxc
-        |  FROM edges e JOIN hullv v ON e.grp = v.grp
-        |  GROUP BY e.grp, e.ax, e.ay, e.bx, e.by),
-        |mbr AS MATERIALIZED (SELECT grp, min(((maxd - mind) * (maxc - minc)) /
-        |  ((bx - ax) * (bx - ax) + (by - ay) * (by - ay))) AS mbr_area
-        |  FROM em GROUP BY grp),
-        |bb AS MATERIALIZED (SELECT grp,
-        |  (max(x) - min(x)) * (max(y) - min(y)) AS bbox_area FROM pts GROUP BY grp)
-        |SELECT m.grp, m.mbr_area, b.bbox_area, m.mbr_area / b.bbox_area AS tightness
-        |FROM mbr m JOIN bb b ON m.grp = b.grp ORDER BY m.grp""".stripMargin
-  }
-
-  /** MIX2 — temperature-scaled source mixing with EXACT largest-remainder
-    * quotas (the data-mixing step of a training pipeline: upweight small
-    * sources with τ = 0.5, then allocate an integer budget B = 300
-    * deterministically): per-lang weights wᵢ = √nᵢ, pᵢ = wᵢ/Σw with the
-    * total folded left-assoc over the LANG-SORTED array (one scalar agg
-    * carries the whole per-lang table — the qs1 sort_array shape, NO
-    * global window), base = ⌊B·pᵢ⌋, the deficit topped up by remainder
-    * rank (rem DESC, lang ASC — ranked via a sorted (−rem, lang) array,
-    * window-free), and each lang's quota filled by the md5-BOTTOM of its
-    * documents (the samp1 determinism idiom — stable under reruns and
-    * appends). Output per lang: count, quota, selected count, and the
-    * selection boundary key (proving the pick is exactly the bottom-k).
-    * 100 TB shape: one groupBy + one scalar agg on the #langs-bounded
-    * frame + one per-lang window over the corpus scan.
-    */
-  private def mix2(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val B = 300
-    val packed = docs.groupBy("lang").agg(count(lit(1)).as("n_docs"))
-      .agg(sort_array(collect_list(struct(col("lang"), col("n_docs")))).as("arr"))
-    val w = transform(col("arr"), e => sqrt(e.getField("n_docs").cast("double")))
-    val staged = packed
-      .select(col("arr"), w.as("w"))
-      .select(col("arr"), col("w"),
-        aggregate(col("w"), lit(0.0), (a, x) => a + x).as("total"))
-      .select(transform(col("arr"), (e, i) => {
-        val scaled = lit(B.toDouble) * (element_at(col("w"), i + 1) / col("total"))
-        struct(e.getField("lang").as("lang"),
-          e.getField("n_docs").as("n_docs"),
-          floor(scaled).cast("long").as("base"),
-          (scaled - floor(scaled)).as("rem"))
-      }).as("q"))
-      .select(col("q"),
-        (lit(B.toLong) - aggregate(col("q"), lit(0L), (a, e) => a + e.getField("base"))).as("deficit"),
-        sort_array(transform(col("q"), e =>
-          struct((-e.getField("rem")).as("nr"), e.getField("lang").as("lang")))).as("ranked"))
-    val quotas = staged
-      .select(col("deficit"), col("ranked"), explode(col("q")).as("e"))
-      .select(col("e.lang").as("lang"), col("e.n_docs").as("n_docs"),
-        (col("e.base") + when(
-          array_position(transform(col("ranked"), _.getField("lang")), col("e.lang"))
-            <= col("deficit"), lit(1L)).otherwise(lit(0L))).as("quota"))
-    val wl = Window.partitionBy(col("lang"))
-      .orderBy(col("key"), col("doc_id"))
-    val sel = docs.select(col("lang"), col("doc_id"),
-        md5(col("doc_id").cast("string")).as("key"))
-      .withColumn("rn", row_number().over(wl))
-      .join(quotas, Seq("lang"))
-      .filter(col("rn") <= col("quota"))
-      .groupBy("lang")
-      .agg(count(lit(1)).as("sel_docs"), max(col("key")).as("last_key"))
-    quotas.join(sel, Seq("lang"))
-      .select("lang", "n_docs", "quota", "sel_docs", "last_key")
-      .orderBy("lang")
-  }
-
-  /** mix2's oracle — the identical weight/quota arithmetic (ordered
-    * list_reduce total, floor/remainder, rank by (rem DESC, lang)) and
-    * the md5-bottom selection replayed relationally.
-    */
-  private def sqlMixQuota: String =
-    """WITH counts AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
-      |tot AS (SELECT list_reduce(list(sqrt(CAST(n_docs AS DOUBLE)) ORDER BY lang),
-      |    (a, b) -> a + b) AS total FROM counts),
-      |q AS (SELECT lang, n_docs,
-      |    CAST(floor(CAST(300 AS DOUBLE) * (sqrt(CAST(n_docs AS DOUBLE)) / total)) AS BIGINT) AS base,
-      |    CAST(300 AS DOUBLE) * (sqrt(CAST(n_docs AS DOUBLE)) / total)
-      |      - floor(CAST(300 AS DOUBLE) * (sqrt(CAST(n_docs AS DOUBLE)) / total)) AS rem
-      |  FROM counts, tot),
-      |r AS (SELECT lang, n_docs, base, rem,
-      |    row_number() OVER (ORDER BY rem DESC, lang) AS rk FROM q),
-      |dcnt AS (SELECT 300 - sum(base) AS deficit FROM r),
-      |quota AS (SELECT lang, n_docs,
-      |    base + CASE WHEN rk <= deficit THEN 1 ELSE 0 END AS quota FROM r, dcnt),
-      |sel AS (SELECT d.lang, md5(CAST(d.doc_id AS VARCHAR)) AS key,
-      |    row_number() OVER (PARTITION BY d.lang
-      |      ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rn
-      |  FROM documents d),
-      |agg AS (SELECT s.lang, CAST(count(*) AS BIGINT) AS sel_docs, max(s.key) AS last_key
-      |  FROM sel s JOIN quota t ON s.lang = t.lang AND s.rn <= t.quota GROUP BY s.lang)
-      |SELECT t.lang, t.n_docs, CAST(t.quota AS BIGINT) AS quota, a.sel_docs, a.last_key
-      |FROM quota t JOIN agg a ON t.lang = a.lang ORDER BY t.lang""".stripMargin
-
-  /** g30's oracle — see [[g30]]: edge census → vertex set → chord-order
-    * reconstruction. */
-  private def sqlConvexHull: String =
-    """WITH pts AS MATERIALIZED (SELECT DISTINCT CAST(c_custkey % 23 AS INT) AS grp,
-      |    CAST((c_custkey % 5) * 4 AS DOUBLE) AS x,
-      |    CAST((c_custkey % 7) * 3 AS DOUBLE) AS y FROM customer),
-      |edges AS MATERIALIZED (
-      |  SELECT a.grp, a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by
-      |  FROM pts a JOIN pts b ON a.grp = b.grp AND (a.x <> b.x OR a.y <> b.y)
-      |  WHERE NOT EXISTS (
-      |    SELECT 1 FROM pts q WHERE q.grp = a.grp
-      |      AND (q.x <> a.x OR q.y <> a.y) AND (q.x <> b.x OR q.y <> b.y)
-      |      AND NOT ((b.x - a.x) * (q.y - a.y) - (b.y - a.y) * (q.x - a.x) > 0
-      |        OR ((b.x - a.x) * (q.y - a.y) - (b.y - a.y) * (q.x - a.x) = 0
-      |            AND q.x >= least(a.x, b.x) AND q.x <= greatest(a.x, b.x)
-      |            AND q.y >= least(a.y, b.y) AND q.y <= greatest(a.y, b.y))))),
-      |hullv AS MATERIALIZED (SELECT DISTINCT grp, x, y FROM (
-      |  SELECT grp, ax AS x, ay AS y FROM edges
-      |  UNION ALL SELECT grp, bx AS x, by AS y FROM edges)),
-      |mm AS MATERIALIZED (SELECT grp,
-      |  struct_extract(min(struct_pack(x := x, y := y)), 'x') AS mnx,
-      |  struct_extract(min(struct_pack(x := x, y := y)), 'y') AS mny,
-      |  struct_extract(max(struct_pack(x := x, y := y)), 'x') AS mxx,
-      |  struct_extract(max(struct_pack(x := x, y := y)), 'y') AS mxy
-      |  FROM hullv GROUP BY grp),
-      |cls AS MATERIALIZED (SELECT h.grp, h.x, h.y, m.mnx, m.mny, m.mxx, m.mxy,
-      |  (m.mxx - m.mnx) * (h.y - m.mny) - (m.mxy - m.mny) * (h.x - m.mnx) AS side
-      |  FROM hullv h JOIN mm m USING (grp)),
-      |cnts AS MATERIALIZED (SELECT grp,
-      |  CAST(sum(CASE WHEN side < 0 THEN 1 ELSE 0 END) AS INT) AS nl,
-      |  CAST(sum(CASE WHEN side > 0 THEN 1 ELSE 0 END) AS INT) AS nu
-      |  FROM cls GROUP BY grp)
-      |SELECT grp, pt_i, x, y FROM (
-      |  SELECT grp, CAST(0 AS INT) AS pt_i, mnx AS x, mny AS y FROM mm
-      |  UNION ALL
-      |  SELECT grp, CAST(row_number() OVER (PARTITION BY grp ORDER BY x, y) AS INT),
-      |    x, y FROM cls WHERE side < 0
-      |  UNION ALL
-      |  SELECT c.grp, c.nl + 1, m.mxx, m.mxy FROM cnts c JOIN mm m USING (grp)
-      |  UNION ALL
-      |  SELECT grp, CAST(nl + 1 + row_number()
-      |      OVER (PARTITION BY grp ORDER BY x DESC, y DESC) AS INT), x, y
-      |  FROM cls JOIN cnts USING (grp) WHERE side > 0
-      |  UNION ALL
-      |  SELECT c.grp, c.nl + c.nu + 2, m.mnx, m.mny FROM cnts c JOIN mm m USING (grp))
-      |ORDER BY grp, pt_i""".stripMargin
-
-  /** j27's oracle — sqlClipZonal's pass replay with the FINAL closed
-    * lists unnested to vertex rows instead of folded to areas: ring 0
-    * (outer) and ring 1 (hole) emit their post-pass-4 vertices with
-    * 0-based positions when nonempty — exactly the engine's
-    * posexplode-over-emitted-rings rule.
-    */
-  private def sqlClipGeom: String = {
-    // the j21 replay verbatim up to the final level
-    val zonal = sqlClipZonal
-    val upToFinal = zonal.substring(0, zonal.indexOf("SELECT s_suppkey, cell_id, clip_area"))
-    def vtx(ring: String, ri: Int): String =
-      s"""SELECT s_suppkey, cell_id, CAST($ri AS INT) AS ring_i,
-         |  unnest(list_transform(range(1, length($ring) + 1), i ->
-         |    struct_pack(pt_i := CAST(i - 1 AS INT), x := $ring[i].x, y := $ring[i].y))) AS v
-         |FROM c4 WHERE length($ring) > 0""".stripMargin
-    upToFinal +
-      s"""SELECT s_suppkey, cell_id, ring_i, v.pt_i AS pt_i, v.x AS x, v.y AS y
-         |FROM (${vtx("o4", 0)}
-         |UNION ALL
-         |${vtx("h4", 1)})
-         |ORDER BY s_suppkey, cell_id, ring_i, pt_i""".stripMargin
-  }
-
-  /** j25's oracle — j23's replay plus the hole triangle (CW: inside
-    * tests flip to ≤ 0), its area subtracted last. */
-  private def sqlClipPolygon: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    val triA = Seq(
-      (("cx", "cy + r"), ("cx - r", "cy - r")),
-      (("cx - r", "cy - r"), ("cx", "cy - 0.5 * r")),
-      (("cx", "cy - 0.5 * r"), ("cx", "cy + r")))
-    val triB = Seq(
-      (("cx", "cy + r"), ("cx", "cy - 0.5 * r")),
-      (("cx", "cy - 0.5 * r"), ("cx + r", "cy - r")),
-      (("cx + r", "cy - r"), ("cx", "cy + r")))
-    // the hole triangle, CW emission order (A -> B -> C -> A)
-    val triC = Seq(
-      (("cx + 0.25 * r", "cy - 0.25 * r"), ("cx + 0.375 * r", "cy - 0.125 * r")),
-      (("cx + 0.375 * r", "cy - 0.125 * r"), ("cx + 0.5 * r", "cy - 0.25 * r")),
-      (("cx + 0.5 * r", "cy - 0.25 * r"), ("cx + 0.25 * r", "cy - 0.25 * r")))
-    def sidesOf(in: String, ax: String, ay: String, bx: String, by: String): String =
-      s"""list_transform(range(1, length($in) + 1), i ->
-         |    (($bx) - ($ax)) * ($in[i].y - ($ay)) - (($by) - ($ay)) * ($in[i].x - ($ax)))""".stripMargin
-    def passOf(in: String, sidesCol: String, cmp: String): String = {
-      val isect =
-        s"""struct_pack(
-           |  x := $in[i].x + ($sidesCol[i] / ($sidesCol[i] - $sidesCol[i+1])) * ($in[i+1].x - $in[i].x),
-           |  y := $in[i].y + ($sidesCol[i] / ($sidesCol[i] - $sidesCol[i+1])) * ($in[i+1].y - $in[i].y))""".stripMargin
-      s"""flatten(list_transform(range(1, length($in)), i ->
-         |    CASE WHEN $sidesCol[i+1] $cmp 0 AND $sidesCol[i] $cmp 0 THEN [$in[i+1]]
-         |         WHEN $sidesCol[i+1] $cmp 0 THEN [$isect, $in[i+1]]
-         |         WHEN $sidesCol[i] $cmp 0 THEN [$isect]
-         |         ELSE [] END))""".stripMargin
-    }
-    def close(v: String) =
-      s"CASE WHEN length($v) = 0 THEN $v ELSE list_append($v, $v[1]) END"
-    def crossOf(v: String) =
-      s"""CASE WHEN length($v) < 2 THEN CAST(0 AS DOUBLE) ELSE
-         |    list_reduce(list_transform(range(1, length($v)), i ->
-         |      $v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y), (a, b) -> a + b) END""".stripMargin
-    val base =
-      s"""lvl0 AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-         |  ${ptsList(rings(0))} AS oa0, ${ptsList(rings(1))} AS ha0,
-         |  ${ptsList(rings(0))} AS ob0, ${ptsList(rings(1))} AS hb0,
-         |  ${ptsList(rings(0))} AS oc0, ${ptsList(rings(1))} AS hc0
-         |FROM ($arrowSqlBase) a JOIN
-         |  (SELECT c_custkey,
-         |     CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-         |     CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-         |     1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r FROM customer) b
-         |  ON x0 <= cx + r AND cx - r <= x0 + w AND y0 <= cy + r AND cy - r <= y0 + h)""".stripMargin
-    val levels = (0 until 3).flatMap { k =>
-      val ((aax, aay), (abx, aby)) = triA(k)
-      val ((bax, bay), (bbx, bby)) = triB(k)
-      val ((cax, cay), (cbx, cby)) = triC(k)
-      Seq(
-        s"""m${k + 1} AS MATERIALIZED (SELECT *,
-           |  ${sidesOf(s"oa$k", aax, aay, abx, aby)} AS oas,
-           |  ${sidesOf(s"ha$k", aax, aay, abx, aby)} AS has,
-           |  ${sidesOf(s"ob$k", bax, bay, bbx, bby)} AS obs,
-           |  ${sidesOf(s"hb$k", bax, bay, bbx, bby)} AS hbs,
-           |  ${sidesOf(s"oc$k", cax, cay, cbx, cby)} AS ocs,
-           |  ${sidesOf(s"hc$k", cax, cay, cbx, cby)} AS hcs
-           |  FROM ${if (k == 0) "lvl0" else s"c$k"})""".stripMargin,
-        s"""p${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${passOf(s"oa$k", "oas", ">=")} AS oaraw, ${passOf(s"ha$k", "has", ">=")} AS haraw,
-           |  ${passOf(s"ob$k", "obs", ">=")} AS obraw, ${passOf(s"hb$k", "hbs", ">=")} AS hbraw,
-           |  ${passOf(s"oc$k", "ocs", "<=")} AS ocraw, ${passOf(s"hc$k", "hcs", "<=")} AS hcraw
-           |  FROM m${k + 1})""".stripMargin,
-        s"""c${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${close("oaraw")} AS oa${k + 1}, ${close("haraw")} AS ha${k + 1},
-           |  ${close("obraw")} AS ob${k + 1}, ${close("hbraw")} AS hb${k + 1},
-           |  ${close("ocraw")} AS oc${k + 1}, ${close("hcraw")} AS hc${k + 1} FROM p${k + 1})""".stripMargin)
-    }
-    (base +: levels).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT s_suppkey, c_custkey, inter_area FROM (
-         |  SELECT s_suppkey, c_custkey,
-         |    abs((${crossOf("oa3")}) + (${crossOf("ha3")})) / 2
-         |      + abs((${crossOf("ob3")}) + (${crossOf("hb3")})) / 2
-         |      - abs((${crossOf("oc3")}) + (${crossOf("hc3")})) / 2 AS inter_area
-         |  FROM c3)
-         |WHERE inter_area > 0 ORDER BY s_suppkey, c_custkey""".stripMargin
-  }
-
-  /** j23's oracle — the general kernel's ear decomposition replayed: the
-    * dart's two CCW ear triangles hard-coded symbolically (tip anchored,
-    * the kernel's deterministic emission — ClipAreaSpec gates it
-    * bitwise), each triangle's three S-H passes MATERIALIZED per level
-    * exactly like sqlClipPair, both triangles advancing in parallel
-    * columns, areas summed tip-ear-first.
-    */
-  private def sqlClipConcave: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    // dart vertices: v0 tip (cx, cy+r), v1 bl (cx-r, cy-r),
-    // v2 notch (cx, cy-0.5r), v3 br (cx+r, cy-r); ears (v0,v1,v2) then
-    // (v0,v2,v3), both CCW
-    val triA = Seq(
-      (("cx", "cy + r"), ("cx - r", "cy - r")),
-      (("cx - r", "cy - r"), ("cx", "cy - 0.5 * r")),
-      (("cx", "cy - 0.5 * r"), ("cx", "cy + r")))
-    val triB = Seq(
-      (("cx", "cy + r"), ("cx", "cy - 0.5 * r")),
-      (("cx", "cy - 0.5 * r"), ("cx + r", "cy - r")),
-      (("cx + r", "cy - r"), ("cx", "cy + r")))
-    def sidesOf(in: String, ax: String, ay: String, bx: String, by: String): String =
-      s"""list_transform(range(1, length($in) + 1), i ->
-         |    (($bx) - ($ax)) * ($in[i].y - ($ay)) - (($by) - ($ay)) * ($in[i].x - ($ax)))""".stripMargin
-    def passOf(in: String, sidesCol: String): String = {
-      val isect =
-        s"""struct_pack(
-           |  x := $in[i].x + ($sidesCol[i] / ($sidesCol[i] - $sidesCol[i+1])) * ($in[i+1].x - $in[i].x),
-           |  y := $in[i].y + ($sidesCol[i] / ($sidesCol[i] - $sidesCol[i+1])) * ($in[i+1].y - $in[i].y))""".stripMargin
-      s"""flatten(list_transform(range(1, length($in)), i ->
-         |    CASE WHEN $sidesCol[i+1] >= 0 AND $sidesCol[i] >= 0 THEN [$in[i+1]]
-         |         WHEN $sidesCol[i+1] >= 0 THEN [$isect, $in[i+1]]
-         |         WHEN $sidesCol[i] >= 0 THEN [$isect]
-         |         ELSE [] END))""".stripMargin
-    }
-    def close(v: String) =
-      s"CASE WHEN length($v) = 0 THEN $v ELSE list_append($v, $v[1]) END"
-    def crossOf(v: String) =
-      s"""CASE WHEN length($v) < 2 THEN CAST(0 AS DOUBLE) ELSE
-         |    list_reduce(list_transform(range(1, length($v)), i ->
-         |      $v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y), (a, b) -> a + b) END""".stripMargin
-    val base =
-      s"""lvl0 AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-         |  ${ptsList(rings(0))} AS oa0, ${ptsList(rings(1))} AS ha0,
-         |  ${ptsList(rings(0))} AS ob0, ${ptsList(rings(1))} AS hb0
-         |FROM ($arrowSqlBase) a JOIN
-         |  (SELECT c_custkey,
-         |     CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-         |     CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-         |     1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r FROM customer) b
-         |  ON x0 <= cx + r AND cx - r <= x0 + w AND y0 <= cy + r AND cy - r <= y0 + h)""".stripMargin
-    val levels = (0 until 3).flatMap { k =>
-      val ((aax, aay), (abx, aby)) = triA(k)
-      val ((bax, bay), (bbx, bby)) = triB(k)
-      Seq(
-        s"""m${k + 1} AS MATERIALIZED (SELECT *,
-           |  ${sidesOf(s"oa$k", aax, aay, abx, aby)} AS oas,
-           |  ${sidesOf(s"ha$k", aax, aay, abx, aby)} AS has,
-           |  ${sidesOf(s"ob$k", bax, bay, bbx, bby)} AS obs,
-           |  ${sidesOf(s"hb$k", bax, bay, bbx, bby)} AS hbs
-           |  FROM ${if (k == 0) "lvl0" else s"c$k"})""".stripMargin,
-        s"""p${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${passOf(s"oa$k", "oas")} AS oaraw, ${passOf(s"ha$k", "has")} AS haraw,
-           |  ${passOf(s"ob$k", "obs")} AS obraw, ${passOf(s"hb$k", "hbs")} AS hbraw
-           |  FROM m${k + 1})""".stripMargin,
-        s"""c${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${close("oaraw")} AS oa${k + 1}, ${close("haraw")} AS ha${k + 1},
-           |  ${close("obraw")} AS ob${k + 1}, ${close("hbraw")} AS hb${k + 1} FROM p${k + 1})""".stripMargin)
-    }
-    (base +: levels).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT s_suppkey, c_custkey, inter_area FROM (
-         |  SELECT s_suppkey, c_custkey,
-         |    abs((${crossOf("oa3")}) + (${crossOf("ha3")})) / 2
-         |      + abs((${crossOf("ob3")}) + (${crossOf("hb3")})) / 2 AS inter_area
-         |  FROM c3)
-         |WHERE inter_area > 0 ORDER BY s_suppkey, c_custkey""".stripMargin
-  }
-
-  /** j22's oracle — the convex-window S-H replayed per diamond edge:
-    * per level, a `sides` list stages each vertex's side value once
-    * (the kernel computes the same pure function; exact equality is
-    * evaluation-count-independent), the pass CASE consumes sides[i]/
-    * sides[i+1] for the inside tests AND the t = s_p/(s_p−s_q)
-    * intersections, MATERIALIZED per level (the j21 inlining lesson).
-    * Candidates pre-filtered by exact envelope overlap.
-    */
-  private def sqlClipPair: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    // diamond edges, CCW (matches the kernel's winding detection)
-    val edges = Seq(
-      (("cx", "cy - r"), ("cx + r", "cy")),
-      (("cx + r", "cy"), ("cx", "cy + r")),
-      (("cx", "cy + r"), ("cx - r", "cy")),
-      (("cx - r", "cy"), ("cx", "cy - r")))
-    def sidesOf(in: String, ax: String, ay: String, bx: String, by: String): String =
-      s"""list_transform(range(1, length($in) + 1), i ->
-         |    (($bx) - ($ax)) * ($in[i].y - ($ay)) - (($by) - ($ay)) * ($in[i].x - ($ax)))""".stripMargin
-    def passOf(in: String): String = {
-      val isect =
-        s"""struct_pack(
-           |  x := $in[i].x + (sides[i] / (sides[i] - sides[i+1])) * ($in[i+1].x - $in[i].x),
-           |  y := $in[i].y + (sides[i] / (sides[i] - sides[i+1])) * ($in[i+1].y - $in[i].y))""".stripMargin
-      s"""flatten(list_transform(range(1, length($in)), i ->
-         |    CASE WHEN sides[i+1] >= 0 AND sides[i] >= 0 THEN [$in[i+1]]
-         |         WHEN sides[i+1] >= 0 THEN [$isect, $in[i+1]]
-         |         WHEN sides[i] >= 0 THEN [$isect]
-         |         ELSE [] END))""".stripMargin
-    }
-    def close(v: String) =
-      s"CASE WHEN length($v) = 0 THEN $v ELSE list_append($v, $v[1]) END"
-    def crossOf(v: String) =
-      s"""CASE WHEN length($v) < 2 THEN CAST(0 AS DOUBLE) ELSE
-         |    list_reduce(list_transform(range(1, length($v)), i ->
-         |      $v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y), (a, b) -> a + b) END""".stripMargin
-    val base =
-      s"""lvl0 AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-         |  ${ptsList(rings(0))} AS o0, ${ptsList(rings(1))} AS h0
-         |FROM ($arrowSqlBase) a JOIN
-         |  (SELECT c_custkey,
-         |     CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-         |     CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-         |     1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r FROM customer) b
-         |  ON x0 <= cx + r AND cx - r <= x0 + w AND y0 <= cy + r AND cy - r <= y0 + h)""".stripMargin
-    val levels = edges.zipWithIndex.flatMap { case (((ax, ay), (bx, by)), k) =>
-      Seq(
-        s"""m${k + 1} AS MATERIALIZED (SELECT *,
-           |  ${sidesOf(s"o$k", ax, ay, bx, by)} AS osides,
-           |  ${sidesOf(s"h$k", ax, ay, bx, by)} AS hsides
-           |  FROM ${if (k == 0) "lvl0" else s"c$k"})""".stripMargin,
-        s"""p${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${passOf(s"o$k").replace("sides[", "osides[")} AS oraw,
-           |  ${passOf(s"h$k").replace("sides[", "hsides[")} AS hraw FROM m${k + 1})""".stripMargin,
-        s"""c${k + 1} AS MATERIALIZED (SELECT s_suppkey, c_custkey, cx, cy, r,
-           |  ${close("oraw")} AS o${k + 1}, ${close("hraw")} AS h${k + 1} FROM p${k + 1})""".stripMargin)
-    }
-    (base +: levels).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT s_suppkey, c_custkey, inter_area FROM (
-         |  SELECT s_suppkey, c_custkey,
-         |    abs((${crossOf("o4")}) + (${crossOf("h4")})) / 2 AS inter_area
-         |  FROM c4)
-         |WHERE inter_area > 0 ORDER BY s_suppkey, c_custkey""".stripMargin
-  }
-
-  /** j21's oracle — the S-H clip + shoelace fold replayed in DuckDB list
-    * algebra: per half-plane pass, a list_transform over the closed
-    * vertex list emits kept vertices and intersection points (the
-    * IDENTICAL divide/multiply/add order as the kernel), the list
-    * re-closes, and the signed area comes from a SEQUENTIAL list_reduce
-    * (the kernel's left fold). All pairs, no prune — clip_area > 0 does
-    * the joining.
-    */
-  private def sqlClipZonal: String = {
-    val rings = arrowSqlPts(withHole = true)
-    def ptsList(pts: Seq[(String, String)]): String =
-      pts.map { case (x, y) =>
-        s"struct_pack(x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-      }.mkString("[", ", ", "]")
-    def pass(in: String, onX: Boolean, bound: String, keepGE: Boolean): String = {
-      val f = if (onX) "x" else "y"
-      val cmp = if (keepGE) ">=" else "<="
-      val isect =
-        if (onX)
-          s"struct_pack(x := CAST($bound AS DOUBLE), y := $in[i].y + ((CAST($bound AS DOUBLE) - $in[i].x) / ($in[i+1].x - $in[i].x)) * ($in[i+1].y - $in[i].y))"
-        else
-          s"struct_pack(x := $in[i].x + ((CAST($bound AS DOUBLE) - $in[i].y) / ($in[i+1].y - $in[i].y)) * ($in[i+1].x - $in[i].x), y := CAST($bound AS DOUBLE))"
-      s"""flatten(list_transform(range(1, length($in)), i ->
-         |    CASE WHEN $in[i+1].$f $cmp ($bound) AND $in[i].$f $cmp ($bound) THEN [$in[i+1]]
-         |         WHEN $in[i+1].$f $cmp ($bound) THEN [$isect, $in[i+1]]
-         |         WHEN $in[i].$f $cmp ($bound) THEN [$isect]
-         |         ELSE [] END))""".stripMargin
-    }
-    def close(v: String) =
-      s"CASE WHEN length($v) = 0 THEN $v ELSE list_append($v, $v[1]) END"
-    def crossOf(v: String) =
-      s"""CASE WHEN length($v) < 2 THEN CAST(0 AS DOUBLE) ELSE
-         |    list_reduce(list_transform(range(1, length($v)), i ->
-         |      $v[i].x * $v[i+1].y - $v[i+1].x * $v[i].y), (a, b) -> a + b) END""".stripMargin
-    val passes = Seq(("x", "gx", true), ("x", "gx + 8", false),
-      ("y", "gy", true), ("y", "gy + 8", false))
-    // MATERIALIZED CTE per level: each close references its pass column
-    // 3x and each pass references the previous state ~12x inside lambdas
-    // — nested subqueries let DuckDB inline projections into every
-    // reference, ~36x expression growth per level, exponential over 8
-    // levels (measured: 780 pairs did not finish in 2 min; materialized,
-    // the full 15.6k pairs run in well under a second).
-    val base =
-      s"""lvl0 AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-         |  ${ptsList(rings(0))} AS o0, ${ptsList(rings(1))} AS h0
-         |FROM ($arrowSqlBase) a CROSS JOIN
-         |  (SELECT range AS cell_id, CAST((range % 13) * 8 AS DOUBLE) AS gx,
-         |     CAST((range // 13) * 8 AS DOUBLE) AS gy FROM range(156)) c)""".stripMargin
-    val levels = passes.zipWithIndex.flatMap { case ((axis, bound, ge), k) =>
-      val onX = axis == "x"
-      Seq(
-        s"""p${k + 1} AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-           |  ${pass(s"o$k", onX, bound, ge)} AS oraw,
-           |  ${pass(s"h$k", onX, bound, ge)} AS hraw FROM ${if (k == 0) "lvl0" else s"c$k"})""".stripMargin,
-        s"""c${k + 1} AS MATERIALIZED (SELECT s_suppkey, cell_id, gx, gy,
-           |  ${close("oraw")} AS o${k + 1}, ${close("hraw")} AS h${k + 1} FROM p${k + 1})""".stripMargin)
-    }
-    (base +: levels).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT s_suppkey, cell_id, clip_area FROM (
-         |  SELECT s_suppkey, cell_id,
-         |    abs((${crossOf("o4")}) + (${crossOf("h4")})) / 2 AS clip_area
-         |  FROM c4)
-         |WHERE clip_area > 0 ORDER BY s_suppkey, cell_id""".stripMargin
-  }
-
-  /** bpe1's oracle — BpeExprs.encodeWord replayed as a recursive CTE
-    * over the corpus's DISTINCT words: at each step the adjacent-pair
-    * rank list comes from a MAP literal generated from the SAME
-    * EnglishMerges table (chr(31)-joined keys, the kernel's separator),
-    * the leftmost minimum merges via inclusive list slices, and rows
-    * exit the recursion when no table pair remains (single-symbol states
-    * have an empty rank list → NULL min → coalesced to the sentinel).
-    */
-  private def sqlBpeTokens: String = {
-    val merges = graft.functions.BpeExprs.EnglishMerges
-    val keys = merges.map { case (a, b) => s"'$a'||chr(31)||'$b'" }.mkString(",")
-    val vals = merges.indices.mkString(",")
-    val mapLit = s"MAP([$keys],[$vals])"
-    def rks = s"""list_transform(range(1, length(state)), i ->
-                 |    coalesce(map_extract($mapLit, state[i] || chr(31) || state[i+1])[1], 999999))""".stripMargin
-    s"""WITH RECURSIVE words AS (
-       |  SELECT doc_id, w FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents) WHERE w <> ''),
-       |dw AS (SELECT DISTINCT w FROM words),
-       |steps AS (
-       |  SELECT w, string_split(w, '') AS state FROM dw
-       |  UNION ALL
-       |  SELECT w, state[1:bi-1] || [state[bi] || state[bi+1]] || state[bi+2:] AS state
-       |  FROM (SELECT w, state, list_min(rks) AS br, list_position(rks, list_min(rks)) AS bi
-       |        FROM (SELECT w, state, $rks AS rks FROM steps))
-       |  WHERE br < 999999),
-       |final AS (
-       |  SELECT w, length(state) AS n FROM (
-       |    SELECT w, state, coalesce(list_min($rks), 999999) AS br FROM steps)
-       |  WHERE br = 999999),
-       |percounts AS (
-       |  SELECT doc_id, count(*) AS n_words, CAST(sum(n) AS BIGINT) AS n_bpe
-       |  FROM words JOIN final USING (w) GROUP BY doc_id)
-       |-- data-contract mirror (the r3 lesson): a doc whose text is empty /
-       |-- all-spaces has NO words rows but the Spark side still emits
-       |-- (doc_id, 0, 0); a NULL text stays NULL through split/bpe_count
-       |SELECT d.doc_id,
-       |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(p.n_words, 0) END AS n_words,
-       |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(p.n_bpe, 0) END AS n_bpe
-       |FROM documents d LEFT JOIN percounts p USING (doc_id)
-       |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** hb1's oracle — HilbertExprs.xy2d unrolled level-by-level: one CTE
-    * per scale bit (s = 2^15 .. 2^0), each applying the quadrant weight
-    * d += s²·((3·rx) XOR ry) and the rotate/reflect frame update. The
-    * grid coordinates come from modular multipliers (all-integer), so
-    * every value in the chain is exact in both engines; `xo`/`yo` carry
-    * the pre-rotation cell through to the output.
-    */
-  private def sqlHilbertUnrolled: String = {
-    val n = 1L << 16
-    val base =
-      s"""h16 AS (SELECT p_partkey,
-         |  (p_partkey * 48271) % 65536 AS xo, (p_partkey * 69621) % 65536 AS yo,
-         |  (p_partkey * 48271) % 65536 AS x, (p_partkey * 69621) % 65536 AS y,
-         |  CAST(0 AS BIGINT) AS d FROM part)""".stripMargin
-    val levels = (15 to 0 by -1).map { b =>
-      val s = 1L << b
-      val rx = s"(CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END)"
-      val ry = s"(CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END)"
-      s"""h$b AS (SELECT p_partkey, xo, yo,
-         |  CASE WHEN (y & $s) = 0 THEN (CASE WHEN (x & $s) > 0 THEN ${n - 1} - y ELSE y END) ELSE x END AS x,
-         |  CASE WHEN (y & $s) = 0 THEN (CASE WHEN (x & $s) > 0 THEN ${n - 1} - x ELSE x END) ELSE y END AS y,
-         |  d + CAST(${s * s} AS BIGINT) * xor(3 * $rx, $ry) AS d FROM h${b + 1})""".stripMargin
-    }
-    (base +: levels).mkString("WITH ", ",\n", "\n") +
-      "SELECT p_partkey, xo AS x, yo AS y, d AS hilbert FROM h0 ORDER BY p_partkey"
-  }
-
-  /** Minimum boundary distance² (SpatialOps.ringsBoundaryDistSq): per
-    * segment the clamped-projection offset², identical op order; LEAST
-    * over the segment list equals the Column fold's running min exactly
-    * (min selects one bit-identical operand, no rounding).
-    */
-  private def sqlBoundaryDistSq(segs: Seq[((String, String), (String, String))],
-      px: String, py: String): String =
-    "LEAST(" + segs.map { case ((x1, y1), (x2, y2)) =>
-      val dx = s"($x2 - $x1)"
-      val dy = s"($y2 - $y1)"
-      val l2 = s"($dx * $dx + $dy * $dy)"
-      val t = s"(CASE WHEN $l2 = 0 THEN 0.0 ELSE GREATEST(0.0, LEAST(1.0, " +
-        s"(($px - $x1) * $dx + ($py - $y1) * $dy) / $l2)) END)"
-      val qx = s"($x1 + $t * $dx)"
-      val qy = s"($y1 + $t * $dy)"
-      s"(($px - $qx) * ($px - $qx) + ($py - $qy) * ($py - $qy))"
-    }.mkString(", ") + ")"
-
-  /** Closed segment-pair intersection (SpatialOps.segmentsIntersect: CLRS
-    * orientation signs + collinear endpoint-on-segment touches).
-    */
-  private def sqlSegIntersect(a: ((String, String), (String, String)),
-      b: ((String, String), (String, String))): String = {
-    def orient(ax: String, ay: String, bx: String, by: String,
-        cx: String, cy: String): String =
-      s"(($bx - $ax) * ($cy - $ay) - ($by - $ay) * ($cx - $ax))"
-    def on(ax: String, ay: String, bx: String, by: String,
-        cx: String, cy: String): String =
-      s"($cx >= least($ax, $bx) AND $cx <= greatest($ax, $bx) AND " +
-        s"$cy >= least($ay, $by) AND $cy <= greatest($ay, $by))"
-    val ((x1, y1), (x2, y2)) = a
-    val ((x3, y3), (x4, y4)) = b
-    val d1 = orient(x3, y3, x4, y4, x1, y1)
-    val d2 = orient(x3, y3, x4, y4, x2, y2)
-    val d3 = orient(x1, y1, x2, y2, x3, y3)
-    val d4 = orient(x1, y1, x2, y2, x4, y4)
-    s"(((($d1 > 0 AND $d2 < 0) OR ($d1 < 0 AND $d2 > 0)) AND " +
-      s"(($d3 > 0 AND $d4 < 0) OR ($d3 < 0 AND $d4 > 0))) OR " +
-      s"($d1 = 0 AND ${on(x3, y3, x4, y4, x1, y1)}) OR " +
-      s"($d2 = 0 AND ${on(x3, y3, x4, y4, x2, y2)}) OR " +
-      s"($d3 = 0 AND ${on(x1, y1, x2, y2, x3, y3)}) OR " +
-      s"($d4 = 0 AND ${on(x1, y1, x2, y2, x4, y4)}))"
-  }
-
-  /** Any-segment-pair-intersects over two rings (SpatialOps.ringsEdgesIntersect). */
-  private def sqlEdgesIntersect(a: Seq[((String, String), (String, String))],
-      b: Seq[((String, String), (String, String))]): String =
-    (for (sa <- a; sb <- b) yield sqlSegIntersect(sa, sb)).mkString("(", " OR ", ")")
-
-  /** The j16/j17 arrow's ring points in terms of base columns x0,y0,w,h. */
-  private def arrowSqlPts(withHole: Boolean): Seq[Seq[(String, String)]] = {
-    val outer = Seq(
-      ("x0", "y0"), ("x0 + w", "y0"), ("x0 + w", "y0 + h"),
-      ("x0 + w / 2", "y0 + h / 2"), ("x0", "y0 + h"), ("x0", "y0"))
-    val hole = Seq(
-      ("x0 + 0.5", "y0 + 0.5"), ("x0 + 0.5", "y0 + 1.5"),
-      ("x0 + 1.5", "y0 + 1.5"), ("x0 + 1.5", "y0 + 0.5"), ("x0 + 0.5", "y0 + 0.5"))
-    if (withHole) Seq(outer, hole) else Seq(outer)
-  }
-
-  /** The j18 diamond's ring points in terms of base columns cx,cy,r. */
-  private val diamondSqlPts: Seq[(String, String)] = Seq(
-    ("cx", "cy - r"), ("cx + r", "cy"), ("cx", "cy + r"),
-    ("cx - r", "cy"), ("cx", "cy - r"))
-
-  /** The arrow's generating integers as a SQL CTE body (j16-j18). */
-  private val arrowSqlBase: String =
-    """SELECT s_suppkey,
-      |  CAST(s_suppkey % 90 AS DOUBLE) AS x0, CAST(s_suppkey % 80 AS DOUBLE) AS y0,
-      |  CAST(s_suppkey % 5 + 4 AS DOUBLE) AS w, CAST(s_suppkey % 7 + 4 AS DOUBLE) AS h
-      |FROM supplier""".stripMargin
-
-  /** Q6 — pivot: per-returnflag quantity sums spread across linestatus
-    * columns (`RelationalGroupedDataset.pivot`; oracle via CASE aggregation).
-    */
-  private def q6(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag")
-      .pivot("l_linestatus", Seq("F", "O"))
-      .agg(sum(col("l_quantity").cast(D2)).cast("double"))
-      .withColumnRenamed("F", "qty_f").withColumnRenamed("O", "qty_o")
-      .orderBy("l_returnflag")
-
-  private def j8(s: SparkSession, d: String) =
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_semi")
-      .select("c_custkey")
-      .orderBy("c_custkey")
-
-  private def j9(s: SparkSession, d: String) =
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"), "left_anti")
-      .select("c_custkey")
-      .orderBy("c_custkey")
-
-  private def set1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d).select("l_orderkey")
-      .intersect(Tables.orders(s, d).select(col("o_orderkey").as("l_orderkey")))
-      .orderBy("l_orderkey")
-
-  private def set2(s: SparkSession, d: String) =
-    Tables.orders(s, d).select("o_orderkey")
-      .except(Tables.lineitem(s, d).select(col("l_orderkey").as("o_orderkey")))
-      .orderBy("o_orderkey")
-
-  private def u1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d).filter(col("l_linenumber") === 1)
-      .select(col("l_orderkey").as("okey"), lit("l").as("src"))
-      .union(Tables.orders(s, d).select(col("o_orderkey").as("okey"), lit("o").as("src")))
-      .orderBy("okey", "src")
-
-  // ---------- §2.5 windows / sorts / limits ----------
-
-  private def w1(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id")).rowsBetween(-2, 2)
-    Tables.events(s, d)
-      .select(col("event_id"), round(avg(col("value")).over(w), 6).as("avg5"))
-      .orderBy("event_id")
-  }
-
-  /** W2 — running offset (sequential id offsets,
-    * image_segmentation.py:150) through the scale-safe two-pass
-    * partition-offset prefix sum (GlobalOrder.prefixSum): range-partition
-    * on the order key, per-partition exact partials → broadcast
-    * cumulative offsets → per-partition running add. No single-task
-    * window anywhere; the oracle's global-window SQL is the semantics,
-    * this plan is how it survives 100×.
-    */
-  private def w2(s: SparkSession, d: String) =
-    operators.GlobalOrder.prefixSum(
-        Tables.orders(s, d).select("o_orderkey", "o_totalprice"),
-        Seq(col("o_orderkey")), col("o_totalprice").cast(D2), "run_total")
-      .select(col("o_orderkey"), col("run_total").cast("double").as("run_total"))
-      .orderBy("o_orderkey")
-
-  private def w3(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(s, d)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select("o_custkey", "o_orderkey", "o_totalprice")
-      .orderBy("o_custkey")
-  }
-
-  private def o1(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .select("o_orderkey", "o_orderdate", "o_totalprice")
-      .orderBy("o_orderdate", "o_orderkey")
-      .limit(20)
-
-  private def o2(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select("l_orderkey", "l_linenumber")
-      .orderBy("l_orderkey", "l_linenumber")
-      .limit(100)
-
-  // ---------- extension surface E1-E4 ----------
-
-  private def e1(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .groupBy(md5(col("text")).as("text_key"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
-      .orderBy("keep_id")
-
-  private def e1b(s: SparkSession, d: String) =
-    Dedup.fingerprintGroups(Tables.documents(s, d)).orderBy("keep_id")
-
-  private def e2(s: SparkSession, d: String) =
-    Dedup.minhashSignatures(Tables.documents(s, d), numHashes = 8).orderBy("doc_id")
-
-  /** E7 — exact shingle-Jaccard over the LSH candidate pairs (the verify
-    * half of fuzzy dedup): inverted-index join formulation, so cost scales
-    * with candidates, not |corpus|².
-    */
-  private def e7(s: SparkSession, d: String) = {
-    Dedup.fuzzyDupPairs(Tables.documents(s, d), threshold = 0.0, numHashes = 8, rowsPerBand = 2)
-      .withColumn("jaccard", round(col("jaccard"), 6))
-      .repartition(1)
-      .sortWithinPartitions("a", "b")
-  }
-
-  /** cont1 — DIRECTIONAL containment over the LSH candidates: the
-    * asymmetric subset-dup census (which side of a near-dup pair contains
-    * the other) that symmetric Jaccard washes out. Threshold 0 keeps
-    * every intersecting candidate so both direction scores are hashed.
-    */
-  private def cont1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    Dedup.containmentVerify(docs,
-        Dedup.minhashCandidatePairs(docs, numHashes = 8, rowsPerBand = 2),
-        threshold = 0.0)
-      .withColumn("cont_ab", round(col("cont_ab"), 6))
-      .withColumn("cont_ba", round(col("cont_ba"), 6))
-      .repartition(1)
-      .sortWithinPartitions("a", "b")
-  }
-
-  /** Global orderBy would range-sample and re-execute the whole LSH
-    * pipeline; the pair set is tiny, so sort it in one partition instead
-    * (same total order, single upstream execution). repartition(1), NOT
-    * coalesce(1): coalesce folds the upstream stage to one task, a shuffle
-    * boundary keeps it parallel.
-    */
-  private def e2b(s: SparkSession, d: String) =
-    Dedup.minhashCandidatePairs(Tables.documents(s, d), numHashes = 8, rowsPerBand = 2)
-      .repartition(1)
-      .sortWithinPartitions("a", "b")
-
-  private def e3(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
-      .withColumn("score", round(col("score"), 6))
-      .orderBy("query_id", "rank")
-  }
-
-  /** knn1 — 5-NN majority-vote label transfer: every 10th vector is the
-    * unlabeled query set, the rest the labeled corpus.
-    */
-  private def knn1(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    operators.Similarity.knnClassify(
-        emb.filter(col("vec_id") % 10 === 0),
-        emb.filter(col("vec_id") % 10 =!= 0), k = 5)
-      .orderBy("query_id")
-  }
-
-  private def e9(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextOps.rollingFingerprint(col("text")).as("roll_fp"))
-      .orderBy("doc_id")
-
-  /** rep1 — within-document n-gram repetition metrics (Gopher-style
-    * quality rules): char-weighted duplicate-bigram/-trigram fractions and
-    * top-bigram coverage, via the shuffle-free sorted-run fold
-    * (`TextOps.repetitionCounts`). Every stage is staged as its own
-    * projection (HOF lambdas get no CSE); all counters are integers so the
-    * final divisions are bit-exact vs the relational oracle.
-    */
-  private def rep1(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"),
-        sort_array(TextOps.shingles(col("__toks"), 2)).as("__g2"),
-        sort_array(TextOps.shingles(col("__toks"), 3)).as("__g3"))
-      // inline(array(fold)) materializes the counter struct through a
-      // Generate: extracting dup/best/tot from a merely-ALIASED struct
-      // would re-inline the fold once per field (CollapseProject treats
-      // field extraction as collapsible whatever it costs); the Generate
-      // is a projection barrier, so each fold runs once per row
-      .select(col("doc_id"), col("__g3"),
-        inline(array(TextOps.repetitionCounts(col("__g2")))))
-      .select(col("doc_id"), col("__g3"),
-        col("dup").as("__d2"), col("best").as("__b2"), col("tot").as("__t2"))
-      .select(col("doc_id"), col("__d2"), col("__b2"), col("__t2"),
-        inline(array(TextOps.repetitionCounts(col("__g3")))))
-      .select(col("doc_id"),
-        (col("__d2").cast("double") / col("__t2").cast("double")).as("dup2_frac"),
-        (col("__b2").cast("double") / col("__t2").cast("double")).as("top2_frac"),
-        (col("dup").cast("double") / col("tot").cast("double")).as("dup3_frac"))
-      .orderBy("doc_id")
-
-  /** par1 — cross-document duplicated-passage profile (C4-style). */
-  private def par1(s: SparkSession, d: String) =
-    Curation.passageDupStats(Tables.documents(s, d), ngramK = 5)
-      .orderBy("doc_id")
-
-  /** span1 — repeated-span census (the span-level dedup signal): per doc,
-    * how many maximal spans are covered by corpus-repeated 5-grams and
-    * how many tokens they span. Window islands, integer-exact.
-    */
-  private def span1(s: SparkSession, d: String) =
-    Curation.repeatedSpanStats(Tables.documents(s, d), ngramK = 5)
-      .orderBy("doc_id")
-
-  /** sql1 — the pure-SQL user path through the driver gate: the engine's
-    * registered SQL functions (the GraftFunctions catalog the session
-    * was built with) over a temp view — no DataFrame API in the query
-    * itself. Hash-matching the oracle proves the SQL surface is
-    * the same engine as the Column surface.
-    */
-  private def sql1(s: SparkSession, d: String) = {
-    Tables.documents(s, d).createOrReplaceTempView("graft_docs")
-    s.sql(
-      """SELECT doc_id, graft_token_count(text) AS n_tokens,
-        |  round(graft_quality(text), 6) AS quality,
-        |  graft_langid(text) AS lang_guess,
-        |  graft_fingerprint(text) AS fp
-        |FROM graft_docs ORDER BY doc_id""".stripMargin)
-  }
-
-  /** emb1 — cluster cohesion via fixed-point group centroids: the
-    * distributed mean-vector is computed on 2^20-scaled integer
-    * accumulators (order-independent, bit-reproducible — hash-checkable
-    * where a naive float sum would be partitioning-dependent), then each
-    * vector scores its cosine to its label centroid.
-    */
-  private def emb1(s: SparkSession, d: String) =
-    Similarity.cohesionToCentroid(Tables.embeddings(s, d), "label")
-      .orderBy("vec_id")
-
-  /** gate1 — composite quality gate with audit-trail reasons: one scan,
-    * zero shuffles; first-failing-rule precedence is the oracle contract.
-    */
-  private def gate1(s: SparkSession, d: String) =
-    Curation.qualityGate(Tables.documents(s, d))
-      .select("doc_id", "keep", "reason")
-      .orderBy("doc_id")
-
-  /** url1 — C4-style domain blocklist filter: synthetic absolute URLs are
-    * staged from existing columns (the sandbox corpus has none), the
-    * operator derives the registrable domain and anti-joins a broadcast
-    * blocklist on domain EQUALITY — "ads." subdomains collapse onto the
-    * same registrable key, so subdomain evasion is caught without an
-    * endswith scan of the corpus.
-    */
-  private def url1(s: SparkSession, d: String) = {
-    import s.implicits._
-    val docs = Tables.documents(s, d).withColumn("url",
-      concat(lit("https://"),
-        when(pmod(col("doc_id"), lit(7)) === 0, lit("ads.")).otherwise(lit("www.")),
-        col("source"), pmod(col("doc_id"), lit(3)).cast("string"),
-        lit(".org/p/"), col("doc_id").cast("string")))
-    val blocked = Seq("src30.org", "src31.org", "src32.org", "badsite.example")
-      .toDF("domain")
-    Curation.domainBlocklistFilter(docs, "url", blocked)
-      .withColumn("domain",
-        WebOps.registrableDomain(WebOps.urlHost(col("url"))))
-      .groupBy("domain")
-      .agg(count(lit(1)).as("n_docs"))
-      .orderBy("domain")
-  }
-
-  /** pii1 — PII anonymization: emails/phones/IPs are injected
-    * deterministically (doc_id arithmetic), redacted by the fixed-order
-    * regex pass, and the oracle hash-checks both the per-kind counts and
-    * the md5 of the REDACTED text — so the exact replacement semantics
-    * (order, global replace, boundary behavior) are verified, not just
-    * match counts.
-    */
-  private def pii1(s: SparkSession, d: String) = {
-    val staged = Tables.documents(s, d).select(col("doc_id"),
-      concat(
-        col("text"),
-        lit(" contact u"), col("doc_id").cast("string"),
-        lit("@mail"), pmod(col("doc_id"), lit(5)).cast("string"), lit(".com now"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          concat(lit(" call 555-"),
-            lpad(pmod(col("doc_id"), lit(1000)).cast("string"), 3, "0"),
-            lit("-0199"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(4)) === 0, lit(" from 10.0.0.42"))
-          .otherwise(lit(""))).as("text"))
-    Curation.redactPii(staged)
-      .select(col("doc_id"), col("n_emails"), col("n_phones"), col("n_ips"),
-        md5(col("text")).as("clean_md5"))
-      .orderBy("doc_id")
-  }
-
-  /** lex1 — lexical diversity (type-token ratio): the standard quality
-    * signal for template/boilerplate detection that the length/stopword
-    * score misses. Pure projection.
-    */
-  private def lex1(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
-      .select(col("doc_id"),
-        size(col("__toks")).cast("long").as("n_tokens"),
-        size(array_distinct(col("__toks"))).cast("long").as("n_distinct"))
-      .withColumn("ttr",
-        round(col("n_distinct").cast("double") / col("n_tokens").cast("double"), 6))
-      .orderBy("doc_id")
-
-  /** st5 — at-least-once replay dedup: the batch twin of
-    * `EventStream.dedupStream` (dropDuplicatesWithinWatermark). A 10%
-    * replayed slice simulates redelivered micro-batches; replays are
-    * exact row copies, so the keep-any pick is deterministic and the
-    * per-type census must equal the single-delivery table's exactly.
-    */
-  private def st5(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d).select("event_id", "event_type", "value")
-    ev.unionByName(ev.filter(pmod(col("event_id"), lit(10)) === 0))
-      .dropDuplicates(Seq("event_id"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
-      .orderBy("event_type")
-  }
-
-  /** d1 — keyed deletion over a stored corpus (right-to-be-forgotten):
-    * stage the documents table as a parquet store, tombstone every 13th
-    * doc through `Maintenance.deleteByKeys` (broadcast anti-join +
-    * marker-protected swap), and census what survives — the oracle is
-    * the logical complement, so the swap machinery must be exactly
-    * row-preserving.
-    */
-  private def d1(s: SparkSession, dd: String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d1").toString + "/docs"
-    Tables.documents(s, dd).write.mode("overwrite").parquet(dir)
-    val tomb = Tables.documents(s, dd)
-      .filter(pmod(col("doc_id"), lit(13)) === 0).select("doc_id")
-    Maintenance.deleteByKeys(s, dir, tomb, Seq("doc_id"))
-    s.read.parquet(dir)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n"), max(col("doc_id")).as("max_id"))
-      .orderBy("source")
-  }
-
-  /** up1 — keyed upsert (the maintenance CRUD's third leg next to d1
-    * delete and compact): stage the documents table, then upsert a
-    * correction batch — every 17th doc gets its source rewritten to
-    * 'corrected' (replace) plus 5 brand-new ids (append) — and census
-    * the store. The oracle computes the merge from scratch, so the swap
-    * rewrite must replace exactly the keyed rows and append the rest.
-    */
-  private def up1(s: SparkSession, dd: String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_up1").toString + "/docs"
-    val docs = Tables.documents(s, dd).select("doc_id", "source", "n_chars")
-    docs.write.mode("overwrite").parquet(dir)
-    val corrections = docs.filter(pmod(col("doc_id"), lit(17)) === 0)
-      .withColumn("source", lit("corrected"))
-    val additions = docs.orderBy("doc_id").limit(5)
-      .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-        lit("appended").as("source"), col("n_chars"))
-    Maintenance.upsertByKeys(s, dir, corrections.unionByName(additions), Seq("doc_id"))
-    s.read.parquet(dir)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).cast("long").as("sum_chars"))
-      .orderBy("source")
-  }
-
-  /** TT1 — SNAPSHOT / TIME-TRAVEL READS over the marker-protected store
-    * (the r15 verdict's stretch 9): stage the documents store, run up1's
-    * correction upsert with `retain = true` (archiving the pre-upsert
-    * snapshot as generation 1), then read all three views — the PINNED
-    * generation via [[operators.Maintenance.readAsOf]] (must be the
-    * untouched original corpus), the LIVE store (the post-upsert merge),
-    * and the [[operators.Maintenance.changesSince]] CDC between them —
-    * as one census. The oracle computes every view FROM SCRATCH (the
-    * original table verbatim; the up1 merge; the closed-form diff:
-    * every 17th doc an update, five appended ids inserts), so a hash
-    * match proves the archived generation is bit-untouched by the swap
-    * and the CDC machinery composes with it exactly.
-    */
-  private def tt1(s: SparkSession, dd: String) = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt1").toString + "/docs"
-    val docs = Tables.documents(s, dd).select("doc_id", "source", "n_chars")
-    docs.write.mode("overwrite").parquet(dir)
-    val pinned = Maintenance.currentGeneration(s, dir) // = 1
-    val corrections = docs.filter(pmod(col("doc_id"), lit(17)) === 0)
-      .withColumn("source", lit("corrected"))
-    val additions = docs.orderBy("doc_id").limit(5)
-      .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-        lit("appended").as("source"), col("n_chars"))
-    Maintenance.upsertByKeys(s, dir, corrections.unionByName(additions),
-      Seq("doc_id"), retain = true)
-    def census(df: DataFrame, tag: String) = df
-      .groupBy("source")
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).cast("long").as("sum_chars"))
-      .select(lit(tag).as("snapshot"), col("source"), col("n"), col("sum_chars"))
-    census(Maintenance.readAsOf(s, dir, pinned), "asof")
-      .unionByName(census(s.read.parquet(dir), "live"))
-      .unionByName(
-        Maintenance.changesSince(s, dir, pinned, Seq("doc_id"), Seq("source", "n_chars"))
-          .groupBy("change")
-          .agg(count(lit(1)).as("n"), sum(col("new_n_chars")).cast("long").as("sum_chars"))
-          .select(lit("diff").as("snapshot"), col("change").as("source"),
-            col("n"), col("sum_chars")))
-      .orderBy("snapshot", "source")
-  }
-
-  /** q13-shaped customer order-count distribution: the left-join-count
-    * histogram (zero-order customers included) — the classic planner
-    * shape for outer-join + double aggregation.
-    */
-  private def q13(s: SparkSession, d: String) =
-    Tables.customer(s, d).join(
-        Tables.orders(s, d).filter(col("o_orderpriority") =!= "1-URGENT"),
-        col("c_custkey") === col("o_custkey"), "left")
-      .groupBy("c_custkey")
-      .agg(count(col("o_orderkey")).as("c_count"))
-      .groupBy("c_count")
-      .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
-
-  /** q16-shaped supplier census: NOT IN anti-join + count distinct per
-    * part attribute group.
-    */
-  private def q16(s: SparkSession, d: String) = {
-    val p = Tables.part(s, d)
-      .filter(col("p_brand") =!= "Brand#1" && col("p_type") =!= "SMALL")
-    val bad = Tables.supplier(s, d)
-      .filter(pmod(col("s_suppkey"), lit(17)) === 0).select("s_suppkey")
-    Tables.lineitem(s, d).select("l_partkey", "l_suppkey")
-      .join(p, col("l_partkey") === col("p_partkey"))
-      .join(bad, col("l_suppkey") === col("s_suppkey"), "left_anti")
-      .groupBy("p_brand", "p_type", "p_size")
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-  }
-
-  /** q19-shaped disjunctive join predicate: OR-of-ANDs across both join
-    * sides — the shape that tests predicate pushdown splitting (the
-    * common `l_partkey = p_partkey` conjunct must still reach the scans
-    * while the disjunction evaluates post-join).
-    */
-  private def q19(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
-      .filter(
-        (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) &&
-          col("l_quantity") >= 1 && col("l_quantity") <= 20) ||
-        (col("p_brand") === "Brand#2" && col("p_size").between(5, 25) &&
-          col("l_quantity") >= 5 && col("l_quantity") <= 30) ||
-        (col("p_brand") === "Brand#3" && col("p_size").between(10, 40) &&
-          col("l_quantity") >= 10 && col("l_quantity") <= 40))
-      .agg(
-        sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-          .cast("double").as("revenue"),
-        count(lit(1)).as("n"))
-
-  /** q10-shaped returned-item report: 4-way join, revenue agg, top-20.
-    * The returnflag filter lands on the lineitem scan; nation broadcasts.
-    */
-  private def q10(s: SparkSession, d: String) =
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(s, d).filter(col("l_returnflag") === "R"),
-        col("o_orderkey") === col("l_orderkey"))
-      .join(Tables.nation(s, d), col("c_nationkey") === col("n_nationkey"))
-      .groupBy("c_custkey", "c_name", "n_name")
-      .agg(sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("c_custkey"))
-      .limit(20)
-
-  /** q11-shaped value concentration: grouped value vs a fraction of the
-    * GLOBAL value — the scalar-aggregate-as-threshold shape. The one-row
-    * global total broadcasts into a nested-loop join; both sides stay
-    * decimal-exact until the final double compare.
-    */
-  private def q11(s: SparkSession, d: String) = {
-    val value = sum(col("l_extendedprice").cast(D2) * col("l_quantity").cast(D2))
-    val byPart = Tables.lineitem(s, d).groupBy("l_partkey").agg(value.as("val_d"))
-    val total = Tables.lineitem(s, d).agg(value.as("tot"))
-    byPart.crossJoin(total)
-      .filter(col("val_d").cast("double") > col("tot").cast("double") * 0.001)
-      .select(col("l_partkey"), col("val_d").cast("double").as("part_value"))
-      .orderBy(col("part_value").desc, col("l_partkey"))
-  }
-
-  /** q14-shaped promo share: conditional aggregation as a percentage of
-    * the same aggregate — one pass, two sums (the CASE collapses into the
-    * sum, no second scan). Decimal sums; the division happens once in
-    * double on exact inputs.
-    */
-  private def q14(s: SparkSession, d: String) = {
-    val price = col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2)
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1995-06-01 00:00:00")) &&
-        col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1995-07-01 00:00:00")))
-      .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
-      .agg(
-        round(lit(100.0) * sum(when(col("p_type") === "PROMO", price)).cast("double")
-          / sum(price).cast("double"), 6).as("promo_share"),
-        count(lit(1)).as("n"))
-  }
-
-  /** q15-shaped top supplier: revenue per supplier in a quarter, keep the
-    * max — the "view + scalar max equality" shape. Revenue stays DECIMAL
-    * through the max comparison, so ties and the max match are exact.
-    */
-  private def q15(s: SparkSession, d: String) = {
-    val rev = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1995-01-01 00:00:00")) &&
-        col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1995-04-01 00:00:00")))
-      .groupBy("l_suppkey")
-      .agg(sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-        .as("total_rev"))
-    val maxRev = rev.agg(max(col("total_rev")).as("__mr"))
-    Tables.supplier(s, d)
-      .join(rev, col("s_suppkey") === col("l_suppkey"))
-      .crossJoin(maxRev)
-      .filter(col("total_rev") === col("__mr"))
-      .select(col("s_suppkey"), col("s_name"), col("total_rev").cast("double").as("total_rev"))
-      .orderBy("s_suppkey")
-  }
-
-  /** q17-shaped small-quantity revenue: correlated per-part average as a
-    * row filter, decorrelated to an aggregate + equi-join. l_quantity is
-    * integer-valued, so the per-part avg is fold-order-exact in double
-    * and the 0.2·avg compare is deterministic on both engines.
-    */
-  private def q17(s: SparkSession, d: String) = {
-    val avgQ = Tables.lineitem(s, d).groupBy(col("l_partkey").as("__pk"))
-      .agg(avg(col("l_quantity")).as("__avg_q"))
-    Tables.lineitem(s, d)
-      .join(Tables.part(s, d).filter(col("p_brand") === "Brand#2"),
-        col("l_partkey") === col("p_partkey"))
-      .join(avgQ, col("l_partkey") === col("__pk"))
-      .filter(col("l_quantity") < lit(0.2) * col("__avg_q"))
-      .agg(
-        round(dsum(col("l_extendedprice")) / 7.0, 6).as("avg_yearly"),
-        count(lit(1)).as("n"))
-  }
-
-  /** q18-shaped large-volume orders: HAVING on a grouped sum, joined back
-    * to the order/customer detail. The big-order id set is tiny after the
-    * HAVING, so it broadcasts into the detail join.
-    */
-  private def q18(s: SparkSession, d: String) = {
-    val big = Tables.lineitem(s, d).groupBy("l_orderkey")
-      .agg(sum(col("l_quantity")).as("sum_qty"))
-      .filter(col("sum_qty") > 170)
-    Tables.customer(s, d)
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"))
-      .join(big, col("o_orderkey") === col("l_orderkey"))
-      .select(col("c_custkey"), col("o_orderkey"), col("o_totalprice"), col("sum_qty"))
-      .orderBy(col("sum_qty").desc, col("o_orderkey"))
-      .limit(100)
-  }
-
-  /** q20-shaped qualified suppliers: nested aggregate threshold feeding a
-    * semi join — suppliers who shipped > 100 units of Brand#3 parts.
-    */
-  private def q20(s: SparkSession, d: String) = {
-    val qualified = Tables.lineitem(s, d)
-      .join(Tables.part(s, d).filter(col("p_brand") === "Brand#3").select("p_partkey"),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("l_suppkey")
-      .agg(sum(col("l_quantity")).as("__q"))
-      .filter(col("__q") > 100)
-      .select(col("l_suppkey"))
-    Tables.supplier(s, d)
-      .join(qualified, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .select(col("s_suppkey"), col("s_name"))
-      .orderBy("s_suppkey")
-  }
-
-  /** q22-shaped idle customers: above-average balance AND no orders —
-    * scalar-aggregate threshold + anti join. The avg compare is done as
-    * `bal·n > total` with both sides DECIMAL, so it is exact on both
-    * engines (decimal avg rounding differs between Spark and DuckDB).
-    */
-  private def q22(s: SparkSession, d: String) = {
-    val agg = Tables.customer(s, d).filter(col("c_acctbal") > 0.0)
-      .agg(sum(col("c_acctbal").cast(D2)).as("__tot"), count(lit(1)).as("__n"))
-    Tables.customer(s, d)
-      .crossJoin(agg)
-      .filter(col("c_acctbal").cast(D2) * col("__n") > col("__tot"))
-      .join(Tables.orders(s, d).select(col("o_custkey")),
-        col("c_custkey") === col("o_custkey"), "left_anti")
-      .groupBy(pmod(col("c_custkey"), lit(7)).as("cntry"))
-      .agg(count(lit(1)).as("n_cust"), dsum(col("c_acctbal")).as("total_bal"))
-      .orderBy("cntry")
-  }
-
-  /** q21-shaped "last shipper in multi-supplier orders": EXISTS + NOT
-    * EXISTS, both correlated on the outer line — the hardest classic
-    * decorrelation shape (two semi/anti joins with non-equi residuals).
-    * Both engines run the IDENTICAL text; count(DISTINCT order) makes
-    * shipdate ties inside one supplier's lines harmless.
-    */
-  private def q21(s: SparkSession, d: String) = {
-    Tables.lineitem(s, d).createOrReplaceTempView("q21_lineitem")
-    Tables.supplier(s, d).createOrReplaceTempView("q21_supplier")
-    s.sql(
-      """SELECT s_name, count(DISTINCT l1.l_orderkey) AS numwait
-        |FROM q21_supplier, q21_lineitem l1
-        |WHERE s_suppkey = l1.l_suppkey
-        |AND EXISTS (SELECT 1 FROM q21_lineitem l2
-        |  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |AND NOT EXISTS (SELECT 1 FROM q21_lineitem l3
-        |  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |    AND l3.l_shipdate > l1.l_shipdate)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin)
-  }
-
-  /** q2-shaped min-cost selection: rows equal to their group's correlated
-    * scalar minimum — equality on STORED doubles, no arithmetic, so the
-    * decorrelated join is exact.
-    */
-  private def q2(s: SparkSession, d: String) = {
-    Tables.part(s, d).createOrReplaceTempView("q2_part")
-    s.sql(
-      """SELECT p_partkey, p_name, p_type, p_retailprice FROM q2_part p
-        |WHERE p_retailprice = (SELECT min(p2.p_retailprice) FROM q2_part p2
-        |  WHERE p2.p_type = p.p_type)
-        |ORDER BY p_partkey""".stripMargin)
-  }
-
-  /** w8 — COUNT(DISTINCT) OVER, which Spark does not support directly,
-    * rewritten as max(dense_rank) over the same partition — the standard
-    * two-window workaround, hash-checked against the grouped distinct.
-    */
-  private def w8(s: SparkSession, d: String) = {
-    val byPart = Window.partitionBy("l_partkey")
-    Tables.lineitem(s, d)
-      .withColumn("__dr", dense_rank().over(byPart.orderBy("l_suppkey")))
-      .withColumn("n_supp", max(col("__dr")).over(byPart))
-      .select(col("l_partkey"), col("n_supp"))
-      .distinct()
-      .orderBy("l_partkey")
-  }
-
-  /** sql3 — correlated scalar subquery through the SQL front door:
-    * Catalyst must decorrelate the per-part COUNT into an aggregate +
-    * left join (including the COUNT-on-empty-group = 0 rule). The oracle
-    * runs the IDENTICAL text, so the rewrite is verified end-to-end.
-    */
-  private def sql3(s: SparkSession, d: String) = {
-    Tables.lineitem(s, d).createOrReplaceTempView("sql3_lineitem")
-    Tables.part(s, d).createOrReplaceTempView("sql3_part")
-    s.sql(
-      """SELECT p_partkey, p_brand, n_heavy FROM (
-        |  SELECT p_partkey, p_brand,
-        |    (SELECT count(*) FROM sql3_lineitem WHERE l_partkey = p_partkey AND l_quantity > 45) AS n_heavy
-        |  FROM sql3_part) t
-        |WHERE n_heavy > 0 ORDER BY p_partkey""".stripMargin)
-  }
-
-  /** skew1 — hot-key GROUP BY through the two-phase salted aggregation;
-    * the oracle is the PLAIN GROUP BY, so the hash match proves salting is
-    * semantically invisible (decimal partials commute exactly). lineitem's
-    * 3-value l_returnflag is the genuine hot-key shape: at 100 TB a direct
-    * groupBy lands ~33 TB on each of three reducers, the salted form
-    * spreads each key over 16.
-    */
-  private def skew1(s: SparkSession, d: String) =
-    Skew.saltedAgg(
-      Tables.lineitem(s, d),
-      keys = Seq("l_returnflag"),
-      saltSource = struct(col("l_orderkey"), col("l_linenumber")),
-      salts = 16,
-      partials = Seq(count(lit(1)).as("__n"), sum(col("l_quantity").cast(D2)).as("__q")),
-      combine = Seq(sum(col("__n")).as("n"),
-        sum(col("__q")).cast("double").as("sum_qty")))
-      .orderBy("l_returnflag")
-
-  /** b1 — co-bucketed join: both sides written bucketed+sorted by the join
-    * key, then joined shuffle-free (BucketingSpec asserts the no-exchange
-    * plan; here the driver hash-checks the RESULT against the plain join —
-    * bucketing must be semantically invisible).
-    */
-  private def b1(s: SparkSession, d: String) = {
-    Bucketing.writeBucketed(
-      Tables.lineitem(s, d).select(col("l_partkey").as("partkey"), col("l_quantity")),
-      "b1_lineitem_bkt", buckets = 8, keys = Seq("partkey"))
-    Bucketing.writeBucketed(
-      Tables.part(s, d).select(col("p_partkey").as("partkey"), col("p_brand")),
-      "b1_part_bkt", buckets = 8, keys = Seq("partkey"))
-    Bucketing.colocatedJoin(s, "b1_lineitem_bkt", "b1_part_bkt", keys = Seq("partkey"))
-      .groupBy("p_brand")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("p_brand")
-  }
-
-  /** E3b — IVF ANN top-k, hash-checked via the full-probe equivalence:
-    * with nProbe = nLists every cell is searched, so IVF must return
-    * EXACTLY the brute-force answer (the oracle) — any defect in the
-    * KMeans cell assignment (dropped/duplicated vectors), probe routing,
-    * scoring, or ranking breaks the hash. The pruned nProbe < nLists
-    * behavior (recall on separated clusters, partition-filter pruning in
-    * the persisted index) is SimilaritySpec's job — approximation quality
-    * has no SQL analog, exactness of the machinery does.
-    */
-  private def e3b(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5, nLists = 8, nProbe = 8)
-      .withColumn("score", round(col("score"), 6))
-      .orderBy("query_id", "rank")
-  }
-
-  /** E3c — IVF with a genuinely PRUNED probe (nProbe 3 of nLists 8),
-    * oracled: centroids are eight corpus vectors (deterministic seeding —
-    * the bring-your-own-quantizer path), so DuckDB can replay the exact
-    * nearest-centroid assignment, the query-side probe routing, AND the
-    * cell-restricted scoring. e3b proves full-probe ≡ brute force; this
-    * proves the pruning itself — the part of IVF that actually buys the
-    * 100 TB win — produces exactly the deterministic subset it claims.
-    */
-  private def e3c(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    Similarity.ivfTopKWithCentroids(
-        emb.filter(col("vec_id") < 10), emb, centroids, k = 5, nProbe = 3)
-      .withColumn("score", round(col("score"), 6))
-      .orderBy("query_id", "rank")
-  }
-
-  /** E3d — product-quantization ANN: the corpus compressed to 8 one-byte
-    * codewords per vector (8 subspaces × 8 dims of the 64-dim embedding),
-    * ranked by fixed-point ADC distance sums. Codebook derived from the
-    * first 8 embeddings' slices (the e3c caller-provided-quantizer
-    * pattern), so encode argmin and the compressed ranking are both fully
-    * deterministic and the oracle evaluates the identical closed form.
-    */
-  private def e3d(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val codebook = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("code"), col("embedding").as("__e"))
-      .select(col("code"), posexplode(
-        transform(sequence(lit(0), lit(7)),
-          mm => slice(col("__e"), mm * 8 + 1, lit(8)))).as(Seq("m", "center")))
-      .select("m", "code", "center")
-    Similarity.pqTopKWithCodebook(
-        emb.filter(col("vec_id") < 10), emb, codebook, k = 5, m = 8, dSub = 8)
-      .orderBy("query_id", "rank")
-  }
-
-  /** E3e — IVF+PQ composed: e3c's deterministic coarse quantizer restricts
-    * candidates to each query's 3 probed cells, e3d's fixed-point ADC
-    * ranks the survivors on codes. Both layers individually oracled; this
-    * checks the COMPOSITION (probe restriction must reach the code join).
-    */
-  private def e3e(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val centroids = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val codebook = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("code"), col("embedding").as("__e"))
-      .select(col("code"), posexplode(
-        transform(sequence(lit(0), lit(7)),
-          mm => slice(col("__e"), mm * 8 + 1, lit(8)))).as(Seq("m", "center")))
-      .select("m", "code", "center")
-    Similarity.ivfPqTopK(
-        emb.filter(col("vec_id") < 10), emb, centroids, codebook,
-        k = 5, nProbe = 3, m = 8, dSub = 8)
-      .orderBy("query_id", "rank")
-  }
-
-  /** KM1 — one bit-exact Lloyd's k-means round: assign to 4 seed
-    * centroids, recompute fixed-point means, REASSIGN, and hash the cell
-    * census plus the new centroids' leading-dim fingerprints. Distributed
-    * clustering training whose trajectory the oracle replays exactly.
-    */
-  private def km1(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val init = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val cent1 = Similarity.lloydRound(emb, init)
-    Similarity.assignCells(emb, cent1)
-      .groupBy("cell").agg(count(lit(1)).as("n_members"))
-      .join(cent1.select(col("cell"),
-        floor(element_at(col("centroid"), 1) * lit(1048576L)).cast("long").as("c1_fp"),
-        floor(element_at(col("centroid"), 2) * lit(1048576L)).cast("long").as("c2_fp")),
-        Seq("cell"))
-      .orderBy("cell")
-  }
-
-  /** KM2 — the multi-round Lloyd TRAINING loop (km1's one exact round
-    * iterated — the r15 verdict's clustering end-to-end): three rounds
-    * of [[Similarity.trainKMeans]] from the km1 seed (vec_id < 4),
-    * final assignment censused exactly like km1. Each round's ≤k-row
-    * centroid table is collected and re-seeded as a local relation
-    * (flat lineage, broadcast side statically row-bounded — the plan
-    * audit proves this one with NO allowlist entry, unlike km1's
-    * filtered-scan seed), and the values re-seed VERBATIM, so the
-    * 3-round trajectory is bitwise the chained-lloydRound form
-    * (SimilaritySpec gates it) and the oracle unrolls all three rounds
-    * as MATERIALIZED CTE levels — the bpe2 training-replay discipline
-    * on k-means.
-    */
-  private def km2(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val init = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val (cent, _) = Similarity.trainKMeans(emb, init, maxRounds = 3)
-    Similarity.assignCells(emb, cent)
-      .groupBy("cell").agg(count(lit(1)).as("n_members"))
-      .join(cent.select(col("cell"),
-        floor(element_at(col("centroid"), 1) * lit(1048576L)).cast("long").as("c1_fp"),
-        floor(element_at(col("centroid"), 2) * lit(1048576L)).cast("long").as("c2_fp")),
-        Seq("cell"))
-      .orderBy("cell")
-  }
-
-  /** Shared Lloyd-unroll CTE generator: `kinit` from `seedWhere`,
-    * `kcorp`, assignment `ka0`, then per round a fixed-point dims level
-    * `kd$k` and centroid level `kcent$k` (every CTE MATERIALIZED — the
-    * j21 inlining lesson), with assignments `ka$k` emitted for rounds
-    * that feed a next round (plus the final one when `finalAssign`).
-    * Consumers: km2's census (finalAssign) and e3f's trained-quantizer
-    * IVF (kcent$rounds only). */
-  private def sqlLloydCtes(seedWhere: String, rounds: Int, finalAssign: Boolean): Seq[String] = {
-    def assign(name: String, seed: String, keepCv: Boolean): String =
-      s"""$name AS MATERIALIZED (SELECT vec_id${if (keepCv) ", cv" else ""}, cell FROM (
-         |  SELECT c.vec_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM kcorp c CROSS JOIN $seed k) WHERE rk = 1)""".stripMargin
-    def round(k: Int): Seq[String] = Seq(
-      s"""kd$k AS MATERIALIZED (SELECT cell, i,
-         |    sum(CAST(floor(CAST(cv[i] AS DOUBLE) * 1048576.0) AS BIGINT)) AS s,
-         |    count(*) AS n
-         |  FROM ka${k - 1} CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) t
-         |  GROUP BY cell, i)""".stripMargin,
-      s"""kcent$k AS MATERIALIZED (SELECT cell,
-         |    list(CAST(s AS DOUBLE) / 1048576.0 / CAST(n AS DOUBLE) ORDER BY i) AS kv
-         |  FROM kd$k GROUP BY cell)""".stripMargin) ++
-      (if (k < rounds || finalAssign)
-        Seq(assign(s"ka$k", s"kcent$k", keepCv = k < rounds))
-      else Seq.empty)
-    Seq(
-      s"kinit AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE $seedWhere)",
-      "kcorp AS (SELECT vec_id, embedding AS cv FROM embeddings)",
-      assign("ka0", "kinit", keepCv = true)) ++
-      (1 to rounds).flatMap(round)
-  }
-
-  /** km2's oracle — the km1 replay unrolled three rounds: per round an
-    * assignment level (argmin with the total tie-break), a fixed-point
-    * dims level, and a centroid level; the census reads the final
-    * assignment and kcent3.
-    */
-  private def sqlTrainKMeans: String =
-    sqlLloydCtes("vec_id < 4", rounds = 3, finalAssign = true)
-      .mkString("WITH ", ",\n", "\n") +
-      s"""SELECT ka3.cell, count(*) AS n_members,
-         |  CAST(floor(k.kv[1] * 1048576) AS BIGINT) AS c1_fp,
-         |  CAST(floor(k.kv[2] * 1048576) AS BIGINT) AS c2_fp
-         |FROM ka3 JOIN kcent3 k ON k.cell = ka3.cell
-         |GROUP BY ka3.cell, k.kv[1], k.kv[2] ORDER BY ka3.cell""".stripMargin
-
-  /** e3f's oracle — the 2-round Lloyd unroll feeding e3c's IVF chain
-    * verbatim (assignment, probes, cosine scoring, top-k), with
-    * `kcent2` where e3c reads its caller-provided centroid table. */
-  private def sqlIvfTrained: String =
-    (sqlLloydCtes("vec_id < 8", rounds = 2, finalAssign = false) ++ Seq(
-      s"""casg AS (SELECT neighbor_id, cv, cell FROM (
-         |  SELECT c.vec_id AS neighbor_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM kcorp c CROSS JOIN kcent2 k) WHERE rk = 1)""".stripMargin,
-      "q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10)",
-      s"""probes AS (SELECT query_id, qv, cell FROM (
-         |  SELECT q.query_id, q.qv, k.cell,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${sqlL2("q.qv", "k.kv")} ASC, k.cell ASC) AS prank
-         |  FROM q CROSS JOIN kcent2 k) WHERE prank <= 3)""".stripMargin,
-      s"""scored AS (SELECT p.query_id, c.neighbor_id,
-         |  ${sqlDot("p.qv", "c.cv")} / (sqrt(${sqlDot("p.qv", "p.qv")}) * sqrt(${sqlDot("c.cv", "c.cv")})) AS raw
-         |  FROM probes p JOIN casg c ON p.cell = c.cell AND p.query_id <> c.neighbor_id)""".stripMargin))
-      .mkString("WITH ", ",\n", "\n") +
-      """SELECT query_id, neighbor_id, round(raw, 6) AS score, rank FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id) AS INTEGER) AS rank
-        |  FROM scored) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** KM3 — DETERMINISTIC k-means seeding (farthest-first traversal) +
-    * one Lloyd round: the engine-owned replacement for km1's "first k
-    * ids" seed — seed 0 the minimum-id vector, each further seed the
-    * corpus argmax of min-distance-to-chosen (ties by id), then the km1
-    * round and census from those seeds. The oracle unrolls the ENTIRE
-    * selection trajectory (three argmax levels over staged least()
-    * chains — a wrong pick anywhere reseats a seed and shifts every
-    * downstream row) before replaying the round.
-    */
-  private def km3(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val seeds = Similarity.seedKMeansFarthest(emb, k = 4)
-    // one round through trainKMeans' collect-and-reseed (bitwise the
-    // lloydRound chain, spec-proven) so the final assignment broadcasts
-    // a statically row-bounded LOCAL relation — km3 needs no audit
-    // allowlist entry, unlike km1's grouped-aggregate broadcast
-    val (cent1, _) = Similarity.trainKMeans(emb, seeds.select("cell", "centroid"),
-      maxRounds = 1)
-    Similarity.assignCells(emb, cent1)
-      .groupBy("cell").agg(count(lit(1)).as("n_members"))
-      .join(cent1.select(col("cell"),
-        floor(element_at(col("centroid"), 1) * lit(1048576L)).cast("long").as("c1_fp"),
-        floor(element_at(col("centroid"), 2) * lit(1048576L)).cast("long").as("c2_fp")),
-        Seq("cell"))
-      .join(seeds.select("cell", "seed_id"), Seq("cell"))
-      .select("cell", "seed_id", "n_members", "c1_fp", "c2_fp")
-      .orderBy("cell")
-  }
-
-  /** km3's oracle — the farthest-first unroll (selection argmax per
-    * level, least() over the chosen set in selection order — the
-    * engine's left-assoc reduce) feeding the km1 round replay. */
-  private def sqlKmppSeeded: String = {
-    def sel(i: Int): String = {
-      val dists = (0 until i).map(j => sqlL2("c.cv", s"s$j.kv"))
-      val dmin = if (dists.length == 1) dists.head
-        else s"least(${dists.mkString(", ")})"
-      val froms = (0 until i).map(j => s"s$j").mkString(", ")
-      s"""s$i AS MATERIALIZED (SELECT vec_id, cv AS kv FROM (
-         |  SELECT c.vec_id, c.cv,
-         |    row_number() OVER (ORDER BY $dmin DESC, c.vec_id ASC) AS rk
-         |  FROM corpd c, $froms) WHERE rk = 1)""".stripMargin
-    }
-    val seedCtes = Seq(
-      "corpd AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings)",
-      "s0 AS MATERIALIZED (SELECT vec_id, cv AS kv FROM corpd ORDER BY vec_id LIMIT 1)") ++
-      (1 until 4).map(sel)
-    val roundCtes = Seq(
-      "cent0 AS (" + (0 until 4).map(i =>
-        s"SELECT $i AS cell, vec_id AS seed_id, kv FROM s$i").mkString(" UNION ALL ") + ")",
-      "corp AS (SELECT vec_id, embedding AS cv FROM embeddings)",
-      s"""a0 AS MATERIALIZED (SELECT vec_id, cv, cell FROM (
-         |  SELECT c.vec_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN cent0 k) WHERE rk = 1)""".stripMargin,
-      s"""dims AS MATERIALIZED (SELECT cell, i,
-         |    sum(CAST(floor(CAST(cv[i] AS DOUBLE) * 1048576.0) AS BIGINT)) AS s,
-         |    count(*) AS n
-         |  FROM a0 CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) t
-         |  GROUP BY cell, i)""".stripMargin,
-      s"""cent1 AS MATERIALIZED (SELECT cell,
-         |    list(CAST(s AS DOUBLE) / 1048576.0 / CAST(n AS DOUBLE) ORDER BY i) AS kv
-         |  FROM dims GROUP BY cell)""".stripMargin,
-      s"""a1 AS (SELECT vec_id, cell FROM (
-         |  SELECT c.vec_id, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN cent1 k) WHERE rk = 1)""".stripMargin)
-    (seedCtes ++ roundCtes).mkString("WITH ", ",\n", "\n") +
-      s"""SELECT a1.cell, s.seed_id, count(*) AS n_members,
-         |  CAST(floor(k.kv[1] * 1048576) AS BIGINT) AS c1_fp,
-         |  CAST(floor(k.kv[2] * 1048576) AS BIGINT) AS c2_fp
-         |FROM a1 JOIN cent1 k ON k.cell = a1.cell JOIN cent0 s ON s.cell = a1.cell
-         |GROUP BY a1.cell, s.seed_id, k.kv[1], k.kv[2] ORDER BY a1.cell""".stripMargin
-  }
-
-  /** HN1 — HARD-NEGATIVE MINING (the contrastive-training consumer of
-    * the ANN stack): per probe vector the most-similar different-label
-    * corpus vector beside the most-similar same-label one and the
-    * margin, searched through e3f's trained-IVF probe shape (engine-
-    * trained centroids, broadcast argmin assignment, per-query probe
-    * pruning) — what a production embedding-training pipeline runs to
-    * build triplets. The oracle reuses sqlIvfTrained's scored CTE chain
-    * and splits the argmax by label class.
-    */
-  private def hn1(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val seed = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val (cent, _) = Similarity.trainKMeans(emb, seed, maxRounds = 2)
-    Similarity.hardNegatives(
-        emb.filter(col("vec_id") < 10), emb, cent, nProbe = 3)
-      .orderBy("query_id")
-  }
-
-  /** hn1's oracle — sqlIvfTrained's Lloyd-unroll + probe + scoring chain
-    * verbatim up to `scored`, then the per-(query, label-class) argmax
-    * and the neg×pos pivot. */
-  private def sqlHardNegatives: String = {
-    val ivf = sqlIvfTrained
-    val upToFinal = ivf.substring(0, ivf.indexOf("SELECT query_id, neighbor_id, round(raw, 6)"))
-    upToFinal.stripLineEnd + ",\n" +
-      """lab AS (SELECT vec_id, label FROM embeddings),
-        |sl AS MATERIALIZED (SELECT s.query_id, s.neighbor_id, s.raw,
-        |  (ln.label <> lq.label) AS isneg
-        |  FROM scored s JOIN lab lq ON lq.vec_id = s.query_id
-        |    JOIN lab ln ON ln.vec_id = s.neighbor_id),
-        |best AS MATERIALIZED (SELECT * FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id, isneg
-        |    ORDER BY raw DESC, neighbor_id) AS rn FROM sl) WHERE rn = 1)
-        |SELECT n.query_id, n.neighbor_id AS hard_neg_id, round(n.raw, 6) AS neg_score,
-        |  p.neighbor_id AS pos_id, round(p.raw, 6) AS pos_score,
-        |  round(p.raw - n.raw, 6) AS margin
-        |FROM best n JOIN best p ON n.query_id = p.query_id AND n.isneg AND NOT p.isneg
-        |ORDER BY n.query_id""".stripMargin
-  }
-
-  /** E3F — the clustering story END-TO-END (the r15 verdict's km2 ask,
-    * one step further than documentation): IVF search whose quantizer
-    * is the engine's OWN [[Similarity.trainKMeans]] output (2 rounds
-    * from the 8-seed) rather than caller-provided centroids — train
-    * here, quantize there, every step engine-deterministic. The oracle
-    * unrolls the training trajectory and feeds it into e3c's IVF chain
-    * verbatim.
-    */
-  private def e3f(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val seed = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    val (cent, _) = Similarity.trainKMeans(emb, seed, maxRounds = 2)
-    Similarity.ivfTopKWithCentroids(
-        emb.filter(col("vec_id") < 10), emb, cent, k = 5, nProbe = 3)
-      .withColumn("score", round(col("score"), 6))
-      .orderBy("query_id", "rank")
-  }
-
-  private def e8(s: SparkSession, d: String) =
-    Dedup.embeddingNearDupPairs(Tables.embeddings(s, d), threshold = 0.35, bits = 0)
-      .withColumn("cos", round(col("cos"), 6))
-      .orderBy("a", "b")
-
-  /** e8b — BANDED RHP-LSH near-dup pairs, the corpus-scale embedding
-    * path (r12): e8's `bits = 0` exact join is O(N²) by contract
-    * (probe: 55× at 10× vectors); 4 independent 8-plane tables give a
-    * deterministic candidate contract (shares ≥1 whole band) the oracle
-    * recomputes plane-by-plane — every ±1 normal component interpolated
-    * from the SAME md5 parity, projections as identical left-assoc
-    * chains, so candidates AND verified cosines hash-match exactly.
-    */
-  private def e8b(s: SparkSession, d: String) =
-    Dedup.embeddingNearDupPairsBanded(Tables.embeddings(s, d), threshold = 0.35)
-      .withColumn("cos", round(col("cos"), 6))
-      .orderBy("a", "b")
-
-  /** E16 — SemDeDup semantic dedup census: quantize onto 16 deterministic
-    * cells (vec_id < 16 as centroids — the e3c bring-your-own-quantizer
-    * contract), pair WITHIN cells at cos ≥ 0.35, drop the more-typical
-    * member of each pair (keep the most atypical — the paper's diversity
-    * rule). Per-cell census fingerprints membership, drop set, and the
-    * Σfloor(c_sim·2^20) of every member — cosine chains identical in both
-    * engines, so the floors match bit-for-bit.
-    */
-  private def e16(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val centroids = emb.filter(col("vec_id") < 16)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    Dedup.semanticDedup(emb, centroids, threshold = 0.35)
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n_members"),
-        sum(when(col("dropped"), lit(1L)).otherwise(lit(0L))).as("n_dropped"),
-        sum(when(col("dropped"), col("vec_id"))).as("dropped_fp"),
-        sum(floor(col("c_sim") * lit(1048576L)).cast("long")).as("csim_fp"))
-      .orderBy("cell")
-  }
-
-  /** E16b — SemDeDup at GROWN cell count (the r13 mandate twin): e16's
-    * chain with cells = ⌊√N⌋ — the paper's rule, so per-cell membership
-    * (and the within-cell quadratic step) stays FLAT as the corpus
-    * grows instead of riding e16's fixed-16-cell contract. The count is
-    * one driver-side scalar (the adjudicated class); √ then ⌊⌋ is the
-    * identical correctly-rounded chain in both engines. Census output
-    * and oracle identical to e16 modulo the centroid set.
-    */
-  private def e16b(s: SparkSession, d: String) = {
-    val emb = Tables.embeddings(s, d)
-    val cells = math.floor(math.sqrt(emb.count().toDouble)).toLong
-    val centroids = emb.filter(col("vec_id") < cells)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    Dedup.semanticDedup(emb, centroids, threshold = 0.35)
-      .groupBy("cell")
-      .agg(count(lit(1)).as("n_members"),
-        sum(when(col("dropped"), lit(1L)).otherwise(lit(0L))).as("n_dropped"),
-        sum(when(col("dropped"), col("vec_id"))).as("dropped_fp"),
-        sum(floor(col("c_sim") * lit(1048576L)).cast("long")).as("csim_fp"))
-      .orderBy("cell")
-  }
-
-  /** DSIR1 — importance resampling toward an in-corpus target (lang='en'):
-    * unigram log-ratio weights, Gumbel top-25. The oracle replays the
-    * whole chain — grouped counts, smoothed ratio fixed-points, the
-    * md5-derived Gumbel — and must pick the identical 25 documents with
-    * identical integer keys.
-    */
-  private def dsir1(s: SparkSession, d: String) =
-    Curation.dsirResample(Tables.documents(s, d), col("lang") === "en", k = 25)
-      .select("doc_id", "n_tok", "w_fp", "key_fp")
-      .orderBy("doc_id")
-
-  /** Staged projections: token array bound once, then counts, then the
-    * derived ratios — inlined forms would re-tokenize per output column.
-    */
-  private def e4(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("_toks"))
-      .select(col("doc_id"), col("text"),
-        size(col("_toks")).cast("long").as("n_tokens"),
-        TextOps.stopwordHits(col("_toks"), TextOps.AllStopwords).cast("double").as("_hits"))
-      .select(col("doc_id"), col("n_tokens"),
-        TextOps.bpeishCount(col("text")).cast("long").as("n_bpeish"),
-        round((length(col("text")) - (col("n_tokens") - 1)).cast("double") / col("n_tokens"), 6)
-          .as("mean_tok_len"),
-        (col("_hits") / col("n_tokens")).as("_ratio"))
-      .select(col("doc_id"), col("n_tokens"), col("n_bpeish"), col("mean_tok_len"),
-        round(col("_ratio"), 6).as("stop_ratio"),
-        round(least(col("n_tokens") / lit(100.0), lit(1.0)) * lit(0.5) +
-          least(col("_ratio") * lit(4.0), lit(1.0)) * lit(0.5), 6).as("quality"))
-      .orderBy("doc_id")
-
-  private def e5(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"), TextOps.tokens(col("text")).as("_toks"))
-      .select(col("doc_id"), TextOps.langGuessFromTokens(col("_toks")).as("lang_guess"),
-        col("lang").as("lang_true"))
-      .withColumn("hit", col("lang_guess") === col("lang_true"))
-      .orderBy("doc_id")
-
-  private def e6(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"), TextOps.tokenHashes16(col("text")).as("_hs"))
-      .select(col("doc_id"), TextOps.simhash16FromHashes(col("_hs")).as("simhash"))
-      .orderBy("doc_id")
-
-  /** M5-M7 — segmentation + polygonize demo over a deterministic synthetic
-    * checkerboard (no SQL analog → rows-only driver check; kernel
-    * correctness is covered by SegmentationSpec). 64×64 px, 4 tiles with
-    * halo, 16 blocks → 16 segments of 256 cells each.
-    */
-  private def m5(s: SparkSession, d: String) = {
-    val grid = s.range(0, 64L * 64)
-      .select((col("id") / 64).cast("int").as("px_row"), (col("id") % 64).cast("int").as("px_col"))
-      .withColumn("B1",
-        when((floor(col("px_row") / 16) + floor(col("px_col") / 16)) % 2 === 0, lit(0.0f))
-          .otherwise(lit(100.0f)))
-    val segs = operators.Segmentation.segmentTiles(
-      grid, Seq("B1"), tileH = 32, tileW = 32, pad = 4,
-      scale = 10.0, minSize = 2, sigma = 0.0)
-    operators.Segmentation.polygonize(segs.select("px_row", "px_col", "seg_id"))
-      .groupBy("seg_id")
-      .agg(sum("n_cells").as("n_cells"), count(lit(1)).as("n_parts"))
-      .orderBy("seg_id")
-  }
-
-  /** M5b — felzenszwalb on an ANALYTIC fixture, FULLY oracled (upgrades
-    * M5's rows-only check): on the checkerboard the inter-block contrast
-    * (100) dwarfs the merge threshold (scale 10) while intra-block edges
-    * weigh 0, so the segmentation is EXACTLY the connected components of
-    * equal-value cells — which DuckDB derives independently with a
-    * recursive-CTE flood fill over the 4-adjacency graph. Segment labels
-    * are arbitrary on both sides, so each segment is re-keyed by its
-    * minimum linear cell index and the (comp, n_cells) census is
-    * hash-compared. Any defect in the tile split, halo handling, edge
-    * weights, union-find, or cross-tile merge changes some component's
-    * census and breaks the hash.
-    */
-  private def m5b(s: SparkSession, d: String) = {
-    // every 16×16 block gets a DISTINCT value (block index × 100): under
-    // felzenszwalb's 8-connectivity no equal-value blocks touch, adjacent
-    // blocks contrast by ≥ 100 ≫ scale=10, intra-block edges weigh 0 —
-    // segmentation = equal-value connected components, closed form
-    val grid = s.range(0, 64L * 64)
-      .select((col("id") / 64).cast("int").as("px_row"), (col("id") % 64).cast("int").as("px_col"))
-      .withColumn("B1",
-        ((floor(col("px_row") / 16) * 4 + floor(col("px_col") / 16)) * 100).cast("float"))
-    val segs = operators.Segmentation.segmentTiles(
-      grid, Seq("B1"), tileH = 32, tileW = 32, pad = 4,
-      scale = 10.0, minSize = 2, sigma = 0.0)
-    segs
-      .withColumn("lin", (col("px_row").cast("long") * 64 + col("px_col")))
-      .groupBy("seg_id")
-      .agg(min(col("lin")).as("comp"), count(lit(1)).as("n_cells"))
-      .select("comp", "n_cells")
-      .orderBy("comp")
-  }
-
-  /** Stage-0 pipeline — feature stack over a deterministic synthetic scene
-    * table (3 scenes × 32×32 px): normalize → indices → monthly median +
-    * winter argmax composites → band-concat (rows-only driver check;
-    * StagesSpec holds the golden e2e).
-    */
-  private def pipe0(s: SparkSession, d: String) = {
-    val scenes = s.range(0, 3L * 32 * 32).select(
-      (col("id") / (32 * 32) + 1).cast("long").as("scene_id"),
-      when(col("id") / (32 * 32) < 2, lit(6)).otherwise(lit(12)).as("month"),
-      ((col("id") % (32 * 32)) / 32).cast("int").as("px_row"),
-      (col("id") % 32).cast("int").as("px_col"))
-      .withColumn("B4", lit(30.0f))
-      .withColumn("B6", when(col("px_col") < 16, lit(10.0f)).otherwise(lit(50.0f)))
-      .withColumn("B8",
-        when(col("px_row") === 0 && col("px_col") === 0 && col("scene_id") === 2, lit(-9999.0f))
-          .otherwise(when(col("px_col") < 16, lit(100.0f) + col("scene_id")).otherwise(lit(10.0f) + col("scene_id"))))
-      .withColumn("udm2_clear", !(col("px_row") === 31 && col("px_col") === 31 && col("scene_id") === 1))
-    pipeline.Stages
-      .featureStack(scenes, Seq("B4", "B6", "B8"), monthlyMonths = Seq(6), winterMonths = Seq(12))
-      .select(col("px_row"), col("px_col"),
-        round(col("ndvi_m6"), 6).as("ndvi_m6"), col("win_B8"))
-      .orderBy("px_row", "px_col")
-  }
-
-  /** PIPE4 — the reference's stage 0 end to end FROM THE REAL CONTAINERS:
-    * three scenes as 3-band LZW BigTIFFs (chunky and planar layouts both
-    * exercised) plus per-scene single-band UDM2 mask TIFFs, ingested via
-    * `tiffToBandBlocks`/`tiffToBlocks` → pixel rows → band pivot → mask
-    * sidecar join → the SAME `Stages.featureStack` as pipe0. The oracle is
-    * pipe0's closed form — the TIFF containers, both planar layouts, LZW,
-    * and the mask join must all be invisible in the output hash.
-    */
-  /** BL1 — cross-document LINE dedup (the RefinedWeb/C4 boilerplate
-    * pass): lines whose normalized text appears in ≥3 distinct documents
-    * are stripped from every document, survivors re-join in order. The
-    * fixture derives lines by splitting the corpus text on a frequent
-    * token, so genuinely-shared lines exist; oracle recomputes the df
-    * census with count(DISTINCT) and string_agg, so the engine's
-    * no-distinct-expand window spelling must be exactly equivalent.
-    */
-  private def bl1(s: SparkSession, d: String) = {
-    val lined = Tables.documents(s, d)
-      .select(col("doc_id"), expr("replace(text, ' the ', char(10))").as("text"))
-    operators.Curation.stripBoilerplateLines(lined, minDocFreq = 3)
-      .orderBy("doc_id")
-  }
-
-  /** PIPE5 — the MULTIMODAL surface composed in ONE plan: six real
-    * containers (palette PNG, baseline JPEG, animated-GIF frame, BMP,
-    * PCM WAV, float32 GeoTIFF) each decoded by its own codec, reduced to
-    * per-kind sample censuses, and unioned — the "mixed media lake"
-    * census a training-data pipeline runs before deciding what to keep.
-    * Every codec's closed form re-aggregates in the oracle, so a defect
-    * in ANY of the six decoders breaks the hash.
-    */
-  private def pipe5(s: SparkSession, d: String) = {
-    import s.implicits._
-    def census(kind: String, df: DataFrame) =
-      df.agg(count(lit(1)).as("n"), sum(col("value").cast("long")).as("sum_v"),
-          min(col("value").cast("int")).as("min_v"), max(col("value").cast("int")).as("max_v"))
-        .select(lit(kind).as("kind"), col("n"), col("sum_v"), col("min_v"), col("max_v"))
-    val png = operators.MultimodalOps.synthPngPalette(12, 9,
-      (0 until 7).map(i => ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)), r => r % 5)(
-      (r, c) => (r * 5 + c * 3) % 7)
-    val jpg = operators.Jpeg.synthJpeg(20, 12, 1, Seq(Array.fill(64)(16)), restartInterval = 2) {
-      (_, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = ((by * 3 + bx) * 7) % 40 - 20
-        nat
-    }
-    val gif = operators.Gif.synthGif(14, 10,
-      (0 until 6).map(i => ((i * 41) % 256, (i * 73) % 256, (i * 97) % 256)),
-      Seq(operators.Gif.FrameSpec(0, 0, 14, 10)((r, c) => (r * 7 + c * 3) % 6)))
-    val bmp = operators.MultimodalOps.synthBmp(9, 6, 3)(
-      (r, c, ch) => (r * 37 + c * 11 + ch * 71 + 3) % 256)
-    val wav = operators.MultimodalOps.synthWavPcm(44100, 2, 16, 30)(
-      (f, ch) => ((f * 773 + ch * 331) % 65536) - 32768)
-    val tif = operators.Tiff.synthTiff(16, 8, 16, 8, littleEndian = true, tile = true)(
-      (r, c) => ((r * 13 + c) % 97).toFloat)
-    val tifPx = operators.RasterBridge.explodeBlocks(
-      operators.Tiff.tiffToBlocks(Seq((1L, tif)).toDF("scene_id", "bytes")),
-      blockH = 8, blockW = 16, nodata = -9999.0f)
-      .select(col("value").cast("int").as("value"))
-    // r10: the REJECTS census — a mixed crawl bag (2 decodable files + 6
-    // unsupported/corrupt ones) through `mediaCensusWithRejects`, so the
-    // same plan reports skip counts per container format instead of
-    // relying on exceptions (the 100 TB operability contract). sum_v for
-    // a bag row is the count of decoded values (0 for rejects — kept
-    // NULL-free so the census stays integer-typed cross-engine).
-    val webp = "RIFF".getBytes("US-ASCII") ++ Array[Byte](20, 0, 0, 0) ++
-      "WEBPVP8 ".getBytes("US-ASCII") ++ Array.fill[Byte](12)(7)
-    val gifT = operators.Gif.synthGif(6, 4, // truncated stream (interlace
-      (0 until 4).map(i => (i * 50, i * 60, i * 70)), // decodes since r10)
-      Seq(operators.Gif.FrameSpec(0, 0, 6, 4)((r, c) => (r + c) % 4)))
-      .dropRight(10)
-    val bmpRle = operators.MultimodalOps.synthBmp(5, 4, 3)((r, c, ch) => r + c + ch)
-    bmpRle(30) = 1 // BI_RLE8
-    // r10b: a DECODABLE lossless WebP rides next to the lossy reject —
-    // the census reports both ('z_webp_ok' and 'z_webp_rej')
-    val webpOk = operators.Webp.synthWebpLossless(6, 4, (r, c) =>
-      (((r * 11 + c * 7 + 5) % 256) << 24) | (((r * 31 + c) % 256) << 16) |
-        (((r + c * 13) % 256) << 8) | ((r * 3 + c * 17) % 256))
-    // r12: crawl-audio staples recognized BY NAME — an ID3v2-tagged MP3
-    // and a fLaC stream reject countably ("1 mp3 skipped") instead of
-    // sinking into the unknown bucket (VERDICT r11 missing-4)
-    val mp3 = "ID3".getBytes("US-ASCII") ++
-      Array[Byte](3, 0, 0, 0, 0, 0, 10) ++ Array.fill[Byte](10)(0)
-    val flac = "fLaC".getBytes("US-ASCII") ++ Array.fill[Byte](8)(0)
-    // r13: APNG recognized BY NAME (acTL chunk before the first IDAT) —
-    // the environment ships no reference encoder to conform a decoder
-    // against (no PIL/ffmpeg/magick; the JDK cannot write APNG), so per
-    // the conformance law it rejects countably like mp3/flac (decision
-    // note in NOTES_BUILDER r13). The fixture is a valid PNG stream with
-    // a correctly-CRC'd acTL spliced after IHDR (signature+IHDR = 33 B).
-    val apng = {
-      val base = operators.MultimodalOps.synthPng(6, 4, 1, _ => 0)(
-        (r, c, _) => (r * 7 + c) % 256)
-      val data = Array[Byte](0, 0, 0, 1, 0, 0, 0, 0) // 1 frame, loop forever
-      val crc = new java.util.zip.CRC32()
-      crc.update("acTL".getBytes("US-ASCII")); crc.update(data)
-      val v = crc.getValue
-      base.take(33) ++ Array[Byte](0, 0, 0, 8) ++
-        "acTL".getBytes("US-ASCII") ++ data ++
-        Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte) ++
-        base.drop(33)
-    }
-    val bag = Seq((1L, png), (2L, webp), (3L, gifT), (4L, bmpRle),
-      (5L, wav), (6L, Array[Byte](1, 2, 3, 4, 5)), (7L, webpOk),
-      (8L, mp3), (9L, flac), (10L, apng))
-      .toDF("media_id", "bytes")
-    val bagRows = operators.MultimodalOps.mediaCensusWithRejects(bag)
-      .groupBy(col("format"), col("ok"))
-      .agg(count(lit(1)).as("n"),
-        sum(coalesce(col("n_values"), lit(0L))).as("sum_v"))
-      .select(concat(lit("z_"), col("format"),
-          when(col("ok"), lit("_ok")).otherwise(lit("_rej"))).as("kind"),
-        col("n"), col("sum_v"),
-        lit(0).as("min_v"), lit(0).as("max_v"))
-    census("bmp", operators.MultimodalOps.bmpToPixels(Seq((1L, bmp)).toDF("img_id", "bytes")))
-      .unionAll(census("gif", operators.Gif.gifToFrames(Seq((1L, gif)).toDF("media_id", "bytes"))))
-      .unionAll(census("jpeg", operators.Jpeg.jpegToPixels(Seq((1L, jpg)).toDF("img_id", "bytes"))))
-      .unionAll(census("png", operators.MultimodalOps.pngToPixels(Seq((1L, png)).toDF("img_id", "bytes"))))
-      .unionAll(census("tiff", tifPx))
-      .unionAll(census("wav", operators.MultimodalOps.wavToSamples(Seq((1L, wav)).toDF("media_id", "bytes"))))
-      .unionAll(bagRows)
-      .orderBy("kind")
-  }
-
-  private def pipe4(s: SparkSession, d: String) = {
-    import s.implicits._
-    def bandVal(scene: Int, b: Int, r: Int, c: Int): Float = b match {
-      case 0 => 30.0f
-      case 1 => if (c < 16) 10.0f else 50.0f
-      case _ =>
-        if (r == 0 && c == 0 && scene == 2) -9999.0f
-        else if (c < 16) 100.0f + scene else 10.0f + scene
-    }
-    val media = (1 to 3).map { scene =>
-      val bands = operators.Tiff.synthMultibandTiff(
-        32, 32, 16, 16, littleEndian = true, tile = true,
-        bands = 3, planarConfig = if (scene % 2 == 1) 1 else 2,
-        lzw = true, bigTiff = true)((b, r, c) => bandVal(scene, b, r, c))
-      val mask = operators.Tiff.synthTiff(
-        32, 32, 16, 16, littleEndian = true, tile = true)(
-        (r, c) => if (r == 31 && c == 31 && scene == 1) 0.0f else 1.0f)
-      (scene.toLong, if (scene <= 2) 6 else 12, bands, mask)
-    }.toDF("scene_id", "month", "band_bytes", "mask_bytes")
-    val px = operators.RasterBridge.explodeBlocks(
-        operators.Tiff.tiffToBandBlocks(
-          media.select($"scene_id", $"month", $"band_bytes".as("bytes"))),
-        blockH = 16, blockW = 16, nodata = -10000.0f, dropNodata = false)
-      .groupBy("scene_id", "month", "px_row", "px_col")
-      .agg(
-        max(when(col("band") === 0, col("value"))).as("B4"),
-        max(when(col("band") === 1, col("value"))).as("B6"),
-        max(when(col("band") === 2, col("value"))).as("B8"))
-    val clear = operators.RasterBridge.explodeBlocks(
-        operators.Tiff.tiffToBlocks(
-          media.select($"scene_id", $"mask_bytes".as("bytes"))),
-        blockH = 16, blockW = 16, nodata = -10000.0f, dropNodata = false)
-      .select(col("scene_id"), col("px_row"), col("px_col"),
-        (col("value") === 1.0f).as("udm2_clear"))
-    val scenes = px.join(clear, Seq("scene_id", "px_row", "px_col"))
-    pipeline.Stages
-      .featureStack(scenes, Seq("B4", "B6", "B8"), monthlyMonths = Seq(6), winterMonths = Seq(12))
-      .select(col("px_row"), col("px_col"),
-        round(col("ndvi_m6"), 6).as("ndvi_m6"), col("win_B8"))
-      .orderBy("px_row", "px_col")
-  }
-
-  /** M1/M2 — RF train + batch inference over lineitem-derived labels
-    * (no SQL analog → rows-only driver check; MlOpsSpec covers semantics).
-    * Deterministic: seeded RF, arithmetic train/apply split.
-    */
-  /** Seeded RF models memoized per (session, sfDir) — the inc1 pattern:
-    * the reference's stage 1 LOADS trained models and classifies
-    * (pixel_classifier_stream.py); training happens once upstream. First
-    * run exercises the fit (M2), repeat runs measure what recurs at
-    * scale: inference (M1). Seeded + arithmetic split → the model, and
-    * therefore the output, is identical either way.
-    */
-  private val rfModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.ml.PipelineModel]()
-
-  private def m1(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val feats = Seq("l_quantity", "l_discount", "l_tax")
-    // Train on a deterministic 2% arithmetic sample: RF fit cost in Spark ML
-    // scales with levels × trees × rows, and a label derivable from 3 simple
-    // features saturates well below the full table — the 100 TB pattern is
-    // likewise "sample for fit, score everything".
-    // Compact the sample before the iterative fit: RF training runs one
-    // job per tree level, and each job schedules every partition of the
-    // instance RDD — a 2% sample inheriting the full scan's partitioning
-    // pays ~maxDepth × nPartitions empty-task overhead. Four partitions
-    // keep the 12k-row sample parallel enough at this SF; at 100 TB the
-    // same "sample → compact → fit" shape holds with a larger constant.
-    val model = rfModelCache.computeIfAbsent(d, _ => {
-      val train = li.filter(col("l_orderkey") % 50 === 0)
-        .withColumn("label", when(col("l_returnflag") === "R", 1).otherwise(0))
-        .repartition(4)
-      MlOps.trainRf(train, feats, "label", numTrees = 16, maxDepth = 6)
-    })
-    MlOps.classify(model, li)
-      .groupBy("pred_label")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("pred_label")
-  }
-
-  /** M1b — frozen-forest inference, FULLY oracled (upgrades M1's rows-only
-    * check): the seeded RF is frozen to a table of leaf decision rules
-    * (feature boxes + fixed-point class-1 probability, `MlOps.forestRules`)
-    * and written as a parquet artifact; BOTH engines then replay inference
-    * from that frozen table — Spark as a driver-built when-chain projection
-    * (map-only, no shuffle), DuckDB by joining rows to their one matching
-    * leaf per tree — and hash-compare the per-class census. Integer
-    * fixed-point votes make the replay bit-identical. This is the
-    * reference's load-frozen-model-then-classify shape
-    * (pixel_classifier_stream.py:144-151) with the model itself made
-    * engine-neutral. m1 stays the Spark-ML-native path.
-    */
-  private def m1b(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val feats = Seq("l_quantity", "l_discount", "l_tax")
-    val model = rfModelCache.computeIfAbsent(d, _ => {
-      val train = li.filter(col("l_orderkey") % 50 === 0)
-        .withColumn("label", when(col("l_returnflag") === "R", 1).otherwise(0))
-        .repartition(4)
-      MlOps.trainRf(train, feats, "label", numTrees = 16, maxDepth = 6)
-    })
-    MlOps.forestRules(model, feats)
-      .write.mode("overwrite").parquet("/tmp/graft_m1b_rules")
-    val rules = s.read.parquet("/tmp/graft_m1b_rules")
-    MlOps.classifyFromRules(rules, li, feats)
-      .groupBy("pred_label")
-      .agg(count(lit(1)).as("n"))
-      .orderBy("pred_label")
-  }
-
-  private def st1(s: SparkSession, d: String) =
-    Tables.events(s, d)
-      .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
-      .orderBy("hour_start", "event_type")
-
-  /** W11 — Spark's NATIVE session_window (batch form): the built-in
-    * gap-merge session operator next to st3's custom flatMapGroupsWithState
-    * sessionizer — one keyed aggregation, sessions = maximal event chains
-    * with < 10-minute gaps. The oracle rebuilds sessions with the
-    * lag-break + running-sum spelling.
-    */
-  private def w11(s: SparkSession, d: String) =
-    Tables.events(s, d)
-      .groupBy(col("user_id"), session_window(col("ts"), "10 minutes"))
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
-      .select(col("user_id"), col("session_window.start").as("sess_start"),
-        col("n"), col("sum_val"))
-      .orderBy("user_id", "sess_start")
-
-  private def mm1(s: SparkSession, d: String) =
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        octet_length(col("text")).cast("long").as("n_bytes"),
-        md5(col("text")).as("content_md5"))
-      .orderBy("doc_id")
-
-  /** MM2 — multimodal decode plumbing over binary payloads: documents.text
-    * as bytes → partition-mapped stub decode → typed metadata + frame
-    * sampling. The stub's md5 derivation is SQL-expressible, so the oracle
-    * verifies the whole distributed path, not just row counts.
-    */
-  private def mm2(s: SparkSession, d: String) = {
-    val media = Tables.documents(s, d)
-      .select(col("doc_id").as("media_id"), col("text").cast("binary").as("bytes"),
-        lit("img").as("format"))
-    val decoded = operators.MultimodalOps.withDecodedMeta(media)
-    val frames = operators.MultimodalOps.sampleFrames(decoded, stride = 4)
-      .groupBy("media_id").agg(count(lit(1)).as("n_sampled"))
-    decoded
-      .select(col("media_id"), col("meta.width").as("width"),
-        col("meta.height").as("height"), col("meta.channels").as("channels"),
-        col("meta.n_frames").as("n_frames"))
-      .join(frames, Seq("media_id"))
-      .orderBy("media_id")
-  }
-
-  /** MM3 — REAL format decode: synthesize valid PNG (RGBA) / BMP (24-bit)
-    * header bytes from integer-derived dims, parse them back with the
-    * actual header parsers (big-endian IHDR, little-endian DIB — no stub
-    * on this path), and hash-check the recovered dims/channels/format
-    * against the closed-form oracle.
-    */
-  private def mm3(s: SparkSession, d: String) = {
-    import s.implicits._
-    val media = s.range(500).map { id =>
-      val w = 16 + (id % 100).toInt
-      val h = 16 + (id * 7 % 100).toInt
-      val bytes =
-        if (id % 2 == 0) operators.MultimodalOps.synthPngHeader(w, h, alpha = true)
-        else operators.MultimodalOps.synthBmpHeader(w, h, bpp = 24)
-      (id, "raw", bytes)
-    }.toDF("media_id", "format", "bytes")
-    operators.MultimodalOps.withDecodedMeta(media)
-      .select(col("media_id"), col("meta.width").as("width"),
-        col("meta.height").as("height"), col("meta.channels").as("channels"),
-        col("meta.format").as("detected_format"))
-      .orderBy("media_id")
-  }
-
-  /** MM4 — REAL audio header decode: synthesize canonical 44-byte PCM WAV
-    * headers from integer-derived params, parse them back with the actual
-    * RIFF parser (little-endian fmt/data chunks, frame count from declared
-    * data size / block align, integer-µs duration), hash-check the
-    * round-trip.
-    */
-  private def mm4(s: SparkSession, d: String) = {
-    import s.implicits._
-    val media = s.range(500).map { id =>
-      val rate = 8000 * (1 + (id % 5).toInt)
-      val ch = 1 + (id % 2).toInt
-      val bits = 8 * (1 + (id % 3).toInt)
-      val n = 1000L + id % 1000
-      (id, operators.MultimodalOps.synthWavHeader(rate, ch, bits, n))
-    }.toDF("media_id", "bytes")
-    operators.MultimodalOps.withAudioMeta(media)
-      .select(col("media_id"),
-        col("audio_meta.sample_rate").as("sample_rate"),
-        col("audio_meta.channels").as("channels"),
-        col("audio_meta.bits_per_sample").as("bits_per_sample"),
-        col("audio_meta.n_frames").as("n_frames"),
-        col("audio_meta.duration_us").as("duration_us"))
-      .orderBy("media_id")
-  }
-
-  /** S9 — raster-block ingestion bridge, driver-checked: four synthetic
-    * 16×16 float32 block blobs (GeoTIFF block layout: row-major,
-    * nodata-padded) decode to pixel rows with global coordinates; the
-    * oracle regenerates the same grid arithmetically. Any defect in the
-    * byte layout, tile→global mapping, or nodata drop breaks the hash.
-    */
-  private def s9(s: SparkSession, d: String) = {
-    import s.implicits._
-    val blocks = s.range(4).map { id =>
-      val ty = (id / 2).toInt; val tx = (id % 2).toInt
-      val buf = java.nio.ByteBuffer.allocate(4 * 256)
-      for (lr <- 0 until 16; lc <- 0 until 16) {
-        val r = ty * 16 + lr; val c = tx * 16 + lc
-        val v = if ((r + c) % 7 == 0) -9999.0f else (r * 32 + c).toFloat
-        buf.putFloat(4 * (lr * 16 + lc), v)
-      }
-      (ty, tx, 16, 16, buf.array())
-    }.toDF("tile_y", "tile_x", "block_h", "block_w", "blob")
-    operators.RasterBridge.explodeBlocks(blocks, blockH = 16, blockW = 16, nodata = -9999.0f)
-      .select(col("px_row"), col("px_col"), col("value").cast("int").as("v"))
-      .orderBy("px_row", "px_col")
-  }
-
-  /** S13 — GeoPackage ingestion round trip: a real single-layer GPKG
-    * (SQLite container: page-1 header, sqlite_master, feature b-tree,
-    * gpkg_contents — synthesized by the writer the spec proves against
-    * the parser) is read back through the actual b-tree walker; geometry
-    * blobs (GP header + LE WKB polygons) decode to WKT. The oracle
-    * regenerates fid/WKT/name/value closed-form, so any defect in varint,
-    * serial-type, cell-pointer, rowid-alias, or WKB decoding breaks the
-    * hash. Layer discovery goes through gpkg_contents, not a hardcoded
-    * name.
-    */
-  private def s13(s: SparkSession, d: String) = {
-    val features = (0 until 40).map { i =>
-      val x = (i % 7).toDouble; val y = (i % 5).toDouble
-      val ring = Seq((x, y), (x + 1.5, y), (x + 1.5, y + 2.5), (x, y + 2.5), (x, y))
-      (i.toLong + 1, operators.GeoPackage.gpkgPolygonBlob(ring),
-        s"seg_${i % 3}", i * 0.25)
-    }
-    val gpkg = operators.GeoPackage.synthGpkg("segments", features)
-    val layer = operators.GeoPackage.layersOf(gpkg).head
-    operators.GeoPackage.readLayer(s, gpkg, layer)
-      .orderBy("fid")
-  }
-
-  /** S13b — the GPKG WRITE path round-tripped both ways: a WKT frame with
-    * mixed geometry types and NULLs flows through `GeoPackage.writeLayer`
-    * (CREATE TABLE synthesis, WKT→WKB→GP blobs, fid-keyed b-tree) and
-    * back through the engine's own reader — the reference's
-    * `object_classifier.py:193-213` layer write made verifiable. The
-    * oracle regenerates the canonical WKT spellings, so any asymmetry
-    * between the WKT encoder and decoder breaks the hash.
-    */
-  private def s13b(s: SparkSession, d: String) = {
-    import s.implicits._
-    val src = (0 until 50).map { i =>
-      val x = (i % 7) * 0.75; val y = (i % 5) * 1.25
-      val geom =
-        if (i % 10 == 0) s"POINT ($x $y)"
-        else s"POLYGON (($x $y, ${x + 1.5} $y, ${x + 1.5} ${y + 2.5}, $x ${y + 2.5}, $x $y))"
-      (i.toLong + 1, geom, if (i % 6 == 0) null else s"c_${i % 4}", i * 0.25)
-    }.toDF("fid", "geom", "name", "value")
-    val gpkg = operators.GeoPackage.writeLayer(src, "classified", srsId = 4326)
-    operators.GeoPackage.readLayer(s, gpkg,
-        operators.GeoPackage.layersOf(gpkg).head)
-      .orderBy("fid")
-  }
-
-  /** S13c — GPKG MULTI-LAYER round trip: two month-keyed layers with
-    * DIFFERENT schemas (July carries an extra score column) in ONE
-    * container — the reference's layer-set shape
-    * (object_classifier.py:193-213 writes one layer per month into the
-    * same GPKG). `writeLayers` assembles one sqlite_master with three
-    * table entries + a two-row gpkg_contents; `layersOf` enumerates;
-    * `readLayer` recovers each layer's own CREATE TABLE schema. The
-    * oracle regenerates both layers closed-form — layer discovery,
-    * per-layer b-tree roots, and the schema split must all be exact.
-    */
-  private def s13c(s: SparkSession, d: String) = {
-    import s.implicits._
-    val jun = (0 until 30).map { i =>
-      val x = (i % 6) * 1.25; val y = (i % 5) * 0.5
-      (i.toLong + 1,
-        s"POLYGON (($x $y, ${x + 2.0} $y, ${x + 2.0} ${y + 1.5}, $x ${y + 1.5}, $x $y))",
-        s"c_${i % 3}", i * 0.5)
-    }.toDF("fid", "geom", "name", "value")
-    val jul = (0 until 25).map { i =>
-      val x = (i % 7) * 0.75; val y = (i % 4) * 1.5
-      val geom =
-        if (i % 5 == 0) s"POINT ($x $y)"
-        else s"POLYGON (($x $y, ${x + 1.0} $y, ${x + 1.0} ${y + 2.0}, $x ${y + 2.0}, $x $y))"
-      (i.toLong + 1, geom, if (i % 7 == 0) null else s"c_${i % 4}", i * 0.25, i * 1.5 + 0.25)
-    }.toDF("fid", "geom", "name", "value", "score")
-    val gpkg = operators.GeoPackage.writeLayers(Seq(
-      "segments_2021_06" -> jun, "segments_2021_07" -> jul))
-    val layers = operators.GeoPackage.layersOf(gpkg)
-    layers.map(l => operators.GeoPackage.readLayer(s, gpkg, l).withColumn("layer", lit(l)))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .select("layer", "fid", "geom", "name", "value", "score")
-      .orderBy("layer", "fid")
-  }
-
-  /** S16 — shapefile ingest: the reference's per-tile segment vectors
-    * (image_segmentation.py:153-162 writes .shp + .dbf with a DN column).
-    * Synth both halves with the codec's own writers, read back through
-    * the actual record walkers (mixed Point/Polygon shapes, typed dBase
-    * attributes), and hash-check against closed-form regeneration — any
-    * defect in record framing, part decoding, or fixed-width attribute
-    * parsing breaks the hash.
-    */
-  private def s16(s: SparkSession, d: String) = {
-    val wkts = (0 until 40).map { i =>
-      val x = (i % 7).toDouble; val y = (i % 5).toDouble
-      if (i % 8 == 0) s"POINT ($x $y)"
-      else s"POLYGON (($x $y, ${x + 1.5} $y, ${x + 1.5} ${y + 2.5}, $x ${y + 2.5}, $x $y))"
-    }
-    val shp = operators.Shapefile.synthShp(wkts)
-    val dbf = operators.Shapefile.synthDbf(
-      Seq(("DN", 'N', 8, 0), ("score", 'N', 10, 3)),
-      (0 until 40).map(i => Seq[Any](i.toLong * 3, i * 0.125)))
-    operators.Shapefile.readFeatures(s, shp, Some(dbf)).orderBy("rec_no")
-  }
-
-  /** S16B — shapefile CRS sidecar round trip: `writeFeatureFiles` shards
-    * per-tile .shp/.dbf/.prj triples (the reference writes a CRS with
-    * every tile, image_segmentation.py:153-162), `readFeatureFiles`
-    * surfaces the WKT CRS as a column and rejects mixed-CRS directories.
-    * Output omits rec_no (per-file record order is not part of the
-    * contract); the (geom, DN) pairing and the carried CRS are.
-    */
-  private def s16b(s: SparkSession, d: String) = {
-    import s.implicits._
-    val crs = "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\"," +
-      "SPHEROID[\"WGS 84\",6378137,298.257223563]]," +
-      "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]"
-    val src = (0 until 36).map { i =>
-      (s"tile_${i % 3}", s"POINT (${(i % 6).toDouble} ${(i % 4).toDouble})", i.toLong * 7)
-    }.toDF("tile", "geom", "DN")
-    val dir = java.nio.file.Files.createTempDirectory("graft_s16b").toString
-    operators.Shapefile.writeFeatureFiles(src, dir, keyCol = "tile", crsWkt = Some(crs))
-    operators.Shapefile.readFeatureFiles(s, dir)
-      .select("geom", "DN", "crs")
-      .orderBy("DN")
-  }
-
-  /** S17 — GDAL's float32 LZW write profile WITH the floating-point
-    * predictor (`PREDICTOR=3`, TIFF TechNote 3): scene 1 a 2-band chunky
-    * LE tiled BigTIFF, scene 2 a classic BE stripped single-band file with
-    * a clipped last strip — byte-plane split + row differencing must be
-    * exactly undone (and the BE-significance plane order means predictor
-    * blocks skip the LE swap) or every pixel value breaks the hash.
-    */
-  private def s17(s: SparkSession, d: String) = {
-    import s.implicits._
-    val chunky = operators.Tiff.synthMultibandTiff(
-      40, 24, 16, 16, littleEndian = true, tile = true,
-      bands = 2, planarConfig = 1, pad = -9999.0f,
-      lzw = true, bigTiff = true, predictor = 3)(
-      (b, r, c) => if ((b + r + c) % 7 == 0) -9999.0f
-        else ((b * 3000 + r * 40 + c) % 1009).toFloat)
-    val classic = operators.Tiff.synthTiff(
-      36, 20, 36, 6, littleEndian = false, tile = false, pad = -9999.0f,
-      lzw = true, predictor = 3)(
-      (r, c) => if ((r * 2 + c) % 9 == 0) -9999.0f
-        else (((r * 36 + c) * 11) % 499).toFloat)
-    def pixels(sceneId: Long, bytes: Array[Byte], bh: Int, bw: Int) = {
-      val blocks = operators.Tiff.tiffToBandBlocks(
-        Seq((sceneId, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw, nodata = -9999.0f)
-        .select(col("scene_id"), col("band"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, chunky, 16, 16).unionAll(pixels(2L, classic, 6, 36))
-      .orderBy("scene_id", "band", "px_row", "px_col")
-  }
-
-  /** MM6 — FULL PNG pixel decode (inflate + the five row filters): a
-    * grayscale and an RGBA frame, per-row filter types cycling through
-    * None/Sub/Up/Average/Paeth so every filter participates, hash-checked
-    * against closed-form pixel regeneration — the zlib stream and the
-    * filter transforms must be exactly invisible.
-    */
-  private def mm6(s: SparkSession, d: String) = {
-    import s.implicits._
-    val gray = operators.MultimodalOps.synthPng(20, 14, 1, r => r % 5)(
-      (r, c, _) => (r * 31 + c * 7) % 256)
-    val rgba = operators.MultimodalOps.synthPng(16, 10, 4, r => (r + 2) % 5)(
-      (r, c, ch) => (r * 17 + c * 5 + ch * 29) % 256)
-    operators.MultimodalOps.pngToPixels(
-        Seq((1L, gray), (2L, rgba)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM6B — the two remaining real-world PNG profiles: PALETTE (color
-    * type 3 — the web-corpus staple; PLTE indices expand to RGB) and
-    * 16-BIT grayscale (big-endian samples, filters striding 2 bytes).
-    * Same closed-form regeneration oracle as mm6 — the palette
-    * indirection and the BE sample assembly must be exactly invisible.
-    */
-  private def mm6b(s: SparkSession, d: String) = {
-    import s.implicits._
-    val palette = (0 until 7).map(i => ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256))
-    val pal = operators.MultimodalOps.synthPngPalette(12, 9, palette, r => r % 5)(
-      (r, c) => (r * 5 + c * 3) % 7)
-    val gray16 = operators.MultimodalOps.synthPng(10, 8, 1, r => (r + 1) % 5, depth = 16)(
-      (r, c, _) => (r * 4099 + c * 769) % 65536)
-    // tRNS: per-entry alpha expands to RGBA; entry 3+ pads opaque (255)
-    val palA = operators.MultimodalOps.synthPngPalette(8, 6,
-      (0 until 5).map(i => ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256)),
-      r => (r + 3) % 5, alpha = Seq(17, 200, 90))((r, c) => (r * 3 + c) % 5)
-    operators.MultimodalOps.pngToPixels(
-        Seq((1L, pal), (2L, gray16), (3L, palA)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM6D — packed PNG depths + transparent-color tRNS (r12; verdict
-    * missing-2): a 2-bit packed PALETTE with per-entry alpha (the
-    * favicon-era staple), a 1-bit gray with a transparent-color tRNS, a
-    * 4-bit gray (non-byte-aligned rows through all five filters), and an
-    * RGB-8 with a truecolor transparent color. Closed-form regeneration
-    * oracle — the MSB-first bit unpacking, the 1-byte filter stride, and
-    * the transparent-color match must all be invisible.
-    */
-  private def mm6d(s: SparkSession, d: String) = {
-    import s.implicits._
-    val palette = (0 until 4).map(i => ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256))
-    val p2 = operators.MultimodalOps.synthPngPacked(11, 7, 2,
-      palette = Some(palette), filterOf = r => r % 5, alpha = Seq(40, 220))(
-      (r, c) => (r * 3 + c) % 4)
-    val g1 = operators.MultimodalOps.synthPngPacked(13, 5, 1,
-      filterOf = r => (r + 1) % 5, transparentGray = Some(1))((r, c) => (r + c) % 2)
-    val g4 = operators.MultimodalOps.synthPngPacked(9, 6, 4,
-      filterOf = r => (r + 2) % 5)((r, c) => (r * 5 + c * 3) % 16)
-    val rgbT = operators.MultimodalOps.synthPng(8, 5, 3, r => r % 5,
-      transparent = Some(Seq(29, 42, 55)))(
-      (r, c, ch) => (r * 7 + c * 11 + ch * 13) % 256)
-    operators.MultimodalOps.pngToPixels(
-        Seq((1L, p2), (2L, g1), (3L, g4), (4L, rgbT)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM6c — Adam7 INTERLACED PNG (r9: the last documented PNG gap): an
-    * RGB-8 and a gray-16 image whose dimensions clip every pass stride,
-    * written by the codec's own interlaced encoder and decoded through
-    * the seven-pass scatter path. The oracle regenerates the pixels
-    * closed-form — the interlace (pass splitting, per-pass filtering,
-    * scatter) must be exactly invisible.
-    */
-  private def mm6c(s: SparkSession, d: String) = {
-    import s.implicits._
-    val rgb = operators.MultimodalOps.synthPng(13, 11, 3, r => r % 5,
-      interlaced = true)((r, c, ch) => (r * 31 + c * 7 + ch * 11) % 256)
-    val gray16 = operators.MultimodalOps.synthPng(9, 7, 1, r => (r + 2) % 5,
-      depth = 16, interlaced = true)((r, c, _) => (r * 4099 + c * 769) % 65536)
-    operators.MultimodalOps.pngToPixels(
-        Seq((1L, rgb), (2L, gray16)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM7 — baseline JPEG pixel decode (ITU-T T.81 SOF0): marker walk,
-    * standard Annex-K Huffman entropy decode with byte unstuffing +
-    * restart markers, dequantize, de-zigzag, separable float IDCT, level
-    * shift — the last pixel format after TIFF and PNG. The fixture is
-    * DC-only blocks (every AC term an exact 0.0 in the IDCT sum), so the
-    * oracle evaluates the identical one-product closed form; the entropy
-    * path (Huffman, stuffing, RST) must be invisible in the hash. The
-    * grayscale image uses a restart interval so RST handling is hashed.
-    */
-  private def mm7(s: SparkSession, d: String) = {
-    import s.implicits._
-    val qGray = Array.fill(64)(16)
-    val gray = operators.Jpeg.synthJpeg(20, 12, 1, Seq(qGray), restartInterval = 2) {
-      (_, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = ((by * 3 + bx) * 7) % 40 - 20
-        nat
-    }
-    val qLum = Array.fill(64)(10); val qChr = Array.fill(64)(12)
-    val color = operators.Jpeg.synthJpeg(16, 8, 3, Seq(qLum, qChr)) {
-      (c, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = (c * 11 + by + bx * 5) % 30 - 15
-        nat
-    }
-    operators.Jpeg.jpegToPixels(
-        Seq((1L, gray), (2L, color)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM8 — CHROMA-SUBSAMPLED baseline JPEG (the profile virtually every
-    * camera/web JPEG ships): a 4:2:0 image (Y 2×2 — MCU-interleaved scan
-    * with restart markers crossing MCU boundaries) and a 4:2:2 image
-    * (Y 2×1 — horizontal-only halving). DC-only blocks keep the mm7
-    * closed-form oracle recipe; chroma planes decode at their own
-    * resolution and box-upsample, so the oracle indexes chroma blocks at
-    * (r/16, c/16) resp. (r/8, c/16) — the MCU interleave, per-plane
-    * padding, and replication must all be exactly invisible.
-    */
-  private def mm8(s: SparkSession, d: String) = {
-    import s.implicits._
-    val qY = Array.fill(64)(16); val qC = Array.fill(64)(8)
-    val j420 = operators.Jpeg.synthJpeg(24, 20, 3, Seq(qY, qC),
-      restartInterval = 3, sampling = Seq((2, 2), (1, 1), (1, 1))) { (c, by, bx) =>
-      val nat = new Array[Int](64)
-      nat(0) = if (c == 0) ((by * 5 + bx * 3) % 48) - 24
-        else ((c * 7 + by * 3 + bx * 5) % 30) - 15
-      nat
-    }
-    val j422 = operators.Jpeg.synthJpeg(16, 10, 3, Seq(qY, qC),
-      sampling = Seq((2, 1), (1, 1), (1, 1))) { (c, by, bx) =>
-      val nat = new Array[Int](64)
-      nat(0) = if (c == 0) ((by * 11 + bx) % 44) - 22
-        else ((c * 9 + by * 7 + bx) % 26) - 13
-      nat
-    }
-    operators.Jpeg.jpegToPixels(
-        Seq((1L, j420), (2L, j422)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM9 — PROGRESSIVE JPEG (SOF2): a grayscale image with DC successive
-    * approximation (Al 1→0), split all-zero AC bands (EOB-run heavy) and
-    * restart markers, plus a 4:2:0 color image with an interleaved DC
-    * first scan + per-component AC scans + a DC refinement. DC-only
-    * blocks keep the mm7 closed-form oracle recipe — the multi-scan
-    * coefficient accumulation, successive-approximation shifts, EOB runs,
-    * and the MCU-interleaved/non-interleaved block orders must all be
-    * exactly invisible in the final pixels.
-    */
-  private def mm9(s: SparkSession, d: String) = {
-    import s.implicits._
-    import operators.Jpeg.ScanSpec
-    val qG = Array.fill(64)(16)
-    val gray = operators.Jpeg.synthJpegProgressive(20, 12, 1, Seq(qG), Seq(
-      ScanSpec(Seq(0), 0, 0, 0, 1),
-      ScanSpec(Seq(0), 1, 20, 0, 0),
-      ScanSpec(Seq(0), 0, 0, 1, 0),
-      ScanSpec(Seq(0), 21, 63, 0, 0)), restartInterval = 2) { (_, by, bx) =>
-      val nat = new Array[Int](64)
-      nat(0) = ((by * 7 + bx * 3) % 50) - 25
-      nat
-    }
-    val qY = Array.fill(64)(16); val qC = Array.fill(64)(8)
-    val color = operators.Jpeg.synthJpegProgressive(24, 20, 3, Seq(qY, qC), Seq(
-      ScanSpec(Seq(0, 1, 2), 0, 0, 0, 1),
-      ScanSpec(Seq(0), 1, 63, 0, 0),
-      ScanSpec(Seq(1), 1, 63, 0, 0),
-      ScanSpec(Seq(2), 1, 63, 0, 0),
-      ScanSpec(Seq(0, 1, 2), 0, 0, 1, 0)),
-      sampling = Seq((2, 2), (1, 1), (1, 1))) { (c, by, bx) =>
-      val nat = new Array[Int](64)
-      nat(0) = if (c == 0) ((by * 5 + bx * 3) % 48) - 24
-        else ((c * 7 + by * 3 + bx * 5) % 30) - 15
-      nat
-    }
-    operators.Jpeg.jpegToPixels(
-        Seq((1L, gray), (2L, color)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM10 — REAL PCM WAV sample decode (the audio modality's pixel-level
-    * codec; mm4 proved the header walk): 16-bit stereo, 8-bit unsigned
-    * mono, and 24-bit mono payloads synthesized by the codec's own
-    * writer, decoded back through the little-endian sign-extension rules,
-    * hash-checked against closed-form regeneration — channel
-    * de-interleaving and every sample width must be exact.
-    */
-  private def mm10(s: SparkSession, d: String) = {
-    import s.implicits._
-    val w1 = operators.MultimodalOps.synthWavPcm(44100, 2, 16, 30)(
-      (f, ch) => ((f * 773 + ch * 331) % 65536) - 32768)
-    val w2 = operators.MultimodalOps.synthWavPcm(8000, 1, 8, 40)(
-      (f, _) => (f * 37) % 256)
-    val w3 = operators.MultimodalOps.synthWavPcm(48000, 1, 24, 20)(
-      (f, _) => ((f * 524287) % 16777216) - 8388608)
-    operators.MultimodalOps.wavToSamples(
-        Seq((1L, w1), (2L, w2), (3L, w3)).toDF("media_id", "bytes"))
-      .orderBy("media_id", "frame_idx", "channel")
-  }
-
-  /** MM11 — GIF89a decode (the remaining ubiquitous web-image container,
-    * and the first MULTI-FRAME one): a full-screen frame off the global
-    * palette plus an offset sub-rectangle frame with a LOCAL palette and
-    * graphic-control transparency, both through the GIF LZW dialect
-    * (LSB-first, growing code widths). Closed-form RGBA regeneration —
-    * the LZW dictionary replay, sub-block reassembly, palette scoping,
-    * and the transparent-index alpha must all be exact.
-    */
-  private def mm11(s: SparkSession, d: String) = {
-    import s.implicits._
-    val global = (0 until 6).map(i => ((i * 41) % 256, (i * 73) % 256, (i * 97) % 256))
-    val local = (0 until 4).map(i => ((i * 29 + 5) % 256, (i * 53 + 11) % 256, (i * 89 + 17) % 256))
-    val gif = operators.Gif.synthGif(14, 10, global, Seq(
-      operators.Gif.FrameSpec(0, 0, 14, 10)((r, c) => (r * 7 + c * 3) % 6),
-      operators.Gif.FrameSpec(3, 2, 8, 5, localPalette = Some(local),
-        transparentIdx = Some(2), delayCs = 45)((r, c) => (r + c * 2) % 4),
-      // r10: an INTERLACED frame (odd height so all four passes have
-      // uneven strides) — the 8/8/4/2 row scatter must be invisible:
-      // the oracle regenerates the same closed form as a sequential frame
-      operators.Gif.FrameSpec(1, 1, 11, 9, interlaced = true, delayCs = 7)(
-        (r, c) => (r * 5 + c) % 6)))
-    operators.Gif.gifToFrames(Seq((1L, gif)).toDF("media_id", "bytes"))
-      .orderBy("frame_idx", "px_row", "px_col", "channel")
-  }
-
-  /** MM12 — BMP pixel decode (mm3 proved the header walk): 24-bit
-    * bottom-up, 8-bit palette top-down (negative height), and 32-bit
-    * BGRA — row padding, the BGR→RGB swap, palette-quad expansion, and
-    * both row orders hash-checked against closed-form regeneration.
-    */
-  private def mm12(s: SparkSession, d: String) = {
-    import s.implicits._
-    val bgr24 = operators.MultimodalOps.synthBmp(9, 6, 3)(
-      (r, c, ch) => (r * 37 + c * 11 + ch * 71 + 3) % 256)
-    val pal = (0 until 5).map(i => ((i * 31 + 2) % 256, (i * 57 + 4) % 256, (i * 91 + 8) % 256))
-    val idx8 = operators.MultimodalOps.synthBmp(7, 5, 1, palette = pal, topDown = true)(
-      (r, c, _) => (r * 2 + c) % 5)
-    val bgra32 = operators.MultimodalOps.synthBmp(5, 4, 4)(
-      (r, c, ch) => (r * 19 + c * 23 + ch * 41 + 9) % 256)
-    operators.MultimodalOps.bmpToPixels(
-        Seq((1L, bgr24), (2L, idx8), (3L, bgra32)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM13 — a REAL video container (r8 verdict stretch item): MJPEG-in-AVI
-    * sampled through the RIFF walk + the engine's own JPEG decoder. Two
-    * synth AVIs — 4 grayscale frames and 2 color 4:2:0 frames, every
-    * frame a complete DC-only baseline JPEG — decode via `aviToFrames` ∘
-    * `jpegToPixels`; the mm7/mm8 closed-form oracle extends with a frame
-    * dimension (and the container's per-frame presentation time). The
-    * RIFF framing, hdrl stream checks, and chunk padding must be
-    * invisible in the pixels.
-    */
-  private def mm13(s: SparkSession, d: String) = {
-    import s.implicits._
-    val qG = Array.fill(64)(16)
-    val gFrames = (0 until 4).map { f =>
-      operators.Jpeg.synthJpeg(16, 8, 1, Seq(qG)) { (_, _, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = ((f * 13 + bx * 7) % 50) - 25
-        nat
-      }
-    }
-    val avi1 = operators.MultimodalOps.synthAviMjpeg(16, 8, 40000, gFrames)
-    val qY = Array.fill(64)(16); val qC = Array.fill(64)(8)
-    val cFrames = (0 until 2).map { f =>
-      operators.Jpeg.synthJpeg(24, 20, 3, Seq(qY, qC),
-        sampling = Seq((2, 2), (1, 1), (1, 1))) { (c, by, bx) =>
-        val nat = new Array[Int](64)
-        nat(0) = if (c == 0) ((f * 9 + by * 5 + bx * 3) % 48) - 24
-          else ((c * 7 + f * 5 + by * 3 + bx * 5) % 30) - 15
-        nat
-      }
-    }
-    val avi2 = operators.MultimodalOps.synthAviMjpeg(24, 20, 33333, cFrames)
-    val frames = operators.MultimodalOps.aviToFrames(
-      Seq((1L, avi1), (2L, avi2)).toDF("media_id", "bytes"))
-    operators.Jpeg.jpegToPixels(frames, bytesCol = "frame")
-      .orderBy("media_id", "frame_idx", "px_row", "px_col", "channel")
-  }
-
-  /** MM15 — IEEE-FLOAT WAV (format tag 3, the layout soundfile/librosa
-    * write for float audio): stereo and mono payloads with the 18-byte
-    * fmt + fact chunks riding the generic RIFF walk, decoded to exact
-    * float32 samples. Sample values are dyadic rationals (k/64), so the
-    * float32 payload and the oracle's double arithmetic are the same
-    * numbers — the chunk walk and bit reassembly must be invisible.
-    */
-  private def mm15(s: SparkSession, d: String) = {
-    import s.implicits._
-    val stereo = operators.MultimodalOps.synthWavFloat(44100, 2, 30)(
-      (f, ch) => (f * 37 + ch * 11 - 50) / 64.0f)
-    val mono = operators.MultimodalOps.synthWavFloat(16000, 1, 25)(
-      (f, _) => (f * f - 300) / 64.0f)
-    operators.MultimodalOps.wavFloatToSamples(
-        Seq((1L, stereo), (2L, mono)).toDF("media_id", "bytes"))
-      .orderBy("media_id", "frame_idx", "channel")
-  }
-
-  /** MM16 — lossless WebP (VP8L, r10): three containers through the
-    * from-scratch `Webp` codec in one plan — (1) a plain literal stream,
-    * (2) the full feature stack (SUBTRACT_GREEN + a predictor transform
-    * + color cache + a meta prefix image) over the SAME pixel formula,
-    * and (3) a delta-coded 13-entry palette with sub-byte index
-    * bundling. The oracle regenerates every RGBA value closed-form, so
-    * the prefix coding, transforms, cache, and bundling must all be
-    * invisible — and (2) sharing (1)'s formula proves the stacked
-    * features change nothing but the bytes.
-    */
-  private def mm16(s: SparkSession, d: String) = {
-    import s.implicits._
-    def pix(r: Int, c: Int): Int =
-      (((r * 5 + c * 3 + 9) % 256) << 24) | (((r * 31 + c * 7) % 256) << 16) |
-        (((r * 13 + c * 17 + 5) % 256) << 8) | ((r * 3 + c * 29 + 11) % 256)
-    val plain = operators.Webp.synthWebpLossless(9, 5, pix)
-    val stacked = operators.Webp.synthWebpLossless(8, 6, pix,
-      subtractGreen = true, predictorMode = Some(7), cacheBits = 4,
-      metaBits = Some(2))
-    val pal = (0 until 13).map(i =>
-      (((i * 37 + 100) % 256) << 24) | (((i * 59) % 256) << 16) |
-        (((i * 83 + 7) % 256) << 8) | ((i * 29 + 3) % 256))
-    val paletted = operators.Webp.synthWebpPalette(10, 4, pal,
-      (r, c) => (r * 7 + c * 5) % 13)
-    operators.Webp.webpToPixels(
-        Seq((1L, plain), (2L, stacked), (3L, paletted)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** MM17 — REAL pixel resize (r10: the thumbnail half the resize stub
-    * deferred): a decoded PNG through `resizePixels` with both kernels —
-    * bilinear 9×6→4×3 (fractional x-ratio 2.25 exercises interpolation,
-    * integral y-ratio hits exact centers) and nearest 9×6→5×2. The
-    * bilinear sum is assembled in a fixed order (per-tap slots), so the
-    * doubles are bit-deterministic and the oracle mirrors the identical
-    * +,*,/ chain — raw-double hashable (no transcendentals anywhere).
-    */
-  private def mm17(s: SparkSession, d: String) = {
-    import s.implicits._
-    val png = operators.MultimodalOps.synthPng(9, 6, 3, _ => 0)(
-      (r, c, ch) => (r * 23 + c * 31 + ch * 41 + 7) % 256)
-    val px = operators.MultimodalOps.pngToPixels(Seq((1L, png)).toDF("img_id", "bytes"))
-    val bil = operators.MultimodalOps.resizePixels(px, 9, 6, 4, 3, "bilinear")
-      .withColumn("kind", lit("bilinear"))
-    val nn = operators.MultimodalOps.resizePixels(px, 9, 6, 5, 2, "nearest")
-      .withColumn("kind", lit("nearest"))
-      .withColumn("value", col("value").cast("double"))
-    bil.unionByName(nn)
-      .select("img_id", "kind", "px_row", "px_col", "channel", "value")
-      .orderBy("kind", "px_row", "px_col", "channel")
-  }
-
-  /** AU1 — STFT band energies over a decoded stereo PCM WAV (the audio
-    * feature-extract step, r10b): the full codec → samples →
-    * `stftBandEnergy` chain (frame 17, hop 9 → overlapping frames, 4
-    * bands; the PRIME frame size keeps every nonzero θ off the π/2
-    * multiples where sin rounds to exactly 1.0 and a 1-ULP drift would
-    * flip a floor). The oracle regenerates the samples closed-form and mirrors
-    * the fixed-point DFT chain exactly (per-term floor ⇒ integer sums ⇒
-    * identical energies); tools/au1_margin_scan.py proves every term
-    * sits ≥ 2.5e-4 (×2^20 grid) from a floor boundary vs the proven
-    * ≤1-ULP cos/sin cross-engine drift.
-    */
-  private def au1(s: SparkSession, d: String) = {
-    import s.implicits._
-    val wav = operators.MultimodalOps.synthWavPcm(8000, 2, 16, 48)(
-      (f, ch) => ((f * 37 + ch * 19) % 200) - 100)
-    val samples = operators.MultimodalOps.wavToSamples(
-      Seq((1L, wav)).toDF("media_id", "bytes"))
-    operators.MultimodalOps.stftBandEnergy(samples, 17, 9, 4)
-      .orderBy("channel", "frame", "band")
-  }
-
-  /** E15 — perceptual-hash IMAGE near-dup pairs (r10b: the pixel-space
-    * sibling of e14's text simhash): 24 synthetic 16×12 RGB images in 4
-    * pattern groups (members differ by one noised source pixel), hashed
-    * by `perceptualHash` (luma → bilinear 8×8 → integer mean-threshold
-    * bits) and paired by `phashNearDupPairs` (4-band pigeonhole,
-    * Hamming ≤ 3). The oracle BRUTE-FORCES all pairs over hashes it
-    * derives from the same closed-form pixels — the banding is proven
-    * lossless (the e14 oracle shape), and the whole chain is exact
-    * dyadic arithmetic (resize weights ∈ {0.25, 0.5, 0.75}; integer
-    * thresholding), so no margin scan is needed.
-    */
-  private def e15(s: SparkSession, d: String) = {
-    import s.implicits._
-    val px = (for {
-      i <- 0 until 24; r <- 0 until 12; c <- 0 until 16; ch <- 0 until 3
-    } yield {
-      val g = i % 4
-      val high = (r / 3 + c / 2 + g) % 2 == 0
-      val v = ch match {
-        case 0 => ((g * 31 + r * 3 + c * 5) % 40) + (if (high) 150 else 10)
-        case 1 => if (high) 250 else 20
-        case _ => if (r == (i * 5) % 12 && c == (i * 7) % 16 && i / 4 > 0) 200 else 30
-      }
-      (i.toLong, r, c, ch, v)
-    }).toDF("img_id", "px_row", "px_col", "channel", "value")
-    val hashes = operators.MultimodalOps.perceptualHash(px, 16, 12)
-    operators.MultimodalOps.phashNearDupPairs(hashes, maxHamming = 3)
-      .orderBy("a", "b")
-  }
-
-  /** SHUF1 — deterministic epoch shuffle (r10b: the training-order
-    * assignment a data pipeline runs per epoch): two independent
-    * md5-keyed permutations of the documents corpus via
-    * `Curation.deterministicShuffle` (GlobalOrder two-pass rank — no
-    * global sort, no single reducer), joined per doc. Reproducible under
-    * any partitioning; the oracle replays both orders as plain windowed
-    * row_numbers over the same md5-prefix keys.
-    */
-  private def shuf1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d).select("doc_id")
-    val e1 = operators.Curation.deterministicShuffle(docs, "epoch-1", outCol = "pos_e1")
-    val e2 = operators.Curation.deterministicShuffle(docs, "epoch-2", outCol = "pos_e2")
-    e1.join(e2, "doc_id").orderBy("doc_id")
-  }
-
-  /** MM18 — ANIMATED lossless WebP (r10b: VP8X + ANIM + ANMF frames,
-    * each a full VP8L payload): three offset frames with distinct
-    * durations through `webpToFrames` — the gifToFrames shape for the
-    * web's other animation container. The oracle regenerates every
-    * frame's RGBA closed-form with the per-frame source shift; the ANMF
-    * framing (halved offsets, minus-one dims, 24-bit durations) must be
-    * invisible.
-    */
-  private def mm18(s: SparkSession, d: String) = {
-    import s.implicits._
-    def pix(dr: Int, dc: Int)(r: Int, c: Int): Int = {
-      val rr = r + dr; val cc = c + dc
-      (((rr * 5 + cc * 3 + 9) % 256) << 24) | (((rr * 31 + cc * 7) % 256) << 16) |
-        (((rr * 13 + cc * 17 + 5) % 256) << 8) | ((rr * 3 + cc * 29 + 11) % 256)
-    }
-    val anim = operators.Webp.synthWebpAnim(14, 10, Seq(
-      (0, 0, 14, 10, 33, pix(0, 0)),
-      (4, 2, 7, 5, 47, pix(2, 3)),
-      (8, 6, 5, 3, 55, pix(5, 1))))
-    operators.Webp.webpToFrames(Seq((1L, anim)).toDF("media_id", "bytes"))
-      .orderBy("frame_idx", "px_row", "px_col", "channel")
-  }
-
-  // mm19 fixture parameters, shared between the query and its oracle:
-  // per-MB quantizer-level Y2-DC values (file 1: flat MBs via DC/H/V/TM
-  // prediction + one skipped MB, spanning token categories cat2/3/5/6 and
-  // both signs) and file 2's Y2-DC + per-block AC pairs (column stripes
-  // through the exact integer IDCT). qi=0: y2dcQ=8, yacQ=4, uvdcQ=4.
-  private val Mm19Vy = Array(16, 8, -40, 70, 30, 0)
-  private val Mm19Vu = Array(12, -6, 20, -18, 9, 0)
-  private val Mm19Vv = Array(-10, 15, -25, 22, -12, 0)
-  private val Mm19W2 = Array(10, 0, 24, -16, 33, 5)
-  private val Mm19A2 = Array(6, 14, -9, 20, 3, -30)
-
-  /** MM19 — LOSSY WebP (VP8 intra keyframe, r11): two files through the
-    * from-scratch [[operators.Vp8]] decoder in one plan. File 1 (48x32):
-    * six flat macroblocks — DC/H/H/V/TM modes + one SKIPPED MB — whose
-    * Y2-DC and chroma-DC coefficients span token categories 2/3/5/6 and
-    * both signs; every pixel is an integer closed form (prediction
-    * prefix sums + the (v*q+3)>>3 / +4>>3 transform chain). File 2
-    * (41x21, crop on both axes): per-block AC coefficients at position 1
-    * make column stripes through the exact integer IDCT (20091/35468
-    * multipliers). The oracle regenerates every RGBA value from the same
-    * fixture literals through the identical integer arithmetic incl. the
-    * reference decoder's fixed-point BT.601 YUV→RGB — the bool coder,
-    * token trees, dequant, WHT/DCT, and prediction must all be
-    * invisible. (Conformance vs the reference decoder itself — real
-    * encodes, prob updates, segmentation, loop filter — is Vp8Spec.)
-    */
-  private def mm19(s: SparkSession, d: String) = {
-    import s.implicits._
-    def y2of(v: Int) = { val a = new Array[Int](16); a(0) = v; a }
-    def uvOf(v: Int) = Array.tabulate(4)(_ => { val a = new Array[Int](16); a(0) = v; a })
-    val modes1 = Array(0, 2, 2, 1, 3, 1) // DC, H, H, V, TM, V(skip)
-    val f1 = operators.Vp8.encodeKeyframe(48, 32, 0, 0, (0 until 6).map { i =>
-      if (i == 5) operators.Vp8.MbSpec(yMode = modes1(i), uvMode = modes1(i), skip = true)
-      else operators.Vp8.MbSpec(yMode = modes1(i), uvMode = modes1(i),
-        y2 = y2of(Mm19Vy(i)), u = uvOf(Mm19Vu(i)), v = uvOf(Mm19Vv(i)))
-    })
-    val modes2 = Array(0, 2, 2, 1, 1, 1) // DC, H, H, V, V, V
-    val f2 = operators.Vp8.encodeKeyframe(41, 21, 0, 0, (0 until 6).map { i =>
-      operators.Vp8.MbSpec(yMode = modes2(i), uvMode = modes2(i),
-        y2 = y2of(Mm19W2(i)),
-        y = Array.fill(16) { val a = new Array[Int](16); a(1) = Mm19A2(i); a })
-    })
-    operators.Webp.webpToPixels(Seq((1L, f1), (2L, f2)).toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  // mm21 fixture parameters (shared with the oracle): per-MB Y2/U/V DC
-  // quantizer values for a 2x1-MB lossy still (DC then H prediction)
-  private val Mm21Vy = Array(16, 40)
-  private val Mm21Vu = Array(8, -12)
-  private val Mm21Vv = Array(20, 6)
-
-  /** MM21 — lossy WebP WITH an ALPHA PLANE (VP8X + ALPH + VP8, r11: the
-    * layout every transparent crawl WebP ships, a reject until now): a
-    * flat 2-MB lossy still whose ALPH chunk carries a GRADIENT-filtered
-    * raw plane — the decoder's unfilter must invert it exactly, so
-    * decoded alpha has the literal fixture formula as its closed form
-    * while RGB rides the mm19 integer chain. (Method-1/VP8L-compressed
-    * alpha is conformance-tested bit-exact against the reference decoder
-    * in WebpSpec.)
-    */
-  private def mm21(s: SparkSession, d: String) = {
-    import s.implicits._
-    def y2of(v: Int) = { val a = new Array[Int](16); a(0) = v; a }
-    def uvOf(v: Int) = Array.tabulate(4)(_ => { val a = new Array[Int](16); a(0) = v; a })
-    val lossy = operators.Vp8.encodeKeyframe(32, 16, 0, 0, (0 until 2).map { i =>
-      operators.Vp8.MbSpec(yMode = if (i == 0) 0 else 2, uvMode = if (i == 0) 0 else 2,
-        y2 = y2of(Mm21Vy(i)), u = uvOf(Mm21Vu(i)), v = uvOf(Mm21Vv(i)))
-    })
-    val file = operators.Webp.synthWebpLossyAlpha(lossy,
-      (r, c) => (r * 13 + c * 7 + 5) % 256, filterM = 3)
-    operators.Webp.webpToPixels(Seq((1L, file)).toDF("img_id", "bytes"))
-      .orderBy("px_row", "px_col", "channel")
-  }
-
-  /** MM22 — animation CANVAS COMPOSITION (r12; the r11 verdict's
-    * missing-1): both animated containers decoded to full-canvas
-    * composed snapshots via the shared Canvas kernel. The WebP exercises
-    * blend (alpha-checkerboard partial rect merges with the canvas),
-    * NO-blend (a rect with transparent pixels OVERWRITES — punches
-    * holes), and dispose-to-background (the rect clears before the next
-    * frame); the GIF exercises binary-alpha painting, disposal 3
-    * (restore-to-previous un-draws a frame) and disposal 2 (restore-to-
-    * background clears a rect). All alphas ∈ {0,255} so every composed
-    * pixel regenerates closed-form in the oracle (fractional blending is
-    * proven in WebpSpec against the exact integer `over` rule); frame
-    * durations ride through composition untouched.
-    */
-  private def mm22(s: SparkSession, d: String) = {
-    import s.implicits._
-    def argb(a: Int, r: Int, g: Int, b: Int) = (a << 24) | (r << 16) | (g << 8) | b
-    // 8x6 canvas: f0 full opaque base; f1 4x2@(2,2) alpha-checkerboard,
-    // BLEND; f2 2x4@(4,0) transparent lower half, NO-blend + dispose-bg;
-    // f3 2x2@(0,0) opaque, blend
-    val f0 = operators.Webp.synthWebpLossless(8, 6, (r, c) =>
-      argb(255, (r * 31 + c * 7) % 256, (r * 13 + c * 17) % 256, (r * 29 + c * 3) % 256))
-    val f1 = operators.Webp.synthWebpLossless(4, 2, (r, c) =>
-      argb(if ((r + c) % 2 == 0) 255 else 0,
-        (r * 41 + c * 5 + 9) % 256, (r * 11 + c * 23 + 4) % 256, (r * 17 + c * 13 + 2) % 256))
-    val f2 = operators.Webp.synthWebpLossless(2, 4, (r, c) =>
-      argb(if (r < 2) 255 else 0,
-        (r * 7 + c * 11 + 100) % 256, (r * 19 + c * 3 + 50) % 256, (r * 23 + c * 29 + 25) % 256))
-    val f3 = operators.Webp.synthWebpLossless(2, 2, (r, c) =>
-      argb(255, (r * 3 + c + 200) % 256, (r * 5 + c * 7 + 150) % 256, (r + c * 11 + 90) % 256))
-    val anim = operators.Webp.synthWebpAnimComposed(8, 6, Seq(
-      operators.Webp.AnmfSpec(0, 0, 40, f0, blend = false),
-      operators.Webp.AnmfSpec(2, 2, 30, f1),
-      operators.Webp.AnmfSpec(4, 0, 20, f2, blend = false, disposeBg = true),
-      operators.Webp.AnmfSpec(0, 0, 10, f3)))
-    // 8x5 GIF: g0 full opaque; g1 4x3@(3,1) transparent-index holes +
-    // disposal 3 (restore previous); g2 2x2@(0,0) + disposal 2 (restore
-    // bg); g3 2x2@(6,3) opaque
-    val pal = (0 until 6).map(i => ((i * 37) % 256, (i * 59) % 256, (i * 83) % 256))
-    val gif = operators.Gif.synthGif(8, 5, pal, Seq(
-      operators.Gif.FrameSpec(0, 0, 8, 5)((r, c) => (r * 2 + c) % 6),
-      operators.Gif.FrameSpec(3, 1, 4, 3, transparentIdx = Some(0),
-        delayCs = 20, disposal = 3)((r, c) => (r + c) % 3),
-      operators.Gif.FrameSpec(0, 0, 2, 2, delayCs = 10, disposal = 2)(
-        (r, c) => (r + c) % 5 + 1),
-      operators.Gif.FrameSpec(6, 3, 2, 2)((r, c) => (r * 2 + c) % 5 + 1)))
-    operators.Gif.gifToComposedFrames(Seq((1L, gif)).toDF("media_id", "bytes"))
-      .withColumn("kind", lit("gif"))
-      .unionByName(operators.Webp.webpToComposedFrames(
-          Seq((1L, anim)).toDF("media_id", "bytes"))
-        .withColumn("kind", lit("webp")))
-      .select(col("kind"), col("frame_idx"), col("duration_ms"),
-        col("px_row"), col("px_col"), col("channel"), col("value"))
-      .orderBy("kind", "frame_idx", "px_row", "px_col", "channel")
-  }
-
-  /** MM20 — video-duration rollup over BOTH animated containers (r11):
-    * a delayed multi-frame GIF (centisecond GCE delays — new frame
-    * timing surface) and an animated WebP MIXING a lossless VP8L frame
-    * with a LOSSY VP8 frame in one ANIM (real encoders emit exactly
-    * this), exploded to frames and rolled up per media: frame count,
-    * total duration, value census. The oracle regenerates every frame's
-    * pixels closed-form (palette formulas for GIF, the pix formula for
-    * VP8L, the mm19 integer chain for the VP8 frame) and re-aggregates —
-    * so timing metadata AND the mixed-codec frame routing are invisible.
-    */
-  private def mm20(s: SparkSession, d: String) = {
-    import s.implicits._
-    val pal = (0 until 5).map(i => ((i * 41) % 256, (i * 73) % 256, (i * 97) % 256))
-    val gif = operators.Gif.synthGif(12, 8, pal, Seq(
-      operators.Gif.FrameSpec(0, 0, 12, 8, delayCs = 12)((r, c) => (r * 3 + c) % 5),
-      operators.Gif.FrameSpec(2, 1, 6, 4)((r, c) => (r + c) % 5),
-      operators.Gif.FrameSpec(4, 3, 5, 3, delayCs = 30)((r, c) => (r * 2 + c) % 5)))
-    def pix(r: Int, c: Int): Int =
-      (((r * 5 + c * 3 + 9) % 256) << 24) | (((r * 31 + c * 7) % 256) << 16) |
-        (((r * 13 + c * 17 + 5) % 256) << 8) | ((r * 3 + c * 29 + 11) % 256)
-    val lossless = operators.Webp.synthWebpLossless(10, 6, pix)
-    val lossy = operators.Vp8.encodeKeyframe(16, 16, 0, 0, Seq(
-      operators.Vp8.MbSpec(yMode = 0, uvMode = 0,
-        y2 = { val a = new Array[Int](16); a(0) = 24; a })))
-    val anim = operators.Webp.synthWebpAnimFiles(20, 16, Seq(
-      (0, 0, 33, lossless), (4, 2, 55, lossy)))
-    val frames = operators.Gif.gifToFrames(Seq((1L, gif)).toDF("media_id", "bytes"))
-      .unionByName(operators.Webp.webpToFrames(
-        Seq((2L, anim)).toDF("media_id", "bytes")))
-    frames.groupBy(col("media_id"), col("frame_idx"))
-      .agg(min(col("duration_ms")).as("dur"),
-        count(lit(1)).as("nv"), sum(col("value").cast("long")).as("sv"))
-      .groupBy("media_id")
-      .agg(count(lit(1)).cast("long").as("n_frames"),
-        sum(col("dur")).cast("long").as("total_ms"),
-        sum(col("nv")).as("n_values"), sum(col("sv")).as("sum_values"))
-      .orderBy("media_id")
-  }
-
-  /** MM14 — EXIF orientation (the other documented-decision gap from the
-    * r8 verdict): eight otherwise-identical DC-only grayscale JPEGs, one
-    * per orientation 1..8, each carrying a real APP1 Exif segment (TIFF
-    * IFD0 tag 274, read through the engine's own TIFF IFD walker),
-    * decoded UPRIGHT via `jpegToPixelsUpright`. Orientations 5..8 swap
-    * the axes; the oracle evaluates the mm7 closed form at the
-    * per-orientation source coordinate — the coordinate remap must be
-    * exactly the EXIF display transform.
-    */
-  private def mm14(s: SparkSession, d: String) = {
-    import s.implicits._
-    val q = Array.fill(64)(16)
-    val imgs = (1 to 8).map { o =>
-      (o.toLong, operators.Jpeg.synthJpeg(16, 8, 1, Seq(q), exifOrientation = o) {
-        (_, _, bx) =>
-          val nat = new Array[Int](64)
-          nat(0) = ((o * 7 + bx * 11) % 50) - 25
-          nat
-      })
-    }
-    operators.Jpeg.jpegToPixelsUpright(imgs.toDF("img_id", "bytes"))
-      .orderBy("img_id", "px_row", "px_col", "channel")
-  }
-
-  /** S18 — TIFF integer predictor (317=2, GDAL PREDICTOR=2) + integer
-    * sample formats: the reference's stage-1 OUTPUT profile (int32 class
-    * labels, LZW, pixel_classifier_stream.py:77-83). Two containers:
-    * a 2-band chunky int32 LZW BigTIFF (LE, tiled, signed values incl.
-    * negatives) and a classic uint16 LZW stripped file (BE, wrap-heavy
-    * deltas exercising mod-2^16 differencing). Closed-form pixel oracle —
-    * the differencing transform must be invisible in the hash.
-    */
-  private def s18(s: SparkSession, d: String) = {
-    import s.implicits._
-    val int32 = operators.Tiff.synthMultibandTiff(
-      40, 24, 16, 16, littleEndian = true, tile = true,
-      bands = 2, planarConfig = 1, lzw = true, bigTiff = true, predictor = 2,
-      sampleBits = 32, sampleFormat = 2, intPad = -9999L,
-      intValues = (b, r, c) => if ((b + r + c) % 7 == 0) -9999L
-        else (b * 3000L + r * 40L + c) % 1009L - 500L)((_, _, _) => 0f)
-    val uint16 = operators.Tiff.synthMultibandTiff(
-      36, 20, 36, 6, littleEndian = false, tile = false,
-      bands = 1, lzw = true, predictor = 2,
-      sampleBits = 16, sampleFormat = 1, intPad = 65535L,
-      intValues = (_, r, c) => if ((r * 2 + c) % 9 == 0) 65535L
-        else (r * 36L + c) * 113L % 60001L)((_, _, _) => 0f)
-    def pixels(sceneId: Long, bytes: Array[Byte], bh: Int, bw: Int, nodata: Float) = {
-      val blocks = operators.Tiff.tiffToBandBlocks(
-        Seq((sceneId, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw, nodata = nodata)
-        .select(col("scene_id"), col("band"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, int32, 16, 16, -9999.0f).unionAll(pixels(2L, uint16, 6, 36, 65535.0f))
-      .orderBy("scene_id", "band", "px_row", "px_col")
-  }
-
-  /** S19 — the remaining common TIFF codecs: DEFLATE (259=8, zlib — GDAL's
-    * COMPRESSION=DEFLATE, routinely paired with PREDICTOR) and PACKBITS
-    * (259=32773, the TIFF-6 byte RLE every scanner writes). Scene 1 is a
-    * 2-band chunky int32 deflate BigTIFF WITH the horizontal-difference
-    * predictor; scene 2 a classic BE uint8 PackBits stripped file whose
-    * values mix long runs and literals so both packet kinds decode.
-    * Closed-form pixel oracle — the codecs must be exactly invisible.
-    */
-  private def s19(s: SparkSession, d: String) = {
-    import s.implicits._
-    val deflate32 = operators.Tiff.synthMultibandTiff(
-      40, 24, 16, 16, littleEndian = true, tile = true,
-      bands = 2, planarConfig = 1, bigTiff = true, predictor = 2,
-      sampleBits = 32, sampleFormat = 2, intPad = -9999L, compressionCode = 8,
-      intValues = (b, r, c) => if ((b + r * 2 + c) % 11 == 0) -9999L
-        else (b * 2777L + r * 40L + c) * 7L % 2003L - 1000L)((_, _, _) => 0f)
-    val packbits8 = operators.Tiff.synthMultibandTiff(
-      30, 16, 30, 4, littleEndian = false, tile = false,
-      bands = 1, sampleBits = 8, sampleFormat = 1, intPad = 255L,
-      compressionCode = 32773,
-      intValues = (_, r, c) => if ((r + c * 3) % 13 == 0) 255L
-        else if (c < 18) (r * 5L) % 250L else (r * 11L + c) % 250L)((_, _, _) => 0f)
-    def pixels(sceneId: Long, bytes: Array[Byte], bh: Int, bw: Int, nodata: Float) = {
-      val blocks = operators.Tiff.tiffToBandBlocks(
-        Seq((sceneId, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw, nodata = nodata)
-        .select(col("scene_id"), col("band"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, deflate32, 16, 16, -9999.0f).unionAll(pixels(2L, packbits8, 4, 30, 255.0f))
-      .orderBy("scene_id", "band", "px_row", "px_col")
-  }
-
-  /** MM5 — REAL TIFF header decode (the format every reference byte lives
-    * in, feature_stacking.py:75-98): synthesize valid TIFFs from
-    * integer-derived geometry — both byte orders, tiled AND stripped
-    * layouts, GeoTIFF scale/tiepoint on every 5th file, BigTIFF container
-    * on every 7th, LZW on every 11th (the reference's `bigtiff='YES',
-    * compress='lzw'` profile) — parse them back with the actual IFD
-    * walker, and hash-check the recovered metadata against the
-    * closed-form oracle.
-    */
-  private def mm5(s: SparkSession, d: String) = {
-    import s.implicits._
-    val media = s.range(500).map { id =>
-      val w = 16 + (id % 32).toInt
-      val h = 16 + (id * 7 % 32).toInt
-      val tiled = id % 2 == 0
-      val grid =
-        if (id % 5 == 0)
-          Some(operators.Regrid.GridDef((id % 50).toDouble, (id % 40).toDouble + 0.5, 0.25, 0.5))
-        else None
-      val bytes = operators.Tiff.synthTiff(
-        w, h, if (tiled) 16 else w, if (tiled) 16 else 8,
-        littleEndian = id % 3 != 0, tile = tiled, grid = grid,
-        lzw = id % 11 == 4, bigTiff = id % 7 == 3)(
-        (r, c) => (r * w + c).toFloat)
-      (id, bytes)
-    }.toDF("media_id", "bytes")
-    operators.Tiff.withTiffMeta(media)
-      .select(col("media_id"),
-        col("tiff_meta.width").as("width"),
-        col("tiff_meta.height").as("height"),
-        col("tiff_meta.bits_per_sample").as("bits_per_sample"),
-        col("tiff_meta.sample_format").as("sample_format"),
-        col("tiff_meta.n_bands").as("n_bands"),
-        col("tiff_meta.planar_config").as("planar_config"),
-        col("tiff_meta.compression").as("compression"),
-        col("tiff_meta.tiled").as("tiled"),
-        col("tiff_meta.block_w").as("block_w"),
-        col("tiff_meta.block_h").as("block_h"),
-        col("tiff_meta.n_blocks").as("n_blocks"),
-        col("tiff_meta.byte_order").as("byte_order"),
-        col("tiff_meta.is_big").as("is_big"),
-        col("tiff_meta.px_w").as("px_w"),
-        col("tiff_meta.px_h").as("px_h"),
-        col("tiff_meta.origin_x").as("origin_x"),
-        col("tiff_meta.origin_y").as("origin_y"))
-      .orderBy("media_id")
-  }
-
-  /** S12 — GeoTIFF ingestion end-to-end: a real uncompressed tiled
-    * little-endian float32 GeoTIFF (synthesized by the same writer mm5
-    * proves against the parser) flows through `tiffToBlocks` →
-    * `explodeBlocks` into pixel rows — the reference's windowed
-    * `src.read(window)` loop (feature_stacking.py:226-249) as one plan.
-    * Value pattern and nodata drop mirror s9, so any defect in IFD
-    * walking, tile addressing, byte-swap, or padding breaks the hash.
-    */
-  private def s12(s: SparkSession, d: String) = {
-    import s.implicits._
-    val tiff = operators.Tiff.synthTiff(
-      32, 32, 16, 16, littleEndian = true, tile = true,
-      grid = Some(operators.Regrid.GridDef(0.0, 32.0, 1.0, 1.0)),
-      pad = -9999.0f)(
-      (r, c) => if ((r + c) % 7 == 0) -9999.0f else (r * 32 + c).toFloat)
-    val media = Seq((1L, tiff)).toDF("scene_id", "bytes")
-    val blocks = operators.Tiff.tiffToBlocks(media)
-    operators.RasterBridge.explodeBlocks(blocks, blockH = 16, blockW = 16, nodata = -9999.0f)
-      .select(col("px_row"), col("px_col"), col("value").cast("int").as("v"))
-      .orderBy("px_row", "px_col")
-  }
-
-  /** S14 — the reference's EXACT write profile ingested: `compress='lzw',
-    * bigtiff='YES', tiled=True` (feature_stacking.py:226-233). Scene 1 is
-    * a BigTIFF (magic 43, 8-byte offsets) with little-endian LZW 16×16
-    * tiles; scene 2 a classic big-endian STRIPPED LZW file with a clipped
-    * last strip. Both flow through the same `tiffToBlocks` →
-    * `explodeBlocks` plan as s12, so any defect in BigTIFF IFD walking,
-    * LZW code widths (9→10-bit early change crosses inside every 1 KiB+
-    * block), byte order after decompression, or strip clipping breaks the
-    * pixel hash.
-    */
-  private def s14(s: SparkSession, d: String) = {
-    import s.implicits._
-    val big = operators.Tiff.synthTiff(
-      64, 64, 16, 16, littleEndian = true, tile = true,
-      grid = Some(operators.Regrid.GridDef(0.0, 64.0, 1.0, 1.0)),
-      pad = -9999.0f, lzw = true, bigTiff = true)(
-      (r, c) => if ((r * 3 + c) % 11 == 0) -9999.0f else ((r * 64 + c) * 7 % 1000).toFloat)
-    val classic = operators.Tiff.synthTiff(
-      48, 44, 48, 8, littleEndian = false, tile = false,
-      pad = -9999.0f, lzw = true)(
-      (r, c) => if ((r + 2 * c) % 13 == 0) -9999.0f else ((r * 48 + c) * 13 % 997).toFloat)
-    def pixels(sceneId: Long, bytes: Array[Byte], bh: Int, bw: Int) = {
-      val blocks = operators.Tiff.tiffToBlocks(
-        Seq((sceneId, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw, nodata = -9999.0f)
-        .select(col("scene_id"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, big, 16, 16).unionAll(pixels(2L, classic, 8, 48))
-      .orderBy("scene_id", "px_row", "px_col")
-  }
-
-  /** S15 — multi-band ingest, the reference's CENTRAL artifact shape: the
-    * N-band stacked float32 raster (feature_stacking.py:219-251) read
-    * band-wise (:114-115,150). Scene 1 is a chunky (pixel-interleaved)
-    * classic LE tiled 3-band file; scene 2 a planar (plane-major) BE
-    * BigTIFF LZW stripped 2-band file — both flow through
-    * `tiffToBandBlocks` → `explodeBlocks`, the band column riding the
-    * bridge as an ordinary pass-through. Any defect in SamplesPerPixel/
-    * PlanarConfiguration handling, chunky de-interleave, plane-major
-    * offset grouping, or per-band padding breaks the hash.
-    */
-  private def s15(s: SparkSession, d: String) = {
-    import s.implicits._
-    val chunky = operators.Tiff.synthMultibandTiff(
-      20, 14, 8, 8, littleEndian = true, tile = true,
-      bands = 3, planarConfig = 1, pad = -9999.0f)(
-      (b, r, c) => if ((b + r + c) % 9 == 0) -9999.0f
-        else ((b * 2000 + r * 20 + c) % 1777).toFloat)
-    val planar = operators.Tiff.synthMultibandTiff(
-      24, 10, 24, 4, littleEndian = false, tile = false,
-      bands = 2, planarConfig = 2, pad = -9999.0f, lzw = true, bigTiff = true)(
-      (b, r, c) => if ((b * 3 + r * 2 + c) % 11 == 0) -9999.0f
-        else (((b * 5000 + r * 24 + c) * 7) % 997).toFloat)
-    def pixels(sceneId: Long, bytes: Array[Byte], bh: Int, bw: Int) = {
-      val blocks = operators.Tiff.tiffToBandBlocks(
-        Seq((sceneId, bytes)).toDF("scene_id", "bytes"))
-      operators.RasterBridge.explodeBlocks(blocks, blockH = bh, blockW = bw, nodata = -9999.0f)
-        .select(col("scene_id"), col("band"), col("px_row"), col("px_col"),
-          col("value").cast("int").as("v"))
-    }
-    pixels(1L, chunky, 8, 8).unionAll(pixels(2L, planar, 4, 24))
-      .orderBy("scene_id", "band", "px_row", "px_col")
-  }
-
-  // ---------- full analytic queries (TPC-H-shaped, bench headliners) ----------
-
-  /** Q1-shaped pricing summary: the classic scan-heavy aggregate. */
-  private def q1(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") <= lit(java.sql.Timestamp.valueOf("1998-09-02 00:00:00")))
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_base_price"),
-        sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-          .cast("double").as("sum_disc_price"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** Q3-shaped shipping priority: join + agg + top-N. */
-  private def q3(s: SparkSession, d: String) =
-    Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
-      .join(Tables.orders(s, d), col("c_custkey") === col("o_custkey"))
-      .join(Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
-      .filter(col("l_shipdate") > col("o_orderdate"))
-      .groupBy("o_orderkey", "o_orderdate")
-      .agg(sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-        .cast("double").as("revenue"))
-      .orderBy(col("revenue").desc, col("o_orderkey"))
-      .limit(10)
-
-  /** Q4-shaped order-priority check: EXISTS decorrelated to a LEFT SEMI
-    * join with a non-equi residual (a line shipped >60 days after the
-    * order date). The semi join never duplicates orders, so no distinct is
-    * needed — the shape Catalyst plans for correlated EXISTS subqueries.
-    */
-  private def q4(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-01-01") &&
-        col("o_orderdate") < lit("1997-01-01"))
-      .join(
-        Tables.lineitem(s, d),
-        col("o_orderkey") === col("l_orderkey") &&
-          col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"),
-        "left_semi")
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("order_count"))
-      .orderBy("o_orderpriority")
-
-  /** Q12-shaped conditional aggregation: one pass over the join computes
-    * both priority classes as filtered sums (no self-join, no pivot) — the
-    * classic "two counts from one scan" OLAP shape.
-    */
-  private def q12(s: SparkSession, d: String) = {
-    val urgent = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1996-01-01") &&
-        col("l_shipdate") < lit("1997-01-01"))
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy("l_returnflag")
-      .agg(
-        sum(when(urgent, 1L).otherwise(0L)).as("high_line_count"),
-        sum(when(!urgent, 1L).otherwise(0L)).as("low_line_count"))
-      .orderBy("l_returnflag")
-  }
-
-  /** Q5-shaped regional revenue rollup (the flagship, parameterized by dir). */
-  private def q5(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .groupBy("r_name", "n_name")
-      .agg(sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-        .cast("double").as("revenue"))
-      .orderBy("r_name", "n_name")
-
-  /** Q7 — ROLLUP grouping sets over the regional revenue cube (subtotal +
-    * grand-total rows; NULLS FIRST alignment with the oracle).
-    */
-  private def q7(s: SparkSession, d: String) =
-    Tables.orders(s, d)
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      .select(col("r_name").as("rn"), col("n_name").as("nn"), col("o_totalprice"))
-      .rollup(col("rn").as("r_name"), col("nn").as("n_name"))
-      .agg(dsum(col("o_totalprice")).as("total"), count(lit(1)).as("n"))
-      .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
-
-  /** ST2 — sliding windows (1 h window, 15 min slide) as a batch query:
-    * each event lands in 4 windows; oracled via epoch arithmetic.
-    */
-  private def st2(s: SparkSession, d: String) =
-    Tables.events(s, d)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-      .orderBy("window_start", "event_type")
-
-  // ---------- round-2 additions: curation / graph / session surface ----------
-
-  /** W4 — event-time RANGE frame (trailing 5 minutes per user): the frame
-    * extent is data-driven (µs range), not a row count — the other half of
-    * the window surface next to w1's ROWS frame.
-    */
-  private def w4(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("user_id").orderBy(col("us"))
-      .rangeBetween(-300000000L, 0L)
-    Tables.events(s, d)
-      .withColumn("us", unix_micros(col("ts")))
-      .withColumn("w_avg", round(avg(col("value")).over(w), 6))
-      .select(col("user_id"), col("event_id"), col("w_avg"))
-      .orderBy("user_id", "event_id", "w_avg")
-  }
-
-  /** Q8 — CUBE over (returnflag, linestatus): all four grouping-set
-    * combinations in one pass (partial-agg friendly; Catalyst expands to a
-    * single Expand + one shuffle).
-    */
-  private def q8(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("rf"), col("l_linestatus").as("ls"), col("l_quantity"))
-      .cube(col("rf").as("l_returnflag"), col("ls").as("l_linestatus"))
-      .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first)
-
-  /** SAMP1 — deterministic md5 train/val/test split (stable under reruns
-    * and appends, unlike RNG sampling); output is the split census.
-    */
-  private def samp1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    docs
-      .withColumn("split", operators.Curation.hashSplit(docs, "doc_id"))
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy("split")
-  }
-
-  /** SAMP2 — deterministic stratified sampling: per-returnflag keep rates
-    * decided by an md5 bucket of the line key (pure projection+filter, no
-    * RNG, stable under reruns/appends — the sampleBy() property gap).
-    */
-  private def samp2(s: SparkSession, d: String) =
-    operators.Curation.stratifiedSample(
-        Tables.lineitem(s, d),
-        concat_ws("_", col("l_orderkey"), col("l_linenumber")),
-        col("l_returnflag"),
-        ratePct = Map("A" -> 10, "N" -> 50), defaultPct = 100)
-      .groupBy("l_returnflag")
-      .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-      .orderBy("l_returnflag")
-
-  /** SAMP3 — deterministic WEIGHTED sampling (A-ES), 5 longest-biased
-    * docs per source: weight = n_chars + 1, draw = md5-derived uniform,
-    * rank key fixed-pointed — the mix-construction sampler that upweights
-    * long documents without RNG state.
-    */
-  private def samp3(s: SparkSession, d: String) =
-    operators.Curation.weightedSample(
-        Tables.documents(s, d),
-        col("doc_id"), (col("n_chars") + lit(1)).cast("double"),
-        Seq(col("source")), k = 5)
-      .select("source", "doc_id", "wkey_fp")
-      .orderBy("source", "doc_id")
-
-  /** E11 — eval-set decontamination: docs sharing any 3-token n-gram with
-    * the synthetic eval slice (doc_id % 97 = 0) are dropped — the
-    * benchmark-leakage guard of a training-data pipeline. Exact gram
-    * match; eval side broadcasts after its distinct-gram agg.
-    */
-  private def e11(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    operators.Curation.decontaminate(
-        docs, docs.filter(col("doc_id") % 97 === 0), ngramK = 3)
-      .select(col("doc_id"), col("n_chars"))
-      .orderBy("doc_id", "n_chars")
-  }
-
-  /** PACK1 — token-budget sequence packing (concat-and-split at 2048
-    * tokens in doc_id order), packed independently per shard — the scale
-    * shape: shards pack in parallel (a global pack would serialize one
-    * reducer); cross-shard order is arbitrary in a training shuffle anyway.
-    */
-  private def pack1(s: SparkSession, d: String) =
-    operators.Curation.packByTokenBudget(
-      Tables.documents(s, d).withColumn("shard", (col("doc_id") % 8).cast("long")),
-      TextOps.tokenCount(col("text")), "doc_id", budget = 2048, shardCol = Some("shard"))
-      .groupBy("shard", "bin_id")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("total_tokens"))
-      .orderBy("shard", "bin_id")
-
-  /** TFIDF1 — top-3 salient terms per document (tf·ln(N/df), rank ties on
-    * term asc; scores rounded before ranking for cross-engine stability).
-    */
-  private def tfidf1(s: SparkSession, d: String) =
-    operators.Curation.topTfidfTerms(Tables.documents(s, d), k = 3)
-      .orderBy("doc_id", "rank")
-
-  /** CC1 — duplicate-cluster canonicalization: connected components over
-    * the LSH candidate pairs (e2b's edge set), keeper = min doc id per
-    * component. The step that turns pairwise near-dup evidence into a
-    * keep/drop decision.
-    */
-  private def cc1(s: SparkSession, d: String) = {
-    val edges = Dedup.minhashCandidatePairs(Tables.documents(s, d), numHashes = 8, rowsPerBand = 2)
-    operators.Graph.componentSummary(operators.Graph.connectedComponents(edges))
-      .orderBy("keep_id")
-  }
-
-  /** PR1 — fixed-point PageRank over the dup-candidate graph: which
-    * documents anchor a near-dup neighborhood. Ten integer-exact rounds,
-    * bit-identical to the oracle's recursive-CTE twin.
-    */
-  private def pr1(s: SparkSession, d: String) =
-    operators.Graph.pageRankFixed(
-        Dedup.minhashCandidatePairs(Tables.documents(s, d), numHashes = 8, rowsPerBand = 2),
-        iters = 10)
-      .orderBy("node")
-
-  /** cc2 — the SAME component summary as cc1, but `localThreshold = 0`
-    * forces the distributed min-label + pointer-jumping path — the
-    * unbounded-scale fallback that normally only engages above 4M edges.
-    * Sharing cc1's oracle proves the two paths are result-identical under
-    * the driver's hash gate, not just in GraphSpec.
-    */
-  private def cc2(s: SparkSession, d: String) = {
-    // quarter-corpus scope: the point is the PATH (min-label rounds +
-    // pointer jumping under the hash gate), and iterative rounds carry a
-    // per-round multi-stage overhead that dwarfs toy-scale data — the
-    // full graph already has its answer oracled via cc1's local path
-    val edges = Dedup.minhashCandidatePairs(
-      Tables.documents(s, d).filter(col("doc_id") % 4 === 0), numHashes = 8, rowsPerBand = 2)
-    operators.Graph.componentSummary(
-        operators.Graph.connectedComponents(edges, localThreshold = 0L))
-      .orderBy("keep_id")
-  }
-
-  /** tri1 — triangle enumeration over the dup-candidate graph: the
-    * cohesion census of near-dup clusters (quasi-cliques triangle
-    * densely; borderline-match chains don't — a structural signal CC's
-    * member counts can't see).
-    */
-  private def tri1(s: SparkSession, d: String) = {
-    val edges = Dedup.minhashCandidatePairs(Tables.documents(s, d), numHashes = 8, rowsPerBand = 2)
-    operators.Graph.triangles(edges).orderBy("a", "b", "c")
-  }
-
-  /** dd1 — degree distribution of the dup-candidate graph (how many docs
-    * have how many near-dup partners — the skew signal that decides
-    * bucket caps).
-    */
-  private def dd1(s: SparkSession, d: String) = {
-    val edges = Dedup.minhashCandidatePairs(Tables.documents(s, d), numHashes = 8, rowsPerBand = 2)
-    operators.Graph.degrees(edges)
-      .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-      .orderBy("degree")
-  }
-
-  /** ST3 — sessionization (30 min inactivity gap). Batch gaps-and-islands
-    * form here (oracled); EventStreamSpec proves the streaming
-    * flatMapGroupsWithState twin emits the same closed sessions.
-    */
-  private def st3(s: SparkSession, d: String) =
-    streaming.EventStream.sessionizeBatch(Tables.events(s, d), gapSec = 1800)
-      .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
-      .orderBy("user_id", "session_start", "session_end", "n_events")
-
-  /** st4 — event-time interval join, batch twin of the watermarked
-    * stream-stream join (EventStreamSpec proves stream ≡ this frame).
-    */
-  private def st4(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    streaming.EventStream.intervalJoinBatch(ev, ev, horizonSec = 300)
-      .select("l_id", "r_id")
-      .orderBy("l_id", "r_id")
-  }
-
-  /** st6 — LEFT OUTER interval join, batch twin of the watermarked
-    * stream-stream outer join: purchases paired with same-user clicks in
-    * the following 5 minutes, purchases with none surviving null-padded
-    * (EventStreamSpec proves the streaming twin emits the same frame).
-    */
-  private def st6(s: SparkSession, d: String) = {
-    val ev = Tables.events(s, d)
-    streaming.EventStream.intervalJoinOuterBatch(
-        ev.filter(col("event_type") === "purchase"),
-        ev.filter(col("event_type") === "click"), horizonSec = 300)
-      .select(col("l_id"), col("r_id"))
-      .orderBy(col("l_id"), col("r_id").asc_nulls_first)
-  }
-
-  /** ST7 — stream-static enrichment: the broadcast dimension join +
-    * default-fill every streaming pipeline runs before aggregating
-    * (`EventStream.enrichStream` — identical code path batch and
-    * streaming; the dim misses users ≥ 120, exercising the coalesce
-    * default). Segment-level rollup makes the whole enrichment hashable.
-    */
-  private def st7(s: SparkSession, d: String) = {
-    val dim = Tables.customer(s, d)
-      .groupBy((col("c_custkey") % 120).as("user_id"))
-      .agg(min(col("c_mktsegment")).as("segment"))
-    streaming.EventStream.enrichStream(
-        Tables.events(s, d), dim, Seq("user_id"),
-        defaults = Map("segment" -> lit("UNKNOWN")))
-      .groupBy("segment", "event_type")
-      .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_val"))
-      .orderBy("segment", "event_type")
-  }
-
-  /** zs1 — zonal statistics through `Stages.segmentFeatures` (Stage 3's
-    * per-segment features) on an oracle-constructible grid: zones are the
-    * 4×4 blocks of the m7b-style 16×16 cell grid, so counts, extents,
-    * rectangularity and elongation all have closed relational forms.
-    */
-  private def zs1(s: SparkSession, d: String) = {
-    val cells = Tables.lineitem(s, d)
-      .groupBy((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .agg(count(lit(1)).cast("double").as("v"))
-    val segments = cells.select(col("px_row"), col("px_col"),
-      (floor(col("px_row") / 4).cast("int") * 4 + floor(col("px_col") / 4).cast("int"))
-        .as("seg_id"))
-    pipeline.Stages.segmentFeatures(cells, segments, Seq("v"))
-      .select(col("seg_id"), col("n_px"), col("height"), col("width"),
-        round(col("mean_v"), 6).as("mean_v"),
-        round(col("rectangularity"), 6).as("rect"),
-        round(col("elongation"), 6).as("elong"))
-      .orderBy("seg_id")
-  }
-
-  /** emb2 — int8 embedding quantization codes + scales: floor-based
-    * symmetric quantization is deterministic double arithmetic, so the
-    * code vectors hash-match the relational oracle exactly.
-    */
-  private def emb2(s: SparkSession, d: String) = {
-    import graft.functions.VectorOps
-    Tables.embeddings(s, d)
-      .select(col("vec_id"),
-        md5(concat_ws(",",
-          transform(VectorOps.quantize8(col("embedding")), _.cast("string")))).as("q_md5"),
-        round(VectorOps.quantize8Scale(col("embedding")), 6).as("scale"))
-      .orderBy("vec_id")
-  }
-
-  /** chunk1 — context-window chunking census: 64-token windows, stride 48
-    * (25% overlap). Output is one row per chunk with its exact text, so
-    * the hash check pins slice boundaries, overlap arithmetic, and the
-    * kept partial tail.
-    */
-  private def chunk1(s: SparkSession, d: String) =
-    Curation.chunkByTokens(Tables.documents(s, d), chunkTokens = 64, stride = 48)
-      .withColumn("chunk_md5", md5(col("chunk_text"))).drop("chunk_text")
-      .orderBy("doc_id", "chunk_id")
-
-  /** sql2 — the SQL-first SPATIAL path through the driver gate: the
-    * registered `st_bbox_intersects` predicate in a plain SQL inner join,
-    * re-planned by SpatialJoinRewrite (a GraftExtensions optimizer rule)
-    * into the binned PBSM equi-join. Same pair set as j11's DataFrame operator.
-    */
-  private def sql2(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    def box(key: Column): Seq[Column] = Seq(
-      key % 97, key % 89, key % 97 + lit(1) + key % 5, key % 89 + lit(1) + key % 7)
-    Tables.supplier(s, d).select(col("s_suppkey"),
-        SpatialOps.bbox(box(col("s_suppkey"))(0), box(col("s_suppkey"))(1),
-          box(col("s_suppkey"))(2), box(col("s_suppkey"))(3)).as("env"))
-      .createOrReplaceTempView("sql2_sb")
-    Tables.customer(s, d).select(col("c_custkey"),
-        SpatialOps.bbox(box(col("c_custkey"))(0), box(col("c_custkey"))(1),
-          box(col("c_custkey"))(2), box(col("c_custkey"))(3)).as("env_r"))
-      .createOrReplaceTempView("sql2_cb")
-    s.sql(
-      """SELECT s_suppkey, c_custkey FROM sql2_sb JOIN sql2_cb
-        |ON st_bbox_intersects(env, env_r)
-        |ORDER BY s_suppkey, c_custkey""".stripMargin)
-  }
-
-  /** M7b — polygonize on an oracle-constructible grid: every distinct
-    * (orderkey%16, partkey%16) cell is its own segment, so each WKT is a
-    * known unit square — hash-checks the ring orientation, start-vertex,
-    * and formatting conventions of the raster→vector path (the dense
-    * multi-cell cases are covered by SegmentationSpec).
-    */
-  private def m7b(s: SparkSession, d: String) = {
-    val px = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-      .withColumn("seg_id", (col("px_row") * 16 + col("px_col")).cast("long"))
-    operators.Segmentation.polygonize(px)
-      .select(col("seg_id"), col("part"), col("wkt"), col("n_cells"))
-      .orderBy("seg_id", "part")
-  }
-
-  /** E10 — fuzzy dedup end-to-end: LSH candidates → exact-Jaccard verify
-    * (≥ 0.5) → connected components → keep the min doc per cluster. The
-    * full "near-duplicate removal" pipeline a training corpus runs, as one
-    * query.
-    */
-  private def e10(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val edges = Dedup.fuzzyDupPairs(docs, threshold = 0.5, numHashes = 8, rowsPerBand = 2)
-    val drops = operators.Graph.connectedComponents(edges)
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as("doc_id"))
-    docs.join(drops, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("n_chars"))
-      .orderBy("doc_id")
-  }
-
-  /** e12 — quality-aware dedup: instead of e10's keep-lowest-id, each
-    * fuzzy-duplicate cluster keeps its HIGHEST-QUALITY member (tie →
-    * lowest id) — the curation-grade policy (near-dup clusters often mix
-    * a clean original with truncated/boilerplated copies). Singletons are
-    * their own cluster via the left join + coalesce.
-    */
-  private def e12(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val edges = Dedup.fuzzyDupPairs(docs, threshold = 0.5, numHashes = 8, rowsPerBand = 2)
-    val comp = operators.Graph.connectedComponents(edges)
-    val members = docs
-      .select(col("doc_id"), TextOps.qualityScore(col("text")).as("__q"))
-      .join(comp, col("doc_id") === col("node"), "left")
-      .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"), col("__q"))
-    val byComp = Window.partitionBy("component")
-    members
-      .withColumn("rn", row_number().over(byComp.orderBy(col("__q").desc, col("doc_id").asc)))
-      .withColumn("n_members", count(lit(1)).over(byComp))
-      .withColumn("best_q", max(col("__q")).over(byComp))
-      .filter(col("rn") === 1)
-      .select(col("doc_id").as("keep_id"), col("n_members"),
-        round(col("best_q"), 6).as("best_q"))
-      .orderBy("keep_id")
-  }
-
-  /** e13 — sketch-accelerated decontamination: bloom prefilter on the
-    * corpus grams (scan-side predicate, no false negatives) + exact
-    * verify of the survivors. Same eval slice as e11 and the SAME oracle
-    * complement — the hash match proves the sketch path is semantically
-    * invisible.
-    */
-  private def e13(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    operators.Curation.decontaminateBloom(
-        docs, docs.filter(col("doc_id") % 97 === 0), ngramK = 3)
-      .select(col("doc_id"), col("n_chars"))
-      .orderBy("doc_id", "n_chars")
-  }
-
-  /** s10 — text-format sink round trip: the per-source census written as
-    * CSV (header, explicit schema on read-back) must survive the
-    * serialize/parse cycle bit-for-bit — the interchange-format story
-    * next to the parquet sinks (s5) and binary bridges (s9).
-    */
-  private def s10(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/census"
-    Tables.documents(s, d)
-      .groupBy("source", "lang")
-      .agg(count(lit(1)).as("n"), sum(col("n_chars")).cast("long").as("sum_chars"))
-      .coalesce(1)
-      .write.mode("overwrite").option("header", "true").csv(out)
-    s.read.option("header", "true")
-      .schema("source STRING, lang STRING, n BIGINT, sum_chars BIGINT")
-      .csv(out)
-      .orderBy("source", "lang")
-  }
-
-  /** sch1 — schema evolution: a store written in two generations (the
-    * second adds a quality column), read back with schema merge — old
-    * rows surface NULL for the new column, the lakehouse append
-    * contract. Census proves no rows were lost or double-typed.
-    */
-  private def sch1(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_sch").toString + "/docs"
-    val docs = Tables.documents(s, d)
-    docs.filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .write.mode("overwrite").parquet(out)
-    docs.filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("source"), col("n_chars"),
-        TextOps.qualityScore(col("text")).as("quality"))
-      .write.mode("append").parquet(out)
-    s.read.option("mergeSchema", "true").parquet(out)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("quality").isNull, 1L).otherwise(0L)).as("n_oldgen"),
-        // fixed-point sum (emb1 pattern): ×2^20 is IEEE-exact, floor to
-        // BIGINT, integer sum commutes — partition-order-proof
-        sum(floor(coalesce(col("quality"), lit(0.0)) * lit(1048576L)).cast("long"))
-          .as("sum_q_fp"))
-      .orderBy("source")
-  }
-
-  /** ts1 — time-series regularization: per-user hourly resample of event
-    * values (decimal-exact hour sums), densified onto each user's
-    * [first, last] hour grid with forward fill — the dense-grid step any
-    * windowed model needs. Per-key windows only; grid bounded by
-    * span/step per key.
-    */
-  /** TS2 — truncated-FIR exponential smoothing per user: the scale-safe
-    * spelling of EWMA (bounded ROWS window instead of the sequential
-    * recursion), tap constants shared bit-exactly with the oracle.
-    */
-  private def ts2(s: SparkSession, d: String) =
-    // fixed-point output, not round(,6): the engines' round() implementations
-    // disagree on decimal boundaries even for bit-identical doubles
-    // (observed once in 14k rows at sf0.1); floor of the 2^20-scaled value
-    // is deterministic whenever the doubles match
-    operators.TimeSeries.ewmaSmooth(
-        Tables.events(s, d).select("user_id", "event_id", "ts", "value"),
-        "user_id", "ts", "event_id", "value", alpha = 0.3, taps = 8)
-      .select(col("user_id"), col("event_id"),
-        floor(col("ewma") * lit(1048576L)).cast("long").as("ewma_fp"))
-      .orderBy("user_id", "event_id")
-
-  /** FUNNEL1 — strict-order conversion funnel view → click → purchase per
-    * user: stage times chain keyed aggregations (stage k prunes to keys
-    * that completed k−1), depth = completed stages.
-    */
-  private def funnel1(s: SparkSession, d: String) =
-    operators.Funnel.stageTimes(Tables.events(s, d),
-        "user_id", "ts", "event_type", Seq("view", "click", "purchase"))
-      .orderBy("user_id")
-
-  private def ts1(s: SparkSession, d: String) =
-    operators.TimeSeries.resampleCarryForward(
-        Tables.events(s, d).filter(col("user_id") <= 20),
-        "user_id", "ts", "value", unit = "hour")
-      .orderBy("user_id", "bucket")
-
-  /** gs1 — GROUPING SETS with grouping() indicator columns: the explicit
-    * multi-granularity aggregate (finer than rollup/cube q7/q8) through
-    * the SQL front door; both engines run the same text.
-    */
-  private def gs1(s: SparkSession, d: String) = {
-    Tables.lineitem(s, d).createOrReplaceTempView("gs1_lineitem")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_ls,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n
-        |FROM gs1_lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
-        |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin)
-  }
-
-  /** hof1 — the array higher-order-function surface (transform / filter /
-    * aggregate / exists) over tokenized text: per-doc token-length stats
-    * computed entirely inside array lambdas — no explode, no shuffle.
-    */
-  private def hof1(s: SparkSession, d: String) = {
-    val toks = split(col("text"), " ")
-    Tables.documents(s, d).select(
-      col("doc_id"),
-      aggregate(transform(toks, t => length(t)), lit(0L), (acc, x) => acc + x)
-        .as("sum_tok_len"),
-      size(filter(toks, t => length(t) >= 5)).cast("long").as("n_long_toks"),
-      array_max(transform(toks, t => length(t))).as("max_tok_len"),
-      exists(toks, t => t.rlike("[0-9]")).as("has_digit"))
-      .orderBy("doc_id")
-  }
-
-  /** inc1 — incremental-ingest dedup: stage the even-id half of the
-    * corpus as a persisted dedup index (exact md5s + LSH buckets +
-    * shingle sets), then deduplicate the odd-id half against it as a NEW
-    * batch — the daily-crawl-vs-100 TB-corpus shape, probing the index
-    * without rescanning corpus text. Census of the admitted batch rows;
-    * the oracle recomputes the exact+fuzzy complement from scratch.
-    */
-  /** The corpus index is the PRE-EXISTING side of the incremental shape
-    * (the 100 TB corpus isn't re-indexed per daily batch), so it is built
-    * once per (session, sfDir) and repeat runs measure what recurs: the
-    * probe. Keyed by sfDir so verify/bench dirs never cross-contaminate.
-    */
-  private val dedupIdxCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def inc1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val dir = dedupIdxCache.computeIfAbsent(d, _ => {
-      val idx = java.nio.file.Files.createTempDirectory("graft_inc1").toString + "/idx"
-      Dedup.writeDedupIndex(docs.filter(col("doc_id") % 2 === 0), idx)
-      idx
-    })
-    Dedup.dedupAgainstIndex(s, docs.filter(col("doc_id") % 2 === 1), dir, threshold = 0.5)
-      .select(col("doc_id"), col("n_chars"))
-      .orderBy("doc_id")
-  }
-
-  /** e14 — SimHash near-dup pairs within Hamming radius 2: pigeonhole
-    * banding (3 bands of the 16-bit signature) finds every candidate
-    * with no false negatives; bit_count(xor) verifies exactly. The
-    * oracle brute-forces all pairs, so the banding must lose nothing.
-    */
-  private def e14(s: SparkSession, d: String) =
-    Dedup.simhashNearDupPairs(Tables.documents(s, d), maxHamming = 2)
-      .orderBy("a", "b")
-
-  /** e14b — the WIDE (60-bit) simhash near-dup pairs, the corpus-scale
-    * path (r12): the sf1 probe measured the 16-bit form at 22× wall for
-    * 10× docs (2^5-key bands saturate), while 60-bit bands have 2^20
-    * keys and stay linear. Same pigeonhole construction, same
-    * brute-force oracle — the banding must again lose nothing, now over
-    * a sparse bucket space.
-    */
-  private def e14b(s: SparkSession, d: String) =
-    Dedup.simhashNearDupPairsWide(Tables.documents(s, d), maxHamming = 2)
-      .orderBy("a", "b")
-
-  /** q6b — TPC-H Q6 shape: single-scan predicate-pushdown revenue forecast.
-    * All three filters reach the parquet scan (PushedFilters); the agg is a
-    * partial-final pair with no shuffle beyond the final single-row merge.
-    */
-  private def q6b(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-        col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")) &&
-        col("l_discount") >= lit(0.03) && col("l_discount") <= lit(0.07) &&
-        col("l_quantity") < lit(24.0))
-      .agg(
-        sum(col("l_extendedprice").cast(D2) * col("l_discount").cast(D2))
-          .cast("double").as("revenue"),
-        count(lit(1)).as("n_lines"))
-
-  /** q7b — TPC-H Q7 shape: bidirectional volume shipping between two
-    * nations by ship year. The nation dim joins TWICE (supplier side and
-    * customer side) under different aliases — both broadcast; only the
-    * lineitem⋈orders join shuffles.
-    */
-  private def q7b(s: SparkSession, d: String) = {
-    val sn = Tables.nation(s, d).select(
-      col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
-    val cn = Tables.nation(s, d).select(
-      col("n_nationkey").as("cn_key"), col("n_name").as("cust_nation"))
-    Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-        col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00")))
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(sn), col("s_nationkey") === col("sn_key"))
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(cn), col("c_nationkey") === col("cn_key"))
-      .filter((col("supp_nation") === "NATION_1" && col("cust_nation") === "NATION_2") ||
-        (col("supp_nation") === "NATION_2" && col("cust_nation") === "NATION_1"))
-      .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).as("l_year"))
-      .agg(sum(col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2))
-        .cast("double").as("revenue"))
-      .orderBy("supp_nation", "cust_nation", "l_year")
-  }
-
-  /** q8b — TPC-H Q8 shape: a nation's market share inside one region for
-    * one part type, by order year. The share is a conditional-sum ratio
-    * computed in ONE pass (no self-join); sums stay decimal-exact and only
-    * the final division is double (then round(,6) for oracle parity).
-    */
-  private def q8b(s: SparkSession, d: String) = {
-    val vol = col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2)
-    Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d).filter(col("p_type") === "PROMO")),
-        col("l_partkey") === col("p_partkey"))
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .filter(col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-        col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1998-01-01 00:00:00")))
-      .join(broadcast(Tables.customer(s, d)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .join(broadcast(Tables.supplier(s, d).select(
-          col("s_suppkey"), col("s_nationkey").as("supp_nkey"))),
-        col("l_suppkey") === col("s_suppkey"))
-      .groupBy(year(col("o_orderdate")).as("o_year"))
-      .agg(round(
-        sum(when(col("supp_nkey") === 3, vol).otherwise(lit(0).cast(D2))).cast("double") /
-          sum(vol).cast("double"), 6).as("mkt_share"))
-      .orderBy("o_year")
-  }
-
-  /** q9 — TPC-H Q9 shape (product-type profit): profit = revenue minus a
-    * cost proxy (`p_retailprice · l_quantity` — this star schema has no
-    * partsupp table), for parts matching a name pattern, by supplier
-    * nation and order year. Dims broadcast; decimal-exact until the final
-    * double cast.
-    */
-  private def q9(s: SparkSession, d: String) =
-    Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d).filter(col("p_name").like("%widget%"))),
-        col("l_partkey") === col("p_partkey"))
-      .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(s, d)), col("s_nationkey") === col("n_nationkey"))
-      .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("n_name"), year(col("o_orderdate")).as("o_year"))
-      .agg(sum(
-        col("l_extendedprice").cast(D2) * (lit(1.0) - col("l_discount")).cast(D2) -
-          col("p_retailprice").cast(D2) * col("l_quantity").cast(D2))
-        .cast("double").as("sum_profit"))
-      .orderBy(col("n_name"), col("o_year").desc)
-
-  /** lm1 — unigram LM surprise score per doc (the perplexity-filter
-    * analog): corpus unigram logprobs fixed-pointed per token, summed as
-    * integers — deterministic under any partitioning.
-    */
-  private def lm1(s: SparkSession, d: String) =
-    Curation.unigramLogprobScore(Tables.documents(s, d))
-      .orderBy("doc_id")
-
-  private def lm2(s: SparkSession, d: String) =
-    Curation.bigramLogprobScore(Tables.documents(s, d))
-      .orderBy("doc_id")
-
-  /** leak1 — train/test split-leakage census: fuzzy-duplicate pairs that
-    * CROSS the deterministic hash-split boundary (a near-dup of a test
-    * doc sitting in train is eval contamination the e11 decontamination
-    * can't see — it checks against an external eval set, not the split
-    * itself). Composes the proven LSH+verify pair generation with the
-    * md5 split; output is the per-(split,split) leak census.
-    */
-  private def leak1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val pairs = Dedup.fuzzyDupPairs(docs, threshold = 0.5, numHashes = 8, rowsPerBand = 2)
-    val splits = docs.select(col("doc_id"), Curation.hashSplit(docs, "doc_id").as("split"))
-    pairs
-      .join(splits.select(col("doc_id").as("a"), col("split").as("split_a")), Seq("a"))
-      .join(splits.select(col("doc_id").as("b"), col("split").as("split_b")), Seq("b"))
-      .filter(col("split_a") =!= col("split_b"))
-      .groupBy("split_a", "split_b")
-      .agg(count(lit(1)).as("n_pairs"))
-      .orderBy("split_a", "split_b")
-  }
-
-  /** pmi1 — top bigram collocations by fixed-point PMI (phrase mining
-    * over the corpus). Full (pmi, w1, w2) ordering makes the LIMIT
-    * deterministic.
-    */
-  private def pmi1(s: SparkSession, d: String) =
-    Curation.bigramPmi(Tables.documents(s, d), minCount = 5)
-      .orderBy(col("pmi_fp").desc, col("w1"), col("w2"))
-      .limit(40)
-
-  /** w10 — value-window family: first/last/nth over an explicit
-    * UNBOUNDED..UNBOUNDED rows frame (last_value over the default frame
-    * is the classic silent-wrong-answer; the explicit frame is the
-    * correct idiom and what the oracle pins).
-    */
-  private def w10(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        first(col("value")).over(w).as("first_v"),
-        last(col("value")).over(w).as("last_v"),
-        nth_value(col("value"), 2).over(w).as("second_v"))
-      .orderBy("user_id", "event_id")
-  }
-
-  /** j12 — FULL OUTER join (the last join-type gap): per-nation customer
-    * census vs supplier census, nations missing from either side survive
-    * null-padded. Both sides pre-aggregate to nation cardinality before
-    * the join — the scale idiom: outer-join the AGGREGATES, not the
-    * fact tables.
-    */
-  private def j12(s: SparkSession, d: String) = {
-    val c = Tables.customer(s, d).filter(col("c_acctbal") > 9000)
-      .groupBy(col("c_nationkey").as("nation")).agg(count(lit(1)).as("n_cust"))
-    val su = Tables.supplier(s, d).filter(col("s_acctbal") > 9000)
-      .groupBy(col("s_nationkey").as("nation")).agg(count(lit(1)).as("n_supp"))
-    c.join(su, Seq("nation"), "full_outer")
-      .orderBy("nation")
-  }
-
-  /** o4 — keyset (seek-method) pagination: the scalable replacement for
-    * OFFSET (which scans and discards the skip — O(offset) per page).
-    * The composite-key seek is written as `date >= D AND (date > D OR
-    * key > K)` so the prefix conjunct reaches the parquet scan; the
-    * residual disjunction finishes the tuple compare.
-    */
-  private def o4(s: SparkSession, d: String) = {
-    val dk = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
-    Tables.orders(s, d)
-      .filter(col("o_orderdate") >= dk &&
-        (col("o_orderdate") > dk || col("o_orderkey") > 5000L))
-      .orderBy("o_orderdate", "o_orderkey")
-      .limit(100)
-      .select("o_orderkey", "o_orderdate", "o_totalprice")
-  }
-
-  /** emb3 — per-dimension embedding stats (the normalization table):
-    * fixed-point means, exact min/max, one dimension-keyed agg.
-    */
-  private def emb3(s: SparkSession, d: String) =
-    operators.Similarity.dimStats(Tables.embeddings(s, d))
-      .orderBy("dim")
-
-  /** ent1 — per-doc token entropy (vocabulary flatness), fixed-pointed
-    * per (doc, term) then integer-summed — partition-order-proof.
-    */
-  private def ent1(s: SparkSession, d: String) =
-    Curation.tokenEntropy(Tables.documents(s, d))
-      .orderBy("doc_id")
-
-  /** nov1 — gram novelty vs a reference slice (every 3rd doc): the
-    * novelty-weighted sampling signal; integer-ratio novelty fraction is
-    * engine-exact.
-    */
-  private def nov1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    Curation.gramNovelty(
-        docs.filter(col("doc_id") % 3 =!= 0),
-        docs.filter(col("doc_id") % 3 === 0), ngramK = 3)
-      .orderBy("doc_id")
-  }
-
-  /** stat1 — exact-moment correlation/covariance of quantity vs price:
-    * DECIMAL moment sums are commutative and exact, so the closed forms
-    * evaluate on bit-identical inputs in both engines — deterministic
-    * second-order statistics where the built-in co-moment accumulators
-    * are partition-order-dependent.
-    */
-  private def stat1(s: SparkSession, d: String) =
-    operators.Profiling.exactCorr(
-      Tables.lineitem(s, d), col("l_quantity"), col("l_extendedprice"))
-
-  /** prof1 — one-pass table profile of the documents corpus: row count
-    * plus per-column null/distinct/min/max (the pre-training census).
-    */
-  private def prof1(s: SparkSession, d: String) =
-    operators.Profiling.tableProfile(
-      Tables.documents(s, d), Seq("lang", "source", "n_chars"))
-
-  /** hist1 — equi-width histogram of document lengths (width 50): the
-    * length-distribution profile every curation run starts from.
-    */
-  private def hist1(s: SparkSession, d: String) =
-    operators.Profiling.histogram(Tables.documents(s, d), col("n_chars"), 50)
-
-  /** hist2 — equi-depth histogram (10 rank-quantile buckets over price):
-    * the tie-robust complement of hist1's equi-width buckets; ntile over
-    * a TOTAL order so bucket membership is deterministic.
-    */
-  private def hist2(s: SparkSession, d: String) =
-    // numeric tie-break columns: long compares in the bucket sort instead of
-    // a per-row concat'd string (measurably cheaper at 600k+ rows)
-    operators.Profiling.equiDepthHistogram(
-      Tables.lineitem(s, d), col("l_extendedprice"),
-      Seq(col("l_orderkey"), col("l_linenumber")), buckets = 10)
-
-  /** cap1 — per-source document cap: keep the 5 best-quality docs per
-    * source (ties → lowest id). The anti-concentration step of a web
-    * corpus mix; ranking windows run per source, never globally.
-    */
-  private def cap1(s: SparkSession, d: String) = {
-    val scored = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), TextOps.qualityScore(col("text")).as("__q"))
-    operators.Curation.capPerGroup(
-        scored, Seq(col("source")), col("__q"), col("doc_id"), k = 5)
-      .select(col("source"), col("doc_id"), col("rn"))
-      .orderBy("source", "rn")
-  }
-
-  /** O3 — top-3 orders by value per customer through the custom
-    * TopKPerKey physical operator (graft.plans): bounded heaps map-side,
-    * at most k rows per key per partition cross the exchange, no window
-    * sort of the full table. Hash-checked against DuckDB row_number —
-    * the oracle validates the custom SparkPlan end-to-end.
-    */
-  private def o3(s: SparkSession, d: String) =
-    plans.TopK.perKey(
-      Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
-      Seq(col("o_custkey")),
-      Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 3)
-      .orderBy("o_custkey", "o_orderkey")
-
-  /** PIPE1 — end-to-end curation pipeline (the LLM-data half of the
-    * north_star, composed the way pipe0 composes the spatial stack):
-    * quality score + language ID → quality filter → exact dedup (keep
-    * min doc per md5(text)) → eval-set decontamination → deterministic
-    * hash split → census per (split, language). Every stage is the
-    * already-oracled operator (E4/E5/E1/E11/SAMP1 semantics); the value
-    * here is proving they compose in ONE plan: the tokenization is done
-    * once and feeds score+langid together, and every filter is a pure
-    * projection/semi-join — no RNG, no driver state, shuffle only at the
-    * dedup window, the decontamination gram join, and the final census.
-    */
-  private def pipe1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    // Decontaminate FIRST: it commutes with every later stage (scoring and
-    // langid are per-row; identical texts have identical grams, so the
-    // kept-min-doc of an exact-dup group is contaminated iff every copy
-    // is), and front-loading it means the expensive score+window subtree
-    // is built ONCE — an anti-join plan references its base twice, and
-    // union/join branches get no subtree reuse, so whatever sits below the
-    // anti join executes twice. Spread before, so the CPU-heavy scoring
-    // that follows the (partitioning-preserving) broadcast anti join runs
-    // on all cores, not the scan's single file partition.
-    val spreadDocs = operators.Partitioning.spread(docs)
-    val clean = operators.Curation.decontaminate(
-      spreadDocs, docs.filter(col("doc_id") % 97 === 0), ngramK = 3)
-    val scored = clean
-      .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("_toks"))
-      .select(col("doc_id"), col("text"),
-        size(col("_toks")).cast("long").as("n_tokens"),
-        TextOps.stopwordHits(col("_toks"), TextOps.AllStopwords).cast("double").as("_hits"),
-        TextOps.langGuessFromTokens(col("_toks")).as("lang_guess"))
-      .withColumn("quality",
-        least(col("n_tokens") / lit(100.0), lit(1.0)) * lit(0.5) +
-          least(col("_hits") / col("n_tokens") * lit(4.0), lit(1.0)) * lit(0.5))
-      .filter(col("quality") >= lit(0.3))
-    val dedupW = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    val deduped = scored
-      .withColumn("_rn", row_number().over(dedupW))
-      .filter(col("_rn") === 1)
-    deduped
-      .withColumn("split", operators.Curation.hashSplit(deduped, "doc_id"))
-      .groupBy("split", "lang_guess")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-      .orderBy("split", "lang_guess")
-  }
-
-  /** pipe2 — the round-3 curation chain in ONE composed plan: quality gate
-    * (zero-shuffle audit filter) → cross-doc passage-dup filter (the only
-    * corpus-wide exchange, joined back as a semi join) → deterministic
-    * hash split → per-split token-budget packing → shard census. The
-    * 100 TB shape: per-row signals never shuffle, the doc-level verdicts
-    * are tiny semi-join sides, packing windows are per-split.
-    */
-  private def pipe2(s: SparkSession, d: String) = {
-    val docs = operators.Partitioning.spread(Tables.documents(s, d))
-    val passKeep = Curation.passageDupStats(docs, ngramK = 5)
-      .filter(col("dup_passage_frac") <= lit(0.5))
-      .select("doc_id")
-    // gate INLINE (it keeps the caller's columns): the pushed-down filter
-    // evaluates each gate signal once right at the scan — safe because
-    // every signal is a single-reference scalar (see the PlanSpec
-    // "evaluated ONCE" contract); only the corpus-wide passage verdict
-    // needs a semi join
-    val clean = Curation.qualityGate(docs).filter(col("keep"))
-      .join(passKeep, Seq("doc_id"), "left_semi")
-    val withSplit = clean.withColumn("split", Curation.hashSplit(clean, "doc_id"))
-    Curation.packByTokenBudget(withSplit, TextOps.tokenCount(col("text")),
-        "doc_id", budget = 2048, shardCol = Some("split"))
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("bin_id")).as("n_bins"),
-        sum(col("n_tok")).as("sum_tokens"))
-      .orderBy("split")
-  }
-
-  /** pipe3 — mix-construction pipeline over the round-4 surface, ONE
-    * composed plan: quality gate (zero-shuffle audit filter) → per-source
-    * quality cap (anti-concentration, per-group windows) → per-source
-    * token-budget packing → shard census. Complements pipe2 (which
-    * exercises the corpus-wide passage exchange); here every stage after
-    * the gate is per-source, so the only wide exchange is the window
-    * partition on source.
-    */
-  private def pipe3(s: SparkSession, d: String) = {
-    val docs = operators.Partitioning.spread(Tables.documents(s, d))
-    val gated = Curation.qualityGate(docs).filter(col("keep"))
-    val scored = gated.select(col("doc_id"), col("source"), col("text"),
-      TextOps.qualityScore(col("text")).as("__q"))
-    val capped = Curation.capPerGroup(scored, Seq(col("source")), col("__q"), col("doc_id"), k = 10)
-    Curation.packByTokenBudget(capped, TextOps.tokenCount(col("text")), "doc_id",
-        budget = 1024, shardCol = Some("source"))
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        countDistinct(col("bin_id")).as("n_bins"),
-        sum(col("n_tok")).as("sum_tokens"))
-      .orderBy("source")
-  }
-
-  /** W5 — lag/lead frame: per-user event-to-event value delta and the next
-    * event type (change-point shape). The window partitions by user, so at
-    * scale each user sorts independently — no global sort.
-    */
-  private def w5(s: SparkSession, d: String) = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        round(col("value") - lag(col("value"), 1).over(w), 6).as("delta"),
-        lead(col("event_type"), 1).over(w).as("next_type"))
-      .orderBy("user_id", "event_id")
-  }
-
-  /** W6 — ntile quartiles of order value within each priority class. */
-  private def w6(s: SparkSession, d: String) = {
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice"), col("o_orderkey"))
-    Tables.orders(s, d)
-      .select(col("o_orderkey"), col("o_orderpriority"),
-        ntile(4).over(w).as("quartile"))
-      .orderBy("o_orderkey")
-  }
-
-  /** w9 — relative-rank window family (percent_rank / cume_dist): both
-    * are integer-ratio doubles over a deterministic ordering, so the
-    * values are engine-exact.
-    */
-  private def w9(s: SparkSession, d: String) = {
-    val w = Window.partitionBy("o_orderpriority")
-      .orderBy(col("o_totalprice"), col("o_orderkey"))
-    Tables.orders(s, d).select(
-        col("o_orderkey"), col("o_orderpriority"),
-        round(percent_rank().over(w), 6).as("pr"),
-        round(cume_dist().over(w), 6).as("cd"))
-      .orderBy("o_orderkey")
-  }
-
-  /** G1 — WKT geometry measures end-to-end: build a rectangle polygon per
-    * order from integer-derived coords, then recover area / perimeter /
-    * centroid / point count by PARSING the WKT back (SpatialOps shoelace
-    * HOFs). The oracle computes the closed forms directly from the same
-    * integers, so any parse or shoelace defect breaks the hash. All inputs
-    * are small ints → every double op is exact.
-    */
-  private def g1(s: SparkSession, d: String) = {
-    val base = Tables.orders(s, d).select(col("o_orderkey"),
-      (col("o_orderkey") % 100).cast("double").as("x0"),
-      (col("o_custkey") % 100).cast("double").as("y0"),
-      (col("o_orderkey") % 7 + 1).cast("double").as("w"),
-      (col("o_custkey") % 5 + 1).cast("double").as("h"))
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val wkt = concat(lit("POLYGON (("),
-      concat_ws(", ",
-        pt(col("x0"), col("y0")),
-        pt(col("x0") + col("w"), col("y0")),
-        pt(col("x0") + col("w"), col("y0") + col("h")),
-        pt(col("x0"), col("y0") + col("h")),
-        pt(col("x0"), col("y0"))),
-      lit("))"))
-    val g = graft.functions.SpatialOps
-    // staged: parse rings ONCE, share one cross column between both
-    // centroid coordinates (HOFs get no CSE — unstaged this plan parses
-    // the WKT seven times per row)
-    base.select(col("o_orderkey"), wkt.as("geom_wkt"))
-      .select(col("o_orderkey"), g.wktRings(col("geom_wkt")).as("_rings"))
-      .select(col("o_orderkey"), col("_rings"), g.ringsCross(col("_rings")).as("_cross"))
-      .select(col("o_orderkey"),
-        round(abs(col("_cross")) / 2, 6).as("area"),
-        round(g.ringsPerimeter(col("_rings")), 6).as("perimeter"),
-        round(g.ringsMoment(col("_rings"), "x") / (lit(3.0) * col("_cross")), 6).as("cx"),
-        round(g.ringsMoment(col("_rings"), "y") / (lit(3.0) * col("_cross")), 6).as("cy"),
-        g.ringsNumPoints(col("_rings")).cast("int").as("n_points"))
-      .orderBy("o_orderkey")
-  }
-
-  /** G2 — nearest-neighbor grid alignment (feature_stacking.py:72-102, the
-    * Resampling.nearest mask path at :345): a 16×16 master grid reads a
-    * coarser 8×8 aux raster (2×2 cells, same extent) through the full
-    * affine world↔pixel mapping. Integer-friendly geometry keeps every
-    * double op exact; the oracle derives the same containing-cell keys
-    * arithmetically.
-    */
-  private def g2(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 8).cast("int").as("px_row"),
-        (col("p_size") % 8).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.regridNearest(master, aux,
-      operators.Regrid.GridDef(0.0, 16.0, 1.0, 1.0),
-      operators.Regrid.GridDef(0.0, 16.0, 2.0, 2.0), Seq("dem"))
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G3 — bilinear grid alignment (the Resampling.bilinear DEM path,
-    * feature_stacking.py:319): 4-tap weighted read of the coarse raster
-    * with edge-tap renormalization. Aux values are integer counts and all
-    * weights are exact binary quarters (fx, fy ∈ {0.25, 0.75}), so every
-    * product and sum is exact and the cross-engine hash is bit-stable
-    * without rounding.
-    */
-  private def g3(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 8).cast("int").as("px_row"),
-        (col("p_size") % 8).cast("int").as("px_col"))
-      .agg(count(lit(1)).cast("double").as("nv"))
-    operators.Regrid.regridBilinear(master, aux,
-      operators.Regrid.GridDef(0.0, 16.0, 1.0, 1.0),
-      operators.Regrid.GridDef(0.0, 16.0, 2.0, 2.0), Seq("nv"))
-      .orderBy("px_row", "px_col", "nv")
-  }
-
-  /** G4 — cubic-convolution grid alignment (the Resampling.cubic imagery
-    * path, feature_stacking.py:343): 16 Catmull-Rom taps per master cell.
-    * Same exactness argument as g3 — integer aux values, dyadic fractional
-    * offsets (0.25/0.75) make every kernel weight, product, and sum exact
-    * binary, so the hash is bit-stable without rounding.
-    */
-  private def g4(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 8).cast("int").as("px_row"),
-        (col("p_size") % 8).cast("int").as("px_col"))
-      .agg(count(lit(1)).cast("double").as("nv"))
-    operators.Regrid.regridCubic(master, aux,
-      operators.Regrid.GridDef(0.0, 16.0, 1.0, 1.0),
-      operators.Regrid.GridDef(0.0, 16.0, 2.0, 2.0), Seq("nv"))
-      .orderBy("px_row", "px_col", "nv")
-  }
-
-  /** G5 — CRS-to-CRS reprojection (feature_stacking.py:85-96: the DEM-in-
-    * EPSG:4326-vs-scenes-in-UTM case): master cell centers map through a
-    * projective (homography) transform into the aux raster's coordinate
-    * plane before the nearest-cell key derivation. Every transform
-    * coefficient is dyadic (exact decimal→double parse in both engines)
-    * and the oracle mirrors the exact IEEE expression structure, so the
-    * quotient, floor, and join keys are bit-identical cross-engine.
-    * Master cells whose image falls outside aux coverage come back NULL —
-    * the reprojection fill, exercised deliberately.
-    */
-  private def g5(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    val xform = operators.Regrid.ProjectiveTransform(
-      1.25, 0.25, 2.0,
-      -0.125, 1.25, 2.0,
-      0.0009765625, -0.00048828125, 1.0)
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(0.0, 16.0, 1.0, 1.0),
-      operators.Regrid.GridDef(0.0, 24.0, 1.0, 1.0),
-      xform, Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G6 — NAMED-CRS geodetic reprojection: the reference's real
-    * `align_rasterio` case (feature_stacking.py:85-96 — DEM in geographic
-    * EPSG:4326 vs scenes in UTM). The master grid is UTM zone 33N metres
-    * around 48°N; each cell center runs the public Snyder inverse
-    * transverse-Mercator series ([[operators.Regrid.GeographicFromUtm]])
-    * into lon/lat, then nearest-samples a geographic aux raster. The
-    * fixture geometry keeps every mapped center ≥3e-5 cell-fractions from
-    * any aux cell boundary, so the int cell keys are robust to last-ulp
-    * libm differences and the oracle evaluates the identical closed form.
-    */
-  private def g6(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(445000.0, 5320000.0, 100.0, 100.0),
-      operators.Regrid.GridDef(14.26, 48.032, 0.001, 0.0007),
-      operators.Regrid.GeographicFromUtm(33), Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G7 — SECOND named-CRS family through the same Transform2D seam as g6
-    * (proving the UTM pattern generalizes): master grid in spherical
-    * Web-Mercator (EPSG:3857) meters over Tokyo, aux raster geographic;
-    * λ = x/R, φ = 2·atan(exp(y/R)) − π/2 evaluated as the identical
-    * closed form by DuckDB (round-trip-exact interpolated constants, g6's
-    * recipe; fixture centers sit ≥0.028 cell-fractions from boundaries,
-    * and negative derived rows exercise the outside-coverage NULL path).
-    */
-  private def g7(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 40).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 80).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(15550000.0, 4260000.0, 500.0, 500.0),
-      operators.Regrid.GridDef(139.68, 35.67, 0.001, 0.0007),
-      operators.Regrid.GeographicFromWebMercator, Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G8 — THIRD named-CRS family, conic: ellipsoidal two-parallel Lambert
-    * conformal conic (Snyder 15-9..15-11 + series 3-5 — PROJ's `lcc`, the
-    * projection every CONUS-wide US product ships in) through the same
-    * Transform2D seam. Master grid in LCC(33°,45°, origin 23°/−96°) metres
-    * over Kansas; aux raster geographic. The conformal-latitude series
-    * keeps the inverse closed-form (no per-row iteration), so DuckDB
-    * evaluates the identical expression with interpolated round-trip-exact
-    * constants; fixture centers sit ≥1.4e-3 cell-fractions from aux
-    * boundaries (derived margins, /tmp-reproducible via tools notes).
-    */
-  private def g8(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(-17200.0, 1800000.0, 100.0, 100.0),
-      operators.Regrid.GridDef(-96.2, 39.12, 0.001, 0.0007),
-      operators.Regrid.GeographicFromLambertConformal(
-        operators.Regrid.LccParams(33.0, 45.0, 23.0, -96.0)),
-      Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G9 — DATUM SHIFT through the Transform2D seam: master grid geographic
-    * on WGS84, aux raster indexed in legacy Tokyo-Datum (Bessel 1841)
-    * degrees — the reference's own Tokyo scenes predate JGD2000, so this
-    * is the exact legacy-raster case. WGS84→Tokyo is the negated
-    * published Tokyo→WGS84 geocentric shift (−146.414, 507.337, 680.507)
-    * run through the abridged Molodensky closed form (h = 0); the ~11.6″
-    * offset moves every cell ≈ 360 m, so misapplying the datum would
-    * rekey every single cell. Fixture margins ≥ 0.15 cell-fractions.
-    */
-  private def g9(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(139.68, 35.68, 0.001, 0.0007),
-      operators.Regrid.GridDef(139.683, 35.677, 0.001, 0.0007),
-      operators.Regrid.AbridgedMolodensky(146.414, -507.337, -680.507,
-        operators.Regrid.Ellipsoid.Wgs84, operators.Regrid.Ellipsoid.Bessel1841),
-      Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G10 — FOURTH named-CRS family: ellipsoidal two-parallel Albers
-    * equal-area conic (Snyder 14-8..14-11 + the authalic-latitude series
-    * 3-18 — EPSG:5070's projection, the standard CONUS statistics CRS;
-    * the conic preserving AREA where Lambert preserves shape). Master
-    * grid in AEA(29.5°,45.5°, origin 23°/−96°) metres over Kansas,
-    * geographic aux; closed-form inverse, no per-row iteration; fixture
-    * margins ≥ 1.3e-3 cell-fractions.
-    */
-  private def g10(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(-138500.0, 1703200.0, 100.0, 100.0),
-      operators.Regrid.GridDef(-97.6, 38.35, 0.001, 0.0007),
-      operators.Regrid.GeographicFromAlbers(
-        operators.Regrid.AeaParams(29.5, 45.5, 23.0, -96.0)),
-      Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G11 — the WKT CRS FRONT DOOR end-to-end (the r7 verdict's top
-    * integration gap): the transform is constructed FROM `.prj` SIDECAR
-    * STRINGS, not hand-built constants — the reference's actual API shape
-    * (feature_stacking.py:85-96 drives `reproject` with CRS objects read
-    * from file metadata). Master grid = UTM 54N on WGS84 (GDAL PROJCS
-    * spelling); aux raster = legacy Tokyo-Datum geographic (ESRI `D_Tokyo`
-    * spelling with NO TOWGS84 — exercising the published named-datum
-    * table). Both WKTs are written as real `.prj` sidecars via
-    * `writeFeatureFiles`, read back through `readFeatureFiles`'s crs
-    * column, then `CrsWkt` parses and chains Snyder UTM inverse →
-    * abridged Molodensky — the exact g6+g9 math, now dispatched from
-    * text. Fixture margins ≥ 4.1e-3 cell-fractions (scanned in
-    * tools-notes); aux col −1 exercises the outside-coverage NULL path.
-    */
-  private def g11(s: SparkSession, d: String) = {
-    import s.implicits._
-    val masterWktSrc =
-      "PROJCS[\"WGS 84 / UTM zone 54N\",GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\"," +
-        "SPHEROID[\"WGS 84\",6378137,298.257223563]],PRIMEM[\"Greenwich\",0]," +
-        "UNIT[\"degree\",0.0174532925199433]],PROJECTION[\"Transverse_Mercator\"]," +
-        "PARAMETER[\"latitude_of_origin\",0],PARAMETER[\"central_meridian\",141]," +
-        "PARAMETER[\"scale_factor\",0.9996],PARAMETER[\"false_easting\",500000]," +
-        "PARAMETER[\"false_northing\",0],UNIT[\"metre\",1]]"
-    val auxWktSrc =
-      "GEOGCS[\"GCS_Tokyo\",DATUM[\"D_Tokyo\",SPHEROID[\"Bessel_1841\"," +
-        "6377397.155,299.1528128]],PRIMEM[\"Greenwich\",0.0]," +
-        "UNIT[\"Degree\",0.0174532925199433]]"
-    // round-trip each WKT through a REAL .prj sidecar (write → read), so
-    // the dispatch consumes exactly what the vector reader surfaces.
-    // Memoized per JVM (the inc1/m1 pattern): the sharded write + the
-    // reader's listing/sidecar actions are ~10 driver jobs of FIXTURE
-    // setup — they run (and are hash-checked) once; repeat runs measure
-    // the reprojection itself.
-    def viaPrj(wkt: String, tag: String): String =
-      SparkEntry.g11PrjCache.computeIfAbsent(wkt, { _ =>
-        val dir = java.nio.file.Files.createTempDirectory(s"graft_g11_$tag").toString
-        val src = Seq(("t0", "POINT (0 0)", 1L), ("t1", "POINT (1 1)", 2L))
-          .toDF("tile", "geom", "DN")
-        operators.Shapefile.writeFeatureFiles(src, dir, keyCol = "tile", crsWkt = Some(wkt))
-        operators.Shapefile.readFeatureFiles(s, dir).select("crs").first().getString(0)
-      })
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(381000.0, 3950000.0, 100.0, 100.0),
-      operators.Regrid.GridDef(139.6895, 35.68493, 0.001, 0.0007),
-      viaPrj(masterWktSrc, "m"), viaPrj(auxWktSrc, "a"),
-      Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G14 — the EPSG SHORTHAND front door: the identical reprojection as
-    * g11 with the transform dispatched from "EPSG:32654" → "EPSG:4301"
-    * code strings (UTM 54N → legacy Tokyo geographic) instead of WKT —
-    * the way users actually name CRSs. The oracle is g11's VERBATIM, so
-    * the code table must resolve to bit-identical transforms.
-    */
-  private def g14(s: SparkSession, d: String) = {
-    val master = Tables.lineitem(s, d)
-      .select((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .distinct()
-    val aux = Tables.part(s, d)
-      .groupBy((col("p_partkey") % 24).cast("int").as("px_row"),
-        ((col("p_partkey") * 7 + col("p_size")) % 26).cast("int").as("px_col"))
-      .agg(sum(col("p_retailprice").cast("decimal(18,2)")).cast("double").as("dem"))
-    operators.Regrid.reproject(master, aux,
-      operators.Regrid.GridDef(381000.0, 3950000.0, 100.0, 100.0),
-      operators.Regrid.GridDef(139.6895, 35.68493, 0.001, 0.0007),
-      "EPSG:32654", "EPSG:4301",
-      Seq("dem"), kernel = "nearest")
-      .orderBy("px_row", "px_col", "dem")
-  }
-
-  /** G12 — GEODESIC measures: per-part lon/lat quadrilaterals (WKT built
-    * in-plan, re-parsed by the measure — the round trip is part of the
-    * check) scored with the Chamberlain–Duquette spherical-excess area
-    * and great-circle haversine perimeter on the WGS84 authalic sphere.
-    * The planar shoelace would be wrong by ~cos(38°)² ≈ 0.62 here — the
-    * oracle evaluates the IDENTICAL closed form (interpolated R/Deg2Rad
-    * constants, same left-assoc 4-term folds), fixed-pointed at 2^20.
-    */
-  private def g12(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-96.0) + (col("p_partkey") % 50).cast("double") * lit(0.01)).as("lon0"),
-      (lit(30.0) + (col("p_size") % 40).cast("double") * lit(0.01)).as("lat0"),
-      (lit(0.01) + (col("p_partkey") % 7).cast("double") * lit(0.001)).as("dx"),
-      (lit(0.008) + (col("p_size") % 5).cast("double") * lit(0.001)).as("dy"))
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val wkt = concat(lit("POLYGON (("),
-      pt(col("lon0"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0")), lit("))"))
-    base.withColumn("geom", wkt)
-      .select(col("pk"),
-        floor(SpatialOps.wktAreaGeodesic(col("geom")) * lit(1048576.0))
-          .cast("long").as("area_fp"),
-        floor(SpatialOps.wktPerimeterGeodesic(col("geom")) * lit(1048576.0))
-          .cast("long").as("perim_fp"))
-      .orderBy("pk")
-  }
-
-  /** G13 — VECTOR reprojection (the ogr2ogr half of the CRS story): the
-    * g12 lon/lat quadrilaterals run through `SpatialOps.reprojectWkt`
-    * with a transform dispatched from WKT CRS strings (geographic WGS84 →
-    * UTM 15N), then explode back to vertices. The oracle evaluates the
-    * FORWARD Snyder transverse-Mercator series (8-9..8-14) closed-form —
-    * the WKT parse → transform → re-emit → re-parse round trip must be
-    * bit-invisible around the projection algebra.
-    */
-  private def g13(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val geoWkt = "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\"," +
-      "SPHEROID[\"WGS 84\",6378137,298.257223563]],PRIMEM[\"Greenwich\",0]," +
-      "UNIT[\"degree\",0.0174532925199433]]"
-    val utmWkt = "PROJCS[\"WGS 84 / UTM zone 15N\",GEOGCS[\"WGS 84\"," +
-      "DATUM[\"WGS_1984\",SPHEROID[\"WGS 84\",6378137,298.257223563]]," +
-      "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]," +
-      "PROJECTION[\"Transverse_Mercator\"],PARAMETER[\"latitude_of_origin\",0]," +
-      "PARAMETER[\"central_meridian\",-93],PARAMETER[\"scale_factor\",0.9996]," +
-      "PARAMETER[\"false_easting\",500000],PARAMETER[\"false_northing\",0]," +
-      "UNIT[\"metre\",1]]"
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-96.0) + (col("p_partkey") % 50).cast("double") * lit(0.01)).as("lon0"),
-      (lit(30.0) + (col("p_size") % 40).cast("double") * lit(0.01)).as("lat0"),
-      (lit(0.01) + (col("p_partkey") % 7).cast("double") * lit(0.001)).as("dx"),
-      (lit(0.008) + (col("p_size") % 5).cast("double") * lit(0.001)).as("dy"))
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val wkt = concat(lit("POLYGON (("),
-      pt(col("lon0"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0") + col("dy")), lit(", "),
-      pt(col("lon0"), col("lat0")), lit("))"))
-    base.withColumn("geom", wkt)
-      .withColumn("geom", SpatialOps.reprojectWkt(col("geom"),
-        operators.CrsWkt.transformBetween(geoWkt, utmWkt)))
-      .select(col("pk"),
-        posexplode(element_at(SpatialOps.wktRings(col("geom")), 1)))
-      .select(col("pk"), col("pos").as("pt_idx"),
-        col("col").getField("x").as("x"), col("col").getField("y").as("y"))
-      .orderBy("pk", "pt_idx")
-  }
-
-  /** G13b — MULTIPOINT reprojection: two opposite corners of each g13
-    * quadrilateral packed into one MULTIPOINT (written in the BARE WKT
-    * spelling, re-emitted parenthesized — both grammar paths execute),
-    * reprojected through the same WKT-dispatched WGS84 → UTM 15N
-    * transform, exploded back to vertices. The oracle is g13's forward
-    * Snyder series restricted to the two corners.
-    */
-  private def g13b(s: SparkSession, d: String) = {
-    import graft.functions.SpatialOps
-    val geoWkt = "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\"," +
-      "SPHEROID[\"WGS 84\",6378137,298.257223563]],PRIMEM[\"Greenwich\",0]," +
-      "UNIT[\"degree\",0.0174532925199433]]"
-    val utmWkt = "PROJCS[\"WGS 84 / UTM zone 15N\",GEOGCS[\"WGS 84\"," +
-      "DATUM[\"WGS_1984\",SPHEROID[\"WGS 84\",6378137,298.257223563]]," +
-      "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]," +
-      "PROJECTION[\"Transverse_Mercator\"],PARAMETER[\"latitude_of_origin\",0]," +
-      "PARAMETER[\"central_meridian\",-93],PARAMETER[\"scale_factor\",0.9996]," +
-      "PARAMETER[\"false_easting\",500000],PARAMETER[\"false_northing\",0]," +
-      "UNIT[\"metre\",1]]"
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-96.0) + (col("p_partkey") % 50).cast("double") * lit(0.01)).as("lon0"),
-      (lit(30.0) + (col("p_size") % 40).cast("double") * lit(0.01)).as("lat0"),
-      (lit(0.01) + (col("p_partkey") % 7).cast("double") * lit(0.001)).as("dx"),
-      (lit(0.008) + (col("p_size") % 5).cast("double") * lit(0.001)).as("dy"))
-    def pt(x: Column, y: Column) = concat(x.cast("string"), lit(" "), y.cast("string"))
-    val wkt = concat(lit("MULTIPOINT ("),
-      pt(col("lon0"), col("lat0")), lit(", "),
-      pt(col("lon0") + col("dx"), col("lat0") + col("dy")), lit(")"))
-    base.withColumn("geom", wkt)
-      .withColumn("geom", SpatialOps.reprojectWkt(col("geom"),
-        operators.CrsWkt.transformBetween(geoWkt, utmWkt)))
-      .select(col("pk"),
-        posexplode(flatten(functions.SpatialOps.wktRings(col("geom")))))
-      .select(col("pk"), col("pos").as("pt_idx"),
-        col("col").getField("x").as("x"), col("col").getField("y").as("y"))
-      .orderBy("pk", "pt_idx")
-  }
-
-  /** G15 — US-survey-foot State Plane dispatch (the single most common
-    * real-world CRS reject before r9): synthetic lon/lat points over the
-    * Texas Central zone projected through a ftUS `.prj` (the EPSG:2277
-    * parameterization) via the WKT front door. `CrsWkt` scales the
-    * linear parameters into metres (fe·u) and wraps the metre LCC
-    * forward in the exact affine (1/u) unit map; the oracle evaluates
-    * the identical Snyder series with constants interpolated from the
-    * SAME `LccParams` arithmetic, then the same affine — the foot path
-    * is the metre path times a constant. Outputs are fixed-point
-    * floor(v·2^6) (1/64 ft): Spark's Pow codegen is StrictMath (fdlibm)
-    * where DuckDB's is C libm — they disagree by 1 ULP on some inputs
-    * (bisected: every stage bit-equal through `t`, pow(t, n) off by one),
-    * so raw pow-bearing doubles can NEVER be hash-compared cross-engine;
-    * the fixture's worst margin on the ×64 grid is 8.5e-6 across all
-    * three SFs (Python-replica scan, the g6 recipe) vs ≤ ~5e-7 of ULP
-    * drift, so the floor decisions are provably stable. The bit-identity
-    * of the DISPATCH (ftUS parse ≡ hand-built metre chain + affine) is
-    * proven structurally in CrsWktSpec.
-    */
-  private def g15(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-101.5) + (col("p_partkey") % 80).cast("double") * lit(0.025)).as("lon"),
-      (lit(29.0) + (col("p_size") % 50).cast("double") * lit(0.06)).as("lat"))
-    val t = operators.CrsWkt.transformBetween(G15GeoWkt, G15FtUsWkt)
-    val (x, y) = t(col("lon"), col("lat"))
-    base.select(col("pk"),
-      floor(x * lit(64.0)).cast("long").as("x_fp"),
-      floor(y * lit(64.0)).cast("long").as("y_fp")).orderBy("pk")
-  }
-
-  /** S20 — the GeoTIFF raster SINK end-to-end (the write half of the
-    * reference's stage-0/1 contract, r8 verdict mandate 1): part-derived
-    * pixels → `RasterBridge.packBlocks` → `Tiff.writeGeoTiffFiles` (the
-    * reference's tiled-LZW-BigTIFF profile, one .tif per scene, written
-    * from the executors) → re-ingest through the real source path
-    * (`readGeoTiffFiles` ∘ `explodeBlocks`) → per-(scene, band) census.
-    * The oracle computes the census from the SOURCE pixel definition in
-    * DuckDB and never sees a TIFF byte — the container (pack, encode,
-    * file sharding, decode) must be completely invisible. All values are
-    * small integers, so float32 carries them exactly and the sums are
-    * integer-exact cross-engine.
-    */
-  private def s20(s: SparkSession, d: String) = {
-    import operators.{RasterBridge, Tiff}
-    val px = Tables.part(s, d).select(
-      concat(lit("sc"), (col("p_partkey") % 3).cast("string")).as("scene"),
-      (floor(col("p_partkey") / lit(3.0)).cast("int") % 2).cast("int").as("band"),
-      (floor(col("p_partkey") / lit(6.0)).cast("int") / 64).cast("int").as("px_row"),
-      (floor(col("p_partkey") / lit(6.0)).cast("int") % 64).cast("int").as("px_col"),
-      (col("p_partkey") % 997).cast("float").as("value"))
-    val blocks = RasterBridge.packBlocks(px, 16, 16, Float.NaN,
-      keyCols = Seq("scene", "band"))
-      .withColumn("origin_x", lit(500000.0)).withColumn("origin_y", lit(4100000.0))
-      .withColumn("px_w", lit(30.0)).withColumn("px_h", lit(30.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_s20").toString
-    Tiff.writeGeoTiffFiles(blocks, dir, sceneCol = "scene",
-      compressionCode = 5, bigTiff = true) // feature_stacking.py:226-249 profile
-    val back = RasterBridge.explodeBlocks(Tiff.readGeoTiffFiles(s, dir), 16, 16, Float.NaN)
-    back.groupBy(col("scene"), col("band"))
-      .agg(count(lit(1)).as("n_px"),
-        sum(col("value").cast("long")).as("sum_v"),
-        sum((col("px_row") * lit(131) + col("px_col")).cast("long")).as("coord_sum"))
-      .orderBy("scene", "band")
-  }
-
-  /** S21 — WEBDATASET shard ingest (r9): two ustar shards, each holding
-    * per-sample PNG + TXT members (the multimodal-corpus shipping
-    * convention — one tar per shard, one member per modality), exploded
-    * by `Tar.tarToFiles` and routed by modality key in ONE plan: PNGs
-    * through the real PNG decoder to a pixel census, text to a byte
-    * census. The oracle regenerates both censuses from the member
-    * generators — the tar container (headers, checksums, 512-padding,
-    * zero-length members) must be invisible.
-    */
-  private def s21(s: SparkSession, d: String) = {
-    import s.implicits._
-    def shard(sh: Int, n: Int): Array[Byte] = operators.Tar.synthTar(
-      (0 until n).flatMap { i =>
-        val png = operators.MultimodalOps.synthPng(6, 4, 3, r => (r + i) % 5)(
-          (r, c, ch) => (sh * 7 + i * 13 + r * 31 + c * 7 + ch * 11) % 256)
-        val txt = s"sample $sh-$i " + ("x" * ((i * 11 + sh) % 40))
-        Seq((f"$i%04d.png", png), (f"$i%04d.txt", txt.getBytes("UTF-8")))
-      })
-    val files = operators.Tar.tarToFiles(
-      Seq((1L, shard(1, 5)), (2L, shard(2, 7))).toDF("shard_id", "bytes"))
-    val pngCensus = operators.MultimodalOps.pngToPixels(
-        files.filter(col("ext") === "png")
-          .select(col("shard_id"), col("bytes")))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("long")).as("total"))
-      .withColumn("kind", lit("png"))
-    val txtCensus = files.filter(col("ext") === "txt")
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n"), sum(length(col("bytes")).cast("long")).as("total"))
-      .withColumn("kind", lit("txt"))
-    pngCensus.unionByName(txtCensus)
-      .select("shard_id", "kind", "n", "total").orderBy("shard_id", "kind")
-  }
-
-  /** S23 — zip shard ingest (the OTHER container corpora ship in besides
-    * tar; [[operators.Zip]] walks EOCD → central directory → local
-    * headers, stored AND deflate members in one shard, CRC-verified).
-    * Census proves exact member payloads through both methods: per
-    * (shard, modality) count, byte length, and a full ASCII-code
-    * checksum of every decoded character — the container (headers,
-    * deflate streams, CRCs, padding) is invisible to the oracle, which
-    * regenerates the member texts from their definitions.
-    */
-  private def s23(s: SparkSession, d: String) = {
-    import s.implicits._
-    def shard(sh: Int, n: Int, z64: Boolean = false): Array[Byte] =
-      operators.Zip.synthZip(
-        (0 until n).flatMap { i =>
-          val txt = s"zip sample $sh-$i " + ("y" * ((i * 13 + sh * 3) % 50))
-          val jsn = s"""{"id":$i,"shard":$sh,"pad":"${"z" * ((i * 7 + sh) % 30)}"}"""
-          Seq((f"$i%04d.txt", txt.getBytes("UTF-8")), (f"$i%04d.json", jsn.getBytes("UTF-8")))
-        },
-        deflate = _.endsWith(".txt"), // mixed methods inside one shard
-        forceZip64 = z64)
-    // shard 3 (r11) ships the ZIP64 layout — masked EOCD + EOCD64 record
-    // + per-member 0x0001 extras — over the same member formula, so the
-    // 64-bit directory walk must be invisible to the census
-    val files = operators.Zip.zipToFiles(
-      Seq((1, shard(1, 6)), (2, shard(2, 9)), (3, shard(3, 7, z64 = true)))
-        .toDF("shard_id", "bytes"))
-    files.select(col("shard_id"), col("ext"), col("bytes").cast("string").as("txt"))
-      .withColumn("ascii_sum", expr(
-        "aggregate(sequence(1, length(txt)), 0L, (a, i) -> a + ascii(substring(txt, i, 1)))"))
-      .groupBy("shard_id", "ext")
-      .agg(count(lit(1)).as("n"), sum(length(col("txt")).cast("long")).as("sum_len"),
-        sum(col("ascii_sum")).as("ascii_sum"))
-      .orderBy("shard_id", "ext")
-  }
-
-  /** S24 — NPZ tensor bundles end to end: part-derived tensors (six
-    * dtypes across the whole supported descr set) → `.npy` encode →
-    * zip-bundled `.npz` shards → [[operators.Npy.npzToValues]] decode →
-    * per-tensor census (count, fixed-point value sum, order-weighted
-    * checksum proving C-order element positions). The oracle regenerates
-    * every element from the source definition — npy headers, zip
-    * directory, and deflate streams are invisible. Float values are
-    * exact multiples of 1/8 (f4-representable), so floor(v*64) is
-    * deterministic on both engines; the one-tensor-per-key-run build is
-    * the documented memory floor (the GPKG/GeoTIFF-sink doctrine).
-    */
-  private def s24(s: SparkSession, d: String) = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val parts = Tables.part(s, d).select(
-      (col("p_partkey") % 6).cast("int").as("tid"), col("p_partkey").as("pk"))
-    val grouped = parts.groupBy("tid").agg(sort_array(collect_list(col("pk"))).as("pks"))
-    val npyRdd = grouped.rdd.flatMap { r =>
-      val tid = r.getInt(0)
-      val pks = r.getSeq[Long](1)
-      val bytes = tid match {
-        case 0 => operators.Npy.synthNpy("<f4", Seq(pks.length),
-          doubles = pks.map(pk => (pk % 9973) * 0.25).toArray)
-        case 1 => operators.Npy.synthNpy("<f8", Seq(pks.length),
-          doubles = pks.map(pk => (pk % 9973) * 0.125).toArray)
-        case 2 => operators.Npy.synthNpy("<i2", Seq(pks.length),
-          longs = pks.map(pk => pk % 32768 - 16384).toArray)
-        case 3 => operators.Npy.synthNpy("<i4", Seq(pks.length),
-          longs = pks.map(pk => pk % 1000003).toArray)
-        case 4 => operators.Npy.synthNpy("<i8", Seq(pks.length),
-          longs = pks.map(pk => (pk % 9973) * 1000000007L).toArray)
-        case _ => operators.Npy.synthNpy("|u1", Seq(pks.length),
-          longs = pks.map(pk => pk % 256).toArray)
-      }
-      // r11: t6 re-spells t2's values as a 2-D FORTRAN-order v2-header
-      // tensor (even-truncated so the shape is rectangular) — decode
-      // surfaces C order either way, so the oracle's idx/value mapping is
-      // identical; the column-major buffer and 4-byte header must be
-      // invisible
-      val extra = if (tid != 2) Nil else {
-        val m = pks.length - (pks.length % 2)
-        List(Row(0, "t6", operators.Npy.synthNpy("<i2", Seq(2, m / 2),
-          longs = pks.take(m).map(pk => pk % 32768 - 16384).toArray,
-          fortranOrder = true, version = 2)))
-      }
-      Row(tid % 2, s"t$tid", bytes) :: extra
-    }
-    val npyDf = s.createDataFrame(npyRdd, StructType(Seq(
-      StructField("shard_id", IntegerType, nullable = false),
-      StructField("name", StringType, nullable = false),
-      StructField("npy", BinaryType, nullable = false))))
-    val bundles = npyDf.groupBy("shard_id")
-      .agg(sort_array(collect_list(struct(col("name"), col("npy")))).as("members"))
-    val npzRdd = bundles.rdd.map { r =>
-      val members = r.getSeq[Row](1).map(m =>
-        (m.getString(0) + ".npy", m.getAs[Array[Byte]](1)))
-      Row(r.getInt(0), operators.Zip.synthZip(members))
-    }
-    val npzDf = s.createDataFrame(npzRdd, StructType(Seq(
-      StructField("shard_id", IntegerType, nullable = false),
-      StructField("bytes", BinaryType, nullable = false))))
-    operators.Npy.npzToValues(npzDf)
-      .withColumn("value_fp", when(col("value_l").isNotNull, col("value_l"))
-        .otherwise(floor(col("value_d") * 64).cast("long")))
-      .groupBy("shard_id", "tensor", "dtype")
-      .agg(count(lit(1)).as("n"), sum(col("value_fp")).as("sum_fp"),
-        sum(((col("elem_idx") + 1) * col("value_fp")) % 1000000007L).as("ord_fp"))
-      .orderBy("tensor")
-  }
-
-  /** S22 — GeoParquet round trip (the parquet-native vector half next to
-    * the GPKG/SHP codecs; reference anchor: the stage-2/3 vector
-    * artifacts, image_segmentation.py:153-162 and
-    * object_classifier.py:193-213, under the published
-    * "Parquet/GeoParquet" storage line): part-derived POINT/LINESTRING/
-    * POLYGON features → `writeGeoParquet` (WKT→WKB + `geo` footer on
-    * every part-file) → `readGeoParquet` (footer-recognized, WKB→WKT) →
-    * per-vertex census. The oracle regenerates every vertex from the
-    * source definition — the container (WKB encode, footer rewrite,
-    * decode) must be invisible. All coordinates sit on the 1/64 grid
-    * exactly (pure binary-exact arithmetic, no transcendentals), so the
-    * ×64 fixed point is deterministic on both engines.
-    */
-  /** s22/s22b's shared feature frame: mixed POINT/LINESTRING/POLYGON WKT
-    * over dyadic 1/64-grid coordinates (binary-exact through the WKB
-    * round trip).
-    */
-  private def s22Features(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (col("p_partkey") % 3).cast("int").as("kind"),
-      ((col("p_partkey") % 50).cast("double") * lit(1.5) + lit(0.25)).as("x"),
-      ((col("p_size") % 40).cast("double") * lit(0.75) + lit(0.125)).as("y"),
-      (col("p_partkey") % 997).as("attr"))
-    def n(c: Column) = c.cast("string")
-    val wkt = when(col("kind") === 0,
-        concat(lit("POINT ("), n(col("x")), lit(" "), n(col("y")), lit(")")))
-      .when(col("kind") === 1,
-        concat(lit("LINESTRING ("), n(col("x")), lit(" "), n(col("y")), lit(", "),
-          n(col("x") + lit(2.0)), lit(" "), n(col("y") + lit(1.5)), lit(")")))
-      .otherwise(
-        concat(lit("POLYGON (("), n(col("x")), lit(" "), n(col("y")), lit(", "),
-          n(col("x") + lit(2.5)), lit(" "), n(col("y")), lit(", "),
-          n(col("x") + lit(2.5)), lit(" "), n(col("y") + lit(1.25)), lit(", "),
-          n(col("x")), lit(" "), n(col("y") + lit(1.25)), lit(", "),
-          n(col("x")), lit(" "), n(col("y")), lit("))")))
-    base.withColumn("geom", wkt).select("pk", "attr", "geom")
-  }
-
-  /** The s22 family's fixed-point vertex explode (floor(v·64) on every
-    * ring vertex — the container must be invisible in the hash).
-    */
-  private def s22Verts(back: DataFrame): DataFrame =
-    back.select(col("store"), col("pk"), col("attr"),
-        posexplode(flatten(functions.SpatialOps.wktRings(col("geom")))))
-      .select(col("store"), col("pk"), col("attr"), col("pos").as("pt_idx"),
-        floor(col("col").getField("x") * lit(64.0)).cast("long").as("x_fp"),
-        floor(col("col").getField("y") * lit(64.0)).cast("long").as("y_fp"))
-      .orderBy("store", "pk", "pt_idx")
-
-  private def s22(s: SparkSession, d: String) = {
-    val src = s22Features(s, d)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_s22").toString
-    val dir = tmp + "/store"
-    operators.GeoParquet.writeGeoParquet(src, dir, geomCol = "geom")
-    // r11: a SECOND store written with a projected CRS (.prj WKT1 →
-    // PROJJSON through the engine's CRS front door) — the footer must
-    // carry a non-null `crs` a GeoParquet consumer would honor (reading
-    // projected coordinates as lon/lat was the documented interop
-    // hazard); same features, so the census doubles exactly
-    val dir2 = tmp + "/store_utm"
-    val utmPrj = """PROJCS["WGS 84 / UTM zone 33N",GEOGCS["WGS 84",""" +
-      """DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]],""" +
-      """PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]],""" +
-      """PROJECTION["Transverse_Mercator"],PARAMETER["latitude_of_origin",0],""" +
-      """PARAMETER["central_meridian",15],PARAMETER["scale_factor",0.9996],""" +
-      """PARAMETER["false_easting",500000],PARAMETER["false_northing",0],""" +
-      """UNIT["metre",1]]"""
-    operators.GeoParquet.writeGeoParquet(src, dir2, geomCol = "geom",
-      crsWkt = Some(utmPrj))
-    val crsJson = operators.GeoParquet.geoMetadata(dir2).getOrElse("")
-    require(crsJson.contains("\"crs\":{") && crsJson.contains("ProjectedCRS") &&
-      crsJson.contains("Transverse Mercator"),
-      s"projected-CRS store footer lacks a PROJJSON crs: ${crsJson.take(200)}")
-    val back = operators.GeoParquet.readGeoParquet(s, dir)
-      .withColumn("store", lit(1))
-      .unionByName(operators.GeoParquet.readGeoParquet(s, dir2)
-        .withColumn("store", lit(2)))
-    s22Verts(back)
-  }
-
-  /** S22B — the EPSG-SHORTHAND GeoParquet store (r12): the same features
-    * written with `crsWkt = Some("EPSG:32633")`. The footer's PROJJSON
-    * must be BYTE-IDENTICAL to what the equivalent `.prj` WKT path emits
-    * (the parameter tree derives from the shorthand table's own
-    * parameterization — r11 verdict missing-3: shorthand-dispatched
-    * stores used to get a null footer CRS). Fixture setup memoized per
-    * JVM like g11 (the store write is setup; repeat runs measure the
-    * read + explode).
-    */
-  private def s22b(s: SparkSession, d: String) = {
-    val utm33Prj = """PROJCS["WGS 84 / UTM zone 33N",GEOGCS["WGS 84",""" +
-      """DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]],""" +
-      """PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]],""" +
-      """PROJECTION["Transverse_Mercator"],PARAMETER["latitude_of_origin",0],""" +
-      """PARAMETER["central_meridian",15],PARAMETER["scale_factor",0.9996],""" +
-      """PARAMETER["false_easting",500000],PARAMETER["false_northing",0],""" +
-      """UNIT["metre",1]]"""
-    val dir = s22bDirCache.computeIfAbsent(d, { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s22b").toString + "/store"
-      operators.GeoParquet.writeGeoParquet(s22Features(s, d), tmp, geomCol = "geom",
-        crsWkt = Some("EPSG:32633"))
-      tmp
-    })
-    val footer = operators.GeoParquet.geoMetadata(dir).getOrElse("")
-    val expected = operators.CrsWkt.toProjjson(utm33Prj)
-    require(footer.contains(s""""crs":$expected"""),
-      s"EPSG-shorthand store footer CRS != the .prj path's document: " +
-        s"${footer.take(300)}")
-    s22Verts(operators.GeoParquet.readGeoParquet(s, dir).withColumn("store", lit(1)))
-  }
-
-  /** G16 — polar stereographic (EPSG:3413, the NSIDC sea-ice grid every
-    * polar corpus ships in) through the EPSG shorthand front door:
-    * Arctic lon/lat points forward-projected, fixed-point floor(v·2^6)
-    * outputs (the g15 rule — pow is StrictMath-vs-libm unstable by
-    * 1 ULP, never raw-hashed). Fixture margins on the ×64 grid scanned
-    * at all three SFs with the Python replica: worst 3.4e-5 vs ≤ ~1.2e-7
-    * ULP drift; constants off special angles so no exact-zero sin/cos.
-    */
-  private def g16(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-179.13) + (col("p_partkey") % 144).cast("double") * lit(2.47)).as("lon"),
-      (lit(60.29) + (col("p_size") % 28).cast("double") * lit(0.97)).as("lat"))
-    val crs = operators.CrsWkt.parseCrs("EPSG:3413")
-      .asInstanceOf[operators.CrsWkt.Projected]
-    val (x, y) = crs.forward(col("lon"), col("lat"))
-    base.select(col("pk"),
-      floor(x * lit(64.0)).cast("long").as("x_fp"),
-      floor(y * lit(64.0)).cast("long").as("y_fp")).orderBy("pk")
-  }
-
-  /** G17 — NAD83 / UTM (EPSG:26915, the GRS80 UTM band that was a reject
-    * before r9's parameterized Transverse Mercator): central-US lon/lat
-    * points forward-projected through the EPSG shorthand. The TM series
-    * is pow-free, so raw double outputs hash cross-engine (the g13
-    * precedent); the oracle evaluates the identical Snyder series with
-    * TmParams' GRS80-derived constants interpolated from the SAME Scala
-    * arithmetic, including the exact −M(φ0)=−0.0 northing term.
-    */
-  private def g17(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-96.0) + (col("p_partkey") % 50).cast("double") * lit(0.02)).as("lon"),
-      (lit(38.0) + (col("p_size") % 40).cast("double") * lit(0.05)).as("lat"))
-    val crs = operators.CrsWkt.parseCrs("EPSG:26915")
-      .asInstanceOf[operators.CrsWkt.Projected]
-    val (x, y) = crs.forward(col("lon"), col("lat"))
-    base.select(col("pk"), x.as("x"), y.as("y")).orderBy("pk")
-  }
-
-  /** G18 — the two TmParams branches g17 doesn't reach: a classic
-    * Gauss-Krüger zone 3 (.prj-style WKT1: BESSEL ellipsoid, k0 = 1,
-    * FE = 3 500 000 — the legacy German national grid) through the WKT
-    * front door, and a nonzero-latitude-of-origin TM (the −M(φ0)
-    * northing offset, interpolated as the same Scala double on both
-    * sides). Fixed-point floor(v·2^6) outputs (the g15/g16 rule): the
-    * r9 raw-double spelling failed by 1 ULP on gk_y — the (m − M(φ0))
-    * cancellation amplifies StrictMath-vs-libm sin drift past the 53rd
-    * bit even though the series is pow-free. Fixture constants shifted
-    * off special angles (7.217/47.303 — the old 7.2 base put pk%60==30
-    * exactly ON the central meridian). Margin scan
-    * (tools/g18_margin_scan.py, committed): worst ×64-grid distance
-    * 3.0e-5 across all 3 SFs vs ~3e-8 ULP drift at this magnitude.
-    */
-  private def g18(s: SparkSession, d: String) = {
-    val gkWkt =
-      "PROJCS[\"DHDN-ish / Gauss-Krueger zone 3\",GEOGCS[\"Bessel geographic\"," +
-        "DATUM[\"Tokyo\",SPHEROID[\"Bessel 1841\",6377397.155,299.1528128]]," +
-        "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]," +
-        "PROJECTION[\"Transverse_Mercator\"],PARAMETER[\"latitude_of_origin\",0]," +
-        "PARAMETER[\"central_meridian\",9],PARAMETER[\"scale_factor\",1]," +
-        "PARAMETER[\"false_easting\",3500000],PARAMETER[\"false_northing\",0]," +
-        "UNIT[\"metre\",1]]"
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(7.217) + (col("p_partkey") % 60).cast("double") * lit(0.06)).as("lon"),
-      (lit(47.303) + (col("p_size") % 45).cast("double") * lit(0.08)).as("lat"))
-    val gk = operators.CrsWkt.parseCrs(gkWkt)
-      .asInstanceOf[operators.CrsWkt.Projected].forward
-    val lat0Tm = operators.Regrid.TransverseMercatorFromGeographic(
-      operators.Regrid.TmParams(9.0, 48.0, 1.0, 250000.0, 100000.0))
-    val (x1, y1) = gk(col("lon"), col("lat"))
-    val (x2, y2) = lat0Tm(col("lon"), col("lat"))
-    base.select(col("pk"),
-      floor(x1 * lit(64.0)).cast("long").as("gk_x"),
-      floor(y1 * lit(64.0)).cast("long").as("gk_y"),
-      floor(x2 * lit(64.0)).cast("long").as("o_x"),
-      floor(y2 * lit(64.0)).cast("long").as("o_y")).orderBy("pk")
-  }
-
-  /** DHDN → WGS84 Bursa–Wolf parameters (the published German national
-    * 7-parameter set) + the GK zone-4 / WGS84 WKT pair g19 dispatches.
-    */
-  private val G19Params = (598.1, 73.7, 418.2, 0.202, 0.045, -2.455, 6.7)
-  private val G19GkWkt = {
-    val (dx, dy, dz, rx, ry, rz, ds) = G19Params
-    "PROJCS[\"DHDN / Gauss-Krueger zone 4\",GEOGCS[\"DHDN\"," +
-      "DATUM[\"Deutsches_Hauptdreiecksnetz\"," +
-      "SPHEROID[\"Bessel 1841\",6377397.155,299.1528128]," +
-      s"TOWGS84[$dx,$dy,$dz,$rx,$ry,$rz,$ds]]," +
-      "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]," +
-      "PROJECTION[\"Transverse_Mercator\"],PARAMETER[\"latitude_of_origin\",0]," +
-      "PARAMETER[\"central_meridian\",12],PARAMETER[\"scale_factor\",1]," +
-      "PARAMETER[\"false_easting\",4500000],PARAMETER[\"false_northing\",0]," +
-      "UNIT[\"metre\",1]]"
-  }
-  private val G19Wgs84Wkt =
-    "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\"," +
-      "SPHEROID[\"WGS 84\",6378137,298.257223563]],PRIMEM[\"Greenwich\",0]," +
-      "UNIT[\"degree\",0.0174532925199433]]"
-
-  /** G19 — 7-parameter Helmert (Bursa–Wolf) datum transform through the
-    * WKT front door: a DHDN Gauss-Krüger zone-4 `.prj` whose TOWGS84
-    * node carries the full rotation+scale set (the European legacy
-    * staple CrsWkt rejected before r10). Chain: GK inverse → geocentric
-    * Helmert (position-vector convention, exact driver-side matrix) →
-    * Bowring inverse → WGS84 lon/lat, staged per composition step (the
-    * g11 barrier). Outputs fixed-point floor(deg·2^20) per the g15/g18
-    * rule; margin scan (tools/g19_margin_scan.py, committed): worst
-    * 2^20-grid distance 3.0e-4 across all 3 SFs vs ≲1e-6 drift.
-    */
-  private def g19(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(4420000.0) + (col("p_partkey") % 60).cast("double") * lit(2963.0)).as("gx"),
-      (lit(5240000.0) + (col("p_size") % 45).cast("double") * lit(4231.0)).as("gy"))
-    val t = operators.CrsWkt.transformBetween(G19GkWkt, G19Wgs84Wkt)
-    val (staged, lonC, latC, tmps) =
-      operators.Regrid.stageTransform(base, t, col("gx"), col("gy"))
-    staged.select(col("pk"),
-      floor(lonC * lit(1048576.0)).cast("long").as("lon_fp"),
-      floor(latC * lit(1048576.0)).cast("long").as("lat_fp"))
-      .orderBy("pk")
-  }
-
-  /** G20 — polar stereographic VARIANT A (EPSG 9810: scale factor at the
-    * pole — the UPS parameterization, the last documented
-    * projection-family reject) through the EPSG:5041 shorthand: Arctic
-    * lon/lat forward-projected, fixed-point floor(v·2^6) outputs (the
-    * g16 rule — the t-kernel carries a pow). Margin scan
-    * (tools/g20_margin_scan.py, committed): worst ×64-grid distance
-    * 3.4e-5 across all 3 SFs vs ≲2e-7 ULP drift at UPS magnitudes.
-    */
-  private def g20(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (lit(-178.73) + (col("p_partkey") % 120).cast("double") * lit(2.99)).as("lon"),
-      (lit(62.17) + (col("p_size") % 27).cast("double") * lit(1.01)).as("lat"))
-    val crs = operators.CrsWkt.parseCrs("EPSG:5041")
-      .asInstanceOf[operators.CrsWkt.Projected]
-    val (x, y) = crs.forward(col("lon"), col("lat"))
-    base.select(col("pk"),
-      floor(x * lit(64.0)).cast("long").as("x_fp"),
-      floor(y * lit(64.0)).cast("long").as("y_fp")).orderBy("pk")
-  }
-
-  /** G21 — GEOMETRYCOLLECTION census (r11: the last documented WKT-type
-    * reject becomes a first-class surface): a mixed frame of plain
-    * geometries, two collection shapes (heterogeneous members incl. a
-    * MULTIPOINT), and `GEOMETRYCOLLECTION EMPTY`, exploded flat through
-    * [[functions.SpatialOps.collectionMembers]] (plain geometries ride
-    * the same surface as one-member collections; EMPTY surfaces as a
-    * countable zero-member row). Per member: type word, point count, and
-    * fixed-point envelope corners — all coordinates dyadic (1/64 grid),
-    * the oracle regenerates every member from the kind formulas.
-    */
-  private def g21(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (col("p_partkey") % 5).cast("int").as("kind"),
-      ((col("p_partkey") % 50).cast("double") * lit(1.5) + lit(0.25)).as("x"),
-      ((col("p_size") % 40).cast("double") * lit(0.75) + lit(0.125)).as("y"))
-    def n(c: Column) = c.cast("string")
-    val x = col("x"); val y = col("y")
-    def pt(px: Column, py: Column) =
-      concat(lit("POINT ("), n(px), lit(" "), n(py), lit(")"))
-    val wkt = when(col("kind") === 0, pt(x, y))
-      .when(col("kind") === 1, concat(lit("LINESTRING ("), n(x), lit(" "), n(y),
-        lit(", "), n(x + 2.0), lit(" "), n(y + 1.5), lit(")")))
-      .when(col("kind") === 2, concat(lit("GEOMETRYCOLLECTION ("), pt(x, y),
-        lit(", LINESTRING ("), n(x + 1.0), lit(" "), n(y), lit(", "),
-        n(x + 3.0), lit(" "), n(y + 0.5), lit("))")))
-      .when(col("kind") === 3, concat(lit("GEOMETRYCOLLECTION (POLYGON (("),
-        n(x), lit(" "), n(y), lit(", "), n(x + 2.0), lit(" "), n(y), lit(", "),
-        n(x + 2.0), lit(" "), n(y + 1.0), lit(", "), n(x), lit(" "), n(y),
-        lit(")), "), pt(x + 5.0, y + 2.0),
-        lit(", MULTIPOINT (("), n(x + 6.0), lit(" "), n(y), lit("), ("),
-        n(x + 7.0), lit(" "), n(y + 0.25), lit(")))")))
-      .otherwise(lit("GEOMETRYCOLLECTION EMPTY"))
-    base.withColumn("geom", wkt)
-      .select(col("pk"), col("kind"),
-        posexplode_outer(functions.SpatialOps.collectionMembers(col("geom"))))
-      .select(col("pk"), col("kind"),
-        coalesce(col("pos"), lit(-1)).cast("int").as("member_idx"),
-        coalesce(upper(regexp_extract(col("col"), "^\\s*([A-Za-z]+)", 1)),
-          lit("EMPTY")).as("mtype"),
-        coalesce(functions.SpatialOps.wktNumPoints(col("col")).cast("long"),
-          lit(0L)).as("n_pts"),
-        coalesce(floor(functions.SpatialOps.wktEnvelope(col("col"))
-          .getField("xmin") * lit(64.0)), lit(0.0)).cast("long").as("xmin_fp"),
-        coalesce(floor(functions.SpatialOps.wktEnvelope(col("col"))
-          .getField("ymax") * lit(64.0)), lit(0.0)).cast("long").as("ymax_fp"))
-      .orderBy("pk", "member_idx")
-  }
-
-  /** g22 — NESTED collections through [[functions.CollectionLeavesExpr]]
-    * (r12): same fixture algebra as g21, but the collections nest — a
-    * GC-in-GC with leaves either side (leaf order + index continuity), a
-    * depth-3 chain around a POLYGON, and a nested `GEOMETRYCOLLECTION
-    * EMPTY` sibling whose zero leaves must shift the MULTIPOINT's index
-    * left. Every leaf's type/points/envelope regenerates closed-form, so
-    * the depth walk (paren counter, not the flat lookahead) is the only
-    * thing under test.
-    */
-  private def g22(s: SparkSession, d: String) = {
-    val base = Tables.part(s, d).select(col("p_partkey").as("pk"),
-      (col("p_partkey") % 5).cast("int").as("kind"),
-      ((col("p_partkey") % 50).cast("double") * lit(1.5) + lit(0.25)).as("x"),
-      ((col("p_size") % 40).cast("double") * lit(0.75) + lit(0.125)).as("y"))
-    def n(c: Column) = c.cast("string")
-    val x = col("x"); val y = col("y")
-    def pt(px: Column, py: Column) =
-      concat(lit("POINT ("), n(px), lit(" "), n(py), lit(")"))
-    val wkt = when(col("kind") === 0, pt(x, y))
-      .when(col("kind") === 1, concat(lit("GEOMETRYCOLLECTION ("), pt(x, y),
-        lit(", GEOMETRYCOLLECTION (LINESTRING ("), n(x + 1.0), lit(" "), n(y),
-        lit(", "), n(x + 3.0), lit(" "), n(y + 0.5), lit("), "),
-        pt(x + 4.0, y + 2.0), lit("))")))
-      .when(col("kind") === 2, concat(
-        lit("GEOMETRYCOLLECTION (GEOMETRYCOLLECTION (GEOMETRYCOLLECTION (POLYGON (("),
-        n(x), lit(" "), n(y), lit(", "), n(x + 2.0), lit(" "), n(y), lit(", "),
-        n(x + 2.0), lit(" "), n(y + 1.0), lit(", "), n(x), lit(" "), n(y),
-        lit(")))))")))
-      .when(col("kind") === 3, concat(lit("GEOMETRYCOLLECTION ("), pt(x, y),
-        lit(", GEOMETRYCOLLECTION EMPTY, MULTIPOINT (("), n(x + 6.0), lit(" "),
-        n(y), lit("), ("), n(x + 7.0), lit(" "), n(y + 0.25), lit(")))")))
-      .otherwise(lit("GEOMETRYCOLLECTION EMPTY"))
-    base.withColumn("geom", wkt)
-      .select(col("pk"), col("kind"),
-        posexplode_outer(functions.SpatialOps.collectionLeaves(col("geom"))))
-      .select(col("pk"), col("kind"),
-        coalesce(col("pos"), lit(-1)).cast("int").as("member_idx"),
-        coalesce(upper(regexp_extract(col("col"), "^\\s*([A-Za-z]+)", 1)),
-          lit("EMPTY")).as("mtype"),
-        coalesce(functions.SpatialOps.wktNumPoints(col("col")).cast("long"),
-          lit(0L)).as("n_pts"),
-        coalesce(floor(functions.SpatialOps.wktEnvelope(col("col"))
-          .getField("xmin") * lit(64.0)), lit(0.0)).cast("long").as("xmin_fp"),
-        coalesce(floor(functions.SpatialOps.wktEnvelope(col("col"))
-          .getField("ymax") * lit(64.0)), lit(0.0)).cast("long").as("ymax_fp"))
-      .orderBy("pk", "member_idx")
-  }
-
-  private val G15UsFoot = 0.30480060960121924 // 1200/3937
-  private val G15GeoWkt =
-    "GEOGCS[\"NAD83\",DATUM[\"North_American_Datum_1983\"," +
-      "SPHEROID[\"GRS 1980\",6378137,298.257222101]],PRIMEM[\"Greenwich\",0]," +
-      "UNIT[\"degree\",0.0174532925199433]]"
-  private val G15FtUsWkt =
-    "PROJCS[\"NAD83 / Texas Central (ftUS)\",GEOGCS[\"NAD83\"," +
-      "DATUM[\"North_American_Datum_1983\",SPHEROID[\"GRS 1980\",6378137,298.257222101]]," +
-      "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]," +
-      "PROJECTION[\"Lambert_Conformal_Conic_2SP\"]," +
-      "PARAMETER[\"standard_parallel_1\",31.88333333333333]," +
-      "PARAMETER[\"standard_parallel_2\",30.11666666666667]," +
-      "PARAMETER[\"latitude_of_origin\",29.66666666666667]," +
-      "PARAMETER[\"central_meridian\",-100.3333333333333]," +
-      "PARAMETER[\"false_easting\",2296583.333333333]," +
-      "PARAMETER[\"false_northing\",9842500.0]," +
-      s"UNIT[\"Foot_US\",$G15UsFoot]]"
-
-  /** A8 — per-tile PCA, driver-checked: 4 synthetic tiles of 64 pixels with
-    * per-tile slope t+1 (x uniform 0-7, y = slope·x + independent 0-7
-    * noise). All moments are integer-exact, the eigen-gap is large, so the
-    * power iteration's 64 rounds land ~1e-50 from the true axis and the
-    * DuckDB closed-form 2×2 eigenvector (θ = atan2(2b, a−c)/2) agrees to
-    * well past the round(6). Sign conventions coincide: b > 0 ⇒
-    * θ ∈ (0, π/2) ⇒ cos θ > 0 = "first nonzero component positive".
-    */
-  private def a8(s: SparkSession, d: String) = {
-    val base = s.range(256).select(
-      floor(col("id") / 64).cast("int").as("tile"),
-      col("id").cast("int").as("idx"),
-      (col("id") % 64 % 8).cast("double").as("x"),
-      ((floor(col("id") / 64) + 1) * (col("id") % 64 % 8) +
-        floor(col("id") % 64 / 8)).cast("double").as("y"))
-    operators.TilePca.withPca1(base, Seq("tile"), Seq("x", "y"))
-      .select(col("tile"), col("idx"), round(col("pca1"), 6).as("pca1"))
-      .orderBy("tile", "idx")
-  }
-
-  /** W7 — 2-D stencil through the halo exchange, driver-checked: 3×3
-    * neighborhood mean over a 16×16 cell grid split into four 8×8 tiles,
-    * so every seam case (edge, corner, cross-tile) occurs. The oracle is
-    * the tile-free relational form (self-join on offset ranges) — a hash
-    * match proves halo copies reach exactly the right tiles exactly once.
-    */
-  private def w7(s: SparkSession, d: String) = {
-    val cells = Tables.lineitem(s, d)
-      .groupBy((col("l_orderkey") % 16).cast("int").as("px_row"),
-        (col("l_partkey") % 16).cast("int").as("px_col"))
-      .agg(count(lit(1)).as("v"))
-    operators.Halo.tileStencilMean(cells, "px_row", "px_col", "v",
-      tileH = 8, tileW = 8, radius = 1, numRows = 16, numCols = 16)
-      .select(col("px_row"), col("px_col"), col("n_neigh").cast("int").as("n_neigh"),
-        col("nb_mean"))
-      .orderBy("px_row", "px_col")
-  }
-
-  /** kmv1 — KMV distinct-count sketch beside the exact count: per return
-    * flag, the k=64 sketch estimate of distinct part keys. Deterministic
-    * (md5-hashed, RNG-free), so the oracle recomputes the SAME estimate —
-    * the sketch math itself is hash-gated, not just "close enough".
-    */
-  private def kmv1(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val sk = operators.Sketches.kmvDistinct(li, col("l_partkey"), Seq("l_returnflag"), k = 64)
-    val exact = li.groupBy("l_returnflag")
-      .agg(countDistinct(col("l_partkey")).as("exact_distinct"))
-    sk.join(exact, Seq("l_returnflag")).orderBy("l_returnflag")
-  }
-
-  /** cms1 — COUNT-MIN frequency sketch over the 3-gram SHINGLE stream
-    * (16,657 distinct at sf0.01 — the token vocabulary is only 31 words,
-    * which would never collide in the table): the depth=4 x width=512
-    * counter table built as one bounded aggregate, point-queried for the
-    * 30 lexicographically-smallest distinct shingles, beside their exact
-    * counts. md5-seeded and integer-only, so the oracle recomputes the
-    * sketch AND the estimates bit-for-bit (the kmv1 doctrine); est >=
-    * exact always, and 16k keys over 512 buckets guarantee real
-    * collisions, so the min-over-rows path is exercised, not vacuous.
-    */
-  private def cms1(s: SparkSession, d: String) = {
-    val toks = Tables.documents(s, d)
-      .select(explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("tok"))
-    val sketch = operators.Sketches.countMin(toks, col("tok"), depth = 4, width = 512)
-    val probes = toks.distinct().orderBy("tok").limit(30)
-    val est = operators.Sketches.countMinEstimate(sketch, probes, col("tok"),
-      depth = 4, width = 512)
-    val exact = toks.groupBy(col("tok").as("key")).agg(count(lit(1)).as("exact"))
-    est.join(exact, Seq("key")).orderBy("key")
-  }
-
-  /** cms2 — CMS HEAVY HITTERS end to end (the sketch's canonical use):
-    * users with >= 80 events, found by sketch-prefilter (no false
-    * negatives, since est >= exact) then exact verify of the candidates
-    * only. The e13 doctrine: the oracle is the plain GROUP BY/HAVING —
-    * the sketch must be semantically invisible. Scale contract: the
-    * exact pass touches ONLY candidate keys (broadcast semi-join), never
-    * a full-key shuffle.
-    */
-  private def cms2(s: SparkSession, d: String) =
-    operators.Sketches.heavyHitters(
-        Tables.events(s, d), col("user_id"), minCount = 80L,
-        depth = 4, width = 256)
-      .withColumnRenamed("key", "user_id")
-      .orderBy("user_id")
-
-  /** hll1 — HyperLogLog distinct sketch beside the exact count (and
-    * beside kmv1, same grouping, for a direct sketch-vs-sketch read):
-    * md5-derived registers (deterministic, unlike approx_count_distinct's
-    * engine-private xxhash state), folded to the EXACT fixed-point
-    * harmonic sum and the raw estimate — one double divide by an exact
-    * integer, engine-identical. The ln-based small-range correction is
-    * spec-tested (SketchSpec accuracy harness), not oracled.
-    */
-  private def hll1(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val regs = operators.Sketches.hllRegisters(li, col("l_partkey"), Seq("l_returnflag"), p = 8)
-    val est = operators.Sketches.hllEstimate(regs, Seq("l_returnflag"), p = 8)
-    val exact = li.groupBy("l_returnflag")
-      .agg(countDistinct(col("l_partkey")).as("exact_distinct"))
-    est.join(exact, Seq("l_returnflag"))
-      .select("l_returnflag", "n_zero", "raw_sum", "est_raw", "exact_distinct")
-      .orderBy("l_returnflag")
-  }
-
-  /** bpe1 — TRUE byte-pair-encoding token counts (the upgrade over the
-    * whitespace/regex proxies every pack/chunk operator budgeted with):
-    * the 40-merge English table applied by rank, one codegen call per
-    * document. The oracle replays the identical leftmost-lowest-rank
-    * single-merge walk as a DuckDB recursive CTE over the corpus's
-    * DISTINCT words (words encode independently, so the join-back is
-    * exact) — the segmentation itself is hash-gated.
-    */
-  private def bpe1(s: SparkSession, d: String) =
-    Tables.documents(s, d).select(col("doc_id"),
-        size(filter(split(col("text"), " "), w => w =!= lit("")))
-          .cast("long").as("n_words"),
-        graft.functions.BpeExprs.bpeCount(col("text"),
-          graft.functions.BpeExprs.EnglishMerges).as("n_bpe"))
-      .orderBy("doc_id")
-
-  /** BPE2 — DISTRIBUTED BPE TRAINING (learn the merges, don't just apply
-    * them): the first 8 merges learned from the documents corpus by
-    * iterative highest-weighted-pair merge over the distinct-word count
-    * table ([[operators.BpeTrain]]). The oracle replays the training
-    * loop as 8 unrolled CTE levels — pair census, (cnt DESC, pair ASC)
-    * argmax, and the greedy non-overlapping single-merge rewrite via the
-    * parity-of-run rule (equivalent to the engine's fold: a merged
-    * symbol can never re-match its own left side within a pass). BpeSpec
-    * separately proves bpe1's tokenizer reproduces the loop's
-    * segmentation under the learned table.
-    */
-  private def bpe2(s: SparkSession, d: String) =
-    operators.BpeTrain.trainMergesDF(Tables.documents(s, d), col("text"), k = 8)
-      .orderBy("rank")
-
-  /** qs2/qs4's shared oracle: the GLOBAL single-pass bottom-k state —
-    * both the two-way merge (qs2) and the per-flag hierarchical rollup
-    * (qs4) must reproduce it row for row.
-    */
-  private def sqlQuantileGlobalState: String =
-    s"""WITH h AS (SELECT ${sqlHexVal("m", 15)} AS h, v FROM (
-       |  SELECT md5(CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
-       |      || '-' || CAST(l_partkey AS VARCHAR) || '-' || CAST(l_suppkey AS VARCHAR)) AS m,
-       |    l_extendedprice AS v FROM lineitem WHERE l_extendedprice IS NOT NULL))
-       |SELECT h, v FROM h ORDER BY h LIMIT 256""".stripMargin
-
-  /** bpe2's oracle — see [[bpe2]]; every CTE MATERIALIZED (the j21
-    * lesson: lambdas reference prior levels many times). */
-  private def sqlBpeTrain: String = {
-    val K = 8
-    val levels = (1 to K).flatMap { k =>
-      Seq(
-        s"""p$k AS MATERIALIZED (SELECT p.l AS l, p.r AS r, CAST(sum(n) AS BIGINT) AS cnt FROM (
-           |  SELECT n, unnest(list_transform(range(1, length(st)), i ->
-           |    struct_pack(l := st[i], r := st[i+1]))) AS p FROM s${k - 1}) GROUP BY 1, 2)""".stripMargin,
-        s"""b$k AS MATERIALIZED (SELECT l, r, cnt FROM p$k WHERE cnt >= 2
-           |  ORDER BY cnt DESC, l, r LIMIT 1)""".stripMargin,
-        s"""m$k AS MATERIALIZED (SELECT w, n, st,
-           |  list_transform(range(1, length(st)), i -> st[i] = b.l AND st[i+1] = b.r) AS mm
-           |  FROM s${k - 1}, b$k b)""".stripMargin,
-        s"""x$k AS MATERIALIZED (SELECT w, n, st, list_transform(range(1, length(st)), i ->
-           |  mm[i] AND ((i - list_max(list_filter(range(0, i), j -> j = 0 OR NOT mm[j]))) % 2 = 1)) AS sel
-           |  FROM m$k)""".stripMargin,
-        s"""s$k AS MATERIALIZED (SELECT w, n, flatten(list_transform(range(1, length(st) + 1), i ->
-           |  CASE WHEN i < length(st) AND sel[i] THEN [st[i] || st[i+1]]
-           |       WHEN i > 1 AND sel[i-1] THEN []
-           |       ELSE [st[i]] END)) AS st FROM x$k)""".stripMargin)
-    }
-    val base = Seq(
-      """words AS MATERIALIZED (SELECT w, count(*) AS n FROM (
-        |  SELECT unnest(string_split(text, ' ')) AS w FROM documents) WHERE w <> '' GROUP BY w)""".stripMargin,
-      "s0 AS MATERIALIZED (SELECT w, n, string_split(w, '') AS st FROM words)")
-    val union = (1 to K).map(k =>
-      s"SELECT ${k - 1} AS rank, l AS lhs, r AS rhs, cnt FROM b$k").mkString("\nUNION ALL ")
-    (base ++ levels).mkString("WITH ", ",\n", "\n") +
-      s"SELECT * FROM (\n$union\n) ORDER BY rank"
-  }
-
-  /** cov1 — interval UNION coverage per user (merge overlapping ranges):
-    * each event opens a [ts, ts + 30..149 s] interval (length from the
-    * event id, exact micros), and the operator reports the union length,
-    * island count, and interval count per user — the sweep-line classic
-    * as pure window algebra. All-integer (epoch_us both engines), so the
-    * oracle replays the identical windows and hashes exactly.
-    */
-  private def cov1(s: SparkSession, d: String) = {
-    val iv = Tables.events(s, d).select(col("user_id"),
-      unix_micros(col("ts")).as("s_us"),
-      (unix_micros(col("ts")) + (col("event_id") % 120 + 30) * lit(1000000L)).as("e_us"))
-    operators.TimeSeries.intervalCoverage(iv, Seq("user_id"), "s_us", "e_us")
-      .orderBy("user_id")
-  }
-
-  /** cov2/zs3's shared fixture: three stepped w×h rectangles per
-    * customer, overlapping pairwise AND triple-overlapping (the depth-3
-    * case where pairwise-only inclusion–exclusion is WRONG) — integer
-    * coordinates, so every slab product and every I–E term is exact in
-    * doubles and the union areas hash-gate. */
-  private def covRects(s: SparkSession, d: String) = {
-    val base = Tables.customer(s, d).select(col("c_custkey").as("g"),
-      explode(array(lit(0), lit(1), lit(2))).as("m"))
-    val x0 = ((col("g") % 30) * 2 + col("m") * 2).cast("double")
-    val y0 = ((col("g") % 20) * 2 + col("m")).cast("double")
-    val w = (col("g") % 3 + 4).cast("double")
-    val h = (col("g") % 2 + 3).cast("double")
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    base.select(col("g"), array(array(pt(x0, y0), pt(x0 + w, y0),
-      pt(x0 + w, y0 + h), pt(x0, y0 + h), pt(x0, y0))).as("rings"))
-  }
-
-  /** cov2 — COVERAGE (union) AREA per group (the r14 verdict's top
-    * missing measure: overlapping zones double-count in zs2-style
-    * rollups; the dissolve fixes it): the exact y-slab scanline union
-    * over each customer's three overlapping rectangles, beside the
-    * polygon count and the raw area sum (union < sum quantifies the
-    * overlap). The oracle computes the union INDEPENDENTLY — full
-    * 7-term inclusion–exclusion over the three boxes — so a hash match
-    * is two different exact algorithms agreeing, not a replay.
-    */
-  private def cov2(s: SparkSession, d: String) =
-    operators.CoverageArea.unionArea(covRects(s, d), "rings", Seq("g"))
-      .orderBy("g")
-
-  /** zs3 — coverage area through the CELL-DECOMPOSED scale path (the
-    * 100 TB shape: polygons explode to envelope-touched grid cells,
-    * per-cell unions of CLIPPED slivers sum per group — per-cell work
-    * bounded by local density, never corpus size). Must equal cov2's
-    * direct union exactly (the clip walls are event-aligned), so it
-    * shares the independent inclusion–exclusion oracle.
-    */
-  private def zs3(s: SparkSession, d: String) =
-    operators.CoverageArea.unionAreaByCell(covRects(s, d), "rings", Seq("g"),
-        cellSize = 16.0)
-      .orderBy("g")
-
-  /** cov4 — DISSOLVE EMITTING GEOMETRY (the r15 verdict's second gap,
-    * the construct side of cov2's measure): each customer's three
-    * overlapping stepped rectangles dissolve to the union's actual
-    * RINGS via [[operators.CoverageArea.unionGeometry]] (exact
-    * rectilinear tracer: irregular-grid coverage + region-left boundary
-    * walk — every emitted coordinate an input coordinate verbatim),
-    * exploded to one row per vertex. The staircase union's boundary is
-    * CLOSED-FORM in (bx, by, w, h) — always the same 12 corners for
-    * this family (w ≥ 4 > dx, h ≥ 3 > dy keeps every step
-    * nondegenerate) — so the oracle hard-codes the vertex list
-    * symbolically (the j23 hard-coded-ears discipline): a hash match is
-    * the tracer agreeing with the shape's geometry derived BY HAND, not
-    * a replay. CoverageAreaSpec gates shoelace(emitted) ≡ the scanline
-    * union and the WKT bridge.
-    */
-  private def cov4(s: SparkSession, d: String) =
-    operators.CoverageArea.unionGeometry(covRects(s, d), "rings", Seq("g"))
-      .select(col("g"), posexplode(col("rings")).as(Seq("ring_i", "ring")))
-      .select(col("g"), col("ring_i"), posexplode(col("ring")).as(Seq("pt_i", "pt")))
-      .select(col("g"), col("ring_i"), col("pt_i"),
-        col("pt.x").as("x"), col("pt.y").as("y"))
-      .orderBy("g", "ring_i", "pt_i")
-
-  /** cov4's oracle — the staircase union's 12 corners derived by hand
-    * (member i at (bx+2i, by+i), size w×h, every step proper), emitted
-    * closed in the tracer's canonical order (lexicographic-min start,
-    * CCW). All coordinates integer-valued doubles — exact in both
-    * engines under any grouping. */
-  private def sqlUnionGeom: String = {
-    val corners = Seq(
-      ("bx", "by"), ("bx + w", "by"), ("bx + w", "by + 1"), ("bx + w + 2", "by + 1"),
-      ("bx + w + 2", "by + 2"), ("bx + w + 4", "by + 2"), ("bx + w + 4", "by + h + 2"),
-      ("bx + 4", "by + h + 2"), ("bx + 4", "by + h + 1"), ("bx + 2", "by + h + 1"),
-      ("bx + 2", "by + h"), ("bx", "by + h"), ("bx", "by"))
-    val structs = corners.zipWithIndex.map { case ((x, y), i) =>
-      s"struct_pack(pt_i := CAST($i AS INT), x := CAST($x AS DOUBLE), y := CAST($y AS DOUBLE))"
-    }.mkString("[", ",\n    ", "]")
-    s"""WITH t AS (SELECT c_custkey AS g,
-       |  CAST((c_custkey % 30) * 2 AS DOUBLE) AS bx, CAST((c_custkey % 20) * 2 AS DOUBLE) AS by,
-       |  CAST(c_custkey % 3 + 4 AS DOUBLE) AS w, CAST(c_custkey % 2 + 3 AS DOUBLE) AS h
-       |  FROM customer)
-       |SELECT g, CAST(0 AS INT) AS ring_i, v.pt_i AS pt_i, v.x AS x, v.y AS y
-       |FROM (SELECT g, unnest($structs) AS v FROM t)
-       |ORDER BY g, ring_i, pt_i""".stripMargin
-  }
-
-  /** cov5 — GEODESIC coverage area (the r15 verdict's stretch 10: cov2's
-    * scanline is planar; lon/lat stores need the union measured on the
-    * ellipsoid): the covRects staircase rebuilt in degree space
-    * (lon/lat-aligned rectangles near 30°N), dissolved by the exact
-    * rectilinear tracer ([[operators.CoverageArea.unionGeometry]] —
-    * every emitted coordinate an input coordinate verbatim, so the
-    * union ring is parallel/meridian-bounded), then measured by the
-    * TRUE-WGS84 zone integral
-    * ([[graft.functions.SpatialOps.ringsAreaEllipsoidal]]) — EXACT on
-    * exactly this edge family (g23's closed form). The oracle replays
-    * the trapezoidal edge sum over the staircase's 12 closed-form
-    * corners (vertical edges contribute exactly +0.0 — Δλ = λ·K − λ·K —
-    * so the six horizontal terms in traversal order are the whole fold
-    * bitwise); fixed-point floor(area/16) with the g23 drift-vs-margin
-    * adjudication (cross-engine sin/ln drift ~1e-13·value,
-    * margin-scanned).
-    */
-  private def cov5(s: SparkSession, d: String) = {
-    val base = Tables.customer(s, d).select(col("c_custkey").as("g"),
-      explode(array(lit(0), lit(1), lit(2))).as("m"))
-    val x0 = lit(-96.0) + (col("g") % 30).cast("double") * lit(0.02) +
-      col("m").cast("double") * lit(0.002)
-    val y0 = lit(30.0) + (col("g") % 20).cast("double") * lit(0.02) +
-      col("m").cast("double") * lit(0.001)
-    val w = (col("g") % 3 + 4).cast("double") * lit(0.001)
-    val h = (col("g") % 2 + 3).cast("double") * lit(0.001)
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val polys = base.select(col("g"), array(array(pt(x0, y0), pt(x0 + w, y0),
-      pt(x0 + w, y0 + h), pt(x0, y0 + h), pt(x0, y0))).as("rings"))
-    operators.CoverageArea.unionGeometry(polys, "rings", Seq("g"))
-      .select(col("g"), col("n_polys"),
-        floor(graft.functions.SpatialOps.ringsAreaEllipsoidal(col("rings")) / lit(16.0))
-          .cast("long").as("area_fp"))
-      .orderBy("g")
-  }
-
-  /** cov5's oracle — the staircase union's 12 corners (cov4's hand
-    * derivation, degree space) pushed through the engine's trapezoidal
-    * zone sum: per horizontal edge (λ2·K − λ1·K)·(F(φ·K) + F(φ·K)) in
-    * traversal order (vertical edges are exactly +0.0 and drop from the
-    * fold bitwise), abs·b²/4, floor(/16). Constants interpolated from
-    * the SAME Scala values the Column algebra bakes in.
-    */
-  private def sqlUnionAreaGeodesic: String = {
-    // member coordinate chains exactly as the Column algebra groups them
-    def mx(m: Int) = s"(bx + $m.0 * 0.002)"
-    def my(m: Int) = s"(by + $m.0 * 0.001)"
-    // the 12 corners' horizontal edges in the tracer's traversal order:
-    // (x, y) pairs from the cov4 staircase, degree space
-    val edges = Seq(
-      (mx(0), s"(${mx(0)} + w)", my(0)),              // A bottom: x0 -> x0+w at A.y0
-      (s"(${mx(0)} + w)", s"(${mx(1)} + w)", my(1)),  // B bottom step at B.y0
-      (s"(${mx(1)} + w)", s"(${mx(2)} + w)", my(2)),  // C bottom step at C.y0
-      (s"(${mx(2)} + w)", mx(2), s"(${my(2)} + h)"),  // C top: back at C.y1
-      (mx(2), mx(1), s"(${my(1)} + h)"),              // B top step at B.y1
-      (mx(1), mx(0), s"(${my(0)} + h)"))              // A top step at A.y0+h
-    val K = graft.functions.SpatialOps.Deg2Rad
-    val E2 = graft.functions.SpatialOps.Wgs84E2
-    val E = graft.functions.SpatialOps.Wgs84E
-    val B2q = graft.functions.SpatialOps.Wgs84B2 / 4.0
-    def zf(phiDeg: String) =
-      s"(sin($phiDeg * $K) / (1 - $E2 * sin($phiDeg * $K) * sin($phiDeg * $K)) + " +
-        s"ln((1 + $E * sin($phiDeg * $K)) / (1 - $E * sin($phiDeg * $K))) / ${2 * E})"
-    val terms = edges.map { case (l1, l2, phi) =>
-      s"(($l2 * $K - $l1 * $K) * (${zf(phi)} + ${zf(phi)}))"
-    }.mkString(" + ")
-    s"""WITH t AS (SELECT c_custkey AS g,
-       |  -96.0 + CAST(c_custkey % 30 AS DOUBLE) * 0.02 AS bx,
-       |  30.0 + CAST(c_custkey % 20 AS DOUBLE) * 0.02 AS by,
-       |  CAST(c_custkey % 3 + 4 AS DOUBLE) * 0.001 AS w,
-       |  CAST(c_custkey % 2 + 3 AS DOUBLE) * 0.001 AS h
-       |  FROM customer)
-       |SELECT g, CAST(3 AS BIGINT) AS n_polys,
-       |  CAST(floor(abs($terms) * $B2q / 16.0) AS BIGINT) AS area_fp
-       |FROM t ORDER BY g""".stripMargin
-  }
-
-  /** cov6 — TILED dissolve (the per-cell geometry-emitting scale path,
-    * [[operators.CoverageArea.unionGeometryByCell]]): the covRects
-    * groups dissolved per 16-unit cell — members clip to cell boxes
-    * through the r16 S-H emitter, each cell traces its own union rings
-    * — then rolled back up per group: the per-cell shoelace areas must
-    * sum to the global union EXACTLY (walls event-aligned, clipped
-    * coordinates exact integers), and the cell count must equal the
-    * envelope-touched tiling. The oracle computes BOTH independently —
-    * the union by full inclusion–exclusion (cov2's oracle), the cell
-    * census by regenerating the three member envelopes' cell rectangles
-    * from scratch.
-    */
-  private def cov6(s: SparkSession, d: String) =
-    operators.CoverageArea.unionGeometryByCell(covRects(s, d), "rings", Seq("g"),
-        cellSize = 16.0)
-      .groupBy("g")
-      .agg(count(lit(1)).as("n_cells"), sum(col("cell_area")).as("union_area"))
-      .orderBy("g")
-
-  /** cov6's oracle — the I–E union area beside a from-scratch cell
-    * census (distinct cells over the three members' envelope tilings). */
-  private def sqlUnionGeomCells: String =
-    """WITH t AS (SELECT c_custkey AS g,
-      |  CAST((c_custkey % 30) * 2 AS DOUBLE) AS bx, CAST((c_custkey % 20) * 2 AS DOUBLE) AS by,
-      |  CAST(c_custkey % 3 + 4 AS DOUBLE) AS w, CAST(c_custkey % 2 + 3 AS DOUBLE) AS h
-      |  FROM customer),
-      |members AS (SELECT g, bx + 2 * m AS x0, by + m AS y0,
-      |    bx + 2 * m + w AS x1, by + m + h AS y1
-      |  FROM t, (SELECT unnest([0.0, 1.0, 2.0]) AS m)),
-      |cellsx AS (SELECT g, y0, y1,
-      |  unnest(generate_series(CAST(floor(x0 / 16.0) AS BIGINT), CAST(floor(x1 / 16.0) AS BIGINT))) AS cx
-      |  FROM members),
-      |cells AS (SELECT DISTINCT g, cx, cy FROM (
-      |  SELECT g, cx,
-      |    unnest(generate_series(CAST(floor(y0 / 16.0) AS BIGINT), CAST(floor(y1 / 16.0) AS BIGINT))) AS cy
-      |  FROM cellsx)),
-      |nc AS (SELECT g, count(*) AS n_cells FROM cells GROUP BY g),
-      |r AS (SELECT g,
-      |  bx AS x00, by AS y00, bx + w AS x01, by + h AS y01,
-      |  bx + 2 AS x10, by + 1 AS y10, bx + 2 + w AS x11, by + 1 + h AS y11,
-      |  bx + 4 AS x20, by + 2 AS y20, bx + 4 + w AS x21, by + 2 + h AS y21, w, h FROM t),
-      |i AS (SELECT g, w * h AS a,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x11) - greatest(x00, x10)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y11) - greatest(y00, y10)) AS ab,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x21) - greatest(x00, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y21) - greatest(y00, y20)) AS ac,
-      |  greatest(CAST(0 AS DOUBLE), least(x11, x21) - greatest(x10, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y11, y21) - greatest(y10, y20)) AS bc,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x11, x21) - greatest(x00, x10, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y11, y21) - greatest(y00, y10, y20)) AS abc
-      |  FROM r)
-      |SELECT i.g AS g, nc.n_cells AS n_cells,
-      |  3 * a - ab - ac - bc + abc AS union_area
-      |FROM i JOIN nc ON nc.g = i.g ORDER BY g""".stripMargin
-
-  /** cov7 — the dissolve WRITE path as one oracled chain: two DISJOINT
-    * rectangles per customer dissolve to TWO outer rings, emit through
-    * [[graft.functions.RingsWkt.ringsToWktAuto]] as a MULTIPOLYGON
-    * string, re-parse with `st_rings`, and measure — the area must be
-    * the exact two-rect sum and the WKT must spell MULTIPOLYGON (the
-    * geometry-type census). Closes the loop the r15 verdict opened:
-    * dissolve → write → re-ingest, every leg oracled.
-    */
-  private def cov7(s: SparkSession, d: String) = {
-    val base = Tables.customer(s, d).select(col("c_custkey").as("g"),
-      explode(array(lit(0), lit(1))).as("m"))
-    val x0 = ((col("g") % 30) * 2 + col("m") * 100).cast("double")
-    val y0 = ((col("g") % 20) * 2).cast("double")
-    val w = (col("g") % 3 + 4).cast("double")
-    val h = (col("g") % 2 + 3).cast("double")
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    val polys = base.select(col("g"), array(array(pt(x0, y0), pt(x0 + w, y0),
-      pt(x0 + w, y0 + h), pt(x0, y0 + h), pt(x0, y0))).as("rings"))
-    val wkt = graft.functions.RingsWkt.ringsToWktAuto(col("rings"))
-    operators.CoverageArea.unionGeometry(polys, "rings", Seq("g"))
-      .select(col("g"),
-        substring(wkt, 1, 13).as("wkt_kind"),
-        graft.functions.SpatialOps.wktArea(wkt).as("area_back"),
-        col("union_area"))
-      .filter(col("area_back") === col("union_area"))
-      .select(col("g"), col("wkt_kind"), col("area_back").as("union_area"))
-      .orderBy("g")
-  }
-
-  /** cov3 — coverage area over CONCAVE geometry (what cov2's convex
-    * rectangles never exercise: a scanline row holding MULTIPLE
-    * intervals from ONE polygon): a rectilinear U-shape (outer box minus
-    * a top notch — above the notch floor every scanline crosses it
-    * FOUR times, two disjoint prong intervals) unioned with a
-    * g-parameterized rectangle spanning the notch and both prongs. The
-    * oracle decomposes the U into its three disjoint rectangles (base +
-    * two prongs) and runs full 15-term inclusion–exclusion over the
-    * four boxes — again an independent exact algorithm; all-integer, so
-    * the hash gates the concave scanline against it bitwise.
-    */
-  private def cov3(s: SparkSession, d: String) = {
-    val base = Tables.customer(s, d).select(col("c_custkey").as("g"),
-      explode(array(lit(0), lit(1))).as("m"))
-    val dx = (col("g") % 16).cast("double")
-    val dy = (col("g") % 12).cast("double")
-    val rw = (col("g") % 3 + 3).cast("double")
-    val rh = (col("g") % 2 + 2).cast("double")
-    def pt(x: Column, y: Column) = struct(x.as("x"), y.as("y"))
-    // U: [0,6]x[0,4] minus the notch [2,4]x[2,4], anchored at (dx,dy)
-    val uRing = array(
-      pt(dx, dy), pt(dx + 6, dy), pt(dx + 6, dy + 4), pt(dx + 4, dy + 4),
-      pt(dx + 4, dy + 2), pt(dx + 2, dy + 2), pt(dx + 2, dy + 4),
-      pt(dx, dy + 4), pt(dx, dy))
-    val rRing = array(
-      pt(dx + 1, dy + 1), pt(dx + 1 + rw, dy + 1),
-      pt(dx + 1 + rw, dy + 1 + rh), pt(dx + 1, dy + 1 + rh),
-      pt(dx + 1, dy + 1))
-    val polys = base.select(col("g"),
-      array(when(col("m") === 0, uRing).otherwise(rRing)).as("rings"))
-    operators.CoverageArea.unionArea(polys, "rings", Seq("g")).orderBy("g")
-  }
-
-  /** cov3's oracle: the U decomposed into base + two prongs (disjoint
-    * rectangles), full 15-term inclusion–exclusion over those plus the
-    * overlap rectangle — generated per subset with min/max interval
-    * arithmetic. */
-  private def sqlUnionAreaMixed: String = {
-    val rects = Seq(
-      ("dx", "dy", "dx + 6", "dy + 2"),          // U base
-      ("dx", "dy + 2", "dx + 2", "dy + 4"),      // U left prong
-      ("dx + 4", "dy + 2", "dx + 6", "dy + 4"),  // U right prong
-      ("dx + 1", "dy + 1", "dx + 1 + rw", "dy + 1 + rh")) // overlap rect
-    def bound(f: Int => String, agg: String, sel: Seq[Int]) =
-      if (sel.length == 1) f(sel.head)
-      else sel.map(f).mkString(s"$agg(", ", ", ")")
-    val terms = (1 until 16).map { mask =>
-      val sel = (0 until 4).filter(i => (mask & (1 << i)) != 0)
-      val x0 = bound(i => rects(i)._1, "greatest", sel)
-      val y0 = bound(i => rects(i)._2, "greatest", sel)
-      val x1 = bound(i => rects(i)._3, "least", sel)
-      val y1 = bound(i => rects(i)._4, "least", sel)
-      val area = s"greatest(CAST(0 AS DOUBLE), ($x1) - ($x0)) * " +
-        s"greatest(CAST(0 AS DOUBLE), ($y1) - ($y0))"
-      val sign = if (sel.length % 2 == 1) "+" else "-"
-      s"$sign ($area)"
-    }
-    s"""WITH t AS (SELECT c_custkey AS g,
-       |  CAST(c_custkey % 16 AS DOUBLE) AS dx, CAST(c_custkey % 12 AS DOUBLE) AS dy,
-       |  CAST(c_custkey % 3 + 3 AS DOUBLE) AS rw, CAST(c_custkey % 2 + 2 AS DOUBLE) AS rh
-       |  FROM customer)
-       |SELECT g, CAST(2 AS BIGINT) AS n_polys, 20 + rw * rh AS sum_area,
-       |  ${terms.mkString("\n    ")} AS union_area
-       |FROM t ORDER BY g""".stripMargin
-  }
-
-  /** cov2/zs3's shared oracle: full inclusion–exclusion over the three
-    * stepped boxes — an INDEPENDENT exact union algorithm (min/max
-    * interval arithmetic, 7 signed terms), not a scanline replay. */
-  private def sqlUnionAreaIE: String =
-    """WITH t AS (SELECT c_custkey AS g,
-      |  CAST((c_custkey % 30) * 2 AS DOUBLE) AS bx, CAST((c_custkey % 20) * 2 AS DOUBLE) AS by,
-      |  CAST(c_custkey % 3 + 4 AS DOUBLE) AS w, CAST(c_custkey % 2 + 3 AS DOUBLE) AS h
-      |  FROM customer),
-      |r AS (SELECT g, w, h,
-      |  bx AS x00, by AS y00, bx + w AS x01, by + h AS y01,
-      |  bx + 2 AS x10, by + 1 AS y10, bx + 2 + w AS x11, by + 1 + h AS y11,
-      |  bx + 4 AS x20, by + 2 AS y20, bx + 4 + w AS x21, by + 2 + h AS y21 FROM t),
-      |i AS (SELECT g, w * h AS a,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x11) - greatest(x00, x10)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y11) - greatest(y00, y10)) AS ab,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x21) - greatest(x00, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y21) - greatest(y00, y20)) AS ac,
-      |  greatest(CAST(0 AS DOUBLE), least(x11, x21) - greatest(x10, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y11, y21) - greatest(y10, y20)) AS bc,
-      |  greatest(CAST(0 AS DOUBLE), least(x01, x11, x21) - greatest(x00, x10, x20)) *
-      |    greatest(CAST(0 AS DOUBLE), least(y01, y11, y21) - greatest(y00, y10, y20)) AS abc
-      |  FROM r)
-      |SELECT g, CAST(3 AS BIGINT) AS n_polys, 3 * a AS sum_area,
-      |  3 * a - ab - ac - bc + abc AS union_area
-      |FROM i ORDER BY g""".stripMargin
-
-  /** norm1 — unicode normalization as a curation key: NFC + accent fold
-    * (NFD → drop marks → NFC) through the codegen expression, then the
-    * engines' shared lower/whitespace-collapse/trim, fingerprinted. The
-    * oracle runs DuckDB's OWN independent implementations
-    * (nfc_normalize + strip_accents) — a hash match is two engines
-    * agreeing on the Unicode standard, not a replayed formula.
-    */
-  private def norm1(s: SparkSession, d: String) = {
-    def chain =
-      trim(regexp_replace(lower(
-        graft.functions.NormExprs.unicodeNorm(col("text"), "NFC", stripAccents = true)),
-        "\\s+", " "))
-    Tables.documents(s, d).select(col("doc_id"),
-        md5(chain).as("norm_fp"),
-        length(chain).cast("long").as("n_chars_norm"))
-      .orderBy("doc_id")
-  }
-
-  /** kmv2 — SET-OPERATION cardinalities from KMV sketches (the theta
-    * construction): customers active in 1996 vs 1997, intersection and
-    * union distinct counts estimated from two k=64 sketches, beside the
-    * exact intersection. Both years hold ~1k distinct customers at
-    * sf0.01 — well over capacity, so the θ-sampling path is exercised,
-    * not the exact-below-capacity shortcut. md5-deterministic end to
-    * end; the oracle replays sketches, θ, the common count, and both
-    * estimates (one divide each, the kmv1 arithmetic shape).
-    */
-  /** One-scan (1996, 1997) customer year-membership table shared by the
-    * kmv set-operation queries (kmv2/kmv3/kmv4 — r17, guide §2.4): one
-    * orders scan + one groupBy(custkey) with per-year max-flags replaces
-    * the 4-6 separate filter→distinct passes those queries composed.
-    * Every consumer (each sketch side, every exact set-op count) derives
-    * from THIS aggregate, and identical aggregate subtrees share one
-    * scan + shuffle via ReusedExchange. Values are unchanged by
-    * construction: `__a = 1` iff the customer has a 1996 order — exactly
-    * membership in the old `filter(year=1996).select(custkey).distinct()`
-    * side — so the sketches see the same distinct key sets and the exact
-    * counts are the same integers (union by inclusion-exclusion).
-    */
-  private def kmvYearFlags(o: org.apache.spark.sql.DataFrame) = {
-    val y = year(col("o_orderdate"))
-    o.filter(y === 1996 || y === 1997)
-      .groupBy(col("o_custkey"))
-      .agg(max(when(y === 1996, 1).otherwise(0)).as("__a"),
-        max(when(y === 1997, 1).otherwise(0)).as("__b"))
-  }
-
-  private def kmv2(s: SparkSession, d: String) = {
-    val flags = kmvYearFlags(Tables.orders(s, d))
-    val a = flags.filter(col("__a") === 1).select(col("o_custkey"))
-    val b = flags.filter(col("__b") === 1).select(col("o_custkey"))
-    val sk = operators.Sketches.kmvSetSketch(a, col("o_custkey"), b, col("o_custkey"), k = 64)
-    val exact = flags.agg(
-      count(when(col("__a") === 1 && col("__b") === 1, 1)).as("exact_intersect"))
-    sk.crossJoin(exact)
-  }
-
-  /** KMV4 — JACCARD SIMILARITY from theta sketches (the similarity-join
-    * planning estimate: |A∩B|/|A∪B| without touching either set): kmv2's
-    * intersect and union estimators composed into the quotient, beside
-    * the EXACT Jaccard — both quotients of already-hash-gated values, so
-    * the estimate itself hash-gates (the kmv1 doctrine; round-6 of a
-    * quotient of identical operands).
-    */
-  private def kmv4(s: SparkSession, d: String) = {
-    val flags = kmvYearFlags(Tables.orders(s, d))
-    val a = flags.filter(col("__a") === 1).select(col("o_custkey"))
-    val b = flags.filter(col("__b") === 1).select(col("o_custkey"))
-    val sk = operators.Sketches.kmvSetSketch(a, col("o_custkey"), b, col("o_custkey"), k = 64)
-    val inter = count(when(col("__a") === 1 && col("__b") === 1, 1))
-    // |A∪B| = |A| + |B| − |A∩B| — exact integers, same value as the old
-    // fourth union-distinct pass
-    val exact = flags.agg(
-      inter.as("exact_intersect"),
-      (count(when(col("__a") === 1, 1)) + count(when(col("__b") === 1, 1))
-        - inter).as("exact_union"))
-    sk.crossJoin(exact)
-      .select(
-        round(col("est_intersect") / col("est_union"), 6).as("jaccard_est"),
-        round(col("exact_intersect").cast("double")
-          / col("exact_union").cast("double"), 6).as("jaccard_exact"),
-        col("exact_intersect"), col("exact_union"))
-  }
-
-  /** RR1 — RETRIEVAL EVALUATION metrics (the eval family the registry
-    * lacked: every training pipeline scores its retriever): a
-    * deterministic tf ranker (rank by tf(t1) DESC, doc_id ASC) judged
-    * against a binary relevance rule (doc contains t2) over five probe
-    * query pairs — per query the reciprocal rank of the first relevant
-    * hit in the top 5 (FIXED-POINT ⌊2²⁰/rank⌋ — identical doubles both
-    * engines, the j31 no-boundary-risk shape), precision@5 hits, and
-    * the total relevant count. All integers and exact rationals; log-
-    * free by design (NDCG's log2 gains are not cross-engine replayable —
-    * reciprocal-rank metrics are).
-    */
-  private def rr1(s: SparkSession, d: String) = {
-    val docs = Tables.documents(s, d)
-    val probes = Seq((1, "join", "hash"), (2, "scan", "filter"), (3, "row", "batch"),
-      (4, "merge", "column"), (5, "order", "small"))
-    import s.implicits._
-    val pdf = probes.toDF("qid", "t1", "t2")
-    val toks = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("__t"))
-    val tf = toks.crossJoin(broadcast(pdf))
-      .select(col("qid"), col("doc_id"),
-        size(filter(col("__t"), x => x === col("t1"))).as("tf1"),
-        size(filter(col("__t"), x => x === col("t2"))).as("tf2"))
-    val w = Window.partitionBy("qid").orderBy(col("tf1").desc, col("doc_id").asc)
-    val top5 = tf.filter(col("tf1") > 0)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-    val firstRel = top5.filter(col("tf2") > 0)
-      .groupBy("qid").agg(min(col("rank")).as("frank"))
-    val nRel = tf.filter(col("tf2") > 0).groupBy("qid").agg(count(lit(1)).as("n_rel"))
-    top5.groupBy("qid")
-      .agg(sum(when(col("tf2") > 0, 1L).otherwise(0L)).as("p5_hits"))
-      .join(firstRel, Seq("qid"), "left")
-      .join(nRel, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(floor(lit(1048576.0) / col("frank").cast("double")).cast("long"),
-          lit(0L)).as("rr_fp"),
-        col("p5_hits"), coalesce(col("n_rel"), lit(0L)).as("n_rel"))
-      .orderBy("qid")
-  }
-
-  /** cms3 — JOIN-SIZE estimation from sketches (the optimizer-
-    * cardinality use of count-min): the self-join size of lineitem on
-    * l_partkey — the F2 second moment Σ_k c_k² — estimated as the
-    * min-over-rows inner product of the sketch with itself, beside the
-    * exact moment. Never under; within εN² per row. All-integer, so
-    * the estimate itself hash-gates (the kmv1 doctrine).
-    */
-  private def cms3(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val est = operators.Sketches.countMinSelfJoinSize(
-      li, col("l_partkey"), depth = 4, width = 512)
-    val exact = li.groupBy("l_partkey").agg(count(lit(1)).as("__c"))
-      .agg(sum(col("__c") * col("__c")).as("exact_f2"))
-    est.crossJoin(exact)
-  }
-
-  /** qs1 — mergeable QUANTILE sketch estimates: the bottom-k uniform
-    * sample over l_extendedprice (row identity = the unique
-    * (orderkey, linenumber, partkey, suppkey) 4-tuple string), type-1 sample quantiles at
-    * five probe points beside the sample size. md5-deterministic, so the
-    * estimates themselves hash-gate (the kmv1 doctrine); SketchSpec
-    * carries the rank-error bound the estimate honors.
-    */
-  private def qs1(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val state = operators.Sketches.quantileSketch(li, col("l_extendedprice"),
-      concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey")), Nil, k = 256)
-    operators.Sketches.quantileEstimate(state, Seq(0.25, 0.5, 0.75, 0.9, 0.99))
-      .orderBy("q")
-  }
-
-  /** qs2 — the quantile sketch MERGE LAW as a query (the hll2 shape):
-    * lineitem split by order-key parity, each half sketched
-    * independently, the states unioned and re-capped to the k smallest
-    * hashes. The oracle computes the SINGLE-PASS sketch of the whole
-    * table — recap(state(A) ∪ state(B)) must equal state(A ∪ B) row for
-    * row, hash for hash, which is the property that lets daily/store
-    * partial states combine at 100 TB without re-scanning.
-    */
-  private def qs2(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    def sk(part: DataFrame) = operators.Sketches.quantileSketch(part,
-      col("l_extendedprice"), concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey")), Nil, k = 256)
-    val merged = sk(li.filter(col("l_orderkey") % 2 === 0))
-      .unionAll(sk(li.filter(col("l_orderkey") % 2 =!= 0)))
-      .withColumn("__g", lit(1))
-    graft.plans.TopK.perKey(merged, Seq(col("__g")),
-        Seq(col("h").asc, col("v").asc), 256)
-      .select("h", "v")
-      .orderBy("h")
-  }
-
-  /** qs3 — GROUPED quantile sketches (the per-store/per-day shape): one
-    * bottom-k state per l_returnflag, estimates at two probe points —
-    * the exchange still carries at most k rows per (flag, partition).
-    */
-  private def qs3(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val state = operators.Sketches.quantileSketch(li, col("l_extendedprice"),
-      concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey")),
-      Seq("l_returnflag"), k = 128)
-    operators.Sketches.quantileEstimate(state, Seq(0.5, 0.9), Seq("l_returnflag"))
-      .orderBy("l_returnflag", "q")
-  }
-
-  /** qs4 — HIERARCHICAL quantile rollup (the daily→monthly shape): one
-    * bottom-k state per l_returnflag, their union re-capped to k — which
-    * must equal the GLOBAL single-pass state, because any row in the
-    * global bottom-k has ≤ k−1 rows below it globally and therefore ≤
-    * k−1 within its own flag. This is what makes per-partition/per-day
-    * quantile states roll up a tree without re-scanning leaves.
-    */
-  private def qs4(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val perFlag = operators.Sketches.quantileSketch(li, col("l_extendedprice"),
-      concat_ws("-", col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey")),
-      Seq("l_returnflag"), k = 256)
-    graft.plans.TopK.perKey(
-        perFlag.select(lit(1).as("__g"), col("h"), col("v")),
-        Seq(col("__g")), Seq(col("h").asc, col("v").asc), 256)
-      .select("h", "v")
-      .orderBy("h")
-  }
-
-  /** cms4 — COUNT-MIN MERGE law as a query (counters ADD — the fourth
-    * and last mergeable summary to get its law hash-gated, beside hll2,
-    * qs2/qs4, and the KMV re-cap): lineitem split by order-key parity,
-    * each half sketched, cells summed — must equal the single-pass
-    * sketch of the whole table cell for cell.
-    */
-  private def cms4(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    // r16 (guide §2.4: remove shuffles/passes outright): both half-
-    // sketches from ONE lineitem scan, grouped by the half key, instead
-    // of two full filter+explode+aggregate passes — each group's counter
-    // table is value-identical to countMin over that half alone (counts
-    // partition by the half key), and the merge (sum per cell across the
-    // two counter tables) is unchanged, so the merge law is still the
-    // thing computed. Plan: 2 scans + 3 exchanges -> 1 scan + 2 exchanges.
-    // r17: project to the two used columns and `spread` the scan — the
-    // 2.4M seededHash calls are the query's real cost, and a single-file
-    // input scans as ONE task (the r16 one-scan form halved the local
-    // parallelism the two-scan form accidentally had); spread is
-    // metadata-gated, so a many-file 100 TB input passes through with no
-    // extra shuffle, and counts are partitioning-independent.
-    operators.Sketches.countMin(
-        operators.Partitioning.spread(li.select(col("l_orderkey"), col("l_partkey")))
-          .withColumn("__half", col("l_orderkey") % 2 === 0),
-        col("l_partkey"), depth = 4, width = 512, groupCols = Seq("__half"))
-      .groupBy("row", "bucket")
-      .agg(sum(col("cnt")).as("cnt"))
-      .orderBy("row", "bucket")
-  }
-
-  /** kmv3 — set-DIFFERENCE cardinality from sketches (the last canonical
-    * set operation beside kmv2's intersect/union): |A∖B| estimated as
-    * est_distinct(A) − est_intersect(A,B) over the same md5 KMV base —
-    * 1996-only customers vs the 1996/1997 overlap, beside the exact
-    * count. Pure composition of oracled estimators, so the derived
-    * estimate hash-gates too.
-    */
-  private def kmv3(s: SparkSession, d: String) = {
-    val flags = kmvYearFlags(Tables.orders(s, d))
-    val a = flags.filter(col("__a") === 1).select(col("o_custkey"))
-    val b = flags.filter(col("__b") === 1).select(col("o_custkey"))
-    val estA = operators.Sketches.kmvDistinct(a, col("o_custkey"), Nil, k = 64)
-      .select(col("est_distinct").as("est_a"))
-    val setOps = operators.Sketches.kmvSetSketch(
-      a, col("o_custkey"), b, col("o_custkey"), k = 64)
-    val exact = flags.agg(
-      count(when(col("__a") === 1 && col("__b") === 0, 1)).as("exact_diff"))
-    setOps.crossJoin(broadcast(estA)).crossJoin(broadcast(exact))
-      .select(col("est_a"), col("est_intersect"),
-        round(col("est_a") - col("est_intersect"), 6).as("est_diff"),
-        col("exact_diff"))
-  }
-
-  /** hll2 — HLL MERGE soundness as a query (the daily-sketch shape that
-    * makes the sketch worth having at 100 TB): lineitem split into two
-    * halves by order-key parity, each sketched independently, the
-    * register tables merged by register-wise MAX, then folded. The
-    * oracle computes the SINGLE-PASS sketch of the union — merge(A,B)
-    * must equal sketch(A ∪ B) exactly, register for register, so the
-    * hash gates the merge law itself, not an approximation of it.
-    */
-  private def hll2(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    // r16 (guide §2.4): both halves' register tables from ONE scan via
-    // hllRegisters' own groupCols (per-group MAX partitions by the half
-    // key, so each group's rows are value-identical to hllRegisters over
-    // that half alone); the register-wise MAX merge — the law under test
-    // — is unchanged. 2 scans + 2 exchanges -> 1 scan + 1 exchange.
-    val merged = operators.Sketches.hllRegisters(
-        li.withColumn("__half", col("l_orderkey") % 2 === 0),
-        col("l_partkey"), Seq("__half"), p = 8)
-      .groupBy("register").agg(max(col("max_rho")).as("max_rho"))
-    operators.Sketches.hllEstimate(merged, Nil, p = 8)
-      .select("n_zero", "raw_sum", "est_raw")
-  }
-
-  /** cdc1 — snapshot diff: two views of `orders` (one-third disjoint on
-    * each side, every fifth shared key's price bumped) reconciled into
-    * insert/delete/update rows. Null-safe compare; unchanged rows drop.
-    */
-  private def cdc1(s: SparkSession, d: String) = {
-    val o = Tables.orders(s, d)
-    val old = o.filter(col("o_orderkey") % 3 =!= 0)
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val nw = o.filter(col("o_orderkey") % 3 =!= 1)
-      .select(col("o_orderkey"),
-        when(col("o_orderkey") % 5 === 0, col("o_totalprice") + lit(1.0))
-          .otherwise(col("o_totalprice")).as("o_totalprice"),
-        col("o_orderstatus"))
-    operators.Maintenance.snapshotDiff(old, nw, Seq("o_orderkey"),
-        Seq("o_totalprice", "o_orderstatus"))
-      .orderBy("o_orderkey")
-  }
-
-  /** iv1 — incremental view maintenance: the even-orderkey half's rollup
-    * state is WRITTEN to parquet and read back (yesterday's store), the
-    * odd half is folded in as today's delta, and the merged state must
-    * equal the from-scratch aggregate over everything — proving the state
-    * round-trips and the merge is lossless, without ever rescanning
-    * "history" in the merge.
-    */
-  /** IV2 — incremental JOIN maintenance: the bilinear delta identity
-    * (Δa⋈B ∪ A⋈Δb ∪ Δa⋈Δb) produces exactly the rows a batch of appends
-    * adds to the lineitem⋈orders join, without re-joining the histories.
-    * The oracle recomputes both FULL joins and subtracts their censuses —
-    * any identity error (missed term, double count) breaks the hash.
-    */
-  private def iv2(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val ord = Tables.orders(s, d)
-    def a(df: DataFrame) = df.select(col("l_orderkey").as("okey"), col("l_quantity"))
-    def b(df: DataFrame) = df.select(col("o_orderkey").as("okey"), col("o_orderpriority"))
-    operators.Maintenance.joinDelta(
-        a(li.filter(col("l_orderkey") % 10 =!= 0)), a(li.filter(col("l_orderkey") % 10 === 0)),
-        b(ord.filter(col("o_orderkey") % 7 =!= 0)), b(ord.filter(col("o_orderkey") % 7 === 0)),
-        Seq("okey"))
-      .groupBy("o_orderpriority")
-      .agg(count(lit(1)).as("n_added"), dsum(col("l_quantity")).as("qty_added"))
-      .orderBy("o_orderpriority")
-  }
-
-  private def iv1(s: SparkSession, d: String) = {
-    val li = Tables.lineitem(s, d)
-    val keys = Seq("l_returnflag", "l_linestatus")
-    val out = java.nio.file.Files.createTempDirectory("graft_iv1").toString
-    operators.Maintenance.rollupState(
-        li.filter(col("l_orderkey") % 2 === 0), keys, "l_quantity")
-      .write.mode("overwrite").parquet(out)
-    val delta = operators.Maintenance.rollupState(
-      li.filter(col("l_orderkey") % 2 =!= 0), keys, "l_quantity")
-    operators.Maintenance.mergeRollupStates(Seq(s.read.parquet(out), delta), keys)
-      .select(col("l_returnflag"), col("l_linestatus"), col("n_rows"),
-        col("sum_v").cast("double").as("sum_qty"),
-        col("min_v").as("min_qty"), col("max_v").as("max_qty"),
-        round(col("sum_v").cast("double") / col("n_rows"), 6).as("avg_qty"))
-      .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  /** fz1 — blocked fuzzy match (record linkage): every 50th part name,
-    * perturbed by deleting its 3rd character, is matched back against the
-    * full part table at edit distance <= 2 under (2-char prefix, ±2
-    * length) blocking. The oracle states the same blocking contract
-    * relationally — prefix equality + length filter + levenshtein.
-    */
-  private def fz1(s: SparkSession, d: String) = {
-    val p = Tables.part(s, d)
-    val probes = p.filter(col("p_partkey") % 50 === 0)
-      .select(col("p_partkey").as("probe_key"),
-        concat(substring(col("p_name"), 1, 2), substring(col("p_name"), 4, 1 << 20))
-          .as("probe_name"))
-    operators.FuzzyJoin.blockedLevenshtein(
-        probes, p.select(col("p_partkey"), col("p_name")),
-        "probe_name", "p_name", maxDist = 2, blockPrefix = 2)
-      .select(col("probe_key"), col("probe_name"), col("p_partkey"), col("p_name"),
-        col("edit_dist").cast("int").as("edit_dist"))
-      .orderBy("probe_key", "p_partkey")
-  }
-
-  /** fz2 — segment-signature edit-distance join (r12 scale path): the
-    * same probe construction as fz1, matched with COMPLETE recall
-    * through the Pass-Join pigeonhole (no prefix-blocking clause in the
-    * oracle — pairs whose first two chars differ are found too, which
-    * the blocked form misses by contract). Probes every 200th part so
-    * the brute-force oracle stays tractable at the sf0.1 sweep.
-    */
-  private def fz2(s: SparkSession, d: String) = {
-    val p = Tables.part(s, d)
-    val probes = p.filter(col("p_partkey") % 200 === 0)
-      .select(col("p_partkey").as("probe_key"),
-        concat(substring(col("p_name"), 1, 2), substring(col("p_name"), 4, 1 << 20))
-          .as("probe_name"))
-    operators.FuzzyJoin.segmentLevenshtein(
-        probes, p.select(col("p_partkey"), col("p_name")),
-        "probe_name", "p_name", maxDist = 2)
-      .select(col("probe_key"), col("probe_name"), col("p_partkey"), col("p_name"),
-        col("edit_dist").cast("int").as("edit_dist"))
-      .orderBy("probe_key", "p_partkey")
-  }
-
-  /** s11 — JSONL round trip (the interchange format every curation
-    * pipeline speaks): documents are written as JSON lines and read back
-    * under an explicit schema; the oracle aggregates the parquet source
-    * directly, so a hash match proves the write→read cycle is lossless
-    * (md5 over the round-tripped text included).
-    */
-  private def s11(s: SparkSession, d: String) = {
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    Tables.documents(s, d)
-      .select("doc_id", "lang", "source", "n_chars", "text")
-      .coalesce(4).write.mode("overwrite").json(out)
-    s.read
-      .schema("doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT, text STRING")
-      .json(out)
-      .groupBy("lang", "source")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-        min(md5(col("text"))).as("min_text_md5"))
-      .orderBy("lang", "source")
-  }
-
-  /** span2 — span-level dedup transform: strip every token covered by a
-    * corpus-repeated 5-gram (span1's census predicate, now acted on) and
-    * return the reassembled text. The oracle rebuilds each document with
-    * an ordered string_agg over the surviving positions.
-    */
-  private def span2(s: SparkSession, d: String) =
-    Curation.stripRepeatedSpans(Tables.documents(s, d), ngramK = 5)
-      .orderBy("doc_id")
-
-  /** tfidf2 — sparse lexical pair similarity over rare 3-gram TF-IDF
-    * vectors (posting-list enumeration, df capped at 20): the lexical
-    * twin of e3's dense cosine. 2^20 fixed-point weights make every
-    * accumulation integer-exact, so the cosine is hash-stable.
-    */
-  private def tfidf2(s: SparkSession, d: String) =
-    operators.Similarity.sparseTfidfPairs(Tables.documents(s, d),
-        dfCap = 20, minCosine = 0.3, ngramK = 3)
-      .orderBy("a", "b")
-
-  /** bm25_1 — BM25 ranked retrieval of the per-query top-10 documents for
-    * a three-query eval set (Lucene idf formulation; k1=1.2, b=0.75). The
-    * corpus's term occurrences are broadcast-restricted to the query
-    * vocabulary BEFORE any exchange, fixed-point contributions make the
-    * per-(query, doc) sum integer-exact, and ranking rides TopKPerKey.
-    */
-  private def bm25q(s: SparkSession, d: String) = {
-    import s.implicits._
-    val queries = Seq(
-      (1L, "spark hash join"), (2L, "fast table scan"), (3L, "stream window agg"))
-      .toDF("query_id", "query_text")
-    operators.Similarity.bm25TopK(Tables.documents(s, d), queries, k = 10)
-      .orderBy("query_id", "rank")
-  }
-
-  /** cohort1 — retention-cohort matrix over the event log: users keyed by
-    * first-activity day, counted per (cohort, day offset), with exact
-    * integer retention (parts-per-million). The full matrix is hash-exact
-    * — integer keys, integer counts, integer division.
-    */
-  private def cohort1(s: SparkSession, d: String) =
-    operators.TimeSeries.retentionCohorts(Tables.events(s, d))
-      .orderBy("cohort_day", "day_offset")
-
-  /** qc1 — frozen hashed-feature linear classifier inference over the
-    * corpus (the "quality classifier" curation pass): per-token integer
-    * weights from hash space, per-doc margin = zero-shuffle integer fold,
-    * keep = margin >= 0 (sigmoid is monotone). Aggregated census per
-    * (source, predicted_keep) so the output is corpus-shaped, with the
-    * exact integer margin sum as the hash anchor.
-    */
-  private def qc1(s: SparkSession, d: String) =
-    operators.Curation.hashedLinearScore(Tables.documents(s, d))
-      .groupBy("source", "predicted_keep")
-      .agg(count(lit(1)).as("n_docs"), sum(col("margin")).as("sum_margin"))
-      .orderBy("source", "predicted_keep")
-
-  // ---------- registry ----------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s1_scan_count" -> (s1 _),
-    "s2_pruned_scan" -> (s2 _),
-    "s3_sidecar_join" -> (s3 _),
-    "s4_filename_meta" -> (s4 _),
-    "s5_partitioned_sink" -> (s5 _),
-    "s6_vector_source" -> (s6 _),
-    "p1_projection" -> (p1 _),
-    "p2_cast" -> (p2 _),
-    "p3_nullif" -> (p3 _),
-    "p4_coalesce" -> (p4 _),
-    "p5_norm_diff" -> (p5 _),
-    "p6_valid_filter" -> (p6 _),
-    "p7_clamp" -> (p7 _),
-    "p8_rules" -> (p8 _),
-    "p9_null_pattern" -> (p9 _),
-    "p10_md5" -> (p10 _),
-    "p11_explode" -> (p11 _),
-    "p12_json" -> (p12 _),
-    "a1_median_groups" -> (a1 _),
-    "a2_argmax" -> (a2 _),
-    "a3_global_max" -> (a3 _),
-    "a4_percentile_cuts" -> (a4 _),
-    "a5_count_sum" -> (a5 _),
-    "a6_collect_sorted" -> (a6 _),
-    "a7_distinct_count" -> (a7 _),
-    "a9_max_plus_one" -> (a9 _),
-    "j1_broadcast_lookup" -> (j1 _),
-    "j2_fallback_coalesce" -> (j2 _),
-    "j3_multiway" -> (j3 _),
-    "j4_dispatch" -> (j4 _),
-    "j6_range_join" -> (j6 _),
-    "j7_merge_maxby" -> (j7 _),
-    "j10_asof" -> (j10 _),
-    "j11_bbox_join" -> (j11 _),
-    "z1_zorder" -> (z1 _),
-    "q6_pivot" -> (q6 _),
-    "j8_semi" -> (j8 _),
-    "j9_anti" -> (j9 _),
-    "set1_intersect" -> (set1 _),
-    "set2_except" -> (set2 _),
-    "u1_union" -> (u1 _),
-    "w1_frame_avg" -> (w1 _),
-    "w2_running_sum" -> (w2 _),
-    "w3_rank_top1" -> (w3 _),
-    "o1_ordered_limit" -> (o1 _),
-    "o2_limit" -> (o2 _),
-    "e1_exact_dedup" -> (e1 _),
-    "e1b_fingerprint_dedup" -> (e1b _),
-    "e2_minhash_sig" -> (e2 _),
-    "e2b_lsh_pairs" -> (e2b _),
-    "e7_jaccard_verify" -> (e7 _),
-    "cont1_containment" -> (cont1 _),
-    "e3_cosine_topk" -> (e3 _),
-    "e3b_ivf_topk" -> (e3b _),
-    "e3c_ivf_pruned" -> (e3c _),
-    "e3f_ivf_trained" -> (e3f _),
-    "e3d_pq_adc" -> (e3d _),
-    "e3e_ivfpq" -> (e3e _),
-    "km1_lloyd_round" -> (km1 _),
-    "km2_kmeans_train" -> (km2 _),
-    "km3_kmpp_seeded" -> (km3 _),
-    "j13_bbox_skew" -> (j13 _),
-    "j16_point_in_polygon" -> (j16 _),
-    "j17_refine_join" -> (j17 _),
-    "j18_overlap_join" -> (j18 _),
-    "j19_dwithin_join" -> (j19 _),
-    "j21_clip_zonal" -> (j21 _),
-    "zs2_exact_zonal" -> (zs2 _),
-    "j22_clip_pair" -> (j22 _),
-    "j23_clip_concave" -> (j23 _),
-    "j25_clip_polygon" -> (j25 _),
-    "j26_clip_multipolygon" -> (j26 _),
-    "j27_clip_geometry" -> (j27 _),
-    "j28_clip_general_geom" -> (j28 _),
-    "j29_box_difference" -> (j29 _),
-    "j30_clip_path" -> (j30 _),
-    "j31_path_zonal" -> (j31 _),
-    "j32_hausdorff" -> (j32 _),
-    "j20_nearest_join" -> (j20 _),
-    "j24_knn_join" -> (j24 _),
-    "gh1_geohash_bucket" -> (gh1 _),
-    "gh2_geohash_cells" -> (gh2 _),
-    "gh3_proximity_join" -> (gh3 _),
-    "gh4_geohash_cover" -> (gh4 _),
-    "traj1_user_paths" -> (traj1 _),
-    "g23_ellipsoidal_measures" -> (g23 _),
-    "g24_ring_validity" -> (g24 _),
-    "g25_polygon_validity" -> (g25 _),
-    "g26_guarded_measure" -> (g26 _),
-    "g27_simplify_census" -> (g27 _),
-    "g28_buffer_convex" -> (g28 _),
-    "g29_centroid" -> (g29 _),
-    "g30_convex_hull" -> (g30 _),
-    "g31_hull_metrics" -> (g31 _),
-    "g32_min_bbox" -> (g32 _),
-    "g33_simplify_path" -> (g33 _),
-    "j4b_batched_dispatch" -> (j4b _),
-    "knn1_label_transfer" -> (knn1 _),
-    "e8_embedding_neardup" -> (e8 _),
-    "e8b_embedding_banded" -> (e8b _),
-    "e16_semantic_dedup" -> (e16 _),
-    "e16b_semdedup_sqrtn" -> (e16b _),
-    "dsir1_importance_resample" -> (dsir1 _),
-    "mix2_temperature_quota" -> (mix2 _),
-    "hn1_hard_negatives" -> (hn1 _),
-    "e9_rolling_fingerprint" -> (e9 _),
-    "e4_text_stats" -> (e4 _),
-    "e5_langid" -> (e5 _),
-    "e6_simhash" -> (e6 _),
-    "pipe0_feature_stack" -> (pipe0 _),
-    "pipe4_tiff_stack" -> (pipe4 _),
-    "pipe5_media_census" -> (pipe5 _),
-    "bl1_boilerplate_lines" -> (bl1 _),
-    "m1_rf_classify" -> (m1 _),
-    "m1b_frozen_forest" -> (m1b _),
-    "m5_segment_polygonize" -> (m5 _),
-    "m5b_analytic_seg" -> (m5b _),
-    "st1_tumbling" -> (st1 _),
-    "mm1_binary_meta" -> (mm1 _),
-    "mm2_decode_meta" -> (mm2 _),
-    "q1_pricing_summary" -> (q1 _),
-    "q3_shipping_priority" -> (q3 _),
-    "q5_regional_revenue" -> (q5 _),
-    "q7_rollup" -> (q7 _),
-    "st2_sliding" -> (st2 _),
-    "w4_range_frame" -> (w4 _),
-    "q8_cube" -> (q8 _),
-    "samp1_hash_split" -> (samp1 _),
-    "samp2_stratified" -> (samp2 _),
-    "samp3_weighted" -> (samp3 _),
-    "e11_decontaminate" -> (e11 _),
-    "nov1_gram_novelty" -> (nov1 _),
-    "ent1_token_entropy" -> (ent1 _),
-    "o4_keyset_page" -> (o4 _),
-    "j12_full_outer" -> (j12 _),
-    "j14_asof_forward" -> (j14 _),
-    "j15_asof_nearest" -> (j15 _),
-    "emb3_dim_stats" -> (emb3 _),
-    "pack1_token_budget" -> (pack1 _),
-    "tfidf1_top_terms" -> (tfidf1 _),
-    "cc1_dup_components" -> (cc1 _),
-    "cc2_components_distributed" -> (cc2 _),
-    "pr1_dup_pagerank" -> (pr1 _),
-    "tri1_dup_triangles" -> (tri1 _),
-    "dd1_degree_distribution" -> (dd1 _),
-    "zm1_zonemap_skip" -> (zm1 _),
-    "zo1_zorder_skip" -> (zo1 _),
-    "zo2_hilbert_skip" -> (zo2 _),
-    "zo3_hilbert_ranges" -> (zo3 _),
-    "zo4_hilbert_frontdoor" -> (zo4 _),
-    "hb1_hilbert_index" -> (hb1 _),
-    "st3_sessionize" -> (st3 _),
-    "st7_enrich" -> (st7 _),
-    "m7b_polygonize_cells" -> (m7b _),
-    "e10_fuzzy_dedup_keep" -> (e10 _),
-    "o3_topk_per_key" -> (o3 _),
-    "pipe1_curation" -> (pipe1 _),
-    "w5_lag_delta" -> (w5 _),
-    "w6_ntile" -> (w6 _),
-    "g1_wkt_measures" -> (g1 _),
-    "g2_regrid_nearest" -> (g2 _),
-    "g3_regrid_bilinear" -> (g3 _),
-    "g4_regrid_cubic" -> (g4 _),
-    "g5_reproject" -> (g5 _),
-    "g6_utm_reproject" -> (g6 _),
-    "g7_webmercator_reproject" -> (g7 _),
-    "g8_lambert_reproject" -> (g8 _),
-    "g9_datum_shift" -> (g9 _),
-    "g10_albers_reproject" -> (g10 _),
-    "g11_wkt_reproject" -> (g11 _),
-    "g12_geodesic_measures" -> (g12 _),
-    "g13_vector_reproject" -> (g13 _),
-    "g13b_multipoint_reproject" -> (g13b _),
-    "g15_stateplane_ftus" -> (g15 _),
-    "g16_polar_stereographic" -> (g16 _),
-    "g17_nad83_utm" -> (g17 _),
-    "g18_gauss_kruger" -> (g18 _),
-    "s20_geotiff_sink" -> (s20 _),
-    "s21_webdataset_shards" -> (s21 _),
-    "s22_geoparquet_roundtrip" -> (s22 _),
-    "s22b_geoparquet_epsg" -> (s22b _),
-    "s23_zip_shards" -> (s23 _),
-    "s24_npz_tensors" -> (s24 _),
-    "g19_helmert_7param" -> (g19 _),
-    "g20_ups_variant_a" -> (g20 _),
-    "g21_geometrycollection" -> (g21 _),
-    "g22_nested_collection" -> (g22 _),
-    "g14_epsg_reproject" -> (g14 _),
-    "a8_tile_pca" -> (a8 _),
-    "w7_halo2d" -> (w7 _),
-    "mm3_header_decode" -> (mm3 _),
-    "mm4_wav_header" -> (mm4 _),
-    "mm5_tiff_header" -> (mm5 _),
-    "mm6_png_pixels" -> (mm6 _),
-    "mm6b_png_palette16" -> (mm6b _),
-    "mm6c_png_adam7" -> (mm6c _),
-    "mm6d_png_packed_trns" -> (mm6d _),
-    "mm7_jpeg_pixels" -> (mm7 _),
-    "mm8_jpeg_subsampled" -> (mm8 _),
-    "mm9_jpeg_progressive" -> (mm9 _),
-    "mm10_wav_samples" -> (mm10 _),
-    "mm11_gif_frames" -> (mm11 _),
-    "mm12_bmp_pixels" -> (mm12 _),
-    "mm13_avi_mjpeg" -> (mm13 _),
-    "mm14_exif_orientation" -> (mm14 _),
-    "mm15_wav_float" -> (mm15 _),
-    "mm16_webp_lossless" -> (mm16 _),
-    "mm17_pixel_resize" -> (mm17 _),
-    "mm18_webp_anim" -> (mm18 _),
-    "mm19_webp_lossy" -> (mm19 _),
-    "mm20_frame_durations" -> (mm20 _),
-    "mm21_webp_alpha" -> (mm21 _),
-    "mm22_composed_frames" -> (mm22 _),
-    "au1_stft_energy" -> (au1 _),
-    "e15_phash_neardup" -> (e15 _),
-    "shuf1_epoch_shuffle" -> (shuf1 _),
-    "s13_gpkg_roundtrip" -> (s13 _),
-    "s13b_gpkg_write" -> (s13b _),
-    "s13c_gpkg_multilayer" -> (s13c _),
-    "s16_shapefile" -> (s16 _),
-    "s16b_prj_roundtrip" -> (s16b _),
-    "s17_lzw_fp_predictor" -> (s17 _),
-    "s18_lzw_int_predictor" -> (s18 _),
-    "s19_deflate_packbits" -> (s19 _),
-    "s9_raster_blocks" -> (s9 _),
-    "s12_geotiff_ingest" -> (s12 _),
-    "s14_bigtiff_lzw" -> (s14 _),
-    "s25_jpeg_in_tiff" -> (s25 _),
-    "s15_multiband_tiff" -> (s15 _),
-    "rep1_ngram_repetition" -> (rep1 _),
-    "par1_dup_passages" -> (par1 _),
-    "q4_order_priority" -> (q4 _),
-    "gate1_quality_gate" -> (gate1 _),
-    "skew1_salted_agg" -> (skew1 _),
-    "b1_bucketed_join" -> (b1 _),
-    "emb1_label_cohesion" -> (emb1 _),
-    "sql1_function_surface" -> (sql1 _),
-    "pipe2_curation_v2" -> (pipe2 _),
-    "q12_conditional_agg" -> (q12 _),
-    "st4_interval_join" -> (st4 _),
-    "st6_outer_interval_join" -> (st6 _),
-    "sql2_spatial_sql" -> (sql2 _),
-    "e12_keep_best_quality" -> (e12 _),
-    "chunk1_token_windows" -> (chunk1 _),
-    "zs1_zonal_stats" -> (zs1 _),
-    "emb2_quantize8" -> (emb2 _),
-    "url1_domain_filter" -> (url1 _),
-    "pii1_redact" -> (pii1 _),
-    "lex1_type_token" -> (lex1 _),
-    "st5_replay_dedup" -> (st5 _),
-    "d1_delete_by_keys" -> (d1 _),
-    "up1_upsert_by_keys" -> (up1 _),
-    "tt1_read_as_of" -> (tt1 _),
-    "pipe3_mix_construction" -> (pipe3 _),
-    "q13_cust_dist" -> (q13 _),
-    "q16_supplier_cnt" -> (q16 _),
-    "q19_disjunctive" -> (q19 _),
-    "sql3_correlated" -> (sql3 _),
-    "q10_returned_rev" -> (q10 _),
-    "q11_value_parts" -> (q11 _),
-    "q14_promo_share" -> (q14 _),
-    "q15_top_supplier" -> (q15 _),
-    "q17_small_qty" -> (q17 _),
-    "q18_big_orders" -> (q18 _),
-    "q20_qualified_suppliers" -> (q20 _),
-    "q22_idle_customers" -> (q22 _),
-    "q21_last_shipper" -> (q21 _),
-    "q2_min_price_part" -> (q2 _),
-    "w8_window_distinct" -> (w8 _),
-    "w9_relative_rank" -> (w9 _),
-    "e13_bloom_decontaminate" -> (e13 _),
-    "span1_repeated_spans" -> (span1 _),
-    "inc1_incremental_dedup" -> (inc1 _),
-    "ts1_gapfill_resample" -> (ts1 _),
-    "ts2_ewma" -> (ts2 _),
-    "funnel1_conversion" -> (funnel1 _),
-    "s10_csv_roundtrip" -> (s10 _),
-    "sch1_schema_evolution" -> (sch1 _),
-    "gs1_grouping_sets" -> (gs1 _),
-    "hof1_array_funcs" -> (hof1 _),
-    "prof1_table_profile" -> (prof1 _),
-    "stat1_exact_corr" -> (stat1 _),
-    "leak1_split_leakage" -> (leak1 _),
-    "lm1_unigram_logprob" -> (lm1 _),
-    "lm2_bigram_logprob" -> (lm2 _),
-    "e14_simhash_neardup" -> (e14 _),
-    "e14b_simhash_wide" -> (e14b _),
-    "q6b_forecast_revenue" -> (q6b _),
-    "q7b_volume_shipping" -> (q7b _),
-    "q8b_market_share" -> (q8b _),
-    "q9_product_profit" -> (q9 _),
-    "pmi1_collocations" -> (pmi1 _),
-    "w10_value_windows" -> (w10 _),
-    "w11_session_window" -> (w11 _),
-    "hist1_char_lengths" -> (hist1 _),
-    "hist2_price_deciles" -> (hist2 _),
-    "cap1_source_cap" -> (cap1 _),
-    "kmv1_distinct_sketch" -> (kmv1 _),
-    "cms1_countmin_freq" -> (cms1 _),
-    "cms2_heavy_hitters" -> (cms2 _),
-    "cov1_interval_coverage" -> (cov1 _),
-    "cov2_union_area" -> (cov2 _),
-    "cov3_union_concave" -> (cov3 _),
-    "cov4_union_geometry" -> (cov4 _),
-    "cov5_union_geodesic" -> (cov5 _),
-    "cov6_tiled_dissolve" -> (cov6 _),
-    "cov7_dissolve_wkt" -> (cov7 _),
-    "zs3_coverage_cells" -> (zs3 _),
-    "norm1_unicode_norm" -> (norm1 _),
-    "hll1_hll_distinct" -> (hll1 _),
-    "hll2_hll_merge" -> (hll2 _),
-    "qs1_quantile_sketch" -> (qs1 _),
-    "qs2_quantile_merge" -> (qs2 _),
-    "qs3_grouped_quantiles" -> (qs3 _),
-    "qs4_quantile_rollup" -> (qs4 _),
-    "cms4_cms_merge" -> (cms4 _),
-    "kmv3_set_difference" -> (kmv3 _),
-    "cms3_join_size" -> (cms3 _),
-    "kmv2_set_sketch" -> (kmv2 _),
-    "kmv4_jaccard" -> (kmv4 _),
-    "rr1_retrieval_eval" -> (rr1 _),
-    "bpe1_bpe_tokens" -> (bpe1 _),
-    "bpe2_bpe_train" -> (bpe2 _),
-    "cdc1_snapshot_diff" -> (cdc1 _),
-    "iv1_incremental_rollup" -> (iv1 _),
-    "iv2_join_delta" -> (iv2 _),
-    "fz1_fuzzy_match" -> (fz1 _),
-    "fz2_segment_match" -> (fz2 _),
-    "s11_jsonl_roundtrip" -> (s11 _),
-    "span2_strip_spans" -> (span2 _),
-    "tfidf2_pair_similarity" -> (tfidf2 _),
-    "bm25_1_ranked_retrieval" -> (bm25q _),
-    "cohort1_retention" -> (cohort1 _),
-    "qc1_linear_classifier" -> (qc1 _)
-  )
-
-  // ---------- oracle SQL (DuckDB dialect) ----------
-
-  /** SQL for the integer value of hex digit i (1-based) of expression h. */
-  private def sqlHexDigit(h: String, i: Int): String =
-    s"(ascii(substr($h,$i,1)) - 48 - CASE WHEN ascii(substr($h,$i,1)) >= 97 THEN 39 ELSE 0 END)"
-
-  /** SQL for the integer value of the first k hex chars of expression h. */
-  private def sqlHexVal(h: String, k: Int): String =
-    // the multiplier must be BIGINT: DuckDB types bare integer literals
-    // INT32, and digit · 16^7 already overflows 32 bits (k up to 15 here)
-    (1 to k).map(i =>
-        s"${sqlHexDigit(h, i)} * CAST(${math.pow(16, (k - i).toDouble).toLong} AS BIGINT)")
-      .mkString("(", " + ", ")")
-
-  private def sqlMinhash(j: Int): String = {
-    val (a, b) = TextOps.minhashParams(j)
-    s"CAST(list_min(list_transform(hs, h -> (CAST($a AS BIGINT) * h + $b) % ${TextOps.MinhashP})) AS BIGINT)"
-  }
-
-  /** Shingle CTE over an arbitrary source relation (cc2 scopes it). */
-  private def sqlShingleCteFrom(src: String): String =
-    s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM $src),
-       |s AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [text]
-       |  ELSE list_transform(generate_series(1, len(toks) - 2),
-       |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS shingles FROM t),
-       |sh AS (SELECT doc_id, shingles,
-       |  list_transform(list_transform(shingles, g -> md5(g)), h -> ${sqlHexVal("h", 6)}) AS hs FROM s)""".stripMargin
-
-  private val sqlShingleCte = sqlShingleCteFrom("documents")
-
-  private def sqlDot(a: String, b: String): String =
-    s"list_reduce(list_transform(generate_series(1, 64), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x, y) -> x + y)"
-
-  /** DuckDB twin of VectorOps.l2Distance: in-order left fold from 0.0 of
-    * squared component deltas (bit-identical to Spark's `aggregate`).
-    */
-  private def sqlL2(a: String, b: String): String =
-    s"sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(generate_series(1, 64), i -> " +
-      s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), " +
-      s"(x, y) -> x + y))"
-
-  /** DuckDB twin of VectorOps.l2DistanceSq over ONE PQ subspace: the same
-    * in-order fold, over absolute dims m·8+1 .. m·8+8 of the full arrays
-    * (Spark folds the slices — identical values in identical order).
-    */
-  private def sqlSubL2Sq(a: String, b: String, m: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(generate_series($m*8+1, $m*8+8), i -> " +
-      s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), " +
-      s"(x, y) -> x + y)"
-
-  private def sqlLangHits(words: Seq[String]): String =
-    s"len(list_filter(toks, t -> t IN (${words.map(w => s"'$w'").mkString(",")})))"
-
-  /** Catmull-Rom (a=−0.5) cubic weight of a non-negative distance expr. */
-  private def sqlCubW(t: String): String =
-    s"(CASE WHEN $t <= 1 THEN (1.5*$t - 2.5)*$t*$t + 1 ELSE ((-0.5*$t + 2.5)*$t - 4)*$t + 2 END)"
-
-  def oracleSql: Map[String, String] = oracleSqlBase +
-    // cc2 runs the distributed CC path against the SAME oracle text as
-    // cc1's driver union-find path, scoped to the quarter corpus — one
-    // SQL shape, two engine paths, both hash-gated.
-    ("cc2_components_distributed" -> oracleSqlBase("cc1_dup_components")
-      .replace(
-        sqlShingleCteFrom("documents").replaceFirst("WITH ", "WITH RECURSIVE "),
-        sqlShingleCteFrom("(SELECT * FROM documents WHERE doc_id % 4 = 0)")
-          .replaceFirst("WITH ", "WITH RECURSIVE "))) +
-    // pipe4 ingests the SAME scene fixture as pipe0 from multi-band LZW
-    // BigTIFF containers (+ mask sidecar TIFFs) — the containers must be
-    // invisible, so the oracle text is pipe0's verbatim.
-    ("pipe4_tiff_stack" -> oracleSqlBase("pipe0_feature_stack")) +
-    // g14 dispatches the SAME transform as g11 from EPSG code strings —
-    // the code table must be bit-identical to the .prj path, so the
-    // oracle text is g11's verbatim.
-    ("g14_epsg_reproject" -> oracleSqlBase("g11_wkt_reproject")) +
-    // pipe5: each codec's closed form re-aggregated to its census — a
-    // defect in any of the six decoders shifts a sum.
-    ("pipe5_media_census" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      def census(kind: String, n: Int, v: String) =
-        s"""SELECT '$kind' AS kind, count(*) AS n,
-          |  CAST(sum(v) AS BIGINT) AS sum_v,
-          |  CAST(min(v) AS INT) AS min_v, CAST(max(v) AS INT) AS max_v
-          |FROM (SELECT $v AS v FROM range($n) t(id))""".stripMargin
-      Seq(
-        census("bmp", 162,
-          "(id // 27 * 37 + (id % 27) // 3 * 11 + id % 3 * 71 + 3) % 256"),
-        census("gif", 560,
-          """CASE id % 4
-            |    WHEN 0 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 41) % 256
-            |    WHEN 1 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 73) % 256
-            |    WHEN 2 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 97) % 256
-            |    ELSE 255 END""".stripMargin),
-        census("jpeg", 240,
-          s"""LEAST(255, GREATEST(0, CAST(floor(
-            |    $c0sq * CAST(((((id // 20 // 8) * 3 + (id % 20 // 8)) * 7) % 40 - 20) * 16 AS DOUBLE)
-            |      * 0.25 + 128.0 + 0.5) AS INT)))""".stripMargin),
-        census("png", 324,
-          """CASE id % 3
-            |    WHEN 0 THEN (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 37) % 256
-            |    WHEN 1 THEN (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 59) % 256
-            |    ELSE (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 83) % 256 END""".stripMargin),
-        census("tiff", 128, "(id // 16 * 13 + id % 16) % 97"),
-        census("wav", 60, "(id // 2 * 773 + id % 2 * 331) % 65536 - 32768"),
-        // the rejects-census bag: per-(format, ok) file counts with the
-        // decoded-value totals for the ok files — all literals, because
-        // the bag's composition IS the contract (7 rejects incl. the
-        // named mp3/flac/apng skips, 2 ok)
-        """SELECT kind, CAST(n AS BIGINT) AS n, CAST(sum_v AS BIGINT) AS sum_v,
-          |  CAST(0 AS INT) AS min_v, CAST(0 AS INT) AS max_v
-          |FROM (VALUES ('z_apng_rej', 1, 0), ('z_bmp_rej', 1, 0),
-          |  ('z_flac_rej', 1, 0),
-          |  ('z_gif_rej', 1, 0), ('z_mp3_rej', 1, 0),
-          |  ('z_png_ok', 1, 324), ('z_unknown_rej', 1, 0),
-          |  ('z_wav_ok', 1, 60), ('z_webp_ok', 1, 96),
-          |  ('z_webp_rej', 1, 0)) t(kind, n, sum_v)""".stripMargin
-      ).mkString("", "\nUNION ALL\n", "\nORDER BY kind")
-    })
-
-  private lazy val oracleSqlBase: Map[String, String] = Map(
-    "s1_scan_count" -> "SELECT count(*) AS cnt FROM lineitem",
-    "s2_pruned_scan" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice, l_shipdate
-        |FROM lineitem WHERE l_orderkey BETWEEN 1 AND 100
-        |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity, l_extendedprice, l_shipdate""".stripMargin,
-    "s3_sidecar_join" ->
-      """SELECT l_orderkey, l_linenumber, p_name FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        |ORDER BY l_orderkey, l_linenumber, p_name NULLS FIRST""".stripMargin,
-    "s4_filename_meta" ->
-      "SELECT regexp_extract(o_orderpriority, '(\\d+)', 1) AS prio, count(*) AS n FROM orders GROUP BY prio ORDER BY prio",
-    "s5_partitioned_sink" ->
-      "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag",
-    "s6_vector_source" ->
-      "SELECT doc_id, n_chars, CAST(strlen(text) AS BIGINT) AS text_bytes FROM documents ORDER BY doc_id",
-    "p1_projection" ->
-      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem ORDER BY l_orderkey, l_linenumber, l_quantity",
-    "p2_cast" ->
-      "SELECT l_orderkey, l_linenumber, CAST(l_quantity AS REAL) AS qty_f FROM lineitem ORDER BY l_orderkey, l_linenumber, qty_f",
-    "p3_nullif" ->
-      "SELECT l_orderkey, l_linenumber, nullif(l_discount, 0.0) AS disc_n FROM lineitem ORDER BY l_orderkey, l_linenumber, disc_n NULLS FIRST",
-    "p4_coalesce" ->
-      "SELECT l_orderkey, l_linenumber, coalesce(nullif(l_tax, 0.0), 0.0) AS tax_f FROM lineitem ORDER BY l_orderkey, l_linenumber, tax_f",
-    "p5_norm_diff" ->
-      """SELECT l_orderkey, l_linenumber,
-        |round((l_extendedprice - l_discount) / (l_extendedprice + l_discount + 1e-9), 6) AS nd,
-        |round(CASE WHEN l_extendedprice + l_discount = 0.0 THEN NULL
-        |  ELSE (l_extendedprice - l_discount) / (l_extendedprice + l_discount) END, 6) AS nd_null
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, nd, nd_null NULLS FIRST""".stripMargin,
-    "p6_valid_filter" ->
-      "SELECT count(*) AS cnt FROM lineitem WHERE l_quantity IS NOT NULL AND l_discount > 0.02",
-    "p7_clamp" ->
-      "SELECT l_orderkey, l_linenumber, least(greatest(l_discount, 0.01), 0.05) AS disc_c FROM lineitem ORDER BY l_orderkey, l_linenumber, disc_c",
-    "p8_rules" ->
-      """SELECT l_orderkey, l_linenumber,
-        |CASE WHEN l_returnflag = 'R' AND l_discount < 0.06 THEN 'N'
-        |     WHEN l_returnflag = 'A' THEN 'N' ELSE l_returnflag END AS flag_rw
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, flag_rw""".stripMargin,
-    "p9_null_pattern" ->
-      """SELECT concat_ws('_', CASE WHEN l_quantity > 25 THEN 'Q' END,
-        |  CASE WHEN l_discount > 0.03 THEN 'D' END) AS combo, count(*) AS n
-        |FROM lineitem GROUP BY combo ORDER BY combo""".stripMargin,
-    "p10_md5" ->
-      "SELECT l_orderkey, l_linenumber, md5(concat(l_returnflag, l_linestatus)) AS key_md5 FROM lineitem ORDER BY l_orderkey, l_linenumber, key_md5",
-    "p11_explode" ->
-      """SELECT l_orderkey, l_linenumber, n FROM lineitem
-        |CROSS JOIN (SELECT unnest([1, 2, 3]) AS n) t ORDER BY l_orderkey, l_linenumber, n""".stripMargin,
-    "p12_json" ->
-      """SELECT event_id, json_extract_string(props, '$.k') AS k_str,
-        |CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_int FROM events ORDER BY event_id""".stripMargin,
-    "a1_median_groups" ->
-      """SELECT l_returnflag, round(median(l_quantity), 6) AS med_qty, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "a2_argmax" ->
-      """SELECT l_orderkey, l_partkey AS best_pk FROM (
-        |  SELECT l_orderkey, l_partkey,
-        |    row_number() OVER (PARTITION BY l_orderkey ORDER BY l_extendedprice DESC, l_partkey DESC) AS rn
-        |  FROM lineitem) WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
-    "a3_global_max" ->
-      "SELECT max(l_extendedprice) AS max_ep, min(l_shipdate) AS min_sd, max(l_shipdate) AS max_sd FROM lineitem",
-    "a4_percentile_cuts" ->
-      """SELECT round(quantile_cont(l_extendedprice, 0.02), 6) AS cut_lo,
-        |round(quantile_cont(l_extendedprice, 0.98), 6) AS cut_hi FROM lineitem""".stripMargin,
-    "a5_count_sum" ->
-      """SELECT count(*) AS cnt, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem""".stripMargin,
-    "a6_collect_sorted" ->
-      "SELECT l_orderkey, array_to_string(list_sort(list(l_linenumber)), ',') AS lns FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey",
-    "a7_distinct_count" ->
-      "SELECT count(DISTINCT l_returnflag || l_linestatus) AS n_combo, count(DISTINCT l_partkey) AS n_part FROM lineitem",
-    "a9_max_plus_one" -> "SELECT max(l_orderkey) + 1 AS next_id FROM lineitem",
-    "j1_broadcast_lookup" ->
-      "SELECT o_orderkey, c_name, c_mktsegment FROM orders LEFT JOIN customer ON o_custkey = c_custkey ORDER BY o_orderkey",
-    "j2_fallback_coalesce" ->
-      """SELECT o_orderkey, coalesce(c_name, 'UNKNOWN') AS cust FROM orders
-        |LEFT JOIN customer ON o_custkey = c_custkey AND c_acctbal > 0 ORDER BY o_orderkey""".stripMargin,
-    "j3_multiway" ->
-      """SELECT l_orderkey, l_linenumber, p_retailprice, s_acctbal, n_name FROM lineitem
-        |JOIN part ON l_partkey = p_partkey JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |ORDER BY l_orderkey, l_linenumber, p_retailprice, s_acctbal, n_name""".stripMargin,
-    "j4_dispatch" ->
-      """SELECT k.combo, count(*) AS n FROM (SELECT l_returnflag || l_linestatus AS combo FROM lineitem) k
-        |JOIN (VALUES ('RF'), ('NO')) m(combo) ON k.combo = m.combo GROUP BY k.combo ORDER BY k.combo""".stripMargin,
-    "j6_range_join" ->
-      """SELECT count(*) AS n_pairs FROM events a JOIN events b
-        |ON a.user_id = b.user_id AND b.ts BETWEEN a.ts AND a.ts + INTERVAL 1 MINUTE""".stripMargin,
-    "j7_merge_maxby" ->
-      """SELECT user_id, value AS last_val FROM (
-        |  SELECT user_id, value, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "j10_asof" ->
-      """SELECT event_id, user_id, click_id FROM (
-        |  SELECT event_id, user_id, event_type,
-        |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id
-        |  FROM events) t WHERE event_type = 'error' ORDER BY event_id""".stripMargin,
-    // j14/j15: the direction surface against a min/max-aggregation mirror —
-    // deduped right side makes the matched value deterministic.
-    "j14_asof_forward" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, ts, min(value) AS value FROM events
-        |  WHERE event_type = 'click' GROUP BY 1, 2),
-        |m AS (SELECT p.event_id, p.user_id, p.ts, min(c.ts) AS m_ts
-        |  FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts >= p.ts
-        |  GROUP BY 1, 2, 3)
-        |SELECT m.event_id, m.user_id,
-        |  CASE WHEN m.m_ts IS NOT NULL
-        |        AND epoch_us(m.m_ts) - epoch_us(m.ts) <= 600000000
-        |       THEN c.value END AS next_click_val
-        |FROM m LEFT JOIN c ON c.user_id = m.user_id AND c.ts = m.m_ts
-        |ORDER BY event_id""".stripMargin,
-    "j15_asof_nearest" ->
-      """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, ts, min(value) AS value FROM events
-        |  WHERE event_type = 'click' GROUP BY 1, 2),
-        |m AS (SELECT p.event_id, p.user_id, p.ts,
-        |    max(CASE WHEN c.ts <= p.ts THEN c.ts END) AS b_ts,
-        |    min(CASE WHEN c.ts >= p.ts THEN c.ts END) AS f_ts
-        |  FROM p LEFT JOIN c ON c.user_id = p.user_id
-        |  GROUP BY 1, 2, 3),
-        |pick AS (SELECT event_id, user_id, ts,
-        |    CASE WHEN b_ts IS NOT NULL AND (f_ts IS NULL
-        |          OR epoch_us(ts) - epoch_us(b_ts) <= epoch_us(f_ts) - epoch_us(ts))
-        |         THEN b_ts ELSE f_ts END AS m_ts
-        |  FROM m)
-        |SELECT pick.event_id, pick.user_id,
-        |  CASE WHEN pick.m_ts IS NOT NULL
-        |        AND abs(epoch_us(pick.m_ts) - epoch_us(pick.ts)) <= 900000000
-        |       THEN c.value END AS near_click_val
-        |FROM pick LEFT JOIN c ON c.user_id = pick.user_id AND c.ts = pick.m_ts
-        |ORDER BY event_id""".stripMargin,
-    "j11_bbox_join" ->
-      """WITH sb AS (
-        |  SELECT s_suppkey,
-        |         s_suppkey % 97 AS xmin, s_suppkey % 89 AS ymin,
-        |         s_suppkey % 97 + 1 + s_suppkey % 5 AS xmax,
-        |         s_suppkey % 89 + 1 + s_suppkey % 7 AS ymax
-        |  FROM supplier),
-        |cb AS (
-        |  SELECT c_custkey,
-        |         c_custkey % 97 AS xmin, c_custkey % 89 AS ymin,
-        |         c_custkey % 97 + 1 + c_custkey % 5 AS xmax,
-        |         c_custkey % 89 + 1 + c_custkey % 7 AS ymax
-        |  FROM customer)
-        |SELECT s_suppkey, c_custkey FROM sb JOIN cb
-        |  ON sb.xmin <= cb.xmax AND cb.xmin <= sb.xmax
-        | AND sb.ymin <= cb.ymax AND cb.ymin <= sb.ymax
-        |ORDER BY s_suppkey, c_custkey""".stripMargin,
-    // j13: direct all-pairs intersect join over the same skewed boxes —
-    // the salted PBSM path must be result-identical to the naive join.
-    "j13_bbox_skew" ->
-      """WITH sb AS (
-        |  SELECT s_suppkey,
-        |    CASE WHEN s_suppkey % 5 <> 0 THEN (s_suppkey % 13) * 0.5 ELSE (s_suppkey % 97) * 2 END AS xmin,
-        |    CASE WHEN s_suppkey % 5 <> 0 THEN (s_suppkey % 11) * 0.5 ELSE (s_suppkey % 89) * 2 END AS ymin
-        |  FROM supplier),
-        |sb2 AS (SELECT s_suppkey, xmin, ymin,
-        |    xmin + 1 + s_suppkey % 3 AS xmax, ymin + 1 + s_suppkey % 4 AS ymax FROM sb),
-        |cb AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 5 <> 0 THEN (c_custkey % 13) * 0.5 ELSE (c_custkey % 97) * 2 END AS xmin,
-        |    CASE WHEN c_custkey % 5 <> 0 THEN (c_custkey % 11) * 0.5 ELSE (c_custkey % 89) * 2 END AS ymin
-        |  FROM customer),
-        |cb2 AS (SELECT c_custkey, xmin, ymin,
-        |    xmin + 1 + c_custkey % 3 AS xmax, ymin + 1 + c_custkey % 4 AS ymax FROM cb)
-        |SELECT s_suppkey, c_custkey FROM sb2 JOIN cb2
-        |  ON sb2.xmin <= cb2.xmax AND cb2.xmin <= sb2.xmax
-        | AND sb2.ymin <= cb2.ymax AND cb2.ymin <= sb2.ymax
-        |ORDER BY s_suppkey, c_custkey""".stripMargin,
-    "z1_zorder" ->
-      s"""SELECT s_suppkey, CAST(${zorderSqlExpr("s_suppkey % 97", "s_suppkey % 89", 7)} AS BIGINT) AS zkey
-         |FROM supplier ORDER BY zkey, s_suppkey""".stripMargin,
-    // j16: the crossing-number / boundary / containment arithmetic replayed
-    // from the generating integers (the Spark side parses the WKT it built;
-    // the oracle never parses - it recomputes the same dyadic coordinates).
-    "j16_point_in_polygon" -> {
-      val segs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      s"""WITH base AS ($arrowSqlBase),
-         |p AS (SELECT s_suppkey, x0, y0, w, h,
-         |  x0 + CAST(s_suppkey % 9 AS DOUBLE) * 0.5 AS px,
-         |  y0 + CAST(s_suppkey % 11 AS DOUBLE) * 0.5 AS py FROM base)
-         |SELECT s_suppkey, ${sqlCrossings(segs, "px", "py")} AS crossings,
-         |  CASE WHEN ${sqlOnBoundary(segs, "px", "py")} THEN 1 ELSE 0 END AS on_boundary,
-         |  CASE WHEN ${sqlContains(segs, "px", "py")} THEN 1 ELSE 0 END AS inside
-         |FROM p ORDER BY s_suppkey""".stripMargin
-    },
-    // j17: the UNFILTERED theta join with the same closed-containment
-    // arithmetic - the bbox+refine path must be result-identical.
-    "j17_refine_join" -> {
-      val segs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      s"""WITH sup AS ($arrowSqlBase),
-         |cust AS (SELECT c_custkey,
-         |  CAST(c_custkey % 93 AS DOUBLE) + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS px,
-         |  CAST(c_custkey % 83 AS DOUBLE) + CAST(c_custkey % 7 AS DOUBLE) * 0.25 AS py
-         |  FROM customer)
-         |SELECT s_suppkey, c_custkey FROM sup JOIN cust
-         |  ON ${sqlContains(segs, "px", "py")}
-         |ORDER BY s_suppkey, c_custkey""".stripMargin
-    },
-    // j19: the UNFILTERED theta join with the same region-distance
-    // arithmetic (contains OR clamped-projection boundary-dist² ≤ 2.25) —
-    // the expanded-envelope bbox + codegen refine must equal brute force.
-    "j19_dwithin_join" -> {
-      val segs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      s"""WITH sup AS ($arrowSqlBase),
-         |cust AS (SELECT c_custkey,
-         |  CAST(c_custkey % 93 AS DOUBLE) + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS px,
-         |  CAST(c_custkey % 83 AS DOUBLE) + CAST(c_custkey % 7 AS DOUBLE) * 0.25 AS py
-         |  FROM customer)
-         |SELECT s_suppkey, c_custkey FROM sup JOIN cust
-         |  ON (${sqlContains(segs, "px", "py")}
-         |   OR ${sqlBoundaryDistSq(segs, "px", "py")} <= 2.25)
-         |ORDER BY s_suppkey, c_custkey""".stripMargin
-    },
-    // j21: S-H clip passes + sequential shoelace fold over ALL pairs,
-    // clip_area > 0 as the join — see sqlClipZonal.
-    "j21_clip_zonal" -> sqlClipZonal,
-    // zs2: the j21 replay wrapped in the identical fixed-point rollup.
-    "zs2_exact_zonal" ->
-      s"""WITH zonal AS ($sqlClipZonal)
-         |SELECT s_suppkey, count(*) AS n_cells,
-         |  CAST(sum(CAST(floor(clip_area * 1048576.0) AS BIGINT)) AS BIGINT) AS area_fp,
-         |  CAST(sum(CAST(floor(clip_area * 1048576.0) AS BIGINT) * cell_id) AS BIGINT) AS wsum_fp,
-         |  CASE WHEN sum(CAST(floor(clip_area * 1048576.0) AS BIGINT)) > 0 THEN
-         |    round(CAST(sum(CAST(floor(clip_area * 1048576.0) AS BIGINT) * cell_id) AS DOUBLE)
-         |      / CAST(sum(CAST(floor(clip_area * 1048576.0) AS BIGINT)) AS DOUBLE), 6) END AS mean_cell
-         |FROM zonal GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin,
-    // j22: convex-window S-H per diamond edge over envelope-overlap
-    // candidates — see sqlClipPair.
-    "j22_clip_pair" -> sqlClipPair,
-    // j23: the ear-decomposed general kernel replayed -- see sqlClipConcave.
-    "j23_clip_concave" -> sqlClipConcave,
-    // j25: j23's replay + the CW hole triangle subtracted -- sqlClipPolygon.
-    "j25_clip_polygon" -> sqlClipPolygon,
-    // j26: the MULTIPOLYGON front door over the dart pre-split into its
-    // two ear members -- each member triangle IS the ear the general
-    // kernel cuts and the fold order matches j25's ((A1+A2)-A3), so the
-    // replay is sqlClipPolygon VERBATIM (ClipAreaSpec gates the bitwise
-    // identity engine-side).
-    "j26_clip_multipolygon" -> sqlClipPolygon,
-    // j27: the same replay EMITTING the final clipped vertex lists as
-    // rows — the first oracled computed GEOMETRY (raw IEEE coordinates).
-    "j27_clip_geometry" -> sqlClipGeom,
-    // j28: sqlClipConcave's two-ear replay emitting the per-ear PIECES'
-    // vertex lists (the general kernel's piecewise tiling) as rows.
-    "j28_clip_general_geom" -> sqlClipGeneralGeom,
-    // j29: the four complement-strip chains replayed over the exact
-    // bboxJoin pair set — polygon MINUS cell as emitted vertex rows.
-    "j29_box_difference" -> sqlBoxDiffGeom,
-    // j30: the parametric path clip's t0/t1 chains replayed per segment.
-    "j30_clip_path" -> sqlClipPath,
-    // j31: the same chains against each cell's walls over the exact
-    // bboxJoin pair set; per-row fixed-point floors, integer rollup.
-    "j31_path_zonal" -> sqlPathZonal,
-    // j32: GREATEST over per-vertex LEAST-over-segments terms, both
-    // directions — the raw boundary Hausdorff distance^2 per pair.
-    "j32_hausdorff" -> sqlHausdorff,
-    // j20: the unfiltered theta join computing the identical region
-    // distance, ranked by row_number(ORDER BY d2, key) — the min-struct
-    // aggregation must pick the same (d2, key) pair, and the raw d2
-    // doubles must hash-match bit-for-bit.
-    "j20_nearest_join" -> {
-      val segs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      s"""WITH sup AS ($arrowSqlBase),
-         |cust AS (SELECT c_custkey,
-         |  CAST(c_custkey % 93 AS DOUBLE) + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS px,
-         |  CAST(c_custkey % 83 AS DOUBLE) + CAST(c_custkey % 7 AS DOUBLE) * 0.25 AS py
-         |  FROM customer),
-         |cand AS (SELECT c_custkey, s_suppkey,
-         |  CASE WHEN ${sqlContains(segs, "px", "py")} THEN 0.0
-         |       ELSE ${sqlBoundaryDistSq(segs, "px", "py")} END AS d2
-         |  FROM sup JOIN cust ON TRUE)
-         |SELECT c_custkey, s_suppkey, d2 FROM (
-         |  SELECT c_custkey, s_suppkey, d2,
-         |    row_number() OVER (PARTITION BY c_custkey ORDER BY d2, s_suppkey) AS rn
-         |  FROM cand WHERE d2 <= 9.0) t
-         |WHERE rn = 1 ORDER BY c_custkey""".stripMargin
-    },
-    // j24: j20's oracle with rn <= 3 — the bounded-heap TopK operator
-    // must keep exactly the rows the window ranking keeps, per point.
-    "j24_knn_join" -> {
-      val segs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      s"""WITH sup AS ($arrowSqlBase),
-         |cust AS (SELECT c_custkey,
-         |  CAST(c_custkey % 93 AS DOUBLE) + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS px,
-         |  CAST(c_custkey % 83 AS DOUBLE) + CAST(c_custkey % 7 AS DOUBLE) * 0.25 AS py
-         |  FROM customer),
-         |cand AS (SELECT c_custkey, s_suppkey,
-         |  CASE WHEN ${sqlContains(segs, "px", "py")} THEN 0.0
-         |       ELSE ${sqlBoundaryDistSq(segs, "px", "py")} END AS d2
-         |  FROM sup JOIN cust ON TRUE)
-         |SELECT c_custkey, s_suppkey, d2 FROM (
-         |  SELECT c_custkey, s_suppkey, d2,
-         |    row_number() OVER (PARTITION BY c_custkey ORDER BY d2, s_suppkey) AS rn
-         |  FROM cand WHERE d2 <= 9.0) t
-         |WHERE rn <= 3 ORDER BY c_custkey, d2, s_suppkey""".stripMargin
-    },
-    // gh1: the full geohash encode replayed in SQL — quantize (the one
-    // floating chain, mirrored op-for-op), interleave and base32 as exact
-    // integer bit algebra — then the identical bucket census.
-    "gh1_geohash_bucket" -> {
-      val lonq = ghSqlQuant("lon", "180.0", "360.0", 13)
-      val latq = ghSqlQuant("lat", "90.0", "180.0", 12)
-      val comb = ghSqlInterleave("lonq", "latq", 5)
-      val gh = ghSqlBase32("comb", 5)
-      s"""WITH pts AS (SELECT user_id,
-         |  (CAST((user_id * 131) % 3600 AS DOUBLE) / 10.0) - 180.0 AS lon,
-         |  (CAST((user_id * 89) % 1700 AS DOUBLE) / 10.0) - 85.0 AS lat FROM events),
-         |q AS (SELECT user_id, $lonq AS lonq, $latq AS latq FROM pts),
-         |e AS (SELECT user_id, $comb AS comb FROM q)
-         |SELECT $gh AS gh, count(*) AS cnt, count(DISTINCT user_id) AS users,
-         |  min(user_id) AS min_uid
-         |FROM e GROUP BY 1 ORDER BY gh""".stripMargin
-    },
-    // gh2: decode/shift replayed from the QUANTIZED integers (the string
-    // decode round-trips to exactly these values — integer-exact, so the
-    // envelope doubles and neighbor ids hash-match the engine's
-    // string-path decode bit-for-bit). Parent at precision 4; east wraps
-    // mod 2^13, north NULLs past the top latitude row.
-    "gh2_geohash_cells" -> {
-      val lonq5 = ghSqlQuant("lon", "180.0", "360.0", 13)
-      val latq5 = ghSqlQuant("lat", "90.0", "180.0", 12)
-      val lonq4 = ghSqlQuant("lon", "180.0", "360.0", 10)
-      val latq4 = ghSqlQuant("lat", "90.0", "180.0", 10)
-      val comb5 = ghSqlInterleave("lonq5", "latq5", 5)
-      val comb4 = ghSqlInterleave("lonq4", "latq4", 4)
-      val combE = ghSqlInterleave("lonqe", "latq5", 5)
-      val combN = ghSqlInterleave("lonq5", "latqn", 5)
-      s"""WITH pts AS (SELECT c_custkey,
-         |  (CAST((c_custkey * 131) % 3600 AS DOUBLE) / 10.0) - 180.0 AS lon,
-         |  (CAST((c_custkey * 89) % 1700 AS DOUBLE) / 10.0) - 85.0 AS lat FROM customer),
-         |q AS (SELECT c_custkey, lon, lat, $lonq5 AS lonq5, $latq5 AS latq5,
-         |  $lonq4 AS lonq4, $latq4 AS latq4 FROM pts),
-         |e AS (SELECT *, $comb5 AS comb5, $comb4 AS comb4,
-         |  (lonq5 + 1) % 8192 AS lonqe, latq5 + 1 AS latqn FROM q),
-         |g AS (SELECT *, ${ghSqlBase32("comb5", 5)} AS gh5,
-         |  ${ghSqlBase32("comb4", 4)} AS gh4, $combE AS combe, $combN AS combn FROM e),
-         |h AS (SELECT *,
-         |  ${ghSqlBase32("combe", 5)} AS east0,
-         |  CASE WHEN latqn <= 4095 THEN ${ghSqlBase32("combn", 5)} END AS north0,
-         |  (CAST(lonq5 AS DOUBLE) / 8192.0) * 360.0 - 180.0 AS xmin0,
-         |  (CAST(latq5 AS DOUBLE) / 4096.0) * 180.0 - 90.0 AS ymin0,
-         |  (CAST(lonq5 + 1 AS DOUBLE) / 8192.0) * 360.0 - 180.0 AS xmax0,
-         |  (CAST(latq5 + 1 AS DOUBLE) / 4096.0) * 180.0 - 90.0 AS ymax0,
-         |  (CAST(lonq4 AS DOUBLE) / 1024.0) * 360.0 - 180.0 AS pxmin,
-         |  (CAST(latq4 AS DOUBLE) / 1024.0) * 180.0 - 90.0 AS pymin,
-         |  (CAST(lonq4 + 1 AS DOUBLE) / 1024.0) * 360.0 - 180.0 AS pxmax,
-         |  (CAST(latq4 + 1 AS DOUBLE) / 1024.0) * 180.0 - 90.0 AS pymax FROM g)
-         |SELECT gh5 AS gh, count(*) AS n, min(c_custkey) AS min_key,
-         |  bool_and(lon >= xmin0 AND lon <= xmax0 AND lat >= ymin0 AND lat <= ymax0)
-         |    AS all_in_cell,
-         |  bool_and(substr(gh5, 1, 4) = gh4
-         |    AND xmin0 >= pxmin AND xmax0 <= pxmax
-         |    AND ymin0 >= pymin AND ymax0 <= pymax) AS nested,
-         |  min(east0) AS east, min(north0) AS north,
-         |  min(xmin0) AS xmin, min(ymin0) AS ymin,
-         |  min(xmax0) AS xmax, min(ymax0) AS ymax
-         |FROM h GROUP BY gh5 ORDER BY gh""".stripMargin
-    },
-    // gh3: the unfiltered theta join on the identical euclidean chain —
-    // the 9-key geohash blocking must be invisible (complete recall at
-    // dist ≤ cell dimension).
-    "gh3_proximity_join" ->
-      """WITH cust AS (SELECT c_custkey,
-        |  (CAST((c_custkey * 131) % 3600 AS DOUBLE) / 10.0) - 180.0 AS px,
-        |  (CAST((c_custkey * 89) % 1700 AS DOUBLE) / 10.0) - 85.0 AS py FROM customer),
-        |supp AS (SELECT s_suppkey,
-        |  ((CAST((s_suppkey * 127) % 3600 AS DOUBLE) / 10.0) - 180.0) + 0.03 AS qx,
-        |  ((CAST((s_suppkey * 83) % 1700 AS DOUBLE) / 10.0) - 85.0) + 0.04 AS qy FROM supplier)
-        |SELECT c_custkey, s_suppkey,
-        |  (px - qx) * (px - qx) + (py - qy) * (py - qy) AS d2
-        |FROM cust JOIN supp
-        |  ON (px - qx) * (px - qx) + (py - qy) * (py - qy) <= 0.15 * 0.15
-        |ORDER BY c_custkey, s_suppkey""".stripMargin,
-    // traj1: the same lag window, the g12 haversine chain per step
-    // (per-row fixed-point floors → integer sums), first/last via
-    // deterministic row_number ranks (≡ the min/max struct pick — the
-    // (ts, event_id) key is a total order).
-    "traj1_user_paths" -> {
-      val d2r = math.Pi / 180.0
-      val r2 = 2.0 * functions.SpatialOps.Wgs84AuthalicRadius
-      def hav(xa: String, ya: String, xb: String, yb: String) =
-        s"$r2 * asin(sqrt(sin(($yb * $d2r - $ya * $d2r) / 2.0) * " +
-          s"sin(($yb * $d2r - $ya * $d2r) / 2.0) + cos($ya * $d2r) * cos($yb * $d2r) * " +
-          s"sin(($xb * $d2r - $xa * $d2r) / 2.0) * sin(($xb * $d2r - $xa * $d2r) / 2.0)))"
-      s"""WITH pts AS (SELECT user_id, ts, event_id,
-         |  (CAST((event_id * 37) % 3000 AS DOUBLE) / 100.0) - 15.0 AS lon,
-         |  (CAST((event_id * 53) % 2000 AS DOUBLE) / 100.0) + 40.0 AS lat FROM events),
-         |seg AS (SELECT user_id, ts, event_id, lon, lat,
-         |  lag(lon) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS plon,
-         |  lag(lat) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS plat,
-         |  row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn_a,
-         |  row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn_d
-         |  FROM pts),
-         |st AS (SELECT user_id, lon, lat, rn_a, rn_d,
-         |  CASE WHEN plon IS NULL THEN 0
-         |       ELSE CAST(floor((${hav("plon", "plat", "lon", "lat")}) * 1024.0) AS BIGINT)
-         |  END AS step_fp FROM seg),
-         |agg AS (SELECT user_id, count(*) AS n_points,
-         |  CAST(sum(step_fp) AS BIGINT) AS path_fp,
-         |  min(lon) AS lon_min, max(lon) AS lon_max,
-         |  min(lat) AS lat_min, max(lat) AS lat_max FROM st GROUP BY user_id)
-         |SELECT a.user_id, a.n_points, a.path_fp,
-         |  CAST(floor((${hav("f.lon", "f.lat", "l.lon", "l.lat")}) * 1024.0) AS BIGINT) AS disp_fp,
-         |  a.lon_min, a.lon_max, a.lat_min, a.lat_max
-         |FROM agg a
-         |JOIN st f ON f.user_id = a.user_id AND f.rn_a = 1
-         |JOIN st l ON l.user_id = a.user_id AND l.rn_d = 1
-         |ORDER BY a.user_id""".stripMargin
-    },
-    // gh4: the cover replayed symbolically — envelope quantization (the
-    // mirrored float chain), lateral cell generation, and the EXACT
-    // rect-vs-polygon overlap (36 segment-pair orientation tests + both
-    // representative-vertex containments) on symbolic rect corners; the
-    // census pins the exact cell set via the packed-integer sum.
-    "gh4_geohash_cover" -> {
-      val arrowSegs = arrowSqlPts(withHole = true).flatMap(sqlRingSegs)
-      val rectPts = Seq(("xmin0", "ymin0"), ("xmax0", "ymin0"), ("xmax0", "ymax0"),
-        ("xmin0", "ymax0"), ("xmin0", "ymin0"))
-      val rectSegs = sqlRingSegs(rectPts)
-      val overlap = s"(${sqlEdgesIntersect(rectSegs, arrowSegs)} OR " +
-        s"${sqlContains(arrowSegs, "(xmin0)", "(ymin0)")} OR " +
-        s"${sqlContains(rectSegs, "(x0)", "(y0)")})"
-      val ghExpr = ghSqlBase32(ghSqlInterleave("lq", "tq", 4), 4)
-      s"""WITH base AS ($arrowSqlBase),
-         |env AS (SELECT s_suppkey, x0, y0, w, h,
-         |  ${ghSqlQuant("x0", "180.0", "360.0", 10)} AS qx0,
-         |  ${ghSqlQuant("x0 + w", "180.0", "360.0", 10)} AS qx1,
-         |  ${ghSqlQuant("y0", "90.0", "180.0", 10)} AS qy0,
-         |  ${ghSqlQuant("y0 + h", "90.0", "180.0", 10)} AS qy1 FROM base),
-         |candx AS (SELECT s_suppkey, x0, y0, w, h, qy0, qy1,
-         |  unnest(generate_series(qx0, qx1)) AS lq FROM env),
-         |cand AS (SELECT s_suppkey, x0, y0, w, h, lq,
-         |  unnest(generate_series(qy0, qy1)) AS tq,
-         |  (CAST(lq AS DOUBLE) / 1024.0) * 360.0 - 180.0 AS xmin0,
-         |  (CAST(lq + 1 AS DOUBLE) / 1024.0) * 360.0 - 180.0 AS xmax0
-         |  FROM candx),
-         |cand2 AS (SELECT *,
-         |  (CAST(tq AS DOUBLE) / 1024.0) * 180.0 - 90.0 AS ymin0,
-         |  (CAST(tq + 1 AS DOUBLE) / 1024.0) * 180.0 - 90.0 AS ymax0
-         |  FROM cand),
-         |cov AS (SELECT s_suppkey, lq, tq, $ghExpr AS gh FROM cand2 WHERE $overlap)
-         |SELECT s_suppkey, count(*) AS n_cells, min(gh) AS gh_min, max(gh) AS gh_max,
-         |  CAST(sum((lq * 2147483648) + tq) AS BIGINT) AS cells_fp
-         |FROM cov GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin
-    },
-    // g23: the exact ellipsoidal zone closed form — the engine's
-    // trapezoidal edge sum collapses to Δλ·(b²/2)·(F(φ2)−F(φ1)) on
-    // parallel/meridian quads; constants interpolated so both engines
-    // bake the identical doubles; fixed-point floors (margins scanned).
-    "g23_ellipsoidal_measures" ->
-      s"""WITH base AS (SELECT p_partkey AS pk,
-         |  -96.0 + CAST(p_partkey % 50 AS DOUBLE) * 0.01 AS lon0,
-         |  30.0 + CAST(p_size % 40 AS DOUBLE) * 0.01 AS lat0,
-         |  0.01 + CAST(p_partkey % 7 AS DOUBLE) * 0.001 AS dx,
-         |  0.008 + CAST(p_size % 5 AS DOUBLE) * 0.001 AS dy FROM part),
-         |r AS (SELECT pk, lon0 * $EllK AS l1, (lon0 + dx) * $EllK AS l2,
-         |  lat0 * $EllK AS f1, (lat0 + dy) * $EllK AS f2 FROM base),
-         |z AS (SELECT pk, l1, l2, f1, f2,
-         |  sin(f1) AS s1, sin(f2) AS s2, (f1 + f2) / 2 AS fm FROM r),
-         |m AS (SELECT pk, l1, l2, f1, f2, s1, s2,
-         |  s1 / (1 - $EllE2 * s1 * s1) + ln((1 + $EllE * s1) / (1 - $EllE * s1)) / ${2 * EllE} AS zf1,
-         |  s2 / (1 - $EllE2 * s2 * s2) + ln((1 + $EllE * s2) / (1 - $EllE * s2)) / ${2 * EllE} AS zf2,
-         |  1 - $EllE2 * sin(fm) * sin(fm) AS w2 FROM z)
-         |SELECT pk,
-         |  CAST(floor(abs((l2 - l1) * (zf2 - zf1)) * ${EllB2 / 2.0} / 16.0) AS BIGINT) AS area_fp,
-         |  CAST(floor(
-         |    (6378137.0 / sqrt(1 - $EllE2 * s1 * s1)) * cos(f1) * (l2 - l1)
-         |    + (6378137.0 / sqrt(1 - $EllE2 * s2 * s2)) * cos(f2) * (l2 - l1)
-         |    + 2 * ${6378137.0 * (1 - EllE2)} / (w2 * sqrt(w2)) * (f2 - f1)
-         |  ) AS BIGINT) AS perim_fp
-         |FROM m ORDER BY pk""".stripMargin,
-    // g24: the ring-validity census — the predicate's verdict is
-    // CLASS-CONSTANT over the parameterized fixture (bowtie/spike/pinch
-    // invalid, dart/diamond valid for every cx,cy,r), so the oracle
-    // replays the class table; a single misfired verdict splits a
-    // census row and breaks the hash.
-    "g24_ring_validity" ->
-      """SELECT CAST(c_custkey % 5 AS INT) AS cls,
-        |  (c_custkey % 5 = 1 OR c_custkey % 5 = 3) AS is_simple,
-        |  count(*) AS n
-        |FROM customer GROUP BY 1, 2 ORDER BY cls, is_simple""".stripMargin,
-    // g25: polygon-level validity census -- class-constant verdicts
-    // (proper hole and two-disjoint-holes valid; straddling/escaped/
-    // overlapping holes and the bowtie outer invalid).
-    "g25_polygon_validity" ->
-      """SELECT CAST(c_custkey % 8 AS INT) AS cls,
-        |  (c_custkey % 8 = 0 OR c_custkey % 8 = 5 OR c_custkey % 8 = 7) AS is_valid,
-        |  count(*) AS n
-        |FROM customer GROUP BY 1, 2 ORDER BY cls, is_valid""".stripMargin,
-    // g26: the enforcement flow -- valid rings' closed-form areas
-    // (dart 1.5r^2, diamond 2r^2, exact dyadic so the engine's shoelace
-    // matches bitwise), invalid rings counted; fixed-point integer sums.
-    "g26_guarded_measure" ->
-      """SELECT CAST(c_custkey % 5 AS INT) AS cls,
-        |  CAST(sum(CASE WHEN c_custkey % 5 IN (1, 3) THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-        |  CAST(sum(CASE WHEN c_custkey % 5 IN (1, 3) THEN 0 ELSE 1 END) AS BIGINT) AS n_rejects,
-        |  CAST(sum(CASE WHEN c_custkey % 5 = 1 THEN CAST(floor(1.5 * r * r * 1048576) AS BIGINT)
-        |           WHEN c_custkey % 5 = 3 THEN CAST(floor(2 * r * r * 1048576) AS BIGINT)
-        |           ELSE 0 END) AS BIGINT) AS area_fp
-        |FROM (SELECT c_custkey, 1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r FROM customer)
-        |GROUP BY 1 ORDER BY cls""".stripMargin,
-    // g27: the DP simplification census — the recursion hand-traced per
-    // class (sub-tolerance bump dropped -> the 64-area square, 5 closed
-    // points; super-tolerance bump kept -> the 52-area pentagon, 6).
-    "g27_simplify_census" ->
-      """SELECT CAST(c_custkey % 2 AS INT) AS cls,
-        |  CAST(CASE WHEN c_custkey % 2 = 0 THEN 5 ELSE 6 END AS INT) AS n_out,
-        |  CAST(CASE WHEN c_custkey % 2 = 0 THEN 64 * 1048576 ELSE 52 * 1048576 END AS BIGINT) AS area_fp,
-        |  count(*) AS n
-        |FROM customer GROUP BY 1, 2, 3 ORDER BY cls, n_out, area_fp""".stripMargin,
-    // g28: the miter-buffer chain replayed symbolically — raw-double
-    // vertex parity through IEEE sqrt/divide (the km1 sqlL2 precedent).
-    "g28_buffer_convex" -> sqlBufferConvex,
-    // g29: the centroid kernel's per-ring cross/moment folds replayed in
-    // list algebra (raw IEEE quotients; hole moment subtracts by winding).
-    "g29_centroid" -> sqlCentroid,
-    // g30: INDEPENDENT hull-edge census (all-points-strictly-left O(n^3)
-    // definition) + chord-order ring reconstruction vs the monotone chain.
-    "g30_convex_hull" -> sqlConvexHull,
-    // g31: hull metrics from the census alone — integer-exact area/
-    // centroid/diameter^2 need no ring order; perimeter round-6 (g1 rule).
-    "g31_hull_metrics" -> sqlHullMetrics,
-    // g32: rotating-calipers MBR — per-edge rationals over the census,
-    // min value (integer-exact spans, no fold-order coupling).
-    "g32_min_bbox" -> sqlMinBbox,
-    // g33: hand-traced DP classes on open paths (translation-exact).
-    "g33_simplify_path" -> sqlSimplifyPath,
-    // j4b: every leaf decision regenerated closed-form — the batched
-    // dispatch must be invisible (each row scored by exactly its key's
-    // model; single-tree vote p1·2 > 2^40 is exactly p1 > 0.5 on dyadic
-    // leaf probabilities).
-    "j4b_batched_dispatch" ->
-      """WITH f AS (SELECT CAST(l_suppkey % 18 AS INT) AS mk,
-        |  CAST(l_quantity AS DOUBLE) AS q FROM lineitem),
-        |p AS (SELECT mk, q,
-        |  CASE WHEN q <= 10 + mk % 13 THEN (CASE WHEN mk % 2 = 0 THEN 0.25 ELSE 0.75 END)
-        |       WHEN q <= 25 + mk % 17 THEN (CASE WHEN mk % 3 = 0 THEN 0.75 ELSE 0.25 END)
-        |       ELSE (CASE WHEN mk % 5 = 0 THEN 0.875 ELSE 0.125 END) END AS p1
-        |  FROM f)
-        |SELECT mk, CAST(CASE WHEN p1 > 0.5 THEN 1 ELSE 0 END AS INT) AS pred_label,
-        |  count(*) AS n
-        |FROM p GROUP BY 1, 2 ORDER BY mk, pred_label""".stripMargin,
-    // j18: unfiltered theta join over the orientation-sign segment tests +
-    // representative-vertex containment (closed overlap semantics).
-    "j18_overlap_join" -> {
-      val aSegs = arrowSqlPts(withHole = false).flatMap(sqlRingSegs)
-      val bSegs = sqlRingSegs(diamondSqlPts)
-      s"""WITH sup AS ($arrowSqlBase),
-         |cust AS (SELECT c_custkey,
-         |  CAST(c_custkey % 88 AS DOUBLE) + 2.0 AS cx,
-         |  CAST(c_custkey % 78 AS DOUBLE) + 2.0 AS cy,
-         |  1.0 + CAST(c_custkey % 3 AS DOUBLE) * 0.5 AS r
-         |  FROM customer)
-         |SELECT s_suppkey, c_custkey FROM sup JOIN cust
-         |  ON (${sqlEdgesIntersect(aSegs, bSegs)}
-         |   OR ${sqlContains(bSegs, "(x0)", "(y0)")}
-         |   OR ${sqlContains(aSegs, "(cx)", "(cy - r)")})
-         |ORDER BY s_suppkey, c_custkey""".stripMargin
-    },
-    "q6_pivot" ->
-      """SELECT l_returnflag,
-        |CAST(sum(CASE WHEN l_linestatus = 'F' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
-        |CAST(sum(CASE WHEN l_linestatus = 'O' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "j8_semi" ->
-      "SELECT c_custkey FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey",
-    "j9_anti" ->
-      "SELECT c_custkey FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) ORDER BY c_custkey",
-    "set1_intersect" ->
-      "SELECT l_orderkey FROM lineitem INTERSECT SELECT o_orderkey FROM orders ORDER BY l_orderkey",
-    "set2_except" ->
-      "SELECT o_orderkey FROM orders EXCEPT SELECT l_orderkey FROM lineitem ORDER BY o_orderkey",
-    "u1_union" ->
-      """SELECT l_orderkey AS okey, 'l' AS src FROM lineitem WHERE l_linenumber = 1
-        |UNION ALL SELECT o_orderkey, 'o' FROM orders ORDER BY okey, src""".stripMargin,
-    "w1_frame_avg" ->
-      """SELECT event_id, round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING), 6) AS avg5 FROM events ORDER BY event_id""".stripMargin,
-    "w2_running_sum" ->
-      """SELECT o_orderkey, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-        |OVER (ORDER BY o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_total
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "w3_rank_top1" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn = 1 ORDER BY o_custkey""".stripMargin,
-    "o1_ordered_limit" ->
-      "SELECT o_orderkey, o_orderdate, o_totalprice FROM orders ORDER BY o_orderdate, o_orderkey LIMIT 20",
-    "o2_limit" ->
-      "SELECT l_orderkey, l_linenumber FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 100",
-    "e1_exact_dedup" ->
-      "SELECT md5(text) AS text_key, min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY md5(text) ORDER BY keep_id",
-    "e1b_fingerprint_dedup" ->
-      """SELECT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp,
-        |min(doc_id) AS keep_id, count(*) AS n_dups FROM documents GROUP BY fp ORDER BY keep_id""".stripMargin,
-    "e2_minhash_sig" ->
-      s"""$sqlShingleCte
-         |SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")}
-         |FROM sh ORDER BY doc_id""".stripMargin,
-    "e2b_lsh_pairs" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")})
-         |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
-         |ORDER BY a, b""".stripMargin,
-    "e7_jaccard_verify" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh FROM s)
-         |SELECT a, b, round(CAST(inter AS DOUBLE) / (la + lb - inter), 6) AS jaccard FROM (
-         |  SELECT a, b, len(list_filter(xa.sh, t -> list_contains(xb.sh, t))) AS inter,
-         |    len(xa.sh) AS la, len(xb.sh) AS lb
-         |  FROM pairs JOIN ss xa ON pairs.a = xa.doc_id JOIN ss xb ON pairs.b = xb.doc_id) t
-         |WHERE inter > 0 ORDER BY a, b""".stripMargin,
-    // km2: the training loop — km1's round unrolled three deep, every
-    // level MATERIALIZED; the engine's collect-and-reseed is verbatim,
-    // so the unroll replays the identical trajectory.
-    "km2_kmeans_train" -> sqlTrainKMeans,
-    // km3: the farthest-first seed trajectory unrolled (argmax per
-    // level), then the km1 round replay from those seeds.
-    "km3_kmpp_seeded" -> sqlKmppSeeded,
-    // km1: the exact Lloyd round — argmin assignment, per-dim fixed-point
-    // sums, the same ((s/2^20)/n) mean chain, argmin again.
-    "km1_lloyd_round" ->
-      s"""WITH init AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE vec_id < 4),
-         |corp AS (SELECT vec_id, embedding AS cv FROM embeddings),
-         |a0 AS (SELECT vec_id, cv, cell FROM (
-         |  SELECT c.vec_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN init k) WHERE rk = 1),
-         |dims AS (SELECT cell, i,
-         |    sum(CAST(floor(CAST(cv[i] AS DOUBLE) * 1048576.0) AS BIGINT)) AS s,
-         |    count(*) AS n
-         |  FROM a0 CROSS JOIN (SELECT unnest(generate_series(1, 64)) AS i) t
-         |  GROUP BY cell, i),
-         |cent1 AS (SELECT cell,
-         |    list(CAST(s AS DOUBLE) / 1048576.0 / CAST(n AS DOUBLE) ORDER BY i) AS kv
-         |  FROM dims GROUP BY cell),
-         |a1 AS (SELECT vec_id, cell FROM (
-         |  SELECT c.vec_id, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN cent1 k) WHERE rk = 1)
-         |SELECT a1.cell, count(*) AS n_members,
-         |  CAST(floor(k.kv[1] * 1048576) AS BIGINT) AS c1_fp,
-         |  CAST(floor(k.kv[2] * 1048576) AS BIGINT) AS c2_fp
-         |FROM a1 JOIN cent1 k ON k.cell = a1.cell
-         |GROUP BY a1.cell, k.kv[1], k.kv[2] ORDER BY a1.cell""".stripMargin,
-    // cont1: e7's candidate machinery with the per-direction denominators.
-    "cont1_containment" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh FROM s)
-         |SELECT a, b, round(CAST(inter AS DOUBLE) / la, 6) AS cont_ab,
-         |  round(CAST(inter AS DOUBLE) / lb, 6) AS cont_ba FROM (
-         |  SELECT a, b, len(list_filter(xa.sh, t -> list_contains(xb.sh, t))) AS inter,
-         |    len(xa.sh) AS la, len(xb.sh) AS lb
-         |  FROM pairs JOIN ss xa ON pairs.a = xa.doc_id JOIN ss xb ON pairs.b = xb.doc_id) t
-         |WHERE inter > 0 ORDER BY a, b""".stripMargin,
-    // e3b: full-probe IVF ≡ brute force — same oracle as e3.
-    "e3b_ivf_topk" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |scored AS (SELECT query_id, neighbor_id,
-         |  ${sqlDot("qv", "cv")} / (sqrt(${sqlDot("qv", "qv")}) * sqrt(${sqlDot("cv", "cv")})) AS raw
-         |  FROM q, c WHERE query_id <> neighbor_id)
-         |SELECT query_id, neighbor_id, round(raw, 6) AS score, rank FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // e3c: replay the full pruned-IVF pipeline — nearest-centroid corpus
-    // assignment (argmin L2, tie to lower cell), query probe routing
-    // (3 nearest cells), cell-restricted cosine scoring, top-5 rank.
-    // e3f: the trained-quantizer IVF — the 2-round Lloyd unroll feeding
-    // e3c's probe/score chain (train here, quantize there, one oracle).
-    "e3f_ivf_trained" -> sqlIvfTrained,
-    "e3c_ivf_pruned" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE vec_id < 8),
-         |corp AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |casg AS (SELECT neighbor_id, cv, cell FROM (
-         |  SELECT c.neighbor_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.neighbor_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN cent k) WHERE rk = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |probes AS (SELECT query_id, qv, cell FROM (
-         |  SELECT q.query_id, q.qv, k.cell,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${sqlL2("q.qv", "k.kv")} ASC, k.cell ASC) AS prank
-         |  FROM q CROSS JOIN cent k) WHERE prank <= 3),
-         |scored AS (SELECT p.query_id, c.neighbor_id,
-         |  ${sqlDot("p.qv", "c.cv")} / (sqrt(${sqlDot("p.qv", "p.qv")}) * sqrt(${sqlDot("c.cv", "c.cv")})) AS raw
-         |  FROM probes p JOIN casg c ON p.cell = c.cell AND p.query_id <> c.neighbor_id)
-         |SELECT query_id, neighbor_id, round(raw, 6) AS score, rank FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // e3d: the same PQ encode + fixed-point ADC closed form — integer
-    // distance sums commute, so the compressed ranking is bit-exact.
-    "e3d_pq_adc" ->
-      s"""WITH cw AS (SELECT CAST(vec_id AS INT) AS code, embedding AS ce FROM embeddings WHERE vec_id < 8),
-         |ms AS (SELECT CAST(m AS INT) AS m FROM range(8) t(m)),
-         |corp AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |codes AS (SELECT neighbor_id, m, code FROM (
-         |  SELECT c.neighbor_id, ms.m, w.code,
-         |    row_number() OVER (PARTITION BY c.neighbor_id, ms.m
-         |      ORDER BY ${sqlSubL2Sq("c.cv", "w.ce", "ms.m")} ASC, w.code ASC) AS rk
-         |  FROM corp c CROSS JOIN ms CROSS JOIN cw w) WHERE rk = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |qt AS (SELECT q.query_id, ms.m, w.code,
-         |    CAST(floor(${sqlSubL2Sq("q.qv", "w.ce", "ms.m")} * 1048576) AS BIGINT) AS dfp
-         |  FROM q CROSS JOIN ms CROSS JOIN cw w),
-         |sc AS (SELECT t.query_id, c.neighbor_id, CAST(sum(t.dfp) AS BIGINT) AS adist
-         |  FROM codes c JOIN qt t ON t.m = c.m AND t.code = c.code AND t.query_id <> c.neighbor_id
-         |  GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, adist, rank FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS INTEGER) AS rank
-         |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // e3e: e3c's probe CTEs composed with e3d's code/table CTEs — the ADC
-    // join additionally keyed by the probed cell.
-    "e3e_ivfpq" ->
-      s"""WITH cent AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE vec_id < 8),
-         |cw AS (SELECT CAST(vec_id AS INT) AS code, embedding AS ce FROM embeddings WHERE vec_id < 8),
-         |ms AS (SELECT CAST(m AS INT) AS m FROM range(8) t(m)),
-         |corp AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |casg AS (SELECT neighbor_id, cell FROM (
-         |  SELECT c.neighbor_id, k.cell,
-         |    row_number() OVER (PARTITION BY c.neighbor_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN cent k) WHERE rk = 1),
-         |codes AS (SELECT neighbor_id, m, code FROM (
-         |  SELECT c.neighbor_id, ms.m, w.code,
-         |    row_number() OVER (PARTITION BY c.neighbor_id, ms.m
-         |      ORDER BY ${sqlSubL2Sq("c.cv", "w.ce", "ms.m")} ASC, w.code ASC) AS rk
-         |  FROM corp c CROSS JOIN ms CROSS JOIN cw w) WHERE rk = 1),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |probes AS (SELECT query_id, cell FROM (
-         |  SELECT q.query_id, k.cell,
-         |    row_number() OVER (PARTITION BY q.query_id
-         |      ORDER BY ${sqlL2("q.qv", "k.kv")} ASC, k.cell ASC) AS prank
-         |  FROM q CROSS JOIN cent k) WHERE prank <= 3),
-         |qt AS (SELECT q.query_id, ms.m, w.code,
-         |    CAST(floor(${sqlSubL2Sq("q.qv", "w.ce", "ms.m")} * 1048576) AS BIGINT) AS dfp
-         |  FROM q CROSS JOIN ms CROSS JOIN cw w),
-         |sc AS (SELECT t.query_id, c.neighbor_id, CAST(sum(t.dfp) AS BIGINT) AS adist
-         |  FROM codes c
-         |  JOIN casg a ON a.neighbor_id = c.neighbor_id
-         |  JOIN probes p ON p.cell = a.cell
-         |  JOIN qt t ON t.query_id = p.query_id AND t.m = c.m AND t.code = c.code
-         |  WHERE t.query_id <> c.neighbor_id
-         |  GROUP BY 1, 2)
-         |SELECT query_id, neighbor_id, adist, rank FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, neighbor_id ASC) AS INTEGER) AS rank
-         |  FROM sc) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "e3_cosine_topk" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |scored AS (SELECT query_id, neighbor_id,
-         |  ${sqlDot("qv", "cv")} / (sqrt(${sqlDot("qv", "qv")}) * sqrt(${sqlDot("cv", "cv")})) AS raw
-         |  FROM q, c WHERE query_id <> neighbor_id)
-         |SELECT query_id, neighbor_id, round(raw, 6) AS score, rank FROM (
-         |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id) AS INTEGER) AS rank
-         |  FROM scored) WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    // knn1: ranking on the RAW cosine (the e3-proven tiebreak), then
-    // vote-count majority with (votes DESC, label ASC) determinism.
-    "knn1_label_transfer" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 10 = 0),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label FROM embeddings WHERE vec_id % 10 <> 0),
-         |scored AS (SELECT query_id, neighbor_id, label,
-         |  ${sqlDot("qv", "cv")} / (sqrt(${sqlDot("qv", "qv")}) * sqrt(${sqlDot("cv", "cv")})) AS raw
-         |  FROM q, c),
-         |topk AS (SELECT query_id, label FROM (
-         |  SELECT query_id, label, row_number() OVER (PARTITION BY query_id ORDER BY raw DESC, neighbor_id) AS rank
-         |  FROM scored) WHERE rank <= 5),
-         |votes AS (SELECT query_id, label, count(*) AS votes FROM topk GROUP BY 1, 2)
-         |SELECT query_id, CAST(pred_label AS INTEGER) AS pred_label, votes FROM (
-         |  SELECT query_id, label AS pred_label, votes,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label) AS rn FROM votes)
-         |WHERE rn = 1 ORDER BY query_id""".stripMargin,
-    "e8_embedding_neardup" ->
-      s"""WITH p AS (SELECT a.vec_id AS a, b.vec_id AS b,
-         |  ${sqlDot("a.embedding", "b.embedding")} /
-         |  (sqrt(${sqlDot("a.embedding", "a.embedding")}) * sqrt(${sqlDot("b.embedding", "b.embedding")})) AS c
-         |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-         |SELECT a, b, round(c, 6) AS cos FROM p WHERE c >= 0.35 ORDER BY a, b""".stripMargin,
-    // e8b: the banded-LSH candidate contract restated plane-by-plane -
-    // every RHP normal component is the interpolated rhpSign constant,
-    // each projection the identical left-assoc chain (signs folded as
-    // +/- terms: x*1.0 == x and x*-1.0 == -x bitwise), so bucket ids,
-    // the DISTINCT candidate set, and the fused-cosine verify all match
-    "e8b_embedding_banded" -> {
-      def bucketSql(b: Int): String =
-        (0 until 8).map { t =>
-          val proj = (0 until 64).map { i =>
-            val s = graft.functions.VectorOps.rhpSign(b * 8 + t, i)
-            val term = s"CAST(embedding[${i + 1}] AS DOUBLE)"
-            if (i == 0) { if (s > 0) term else s"- $term" }
-            else if (s > 0) s"+ $term" else s"- $term"
-          }.mkString(" ")
-          s"CASE WHEN ($proj) > 0 THEN ${1L << t} ELSE 0 END"
-        }.mkString("(", " + ", ")")
-      s"""WITH bb AS (
-         |  SELECT vec_id, 0 AS band, ${bucketSql(0)} AS bucket FROM embeddings
-         |  UNION ALL SELECT vec_id, 1, ${bucketSql(1)} FROM embeddings
-         |  UNION ALL SELECT vec_id, 2, ${bucketSql(2)} FROM embeddings
-         |  UNION ALL SELECT vec_id, 3, ${bucketSql(3)} FROM embeddings),
-         |cand AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
-         |  FROM bb x JOIN bb y ON x.band = y.band AND x.bucket = y.bucket
-         |    AND x.vec_id < y.vec_id),
-         |p AS (SELECT a, b,
-         |  ${sqlDot("ea.embedding", "eb.embedding")} /
-         |  (sqrt(${sqlDot("ea.embedding", "ea.embedding")}) * sqrt(${sqlDot("eb.embedding", "eb.embedding")})) AS c
-         |  FROM cand JOIN embeddings ea ON ea.vec_id = cand.a
-         |  JOIN embeddings eb ON eb.vec_id = cand.b)
-         |SELECT a, b, round(c, 6) AS cos FROM p WHERE c >= 0.35 ORDER BY a, b""".stripMargin
-    },
-    // e16: the SemDeDup chain replayed — km1's argmin quantizer, within-
-    // cell pairwise cosine, the (c_sim, id) dominance drop rule, and the
-    // per-cell census. Every double (assignment fold, c_sim, pair cos)
-    // is the identical in-order chain, so the floors match exactly.
-    "e16_semantic_dedup" ->
-      s"""WITH init AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE vec_id < 16),
-         |corp AS (SELECT vec_id, embedding AS cv FROM embeddings),
-         |asg AS (SELECT vec_id, cv, cell FROM (
-         |  SELECT c.vec_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN init k) WHERE rk = 1),
-         |sim AS (SELECT a.vec_id, a.cell, a.cv,
-         |  ${sqlDot("a.cv", "k.kv")} /
-         |  (sqrt(${sqlDot("a.cv", "a.cv")}) * sqrt(${sqlDot("k.kv", "k.kv")})) AS c_sim
-         |  FROM asg a JOIN init k USING (cell)),
-         |drp AS (SELECT DISTINCT CASE WHEN x.c_sim > y.c_sim
-         |    OR (x.c_sim = y.c_sim AND x.vec_id > y.vec_id)
-         |    THEN x.vec_id ELSE y.vec_id END AS vec_id
-         |  FROM sim x JOIN sim y ON x.cell = y.cell AND x.vec_id < y.vec_id
-         |  WHERE ${sqlDot("x.cv", "y.cv")} /
-         |    (sqrt(${sqlDot("x.cv", "x.cv")}) * sqrt(${sqlDot("y.cv", "y.cv")})) >= 0.35),
-         |fin AS (SELECT s.vec_id, s.cell, s.c_sim,
-         |  s.vec_id IN (SELECT vec_id FROM drp) AS dropped FROM sim s)
-         |SELECT cell, count(*) AS n_members,
-         |  CAST(sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-         |  CAST(sum(CASE WHEN dropped THEN vec_id END) AS BIGINT) AS dropped_fp,
-         |  CAST(sum(CAST(floor(c_sim * 1048576.0) AS BIGINT)) AS BIGINT) AS csim_fp
-         |FROM fin GROUP BY cell ORDER BY cell""".stripMargin,
-        // e16b: the identical SemDeDup replay with cells = floor(sqrt(N)) --
-    // the scalar subquery mirrors the engine's driver-side count+sqrt.
-    "e16b_semdedup_sqrtn" ->
-      s"""WITH init AS (SELECT CAST(vec_id AS INT) AS cell, embedding AS kv FROM embeddings WHERE vec_id < (SELECT CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT) FROM embeddings)),
-         |corp AS (SELECT vec_id, embedding AS cv FROM embeddings),
-         |asg AS (SELECT vec_id, cv, cell FROM (
-         |  SELECT c.vec_id, c.cv, k.cell,
-         |    row_number() OVER (PARTITION BY c.vec_id
-         |      ORDER BY ${sqlL2("c.cv", "k.kv")} ASC, k.cell ASC) AS rk
-         |  FROM corp c CROSS JOIN init k) WHERE rk = 1),
-         |sim AS (SELECT a.vec_id, a.cell, a.cv,
-         |  ${sqlDot("a.cv", "k.kv")} /
-         |  (sqrt(${sqlDot("a.cv", "a.cv")}) * sqrt(${sqlDot("k.kv", "k.kv")})) AS c_sim
-         |  FROM asg a JOIN init k USING (cell)),
-         |drp AS (SELECT DISTINCT CASE WHEN x.c_sim > y.c_sim
-         |    OR (x.c_sim = y.c_sim AND x.vec_id > y.vec_id)
-         |    THEN x.vec_id ELSE y.vec_id END AS vec_id
-         |  FROM sim x JOIN sim y ON x.cell = y.cell AND x.vec_id < y.vec_id
-         |  WHERE ${sqlDot("x.cv", "y.cv")} /
-         |    (sqrt(${sqlDot("x.cv", "x.cv")}) * sqrt(${sqlDot("y.cv", "y.cv")})) >= 0.35),
-         |fin AS (SELECT s.vec_id, s.cell, s.c_sim,
-         |  s.vec_id IN (SELECT vec_id FROM drp) AS dropped FROM sim s)
-         |SELECT cell, count(*) AS n_members,
-         |  CAST(sum(CASE WHEN dropped THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-         |  CAST(sum(CASE WHEN dropped THEN vec_id END) AS BIGINT) AS dropped_fp,
-         |  CAST(sum(CAST(floor(c_sim * 1048576.0) AS BIGINT)) AS BIGINT) AS csim_fp
-         |FROM fin GROUP BY cell ORDER BY cell""".stripMargin,
-    // dsir1: the full DSIR chain — grouped (doc, term) counts, the
-    // smoothed log-ratio fixed points (exact totals from the same
-    // frequency table), integer weight sums, the md5 Gumbel key, and the
-    // identical top-25 (key DESC, id ASC).
-    "mix2_temperature_quota" -> sqlMixQuota,
-    // mix2 above: quota arithmetic + md5-bottom selection replay.
-    // hn1: the trained-IVF scored chain split by label class — argmax
-    // per (query, class), neg × pos pivot, margins.
-    "hn1_hard_negatives" -> sqlHardNegatives,
-    "dsir1_importance_resample" ->
-      s"""WITH td AS (SELECT doc_id, tgt, term, count(*) AS c FROM (
-         |    SELECT doc_id, lang = 'en' AS tgt,
-         |      unnest(string_split(text, ' ')) AS term FROM documents)
-         |  GROUP BY doc_id, tgt, term),
-         |fr AS (SELECT term, CAST(sum(c) AS BIGINT) AS tr,
-         |  CAST(sum(CASE WHEN tgt THEN c ELSE 0 END) AS BIGINT) AS tt FROM td GROUP BY term),
-         |tot AS (SELECT CAST(sum(tr) AS BIGINT) AS nr, CAST(sum(tt) AS BIGINT) AS nt,
-         |  count(*) AS v FROM fr),
-         |lr AS (SELECT term,
-         |  CAST(floor((ln(CAST(tt + 1 AS DOUBLE) / CAST(nt + v AS DOUBLE))
-         |    - ln(CAST(tr AS DOUBLE) / CAST(nr AS DOUBLE))) * 1048576.0) AS BIGINT) AS lr_fp
-         |  FROM fr CROSS JOIN tot),
-         |w AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok,
-         |  CAST(sum(c * lr_fp) AS BIGINT) AS w_fp
-         |  FROM td JOIN lr USING (term) GROUP BY doc_id),
-         |g AS (SELECT doc_id, n_tok, w_fp, w_fp + CAST(floor(
-         |    -ln(-ln((${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 8)} + 1) / 4294967297.0))
-         |    * 1048576.0) AS BIGINT) AS key_fp FROM w),
-         |top AS (SELECT * FROM g ORDER BY key_fp DESC, doc_id LIMIT 25)
-         |SELECT doc_id, n_tok, w_fp, key_fp FROM top ORDER BY doc_id""".stripMargin,
-    "e9_rolling_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  list_transform(list_transform(string_split(text, ' '), tk -> md5(tk)), h -> ${sqlHexVal("h", 6)}) AS hs
-         |  FROM documents)
-         |SELECT doc_id, CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), hs), (acc, x) -> (acc * CAST(131 AS BIGINT) + x) % 1000000007) AS BIGINT) AS roll_fp
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "e4_text_stats" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |u AS (SELECT doc_id, text, toks, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(toks, tk -> tk IN ('der','die','und','das','nicht','ist','ein','the','and','of','to','in','is','that','el','la','de','que','y','los','en','le','et','les','des','un','的','是','了','在','和','有','我'))) AS DOUBLE) / len(toks) AS stop_ratio
-        |  FROM t)
-        |SELECT doc_id, n_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_bpeish,
-        |  round(CAST(length(text) - (n_tokens - 1) AS DOUBLE) / n_tokens, 6) AS mean_tok_len,
-        |  round(stop_ratio, 6) AS stop_ratio,
-        |  round(least(n_tokens / 100.0, 1.0) * 0.5 + least(stop_ratio * 4.0, 1.0) * 0.5, 6) AS quality
-        |FROM u ORDER BY doc_id""".stripMargin,
-    "e5_langid" ->
-      s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-         |g AS (SELECT doc_id, lang, (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS lang_guess FROM t)
-         |SELECT doc_id, lang_guess, lang AS lang_true, (lang_guess = lang) AS hit FROM g ORDER BY doc_id""".stripMargin,
-    "e6_simhash" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-         |h AS (SELECT doc_id, list_transform(list_transform(toks, tk -> md5(tk)), m -> ${sqlHexVal("m", 4)}) AS hs FROM t)
-         |SELECT doc_id, CAST(${(0 until 16).map(j =>
-              s"CASE WHEN list_sum(list_transform(hs, x -> ((x >> $j) % 2) * 2 - 1)) > 0 THEN ${1L << j} ELSE 0 END")
-              .mkString(" + ")} AS BIGINT) AS simhash
-         |FROM h ORDER BY doc_id""".stripMargin,
-    "st1_tumbling" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type, count(*) AS n,
-        |CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
-        |FROM events GROUP BY hour_start, event_type ORDER BY hour_start, event_type""".stripMargin,
-    // w11: sessions as lag-break + running-sum; Spark's session window is
-    // [start, last+gap), so a gap of EXACTLY the threshold breaks (>=).
-    "w11_session_window" ->
-      """WITH e AS (SELECT user_id, ts, value,
-        |  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |       OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts)) >= 600000000
-        |       THEN 1 ELSE 0 END AS brk
-        |  FROM events),
-        |s AS (SELECT user_id, ts, value,
-        |  sum(brk) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM e)
-        |SELECT user_id, min(ts) AS sess_start, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
-        |FROM s GROUP BY user_id, sess ORDER BY user_id, sess_start""".stripMargin,
-    // st7: broadcast-dim enrichment with the UNKNOWN default, rolled up.
-    "st7_enrich" ->
-      """WITH dim AS (SELECT c_custkey % 120 AS user_id, min(c_mktsegment) AS segment
-        |  FROM customer GROUP BY 1)
-        |SELECT coalesce(segment, 'UNKNOWN') AS segment, event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
-        |FROM events e LEFT JOIN dim USING (user_id)
-        |GROUP BY 1, 2 ORDER BY segment, event_type""".stripMargin,
-    "mm1_binary_meta" ->
-      "SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes, md5(text) AS content_md5 FROM documents ORDER BY doc_id",
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sum_disc_price,
-        |count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT o_orderkey, o_orderdate,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING' AND l_shipdate > o_orderdate
-        |GROUP BY o_orderkey, o_orderdate ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q5_regional_revenue" ->
-      """SELECT r_name, n_name,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q7_rollup" ->
-      """SELECT r_name, n_name, CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total, count(*) AS n
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP (r_name, n_name)
-        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin,
-    "st2_sliding" ->
-      """SELECT make_timestamp(CAST((CAST(floor(epoch(ts)/900) AS BIGINT) - i) * 900 * 1000000 AS BIGINT)) AS window_start,
-        |event_type, count(*) AS n
-        |FROM events CROSS JOIN (SELECT unnest([0,1,2,3]) AS i) s
-        |GROUP BY window_start, event_type ORDER BY window_start, event_type""".stripMargin,
-    "mm2_decode_meta" ->
-      s"""WITH t AS (SELECT doc_id AS media_id, md5(text) AS h FROM documents)
-         |SELECT media_id,
-         |  CAST(16 + ${sqlHexVal("substr(h,1,4)", 4)} % 2048 AS INTEGER) AS width,
-         |  CAST(16 + ${sqlHexVal("substr(h,5,4)", 4)} % 2048 AS INTEGER) AS height,
-         |  CAST(1 + ${sqlHexVal("substr(h,9,1)", 1)} % 4 AS INTEGER) AS channels,
-         |  CAST(1 + ${sqlHexVal("substr(h,10,3)", 3)} % 240 AS INTEGER) AS n_frames,
-         |  CAST((${sqlHexVal("substr(h,10,3)", 3)} % 240) // 4 + 1 AS BIGINT) AS n_sampled
-         |FROM t ORDER BY media_id""".stripMargin,
-    // mm3: the header round-trip is the identity on the generated dims.
-    "mm3_header_decode" ->
-      """SELECT id AS media_id,
-        |  CAST(16 + id % 100 AS INTEGER) AS width,
-        |  CAST(16 + (id * 7) % 100 AS INTEGER) AS height,
-        |  CAST(CASE WHEN id % 2 = 0 THEN 4 ELSE 3 END AS INTEGER) AS channels,
-        |  CASE WHEN id % 2 = 0 THEN 'png' ELSE 'bmp' END AS detected_format
-        |FROM range(500) t(id) ORDER BY media_id""".stripMargin,
-    // mm4: the WAV round-trip is the identity on the generated params;
-    // duration is integer division (both engines floor on positives).
-    "mm4_wav_header" ->
-      """SELECT id AS media_id,
-        |  CAST(8000 * (1 + id % 5) AS INTEGER) AS sample_rate,
-        |  CAST(1 + id % 2 AS INTEGER) AS channels,
-        |  CAST(8 * (1 + id % 3) AS INTEGER) AS bits_per_sample,
-        |  CAST(1000 + id % 1000 AS BIGINT) AS n_frames,
-        |  CAST((1000 + id % 1000) * 1000000 // (8000 * (1 + id % 5)) AS BIGINT) AS duration_us
-        |FROM range(500) t(id) ORDER BY media_id""".stripMargin,
-    // s9: v = px_row·32 + px_col = the cell's linear index, nodata where
-    // (row+col) % 7 = 0 — regenerate and filter.
-    "s9_raster_blocks" ->
-      """SELECT CAST(id // 32 AS INT) AS px_row, CAST(id % 32 AS INT) AS px_col,
-        |  CAST(id AS INT) AS v
-        |FROM range(1024) t(id)
-        |WHERE (id // 32 + id % 32) % 7 <> 0
-        |ORDER BY px_row, px_col""".stripMargin,
-    // m5b: independent flood fill — regenerate the block grid, build the
-    // equal-value 8-adjacency graph (felzenszwalb's connectivity), take
-    // its transitive closure with a recursive CTE, key every component by
-    // its min linear index, census.
-    "m5b_analytic_seg" ->
-      """WITH RECURSIVE cells AS (
-        |  SELECT CAST(id AS BIGINT) AS id, id // 64 AS r, id % 64 AS c,
-        |    ((id // 64) // 16 * 4 + (id % 64) // 16) * 100 AS v
-        |  FROM range(4096) t(id)),
-        |und AS (SELECT a.id AS x, b.id AS y FROM cells a JOIN cells b
-        |  ON a.v = b.v AND a.id <> b.id
-        |  AND abs(a.r - b.r) <= 1 AND abs(a.c - b.c) <= 1),
-        |reach(x, y) AS (SELECT id, id FROM cells
-        |  UNION SELECT r.x, u.y FROM reach r JOIN und u ON r.y = u.x),
-        |comp AS (SELECT x AS id, min(y) AS comp FROM reach GROUP BY x)
-        |SELECT comp, count(*) AS n_cells FROM comp GROUP BY comp ORDER BY comp""".stripMargin,
-    // m1b: replay frozen-forest inference from the rules parquet the query
-    // exports. Rows group by their (distinct) feature vector — lineitem has
-    // duplicate (orderkey, linenumber) pairs, but prediction is a pure
-    // function of the features — each vector matches exactly ONE leaf per
-    // tree, fixed-point votes sum exactly, argmax ties break to class 0.
-    // 17592186044416 = 16 trees × 2^40 (MlOps.RuleProbScale).
-    "m1b_frozen_forest" ->
-      """WITH rules AS (SELECT * FROM read_parquet('/tmp/graft_m1b_rules/*.parquet')),
-        |feat AS (SELECT l_quantity AS q, l_discount AS dd, l_tax AS tt, count(*) AS m
-        |  FROM lineitem GROUP BY 1, 2, 3),
-        |leafed AS (
-        |  SELECT f.q, f.dd, f.tt, f.m, r.p1_fp
-        |  FROM feat f JOIN rules r
-        |    ON f.q > r.l_quantity_lo AND f.q <= r.l_quantity_hi
-        |   AND f.dd > r.l_discount_lo AND f.dd <= r.l_discount_hi
-        |   AND f.tt > r.l_tax_lo AND f.tt <= r.l_tax_hi),
-        |scored AS (SELECT q, dd, tt, m, sum(p1_fp) AS s1
-        |  FROM leafed GROUP BY q, dd, tt, m)
-        |SELECT CAST(CASE WHEN s1 * 2 > 17592186044416 THEN 1 ELSE 0 END AS INTEGER) AS pred_label,
-        |  CAST(sum(m) AS BIGINT) AS n
-        |FROM scored GROUP BY 1 ORDER BY pred_label""".stripMargin,
-    // s13: regenerate the GPKG features closed-form — fid is the rowid
-    // alias, geometry is the WKT of the synthesized rectangle ring.
-    "s13_gpkg_roundtrip" ->
-      """WITH f AS (SELECT id, CAST(id % 7 AS DOUBLE) AS x, CAST(id % 5 AS DOUBLE) AS y
-        |  FROM range(40) t(id))
-        |SELECT id + 1 AS fid,
-        |  'POLYGON ((' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |    CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |    CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || '))' AS geom,
-        |  'seg_' || CAST(id % 3 AS VARCHAR) AS name,
-        |  CAST(id * 0.25 AS DOUBLE) AS value
-        |FROM f ORDER BY fid""".stripMargin,
-    // s13b: regenerate the canonical WKT the reader emits — write path
-    // (WKT->WKB->GP blob->b-tree) must be invisible end to end.
-    "s13b_gpkg_write" ->
-      """WITH f AS (SELECT id, CAST(id % 7 AS DOUBLE) * 0.75 AS x,
-        |    CAST(id % 5 AS DOUBLE) * 1.25 AS y FROM range(50) t(id))
-        |SELECT id + 1 AS fid,
-        |  CASE WHEN id % 10 = 0 THEN
-        |    'POINT (' || CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ')'
-        |  ELSE
-        |    'POLYGON ((' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || '))'
-        |  END AS geom,
-        |  CASE WHEN id % 6 = 0 THEN NULL
-        |       ELSE 'c_' || CAST(id % 4 AS VARCHAR) END AS name,
-        |  CAST(id * 0.25 AS DOUBLE) AS value
-        |FROM f ORDER BY fid""".stripMargin,
-    // s13c: both layers regenerate closed-form; the multi-table master
-    // page, the two-row gpkg_contents, and each layer's own schema must
-    // be exactly recovered (June's missing score column reads NULL).
-    "s13c_gpkg_multilayer" ->
-      """WITH jun AS (SELECT id, CAST(id % 6 AS DOUBLE) * 1.25 AS x,
-        |    CAST(id % 5 AS DOUBLE) * 0.5 AS y FROM range(30) t(id)),
-        |jul AS (SELECT id, CAST(id % 7 AS DOUBLE) * 0.75 AS x,
-        |    CAST(id % 4 AS DOUBLE) * 1.5 AS y FROM range(25) t(id))
-        |SELECT * FROM (
-        |SELECT 'segments_2021_06' AS layer, id + 1 AS fid,
-        |  'POLYGON ((' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |    CAST(x + 2.0 AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |    CAST(x + 2.0 AS VARCHAR) || ' ' || CAST(y + 1.5 AS VARCHAR) || ', ' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y + 1.5 AS VARCHAR) || ', ' ||
-        |    CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || '))' AS geom,
-        |  'c_' || CAST(id % 3 AS VARCHAR) AS name,
-        |  CAST(id * 0.5 AS DOUBLE) AS value,
-        |  CAST(NULL AS DOUBLE) AS score
-        |FROM jun
-        |UNION ALL
-        |SELECT 'segments_2021_07', id + 1,
-        |  CASE WHEN id % 5 = 0 THEN
-        |    'POINT (' || CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ')'
-        |  ELSE
-        |    'POLYGON ((' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.0 AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.0 AS VARCHAR) || ' ' || CAST(y + 2.0 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y + 2.0 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || '))'
-        |  END,
-        |  CASE WHEN id % 7 = 0 THEN NULL ELSE 'c_' || CAST(id % 4 AS VARCHAR) END,
-        |  CAST(id * 0.25 AS DOUBLE),
-        |  CAST(id * 1.5 + 0.25 AS DOUBLE)
-        |FROM jul)
-        |ORDER BY layer, fid""".stripMargin,
-    // s16: regenerate the canonical WKT + typed dBase attributes the
-    // shapefile reader emits.
-    // s16b: the sharded write -> read round trip regenerates from closed
-    // forms; the CRS literal must survive the .prj sidecar byte-exactly.
-    "s16b_prj_roundtrip" ->
-      """SELECT 'POINT (' || CAST(id % 6 AS VARCHAR) || '.0 ' ||
-        |    CAST(id % 4 AS VARCHAR) || '.0)' AS geom,
-        |  CAST(id * 7 AS BIGINT) AS "DN",
-        |  'GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",6378137,298.257223563]],PRIMEM["Greenwich",0],UNIT["degree",0.0174532925199433]]' AS crs
-        |FROM range(36) t(id) ORDER BY "DN"""".stripMargin,
-    "s16_shapefile" ->
-      """WITH f AS (SELECT id, CAST(id % 7 AS DOUBLE) AS x,
-        |    CAST(id % 5 AS DOUBLE) AS y FROM range(40) t(id))
-        |SELECT CAST(id + 1 AS INT) AS rec_no,
-        |  CASE WHEN id % 8 = 0 THEN
-        |    'POINT (' || CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ')'
-        |  ELSE
-        |    'POLYGON ((' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || ', ' ||
-        |      CAST(x + 1.5 AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y + 2.5 AS VARCHAR) || ', ' ||
-        |      CAST(x AS VARCHAR) || ' ' || CAST(y AS VARCHAR) || '))'
-        |  END AS geom,
-        |  id * 3 AS "DN",
-        |  CAST(id * 0.125 AS DOUBLE) AS score
-        |FROM f ORDER BY rec_no""".stripMargin,
-    // s17: predictor-3 containers regenerate from the same closed forms —
-    // the byte-plane/differencing transform must be invisible.
-    "s17_lzw_fp_predictor" ->
-      """SELECT CAST(1 AS BIGINT) AS scene_id, CAST(id // 960 AS INT) AS band,
-        |  CAST((id % 960) // 40 AS INT) AS px_row, CAST(id % 40 AS INT) AS px_col,
-        |  CAST((id // 960 * 3000 + ((id % 960) // 40) * 40 + id % 40) % 1009 AS INT) AS v
-        |FROM range(1920) t(id)
-        |WHERE (id // 960 + (id % 960) // 40 + id % 40) % 7 <> 0
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(0 AS INT),
-        |  CAST(id // 36 AS INT), CAST(id % 36 AS INT),
-        |  CAST(((id // 36 * 36 + id % 36) * 11) % 499 AS INT)
-        |FROM range(720) t(id)
-        |WHERE ((id // 36) * 2 + id % 36) % 9 <> 0
-        |ORDER BY scene_id, band, px_row, px_col""".stripMargin,
-    // s18: integer-predictor containers regenerate from the same closed
-    // forms — mod-2^bits horizontal differencing must be invisible.
-    "s18_lzw_int_predictor" ->
-      """SELECT CAST(1 AS BIGINT) AS scene_id, CAST(id // 960 AS INT) AS band,
-        |  CAST((id % 960) // 40 AS INT) AS px_row, CAST(id % 40 AS INT) AS px_col,
-        |  CAST((id // 960 * 3000 + ((id % 960) // 40) * 40 + id % 40) % 1009 - 500 AS INT) AS v
-        |FROM range(1920) t(id)
-        |WHERE (id // 960 + (id % 960) // 40 + id % 40) % 7 <> 0
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(0 AS INT),
-        |  CAST(id // 36 AS INT), CAST(id % 36 AS INT),
-        |  CAST((id // 36 * 36 + id % 36) * 113 % 60001 AS INT)
-        |FROM range(720) t(id)
-        |WHERE ((id // 36) * 2 + id % 36) % 9 <> 0
-        |ORDER BY scene_id, band, px_row, px_col""".stripMargin,
-    // s19: Deflate and PackBits containers regenerate from the same
-    // closed forms — both codecs (and the deflate-side predictor) must
-    // be invisible in the hash.
-    "s19_deflate_packbits" ->
-      """SELECT CAST(1 AS BIGINT) AS scene_id, CAST(id // 960 AS INT) AS band,
-        |  CAST((id % 960) // 40 AS INT) AS px_row, CAST(id % 40 AS INT) AS px_col,
-        |  CAST((id // 960 * 2777 + ((id % 960) // 40) * 40 + id % 40) * 7 % 2003 - 1000 AS INT) AS v
-        |FROM range(1920) t(id)
-        |WHERE (id // 960 + ((id % 960) // 40) * 2 + id % 40) % 11 <> 0
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(0 AS INT),
-        |  CAST(id // 30 AS INT), CAST(id % 30 AS INT),
-        |  CAST(CASE WHEN id % 30 < 18 THEN (id // 30 * 5) % 250
-        |       ELSE (id // 30 * 11 + id % 30) % 250 END AS INT)
-        |FROM range(480) t(id)
-        |WHERE (id // 30 + (id % 30) * 3) % 13 <> 0
-        |ORDER BY scene_id, band, px_row, px_col""".stripMargin,
-    // mm10: PCM samples regenerate closed-form — the interleave and the
-    // per-width sign rules (8u / 16s / 24s LE) must be exact.
-    "mm10_wav_samples" ->
-      """SELECT CAST(1 AS BIGINT) AS media_id, CAST(id // 2 AS INT) AS frame_idx,
-        |  CAST(id % 2 AS INT) AS channel,
-        |  CAST((id // 2 * 773 + id % 2 * 331) % 65536 - 32768 AS INT) AS value
-        |FROM range(60) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id AS INT), CAST(0 AS INT),
-        |  CAST((id * 37) % 256 AS INT)
-        |FROM range(40) t(id)
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(id AS INT), CAST(0 AS INT),
-        |  CAST((id * 524287) % 16777216 - 8388608 AS INT)
-        |FROM range(20) t(id)
-        |ORDER BY media_id, frame_idx, channel""".stripMargin,
-    // mm11: both frames' RGBA regenerate closed-form (global vs local
-    // palette, transparent index -> alpha 0) — the LZW replay and the
-    // container walk are invisible.
-    "mm11_gif_frames" ->
-      """SELECT CAST(1 AS BIGINT) AS media_id, CAST(0 AS INT) AS frame_idx,
-        |  CAST(0 AS INT) AS frame_left, CAST(0 AS INT) AS frame_top,
-        |  CAST(0 AS INT) AS duration_ms,
-        |  CAST(id // 56 AS INT) AS px_row, CAST((id % 56) // 4 AS INT) AS px_col,
-        |  CAST(id % 4 AS INT) AS channel,
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 41) % 256
-        |    WHEN 1 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 73) % 256
-        |    WHEN 2 THEN (((id // 56 * 7 + (id % 56) // 4 * 3) % 6) * 97) % 256
-        |    ELSE 255 END AS INT) AS value
-        |FROM range(560) t(id)
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), CAST(1 AS INT), CAST(3 AS INT), CAST(2 AS INT),
-        |  CAST(450 AS INT),
-        |  CAST(id // 32 AS INT), CAST((id % 32) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 32 + (id % 32) // 4 * 2) % 4) * 29 + 5) % 256
-        |    WHEN 1 THEN (((id // 32 + (id % 32) // 4 * 2) % 4) * 53 + 11) % 256
-        |    WHEN 2 THEN (((id // 32 + (id % 32) // 4 * 2) % 4) * 89 + 17) % 256
-        |    ELSE CASE WHEN (id // 32 + (id % 32) // 4 * 2) % 4 = 2
-        |         THEN 0 ELSE 255 END
-        |  END AS INT)
-        |FROM range(160) t(id)
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), CAST(2 AS INT), CAST(1 AS INT), CAST(1 AS INT),
-        |  CAST(70 AS INT),
-        |  CAST(id // 44 AS INT), CAST((id % 44) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 44 * 5 + (id % 44) // 4) % 6) * 41) % 256
-        |    WHEN 1 THEN (((id // 44 * 5 + (id % 44) // 4) % 6) * 73) % 256
-        |    WHEN 2 THEN (((id // 44 * 5 + (id % 44) // 4) % 6) * 97) % 256
-        |    ELSE 255 END AS INT)
-        |FROM range(396) t(id)
-        |ORDER BY frame_idx, px_row, px_col, channel""".stripMargin,
-    // shuf1: both permutations replayed as windowed row_numbers over the
-    // same md5-prefix keys (the hexVal machinery proven since samp1)
-    "shuf1_epoch_shuffle" -> {
-      def epoch(seed: String, out: String) =
-        s"""SELECT doc_id, row_number() OVER (ORDER BY hv, doc_id) AS $out
-           |FROM (SELECT doc_id,
-           |  md5('$seed:' || CAST(doc_id AS VARCHAR)) AS h FROM documents) s0,
-           |  LATERAL (SELECT ${sqlHexVal("h", 15)} AS hv) s1""".stripMargin
-      s"""WITH e1 AS (${epoch("epoch-1", "pos_e1")}),
-        |e2 AS (${epoch("epoch-2", "pos_e2")})
-        |SELECT e1.doc_id, pos_e1, pos_e2
-        |FROM e1 JOIN e2 ON e1.doc_id = e2.doc_id
-        |ORDER BY e1.doc_id""".stripMargin
-    },
-    // mm19: every RGBA value regenerates from the fixture's quantizer-
-    // level coefficient literals through the IDENTICAL integer chains —
-    // dequant ((v*8+3)>>3 Y2-WHT fold, +4>>3 IDCT DC), the 20091/35468
-    // IDCT stripe terms, prediction prefix sums (DC/H/V/TM + skip), and
-    // the reference decoder's fixed-point BT.601 YUV→RGB — so the bool
-    // coder, token trees, and bitstream framing must be invisible
-    "mm19_webp_lossy" -> {
-      def dY(v: Int) = s"floor((floor(($v*8+3)/8.0)+4)/8.0)"
-      def dUV(v: Int) = s"floor(($v*4+4)/8.0)"
-      // file 1 per-MB flat constants: prediction prefix sums (modes
-      // DC,H,H,V,TM,V-skipped on a 3x2 grid)
-      def consts(vs: Array[Int], d: Int => String): Array[String] = {
-        val c = new Array[String](6)
-        c(0) = s"(128 + ${d(vs(0))})"
-        c(1) = s"(${c(0)} + ${d(vs(1))})"
-        c(2) = s"(${c(1)} + ${d(vs(2))})"
-        c(3) = s"(${c(0)} + ${d(vs(3))})"
-        c(4) = s"(${c(3)} + ${c(1)} - ${c(0)} + ${d(vs(4))})" // TM = L+A-AL
-        c(5) = c(2) // skipped V_PRED copies the MB above
-        c
-      }
-      val cy = consts(Mm19Vy, dY)
-      val cu = consts(Mm19Vu, dUV)
-      val cvv = consts(Mm19Vv, dUV)
-      def mbCase(cs: Array[String]) =
-        "CASE (r//16)*3 + (c//16) " +
-          (0 until 6).map(i => s"WHEN $i THEN ${cs(i)}").mkString(" ") + " END"
-      // file 2: AC-at-position-1 column stripes through the exact IDCT
-      def stripe(w: Int, a: Int, k: Int): String = {
-        val aq = a * 4 // yacQ = 4 at qi 0
-        val d = s"floor(($w*8+3)/8.0)"
-        val t20 = s"floor(($aq*20091)/65536.0)"
-        val t35 = s"floor(($aq*35468)/65536.0)"
-        k match {
-          case 0 => s"floor(($d + $aq + $t20 + 4)/8.0)"
-          case 1 => s"floor(($d + $t35 + 4)/8.0)"
-          case 2 => s"floor(($d - ($t35) + 4)/8.0)"
-          case _ => s"floor(($d - ($aq) - ($t20) + 4)/8.0)"
-        }
-      }
-      // row 0 H_PRED stacks the LEFT MB's column-15 stripe (k=3); row 1
-      // V_PRED stacks on the same column class
-      val v2 = Array.ofDim[String](6, 4)
-      for (k <- 0 until 4) {
-        v2(0)(k) = s"(128 + ${stripe(Mm19W2(0), Mm19A2(0), k)})"
-        v2(1)(k) = s"(128 + ${stripe(Mm19W2(0), Mm19A2(0), 3)} + ${stripe(Mm19W2(1), Mm19A2(1), k)})"
-        v2(2)(k) = s"(128 + ${stripe(Mm19W2(0), Mm19A2(0), 3)} + ${stripe(Mm19W2(1), Mm19A2(1), 3)} + ${stripe(Mm19W2(2), Mm19A2(2), k)})"
-        v2(3)(k) = s"(${v2(0)(k)} + ${stripe(Mm19W2(3), Mm19A2(3), k)})"
-        v2(4)(k) = s"(${v2(1)(k)} + ${stripe(Mm19W2(4), Mm19A2(4), k)})"
-        v2(5)(k) = s"(${v2(2)(k)} + ${stripe(Mm19W2(5), Mm19A2(5), k)})"
-      }
-      val mbCase2 =
-        "CASE ((r//16)*3 + (c//16))*4 + (c%4) " +
-          (for (m <- 0 until 6; k <- 0 until 4)
-            yield s"WHEN ${m * 4 + k} THEN ${v2(m)(k)}").mkString(" ") + " END"
-      // the reference decoder's integer YUV→RGB: MultHi = (v*coeff)>>8,
-      // 6-bit fixed point with saturation
-      // NB: DuckDB's // on DOUBLE operands (floor() yields DOUBLE) is
-      // plain division, and CAST rounds half-even — floor() explicitly
-      def clip6(x: String) =
-        s"CASE WHEN ($x) < 0 THEN 0 WHEN ($x) > 16383 THEN 255 ELSE CAST(floor(($x) / 64.0) AS INT) END"
-      def rgba = {
-        val my = "floor(yv*19077/256.0)"
-        s"""CAST(CASE ch
-           |    WHEN 3 THEN 255
-           |    WHEN 0 THEN ${clip6(s"$my + floor(vv*26149/256.0) - 14234")}
-           |    WHEN 1 THEN ${clip6(s"$my - floor(uv*6419/256.0) - floor(vv*13320/256.0) + 8708")}
-           |    ELSE ${clip6(s"$my + floor(uv*33050/256.0) - 17685")} END AS INT)""".stripMargin
-      }
-      s"""WITH g1 AS (SELECT CAST(id // ${48 * 4} AS INT) AS r,
-         |    CAST((id % ${48 * 4}) // 4 AS INT) AS c, CAST(id % 4 AS INT) AS ch
-         |  FROM range(${48 * 32 * 4}) t(id)),
-         |p1 AS (SELECT r, c, ch, ${mbCase(cy)} AS yv,
-         |    ${mbCase(cu)} AS uv, ${mbCase(cvv)} AS vv FROM g1),
-         |f1 AS (SELECT CAST(1 AS BIGINT) AS img_id, r AS px_row, c AS px_col,
-         |    ch AS channel, $rgba AS value FROM p1),
-         |g2 AS (SELECT CAST(id // ${41 * 4} AS INT) AS r,
-         |    CAST((id % ${41 * 4}) // 4 AS INT) AS c, CAST(id % 4 AS INT) AS ch
-         |  FROM range(${41 * 21 * 4}) t(id)),
-         |p2 AS (SELECT r, c, ch, $mbCase2 AS yv,
-         |    CAST(128 AS INT) AS uv, CAST(128 AS INT) AS vv FROM g2),
-         |f2 AS (SELECT CAST(2 AS BIGINT) AS img_id, r AS px_row, c AS px_col,
-         |    ch AS channel, $rgba AS value FROM p2)
-         |SELECT * FROM f1 UNION ALL SELECT * FROM f2
-         |ORDER BY img_id, px_row, px_col, channel""".stripMargin
-    },
-    // mm21: RGB regenerates through the mm19 integer chains from the
-    // per-MB DC literals (DC then H prediction = a running sum); ALPHA
-    // regenerates as the literal fixture formula — the gradient filter,
-    // the ALPH framing, and the plane merge must all be invisible
-    "mm21_webp_alpha" -> {
-      def dY(v: Int) = s"floor((floor(($v*8+3)/8.0)+4)/8.0)"
-      def dUV(v: Int) = s"floor(($v*4+4)/8.0)"
-      val cy = Array(s"(128 + ${dY(Mm21Vy(0))})",
-        s"(128 + ${dY(Mm21Vy(0))} + ${dY(Mm21Vy(1))})")
-      val cu = Array(s"(128 + ${dUV(Mm21Vu(0))})",
-        s"(128 + ${dUV(Mm21Vu(0))} + ${dUV(Mm21Vu(1))})")
-      val cvv = Array(s"(128 + ${dUV(Mm21Vv(0))})",
-        s"(128 + ${dUV(Mm21Vv(0))} + ${dUV(Mm21Vv(1))})")
-      def mbCase(cs: Array[String]) =
-        s"CASE c // 16 WHEN 0 THEN ${cs(0)} ELSE ${cs(1)} END"
-      def clip6(x: String) =
-        s"CASE WHEN ($x) < 0 THEN 0 WHEN ($x) > 16383 THEN 255 ELSE CAST(floor(($x) / 64.0) AS INT) END"
-      val my = "floor(yv*19077/256.0)"
-      s"""WITH g AS (SELECT CAST(id // ${32 * 4} AS INT) AS r,
-         |    CAST((id % ${32 * 4}) // 4 AS INT) AS c, CAST(id % 4 AS INT) AS ch
-         |  FROM range(${32 * 16 * 4}) t(id)),
-         |p AS (SELECT r, c, ch, ${mbCase(cy)} AS yv,
-         |    ${mbCase(cu)} AS uv, ${mbCase(cvv)} AS vv FROM g)
-         |SELECT CAST(1 AS BIGINT) AS img_id, r AS px_row, c AS px_col,
-         |  ch AS channel,
-         |  CAST(CASE ch
-         |    WHEN 3 THEN (r*13 + c*7 + 5) % 256
-         |    WHEN 0 THEN ${clip6(s"$my + floor(vv*26149/256.0) - 14234")}
-         |    WHEN 1 THEN ${clip6(s"$my - floor(uv*6419/256.0) - floor(vv*13320/256.0) + 8708")}
-         |    ELSE ${clip6(s"$my + floor(uv*33050/256.0) - 17685")} END AS INT) AS value
-         |FROM p ORDER BY px_row, px_col, channel""".stripMargin
-    },
-    // mm22: composed canvases regenerate closed-form — binary alphas
-    // make every composed pixel a region CASE over the source formulas;
-    // blend, no-blend hole-punching, dispose-to-background, restore-to-
-    // previous, and duration carry-through must all be invisible
-    "mm22_composed_frames" -> {
-      def chan(rE: String, gE: String, bE: String, aE: String) =
-        s"CASE ch WHEN 0 THEN $rE WHEN 1 THEN $gE WHEN 2 THEN $bE ELSE $aE END"
-      val vF0 = chan("(r*31 + c*7) % 256", "(r*13 + c*17) % 256",
-        "(r*29 + c*3) % 256", "255")
-      val vF1 = chan("((r-2)*41 + (c-2)*5 + 9) % 256",
-        "((r-2)*11 + (c-2)*23 + 4) % 256", "((r-2)*17 + (c-2)*13 + 2) % 256", "255")
-      val vF2 = chan("(r*7 + (c-4)*11 + 100) % 256", "(r*19 + (c-4)*3 + 50) % 256",
-        "(r*23 + (c-4)*29 + 25) % 256", "CASE WHEN r < 2 THEN 255 ELSE 0 END")
-      val vF3 = chan("(r*3 + c + 200) % 256", "(r*5 + c*7 + 150) % 256",
-        "(r + c*11 + 90) % 256", "255")
-      val in1 = "(r BETWEEN 2 AND 3 AND c BETWEEN 2 AND 5 AND ((r-2)+(c-2)) % 2 = 0)"
-      val in2 = "(c BETWEEN 4 AND 5 AND r BETWEEN 0 AND 3)"
-      val wVal =
-        s"""CASE f WHEN 0 THEN $vF0
-           |  WHEN 1 THEN CASE WHEN $in1 THEN $vF1 ELSE $vF0 END
-           |  WHEN 2 THEN CASE WHEN $in2 THEN $vF2 WHEN $in1 THEN $vF1 ELSE $vF0 END
-           |  ELSE CASE WHEN r < 2 AND c < 2 THEN $vF3 WHEN $in2 THEN 0
-           |    WHEN $in1 THEN $vF1 ELSE $vF0 END END""".stripMargin
-      def palv(idx: String) = chan(s"(($idx)*37) % 256", s"(($idx)*59) % 256",
-        s"(($idx)*83) % 256", "255")
-      val vG0 = palv("(r*2 + c) % 6")
-      val vG1 = palv("((r-1) + (c-3)) % 3")
-      val vG2 = palv("(r + c) % 5 + 1")
-      val vG3 = palv("((r-3)*2 + (c-6)) % 5 + 1")
-      val ing1 = "(r BETWEEN 1 AND 3 AND c BETWEEN 3 AND 6 AND ((r-1)+(c-3)) % 3 <> 0)"
-      val ing2 = "(r BETWEEN 0 AND 1 AND c BETWEEN 0 AND 1)"
-      val ing3 = "(r BETWEEN 3 AND 4 AND c BETWEEN 6 AND 7)"
-      val gVal =
-        s"""CASE f WHEN 0 THEN $vG0
-           |  WHEN 1 THEN CASE WHEN $ing1 THEN $vG1 ELSE $vG0 END
-           |  WHEN 2 THEN CASE WHEN $ing2 THEN $vG2 ELSE $vG0 END
-           |  ELSE CASE WHEN $ing2 THEN 0 WHEN $ing3 THEN $vG3 ELSE $vG0 END END""".stripMargin
-      s"""WITH wg AS (SELECT f.f AS f, CAST((id // 4) // 8 AS INT) AS r,
-         |    CAST((id // 4) % 8 AS INT) AS c, CAST(id % 4 AS INT) AS ch
-         |  FROM range(192) t(id) CROSS JOIN (VALUES (0), (1), (2), (3)) f(f)),
-         |wq AS (SELECT 'webp' AS kind, CAST(f AS INT) AS frame_idx,
-         |  CAST(CASE f WHEN 0 THEN 40 WHEN 1 THEN 30 WHEN 2 THEN 20 ELSE 10 END AS INT) AS duration_ms,
-         |  r AS px_row, c AS px_col, ch AS channel,
-         |  CAST($wVal AS INT) AS value FROM wg),
-         |gg AS (SELECT f.f AS f, CAST((id // 4) // 8 AS INT) AS r,
-         |    CAST((id // 4) % 8 AS INT) AS c, CAST(id % 4 AS INT) AS ch
-         |  FROM range(160) t(id) CROSS JOIN (VALUES (0), (1), (2), (3)) f(f)),
-         |gq AS (SELECT 'gif' AS kind, CAST(f AS INT) AS frame_idx,
-         |  CAST(CASE f WHEN 1 THEN 200 WHEN 2 THEN 100 ELSE 0 END AS INT) AS duration_ms,
-         |  r AS px_row, c AS px_col, ch AS channel,
-         |  CAST($gVal AS INT) AS value FROM gg)
-         |SELECT * FROM gq UNION ALL SELECT * FROM wq
-         |ORDER BY kind, frame_idx, px_row, px_col, channel""".stripMargin
-    },
-    // mm20: every frame's pixels regenerate closed-form (GIF palette
-    // formulas, the VP8L pix formula, the mm19 integer chain for the
-    // LOSSY ANMF frame) and re-aggregate — frame timing metadata and the
-    // mixed-codec routing must be invisible
-    "mm20_frame_durations" -> {
-      def gifFrame(fi: Int, dur: Int, w: Int, h: Int, idxExpr: String) =
-        s"""SELECT 1 AS media_id, $fi AS fi, $dur AS dur,
-           |  CAST(CASE id % 4
-           |    WHEN 0 THEN (($idxExpr) * 41) % 256
-           |    WHEN 1 THEN (($idxExpr) * 73) % 256
-           |    WHEN 2 THEN (($idxExpr) * 97) % 256
-           |    ELSE 255 END AS BIGINT) AS v
-           |FROM range(${w * h * 4}) t(id)""".stripMargin
-      val f0 = gifFrame(0, 120, 12, 8, "((id//4)//12 * 3 + (id//4)%12) % 5")
-      val f1 = gifFrame(1, 0, 6, 4, "((id//4)//6 + (id//4)%6) % 5")
-      val f2 = gifFrame(2, 300, 5, 3, "((id//4)//5 * 2 + (id//4)%5) % 5")
-      val r = "((id//4)//10)"; val c = "((id//4)%10)"
-      val wl =
-        s"""SELECT 2, 0, 33, CAST(CASE id % 4
-           |    WHEN 0 THEN ($r*31 + $c*7) % 256
-           |    WHEN 1 THEN ($r*13 + $c*17 + 5) % 256
-           |    WHEN 2 THEN ($r*3 + $c*29 + 11) % 256
-           |    ELSE ($r*5 + $c*3 + 9) % 256 END AS BIGINT)
-           |FROM range(${10 * 6 * 4}) t(id)""".stripMargin
-      val yv = "(128 + CAST(floor((floor((24*8+3)/8.0)+4)/8.0) AS INT))"
-      val my = s"floor($yv*19077/256.0)"
-      def clip6(x: String) =
-        s"CASE WHEN ($x) < 0 THEN 0 WHEN ($x) > 16383 THEN 255 ELSE CAST(floor(($x)/64.0) AS INT) END"
-      val rC = clip6(s"$my + floor(128*26149/256.0) - 14234")
-      val gC = clip6(s"$my - floor(128*6419/256.0) - floor(128*13320/256.0) + 8708")
-      val bC = clip6(s"$my + floor(128*33050/256.0) - 17685")
-      val lo =
-        s"""SELECT 2, 1, 55, CAST(CASE id % 4
-           |    WHEN 0 THEN $rC WHEN 1 THEN $gC WHEN 2 THEN $bC
-           |    ELSE 255 END AS BIGINT)
-           |FROM range(${16 * 16 * 4}) t(id)""".stripMargin
-      s"""WITH v(media_id, fi, dur, v) AS (
-         |${Seq(f0, f1, f2, wl, lo).mkString("\nUNION ALL\n")}),
-         |pf AS (SELECT media_id, fi, MIN(dur) AS dur, COUNT(*) AS nv,
-         |    SUM(v) AS sv FROM v GROUP BY media_id, fi)
-         |SELECT CAST(media_id AS BIGINT) AS media_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_frames,
-         |  CAST(SUM(dur) AS BIGINT) AS total_ms,
-         |  CAST(SUM(nv) AS BIGINT) AS n_values,
-         |  CAST(SUM(sv) AS BIGINT) AS sum_values
-         |FROM pf GROUP BY media_id ORDER BY media_id""".stripMargin
-    },
-    // mm18: every frame's RGBA regenerates closed-form at the
-    // per-frame source shift — the ANMF container framing is invisible
-    "mm18_webp_anim" -> {
-      def frame(idx: Int, left: Int, top: Int, w: Int, h: Int, dur: Int,
-          dr: Int, dc: Int) = {
-        val r = s"(id // ${w * 4} + $dr)"; val c = s"((id % ${w * 4}) // 4 + $dc)"
-        s"""SELECT CAST(1 AS BIGINT) AS media_id, CAST($idx AS INT) AS frame_idx,
-           |  CAST($left AS INT) AS frame_left, CAST($top AS INT) AS frame_top,
-           |  CAST($dur AS INT) AS duration_ms,
-           |  CAST(id // ${w * 4} AS INT) AS px_row,
-           |  CAST((id % ${w * 4}) // 4 AS INT) AS px_col,
-           |  CAST(id % 4 AS INT) AS channel,
-           |  CAST(CASE id % 4
-           |    WHEN 0 THEN ($r * 31 + $c * 7) % 256
-           |    WHEN 1 THEN ($r * 13 + $c * 17 + 5) % 256
-           |    WHEN 2 THEN ($r * 3 + $c * 29 + 11) % 256
-           |    ELSE ($r * 5 + $c * 3 + 9) % 256 END AS INT) AS value
-           |FROM range(${w * h * 4}) t(id)""".stripMargin
-      }
-      Seq(frame(0, 0, 0, 14, 10, 33, 0, 0), frame(1, 4, 2, 7, 5, 47, 2, 3),
-        frame(2, 8, 6, 5, 3, 55, 5, 1))
-        .mkString("", "\nUNION ALL\n",
-          "\nORDER BY frame_idx, px_row, px_col, channel")
-    },
-    // e15: hashes derived from the same closed-form pixels (luma →
-    // mirrored bilinear 8×8 → integer mean threshold → shifted bit
-    // packs), then ALL pairs brute-forced — DuckDB does the O(n²) work
-    // the banding avoids, proving it lossless; exact dyadic arithmetic
-    // end to end
-    "e15_phash_neardup" -> {
-      // luma at source pixel (rr, cc) of image i — mirrors the fixture
-      def lum(rr: String, cc: String) = {
-        val high = s"((($rr) // 3 + ($cc) // 2 + i % 4) % 2 = 0)"
-        val rch = s"((i % 4) * 31 + ($rr) * 3 + ($cc) * 5) % 40 + (CASE WHEN $high THEN 150 ELSE 10 END)"
-        val gch = s"(CASE WHEN $high THEN 250 ELSE 20 END)"
-        val bch = s"(CASE WHEN ($rr) = (i * 5) % 12 AND ($cc) = (i * 7) % 16 AND i // 4 > 0 THEN 200 ELSE 30 END)"
-        s"(2 * ($rch) + 5 * $gch + $bch)"
-      }
-      s"""WITH cell AS (SELECT i.i, id // 8 AS r, id % 8 AS c
-        |  FROM (SELECT unnest(generate_series(0, 23)) AS i) i
-        |  CROSS JOIN range(64) t(id)),
-        |st AS (SELECT i, r, c,
-        |    (CAST(c AS DOUBLE) + 0.5) * ${16.0 / 8} - 0.5 AS u,
-        |    (CAST(r AS DOUBLE) + 0.5) * ${12.0 / 8} - 0.5 AS v FROM cell),
-        |st2 AS (SELECT i, r, c,
-        |    CAST(floor(u) AS INT) AS c0, CAST(floor(v) AS INT) AS r0,
-        |    u - floor(u) AS fx, v - floor(v) AS fy FROM st),
-        |st3 AS (SELECT i, r, c, fx, fy,
-        |    LEAST(GREATEST(r0 + 0, 0), 11) AS sr0, LEAST(GREATEST(r0 + 1, 0), 11) AS sr1,
-        |    LEAST(GREATEST(c0 + 0, 0), 15) AS sc0, LEAST(GREATEST(c0 + 1, 0), 15) AS sc1
-        |  FROM st2),
-        |cells AS (SELECT i, r, c,
-        |    ((CAST(${lum("sr0", "sc0")} AS DOUBLE) * ((1.0 - fy) * (1.0 - fx))
-        |      + CAST(${lum("sr0", "sc1")} AS DOUBLE) * ((1.0 - fy) * fx))
-        |      + CAST(${lum("sr1", "sc0")} AS DOUBLE) * (fy * (1.0 - fx)))
-        |      + CAST(${lum("sr1", "sc1")} AS DOUBLE) * (fy * fx) AS val
-        |  FROM st3),
-        |fp AS (SELECT i, r, c, CAST(floor(val * 1048576.0) AS BIGINT) AS fp
-        |  FROM cells),
-        |tot AS (SELECT i, CAST(sum(fp) AS BIGINT) AS tot FROM fp GROUP BY i),
-        |bits AS (SELECT f.i, f.r * 8 + f.c AS idx, f.fp * 64 > t.tot AS onb
-        |  FROM fp f JOIN tot t ON f.i = t.i),
-        |h AS (SELECT i,
-        |    CAST(coalesce(sum(CASE WHEN onb AND idx < 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(idx AS INT)) END), 0) AS BIGINT) AS lo,
-        |    CAST(coalesce(sum(CASE WHEN onb AND idx >= 32
-        |      THEN (CAST(1 AS BIGINT) << CAST(idx - 32 AS INT)) END), 0) AS BIGINT) AS hi
-        |  FROM bits GROUP BY i)
-        |SELECT x.i AS a, y.i AS b,
-        |  CAST(bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) AS BIGINT) AS hamming
-        |FROM h x JOIN h y ON x.i < y.i
-        |WHERE bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) <= 3
-        |ORDER BY a, b""".stripMargin
-    },
-    // au1: samples regenerate closed-form, frames via the identical
-    // floor-division bounds, and the DFT chain mirrors term by term —
-    // per-term floor makes the sums integer-exact (HUGEINT cast back!),
-    // the energies derive from identical bigints
-    "au1_stft_energy" -> {
-      val w0 = 2.0 * math.Pi / 17
-      s"""WITH s AS (SELECT id // 2 AS i, CAST(id % 2 AS INT) AS ch,
-        |    ((id // 2) * 37 + (id % 2) * 19) % 200 - 100 AS x
-        |  FROM range(96) t(id)),
-        |fr AS (SELECT i, ch, x, f.frame
-        |  FROM s CROSS JOIN LATERAL (SELECT unnest(generate_series(
-        |    GREATEST(CAST(0 AS BIGINT), CAST(floor((i - 17) / 9) AS BIGINT) + 1),
-        |    CAST(floor(i / 9) AS BIGINT))) AS frame) f),
-        |t1 AS (SELECT ch, frame, b.band, i - frame * 9 AS n, x
-        |  FROM fr CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS band) b),
-        |t2 AS (SELECT ch, frame, CAST(band AS INT) AS band,
-        |    CAST(floor(CAST(x AS DOUBLE)
-        |      * cos($w0 * (CAST(band AS DOUBLE) * CAST(n AS DOUBLE)))
-        |      * 1048576.0) AS BIGINT) AS c,
-        |    CAST(floor(CAST(x AS DOUBLE)
-        |      * sin($w0 * (CAST(band AS DOUBLE) * CAST(n AS DOUBLE)))
-        |      * 1048576.0) AS BIGINT) AS sgn
-        |  FROM t1),
-        |agg AS (SELECT ch AS channel, frame, band, count(*) AS n_terms,
-        |    CAST(sum(c) AS BIGINT) AS sc_fp, CAST(sum(sgn) AS BIGINT) AS ss_fp
-        |  FROM t2 GROUP BY ch, frame, band)
-        |SELECT CAST(1 AS BIGINT) AS media_id, channel, frame, band, n_terms,
-        |  sc_fp, ss_fp,
-        |  (CAST(sc_fp AS DOUBLE) / 1048576.0) * (CAST(sc_fp AS DOUBLE) / 1048576.0)
-        |    + (CAST(ss_fp AS DOUBLE) / 1048576.0) * (CAST(ss_fp AS DOUBLE) / 1048576.0)
-        |    AS energy
-        |FROM agg ORDER BY channel, frame, band""".stripMargin
-    },
-    // mm17: the identical half-pixel mapping, clamps, and FIXED-order
-    // tap sum evaluated in DuckDB over the closed-form source pixels —
-    // pure +,*,/ both engines, so raw doubles hash
-    "mm17_pixel_resize" -> {
-      val rxB = 9.0 / 4; val ryB = 6.0 / 3
-      val rxN = 9.0 / 5; val ryN = 6.0 / 2
-      def sv(r: String, c: String, ch: String) =
-        s"CAST(($r * 23 + $c * 31 + $ch * 41 + 7) % 256 AS DOUBLE)"
-      s"""WITH bd AS (SELECT id // 12 AS r, (id % 12) // 3 AS c, id % 3 AS ch
-        |  FROM range(36) t(id)),
-        |b1 AS (SELECT r, c, ch,
-        |    (CAST(c AS DOUBLE) + 0.5) * $rxB - 0.5 AS u,
-        |    (CAST(r AS DOUBLE) + 0.5) * $ryB - 0.5 AS v FROM bd),
-        |b2 AS (SELECT r, c, ch, u, v,
-        |    CAST(floor(u) AS INT) AS c0, CAST(floor(v) AS INT) AS r0,
-        |    u - floor(u) AS fx, v - floor(v) AS fy FROM b1),
-        |b3 AS (SELECT r, c, ch, fx, fy,
-        |    LEAST(GREATEST(r0 + 0, 0), 5) AS sr0, LEAST(GREATEST(r0 + 1, 0), 5) AS sr1,
-        |    LEAST(GREATEST(c0 + 0, 0), 8) AS sc0, LEAST(GREATEST(c0 + 1, 0), 8) AS sc1
-        |  FROM b2),
-        |bil AS (SELECT CAST(1 AS BIGINT) AS img_id, 'bilinear' AS kind,
-        |    CAST(r AS INT) AS px_row, CAST(c AS INT) AS px_col,
-        |    CAST(ch AS INT) AS channel,
-        |    ((${sv("sr0", "sc0", "ch")} * ((1.0 - fy) * (1.0 - fx))
-        |      + ${sv("sr0", "sc1", "ch")} * ((1.0 - fy) * fx))
-        |      + ${sv("sr1", "sc0", "ch")} * (fy * (1.0 - fx)))
-        |      + ${sv("sr1", "sc1", "ch")} * (fy * fx) AS value
-        |  FROM b3),
-        |nd AS (SELECT id // 15 AS r, (id % 15) // 3 AS c, id % 3 AS ch
-        |  FROM range(30) t(id)),
-        |nn AS (SELECT CAST(1 AS BIGINT) AS img_id, 'nearest' AS kind,
-        |    CAST(r AS INT) AS px_row, CAST(c AS INT) AS px_col,
-        |    CAST(ch AS INT) AS channel,
-        |    ${sv(
-             "LEAST(GREATEST(CAST(floor((CAST(r AS DOUBLE) + 0.5) * " + ryN + " - 0.5 + 0.5) AS INT), 0), 5)",
-             "LEAST(GREATEST(CAST(floor((CAST(c AS DOUBLE) + 0.5) * " + rxN + " - 0.5 + 0.5) AS INT), 0), 8)",
-             "ch")} AS value
-        |  FROM nd)
-        |SELECT * FROM bil UNION ALL SELECT * FROM nn
-        |ORDER BY kind, px_row, px_col, channel""".stripMargin
-    },
-    // mm16: every RGBA value regenerates closed-form — the VP8L prefix
-    // coding, transforms, color cache, and palette bundling never reach
-    // the oracle; files 1 and 2 share one formula (stacked features are
-    // bytes-only)
-    "mm16_webp_lossless" -> {
-      def file(img: Int, w: Int, rv: String, gv: String, bv: String, av: String) =
-        s"""SELECT CAST($img AS BIGINT) AS img_id,
-           |  CAST(id // ${w * 4} AS INT) AS px_row,
-           |  CAST((id % ${w * 4}) // 4 AS INT) AS px_col,
-           |  CAST(id % 4 AS INT) AS channel,
-           |  CAST(CASE id % 4 WHEN 0 THEN $rv WHEN 1 THEN $gv
-           |    WHEN 2 THEN $bv ELSE $av END AS INT) AS value""".stripMargin
-      val r1 = "(id // 36)"; val c1 = "((id % 36) // 4)"
-      val r2 = "(id // 32)"; val c2 = "((id % 32) // 4)"
-      def rgba(r: String, c: String) = (
-        s"($r * 31 + $c * 7) % 256", s"($r * 13 + $c * 17 + 5) % 256",
-        s"($r * 3 + $c * 29 + 11) % 256", s"($r * 5 + $c * 3 + 9) % 256")
-      val (ra, ga, ba, aa) = rgba(r1, c1)
-      val (rb, gb, bb, ab) = rgba(r2, c2)
-      s"""${file(1, 9, ra, ga, ba, aa)}
-        |FROM range(180) t(id)
-        |UNION ALL
-        |${file(2, 8, rb, gb, bb, ab)}
-        |FROM range(192) t(id)
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(id // 40 AS INT),
-        |  CAST((id % 40) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 40) * 7 + ((id % 40) // 4) * 5) % 13 * 59) % 256
-        |    WHEN 1 THEN (((id // 40) * 7 + ((id % 40) // 4) * 5) % 13 * 83 + 7) % 256
-        |    WHEN 2 THEN (((id // 40) * 7 + ((id % 40) // 4) * 5) % 13 * 29 + 3) % 256
-        |    ELSE (((id // 40) * 7 + ((id % 40) // 4) * 5) % 13 * 37 + 100) % 256
-        |  END AS INT)
-        |FROM range(160) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin
-    },
-    // mm15: dyadic-rational float samples regenerate exactly in double
-    // arithmetic (k/64 is the same number in float32 and float64)
-    "mm15_wav_float" ->
-      """SELECT CAST(1 AS BIGINT) AS media_id, CAST(id // 2 AS INT) AS frame_idx,
-        |  CAST(id % 2 AS INT) AS channel,
-        |  CAST(((id // 2) * 37 + (id % 2) * 11 - 50) AS DOUBLE) / 64.0 AS value
-        |FROM range(60) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id AS INT), CAST(0 AS INT),
-        |  CAST(id * id - 300 AS DOUBLE) / 64.0
-        |FROM range(25) t(id)
-        |ORDER BY media_id, frame_idx, channel""".stripMargin,
-    // mm14: the mm7 closed form evaluated at the per-orientation SOURCE
-    // coordinate (value depends only on the stored column's block index,
-    // so each orientation is one coordinate substitution)
-    "mm14_exif_orientation" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      val parts = (1 to 8).map { o =>
-        val ow = if (o >= 5) 8 else 16
-        val oh = if (o >= 5) 16 else 8
-        val cSrc = o match {
-          case 1 | 4 => s"(id % $ow)"
-          case 2 | 3 => s"(15 - id % $ow)"
-          case 5 | 6 => s"(id // $ow)"
-          case _ => s"(15 - id // $ow)"
-        }
-        s"""SELECT CAST($o AS BIGINT) AS img_id, CAST($o AS INT) AS orientation,
-           |  CAST(id // $ow AS INT) AS px_row, CAST(id % $ow AS INT) AS px_col,
-           |  CAST(0 AS INT) AS channel,
-           |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-           |    $c0sq * CAST((($o * 7 + ($cSrc // 8) * 11) % 50 - 25) * 16 AS DOUBLE)
-           |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS value
-           |FROM range(${ow * oh}) t(id)""".stripMargin
-      }
-      parts.mkString("", "\nUNION ALL\n",
-        "\nORDER BY img_id, px_row, px_col, channel")
-    },
-    // mm13: the mm7/mm8 DC-only closed form extended with a frame
-    // dimension + the container's presentation times (frame_idx · usec)
-    "mm13_avi_mjpeg" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      s"""SELECT CAST(1 AS BIGINT) AS media_id, CAST(id // 128 AS INT) AS frame_idx,
-        |  CAST((id // 128) * 40000 AS BIGINT) AS frame_us,
-        |  CAST((id % 128) // 16 AS INT) AS px_row, CAST(id % 16 AS INT) AS px_col,
-        |  CAST(0 AS INT) AS channel,
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST((((id // 128) * 13 + ((id % 16) // 8) * 7) % 50 - 25) * 16 AS DOUBLE)
-        |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS value
-        |FROM range(512) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 1440 AS INT),
-        |  CAST((id // 1440) * 33333 AS BIGINT),
-        |  CAST((id % 1440) // 72 AS INT), CAST(((id % 1440) % 72) // 3 AS INT),
-        |  CAST(id % 3 AS INT),
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST(CASE WHEN id % 3 = 0
-        |      THEN (((id // 1440) * 9 + ((id % 1440) // 72 // 8) * 5
-        |        + (((id % 1440) % 72) // 3 // 8) * 3) % 48 - 24) * 16
-        |      ELSE (((id % 3) * 7 + (id // 1440) * 5 + ((id % 1440) // 72 // 16) * 3
-        |        + (((id % 1440) % 72) // 3 // 16) * 5) % 30 - 15) * 8
-        |    END AS DOUBLE) * 0.25 + 128.0 + 0.5) AS INT))) AS INT)
-        |FROM range(2880) t(id)
-        |ORDER BY media_id, frame_idx, px_row, px_col, channel""".stripMargin
-    },
-    // mm12: BMP values regenerate closed-form — padding, BGR swap, row
-    // order, and palette quads are invisible.
-    "mm12_bmp_pixels" ->
-      """SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 27 AS INT) AS px_row,
-        |  CAST((id % 27) // 3 AS INT) AS px_col, CAST(id % 3 AS INT) AS channel,
-        |  CAST((id // 27 * 37 + (id % 27) // 3 * 11 + id % 3 * 71 + 3) % 256 AS INT) AS value
-        |FROM range(162) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 21 AS INT),
-        |  CAST((id % 21) // 3 AS INT), CAST(id % 3 AS INT),
-        |  CAST(CASE id % 3
-        |    WHEN 0 THEN ((id // 21 * 2 + (id % 21) // 3) % 5 * 31 + 2) % 256
-        |    WHEN 1 THEN ((id // 21 * 2 + (id % 21) // 3) % 5 * 57 + 4) % 256
-        |    ELSE ((id // 21 * 2 + (id % 21) // 3) % 5 * 91 + 8) % 256 END AS INT)
-        |FROM range(105) t(id)
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(id // 20 AS INT),
-        |  CAST((id % 20) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST((id // 20 * 19 + (id % 20) // 4 * 23 + id % 4 * 41 + 9) % 256 AS INT)
-        |FROM range(80) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin,
-    // mm5: every metadata field is integer-derived from the row id —
-    // regenerate the closed forms.
-    // mm6: PNG pixels regenerate from the closed forms — the zlib stream
-    // and all five row filters must be invisible.
-    "mm6_png_pixels" ->
-      """SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 20 AS INT) AS px_row,
-        |  CAST(id % 20 AS INT) AS px_col, CAST(0 AS INT) AS channel,
-        |  CAST((id // 20 * 31 + id % 20 * 7) % 256 AS INT) AS value
-        |FROM range(280) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 64 AS INT),
-        |  CAST((id % 64) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST((id // 64 * 17 + ((id % 64) // 4) * 5 + (id % 4) * 29) % 256 AS INT)
-        |FROM range(640) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin,
-    // mm6c: Adam7 pixels regenerate closed-form — pass splitting,
-    // per-pass filtering, and the seven-pass scatter are invisible
-    "mm6c_png_adam7" ->
-      """SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 39 AS INT) AS px_row,
-        |  CAST((id % 39) // 3 AS INT) AS px_col, CAST(id % 3 AS INT) AS channel,
-        |  CAST((id // 39 * 31 + (id % 39) // 3 * 7 + (id % 3) * 11) % 256 AS INT) AS value
-        |FROM range(429) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 9 AS INT), CAST(id % 9 AS INT),
-        |  CAST(0 AS INT),
-        |  CAST((id // 9 * 4099 + id % 9 * 769) % 65536 AS INT)
-        |FROM range(63) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin,
-    // mm6d: packed samples and transparent-color alphas regenerate
-    // closed-form — bit unpacking, the 1-byte filter stride, and the
-    // tRNS color match are invisible
-    "mm6d_png_packed_trns" ->
-      """SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 44 AS INT) AS px_row,
-        |  CAST((id % 44) // 4 AS INT) AS px_col, CAST(id % 4 AS INT) AS channel,
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 44 * 3 + (id % 44) // 4) % 4) * 37) % 256
-        |    WHEN 1 THEN (((id // 44 * 3 + (id % 44) // 4) % 4) * 59) % 256
-        |    WHEN 2 THEN (((id // 44 * 3 + (id % 44) // 4) % 4) * 83) % 256
-        |    ELSE CASE (id // 44 * 3 + (id % 44) // 4) % 4
-        |      WHEN 0 THEN 40 WHEN 1 THEN 220 ELSE 255 END
-        |  END AS INT) AS value
-        |FROM range(308) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 26 AS INT),
-        |  CAST((id % 26) // 2 AS INT), CAST(id % 2 AS INT),
-        |  CAST(CASE id % 2
-        |    WHEN 0 THEN (id // 26 + (id % 26) // 2) % 2
-        |    ELSE CASE (id // 26 + (id % 26) // 2) % 2 WHEN 1 THEN 0 ELSE 1 END
-        |  END AS INT)
-        |FROM range(130) t(id)
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(id // 9 AS INT), CAST(id % 9 AS INT),
-        |  CAST(0 AS INT), CAST((id // 9 * 5 + id % 9 * 3) % 16 AS INT)
-        |FROM range(54) t(id)
-        |UNION ALL
-        |SELECT CAST(4 AS BIGINT), CAST(id // 32 AS INT),
-        |  CAST((id % 32) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST(CASE WHEN id % 4 < 3
-        |    THEN (id // 32 * 7 + (id % 32) // 4 * 11 + id % 4 * 13) % 256
-        |    ELSE CASE WHEN id // 32 = 1 AND (id % 32) // 4 = 2 THEN 0 ELSE 255 END
-        |  END AS INT)
-        |FROM range(160) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin,
-    // mm6b: palette indices and 16-bit BE samples regenerate closed-form —
-    // the PLTE indirection and the 2-byte assembly are invisible.
-    "mm6b_png_palette16" ->
-      """SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 36 AS INT) AS px_row,
-        |  CAST((id % 36) // 3 AS INT) AS px_col, CAST(id % 3 AS INT) AS channel,
-        |  CAST(CASE id % 3
-        |    WHEN 0 THEN (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 37) % 256
-        |    WHEN 1 THEN (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 59) % 256
-        |    ELSE (((id // 36 * 5 + (id % 36) // 3 * 3) % 7) * 83) % 256
-        |  END AS INT) AS value
-        |FROM range(324) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 10 AS INT), CAST(id % 10 AS INT),
-        |  CAST(0 AS INT),
-        |  CAST((id // 10 * 4099 + id % 10 * 769) % 65536 AS INT)
-        |FROM range(80) t(id)
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(id // 32 AS INT),
-        |  CAST((id % 32) // 4 AS INT), CAST(id % 4 AS INT),
-        |  CAST(CASE id % 4
-        |    WHEN 0 THEN (((id // 32 * 3 + (id % 32) // 4) % 5) * 37) % 256
-        |    WHEN 1 THEN (((id // 32 * 3 + (id % 32) // 4) % 5) * 59) % 256
-        |    WHEN 2 THEN (((id // 32 * 3 + (id % 32) // 4) % 5) * 83) % 256
-        |    ELSE CASE (id // 32 * 3 + (id % 32) // 4) % 5
-        |      WHEN 0 THEN 17 WHEN 1 THEN 200 WHEN 2 THEN 90 ELSE 255 END
-        |  END AS INT) AS value
-        |FROM range(192) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin,
-    // mm7: DC-only baseline JPEG — the IDCT collapses to ONE product
-    // chain per pixel (C0² · dc·q · 0.25, then round+clamp), evaluated
-    // identically here; the entropy coding is invisible in the hash.
-    "mm7_jpeg_pixels" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      s"""SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 20 AS INT) AS px_row,
-        |  CAST(id % 20 AS INT) AS px_col, CAST(0 AS INT) AS channel,
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST(((((id // 20 // 8) * 3 + (id % 20 // 8)) * 7) % 40 - 20) * 16 AS DOUBLE)
-        |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS value
-        |FROM range(240) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 48 AS INT),
-        |  CAST((id % 48) // 3 AS INT), CAST(id % 3 AS INT),
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST((((id % 3) * 11 + ((id % 48) // 3 // 8) * 5) % 30 - 15)
-        |        * (CASE WHEN id % 3 = 0 THEN 10 ELSE 12 END) AS DOUBLE)
-        |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT)
-        |FROM range(384) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin
-    },
-    // mm8: DC-only subsampled JPEG — same one-product closed form as mm7,
-    // with chroma block indices at the SUBSAMPLED resolution (r//16, c//16
-    // for 4:2:0; r//8, c//16 for 4:2:2): wrong upsampling or interleave
-    // re-keys every chroma sample.
-    "mm8_jpeg_subsampled" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      s"""SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 72 AS INT) AS px_row,
-        |  CAST((id % 72) // 3 AS INT) AS px_col, CAST(id % 3 AS INT) AS channel,
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST(CASE WHEN id % 3 = 0
-        |      THEN (((id // 72 // 8) * 5 + ((id % 72) // 3 // 8) * 3) % 48 - 24) * 16
-        |      ELSE (((id % 3) * 7 + (id // 72 // 16) * 3 + ((id % 72) // 3 // 16) * 5) % 30 - 15) * 8
-        |    END AS DOUBLE) * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS value
-        |FROM range(1440) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 48 AS INT),
-        |  CAST((id % 48) // 3 AS INT), CAST(id % 3 AS INT),
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST(CASE WHEN id % 3 = 0
-        |      THEN (((id // 48 // 8) * 11 + ((id % 48) // 3 // 8)) % 44 - 22) * 16
-        |      ELSE (((id % 3) * 9 + (id // 48 // 8) * 7 + ((id % 48) // 3 // 16)) % 26 - 13) * 8
-        |    END AS DOUBLE) * 0.25 + 128.0 + 0.5) AS INT))) AS INT)
-        |FROM range(480) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin
-    },
-    // mm9: DC-only progressive JPEG — the coefficients reassembled across
-    // scans equal the single-scan values, so the same one-product closed
-    // form as mm7/mm8 applies (img2's blocks are mm8-img1's exactly).
-    "mm9_jpeg_progressive" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      s"""SELECT CAST(1 AS BIGINT) AS img_id, CAST(id // 20 AS INT) AS px_row,
-        |  CAST(id % 20 AS INT) AS px_col, CAST(0 AS INT) AS channel,
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST((((id // 20 // 8) * 7 + (id % 20 // 8) * 3) % 50 - 25) * 16 AS DOUBLE)
-        |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS value
-        |FROM range(240) t(id)
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 72 AS INT),
-        |  CAST((id % 72) // 3 AS INT), CAST(id % 3 AS INT),
-        |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-        |    $c0sq * CAST(CASE WHEN id % 3 = 0
-        |      THEN (((id // 72 // 8) * 5 + ((id % 72) // 3 // 8) * 3) % 48 - 24) * 16
-        |      ELSE (((id % 3) * 7 + (id // 72 // 16) * 3 + ((id % 72) // 3 // 16) * 5) % 30 - 15) * 8
-        |    END AS DOUBLE) * 0.25 + 128.0 + 0.5) AS INT))) AS INT)
-        |FROM range(1440) t(id)
-        |ORDER BY img_id, px_row, px_col, channel""".stripMargin
-    },
-    "mm5_tiff_header" ->
-      """SELECT id AS media_id,
-        |  CAST(16 + id % 32 AS INTEGER) AS width,
-        |  CAST(16 + (id * 7) % 32 AS INTEGER) AS height,
-        |  CAST(32 AS INTEGER) AS bits_per_sample,
-        |  CAST(3 AS INTEGER) AS sample_format,
-        |  CAST(1 AS INTEGER) AS n_bands,
-        |  CAST(1 AS INTEGER) AS planar_config,
-        |  CAST(CASE WHEN id % 11 = 4 THEN 5 ELSE 1 END AS INTEGER) AS compression,
-        |  (id % 2 = 0) AS tiled,
-        |  CAST(CASE WHEN id % 2 = 0 THEN 16 ELSE 16 + id % 32 END AS INTEGER) AS block_w,
-        |  CAST(CASE WHEN id % 2 = 0 THEN 16 ELSE 8 END AS INTEGER) AS block_h,
-        |  CAST(CASE WHEN id % 2 = 0
-        |    THEN ((16 + id % 32 + 15) // 16) * ((16 + (id * 7) % 32 + 15) // 16)
-        |    ELSE (16 + (id * 7) % 32 + 7) // 8 END AS INTEGER) AS n_blocks,
-        |  CASE WHEN id % 3 <> 0 THEN 'LE' ELSE 'BE' END AS byte_order,
-        |  (id % 7 = 3) AS is_big,
-        |  CASE WHEN id % 5 = 0 THEN 0.25 END AS px_w,
-        |  CASE WHEN id % 5 = 0 THEN 0.5 END AS px_h,
-        |  CASE WHEN id % 5 = 0 THEN CAST(id % 50 AS DOUBLE) END AS origin_x,
-        |  CASE WHEN id % 5 = 0 THEN CAST(id % 40 AS DOUBLE) + 0.5 END AS origin_y
-        |FROM range(500) t(id) ORDER BY media_id""".stripMargin,
-    // s12: same grid regeneration as s9 — the TIFF container must be
-    // invisible to the decoded pixel table.
-    "s12_geotiff_ingest" ->
-      """SELECT CAST(id // 32 AS INT) AS px_row, CAST(id % 32 AS INT) AS px_col,
-        |  CAST(id AS INT) AS v
-        |FROM range(1024) t(id)
-        |WHERE (id // 32 + id % 32) % 7 <> 0
-        |ORDER BY px_row, px_col""".stripMargin,
-    // s25: JPEG-in-TIFF — the mm7 DC-only closed form evaluated per strip
-    // (scene 1: strip index enters the DC; the 3rd strip's 8-row JPEG is
-    // cropped to 4 grid rows) and per channel (scene 2, YCbCr inline
-    // tables); the table splice and strip walk must be invisible.
-    "s25_jpeg_in_tiff" -> {
-      val c0sq = operators.Jpeg.C0 * operators.Jpeg.C0
-      s"""SELECT CAST(1 AS BIGINT) AS scene_id, CAST(0 AS INT) AS band,
-         |  CAST(id // 20 AS INT) AS px_row, CAST(id % 20 AS INT) AS px_col,
-         |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-         |    $c0sq * CAST((((id // 20 // 8) * 5 + (id % 20) // 8) * 7 % 40 - 20) * 16 AS DOUBLE)
-         |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT) AS v
-         |FROM range(400) t(id)
-         |UNION ALL
-         |SELECT CAST(2 AS BIGINT), CAST(id % 3 AS INT),
-         |  CAST(id // 3 // 16 AS INT), CAST((id // 3) % 16 AS INT),
-         |  CAST(LEAST(255, GREATEST(0, CAST(floor(
-         |    $c0sq * CAST((((id % 3) * 11 + id // 3 // 16 // 8 + ((id // 3) % 16 // 8) * 5) % 30 - 15)
-         |        * (CASE WHEN id % 3 = 0 THEN 10 ELSE 12 END) AS DOUBLE)
-         |      * 0.25 + 128.0 + 0.5) AS INT))) AS INT)
-         |FROM range(768) t(id)
-         |ORDER BY scene_id, band, px_row, px_col""".stripMargin
-    },
-    // s14: the LZW/BigTIFF containers must be as invisible as s12's raw
-    // one — same closed-form regeneration, two scenes.
-    "s14_bigtiff_lzw" ->
-      """SELECT CAST(1 AS BIGINT) AS scene_id,
-        |  CAST(id // 64 AS INT) AS px_row, CAST(id % 64 AS INT) AS px_col,
-        |  CAST((id * 7) % 1000 AS INT) AS v
-        |FROM range(4096) t(id)
-        |WHERE ((id // 64) * 3 + id % 64) % 11 <> 0
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 48 AS INT), CAST(id % 48 AS INT),
-        |  CAST((id * 13) % 997 AS INT)
-        |FROM range(2112) t(id)
-        |WHERE (id // 48 + 2 * (id % 48)) % 13 <> 0
-        |ORDER BY scene_id, px_row, px_col""".stripMargin,
-    // s15: both multi-band layouts regenerate from the same closed forms —
-    // the chunky de-interleave and plane-major grouping must be invisible.
-    "s15_multiband_tiff" ->
-      """SELECT CAST(1 AS BIGINT) AS scene_id, CAST(id // 280 AS INT) AS band,
-        |  CAST((id % 280) // 20 AS INT) AS px_row, CAST(id % 20 AS INT) AS px_col,
-        |  CAST((id // 280 * 2000 + ((id % 280) // 20) * 20 + id % 20) % 1777 AS INT) AS v
-        |FROM range(840) t(id)
-        |WHERE (id // 280 + (id % 280) // 20 + id % 20) % 9 <> 0
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(id // 240 AS INT),
-        |  CAST((id % 240) // 24 AS INT), CAST(id % 24 AS INT),
-        |  CAST(((id // 240 * 5000 + ((id % 240) // 24) * 24 + id % 24) * 7) % 997 AS INT)
-        |FROM range(480) t(id)
-        |WHERE (id // 240 * 3 + ((id % 240) // 24) * 2 + id % 24) % 11 <> 0
-        |ORDER BY scene_id, band, px_row, px_col""".stripMargin,
-    "w4_range_frame" ->
-      """SELECT user_id, event_id, round(avg(value) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |RANGE BETWEEN 300000000 PRECEDING AND CURRENT ROW), 6) AS w_avg
-        |FROM events ORDER BY user_id, event_id, w_avg""".stripMargin,
-    "q8_cube" ->
-      """SELECT l_returnflag, l_linestatus, CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "samp1_hash_split" ->
-      s"""WITH t AS (SELECT doc_id, n_chars,
-         |  ${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 4)} % 100 AS bucket FROM documents)
-         |SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         |FROM t GROUP BY split ORDER BY split""".stripMargin,
-    "samp2_stratified" ->
-      s"""WITH t AS (SELECT l_returnflag, l_quantity,
-         |  ${sqlHexVal("md5(CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR))", 4)} % 100 AS bucket,
-         |  CASE WHEN l_returnflag = 'A' THEN 10 WHEN l_returnflag = 'N' THEN 50 ELSE 100 END AS rate
-         |  FROM lineitem)
-         |SELECT l_returnflag, count(*) AS n,
-         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-         |FROM t WHERE bucket < rate GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // samp3: the same md5-uniform + fixed-point ln(u)/w rank key (lm1's
-    // ln-parity pattern); rank desc with doc_id tiebreak.
-    "samp3_weighted" ->
-      s"""WITH w AS (SELECT source, doc_id,
-         |  CAST(floor(ln((${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 8)} + 1) / 4294967296.0)
-         |    / CAST(n_chars + 1 AS DOUBLE) * 1048576) AS BIGINT) AS wkey_fp
-         |  FROM documents),
-         |r AS (SELECT source, doc_id, wkey_fp,
-         |  row_number() OVER (PARTITION BY source ORDER BY wkey_fp DESC, doc_id) AS rn FROM w)
-         |SELECT source, doc_id, wkey_fp FROM r WHERE rn <= 5
-         |ORDER BY source, doc_id""".stripMargin,
-    "e11_decontaminate" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS grams FROM t),
-        |dg AS (SELECT doc_id, unnest(grams) AS gram FROM s),
-        |eg AS (SELECT DISTINCT gram FROM dg WHERE doc_id % 97 = 0),
-        |bad AS (SELECT DISTINCT dg.doc_id FROM dg JOIN eg USING (gram))
-        |SELECT d.doc_id, d.n_chars FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY d.doc_id, d.n_chars""".stripMargin,
-    "j12_full_outer" ->
-      """SELECT COALESCE(c.nation, s.nation) AS nation, c.n_cust, s.n_supp
-        |FROM (SELECT c_nationkey AS nation, count(*) AS n_cust FROM customer
-        |      WHERE c_acctbal > CAST(9000 AS DOUBLE) GROUP BY 1) c
-        |FULL OUTER JOIN (SELECT s_nationkey AS nation, count(*) AS n_supp FROM supplier
-        |      WHERE s_acctbal > CAST(9000 AS DOUBLE) GROUP BY 1) s
-        |ON c.nation = s.nation
-        |ORDER BY nation""".stripMargin,
-    "o4_keyset_page" ->
-      """SELECT o_orderkey, o_orderdate, o_totalprice FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |AND (o_orderdate > TIMESTAMP '1997-01-01' OR o_orderkey > 5000)
-        |ORDER BY o_orderdate, o_orderkey LIMIT 100""".stripMargin,
-    // emb3: float→double cast is exact, ·2^20 is a power-of-two multiply
-    // (exact), floor to BIGINT, integer sums — partition-order-proof.
-    "emb3_dim_stats" ->
-      """WITH d AS (SELECT i, CAST(embedding[i] AS DOUBLE) AS v
-        |  FROM embeddings, (SELECT unnest(generate_series(1, 64)) AS i) t)
-        |SELECT CAST(i - 1 AS INTEGER) AS dim, count(*) AS n,
-        |  min(v) AS vmin, max(v) AS vmax,
-        |  CAST(sum(CAST(floor(v * 1048576) AS BIGINT)) AS BIGINT) AS sum_fp
-        |FROM d GROUP BY 1 ORDER BY 1""".stripMargin,
-    // ent1: ln on identical doubles, floored to fixed point per
-    // (doc, term), then exact integer weighting — the lm1 pattern applied
-    // within documents. DuckDB BIGINT sums widen to HUGEINT → cast back.
-    "ent1_token_entropy" ->
-      """WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM dt GROUP BY 1, 2),
-        |wl AS (SELECT doc_id, tf, sum(tf) OVER (PARTITION BY doc_id) AS len FROM tf),
-        |fp AS (SELECT doc_id, tf, len,
-        |  CAST(floor(ln(CAST(tf AS DOUBLE) / CAST(len AS DOUBLE)) * 1048576) AS BIGINT) AS lp FROM wl)
-        |SELECT doc_id, CAST(max(len) AS BIGINT) AS n_tok,
-        |  CAST(-sum(tf * lp) AS BIGINT) AS entropy_fp
-        |FROM fp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // nov1: per-doc DISTINCT grams (list_distinct mirrors array_distinct),
-    // left join against the reference slice's distinct grams, integer-
-    // ratio novelty (both engines divide the same exact integers).
-    "nov1_gram_novelty" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, list_distinct(CASE WHEN len(toks) < 3 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END) AS grams FROM t),
-        |dg AS (SELECT doc_id, unnest(grams) AS gram FROM s),
-        |ref AS (SELECT DISTINCT gram FROM dg WHERE doc_id % 3 = 0),
-        |q AS (SELECT doc_id, gram FROM dg WHERE doc_id % 3 <> 0)
-        |SELECT q.doc_id, count(*) AS n_grams,
-        |  CAST(sum(CASE WHEN ref.gram IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-        |  CAST(sum(CASE WHEN ref.gram IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novelty
-        |FROM q LEFT JOIN ref ON q.gram = ref.gram
-        |GROUP BY q.doc_id ORDER BY q.doc_id""".stripMargin,
-    "pack1_token_budget" ->
-      """WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok FROM documents),
-        |c AS (SELECT shard, doc_id, n_tok,
-        |  sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM t)
-        |SELECT shard, CAST(floor((cum - n_tok) / 2048) AS BIGINT) AS bin_id,
-        |  count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS total_tokens
-        |FROM c GROUP BY shard, bin_id ORDER BY shard, bin_id""".stripMargin,
-    "tfidf1_top_terms" ->
-      """WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM dt GROUP BY doc_id, term),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |scored AS (SELECT tf.doc_id, tf.term, round(tf.tf * ln(nd.n_docs / dfq.df), 6) AS score
-        |  FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN nd)
-        |SELECT doc_id, rank, term, score FROM (
-        |  SELECT doc_id, term, score,
-        |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS INTEGER) AS rank
-        |  FROM scored) WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    // tri1/dd1: same LSH pair CTE as cc1, then the standard upward
-    // two-join triangle enumeration / the undirected degree histogram.
-    "tri1_dup_triangles" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |tri AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c FROM pairs e1
-         |  JOIN pairs e2 ON e2.a = e1.b
-         |  JOIN pairs e3 ON e3.a = e1.a AND e3.b = e2.b)
-         |SELECT a, b, c FROM tri ORDER BY a, b, c""".stripMargin,
-    "dd1_degree_distribution" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |und AS (SELECT a AS node FROM pairs UNION ALL SELECT b AS node FROM pairs),
-         |deg AS (SELECT node, count(*) AS degree FROM und GROUP BY node)
-         |SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree ORDER BY degree""".stripMargin,
-    "cc1_dup_components" ->
-      s"""${sqlShingleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |pairs AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |und AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b AS x, a AS y FROM pairs),
-         |reach(x, y) AS (SELECT x, y FROM und
-         |  UNION SELECT r.x, u.y FROM reach r JOIN und u ON r.y = u.x),
-         |comp AS (SELECT x AS node, least(x, min(y)) AS component FROM reach GROUP BY x)
-         |SELECT component AS keep_id, count(*) AS n_members
-         |FROM comp GROUP BY component ORDER BY keep_id""".stripMargin,
-    // pr1: the same candidate edges, then the integer PageRank recurrence
-    // as a recursive CTE — floor-div contributions, integer sums, one
-    // floored damping multiply per step, all bit-exact.
-    "pr1_dup_pagerank" ->
-      s"""${sqlShingleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |e AS (SELECT a AS src, b AS dst FROM cand UNION SELECT b AS src, a AS dst FROM cand),
-         |dg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-         |pr(iter, node, rank_fp) AS (
-         |  SELECT 0, src, CAST(1048576 AS BIGINT) FROM dg
-         |  UNION ALL
-         |  SELECT s.iter + 1, s.node, CAST(157286 + floor(0.85 * s.total) AS BIGINT)
-         |  FROM (SELECT p.iter AS iter, e.dst AS node, sum(p.rank_fp // d.deg) AS total
-         |        FROM pr p JOIN e ON e.src = p.node JOIN dg d ON d.src = p.node
-         |        WHERE p.iter < 10 GROUP BY 1, 2) s)
-         |SELECT node, rank_fp FROM pr WHERE iter = 10 ORDER BY node""".stripMargin,
-    "st3_sessionize" ->
-      """WITH l AS (SELECT user_id, ts, event_id,
-        |  CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |       OR epoch(ts) - epoch(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-        |  THEN 1 ELSE 0 END AS new_s FROM events),
-        |s AS (SELECT user_id, ts,
-        |  sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
-        |  FROM l)
-        |SELECT user_id, min(ts) AS session_start, max(ts) AS session_end, count(*) AS n_events
-        |FROM s GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_start, session_end, n_events""".stripMargin,
-    "m7b_polygonize_cells" ->
-      """WITH px AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INTEGER) AS r, CAST(l_partkey % 16 AS INTEGER) AS c FROM lineitem)
-        |SELECT CAST(r * 16 + c AS BIGINT) AS seg_id, CAST(0 AS INTEGER) AS part,
-        |  'POLYGON ((' || CAST(c AS VARCHAR) || ' ' || CAST(r AS VARCHAR) || ', ' ||
-        |    CAST(c + 1 AS VARCHAR) || ' ' || CAST(r AS VARCHAR) || ', ' ||
-        |    CAST(c + 1 AS VARCHAR) || ' ' || CAST(r + 1 AS VARCHAR) || ', ' ||
-        |    CAST(c AS VARCHAR) || ' ' || CAST(r + 1 AS VARCHAR) || ', ' ||
-        |    CAST(c AS VARCHAR) || ' ' || CAST(r AS VARCHAR) || '))' AS wkt,
-        |  CAST(1 AS BIGINT) AS n_cells
-        |FROM px ORDER BY seg_id, part""".stripMargin,
-    "e10_fuzzy_dedup_keep" ->
-      s"""${sqlShingleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh FROM s),
-         |pairs AS (SELECT a, b FROM (
-         |  SELECT a, b, len(list_filter(xa.sh, t -> list_contains(xb.sh, t))) AS inter,
-         |    len(xa.sh) AS la, len(xb.sh) AS lb
-         |  FROM cand JOIN ss xa ON cand.a = xa.doc_id JOIN ss xb ON cand.b = xb.doc_id) t
-         |  WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5),
-         |und AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b AS x, a AS y FROM pairs),
-         |reach(x, y) AS (SELECT x, y FROM und
-         |  UNION SELECT r.x, u.y FROM reach r JOIN und u ON r.y = u.x),
-         |comp AS (SELECT x AS node, least(x, min(y)) AS component FROM reach GROUP BY x)
-         |SELECT doc_id, n_chars FROM documents
-         |WHERE doc_id NOT IN (SELECT node FROM comp WHERE component <> node)
-         |ORDER BY doc_id""".stripMargin,
-    "o3_topk_per_key" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3 ORDER BY o_custkey, o_orderkey""".stripMargin,
-    // pipe1 replays the composed curation pipeline stage by stage as CTEs;
-    // every arithmetic step (stop ratio, quality, bucket) is the identical
-    // IEEE double expression in the same order, so the quality filter
-    // and the bucket cuts agree bit-for-bit with the Spark plan.
-    "pipe1_curation" ->
-      s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-         |u AS (SELECT doc_id, text, toks, CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE) AS hits,
-         |  (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS lang_guess
-         |  FROM t),
-         |q AS (SELECT *, least(n_tokens / 100.0, 1.0) * 0.5 + least(hits / n_tokens * 4.0, 1.0) * 0.5 AS quality FROM u),
-         |kept AS (SELECT * FROM q WHERE quality >= 0.3),
-         |ded AS (SELECT doc_id, text, toks, n_tokens, lang_guess FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn FROM kept) WHERE rn = 1),
-         |dgrams AS (SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) < 3 THEN [text]
-         |  ELSE list_transform(generate_series(1, len(toks) - 2),
-         |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END)) AS gram FROM ded),
-         |egrams AS (SELECT DISTINCT unnest(CASE WHEN len(toks) < 3 THEN [text]
-         |  ELSE list_transform(generate_series(1, len(toks) - 2),
-         |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END) AS gram
-         |  FROM t WHERE doc_id % 97 = 0),
-         |bad AS (SELECT DISTINCT doc_id FROM dgrams JOIN egrams USING (gram)),
-         |clean AS (SELECT * FROM ded WHERE doc_id NOT IN (SELECT doc_id FROM bad)),
-         |sp AS (SELECT lang_guess, n_tokens,
-         |  ${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 4)} % 100 AS bucket FROM clean)
-         |SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split,
-         |  lang_guess, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM sp GROUP BY split, lang_guess ORDER BY split, lang_guess""".stripMargin,
-    "w5_lag_delta" ->
-      """SELECT user_id, event_id,
-        |  round(value - lag(value, 1) OVER w, 6) AS delta,
-        |  lead(event_type, 1) OVER w AS next_type
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    // closed forms of the rectangle the Spark side round-trips through WKT
-    "g1_wkt_measures" ->
-      """WITH b AS (SELECT o_orderkey, CAST(o_orderkey % 100 AS DOUBLE) AS x0,
-        |  CAST(o_custkey % 100 AS DOUBLE) AS y0,
-        |  CAST(o_orderkey % 7 + 1 AS DOUBLE) AS w, CAST(o_custkey % 5 + 1 AS DOUBLE) AS h
-        |  FROM orders)
-        |SELECT o_orderkey, round(w * h, 6) AS area, round(2 * (w + h), 6) AS perimeter,
-        |  round(x0 + w / 2, 6) AS cx, round(y0 + h / 2, 6) AS cy,
-        |  CAST(5 AS INTEGER) AS n_points
-        |FROM b ORDER BY o_orderkey""".stripMargin,
-    // g2/g3 replicate the affine key derivation arithmetically: master cell
-    // (r,c) center = (c+0.5, 15.5−r); under the 2×2 aux grid the containing
-    // cell is (floor((r+0.5)/2), floor((c+0.5)/2)) and the bilinear
-    // fractional offsets are exact quarters.
-    "g2_regrid_nearest" ->
-      """WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 8 AS INT) AS ar, CAST(p_size % 8 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac)
-        |SELECT m.px_row, m.px_col, a.dem FROM master m LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((m.px_row + 0.5) / 2) AS INT)
-        | AND a.ac = CAST(floor((m.px_col + 0.5) / 2) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin,
-    "g3_regrid_bilinear" ->
-      """WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 8 AS INT) AS ar, CAST(p_size % 8 AS INT) AS ac,
-        |    CAST(count(*) AS DOUBLE) AS nv FROM part GROUP BY ar, ac),
-        |t AS (SELECT px_row, px_col,
-        |    CAST(floor((px_row + 0.5) / 2 - 0.5) AS INT) AS r0,
-        |    CAST(floor((px_col + 0.5) / 2 - 0.5) AS INT) AS c0,
-        |    ((px_row + 0.5) / 2 - 0.5) - floor((px_row + 0.5) / 2 - 0.5) AS fy,
-        |    ((px_col + 0.5) / 2 - 0.5) - floor((px_col + 0.5) / 2 - 0.5) AS fx
-        |  FROM master),
-        |taps AS (SELECT px_row, px_col, r0 + dr.d AS ar, c0 + dc.d AS ac,
-        |    (CASE WHEN dc.d = 0 THEN 1 - fx ELSE fx END) *
-        |    (CASE WHEN dr.d = 0 THEN 1 - fy ELSE fy END) AS w
-        |  FROM t CROSS JOIN (VALUES (0), (1)) dr(d) CROSS JOIN (VALUES (0), (1)) dc(d))
-        |SELECT px_row, px_col,
-        |  sum(a.nv * w) / CASE WHEN sum(CASE WHEN a.nv IS NOT NULL THEN w END) > 0
-        |    THEN sum(CASE WHEN a.nv IS NOT NULL THEN w END) END AS nv
-        |FROM taps LEFT JOIN aux a ON a.ar = taps.ar AND a.ac = taps.ac
-        |GROUP BY px_row, px_col
-        |ORDER BY px_row, px_col, nv NULLS FIRST""".stripMargin,
-    // g4: same derivation as g3 with the 4×4 Catmull-Rom tap set.
-    "g4_regrid_cubic" ->
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-         |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-         |aux AS (SELECT CAST(p_partkey % 8 AS INT) AS ar, CAST(p_size % 8 AS INT) AS ac,
-         |    CAST(count(*) AS DOUBLE) AS nv FROM part GROUP BY ar, ac),
-         |t AS (SELECT px_row, px_col,
-         |    CAST(floor((px_row + 0.5) / 2 - 0.5) AS INT) AS r0,
-         |    CAST(floor((px_col + 0.5) / 2 - 0.5) AS INT) AS c0,
-         |    ((px_row + 0.5) / 2 - 0.5) - floor((px_row + 0.5) / 2 - 0.5) AS fy,
-         |    ((px_col + 0.5) / 2 - 0.5) - floor((px_col + 0.5) / 2 - 0.5) AS fx
-         |  FROM master),
-         |taps AS (SELECT px_row, px_col, r0 + dr.d AS ar, c0 + dc.d AS ac,
-         |    ${sqlCubW("abs(fy - dr.d)")} * ${sqlCubW("abs(fx - dc.d)")} AS w
-         |  FROM t CROSS JOIN (VALUES (-1), (0), (1), (2)) dr(d)
-         |         CROSS JOIN (VALUES (-1), (0), (1), (2)) dc(d))
-         |SELECT px_row, px_col,
-         |  sum(a.nv * w) / CASE WHEN sum(CASE WHEN a.nv IS NOT NULL THEN w END) > 0
-         |    THEN sum(CASE WHEN a.nv IS NOT NULL THEN w END) END AS nv
-         |FROM taps LEFT JOIN aux a ON a.ar = taps.ar AND a.ac = taps.ac
-         |GROUP BY px_row, px_col
-         |ORDER BY px_row, px_col, nv NULLS FIRST""".stripMargin,
-    // g5: projective reprojection — the oracle mirrors the engine's exact
-    // IEEE expression structure (dyadic coefficients, left-assoc sums,
-    // single quotient) so the derived keys are bit-identical; identity ops
-    // (+0.0, *1.0, /1.0) are elided, which never changes a double.
-    "g5_reproject" ->
-      """WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    CAST(px_col AS DOUBLE) + 0.5 AS cx,
-        |    16.0 - (CAST(px_row AS DOUBLE) + 0.5) AS cy FROM master),
-        |t AS (SELECT px_row, px_col,
-        |    (1.25 * cx + 0.25 * cy + 2.0) /
-        |      (0.0009765625 * cx + -0.00048828125 * cy + 1.0) AS sx,
-        |    (-0.125 * cx + 1.25 * cy + 2.0) /
-        |      (0.0009765625 * cx + -0.00048828125 * cy + 1.0) AS sy
-        |  FROM c)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor(24.0 - sy) AS INT) AND a.ac = CAST(floor(sx) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin,
-    // g6: the same Snyder inverse transverse-Mercator series the engine's
-    // GeographicFromUtm Column tree evaluates, with every derived constant
-    // interpolated from the same Scala source (round-trip-exact literals)
-    // and every arithmetic chain written with the same associativity — the
-    // fixture keeps mapped centers >=3e-5 cell-fractions from any aux
-    // boundary, so the int cell keys absorb last-ulp libm differences.
-    "g6_utm_reproject" -> {
-      import operators.Regrid.Utm
-      val am0 = Utm.A * Utm.M0
-      val ae = Utm.A * (1 - Utm.E2)
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    445000.0 + (CAST(px_col AS DOUBLE) + 0.5) * 100.0 AS cx,
-        |    5320000.0 - (CAST(px_row AS DOUBLE) + 0.5) * 100.0 AS cy FROM master),
-        |f1 AS (SELECT px_row, px_col, cx, (cy - 0.0) / ${Utm.K0} / $am0 AS mu FROM c),
-        |f2 AS (SELECT px_row, px_col, cx,
-        |    mu + ${Utm.P2} * sin(2.0 * mu) + ${Utm.P4} * sin(4.0 * mu)
-        |       + ${Utm.P6} * sin(6.0 * mu) + ${Utm.P8} * sin(8.0 * mu) AS phi1 FROM f1),
-        |f3 AS (SELECT px_row, px_col, cx, phi1,
-        |    ${Utm.Ep2} * cos(phi1) * cos(phi1) AS c1,
-        |    tan(phi1) * tan(phi1) AS t1,
-        |    1.0 - ${Utm.E2} * sin(phi1) * sin(phi1) AS om FROM f2),
-        |f4 AS (SELECT px_row, px_col, cx, phi1, c1, t1,
-        |    ${Utm.A} / sqrt(om) AS n1, $ae / (om * sqrt(om)) AS r1 FROM f3),
-        |f5 AS (SELECT px_row, px_col, phi1, c1, t1, n1, r1,
-        |    (cx - ${Utm.FalseEasting}) / (n1 * ${Utm.K0}) AS dd FROM f4),
-        |t AS (SELECT px_row, px_col,
-        |    (phi1 - (n1 * tan(phi1) / r1) * (dd * dd / 2.0
-        |      - (5.0 + 3.0 * t1 + 10.0 * c1 - 4.0 * c1 * c1 - ${9.0 * Utm.Ep2})
-        |        * dd * dd * dd * dd / 24.0
-        |      + (61.0 + 90.0 * t1 + 298.0 * c1 + 45.0 * t1 * t1 - ${252.0 * Utm.Ep2}
-        |         - 3.0 * c1 * c1) * dd * dd * dd * dd * dd * dd / 720.0))
-        |      / ${Utm.Deg2Rad} AS lat,
-        |    15.0 + (dd - (1.0 + 2.0 * t1 + c1) * dd * dd * dd / 6.0
-        |      + (5.0 - 2.0 * c1 + 28.0 * t1 - 3.0 * c1 * c1 + ${8.0 * Utm.Ep2}
-        |         + 24.0 * t1 * t1) * dd * dd * dd * dd * dd / 120.0) / cos(phi1)
-        |      / ${Utm.Deg2Rad} AS lon
-        |  FROM f5)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((48.032 - lat) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon - 14.26) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g7: the spherical Web-Mercator inverse evaluated as the identical
-    // closed form (same associativity, interpolated constants).
-    "g7_webmercator_reproject" -> {
-      import operators.Regrid.Utm
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 40 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 80 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    15550000.0 + (CAST(px_col AS DOUBLE) + 0.5) * 500.0 AS cx,
-        |    4260000.0 - (CAST(px_row AS DOUBLE) + 0.5) * 500.0 AS cy FROM master),
-        |t AS (SELECT px_row, px_col,
-        |    cx / ${Utm.A} / ${Utm.Deg2Rad} AS lon,
-        |    (2.0 * atan(exp(cy / ${Utm.A})) - ${math.Pi / 2.0}) / ${Utm.Deg2Rad} AS lat
-        |  FROM c)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((35.67 - lat) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon - 139.68) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g8: the ellipsoidal LCC inverse (Snyder 15-9..15-11 + the 3-5
-    // conformal-latitude series) evaluated as the identical closed form —
-    // every derived constant (n, aF, rho0, series coefficients) computed
-    // once in Scala and interpolated round-trip-exact into both engines.
-    "g8_lambert_reproject" -> {
-      import operators.Regrid.Utm
-      val p = operators.Regrid.LccParams(33.0, 45.0, 23.0, -96.0)
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    -17200.0 + (CAST(px_col AS DOUBLE) + 0.5) * 100.0 AS cx,
-        |    1800000.0 - (CAST(px_row AS DOUBLE) + 0.5) * 100.0 AS cy FROM master),
-        |f1 AS (SELECT px_row, px_col,
-        |    cx - 0.0 AS xp, ${p.rho0} - (cy - 0.0) AS yp FROM c),
-        |f2 AS (SELECT px_row, px_col, xp, yp,
-        |    pow(sqrt(xp * xp + yp * yp) / ${p.aF}, ${1.0 / p.n}) AS t FROM f1),
-        |f3 AS (SELECT px_row, px_col, xp, yp,
-        |    ${math.Pi / 2.0} - 2.0 * atan(t) AS chi FROM f2),
-        |t AS (SELECT px_row, px_col,
-        |    ${p.lon0Deg} + atan2(xp, yp) / ${p.n} / ${Utm.Deg2Rad} AS lon,
-        |    (chi + ${p.C2} * sin(2.0 * chi) + ${p.C4} * sin(4.0 * chi)
-        |         + ${p.C6} * sin(6.0 * chi) + ${p.C8} * sin(8.0 * chi))
-        |      / ${Utm.Deg2Rad} AS lat
-        |  FROM f3)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((39.12 - lat) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon - (-96.2)) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g9: the abridged Molodensky datum shift evaluated as the identical
-    // closed form; ellipsoid constants and the combined (a·Δf + f·Δa)
-    // term interpolated from the same Scala doubles.
-    "g9_datum_shift" -> {
-      import operators.Regrid.{Utm, Ellipsoid}
-      val (src, dst) = (Ellipsoid.Wgs84, Ellipsoid.Bessel1841)
-      val shiftC = src.a * (dst.f - src.f) + src.f * (dst.a - src.a)
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    139.68 + (CAST(px_col AS DOUBLE) + 0.5) * 0.001 AS cx,
-        |    35.68 - (CAST(px_row AS DOUBLE) + 0.5) * 0.0007 AS cy FROM master),
-        |f1 AS (SELECT px_row, px_col, cx, cy,
-        |    cy * ${Utm.Deg2Rad} AS phi, cx * ${Utm.Deg2Rad} AS lam FROM c),
-        |f2 AS (SELECT px_row, px_col, cx, cy, phi,
-        |    sin(phi) AS sp, cos(phi) AS cp, sin(lam) AS sl, cos(lam) AS cl,
-        |    1.0 - ${src.e2} * sin(phi) * sin(phi) AS w2 FROM f1),
-        |f3 AS (SELECT px_row, px_col, cx, cy, phi, sp, cp, sl, cl,
-        |    ${src.a * (1 - src.e2)} / (w2 * sqrt(w2)) AS m,
-        |    ${src.a} / sqrt(w2) AS n FROM f2),
-        |t AS (SELECT px_row, px_col,
-        |    cx + (((-146.414) * sl + (-507.337) * cl) / (n * cp)) / ${Utm.Deg2Rad} AS lon,
-        |    cy + (((-146.414) * sp * cl - (-507.337) * sp * sl + (-680.507) * cp
-        |           + $shiftC * sin(2.0 * phi)) / m) / ${Utm.Deg2Rad} AS lat
-        |  FROM f3)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((35.677 - lat) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon - 139.683) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g10: the Albers equal-area inverse (Snyder 14-8..14-11 + authalic
-    // series 3-18) as the identical closed form, constants interpolated.
-    "g10_albers_reproject" -> {
-      import operators.Regrid.Utm
-      val p = operators.Regrid.AeaParams(29.5, 45.5, 23.0, -96.0)
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    -138500.0 + (CAST(px_col AS DOUBLE) + 0.5) * 100.0 AS cx,
-        |    1703200.0 - (CAST(px_row AS DOUBLE) + 0.5) * 100.0 AS cy FROM master),
-        |f1 AS (SELECT px_row, px_col,
-        |    cx - 0.0 AS xp, ${p.rho0} - (cy - 0.0) AS yp FROM c),
-        |f2 AS (SELECT px_row, px_col, xp, yp,
-        |    sqrt(xp * xp + yp * yp) AS rho FROM f1),
-        |f3 AS (SELECT px_row, px_col, xp, yp,
-        |    asin(((${p.bigC} - rho * rho * ${p.n} * ${p.n} / ${p.a * p.a}) / ${p.n})
-        |      / ${p.qPole}) AS beta FROM f2),
-        |t AS (SELECT px_row, px_col,
-        |    ${p.lon0Deg} + atan2(xp, yp) / ${p.n} / ${Utm.Deg2Rad} AS lon,
-        |    (beta + ${p.B2} * sin(2.0 * beta) + ${p.B4} * sin(4.0 * beta)
-        |          + ${p.B6} * sin(6.0 * beta)) / ${Utm.Deg2Rad} AS lat
-        |  FROM f3)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((38.35 - lat) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon - (-97.6)) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g11: the WKT-dispatched chain — the SAME Snyder UTM inverse (zone
-    // 54) feeding the SAME abridged Molodensky as g6/g9, constants
-    // interpolated from the same Scala doubles; the .prj round trip and
-    // the CrsWkt parse are invisible in the hash (as they must be).
-    "g11_wkt_reproject" -> {
-      import operators.Regrid.{Utm, Ellipsoid}
-      val am0 = Utm.A * Utm.M0
-      val ae = Utm.A * (1 - Utm.E2)
-      val (src, dst) = (Ellipsoid.Wgs84, Ellipsoid.Bessel1841)
-      val shiftC = src.a * (dst.f - src.f) + src.f * (dst.a - src.a)
-      s"""WITH master AS (SELECT DISTINCT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col FROM lineitem),
-        |aux AS (SELECT CAST(p_partkey % 24 AS INT) AS ar,
-        |    CAST((p_partkey * 7 + p_size) % 26 AS INT) AS ac,
-        |    CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS dem
-        |  FROM part GROUP BY ar, ac),
-        |c AS (SELECT px_row, px_col,
-        |    381000.0 + (CAST(px_col AS DOUBLE) + 0.5) * 100.0 AS cx,
-        |    3950000.0 - (CAST(px_row AS DOUBLE) + 0.5) * 100.0 AS cy FROM master),
-        |f1 AS (SELECT px_row, px_col, cx, (cy - 0.0) / ${Utm.K0} / $am0 AS mu FROM c),
-        |f2 AS (SELECT px_row, px_col, cx,
-        |    mu + ${Utm.P2} * sin(2.0 * mu) + ${Utm.P4} * sin(4.0 * mu)
-        |       + ${Utm.P6} * sin(6.0 * mu) + ${Utm.P8} * sin(8.0 * mu) AS phi1 FROM f1),
-        |f3 AS (SELECT px_row, px_col, cx, phi1,
-        |    ${Utm.Ep2} * cos(phi1) * cos(phi1) AS c1,
-        |    tan(phi1) * tan(phi1) AS t1,
-        |    1.0 - ${Utm.E2} * sin(phi1) * sin(phi1) AS om FROM f2),
-        |f4 AS (SELECT px_row, px_col, cx, phi1, c1, t1,
-        |    ${Utm.A} / sqrt(om) AS n1, $ae / (om * sqrt(om)) AS r1 FROM f3),
-        |f5 AS (SELECT px_row, px_col, phi1, c1, t1, n1, r1,
-        |    (cx - ${Utm.FalseEasting}) / (n1 * ${Utm.K0}) AS dd FROM f4),
-        |t0 AS (SELECT px_row, px_col,
-        |    (phi1 - (n1 * tan(phi1) / r1) * (dd * dd / 2.0
-        |      - (5.0 + 3.0 * t1 + 10.0 * c1 - 4.0 * c1 * c1 - ${9.0 * Utm.Ep2})
-        |        * dd * dd * dd * dd / 24.0
-        |      + (61.0 + 90.0 * t1 + 298.0 * c1 + 45.0 * t1 * t1 - ${252.0 * Utm.Ep2}
-        |         - 3.0 * c1 * c1) * dd * dd * dd * dd * dd * dd / 720.0))
-        |      / ${Utm.Deg2Rad} AS lat,
-        |    141.0 + (dd - (1.0 + 2.0 * t1 + c1) * dd * dd * dd / 6.0
-        |      + (5.0 - 2.0 * c1 + 28.0 * t1 - 3.0 * c1 * c1 + ${8.0 * Utm.Ep2}
-        |         + 24.0 * t1 * t1) * dd * dd * dd * dd * dd / 120.0) / cos(phi1)
-        |      / ${Utm.Deg2Rad} AS lon
-        |  FROM f5),
-        |m1 AS (SELECT px_row, px_col, lon, lat,
-        |    lat * ${Utm.Deg2Rad} AS phi, lon * ${Utm.Deg2Rad} AS lam FROM t0),
-        |m2 AS (SELECT px_row, px_col, lon, lat, phi,
-        |    sin(phi) AS sp, cos(phi) AS cp, sin(lam) AS sl, cos(lam) AS cl,
-        |    1.0 - ${src.e2} * sin(phi) * sin(phi) AS w2 FROM m1),
-        |m3 AS (SELECT px_row, px_col, lon, lat, phi, sp, cp, sl, cl,
-        |    ${src.a * (1 - src.e2)} / (w2 * sqrt(w2)) AS m,
-        |    ${src.a} / sqrt(w2) AS n FROM m2),
-        |t AS (SELECT px_row, px_col,
-        |    lon + (((-146.414) * sl + (-507.337) * cl) / (n * cp)) / ${Utm.Deg2Rad} AS lon2,
-        |    lat + (((-146.414) * sp * cl - (-507.337) * sp * sl + (-680.507) * cp
-        |           + $shiftC * sin(2.0 * phi)) / m) / ${Utm.Deg2Rad} AS lat2
-        |  FROM m3)
-        |SELECT px_row, px_col, a.dem
-        |FROM t LEFT JOIN aux a
-        |  ON a.ar = CAST(floor((35.68493 - lat2) / 0.0007) AS INT)
-        | AND a.ac = CAST(floor((lon2 - 139.6895) / 0.001) AS INT)
-        |ORDER BY px_row, px_col, dem NULLS FIRST""".stripMargin
-    },
-    // g12: the identical C-D spherical-excess and haversine folds with
-    // interpolated R/Deg2Rad constants — 4 explicit left-assoc terms
-    // mirror the engine's sequence-fold order; fixed-point 2^20.
-    "g12_geodesic_measures" -> {
-      val rr2 = functions.SpatialOps.Wgs84AuthalicRadius *
-        functions.SpatialOps.Wgs84AuthalicRadius / 2.0
-      val r2 = 2.0 * functions.SpatialOps.Wgs84AuthalicRadius
-      val d2r = math.Pi / 180.0
-      def seg(xa: String, ya: String, xb: String, yb: String) =
-        s"($xb * $d2r - $xa * $d2r) * (2.0 + sin($ya * $d2r) + sin($yb * $d2r))"
-      def hav(xa: String, ya: String, xb: String, yb: String) =
-        s"$r2 * asin(sqrt(sin(($yb * $d2r - $ya * $d2r) / 2.0) * " +
-          s"sin(($yb * $d2r - $ya * $d2r) / 2.0) + cos($ya * $d2r) * cos($yb * $d2r) * " +
-          s"sin(($xb * $d2r - $xa * $d2r) / 2.0) * sin(($xb * $d2r - $xa * $d2r) / 2.0)))"
-      s"""WITH p AS (SELECT p_partkey AS pk,
-        |    -96.0 + CAST(p_partkey % 50 AS DOUBLE) * 0.01 AS lon0,
-        |    30.0 + CAST(p_size % 40 AS DOUBLE) * 0.01 AS lat0,
-        |    0.01 + CAST(p_partkey % 7 AS DOUBLE) * 0.001 AS dx,
-        |    0.008 + CAST(p_size % 5 AS DOUBLE) * 0.001 AS dy
-        |  FROM part),
-        |v AS (SELECT pk, lon0 AS x1, lat0 AS y1, lon0 + dx AS x2, lat0 AS y2,
-        |    lon0 + dx AS x3, lat0 + dy AS y3, lon0 AS x4, lat0 + dy AS y4 FROM p)
-        |SELECT pk,
-        |  CAST(floor(abs((((${seg("x1", "y1", "x2", "y2")})
-        |    + ${seg("x2", "y2", "x3", "y3")})
-        |    + ${seg("x3", "y3", "x4", "y4")})
-        |    + ${seg("x4", "y4", "x1", "y1")}) * $rr2 * 1048576.0) AS BIGINT) AS area_fp,
-        |  CAST(floor((((${hav("x1", "y1", "x2", "y2")}
-        |    + ${hav("x2", "y2", "x3", "y3")})
-        |    + ${hav("x3", "y3", "x4", "y4")})
-        |    + ${hav("x4", "y4", "x1", "y1")}) * 1048576.0) AS BIGINT) AS perim_fp
-        |FROM v ORDER BY pk""".stripMargin
-    },
-    // g13: the FORWARD Snyder transverse-Mercator series evaluated
-    // per-vertex as the identical closed form (interpolated constants,
-    // mirrored associativity); the WKT string round trip on the Spark
-    // side is lossless (shortest-round-trip doubles), so the vertex
-    // coordinates hash bit-identically.
-    "g13_vector_reproject" -> {
-      import operators.Regrid.Utm
-      s"""WITH p AS (SELECT p_partkey AS pk,
-        |    -96.0 + CAST(p_partkey % 50 AS DOUBLE) * 0.01 AS lon0,
-        |    30.0 + CAST(p_size % 40 AS DOUBLE) * 0.01 AS lat0,
-        |    0.01 + CAST(p_partkey % 7 AS DOUBLE) * 0.001 AS dx,
-        |    0.008 + CAST(p_size % 5 AS DOUBLE) * 0.001 AS dy
-        |  FROM part),
-        |v AS (SELECT pk, lon0 AS x1, lat0 AS y1, lon0 + dx AS x2, lat0 AS y2,
-        |    lon0 + dx AS x3, lat0 + dy AS y3, lon0 AS x4, lat0 + dy AS y4 FROM p),
-        |pts AS (SELECT pk, i.idx AS pt_idx,
-        |    CASE i.idx WHEN 0 THEN x1 WHEN 1 THEN x2 WHEN 2 THEN x3
-        |      WHEN 3 THEN x4 ELSE x1 END AS lon,
-        |    CASE i.idx WHEN 0 THEN y1 WHEN 1 THEN y2 WHEN 2 THEN y3
-        |      WHEN 3 THEN y4 ELSE y1 END AS lat
-        |  FROM v CROSS JOIN (VALUES (0), (1), (2), (3), (4)) i(idx)),
-        |f1 AS (SELECT pk, pt_idx, lat * ${Utm.Deg2Rad} AS phi,
-        |    (lon - (-93.0)) * ${Utm.Deg2Rad} AS dlam FROM pts),
-        |f2 AS (SELECT pk, pt_idx, phi, dlam,
-        |    sin(phi) AS sp, cos(phi) AS cp, tan(phi) AS tp FROM f1),
-        |f3 AS (SELECT pk, pt_idx, phi, tp,
-        |    ${Utm.A} / sqrt(1.0 - ${Utm.E2} * sp * sp) AS n,
-        |    tp * tp AS t, ${Utm.Ep2} * cp * cp AS c, dlam * cp AS aa,
-        |    ${Utm.A} * (${Utm.M0} * phi - ${Utm.M2} * sin(2.0 * phi)
-        |      + ${Utm.M4} * sin(4.0 * phi) - ${Utm.M6} * sin(6.0 * phi)) AS m
-        |  FROM f2)
-        |SELECT pk, pt_idx,
-        |  ${Utm.FalseEasting} + ${Utm.K0} * n * (aa
-        |    + (1.0 - t + c) * aa * aa * aa / 6.0
-        |    + (5.0 - 18.0 * t + t * t + 72.0 * c - ${58.0 * Utm.Ep2})
-        |      * aa * aa * aa * aa * aa / 120.0) AS x,
-        |  0.0 + ${Utm.K0} * (m + n * tp * (aa * aa / 2.0
-        |    + (5.0 - t + 9.0 * c + 4.0 * c * c) * aa * aa * aa * aa / 24.0
-        |    + (61.0 - 58.0 * t + t * t + 600.0 * c - ${330.0 * Utm.Ep2})
-        |      * aa * aa * aa * aa * aa * aa / 720.0)) AS y
-        |FROM f3 ORDER BY pk, pt_idx""".stripMargin
-    },
-    // g13b: g13's forward series on the two MULTIPOINT corners only
-    "g13b_multipoint_reproject" -> {
-      import operators.Regrid.Utm
-      s"""WITH p AS (SELECT p_partkey AS pk,
-        |    -96.0 + CAST(p_partkey % 50 AS DOUBLE) * 0.01 AS lon0,
-        |    30.0 + CAST(p_size % 40 AS DOUBLE) * 0.01 AS lat0,
-        |    0.01 + CAST(p_partkey % 7 AS DOUBLE) * 0.001 AS dx,
-        |    0.008 + CAST(p_size % 5 AS DOUBLE) * 0.001 AS dy
-        |  FROM part),
-        |pts AS (SELECT pk, i.idx AS pt_idx,
-        |    CASE i.idx WHEN 0 THEN lon0 ELSE lon0 + dx END AS lon,
-        |    CASE i.idx WHEN 0 THEN lat0 ELSE lat0 + dy END AS lat
-        |  FROM p CROSS JOIN (VALUES (0), (1)) i(idx)),
-        |f1 AS (SELECT pk, pt_idx, lat * ${Utm.Deg2Rad} AS phi,
-        |    (lon - (-93.0)) * ${Utm.Deg2Rad} AS dlam FROM pts),
-        |f2 AS (SELECT pk, pt_idx, phi, dlam,
-        |    sin(phi) AS sp, cos(phi) AS cp, tan(phi) AS tp FROM f1),
-        |f3 AS (SELECT pk, pt_idx, phi, tp,
-        |    ${Utm.A} / sqrt(1.0 - ${Utm.E2} * sp * sp) AS n,
-        |    tp * tp AS t, ${Utm.Ep2} * cp * cp AS c, dlam * cp AS aa,
-        |    ${Utm.A} * (${Utm.M0} * phi - ${Utm.M2} * sin(2.0 * phi)
-        |      + ${Utm.M4} * sin(4.0 * phi) - ${Utm.M6} * sin(6.0 * phi)) AS m
-        |  FROM f2)
-        |SELECT pk, pt_idx,
-        |  ${Utm.FalseEasting} + ${Utm.K0} * n * (aa
-        |    + (1.0 - t + c) * aa * aa * aa / 6.0
-        |    + (5.0 - 18.0 * t + t * t + 72.0 * c - ${58.0 * Utm.Ep2})
-        |      * aa * aa * aa * aa * aa / 120.0) AS x,
-        |  0.0 + ${Utm.K0} * (m + n * tp * (aa * aa / 2.0
-        |    + (5.0 - t + 9.0 * c + 4.0 * c * c) * aa * aa * aa * aa / 24.0
-        |    + (61.0 - 58.0 * t + t * t + 600.0 * c - ${330.0 * Utm.Ep2})
-        |      * aa * aa * aa * aa * aa * aa / 720.0)) AS y
-        |FROM f3 ORDER BY pk, pt_idx""".stripMargin
-    },
-    // g15: the Snyder LCC forward series with the metre-scaled constants
-    // interpolated from the SAME LccParams arithmetic the CRS dispatch
-    // builds, then the exact affine (1/u) unit wrap — mirrored term by
-    // term including the 0.0-coefficient cross terms
-    "g15_stateplane_ftus" -> {
-      import operators.Regrid.{Ellipsoid, LccParams, Utm}
-      val u = G15UsFoot
-      val grs80 = Ellipsoid(6378137.0, 298.257222101)
-      val p = LccParams(31.88333333333333, 30.11666666666667, 29.66666666666667,
-        -100.3333333333333, 2296583.333333333 * u, 9842500.0 * u, grs80.a, grs80.e2)
-      val invU = 1.0 / u
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    -101.5 + CAST(p_partkey % 80 AS DOUBLE) * 0.025 AS lon,
-        |    29.0 + CAST(p_size % 50 AS DOUBLE) * 0.06 AS lat
-        |  FROM part),
-        |f1 AS (SELECT pk, lon, lat * ${Utm.Deg2Rad} AS phi FROM pts),
-        |f2 AS (SELECT pk, lon, phi, ${p.e} * sin(phi) AS esin FROM f1),
-        |f3 AS (SELECT pk, lon,
-        |    tan(${math.Pi / 4.0} - phi / 2.0)
-        |      / pow((1.0 - esin) / (1.0 + esin), ${p.e / 2.0}) AS t FROM f2),
-        |f4 AS (SELECT pk, lon, ${p.aF} * pow(t, ${p.n}) AS rho FROM f3),
-        |f5 AS (SELECT pk, rho,
-        |    (${p.n} * (lon - (${p.lon0Deg}))) * ${Utm.Deg2Rad} AS theta FROM f4),
-        |m AS (SELECT pk,
-        |    ${p.falseEasting} + rho * sin(theta) AS xm,
-        |    (${p.falseNorthing} + ${p.rho0}) - rho * cos(theta) AS ym FROM f5)
-        |SELECT pk,
-        |  CAST(floor(((($invU * xm) + (0.0 * ym)) + 0.0) * 64.0) AS BIGINT) AS x_fp,
-        |  CAST(floor(((0.0 * xm) + ($invU * ym) + 0.0) * 64.0) AS BIGINT) AS y_fp
-        |FROM m ORDER BY pk""".stripMargin
-    },
-    // s20: the census from the SOURCE pixel definition — the oracle never
-    // sees a TIFF byte; pack → LZW-BigTIFF encode → per-scene files →
-    // decode must be invisible
-    "s20_geotiff_sink" ->
-      """WITH px AS (SELECT
-        |    'sc' || CAST(p_partkey % 3 AS VARCHAR) AS scene,
-        |    CAST(CAST(floor(p_partkey / 3.0) AS INT) % 2 AS INT) AS band,
-        |    CAST(floor(p_partkey / 6.0) AS INT) // 64 AS px_row,
-        |    CAST(floor(p_partkey / 6.0) AS INT) % 64 AS px_col,
-        |    p_partkey % 997 AS value
-        |  FROM part)
-        |SELECT scene, band, count(*) AS n_px,
-        |  CAST(sum(CAST(value AS BIGINT)) AS BIGINT) AS sum_v,
-        |  CAST(sum(CAST(px_row * 131 + px_col AS BIGINT)) AS BIGINT) AS coord_sum
-        |FROM px GROUP BY scene, band ORDER BY scene, band""".stripMargin,
-    // s21: both censuses regenerate from the member generators — the tar
-    // container (headers, checksums, padding) never reaches the oracle.
-    // Shard 1: 5 samples, shard 2: 7; each PNG is 6x4x3 = 72 values of
-    // (sh*7 + i*13 + r*31 + c*7 + ch*11) % 256; each TXT is
-    // 11 + (i*11 + sh) % 40 bytes.
-    "s21_webdataset_shards" ->
-      """WITH png AS (
-        |  SELECT 1 AS shard_id, id FROM range(360) t(id)
-        |  UNION ALL SELECT 2, id FROM range(504) t(id)),
-        |px AS (SELECT shard_id,
-        |    (shard_id * 7 + (id // 72) * 13 + ((id % 72) // 18) * 31
-        |      + (((id % 72) % 18) // 3) * 7 + (id % 3) * 11) % 256 AS v
-        |  FROM png),
-        |txt AS (
-        |  SELECT 1 AS shard_id, id FROM range(5) t(id)
-        |  UNION ALL SELECT 2, id FROM range(7) t(id))
-        |SELECT shard_id, 'png' AS kind, count(*) AS n,
-        |  CAST(sum(CAST(v AS BIGINT)) AS BIGINT) AS total
-        |FROM px GROUP BY shard_id
-        |UNION ALL
-        |SELECT shard_id, 'txt', count(*),
-        |  CAST(sum(CAST(11 + (id * 11 + shard_id) % 40 AS BIGINT)) AS BIGINT)
-        |FROM txt GROUP BY shard_id
-        |ORDER BY shard_id, kind""".stripMargin,
-    // s23: both member texts regenerate from their definitions — the zip
-    // container (local headers, central directory, deflate streams, CRCs)
-    // never reaches the oracle. Shard 1: 6 samples, shard 2: 9; each
-    // sample has one deflated .txt and one stored .json member; the
-    // ascii_sum column is a full per-character checksum of every decoded
-    // payload, proving exact content through BOTH methods. Shard 3 (r11)
-    // carries the same formula through the ZIP64 layout — identical
-    // regeneration, the 64-bit directory is invisible.
-    "s23_zip_shards" ->
-      """WITH samp AS (
-        |  SELECT 1 AS shard_id, CAST(id AS INT) AS i FROM range(6) t(id)
-        |  UNION ALL SELECT 2, CAST(id AS INT) FROM range(9) t(id)
-        |  UNION ALL SELECT 3, CAST(id AS INT) FROM range(7) t(id)),
-        |m AS (
-        |  SELECT shard_id, 'txt' AS ext,
-        |    'zip sample ' || CAST(shard_id AS VARCHAR) || '-' || CAST(i AS VARCHAR)
-        |      || ' ' || repeat('y', (i * 13 + shard_id * 3) % 50) AS s
-        |  FROM samp
-        |  UNION ALL
-        |  SELECT shard_id, 'json',
-        |    '{"id":' || CAST(i AS VARCHAR) || ',"shard":' || CAST(shard_id AS VARCHAR)
-        |      || ',"pad":"' || repeat('z', (i * 7 + shard_id) % 30) || '"}'
-        |  FROM samp)
-        |SELECT shard_id, ext, count(*) AS n,
-        |  CAST(sum(length(s)) AS BIGINT) AS sum_len,
-        |  CAST(sum(list_sum(list_transform(generate_series(1, length(s)),
-        |    i -> ascii(substr(s, i, 1))))) AS BIGINT) AS ascii_sum
-        |FROM m GROUP BY shard_id, ext ORDER BY shard_id, ext""".stripMargin,
-    // s24: every tensor element regenerated from the source definition —
-    // npy headers, the zip central directory, and deflate streams never
-    // reach the oracle. Element order inside each tensor is ascending
-    // p_partkey (the build sorts before encoding), so ROW_NUMBER mirrors
-    // elem_idx; float tensors hold exact multiples of 1/8, making
-    // floor(v*64) engine-deterministic (the g15/g16 fixed-point rule).
-    "s24_npz_tensors" ->
-      """WITH t AS (SELECT p_partkey AS pk, CAST(p_partkey % 6 AS INT) AS tid FROM part),
-        |o AS (SELECT tid, pk,
-        |    ROW_NUMBER() OVER (PARTITION BY tid ORDER BY pk) - 1 AS idx FROM t),
-        |v AS (SELECT tid, idx,
-        |    CASE tid
-        |      WHEN 0 THEN CAST(floor(CAST(pk % 9973 AS DOUBLE) * 0.25 * 64) AS BIGINT)
-        |      WHEN 1 THEN CAST(floor(CAST(pk % 9973 AS DOUBLE) * 0.125 * 64) AS BIGINT)
-        |      WHEN 2 THEN pk % 32768 - 16384
-        |      WHEN 3 THEN pk % 1000003
-        |      WHEN 4 THEN (pk % 9973) * 1000000007
-        |      ELSE pk % 256 END AS vfp
-        |  FROM o),
-        |-- t6 (r11): t2's values through the fortran-order v2 spelling,
-        |-- even-truncated to a (2, m/2) shape — decode surfaces C order,
-        |-- so idx/value regeneration is IDENTICAL to t2's prefix
-        |v6 AS (SELECT 6 AS tid, idx, vfp FROM (
-        |    SELECT idx, vfp, COUNT(*) OVER () AS cnt FROM v WHERE tid = 2) z
-        |  WHERE idx < 2 * (cnt // 2)),
-        |allv AS (SELECT * FROM v UNION ALL SELECT * FROM v6)
-        |SELECT CAST(CASE WHEN tid = 6 THEN 0 ELSE tid % 2 END AS INT) AS shard_id,
-        |  't' || CAST(tid AS VARCHAR) AS tensor,
-        |  CASE tid WHEN 0 THEN '<f4' WHEN 1 THEN '<f8' WHEN 2 THEN '<i2'
-        |    WHEN 3 THEN '<i4' WHEN 4 THEN '<i8' WHEN 6 THEN '<i2'
-        |    ELSE '|u1' END AS dtype,
-        |  count(*) AS n, CAST(sum(vfp) AS BIGINT) AS sum_fp,
-        |  CAST(sum(((idx + 1) * vfp) % 1000000007) AS BIGINT) AS ord_fp
-        |FROM allv GROUP BY tid ORDER BY tensor""".stripMargin,
-    // s22: every vertex regenerated from the source definition — the
-    // GeoParquet container (WKB encode, geo footer, decode) never reaches
-    // the oracle; coordinates are binary-exact 1/64-grid doubles
-    "s22_geoparquet_roundtrip" ->
-      """WITH p AS (SELECT p_partkey AS pk, CAST(p_partkey % 3 AS INT) AS kind,
-        |    CAST(p_partkey % 50 AS DOUBLE) * 1.5 + 0.25 AS x,
-        |    CAST(p_size % 40 AS DOUBLE) * 0.75 + 0.125 AS y,
-        |    p_partkey % 997 AS attr
-        |  FROM part),
-        |pts AS (SELECT pk, attr, i.idx AS pt_idx,
-        |    CASE WHEN kind = 0 THEN x
-        |         WHEN kind = 1 THEN CASE i.idx WHEN 0 THEN x ELSE x + 2.0 END
-        |         ELSE CASE i.idx WHEN 1 THEN x + 2.5 WHEN 2 THEN x + 2.5 ELSE x END
-        |    END AS px,
-        |    CASE WHEN kind = 0 THEN y
-        |         WHEN kind = 1 THEN CASE i.idx WHEN 0 THEN y ELSE y + 1.5 END
-        |         ELSE CASE i.idx WHEN 2 THEN y + 1.25 WHEN 3 THEN y + 1.25 ELSE y END
-        |    END AS py
-        |  FROM p CROSS JOIN (VALUES (0), (1), (2), (3), (4)) i(idx)
-        |  WHERE (kind = 0 AND i.idx < 1) OR (kind = 1 AND i.idx < 2) OR kind = 2)
-        |SELECT s.store, pk, attr, pt_idx,
-        |  CAST(floor(px * 64.0) AS BIGINT) AS x_fp,
-        |  CAST(floor(py * 64.0) AS BIGINT) AS y_fp
-        |FROM pts CROSS JOIN (VALUES (1), (2)) s(store)
-        |ORDER BY s.store, pk, pt_idx""".stripMargin,
-    // s22b: the same closed form, single store — the EPSG-shorthand
-    // footer equality is REQUIREd inside the query (a mismatched or
-    // null footer CRS kills every row, not just a side channel)
-    "s22b_geoparquet_epsg" ->
-      """WITH p AS (SELECT p_partkey AS pk, CAST(p_partkey % 3 AS INT) AS kind,
-        |    CAST(p_partkey % 50 AS DOUBLE) * 1.5 + 0.25 AS x,
-        |    CAST(p_size % 40 AS DOUBLE) * 0.75 + 0.125 AS y,
-        |    p_partkey % 997 AS attr
-        |  FROM part),
-        |pts AS (SELECT pk, attr, i.idx AS pt_idx,
-        |    CASE WHEN kind = 0 THEN x
-        |         WHEN kind = 1 THEN CASE i.idx WHEN 0 THEN x ELSE x + 2.0 END
-        |         ELSE CASE i.idx WHEN 1 THEN x + 2.5 WHEN 2 THEN x + 2.5 ELSE x END
-        |    END AS px,
-        |    CASE WHEN kind = 0 THEN y
-        |         WHEN kind = 1 THEN CASE i.idx WHEN 0 THEN y ELSE y + 1.5 END
-        |         ELSE CASE i.idx WHEN 2 THEN y + 1.25 WHEN 3 THEN y + 1.25 ELSE y END
-        |    END AS py
-        |  FROM p CROSS JOIN (VALUES (0), (1), (2), (3), (4)) i(idx)
-        |  WHERE (kind = 0 AND i.idx < 1) OR (kind = 1 AND i.idx < 2) OR kind = 2)
-        |SELECT 1 AS store, pk, attr, pt_idx,
-        |  CAST(floor(px * 64.0) AS BIGINT) AS x_fp,
-        |  CAST(floor(py * 64.0) AS BIGINT) AS y_fp
-        |FROM pts
-        |ORDER BY pk, pt_idx""".stripMargin,
-    // g21: every member regenerated from the kind formulas — the
-    // collection framing (lookahead member split, EMPTY handling, flat
-    // explode) must be invisible; all coordinates dyadic, ×64 exact
-    "g21_geometrycollection" ->
-      """WITH p AS (SELECT p_partkey AS pk, CAST(p_partkey % 5 AS INT) AS kind,
-        |    CAST(p_partkey % 50 AS DOUBLE) * 1.5 + 0.25 AS x,
-        |    CAST(p_size % 40 AS DOUBLE) * 0.75 + 0.125 AS y FROM part),
-        |m AS (
-        |  SELECT pk, kind, 0 AS member_idx, 'POINT' AS mtype, 1 AS n_pts,
-        |      x AS xmin, y AS ymax FROM p WHERE kind = 0
-        |  UNION ALL SELECT pk, kind, 0, 'LINESTRING', 2, x, y + 1.5 FROM p WHERE kind = 1
-        |  UNION ALL SELECT pk, kind, 0, 'POINT', 1, x, y FROM p WHERE kind = 2
-        |  UNION ALL SELECT pk, kind, 1, 'LINESTRING', 2, x + 1.0, y + 0.5 FROM p WHERE kind = 2
-        |  UNION ALL SELECT pk, kind, 0, 'POLYGON', 4, x, y + 1.0 FROM p WHERE kind = 3
-        |  UNION ALL SELECT pk, kind, 1, 'POINT', 1, x + 5.0, y + 2.0 FROM p WHERE kind = 3
-        |  UNION ALL SELECT pk, kind, 2, 'MULTIPOINT', 2, x + 6.0, y + 0.25 FROM p WHERE kind = 3
-        |  UNION ALL SELECT pk, kind, -1, 'EMPTY', 0, NULL, NULL FROM p WHERE kind = 4)
-        |SELECT pk, kind, CAST(member_idx AS INT) AS member_idx, mtype,
-        |  CAST(n_pts AS BIGINT) AS n_pts,
-        |  CAST(coalesce(floor(xmin * 64.0), 0) AS BIGINT) AS xmin_fp,
-        |  CAST(coalesce(floor(ymax * 64.0), 0) AS BIGINT) AS ymax_fp
-        |FROM m ORDER BY pk, member_idx""".stripMargin,
-    // g22: the nested twin — every LEAF regenerated from the kind
-    // formulas; the depth walk (GC-in-GC split, depth-3 chain, nested
-    // EMPTY shifting later siblings' indices) must be invisible
-    "g22_nested_collection" ->
-      """WITH p AS (SELECT p_partkey AS pk, CAST(p_partkey % 5 AS INT) AS kind,
-        |    CAST(p_partkey % 50 AS DOUBLE) * 1.5 + 0.25 AS x,
-        |    CAST(p_size % 40 AS DOUBLE) * 0.75 + 0.125 AS y FROM part),
-        |m AS (
-        |  SELECT pk, kind, 0 AS member_idx, 'POINT' AS mtype, 1 AS n_pts,
-        |      x AS xmin, y AS ymax FROM p WHERE kind = 0
-        |  UNION ALL SELECT pk, kind, 0, 'POINT', 1, x, y FROM p WHERE kind = 1
-        |  UNION ALL SELECT pk, kind, 1, 'LINESTRING', 2, x + 1.0, y + 0.5 FROM p WHERE kind = 1
-        |  UNION ALL SELECT pk, kind, 2, 'POINT', 1, x + 4.0, y + 2.0 FROM p WHERE kind = 1
-        |  UNION ALL SELECT pk, kind, 0, 'POLYGON', 4, x, y + 1.0 FROM p WHERE kind = 2
-        |  UNION ALL SELECT pk, kind, 0, 'POINT', 1, x, y FROM p WHERE kind = 3
-        |  UNION ALL SELECT pk, kind, 1, 'MULTIPOINT', 2, x + 6.0, y + 0.25 FROM p WHERE kind = 3
-        |  UNION ALL SELECT pk, kind, -1, 'EMPTY', 0, NULL, NULL FROM p WHERE kind = 4)
-        |SELECT pk, kind, CAST(member_idx AS INT) AS member_idx, mtype,
-        |  CAST(n_pts AS BIGINT) AS n_pts,
-        |  CAST(coalesce(floor(xmin * 64.0), 0) AS BIGINT) AS xmin_fp,
-        |  CAST(coalesce(floor(ymax * 64.0), 0) AS BIGINT) AS ymax_fp
-        |FROM m ORDER BY pk, member_idx""".stripMargin,
-    // g19: the full GK-inverse → geocentric Helmert → Bowring chain
-    // mirrored stage-by-stage (the CTE staging = the spark barrier
-    // staging, bit-preserving per the g11 precedent); every Helmert
-    // matrix coefficient and Bowring constant interpolated from the SAME
-    // Scala arithmetic the dispatch builds
-    "g19_helmert_7param" -> {
-      import operators.Regrid.{Ellipsoid, HelmertDatumShift, TmParams, Utm}
-      val p = TmParams(12.0, 0.0, 1.0, 4500000.0, 0.0,
-        Ellipsoid.Bessel1841.a, Ellipsoid.Bessel1841.e2)
-      val (dx, dy, dz, rx, ry, rz, ds) = G19Params
-      val h = HelmertDatumShift(dx, dy, dz, rx, ry, rz, ds,
-        Ellipsoid.Bessel1841, Ellipsoid.Wgs84)
-      val src = Ellipsoid.Bessel1841; val dst = Ellipsoid.Wgs84
-      val b = dst.a * (1 - dst.f)
-      val ep2 = dst.e2 / (1 - dst.e2)
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    4420000.0 + CAST(p_partkey % 60 AS DOUBLE) * 2963.0 AS gx,
-        |    5240000.0 + CAST(p_size % 45 AS DOUBLE) * 4231.0 AS gy
-        |  FROM part),
-        |i1 AS (SELECT pk, gx,
-        |    ((gy - ${p.falseNorthing}) / ${p.k0} + ${p.m0Arc}) / ${p.a * p.m0c} AS mu
-        |  FROM pts),
-        |i2 AS (SELECT pk, gx, mu + ${p.p2} * sin(2.0 * mu) + ${p.p4} * sin(4.0 * mu)
-        |     + ${p.p6} * sin(6.0 * mu) + ${p.p8} * sin(8.0 * mu) AS phi1 FROM i1),
-        |i3 AS (SELECT pk, gx, phi1, ${p.ep2} * cos(phi1) * cos(phi1) AS c1,
-        |    tan(phi1) * tan(phi1) AS t1,
-        |    1.0 - ${p.e2} * sin(phi1) * sin(phi1) AS om FROM i2),
-        |i4 AS (SELECT pk, gx, phi1, c1, t1,
-        |    ${p.a} / sqrt(om) AS n1, ${p.a * (1 - p.e2)} / (om * sqrt(om)) AS r1
-        |  FROM i3),
-        |i5 AS (SELECT pk, phi1, c1, t1, n1, r1,
-        |    (gx - ${p.falseEasting}) / (n1 * ${p.k0}) AS dd FROM i4),
-        |geo AS (SELECT pk,
-        |    ${p.lon0Deg} + (dd - (1.0 + 2.0 * t1 + c1) * dd * dd * dd / 6.0
-        |      + (5.0 - 2.0 * c1 + 28.0 * t1 - 3.0 * c1 * c1 + ${8.0 * p.ep2}
-        |         + 24.0 * t1 * t1) * dd * dd * dd * dd * dd / 120.0) / cos(phi1)
-        |      / ${Utm.Deg2Rad} AS lon,
-        |    (phi1 - (n1 * tan(phi1) / r1) * (dd * dd / 2.0
-        |      - (5.0 + 3.0 * t1 + 10.0 * c1 - 4.0 * c1 * c1 - ${9.0 * p.ep2})
-        |        * dd * dd * dd * dd / 24.0
-        |      + (61.0 + 90.0 * t1 + 298.0 * c1 + 45.0 * t1 * t1 - ${252.0 * p.ep2}
-        |         - 3.0 * c1 * c1) * dd * dd * dd * dd * dd * dd / 720.0))
-        |      / ${Utm.Deg2Rad} AS lat
-        |  FROM i5),
-        |h1 AS (SELECT pk, lat * ${Utm.Deg2Rad} AS phi, lon * ${Utm.Deg2Rad} AS lam
-        |  FROM geo),
-        |h2 AS (SELECT pk, sin(phi) AS sp, cos(phi) AS cp,
-        |    sin(lam) AS sl, cos(lam) AS cl FROM h1),
-        |h3 AS (SELECT pk, sp, cp, sl, cl,
-        |    ${src.a} / sqrt(1.0 - ${src.e2} * sp * sp) AS n FROM h2),
-        |h4 AS (SELECT pk, n * cp * cl AS x, n * cp * sl AS y,
-        |    n * ${1.0 - src.e2} * sp AS z FROM h3),
-        |h5 AS (SELECT pk,
-        |    ${h.tx} + ${h.m00} * x + ${h.m01} * y + ${h.m02} * z AS xp,
-        |    ${h.ty} + ${h.m10} * x + ${h.m11} * y + ${h.m12} * z AS yp,
-        |    ${h.tz} + ${h.m20} * x + ${h.m21} * y + ${h.m22} * z AS zp FROM h4),
-        |h6 AS (SELECT pk, xp, yp, zp, sqrt(xp * xp + yp * yp) AS pr FROM h5),
-        |h7 AS (SELECT pk, xp, yp, zp, pr,
-        |    atan2(zp * ${dst.a}, pr * $b) AS theta FROM h6),
-        |h8 AS (SELECT pk, xp, yp, zp, pr, sin(theta) AS st, cos(theta) AS ct
-        |  FROM h7),
-        |o AS (SELECT pk,
-        |    atan2(yp, xp) / ${Utm.Deg2Rad} AS lon2,
-        |    atan2(zp + ${ep2 * b} * st * st * st,
-        |          pr - ${dst.e2 * dst.a} * ct * ct * ct) / ${Utm.Deg2Rad} AS lat2
-        |  FROM h8)
-        |SELECT pk,
-        |  CAST(floor(lon2 * 1048576.0) AS BIGINT) AS lon_fp,
-        |  CAST(floor(lat2 * 1048576.0) AS BIGINT) AS lat_fp
-        |FROM o ORDER BY pk""".stripMargin
-    },
-    // g18: both series mirrored in one chain (phi/dlam/t/aa shared —
-    // both CRSs use central meridian 9); per-ellipsoid n/c/m constants
-    // and the interpolated -M(phi0) term
-    "g18_gauss_kruger" -> {
-      import operators.Regrid.{Ellipsoid, TmParams, Utm}
-      val p1 = TmParams(9.0, 0.0, 1.0, 3500000.0, 0.0,
-        Ellipsoid.Bessel1841.a, Ellipsoid.Bessel1841.e2)
-      val p2 = TmParams(9.0, 48.0, 1.0, 250000.0, 100000.0)
-      def xy(p: TmParams, n: String, c: String, m: String, xa: String, ya: String) =
-        s"""  CAST(floor((${p.falseEasting} + ${p.k0} * $n * (aa
-           |    + (1.0 - t + $c) * aa * aa * aa / 6.0
-           |    + (5.0 - 18.0 * t + t * t + 72.0 * $c - ${58.0 * p.ep2})
-           |      * aa * aa * aa * aa * aa / 120.0)) * 64.0) AS BIGINT) AS $xa,
-           |  CAST(floor((${p.falseNorthing} + ${p.k0} * (($m - ${p.m0Arc}) + $n * tp * (aa * aa / 2.0
-           |    + (5.0 - t + 9.0 * $c + 4.0 * $c * $c) * aa * aa * aa * aa / 24.0
-           |    + (61.0 - 58.0 * t + t * t + 600.0 * $c - ${330.0 * p.ep2})
-           |      * aa * aa * aa * aa * aa * aa / 720.0))) * 64.0) AS BIGINT) AS $ya""".stripMargin
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    7.217 + CAST(p_partkey % 60 AS DOUBLE) * 0.06 AS lon,
-        |    47.303 + CAST(p_size % 45 AS DOUBLE) * 0.08 AS lat
-        |  FROM part),
-        |f1 AS (SELECT pk, lat * ${Utm.Deg2Rad} AS phi,
-        |    (lon - (9.0)) * ${Utm.Deg2Rad} AS dlam FROM pts),
-        |f2 AS (SELECT pk, phi, dlam,
-        |    sin(phi) AS sp, cos(phi) AS cp, tan(phi) AS tp FROM f1),
-        |f3 AS (SELECT pk, phi, tp, tp * tp AS t, dlam * cp AS aa,
-        |    ${p1.a} / sqrt(1.0 - ${p1.e2} * sp * sp) AS n1,
-        |    ${p1.ep2} * cp * cp AS c1,
-        |    ${p1.a} * (${p1.m0c} * phi - ${p1.m2c} * sin(2.0 * phi)
-        |      + ${p1.m4c} * sin(4.0 * phi) - ${p1.m6c} * sin(6.0 * phi)) AS m1,
-        |    ${p2.a} / sqrt(1.0 - ${p2.e2} * sp * sp) AS n2,
-        |    ${p2.ep2} * cp * cp AS c2,
-        |    ${p2.a} * (${p2.m0c} * phi - ${p2.m2c} * sin(2.0 * phi)
-        |      + ${p2.m4c} * sin(4.0 * phi) - ${p2.m6c} * sin(6.0 * phi)) AS m2
-        |  FROM f2)
-        |SELECT pk,
-        |${xy(p1, "n1", "c1", "m1", "gk_x", "gk_y")},
-        |${xy(p2, "n2", "c2", "m2", "o_x", "o_y")}
-        |FROM f3 ORDER BY pk""".stripMargin
-    },
-    // g17: the Snyder TM forward with TmParams' GRS80 constants
-    // interpolated from the same Scala arithmetic, mirrored term by term
-    // (incl. the exact (m - 0.0) origin-offset spelling)
-    "g17_nad83_utm" -> {
-      import operators.Regrid.{Ellipsoid, TmParams, Utm}
-      val grs80 = Ellipsoid(6378137.0, 298.257222101)
-      val p = TmParams(-93.0, a = grs80.a, e2 = grs80.e2)
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    -96.0 + CAST(p_partkey % 50 AS DOUBLE) * 0.02 AS lon,
-        |    38.0 + CAST(p_size % 40 AS DOUBLE) * 0.05 AS lat
-        |  FROM part),
-        |f1 AS (SELECT pk, lat * ${Utm.Deg2Rad} AS phi,
-        |    (lon - (${p.lon0Deg})) * ${Utm.Deg2Rad} AS dlam FROM pts),
-        |f2 AS (SELECT pk, phi, dlam,
-        |    sin(phi) AS sp, cos(phi) AS cp, tan(phi) AS tp FROM f1),
-        |f3 AS (SELECT pk, phi, tp,
-        |    ${p.a} / sqrt(1.0 - ${p.e2} * sp * sp) AS n,
-        |    tp * tp AS t, ${p.ep2} * cp * cp AS c, dlam * cp AS aa,
-        |    ${p.a} * (${p.m0c} * phi - ${p.m2c} * sin(2.0 * phi)
-        |      + ${p.m4c} * sin(4.0 * phi) - ${p.m6c} * sin(6.0 * phi)) AS m
-        |  FROM f2)
-        |SELECT pk,
-        |  ${p.falseEasting} + ${p.k0} * n * (aa
-        |    + (1.0 - t + c) * aa * aa * aa / 6.0
-        |    + (5.0 - 18.0 * t + t * t + 72.0 * c - ${58.0 * p.ep2})
-        |      * aa * aa * aa * aa * aa / 120.0) AS x,
-        |  ${p.falseNorthing} + ${p.k0} * ((m - ${p.m0Arc}) + n * tp * (aa * aa / 2.0
-        |    + (5.0 - t + 9.0 * c + 4.0 * c * c) * aa * aa * aa * aa / 24.0
-        |    + (61.0 - 58.0 * t + t * t + 600.0 * c - ${330.0 * p.ep2})
-        |      * aa * aa * aa * aa * aa * aa / 720.0)) AS y
-        |FROM f3 ORDER BY pk""".stripMargin
-    },
-    // g20: the identical Snyder kernel as g16 with the VARIANT-A rho
-    // constant (2·a·k0/√((1+e)^(1+e)(1−e)^(1−e)), Snyder 21-33) and the
-    // UPS false origin — rhoF interpolated from the same PsParams
-    "g20_ups_variant_a" -> {
-      import operators.Regrid.{PsParams, Utm}
-      val p = PsParams(90.0, 0.0, 2000000.0, 2000000.0, k0Pole = Some(0.994))
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    -178.73 + CAST(p_partkey % 120 AS DOUBLE) * 2.99 AS lon,
-        |    62.17 + CAST(p_size % 27 AS DOUBLE) * 1.01 AS lat
-        |  FROM part),
-        |f1 AS (SELECT pk, lon, lat * ${Utm.Deg2Rad} AS phi FROM pts),
-        |f2 AS (SELECT pk, lon, phi, ${p.e} * sin(phi) AS esin FROM f1),
-        |f3 AS (SELECT pk, lon,
-        |    tan(${math.Pi / 4.0} - phi / 2.0)
-        |      / pow((1.0 - esin) / (1.0 + esin), ${p.e / 2.0}) AS t FROM f2),
-        |f4 AS (SELECT pk, lon, ${p.rhoF} * t AS rho FROM f3),
-        |f5 AS (SELECT pk, rho,
-        |    (lon - (${p.lon0Deg})) * ${Utm.Deg2Rad} AS dlam FROM f4)
-        |SELECT pk,
-        |  CAST(floor((${p.falseEasting} + rho * sin(dlam)) * 64.0) AS BIGINT) AS x_fp,
-        |  CAST(floor((${p.falseNorthing} + ((-1.0) * rho) * cos(dlam)) * 64.0) AS BIGINT) AS y_fp
-        |FROM f5 ORDER BY pk""".stripMargin
-    },
-    // g16: the Snyder polar-stereographic forward (21-30..21-34) with
-    // PsParams constants interpolated from the same Scala arithmetic,
-    // mirrored association, fixed-point ×64 floor (margins scanned)
-    "g16_polar_stereographic" -> {
-      import operators.Regrid.{PsParams, Utm}
-      val p = PsParams(70.0, -45.0) // EPSG:3413 on WGS84
-      s"""WITH pts AS (SELECT p_partkey AS pk,
-        |    -179.13 + CAST(p_partkey % 144 AS DOUBLE) * 2.47 AS lon,
-        |    60.29 + CAST(p_size % 28 AS DOUBLE) * 0.97 AS lat
-        |  FROM part),
-        |f1 AS (SELECT pk, lon, lat * ${Utm.Deg2Rad} AS phi FROM pts),
-        |f2 AS (SELECT pk, lon, phi, ${p.e} * sin(phi) AS esin FROM f1),
-        |f3 AS (SELECT pk, lon,
-        |    tan(${math.Pi / 4.0} - phi / 2.0)
-        |      / pow((1.0 - esin) / (1.0 + esin), ${p.e / 2.0}) AS t FROM f2),
-        |f4 AS (SELECT pk, lon, ${p.rhoF} * t AS rho FROM f3),
-        |f5 AS (SELECT pk, rho,
-        |    (lon - (${p.lon0Deg})) * ${Utm.Deg2Rad} AS dlam FROM f4)
-        |SELECT pk,
-        |  CAST(floor((0.0 + rho * sin(dlam)) * 64.0) AS BIGINT) AS x_fp,
-        |  CAST(floor((0.0 + ((-1.0) * rho) * cos(dlam)) * 64.0) AS BIGINT) AS y_fp
-        |FROM f5 ORDER BY pk""".stripMargin
-    },
-    // a8: same synthetic tiles from range(); moments via explicit
-    // sum()/count() (bit-identical to the Spark aggregation), principal
-    // axis of the 2×2 covariance in closed form.
-    "a8_tile_pca" ->
-      """WITH base AS (
-        |  SELECT CAST(id // 64 AS INT) AS tile, CAST(id AS INT) AS idx,
-        |    CAST(id % 64 % 8 AS DOUBLE) AS x,
-        |    CAST((id // 64 + 1) * (id % 64 % 8) + id % 64 // 8 AS DOUBLE) AS y
-        |  FROM range(256) t(id)),
-        |m AS (
-        |  SELECT tile,
-        |    sum(x) / count(*) AS mx, sum(y) / count(*) AS my,
-        |    sum(x*x) / count(*) - (sum(x) / count(*)) * (sum(x) / count(*)) AS a,
-        |    sum(x*y) / count(*) - (sum(x) / count(*)) * (sum(y) / count(*)) AS b,
-        |    sum(y*y) / count(*) - (sum(y) / count(*)) * (sum(y) / count(*)) AS c
-        |  FROM base GROUP BY tile),
-        |v AS (SELECT tile, mx, my,
-        |    cos(atan2(2 * b, a - c) / 2) AS v1, sin(atan2(2 * b, a - c) / 2) AS v2
-        |  FROM m)
-        |SELECT base.tile, idx, round((x - mx) * v1 + (y - my) * v2, 6) AS pca1
-        |FROM base JOIN v ON base.tile = v.tile
-        |ORDER BY base.tile, idx""".stripMargin,
-    // w7: the tile-free relational stencil — neighbor self-join on offset
-    // ranges; mean as exact-int sum / count division.
-    "w7_halo2d" ->
-      """WITH cells AS (
-        |  SELECT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col, count(*) AS v
-        |  FROM lineitem GROUP BY px_row, px_col)
-        |SELECT a.px_row, a.px_col, CAST(count(b.v) AS INT) AS n_neigh,
-        |  CAST(sum(b.v) AS DOUBLE) / count(b.v) AS nb_mean
-        |FROM cells a JOIN cells b
-        |  ON b.px_row BETWEEN a.px_row - 1 AND a.px_row + 1
-        | AND b.px_col BETWEEN a.px_col - 1 AND a.px_col + 1
-        |GROUP BY a.px_row, a.px_col
-        |ORDER BY a.px_row, a.px_col""".stripMargin,
-    "w6_ntile" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  CAST(ntile(4) OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS INTEGER) AS quartile
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // pipe0 replicates Stage-0 semantics over the same synthetic scene
-    // grid the Spark side builds from range(): nodata/udm2 normalization,
-    // float-exact band values, NDVI eps-divide, month-6 interpolated
-    // median, winter argmax (single winter scene). All band arithmetic is
-    // over small integers — exact in float32 — so the two engines agree
-    // bit-for-bit before the round(6).
-    "pipe0_feature_stack" ->
-      """WITH sc AS (
-        |  SELECT id // 1024 + 1 AS s,
-        |    CASE WHEN id // 1024 < 2 THEN 6 ELSE 12 END AS month,
-        |    CAST((id % 1024) // 32 AS INTEGER) AS px_row,
-        |    CAST(id % 32 AS INTEGER) AS px_col
-        |  FROM range(3072) t(id)),
-        |raw AS (
-        |  SELECT s, month, px_row, px_col,
-        |    CAST(CASE WHEN px_col < 16 THEN 10.0 ELSE 50.0 END AS FLOAT) AS b6,
-        |    CAST(CASE WHEN px_row = 0 AND px_col = 0 AND s = 2 THEN -9999.0
-        |         WHEN px_col < 16 THEN 100.0 + s ELSE 10.0 + s END AS FLOAT) AS b8,
-        |    NOT (px_row = 31 AND px_col = 31 AND s = 1) AS clear
-        |  FROM sc),
-        |norm AS (
-        |  SELECT s, month, px_row, px_col,
-        |    CASE WHEN clear AND NOT (isnan(b6) OR abs(CAST(b6 AS DOUBLE) + 9999.0) <= 0.01) THEN b6 END AS b6,
-        |    CASE WHEN clear AND NOT (isnan(b8) OR abs(CAST(b8 AS DOUBLE) + 9999.0) <= 0.01) THEN b8 END AS b8
-        |  FROM raw),
-        |idx AS (
-        |  SELECT s, month, px_row, px_col, b8,
-        |    (b8 - b6) / ((b8 + b6) + 1e-9) AS ndvi
-        |  FROM norm),
-        |monthly AS (
-        |  SELECT px_row, px_col, median(ndvi) AS ndvi_m6
-        |  FROM idx WHERE month = 6 GROUP BY px_row, px_col),
-        |winter AS (
-        |  SELECT px_row, px_col, b8 AS win_B8
-        |  FROM idx WHERE month = 12 AND ndvi IS NOT NULL)
-        |SELECT m.px_row, m.px_col, round(ndvi_m6, 6) AS ndvi_m6, win_B8
-        |FROM monthly m JOIN winter w ON m.px_row = w.px_row AND m.px_col = w.px_col
-        |ORDER BY m.px_row, m.px_col""".stripMargin,
-    // rep1: relational mirror of the sorted-run fold — unnest + GROUP BY
-    // counts per gram; all counters exact integers, one final division.
-    "rep1_ngram_repetition" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |g AS (SELECT doc_id,
-        |  CASE WHEN len(toks) < 2 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 1),
-        |    i -> concat(toks[i], ' ', toks[i+1])) END AS g2,
-        |  CASE WHEN len(toks) < 3 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS g3
-        |  FROM t),
-        |c2 AS (SELECT doc_id, gram, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(g2) AS gram FROM g) GROUP BY doc_id, gram),
-        |m2 AS (SELECT doc_id,
-        |  sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS dup,
-        |  max(c * length(gram)) AS best,
-        |  sum(c * length(gram)) AS tot FROM c2 GROUP BY doc_id),
-        |c3 AS (SELECT doc_id, gram, count(*) AS c
-        |  FROM (SELECT doc_id, unnest(g3) AS gram FROM g) GROUP BY doc_id, gram),
-        |m3 AS (SELECT doc_id,
-        |  sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS dup,
-        |  max(c * length(gram)) AS best,
-        |  sum(c * length(gram)) AS tot FROM c3 GROUP BY doc_id)
-        |SELECT doc_id,
-        |  CAST(m2.dup AS DOUBLE) / CAST(m2.tot AS DOUBLE) AS dup2_frac,
-        |  CAST(m2.best AS DOUBLE) / CAST(m2.tot AS DOUBLE) AS top2_frac,
-        |  CAST(m3.dup AS DOUBLE) / CAST(m3.tot AS DOUBLE) AS dup3_frac
-        |FROM m2 JOIN m3 USING (doc_id) ORDER BY doc_id""".stripMargin,
-    // par1: corpus-vs-itself passage duplication; integer counters only.
-    "par1_dup_passages" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, CASE WHEN len(toks) < 5 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 4),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2], ' ', toks[i+3], ' ', toks[i+4])) END AS sh
-        |  FROM t),
-        |occ AS (SELECT doc_id, g, count(*) AS occ
-        |  FROM (SELECT doc_id, unnest(sh) AS g FROM s) GROUP BY doc_id, g),
-        |df AS (SELECT g, count(*) AS ndocs FROM occ GROUP BY g)
-        |SELECT doc_id,
-        |  CAST(sum(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) AS DOUBLE) /
-        |    CAST(sum(occ) AS DOUBLE) AS dup_passage_frac,
-        |  CAST(sum(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS shared_grams
-        |FROM occ JOIN df USING (g) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    // gate1: every operand explicitly DOUBLE (DuckDB's bare 100.0 is
-    // DECIMAL, and decimal division would diverge from Spark's IEEE
-    // doubles on unrounded threshold comparisons).
-    "gate1_quality_gate" ->
-      s"""WITH t AS (SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
-         |u AS (SELECT doc_id, lang, text, toks,
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) AS quality,
-         |  (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS guess,
-         |  CASE WHEN len(toks) < 2 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 1),
-         |    i -> concat(toks[i], ' ', toks[i+1])) END AS g2
-         |  FROM t),
-         |c AS (SELECT doc_id, gram, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(g2) AS gram FROM u) GROUP BY doc_id, gram),
-         |m AS (SELECT doc_id, CAST(sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS DOUBLE) /
-         |  CAST(sum(c * length(gram)) AS DOUBLE) AS dup2 FROM c GROUP BY doc_id),
-         |r AS (SELECT u.doc_id AS doc_id,
-         |  CASE WHEN text IS NULL OR quality IS NULL THEN 'low_quality'
-         |       WHEN quality < CAST(0.3 AS DOUBLE) THEN 'low_quality'
-         |       WHEN lang IS NULL OR guess <> lang THEN 'lang_mismatch'
-         |       WHEN dup2 > CAST(0.2 AS DOUBLE) THEN 'repetitive'
-         |       ELSE 'ok' END AS reason
-         |  FROM u LEFT JOIN m ON u.doc_id = m.doc_id)
-         |SELECT doc_id, (reason = 'ok') AS keep, reason FROM r ORDER BY doc_id""".stripMargin,
-    // skew1/b1: the oracle is the PLAIN formulation — salting and
-    // bucketing must be semantically invisible.
-    "skew1_salted_agg" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "b1_bucketed_join" ->
-      """SELECT p_brand, count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    // emb1: ×2^20 is a power-of-two multiply (exact in IEEE), floor gives
-    // identical BIGINTs, integer sums commute → the centroid is
-    // bit-identical in both engines; the cosine is the in-order fold.
-    "emb1_label_cohesion" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-         |u AS (SELECT label, i, CAST(floor(CAST(embedding[i] AS DOUBLE) * CAST(1048576.0 AS DOUBLE)) AS BIGINT) AS qx
-         |  FROM e, (SELECT unnest(generate_series(1, 64)) AS i) t),
-         |g AS (SELECT label, i, sum(qx) AS s, count(*) AS n FROM u GROUP BY label, i),
-         |c AS (SELECT label, list(CAST(s AS DOUBLE) / CAST(1048576.0 AS DOUBLE) / CAST(n AS DOUBLE) ORDER BY i) AS centroid
-         |  FROM g GROUP BY label)
-         |SELECT vec_id, label, round(${sqlDot("embedding", "centroid")} /
-         |  (sqrt(${sqlDot("embedding", "embedding")}) * sqrt(${sqlDot("centroid", "centroid")})), 6) AS cohesion
-         |FROM e JOIN c USING (label) ORDER BY vec_id""".stripMargin,
-    "sql1_function_surface" ->
-      s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents)
-         |SELECT doc_id, CAST(len(toks) AS INTEGER) AS n_tokens,
-         |  round(least(len(toks) / 100.0, 1.0) * 0.5 +
-         |    least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |      / len(toks) * 4.0, 1.0) * 0.5, 6) AS quality,
-         |  (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS lang_guess,
-         |  md5(array_to_string(list_sort(list_distinct(toks)), ' ')) AS fp
-         |FROM t ORDER BY doc_id""".stripMargin,
-    "zs1_zonal_stats" ->
-      """WITH cells AS (
-        |  SELECT CAST(l_orderkey % 16 AS INT) AS px_row,
-        |    CAST(l_partkey % 16 AS INT) AS px_col,
-        |    CAST(count(*) AS DOUBLE) AS v
-        |  FROM lineitem GROUP BY px_row, px_col),
-        |seg AS (SELECT px_row, px_col, v,
-        |  CAST(floor(px_row / 4) AS INT) * 4 + CAST(floor(px_col / 4) AS INT) AS seg_id
-        |  FROM cells),
-        |f AS (SELECT seg_id, count(*) AS n_px,
-        |  max(px_row) - min(px_row) + 1 AS height,
-        |  max(px_col) - min(px_col) + 1 AS width,
-        |  avg(v) AS mean_v FROM seg GROUP BY seg_id)
-        |SELECT seg_id, n_px, height, width, round(mean_v, 6) AS mean_v,
-        |  round(CAST(n_px AS DOUBLE) / (height * width), 6) AS rect,
-        |  round(CAST(greatest(height, width) AS DOUBLE) / least(height, width), 6) AS elong
-        |FROM f ORDER BY seg_id""".stripMargin,
-    // emb2: floor-based quantization is deterministic double arithmetic —
-    // identical code vectors in both engines; zero vectors → all zeros.
-    "emb2_quantize8" ->
-      """WITH a AS (SELECT vec_id, embedding,
-        |  list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS amax
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |  md5(array_to_string(CASE WHEN amax = 0 THEN list_transform(embedding, x -> CAST(0 AS BIGINT))
-        |    ELSE list_transform(embedding, x -> CAST(greatest(least(
-        |      floor(CAST(x AS DOUBLE) / amax * CAST(127.0 AS DOUBLE)), 127.0), -127.0) AS BIGINT)) END, ',')) AS q_md5,
-        |  round(amax / CAST(127.0 AS DOUBLE), 6) AS scale
-        |FROM a ORDER BY vec_id""".stripMargin,
-    "chunk1_token_windows" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |SELECT doc_id, CAST(chunk_id AS INTEGER) AS chunk_id,
-        |  CAST(least(len(toks) - start, 64) AS BIGINT) AS n_tokens,
-        |  md5(array_to_string(list_slice(toks, start + 1, start + 64), ' ')) AS chunk_md5
-        |FROM (SELECT doc_id, toks, i - 1 AS chunk_id, (i - 1) * 48 AS start
-        |  FROM (SELECT doc_id, toks, unnest(generate_series(1, greatest(CAST(len(toks) AS BIGINT), 1))) AS i FROM t)
-        |  WHERE (i - 1) * 48 < len(toks))
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    // e12: e10's recursive-CTE closure + the gate's all-DOUBLE quality,
-    // keeper = row_number over (quality DESC, doc_id) per component.
-    "e12_keep_best_quality" ->
-      s"""${sqlShingleCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh FROM s),
-         |pairs AS (SELECT a, b FROM (
-         |  SELECT a, b, len(list_filter(xa.sh, t -> list_contains(xb.sh, t))) AS inter,
-         |    len(xa.sh) AS la, len(xb.sh) AS lb
-         |  FROM cand JOIN ss xa ON cand.a = xa.doc_id JOIN ss xb ON cand.b = xb.doc_id) t
-         |  WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5),
-         |und AS (SELECT a AS x, b AS y FROM pairs UNION SELECT b AS x, a AS y FROM pairs),
-         |reach(x, y) AS (SELECT x, y FROM und
-         |  UNION SELECT r.x, u.y FROM reach r JOIN und u ON r.y = u.x),
-         |comp AS (SELECT x AS node, least(x, min(y)) AS component FROM reach GROUP BY x),
-         |qual AS (SELECT doc_id,
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) AS q
-         |  FROM t),
-         |mem AS (SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component, d.q
-         |  FROM qual d LEFT JOIN comp c ON d.doc_id = c.node),
-         |ranked AS (SELECT component, doc_id, q,
-         |  row_number() OVER (PARTITION BY component ORDER BY q DESC, doc_id) AS rn,
-         |  count(*) OVER (PARTITION BY component) AS n_members,
-         |  max(q) OVER (PARTITION BY component) AS bq FROM mem)
-         |SELECT doc_id AS keep_id, CAST(n_members AS BIGINT) AS n_members, round(bq, 6) AS best_q
-         |FROM ranked WHERE rn = 1 ORDER BY keep_id""".stripMargin,
-    "st4_interval_join" ->
-      """SELECT l.event_id AS l_id, r.event_id AS r_id
-        |FROM events l JOIN events r ON l.user_id = r.user_id
-        |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 300 SECOND
-        |ORDER BY l_id, r_id""".stripMargin,
-    "st6_outer_interval_join" ->
-      """SELECT l.event_id AS l_id, r.event_id AS r_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-        |  ON l.user_id = r.user_id
-        |  AND r.ts >= l.ts AND r.ts <= l.ts + INTERVAL 300 SECOND
-        |ORDER BY l_id, r_id NULLS FIRST""".stripMargin,
-    // sql2: same pair set as j11 — the oracle is the plain theta join.
-    "sql2_spatial_sql" ->
-      """WITH sb AS (
-        |  SELECT s_suppkey,
-        |         s_suppkey % 97 AS xmin, s_suppkey % 89 AS ymin,
-        |         s_suppkey % 97 + 1 + s_suppkey % 5 AS xmax,
-        |         s_suppkey % 89 + 1 + s_suppkey % 7 AS ymax
-        |  FROM supplier),
-        |cb AS (
-        |  SELECT c_custkey,
-        |         c_custkey % 97 AS xmin, c_custkey % 89 AS ymin,
-        |         c_custkey % 97 + 1 + c_custkey % 5 AS xmax,
-        |         c_custkey % 89 + 1 + c_custkey % 7 AS ymax
-        |  FROM customer)
-        |SELECT s_suppkey, c_custkey FROM sb JOIN cb
-        |  ON sb.xmin <= cb.xmax AND cb.xmin <= sb.xmax
-        | AND sb.ymin <= cb.ymax AND cb.ymin <= sb.ymax
-        |ORDER BY s_suppkey, c_custkey""".stripMargin,
-    "q12_conditional_agg" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // pipe2: gate (all-DOUBLE thresholds) ∩ passage filter → hash split →
-    // per-split greedy packing → census. Every stage mirrors its
-    // already-oracled standalone query.
-    "pipe2_curation_v2" ->
-      s"""WITH t AS (SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
-         |u AS (SELECT doc_id, lang, text, toks,
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) AS quality,
-         |  (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS guess,
-         |  CASE WHEN len(toks) < 2 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 1),
-         |    i -> concat(toks[i], ' ', toks[i+1])) END AS g2,
-         |  CASE WHEN len(toks) < 5 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 4),
-         |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2], ' ', toks[i+3], ' ', toks[i+4])) END AS g5
-         |  FROM t),
-         |c2 AS (SELECT doc_id, gram, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(g2) AS gram FROM u) GROUP BY doc_id, gram),
-         |m2 AS (SELECT doc_id, CAST(sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS DOUBLE) /
-         |  CAST(sum(c * length(gram)) AS DOUBLE) AS dup2 FROM c2 GROUP BY doc_id),
-         |gatekeep AS (SELECT u.doc_id FROM u JOIN m2 ON u.doc_id = m2.doc_id
-         |  WHERE NOT (quality < CAST(0.3 AS DOUBLE)) AND guess = lang AND NOT (dup2 > CAST(0.2 AS DOUBLE))),
-         |occ AS (SELECT doc_id, g, count(*) AS occ
-         |  FROM (SELECT doc_id, unnest(g5) AS g FROM u) GROUP BY doc_id, g),
-         |dfq AS (SELECT g, count(*) AS ndocs FROM occ GROUP BY g),
-         |passkeep AS (SELECT doc_id FROM occ JOIN dfq USING (g) GROUP BY doc_id
-         |  HAVING CAST(sum(CASE WHEN ndocs >= 2 THEN occ ELSE 0 END) AS DOUBLE) /
-         |    CAST(sum(occ) AS DOUBLE) <= CAST(0.5 AS DOUBLE)),
-         |kept AS (SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tok,
-         |  CASE WHEN ${sqlHexVal("md5(CAST(t.doc_id AS VARCHAR))", 4)} % 100 < 80 THEN 'train'
-         |       WHEN ${sqlHexVal("md5(CAST(t.doc_id AS VARCHAR))", 4)} % 100 < 90 THEN 'val'
-         |       ELSE 'test' END AS split
-         |  FROM t
-         |  JOIN gatekeep ON t.doc_id = gatekeep.doc_id
-         |  JOIN passkeep ON t.doc_id = passkeep.doc_id),
-         |packed AS (SELECT split, doc_id, n_tok,
-         |  sum(n_tok) OVER (PARTITION BY split ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM kept)
-         |SELECT split, count(*) AS n_docs,
-         |  CAST(count(DISTINCT CAST(floor((cum - n_tok) / 2048) AS BIGINT)) AS BIGINT) AS n_bins,
-         |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens
-         |FROM packed GROUP BY split ORDER BY split""".stripMargin,
-    // url1: host/registrable-domain regexes are shared verbatim with the
-    // Spark side (Java and RE2 agree on them); the blocklist is a NOT IN.
-    "url1_domain_filter" ->
-      """WITH u AS (SELECT doc_id,
-        |  lower(regexp_extract('https://' || CASE WHEN doc_id % 7 = 0 THEN 'ads.' ELSE 'www.' END ||
-        |    source || CAST(doc_id % 3 AS VARCHAR) || '.org/p/' || CAST(doc_id AS VARCHAR),
-        |    '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^@/?#]*@)?([^:/?#]+)', 1)) AS host
-        |  FROM documents),
-        |d AS (SELECT doc_id, regexp_extract(host, '([^.]+\.[^.]+)$', 1) AS domain FROM u)
-        |SELECT domain, count(*) AS n_docs FROM d
-        |WHERE domain NOT IN ('src30.org', 'src31.org', 'src32.org', 'badsite.example')
-        |GROUP BY domain ORDER BY domain""".stripMargin,
-    // pii1: counts from the ORIGINAL text, md5 of the redacted text with
-    // the same fixed replace order (email → ip → phone); DuckDB needs the
-    // explicit 'g' flag to match Spark's global regexp_replace.
-    "pii1_redact" ->
-      s"""WITH staged AS (SELECT doc_id,
-         |  text || ' contact u' || CAST(doc_id AS VARCHAR) || '@mail' || CAST(doc_id % 5 AS VARCHAR) || '.com now' ||
-         |  CASE WHEN doc_id % 3 = 0 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-0199' ELSE '' END ||
-         |  CASE WHEN doc_id % 4 = 0 THEN ' from 10.0.0.42' ELSE '' END AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(text, '${WebOps.EmailRe}')) AS BIGINT) AS n_emails,
-         |  CAST(len(regexp_extract_all(text, '${WebOps.PhoneRe}')) AS BIGINT) AS n_phones,
-         |  CAST(len(regexp_extract_all(text, '${WebOps.Ipv4Re}')) AS BIGINT) AS n_ips,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '${WebOps.EmailRe}', '[EMAIL]', 'g'),
-         |    '${WebOps.Ipv4Re}', '[IP]', 'g'),
-         |    '${WebOps.PhoneRe}', '[PHONE]', 'g')) AS clean_md5
-         |FROM staged ORDER BY doc_id""".stripMargin,
-    "lex1_type_token" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct,
-        |  round(CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE), 6) AS ttr
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // st5: replays are exact copies, so min() per key IS the kept row.
-    "st5_replay_dedup" ->
-      """WITH u AS (SELECT event_id, event_type, value FROM events
-        |  UNION ALL SELECT event_id, event_type, value FROM events WHERE event_id % 10 = 0),
-        |d AS (SELECT event_id, min(event_type) AS event_type, min(value) AS value
-        |  FROM u GROUP BY event_id)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_val
-        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // d1: the oracle is the logical complement of the tombstone set.
-    "d1_delete_by_keys" ->
-      """SELECT source, count(*) AS n, max(doc_id) AS max_id
-        |FROM documents WHERE doc_id % 13 <> 0
-        |GROUP BY source ORDER BY source""".stripMargin,
-    "q13_cust_dist" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey) t
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q16_supplier_cnt" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#1' AND p_type <> 'SMALL'
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_suppkey % 17 = 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q19_disjunctive" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 25 AND l_quantity BETWEEN 5 AND 30)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 40 AND l_quantity BETWEEN 10 AND 40)""".stripMargin,
-    // sql3: the IDENTICAL correlated text (modulo view names) — both
-    // engines must agree on the decorrelated COUNT semantics.
-    "sql3_correlated" ->
-      """SELECT p_partkey, p_brand, n_heavy FROM (
-        |  SELECT p_partkey, p_brand,
-        |    (SELECT count(*) FROM lineitem WHERE l_partkey = p_partkey AND l_quantity > 45) AS n_heavy
-        |  FROM part) t
-        |WHERE n_heavy > 0 ORDER BY p_partkey""".stripMargin,
-    "q10_returned_rev" ->
-      """SELECT c_custkey, c_name, n_name,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q11_value_parts" ->
-      """WITH bypart AS (
-        |  SELECT l_partkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS val_d
-        |  FROM lineitem GROUP BY l_partkey),
-        |tot AS (
-        |  SELECT sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS t
-        |  FROM lineitem)
-        |SELECT l_partkey, CAST(val_d AS DOUBLE) AS part_value
-        |FROM bypart, tot
-        |WHERE CAST(val_d AS DOUBLE) > CAST(t AS DOUBLE) * 0.001
-        |ORDER BY part_value DESC, l_partkey""".stripMargin,
-    "q14_promo_share" ->
-      """SELECT round(CAST(100.0 AS DOUBLE) *
-        |  CAST(sum(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2)) END) AS DOUBLE)
-        |  / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE), 6) AS promo_share,
-        |count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1995-06-01 00:00:00' AND l_shipdate < TIMESTAMP '1995-07-01 00:00:00'""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey, sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1995-04-01 00:00:00'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
-        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-        |WHERE total_rev = (SELECT max(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q17_small_qty" ->
-      """WITH a AS (SELECT l_partkey AS pk, avg(l_quantity) AS avg_q FROM lineitem GROUP BY l_partkey)
-        |SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 6) AS avg_yearly,
-        |count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey JOIN a ON l_partkey = pk
-        |WHERE p_brand = 'Brand#2' AND l_quantity < 0.2 * avg_q""".stripMargin,
-    "q18_big_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(l_quantity) AS sum_qty FROM lineitem
-        |  GROUP BY l_orderkey HAVING sum(l_quantity) > 170)
-        |SELECT c_custkey, o_orderkey, o_totalprice, sum_qty
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN big ON o_orderkey = l_orderkey
-        |ORDER BY sum_qty DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q20_qualified_suppliers" ->
-      """SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  WHERE p_brand = 'Brand#3'
-        |  GROUP BY l_suppkey HAVING sum(l_quantity) > 100)
-        |ORDER BY s_suppkey""".stripMargin,
-    // q22: the avg threshold is compared as bal·n > total with BOTH sides
-    // decimal — decimal-avg ROUNDING differs between Spark and DuckDB, the
-    // cross-multiplied form doesn't divide at all.
-    "q22_idle_customers" ->
-      """WITH a AS (
-        |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) AS tot, count(*) AS n
-        |  FROM customer WHERE c_acctbal > 0)
-        |SELECT c_custkey % 7 AS cntry, count(*) AS n_cust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer, a
-        |WHERE CAST(c_acctbal AS DECIMAL(18,2)) * n > tot
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY cntry ORDER BY cntry""".stripMargin,
-    // e13: the EXACT complement — identical to e11's oracle; the bloom
-    // prefilter must be semantically invisible.
-    "e13_bloom_decontaminate" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS grams FROM t),
-        |dg AS (SELECT doc_id, unnest(grams) AS gram FROM s),
-        |eg AS (SELECT DISTINCT gram FROM dg WHERE doc_id % 97 = 0),
-        |bad AS (SELECT DISTINCT dg.doc_id FROM dg JOIN eg USING (gram))
-        |SELECT d.doc_id, d.n_chars FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT doc_id FROM bad)
-        |ORDER BY d.doc_id, d.n_chars""".stripMargin,
-    // span1: parallel unnest zips grams with their 0-based positions;
-    // the island break (gap > k) and covered-token formula
-    // (max+k-min) are integer-exact in both engines.
-    "span1_repeated_spans" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, CASE WHEN len(toks) < 5 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 4),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2], ' ', toks[i+3], ' ', toks[i+4])) END AS sh
-        |  FROM t),
-        |p AS (SELECT doc_id, unnest(sh) AS gram, unnest(generate_series(0, len(sh) - 1)) AS pos FROM s),
-        |r AS (SELECT doc_id, pos FROM (
-        |  SELECT doc_id, pos, count(*) OVER (PARTITION BY gram) AS n_occ FROM p) WHERE n_occ >= 2),
-        |f AS (SELECT doc_id, pos,
-        |  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 5 THEN 0 ELSE 1 END AS new_span
-        |  FROM r),
-        |g2 AS (SELECT doc_id, pos, sum(new_span) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS span_id FROM f),
-        |sp AS (SELECT doc_id, span_id, max(pos) + 5 - min(pos) AS span_tokens FROM g2 GROUP BY doc_id, span_id)
-        |SELECT doc_id, count(*) AS n_spans, CAST(sum(span_tokens) AS BIGINT) AS repeated_tokens
-        |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // pipe3: gate signals + per-source rank + packing windows — the gate
-    // CTEs mirror pipe2's, the rank mirrors cap1's, the bin arithmetic
-    // mirrors pack1's. Rank ties break on doc_id; all counters integer.
-    "pipe3_mix_construction" ->
-      s"""WITH t AS (SELECT doc_id, lang, source, text, string_split(text, ' ') AS toks FROM documents),
-         |u AS (SELECT doc_id, lang, source, toks,
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) AS quality,
-         |  (list_sort([${TextOps.LangStopwords.map { case (lang, words) =>
-              s"{'n': -CAST(${sqlLangHits(words)} AS BIGINT), 'l': '$lang'}" }.mkString(", ")}]))[1].l AS guess,
-         |  CASE WHEN len(toks) < 2 THEN [text] ELSE list_transform(generate_series(1, len(toks) - 1),
-         |    i -> concat(toks[i], ' ', toks[i+1])) END AS g2
-         |  FROM t),
-         |c2 AS (SELECT doc_id, gram, count(*) AS c
-         |  FROM (SELECT doc_id, unnest(g2) AS gram FROM u) GROUP BY doc_id, gram),
-         |m2 AS (SELECT doc_id, CAST(sum(CASE WHEN c >= 2 THEN c * length(gram) ELSE 0 END) AS DOUBLE) /
-         |  CAST(sum(c * length(gram)) AS DOUBLE) AS dup2 FROM c2 GROUP BY doc_id),
-         |gatekeep AS (SELECT u.doc_id FROM u JOIN m2 ON u.doc_id = m2.doc_id
-         |  WHERE NOT (quality < CAST(0.3 AS DOUBLE)) AND guess = lang AND NOT (dup2 > CAST(0.2 AS DOUBLE))),
-         |ranked AS (SELECT u.doc_id, u.source,
-         |  row_number() OVER (PARTITION BY u.source ORDER BY u.quality DESC, u.doc_id) AS rn
-         |  FROM u JOIN gatekeep ON u.doc_id = gatekeep.doc_id),
-         |kept AS (SELECT t.doc_id, t.source, CAST(len(t.toks) AS BIGINT) AS n_tok
-         |  FROM t JOIN ranked r ON t.doc_id = r.doc_id WHERE r.rn <= 10),
-         |packed AS (SELECT source, doc_id, n_tok,
-         |  sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM kept)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(count(DISTINCT CAST(floor((cum - n_tok) / 1024) AS BIGINT)) AS BIGINT) AS n_bins,
-         |  CAST(sum(n_tok) AS BIGINT) AS sum_tokens
-         |FROM packed GROUP BY source ORDER BY source""".stripMargin,
-    // up1: the merge computed from scratch — replace keyed rows, append
-    // the novel ones; the store rewrite must match exactly.
-    // tt1: the pinned generation census is the ORIGINAL table verbatim
-    // (proving the archive is untouched by the swap), the live census is
-    // up1's from-scratch merge, and the CDC census is closed-form
-    // (every 17th doc an update, the five appended ids inserts).
-    "tt1_read_as_of" ->
-      """WITH merged AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 0 THEN 'corrected' ELSE source END AS source,
-        |    n_chars
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000 AS doc_id, 'appended' AS source, n_chars FROM (
-        |    SELECT doc_id, n_chars FROM documents ORDER BY doc_id LIMIT 5)),
-        |census AS (
-        |  SELECT 'asof' AS snapshot, source, count(*) AS n,
-        |    CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |  FROM documents GROUP BY source
-        |  UNION ALL
-        |  SELECT 'live', source, count(*), CAST(sum(n_chars) AS BIGINT)
-        |  FROM merged GROUP BY source
-        |  UNION ALL
-        |  SELECT 'diff', 'update', count(*), CAST(sum(n_chars) AS BIGINT)
-        |  FROM documents WHERE doc_id % 17 = 0
-        |  UNION ALL
-        |  SELECT 'diff', 'insert', count(*), CAST(sum(n_chars) AS BIGINT) FROM (
-        |    SELECT doc_id, n_chars FROM documents ORDER BY doc_id LIMIT 5))
-        |SELECT snapshot, source, n, sum_chars FROM census
-        |ORDER BY snapshot, source""".stripMargin,
-    "up1_upsert_by_keys" ->
-      """WITH store AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 0 THEN 'corrected' ELSE source END AS source,
-        |    n_chars
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000000 AS doc_id, 'appended' AS source, n_chars FROM (
-        |    SELECT doc_id, n_chars FROM documents ORDER BY doc_id LIMIT 5))
-        |SELECT source, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM store GROUP BY source ORDER BY source""".stripMargin,
-    // q21: IDENTICAL text (modulo view names) — double correlated
-    // EXISTS/NOT EXISTS decorrelation verified end-to-end.
-    "q21_last_shipper" ->
-      """SELECT s_name, count(DISTINCT l1.l_orderkey) AS numwait
-        |FROM supplier, lineitem l1
-        |WHERE s_suppkey = l1.l_suppkey
-        |AND EXISTS (SELECT 1 FROM lineitem l2
-        |  WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |  WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |    AND l3.l_shipdate > l1.l_shipdate)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin,
-    "q2_min_price_part" ->
-      """SELECT p_partkey, p_name, p_type, p_retailprice FROM part p
-        |WHERE p_retailprice = (SELECT min(p2.p_retailprice) FROM part p2
-        |  WHERE p2.p_type = p.p_type)
-        |ORDER BY p_partkey""".stripMargin,
-    // w8: the oracle is the plain grouped distinct — the window rewrite
-    // must be semantically identical to COUNT(DISTINCT) per key.
-    "w8_window_distinct" ->
-      """SELECT l_partkey, count(DISTINCT l_suppkey) AS n_supp
-        |FROM lineitem GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-    "w9_relative_rank" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |round(percent_rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey), 6) AS pr,
-        |round(cume_dist() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey), 6) AS cd
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // s10: the CSV write/read must be value-transparent, so the oracle is
-    // the census computed straight from the source table.
-    "s10_csv_roundtrip" ->
-      """SELECT source, lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin,
-    // sch1: generation 2 (odd ids) carries the quality column; the
-    // fixed-point sum makes the float aggregation partition-order-proof.
-    "sch1_schema_evolution" ->
-      s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
-         |q AS (SELECT doc_id, source, CASE WHEN doc_id % 2 = 1 THEN
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE)
-         |  END AS quality FROM t)
-         |SELECT source, count(*) AS n_rows,
-         |  CAST(sum(CASE WHEN quality IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oldgen,
-         |  CAST(sum(CAST(floor(COALESCE(quality, 0) * 1048576) AS BIGINT)) AS BIGINT) AS sum_q_fp
-         |FROM q GROUP BY source ORDER BY source""".stripMargin,
-    // ts1: generate_series densifies each user's hour span; the forward
-    // fill is last_value IGNORE NULLS over the identical frame. Hour sums
-    // are decimal-exact before the double cast, so carried values match
-    // bit-for-bit.
-    "ts1_gapfill_resample" ->
-      """WITH h AS (SELECT user_id, date_trunc('hour', ts) AS bucket,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS hour_sum
-        |  FROM events WHERE user_id <= 20 GROUP BY user_id, bucket),
-        |sp AS (SELECT user_id, min(bucket) AS b0, max(bucket) AS b1 FROM h GROUP BY user_id),
-        |grid AS (SELECT user_id, unnest(generate_series(b0, b1, INTERVAL 1 HOUR)) AS bucket FROM sp),
-        |j AS (SELECT g.user_id, g.bucket, h.hour_sum
-        |  FROM grid g LEFT JOIN h ON g.user_id = h.user_id AND g.bucket = h.bucket)
-        |SELECT user_id, CAST(bucket AS TIMESTAMP) AS bucket,
-        |  last_value(hour_sum IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket ROWS UNBOUNDED PRECEDING) AS filled_sum,
-        |  hour_sum IS NULL AS is_gap
-        |FROM j ORDER BY user_id, bucket""".stripMargin,
-    // ts2: the same tap constants (interpolated from the same Scala
-    // doubles) in the same left-to-right addition chain.
-    "ts2_ewma" -> {
-      val terms = (0 until 8).map { k =>
-        val c = 0.3 * math.pow(0.7, k)
-        val x = if (k == 0) "value" else s"lag(value, $k) OVER w"
-        s"$c * coalesce($x, 0.0)"
-      }.mkString(" + ")
-      s"""SELECT user_id, event_id,
-         |  CAST(floor(($terms) * 1048576) AS BIGINT) AS ewma_fp
-         |FROM events
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |ORDER BY user_id, event_id""".stripMargin
-    },
-    // funnel1: the same chained stage aggregations.
-    "funnel1_conversion" ->
-      """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-        |  WHERE e.event_type = 'click' AND e.ts >= s1.t1 GROUP BY 1),
-        |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-        |  WHERE e.event_type = 'purchase' AND e.ts >= s2.t2 GROUP BY 1)
-        |SELECT s1.user_id, t1, t2, t3,
-        |  CAST(1 + CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END
-        |         + CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END AS INT) AS depth
-        |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    // gs1: IDENTICAL text in both engines (modulo the view name).
-    "gs1_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping(l_returnflag) AS INT) AS g_rf,
-        |  CAST(grouping(l_linestatus) AS INT) AS g_ls,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
-        |ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    // hof1: list lambdas mirror the array HOFs; length() is characters in
-    // both dialects (strlen would be bytes — the e4 lesson).
-    "hof1_array_funcs" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |SELECT doc_id,
-        |  CAST(list_sum(list_transform(toks, tk -> length(tk))) AS BIGINT) AS sum_tok_len,
-        |  CAST(len(list_filter(toks, tk -> length(tk) >= 5)) AS BIGINT) AS n_long_toks,
-        |  CAST(list_max(list_transform(toks, tk -> length(tk))) AS INT) AS max_tok_len,
-        |  len(list_filter(toks, tk -> regexp_matches(tk, '[0-9]'))) > 0 AS has_digit
-        |FROM t ORDER BY doc_id""".stripMargin,
-    // inc1: the from-scratch exact+fuzzy complement — the Spark side
-    // probes a PERSISTED index instead, so the hash match proves the
-    // index round-trip preserves the dedup decision exactly. The fuzzy
-    // set here includes exact-dropped docs too; both are subtracted, so
-    // the union is identical.
-    "inc1_incremental_dedup" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |exact_dropped AS (SELECT DISTINCT n.doc_id FROM documents n
-         |  JOIN documents c ON n.text = c.text AND c.doc_id % 2 = 0
-         |  WHERE n.doc_id % 2 = 1),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket
-         |  WHERE x.doc_id % 2 = 1 AND y.doc_id % 2 = 0),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh2 FROM s),
-         |fuzzy AS (SELECT DISTINCT a FROM (
-         |  SELECT a, b, len(list_filter(xa.sh2, t -> list_contains(xb.sh2, t))) AS inter,
-         |    len(xa.sh2) AS la, len(xb.sh2) AS lb
-         |  FROM cand JOIN ss xa ON cand.a = xa.doc_id JOIN ss xb ON cand.b = xb.doc_id) z
-         |  WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5)
-         |SELECT d.doc_id, d.n_chars FROM documents d
-         |WHERE d.doc_id % 2 = 1
-         |  AND d.doc_id NOT IN (SELECT doc_id FROM exact_dropped)
-         |  AND d.doc_id NOT IN (SELECT a FROM fuzzy)
-         |ORDER BY d.doc_id""".stripMargin,
-    "prof1_table_profile" ->
-      """SELECT count(*) AS n_rows,
-        |CAST(sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS lang_nulls,
-        |count(DISTINCT lang) AS lang_distinct, min(lang) AS lang_min, max(lang) AS lang_max,
-        |CAST(sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS source_nulls,
-        |count(DISTINCT source) AS source_distinct, min(source) AS source_min, max(source) AS source_max,
-        |CAST(sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_chars_nulls,
-        |count(DISTINCT n_chars) AS n_chars_distinct, min(n_chars) AS n_chars_min, max(n_chars) AS n_chars_max
-        |FROM documents""".stripMargin,
-    // e14: the oracle brute-forces ALL pairs — the Spark side's
-    // pigeonhole banding must find exactly the same set (no false
-    // negatives by construction, none in practice either).
-    "e14_simhash_neardup" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-         |h AS (SELECT doc_id, list_transform(list_transform(toks, tk -> md5(tk)), m -> ${sqlHexVal("m", 4)}) AS hs FROM t),
-         |sig AS (SELECT doc_id, CAST(${(0 until 16).map(j =>
-              s"CASE WHEN list_sum(list_transform(hs, x -> ((x >> $j) % 2) * 2 - 1)) > 0 THEN ${1L << j} ELSE 0 END")
-              .mkString(" + ")} AS BIGINT) AS simhash
-         |FROM h)
-         |SELECT x.doc_id AS a, y.doc_id AS b,
-         |  CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-         |FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
-         |ORDER BY a, b""".stripMargin,
-    // e14b: the 60-bit twin — same brute-force proof, the signature is
-    // 60 per-bit vote sums over 15-hex-char (60-bit) token hashes
-    "e14b_simhash_wide" ->
-      s"""WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-         |h AS (SELECT doc_id, list_transform(list_transform(toks, tk -> md5(tk)), m -> ${sqlHexVal("m", 15)}) AS hs FROM t),
-         |sig AS (SELECT doc_id, CAST(${(0 until 60).map(j =>
-              s"CASE WHEN list_sum(list_transform(hs, x -> ((x >> $j) % 2) * 2 - 1)) > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END")
-              .mkString(" + ")} AS BIGINT) AS simhash
-         |FROM h)
-         |SELECT x.doc_id AS a, y.doc_id AS b,
-         |  CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
-         |FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-         |WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
-         |ORDER BY a, b""".stripMargin,
-    // pmi1: exact integer counts; the log ratio is ONE left-associative
-    // product chain and one division on doubles — bit-identical in both
-    // engines, then floor(·2^20) is exact (the lm1 pattern).
-    "pmi1_collocations" ->
-      """WITH t AS (SELECT string_split(text, ' ') AS toks FROM documents),
-        |uni AS (SELECT unnest(toks) AS w FROM t),
-        |uc AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
-        |nu AS (SELECT count(*) AS nu FROM uni),
-        |bg AS (SELECT toks[i] AS w1, toks[i + 1] AS w2
-        |  FROM (SELECT toks, unnest(generate_series(1, greatest(CAST(len(toks) AS BIGINT) - 1, 0))) AS i FROM t)),
-        |nb AS (SELECT count(*) AS nb FROM bg),
-        |bc AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2 HAVING count(*) >= 5)
-        |SELECT w1, w2, c12,
-        |  CAST(floor(ln((CAST(c12 AS DOUBLE) * CAST(nu AS DOUBLE) * CAST(nu AS DOUBLE))
-        |    / (CAST(nb AS DOUBLE) * CAST(c1 AS DOUBLE) * CAST(c2 AS DOUBLE))) * 1048576) AS BIGINT) AS pmi_fp
-        |FROM bc JOIN (SELECT w AS w1, c AS c1 FROM uc) u1 USING (w1)
-        |JOIN (SELECT w AS w2, c AS c2 FROM uc) u2 USING (w2)
-        |CROSS JOIN nu CROSS JOIN nb
-        |ORDER BY pmi_fp DESC, w1, w2 LIMIT 40""".stripMargin,
-    "w10_value_windows" ->
-      """SELECT user_id, event_id,
-        |first_value(value) OVER w AS first_v,
-        |last_value(value) OVER w AS last_v,
-        |nth_value(value, 2) OVER w AS second_v
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY user_id, event_id""".stripMargin,
-    // zm1: the oracle ignores the zone-map machinery entirely — a pruned
-    // read must equal the plain filtered scan.
-    "zo1_zorder_skip" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_partkey >= 200 AND l_partkey < 400
-        |  AND l_suppkey >= 10 AND l_suppkey < 60
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "zm1_zonemap_skip" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-06-01' AND l_shipdate < TIMESTAMP '1996-09-01'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // zo2: the zo1 doctrine — the Hilbert layout must be invisible, the
-    // oracle is the plain filtered scan.
-    "zo2_hilbert_skip" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_partkey >= 300 AND l_partkey < 600
-        |  AND l_suppkey >= 20 AND l_suppkey < 80
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // zo3: curve, ranges, and layout must be invisible — the oracle is
-    // the plain modular-box scan (and thereby re-proves boxRanges'
-    // cell/range equivalence on real keys).
-    "zo3_hilbert_ranges" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_partkey % 256 >= 40 AND l_partkey % 256 <= 79
-        |  AND l_suppkey % 256 >= 10 AND l_suppkey % 256 <= 59
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // zo4: the front-door routing (sidecar -> boxRanges -> ranged read)
-    // must be exactly invisible -- the plain modular-box scan again.
-    "zo4_hilbert_frontdoor" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem
-        |WHERE l_partkey % 256 >= 100 AND l_partkey % 256 < 140
-        |  AND l_suppkey % 256 >= 60 AND l_suppkey % 256 < 120
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // hb1: HilbertExprs.xy2d replayed as a 16-level CTE chain — the same
-    // all-integer rotate/reflect walk, so the hash proves the transform.
-    "hb1_hilbert_index" -> sqlHilbertUnrolled,
-    "q6b_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |AND l_discount >= CAST(0.03 AS DOUBLE) AND l_discount <= CAST(0.07 AS DOUBLE)
-        |AND l_quantity < CAST(24 AS DOUBLE)""".stripMargin,
-    "q7b_volume_shipping" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |CAST(year(l_shipdate) AS INTEGER) AS l_year,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |JOIN customer ON o_custkey = c_custkey JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |AND ((sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
-        |  OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1'))
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q8b_market_share" ->
-      """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |round(CAST(sum(CASE WHEN s_nationkey = 3
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))
-        |    ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-        |  / CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE), 6) AS mkt_share
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE p_type = 'PROMO' AND r_name = 'ASIA'
-        |AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q9_product_profit" ->
-      """SELECT n_name, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1 - l_discount AS DECIMAL(18,2))
-        |  - CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_profit
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY n_name, o_year DESC""".stripMargin,
-    // lm1: floor(ln p · 2^20) is exact on the same double in both
-    // engines (ln agreement proven in practice by tfidf1's green hash);
-    // the per-doc sum is then integer arithmetic.
-    "lm1_unigram_logprob" ->
-      """WITH dt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |f AS (SELECT term, count(*) AS tf FROM dt GROUP BY term),
-        |tot AS (SELECT count(*) AS n_total FROM dt),
-        |lp AS (SELECT term,
-        |  CAST(floor(ln(CAST(tf AS DOUBLE) / CAST(n_total AS DOUBLE)) * 1048576) AS BIGINT) AS lp_fp
-        |  FROM f CROSS JOIN tot)
-        |SELECT doc_id, count(*) AS n_tok, CAST(sum(lp_fp) AS BIGINT) AS sum_lp_fp
-        |FROM dt JOIN lp USING (term) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // lm2: the same fixed-point recipe one n-gram up — interpolated
-    // bigram probability with the unigram back-off, λ = 0.5.
-    "lm2_bigram_logprob" ->
-      """WITH dt AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |toks AS (SELECT doc_id, unnest(t) AS term FROM dt),
-        |bgl AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
-        |    i -> [t[i], t[i + 1]])) AS p FROM dt),
-        |bg AS (SELECT doc_id, p[1] AS c, p[2] AS n FROM bgl),
-        |uni AS (SELECT term, count(*) AS tf FROM toks GROUP BY term),
-        |tot AS (SELECT count(*) AS nn FROM toks),
-        |cf AS (SELECT c, count(*) AS cfc FROM bg GROUP BY c),
-        |bf AS (SELECT c, n, count(*) AS bfc FROM bg GROUP BY c, n),
-        |lp AS (SELECT bf.c, bf.n,
-        |  CAST(floor(ln(
-        |    0.5 * (CAST(bfc AS DOUBLE) / CAST(cfc AS DOUBLE)) +
-        |    0.5 * (CAST(tf AS DOUBLE) / CAST(nn AS DOUBLE))) * 1048576) AS BIGINT) AS lp_fp
-        |  FROM bf JOIN cf USING (c) JOIN uni ON uni.term = bf.n CROSS JOIN tot)
-        |SELECT doc_id, count(*) AS n_bigram, CAST(sum(lp_fp) AS BIGINT) AS sum_lp_fp
-        |FROM bg JOIN lp USING (c, n) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // leak1: the e12 pair machinery (bands → candidates → jaccard ≥ 0.5)
-    // plus the samp1 split assignment; pairs are a<b so each crossing
-    // pair is counted once under its own (split_a, split_b) orientation.
-    "leak1_split_leakage" ->
-      s"""$sqlShingleCte,
-         |sig AS (SELECT doc_id, ${(0 until 8).map(j => s"${sqlMinhash(j)} AS m$j").mkString(", ")} FROM sh),
-         |bands AS (${(0 until 4).map(b =>
-              s"SELECT doc_id, $b AS band, md5(concat_ws('_', m${2 * b}, m${2 * b + 1})) AS bucket FROM sig")
-              .mkString(" UNION ALL ")}),
-         |cand AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM bands x
-         |  JOIN bands y ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id),
-         |ss AS (SELECT doc_id, list_distinct(shingles) AS sh2 FROM s),
-         |pairs AS (SELECT a, b FROM (
-         |  SELECT a, b, len(list_filter(xa.sh2, t -> list_contains(xb.sh2, t))) AS inter,
-         |    len(xa.sh2) AS la, len(xb.sh2) AS lb
-         |  FROM cand JOIN ss xa ON cand.a = xa.doc_id JOIN ss xb ON cand.b = xb.doc_id) z
-         |  WHERE inter > 0 AND CAST(inter AS DOUBLE) / (la + lb - inter) >= 0.5),
-         |sp AS (SELECT doc_id,
-         |  CASE WHEN ${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 4)} % 100 < 80 THEN 'train'
-         |       WHEN ${sqlHexVal("md5(CAST(doc_id AS VARCHAR))", 4)} % 100 < 90 THEN 'val'
-         |       ELSE 'test' END AS split FROM documents)
-         |SELECT sa.split AS split_a, sb.split AS split_b, count(*) AS n_pairs
-         |FROM pairs JOIN sp sa ON pairs.a = sa.doc_id JOIN sp sb ON pairs.b = sb.doc_id
-         |WHERE sa.split <> sb.split
-         |GROUP BY split_a, split_b ORDER BY split_a, split_b""".stripMargin,
-    // stat1: decimal moment sums are exact in both engines; casting each
-    // exact decimal to double is IEEE-nearest on the same value, so the
-    // closed forms see bit-identical inputs. Expression structure mirrors
-    // the Spark side exactly.
-    "stat1_exact_corr" ->
-      """WITH m AS (SELECT count(*) AS n,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx2,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy2
-        |  FROM lineitem)
-        |SELECT n,
-        |  round((n * sxy - sx * sy) / sqrt((n * sx2 - sx * sx) * (n * sy2 - sy * sy)), 6) AS corr,
-        |  round((sxy - sx * sy / n) / n, 6) AS covar
-        |FROM m""".stripMargin,
-    "hist1_char_lengths" ->
-      """SELECT CAST(n_chars AS BIGINT) - CAST(n_chars AS BIGINT) % 50 AS bucket_lo, count(*) AS n
-        |FROM documents GROUP BY bucket_lo ORDER BY bucket_lo""".stripMargin,
-    // hist2: ntile over the identical total order (value, orderkey_line
-    // tie string) — rank-deterministic in both engines.
-    "hist2_price_deciles" ->
-      """WITH r AS (SELECT l_extendedprice AS v,
-        |  CAST(ntile(10) OVER (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS INTEGER) AS bucket
-        |FROM lineitem)
-        |SELECT bucket, min(v) AS lo, max(v) AS hi, count(*) AS n
-        |FROM r GROUP BY bucket ORDER BY bucket""".stripMargin,
-    // cap1: quality formula mirrors TextOps.qualityScore exactly (the
-    // e12 qual CTE); ranking ties break on doc_id so the window is
-    // deterministic on both engines.
-    "cap1_source_cap" ->
-      s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
-         |q AS (SELECT doc_id, source,
-         |  least(CAST(len(toks) AS DOUBLE) / CAST(100.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) +
-         |  least(CAST(len(list_filter(toks, tk -> tk IN (${TextOps.AllStopwords.map(w => s"'$w'").mkString(",")}))) AS DOUBLE)
-         |    / CAST(len(toks) AS DOUBLE) * CAST(4.0 AS DOUBLE), CAST(1.0 AS DOUBLE)) * CAST(0.5 AS DOUBLE) AS q
-         |  FROM t),
-         |r AS (SELECT source, doc_id,
-         |  row_number() OVER (PARTITION BY source ORDER BY q DESC, doc_id) AS rn FROM q)
-         |SELECT source, doc_id, rn FROM r WHERE rn <= 5
-         |ORDER BY source, rn""".stripMargin,
-    // kmv1: the oracle recomputes the sketch itself (distinct 60-bit md5
-    // prefixes, k smallest per group) — deterministic, so the estimate is
-    // hash-gated. 63·2^60 is exactly representable as a double (6-bit
-    // mantissa), so the CASE arithmetic is one correctly-rounded divide.
-    // qs1: the bottom-k quantile sketch replayed — md5 row-identity
-    // hashes, ORDER BY h LIMIT k as the bottom-k, type-1 sample
-    // quantiles at rank max(1, ceil(q*m)). All chains integer or one
-    // exact double multiply, so the estimates hash-gate.
-    "qs1_quantile_sketch" ->
-      s"""WITH h AS (SELECT ${sqlHexVal("m", 15)} AS h, v FROM (
-         |  SELECT md5(CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
-         |      || '-' || CAST(l_partkey AS VARCHAR) || '-' || CAST(l_suppkey AS VARCHAR)) AS m,
-         |    l_extendedprice AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)),
-         |st AS (SELECT h, v FROM h ORDER BY h LIMIT 256),
-         |r AS (SELECT v, h, row_number() OVER (ORDER BY v, h) AS rn,
-         |  count(*) OVER () AS m FROM st),
-         |q AS (SELECT CAST(unnest([0.25, 0.5, 0.75, 0.9, 0.99]) AS DOUBLE) AS q)
-         |SELECT q, v AS est, m FROM r JOIN q ON rn = greatest(1, ceil(q * CAST(m AS DOUBLE)))
-         |ORDER BY q""".stripMargin,
-    // qs2: the merge law's oracle is the SINGLE-PASS bottom-k of the
-    // whole table — recap(state(even) ∪ state(odd)) must equal it row
-    // for row (the hll2 doctrine for quantile state).
-    "qs2_quantile_merge" -> sqlQuantileGlobalState,
-    // qs4: the hierarchical rollup must ALSO equal the global
-    // single-pass state -- same oracle as qs2 by the rollup theorem.
-    "qs4_quantile_rollup" -> sqlQuantileGlobalState,
-    // qs3: the grouped bottom-k replay -- per-flag rank caps and type-1
-    // sample quantiles, same chains as qs1 with a PARTITION BY.
-    "qs3_grouped_quantiles" ->
-      s"""WITH h AS (SELECT l_returnflag, ${sqlHexVal("m", 15)} AS h, v FROM (
-         |  SELECT l_returnflag,
-         |    md5(CAST(l_orderkey AS VARCHAR) || '-' || CAST(l_linenumber AS VARCHAR)
-         |      || '-' || CAST(l_partkey AS VARCHAR) || '-' || CAST(l_suppkey AS VARCHAR)) AS m,
-         |    l_extendedprice AS v FROM lineitem WHERE l_extendedprice IS NOT NULL)),
-         |st AS (SELECT l_returnflag, h, v FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn FROM h)
-         |  WHERE rn <= 128),
-         |r AS (SELECT l_returnflag, v, h,
-         |  row_number() OVER (PARTITION BY l_returnflag ORDER BY v, h) AS rn,
-         |  count(*) OVER (PARTITION BY l_returnflag) AS m FROM st),
-         |q AS (SELECT CAST(unnest([0.5, 0.9]) AS DOUBLE) AS q)
-         |SELECT l_returnflag, q, v AS est, m FROM r
-         |JOIN q ON rn = greatest(1, ceil(q * CAST(m AS DOUBLE)))
-         |ORDER BY l_returnflag, q""".stripMargin,
-    "kmv1_distinct_sketch" ->
-      s"""WITH h AS (SELECT DISTINCT l_returnflag, ${sqlHexVal("m", 15)} AS h
-         |  FROM (SELECT l_returnflag, md5(CAST(l_partkey AS VARCHAR)) AS m FROM lineitem)),
-         |r AS (SELECT l_returnflag, h, row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn FROM h),
-         |s AS (SELECT l_returnflag, count(*) AS n_min, max(h) AS kth_hash FROM r WHERE rn <= 64 GROUP BY l_returnflag),
-         |x AS (SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_distinct FROM lineitem GROUP BY l_returnflag)
-         |SELECT s.l_returnflag, n_min, kth_hash,
-         |  CASE WHEN n_min < 64 THEN CAST(n_min AS DOUBLE)
-         |    ELSE round(CAST(63.0 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE) / CAST(kth_hash AS DOUBLE), 6) END AS est_distinct,
-         |  exact_distinct
-         |FROM s JOIN x USING (l_returnflag) ORDER BY l_returnflag""".stripMargin,
-    // cms1: the sketch (seeded md5 cells, 4x512 counters), the probe
-    // estimates, and the exact counts all recomputed — integer-only, so
-    // the hash gates the count-min math itself.
-    "cms1_countmin_freq" ->
-      s"""WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-         |sgl AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [text]
-         |  ELSE list_transform(generate_series(1, len(toks) - 2),
-         |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS shingles FROM t),
-         |toks AS (SELECT unnest(shingles) AS tok FROM sgl),
-         |hashed AS (SELECT j, tok, ${sqlHexVal("m", 6)} % 512 AS bucket FROM (
-         |  SELECT j, tok, md5(CAST(j AS VARCHAR) || '|' || tok) AS m
-         |  FROM toks, (VALUES (0),(1),(2),(3)) AS s(j))),
-         |cells AS (SELECT j, bucket, count(*) AS cnt FROM hashed GROUP BY 1, 2),
-         |probes AS (SELECT DISTINCT tok FROM toks ORDER BY tok LIMIT 30),
-         |pc AS (SELECT tok, j, ${sqlHexVal("m", 6)} % 512 AS bucket FROM (
-         |  SELECT tok, j, md5(CAST(j AS VARCHAR) || '|' || tok) AS m
-         |  FROM probes, (VALUES (0),(1),(2),(3)) AS s(j))),
-         |est AS (SELECT pc.tok AS key, min(coalesce(cnt, 0)) AS est
-         |  FROM pc LEFT JOIN cells ON pc.j = cells.j AND pc.bucket = cells.bucket GROUP BY 1),
-         |exact AS (SELECT tok AS key, count(*) AS exact FROM toks GROUP BY 1)
-         |SELECT key, est, exact FROM est JOIN exact USING (key) ORDER BY key""".stripMargin,
-    // cov1: identical partitioned windows (running max to 1 PRECEDING,
-    // prefix-sum island ids), all-integer epoch_us arithmetic.
-    "cov1_interval_coverage" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s_us,
-        |  epoch_us(ts) + (event_id % 120 + 30) * 1000000 AS e_us FROM events),
-        |m AS (SELECT user_id, s_us, e_us, max(e_us) OVER (PARTITION BY user_id ORDER BY s_us, e_us
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM iv),
-        |i AS (SELECT user_id, s_us, e_us, sum(CASE WHEN pm IS NULL OR s_us > pm THEN 1 ELSE 0 END)
-        |  OVER (PARTITION BY user_id ORDER BY s_us, e_us
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl FROM m),
-        |g AS (SELECT user_id, isl, min(s_us) AS ms, max(e_us) AS me, count(*) AS n FROM i GROUP BY 1, 2)
-        |SELECT user_id, CAST(sum(me - ms) AS BIGINT) AS covered, count(*) AS n_islands,
-        |  CAST(sum(n) AS BIGINT) AS n_intervals
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // cov2/zs3: the union area recomputed by an INDEPENDENT exact
-    // algorithm — full 7-term inclusion-exclusion over the three boxes
-    // (the engine runs the y-slab scanline; both are integer-exact on
-    // the fixture, so the hash gates algorithm agreement, not a replay).
-    // zs3's cell-decomposed sum must equal the same value exactly.
-    "cov2_union_area" -> sqlUnionAreaIE,
-    "zs3_coverage_cells" -> sqlUnionAreaIE,
-    // cov4: the dissolved union's RINGS vs the staircase boundary derived
-    // by hand (12 closed-form corners) — tracer vs hand geometry, not a
-    // replay.
-    "cov4_union_geometry" -> sqlUnionGeom,
-    // cov5: the dissolved staircase measured on the TRUE ellipsoid —
-    // the oracle replays the zone-integral edge sum over the hand-derived
-    // corners (g23's drift-vs-margin adjudication).
-    "cov5_union_geodesic" -> sqlUnionAreaGeodesic,
-    // cov6: per-cell dissolved areas must SUM to the independent I-E
-    // union; the cell census regenerated from the member envelopes.
-    "cov6_tiled_dissolve" -> sqlUnionGeomCells,
-    // cov7: dissolve -> MULTIPOLYGON WKT -> re-parse -> measure; the
-    // area is the exact two-rect sum, the kind census is closed form.
-    // The filter(area_back == union_area) makes any re-parse drift a
-    // MISSING ROW, not a tolerance.
-    "cov7_dissolve_wkt" ->
-      """SELECT c_custkey AS g, 'MULTIPOLYGON ' AS wkt_kind,
-        |  2 * CAST(c_custkey % 3 + 4 AS DOUBLE) * CAST(c_custkey % 2 + 3 AS DOUBLE) AS union_area
-        |FROM customer ORDER BY g""".stripMargin,
-    // cov3: concave scanline (multi-interval rows) vs the U decomposed
-    // into disjoint rects + 15-term I-E -- independent exact algorithms.
-    "cov3_union_concave" -> sqlUnionAreaMixed,
-    // norm1: DuckDB's OWN nfc_normalize/strip_accents against the
-    // engine's Normalizer kernel — independent implementations of the
-    // same Unicode standard must agree.
-    "norm1_unicode_norm" ->
-      """SELECT doc_id,
-        |  md5(trim(regexp_replace(lower(strip_accents(nfc_normalize(text))), '\s+', ' ', 'g'))) AS norm_fp,
-        |  CAST(length(trim(regexp_replace(lower(strip_accents(nfc_normalize(text))), '\s+', ' ', 'g'))) AS BIGINT) AS n_chars_norm
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // cms2: the e13 doctrine — the sketch prefilter must be semantically
-    // invisible; the oracle is the plain exact census.
-    "cms2_heavy_hitters" ->
-      """SELECT user_id, count(*) AS n FROM events
-        |GROUP BY user_id HAVING count(*) >= 80
-        |ORDER BY user_id""".stripMargin,
-    // hll1: registers from the same 60-bit md5 value kmv1 proves, rho via
-    // the minimal binary string (both engines' bin() strips leading
-    // zeros), the fold exact in BIGINT, and ONE double divide by the
-    // Scala-folded literal scale — engine-identical end to end.
-    "hll1_hll_distinct" ->
-      s"""WITH h AS (SELECT l_returnflag, ${sqlHexVal("m", 15)} AS h
-         |  FROM (SELECT l_returnflag, md5(CAST(l_partkey AS VARCHAR)) AS m FROM lineitem)),
-         |r AS (SELECT l_returnflag, h // 4503599627370496 AS register, h % 4503599627370496 AS suffix FROM h),
-         |rho AS (SELECT l_returnflag, register,
-         |  CASE WHEN suffix = 0 THEN 53 ELSE 53 - length(bin(suffix)) END AS rho FROM r),
-         |regs AS (SELECT l_returnflag, register, max(rho) AS max_rho FROM rho GROUP BY 1, 2),
-         |folded AS (SELECT l_returnflag, 256 - count(*) AS n_zero,
-         |  CAST(sum(CAST(1 AS BIGINT) << CAST(54 - max_rho AS INTEGER))
-         |    + (256 - count(*)) * (CAST(1 AS BIGINT) << 54) AS BIGINT) AS raw_sum
-         |  FROM regs GROUP BY 1),
-         |x AS (SELECT l_returnflag, count(DISTINCT l_partkey) AS exact_distinct FROM lineitem GROUP BY 1)
-         |SELECT folded.l_returnflag, n_zero, raw_sum,
-         |  round(CAST(${operators.Sketches.hllScale(8)} AS DOUBLE) / CAST(raw_sum AS DOUBLE), 6) AS est_raw,
-         |  exact_distinct
-         |FROM folded JOIN x USING (l_returnflag) ORDER BY l_returnflag""".stripMargin,
-    // kmv2: sketches, theta, common count, and both estimates replayed —
-    // the kmv1 machinery extended to the theta set construction.
-    "kmv2_set_sketch" ->
-      s"""WITH ha AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1996)),
-         |hb AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1997)),
-         |ka AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM ha) WHERE rn <= 64),
-         |kb AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hb) WHERE rn <= 64),
-         |sa AS (SELECT count(*) AS na, max(h) AS kha FROM ka),
-         |sb AS (SELECT count(*) AS nb, max(h) AS khb FROM kb),
-         |th AS (SELECT least(CASE WHEN na < 64 THEN 1152921504606846976 ELSE kha END,
-         |                    CASE WHEN nb < 64 THEN 1152921504606846976 ELSE khb END) AS theta FROM sa, sb),
-         |cm AS (SELECT count(*) AS n_common FROM ka JOIN kb USING (h), th WHERE h < theta),
-         |ku AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM
-         |  (SELECT h FROM ka UNION SELECT h FROM kb)) WHERE rn <= 64),
-         |su AS (SELECT count(*) AS nu, max(h) AS kthu FROM ku),
-         |x AS (SELECT count(*) AS exact_intersect FROM (
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-         |  INTERSECT
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997))
-         |SELECT n_common, theta,
-         |  round(CAST(n_common AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |    / CAST(theta AS DOUBLE), 6) AS est_intersect,
-         |  CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-         |    ELSE round(CAST(63.0 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |      / CAST(kthu AS DOUBLE), 6) END AS est_union,
-         |  exact_intersect
-         |FROM cm, th, su, x""".stripMargin,
-    // kmv4: kmv2's intersect/union estimators composed into the Jaccard
-    // quotient, beside the exact one — quotients of hash-gated values.
-    "kmv4_jaccard" ->
-      s"""WITH ha AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1996)),
-         |hb AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1997)),
-         |ka AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM ha) WHERE rn <= 64),
-         |kb AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hb) WHERE rn <= 64),
-         |sa AS (SELECT count(*) AS na, max(h) AS kha FROM ka),
-         |sb AS (SELECT count(*) AS nb, max(h) AS khb FROM kb),
-         |th AS (SELECT least(CASE WHEN na < 64 THEN 1152921504606846976 ELSE kha END,
-         |                    CASE WHEN nb < 64 THEN 1152921504606846976 ELSE khb END) AS theta FROM sa, sb),
-         |cm AS (SELECT count(*) AS n_common FROM ka JOIN kb USING (h), th WHERE h < theta),
-         |ku AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM
-         |  (SELECT h FROM ka UNION SELECT h FROM kb)) WHERE rn <= 64),
-         |su AS (SELECT count(*) AS nu, max(h) AS kthu FROM ku),
-         |est AS (SELECT
-         |  round(CAST(n_common AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |    / CAST(theta AS DOUBLE), 6) AS est_intersect,
-         |  CASE WHEN nu < 64 THEN CAST(nu AS DOUBLE)
-         |    ELSE round(CAST(63.0 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |      / CAST(kthu AS DOUBLE), 6) END AS est_union
-         |  FROM cm, th, su),
-         |x AS (SELECT count(*) AS exact_intersect FROM (
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-         |  INTERSECT
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997)),
-         |x2 AS (SELECT count(*) AS exact_union FROM (
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) IN (1996, 1997)))
-         |SELECT round(est_intersect / est_union, 6) AS jaccard_est,
-         |  round(CAST(exact_intersect AS DOUBLE) / CAST(exact_union AS DOUBLE), 6) AS jaccard_exact,
-         |  exact_intersect, exact_union
-         |FROM est, x, x2""".stripMargin,
-    // rr1: the tf ranker + binary relevance replayed relationally; the
-    // reciprocal rank fixed-point floors identical doubles.
-    "rr1_retrieval_eval" ->
-      """WITH probes(qid, t1, t2) AS (VALUES
-        |  (1,'join','hash'),(2,'scan','filter'),(3,'row','batch'),
-        |  (4,'merge','column'),(5,'order','small')),
-        |tf AS MATERIALIZED (SELECT p.qid, d.doc_id,
-        |  length(list_filter(string_split(d.text, ' '), x -> x = p.t1)) AS tf1,
-        |  length(list_filter(string_split(d.text, ' '), x -> x = p.t2)) AS tf2
-        |  FROM documents d CROSS JOIN probes p WHERE d.text IS NOT NULL),
-        |top5 AS MATERIALIZED (SELECT * FROM (
-        |  SELECT qid, doc_id, tf2,
-        |    row_number() OVER (PARTITION BY qid ORDER BY tf1 DESC, doc_id) AS rank
-        |  FROM tf WHERE tf1 > 0) WHERE rank <= 5),
-        |fr AS (SELECT qid, min(rank) AS frank FROM top5 WHERE tf2 > 0 GROUP BY qid),
-        |nr AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_rel FROM tf WHERE tf2 > 0 GROUP BY qid),
-        |p5 AS (SELECT qid, CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS p5_hits
-        |  FROM top5 GROUP BY qid)
-        |SELECT p5.qid,
-        |  coalesce(CAST(floor(1048576.0 / CAST(fr.frank AS DOUBLE)) AS BIGINT), 0) AS rr_fp,
-        |  p5.p5_hits, coalesce(nr.n_rel, 0) AS n_rel
-        |FROM p5 LEFT JOIN fr USING (qid) LEFT JOIN nr USING (qid) ORDER BY p5.qid""".stripMargin,
-    // cms3: the sketch self-inner-product and the exact F2 moment both
-    // replayed — integer-only, so the estimate itself is hash-gated.
-    "cms3_join_size" ->
-      s"""WITH hashed AS (SELECT j, ${sqlHexVal("m", 6)} % 512 AS bucket FROM (
-         |  SELECT j, md5(CAST(j AS VARCHAR) || '|' || CAST(l_partkey AS VARCHAR)) AS m
-         |  FROM lineitem, (VALUES (0),(1),(2),(3)) AS s(j))),
-         |cells AS (SELECT j, bucket, count(*) AS cnt FROM hashed GROUP BY 1, 2),
-         |ip AS (SELECT j, CAST(sum(cnt * cnt) AS BIGINT) AS __ip FROM cells GROUP BY j),
-         |x AS (SELECT CAST(sum(__c * __c) AS BIGINT) AS exact_f2 FROM (
-         |  SELECT count(*) AS __c FROM lineitem GROUP BY l_partkey))
-         |SELECT (SELECT min(__ip) FROM ip) AS est, exact_f2 FROM x""".stripMargin,
-    // cms4: the merge law's oracle is the single-pass sketch of the
-    // whole table -- summed half-sketches must equal it cell for cell.
-    "cms4_cms_merge" ->
-      s"""WITH hashed AS (SELECT j, ${sqlHexVal("m", 6)} % 512 AS bucket FROM (
-         |  SELECT j, md5(CAST(j AS VARCHAR) || '|' || CAST(l_partkey AS VARCHAR)) AS m
-         |  FROM lineitem, (VALUES (0),(1),(2),(3)) AS s(j)))
-         |SELECT j AS row, bucket, count(*) AS cnt FROM hashed GROUP BY 1, 2
-         |ORDER BY row, bucket""".stripMargin,
-    // kmv3: kmv1's single-set estimate + kmv2's theta intersect, composed
-    // into the difference estimate, beside the exact anti-join count.
-    "kmv3_set_difference" ->
-      s"""WITH ha AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1996)),
-         |hb AS (SELECT DISTINCT ${sqlHexVal("m", 15)} AS h FROM (
-         |  SELECT md5(CAST(o_custkey AS VARCHAR)) AS m FROM orders WHERE year(o_orderdate) = 1997)),
-         |ka AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM ha) WHERE rn <= 64),
-         |kb AS (SELECT h FROM (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hb) WHERE rn <= 64),
-         |sa AS (SELECT count(*) AS na, max(h) AS kha FROM ka),
-         |sb AS (SELECT count(*) AS nb, max(h) AS khb FROM kb),
-         |th AS (SELECT least(CASE WHEN na < 64 THEN 1152921504606846976 ELSE kha END,
-         |                    CASE WHEN nb < 64 THEN 1152921504606846976 ELSE khb END) AS theta FROM sa, sb),
-         |cm AS (SELECT count(*) AS n_common FROM ka JOIN kb USING (h), th WHERE h < theta),
-         |ea AS (SELECT CASE WHEN na < 64 THEN CAST(na AS DOUBLE)
-         |  ELSE round(CAST(63.0 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |    / CAST(kha AS DOUBLE), 6) END AS est_a FROM sa),
-         |ei AS (SELECT round(CAST(n_common AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-         |  / CAST(theta AS DOUBLE), 6) AS est_intersect FROM cm, th),
-         |x AS (SELECT count(*) AS exact_diff FROM (
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-         |  EXCEPT
-         |  SELECT DISTINCT o_custkey FROM orders WHERE year(o_orderdate) = 1997))
-         |SELECT est_a, est_intersect, round(est_a - est_intersect, 6) AS est_diff, exact_diff
-         |FROM ea, ei, x""".stripMargin,
-    // hll2: the oracle is the SINGLE-PASS sketch of the whole table —
-    // register-wise max-merge must be exactly sketch(A UNION B).
-    "hll2_hll_merge" ->
-      s"""WITH h AS (SELECT ${sqlHexVal("m", 15)} AS h
-         |  FROM (SELECT md5(CAST(l_partkey AS VARCHAR)) AS m FROM lineitem)),
-         |r AS (SELECT h // 4503599627370496 AS register, h % 4503599627370496 AS suffix FROM h),
-         |rho AS (SELECT register,
-         |  CASE WHEN suffix = 0 THEN 53 ELSE 53 - length(bin(suffix)) END AS rho FROM r),
-         |regs AS (SELECT register, max(rho) AS max_rho FROM rho GROUP BY 1)
-         |SELECT 256 - count(*) AS n_zero,
-         |  CAST(sum(CAST(1 AS BIGINT) << CAST(54 - max_rho AS INTEGER))
-         |    + (256 - count(*)) * (CAST(1 AS BIGINT) << 54) AS BIGINT) AS raw_sum,
-         |  round(CAST(${operators.Sketches.hllScale(8)} AS DOUBLE) /
-         |    CAST(CAST(sum(CAST(1 AS BIGINT) << CAST(54 - max_rho AS INTEGER))
-         |      + (256 - count(*)) * (CAST(1 AS BIGINT) << 54) AS BIGINT) AS DOUBLE), 6) AS est_raw
-         |FROM regs""".stripMargin,
-    // bpe1: the identical leftmost-lowest-rank merge walk, replayed
-    // recursively over distinct words — see sqlBpeTokens.
-    "bpe1_bpe_tokens" -> sqlBpeTokens,
-    // bpe2: the 8-round training loop unrolled -- see sqlBpeTrain.
-    "bpe2_bpe_train" -> sqlBpeTrain,
-    "cdc1_snapshot_diff" ->
-      """WITH o1 AS (SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders WHERE o_orderkey % 3 <> 0),
-        |n1 AS (SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 5 = 0 THEN o_totalprice + CAST(1.0 AS DOUBLE) ELSE o_totalprice END AS o_totalprice,
-        |  o_orderstatus FROM orders WHERE o_orderkey % 3 <> 1),
-        |j AS (SELECT coalesce(o1.o_orderkey, n1.o_orderkey) AS o_orderkey,
-        |  o1.o_totalprice AS old_o_totalprice, o1.o_orderstatus AS old_o_orderstatus,
-        |  n1.o_totalprice AS new_o_totalprice, n1.o_orderstatus AS new_o_orderstatus,
-        |  (o1.o_orderkey IS NOT NULL) AS in_old, (n1.o_orderkey IS NOT NULL) AS in_new
-        |  FROM o1 FULL OUTER JOIN n1 ON o1.o_orderkey = n1.o_orderkey),
-        |c AS (SELECT o_orderkey, old_o_totalprice, old_o_orderstatus, new_o_totalprice, new_o_orderstatus,
-        |  CASE WHEN NOT in_old THEN 'insert' WHEN NOT in_new THEN 'delete'
-        |    WHEN (old_o_totalprice IS DISTINCT FROM new_o_totalprice)
-        |      OR (old_o_orderstatus IS DISTINCT FROM new_o_orderstatus) THEN 'update' END AS change
-        |  FROM j)
-        |SELECT o_orderkey, change, old_o_totalprice, old_o_orderstatus, new_o_totalprice, new_o_orderstatus
-        |FROM c WHERE change IS NOT NULL ORDER BY o_orderkey""".stripMargin,
-    // iv1: the oracle is the FROM-SCRATCH aggregate — a hash match proves
-    // the persisted state + delta merge loses nothing.
-    "iv1_incremental_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
-        |  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    // iv2: recompute both FULL joins and subtract their censuses — the
-    // delta identity must account for every added row exactly once.
-    "iv2_join_delta" ->
-      """WITH fn AS (SELECT o.o_orderpriority, l.l_quantity
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |fo AS (SELECT o.o_orderpriority, l.l_quantity
-        |  FROM (SELECT * FROM lineitem WHERE l_orderkey % 10 <> 0) l
-        |  JOIN (SELECT * FROM orders WHERE o_orderkey % 7 <> 0) o
-        |    ON l.l_orderkey = o.o_orderkey),
-        |cn AS (SELECT o_orderpriority, count(*) AS n,
-        |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS s FROM fn GROUP BY 1),
-        |co AS (SELECT o_orderpriority, count(*) AS n,
-        |    sum(CAST(l_quantity AS DECIMAL(18,2))) AS s FROM fo GROUP BY 1)
-        |SELECT cn.o_orderpriority, cn.n - coalesce(co.n, 0) AS n_added,
-        |  CAST(cn.s - coalesce(co.s, 0) AS DOUBLE) AS qty_added
-        |FROM cn LEFT JOIN co USING (o_orderpriority)
-        |WHERE cn.n - coalesce(co.n, 0) > 0
-        |ORDER BY o_orderpriority""".stripMargin,
-    "fz1_fuzzy_match" ->
-      """WITH pr AS (SELECT p_partkey AS probe_key,
-        |  concat(substr(p_name, 1, 2), substr(p_name, 4)) AS probe_name
-        |  FROM part WHERE p_partkey % 50 = 0)
-        |SELECT probe_key, probe_name, p.p_partkey, p.p_name,
-        |  CAST(levenshtein(probe_name, p.p_name) AS INTEGER) AS edit_dist
-        |FROM pr JOIN part p ON substr(probe_name, 1, 2) = substr(p.p_name, 1, 2)
-        |  AND abs(len(probe_name) - len(p.p_name)) <= 2
-        |  AND levenshtein(probe_name, p.p_name) <= 2
-        |ORDER BY probe_key, p.p_partkey""".stripMargin,
-    // fz2: the oracle is the UNBLOCKED brute force (length filter only,
-    // which edit<=2 implies) - a hash match proves the segment-signature
-    // candidates lose nothing, the claim prefix blocking cannot make
-    "fz2_segment_match" ->
-      """WITH pr AS (SELECT p_partkey AS probe_key,
-        |  concat(substr(p_name, 1, 2), substr(p_name, 4)) AS probe_name
-        |  FROM part WHERE p_partkey % 200 = 0)
-        |SELECT probe_key, probe_name, p.p_partkey, p.p_name,
-        |  CAST(levenshtein(probe_name, p.p_name) AS INTEGER) AS edit_dist
-        |FROM pr JOIN part p ON abs(len(probe_name) - len(p.p_name)) <= 2
-        |  AND levenshtein(probe_name, p.p_name) <= 2
-        |ORDER BY probe_key, p.p_partkey""".stripMargin,
-    // s11: the oracle never sees the JSON — it aggregates the parquet
-    // source, so a hash match (md5 of the round-tripped text included)
-    // proves the JSONL write→read cycle lossless.
-    "s11_jsonl_roundtrip" ->
-      """SELECT lang, source, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  min(md5(text)) AS min_text_md5
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "span2_strip_spans" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, CASE WHEN len(toks) < 5 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 4),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2], ' ', toks[i+3], ' ', toks[i+4])) END AS sh
-        |  FROM t),
-        |p AS (SELECT doc_id, unnest(sh) AS gram, unnest(generate_series(0, len(sh) - 1)) AS pos FROM s),
-        |r AS (SELECT doc_id, pos FROM (
-        |  SELECT doc_id, pos, count(*) OVER (PARTITION BY gram) AS n_occ FROM p) WHERE n_occ >= 2),
-        |cov AS (SELECT DISTINCT doc_id, pos + d AS cpos FROM r, (SELECT unnest(generate_series(0, 4)) AS d) dd),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok, unnest(generate_series(0, len(toks) - 1)) AS pos FROM t),
-        |j AS (SELECT tok.doc_id, tok.pos, tok.tok, cov.cpos IS NOT NULL AS is_cov
-        |  FROM tok LEFT JOIN cov ON tok.doc_id = cov.doc_id AND tok.pos = cov.cpos)
-        |SELECT doc_id,
-        |  coalesce(string_agg(CASE WHEN NOT is_cov THEN tok END, ' ' ORDER BY pos), '') AS clean_text,
-        |  count(CASE WHEN NOT is_cov THEN 1 END) AS n_kept,
-        |  count(CASE WHEN is_cov THEN 1 END) AS n_removed
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // tfidf2: same fixed-point weight (tf · floor(ln(N/df)·2^20)) on both
-    // engines; all sums are exact integers (HUGEINT in DuckDB, DECIMAL(38)
-    // in Spark), so the cosine is one correctly-rounded divide per pair.
-    "tfidf2_pair_similarity" ->
-      """WITH t AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, CASE WHEN len(toks) < 3 THEN [text]
-        |  ELSE list_transform(generate_series(1, len(toks) - 2),
-        |    i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])) END AS sh FROM t),
-        |dt AS (SELECT doc_id, gram, count(*) AS tf FROM (SELECT doc_id, unnest(sh) AS gram FROM s) GROUP BY doc_id, gram),
-        |dfc AS (SELECT gram, count(*) AS df FROM dt GROUP BY gram),
-        |nd AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-        |w AS (SELECT doc_id, dt.gram,
-        |  tf * CAST(floor(ln(CAST((SELECT n FROM nd) AS DOUBLE) / df) * 1048576) AS BIGINT) AS w
-        |  FROM dt JOIN dfc ON dt.gram = dfc.gram WHERE df BETWEEN 2 AND 20),
-        |nrm AS (SELECT doc_id, sum(w * w) AS nsq FROM w GROUP BY doc_id),
-        |p AS (SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS n_shared, sum(CAST(a.w AS HUGEINT) * b.w) AS dot
-        |  FROM w a JOIN w b ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY a.doc_id, b.doc_id),
-        |c AS (SELECT a, b, n_shared,
-        |  round(CAST(dot AS DOUBLE) / (sqrt(CAST(na.nsq AS DOUBLE)) * sqrt(CAST(nb.nsq AS DOUBLE))), 6) AS cosine
-        |  FROM p JOIN nrm na ON p.a = na.doc_id JOIN nrm nb ON p.b = nb.doc_id)
-        |SELECT a, b, n_shared, cosine FROM c WHERE cosine >= CAST(0.3 AS DOUBLE) ORDER BY a, b""".stripMargin,
-    // bm25_1: identical Lucene-BM25 closed form; every per-term
-    // contribution fixed-pointed (floor(x·2^20) BIGINT) so per-(query,doc)
-    // sums are integer-exact; constants (k1+1, 1-b, ...) interpolated from
-    // the same Scala doubles the Column algebra uses.
-    "bm25_1_ranked_retrieval" -> {
-      val (k1, b) = (1.2, 0.75)
-      s"""WITH q(query_id, query_text) AS (VALUES
-        |    (CAST(1 AS BIGINT), 'spark hash join'),
-        |    (CAST(2 AS BIGINT), 'fast table scan'),
-        |    (CAST(3 AS BIGINT), 'stream window agg')),
-        |stats AS (SELECT count(*) AS n, sum(len(string_split(text, ' '))) AS tot FROM documents),
-        |qt AS (SELECT DISTINCT query_id, unnest(string_split(query_text, ' ')) AS term FROM q),
-        |qv AS (SELECT DISTINCT term FROM qt),
-        |occ AS (SELECT doc_id, len(string_split(text, ' ')) AS dl,
-        |    unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, dl, o.term, count(*) AS tf
-        |  FROM occ o JOIN qv ON o.term = qv.term GROUP BY doc_id, dl, o.term),
-        |dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |con AS (SELECT qt.query_id, tf.doc_id,
-        |    CAST(floor(
-        |      ln(1.0 + (CAST(s.n AS DOUBLE) - CAST(dfc.df AS DOUBLE) + 0.5)
-        |              / (CAST(dfc.df AS DOUBLE) + 0.5))
-        |      * (CAST(tf.tf AS DOUBLE) * ${k1 + 1.0})
-        |      / (CAST(tf.tf AS DOUBLE) + $k1 * (${1.0 - b} + $b * CAST(tf.dl AS DOUBLE)
-        |          / (CAST(s.tot AS DOUBLE) / CAST(s.n AS DOUBLE))))
-        |      * 1048576.0) AS BIGINT) AS c
-        |  FROM tf JOIN dfc ON tf.term = dfc.term JOIN qt ON tf.term = qt.term
-        |  CROSS JOIN stats s),
-        |sc AS (SELECT query_id, doc_id AS neighbor_id, CAST(sum(c) AS BIGINT) AS score
-        |  FROM con GROUP BY query_id, doc_id),
-        |r AS (SELECT query_id, neighbor_id, score,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-        |  FROM sc)
-        |SELECT query_id, neighbor_id, score, rank FROM r WHERE rank <= 10
-        |ORDER BY query_id, rank""".stripMargin
-    },
-    // cohort1: integer day keys, integer counts, integer division — the
-    // whole retention matrix is hash-exact with no float anywhere.
-    "cohort1_retention" ->
-      """WITH pd AS (SELECT user_id AS u, CAST(ts AS DATE) AS day, count(*) AS n_events
-        |  FROM events GROUP BY u, day),
-        |f AS (SELECT u, min(day) AS cohort_day FROM pd GROUP BY u),
-        |s AS (SELECT cohort_day, date_diff('day', cohort_day, day) AS day_offset,
-        |    count(*) AS n_active, CAST(sum(n_events) AS BIGINT) AS n_events
-        |  FROM pd JOIN f ON pd.u = f.u GROUP BY cohort_day, day_offset),
-        |w AS (SELECT cohort_day, day_offset, n_active, n_events,
-        |    max(CASE WHEN day_offset = 0 THEN n_active END)
-        |      OVER (PARTITION BY cohort_day) AS cohort_size FROM s)
-        |SELECT cohort_day, day_offset, n_active, n_events, cohort_size,
-        |  n_active * CAST(1000000 AS BIGINT) // cohort_size AS retention_ppm
-        |FROM w ORDER BY cohort_day, day_offset""".stripMargin,
-    // bl1: the distinct-doc line census recomputed the relational way
-    // (count(DISTINCT) + join-back) — the engine's shared-exchange window
-    // spelling must be exactly equivalent; text re-joins via string_agg
-    // ordered by position.
-    "bl1_boilerplate_lines" ->
-      """WITH lined AS (SELECT doc_id, replace(text, ' the ', chr(10)) AS text
-        |  FROM documents),
-        |sp AS (SELECT doc_id, string_split(text, chr(10)) AS lines FROM lined),
-        |ix AS (SELECT doc_id, lines,
-        |    unnest(generate_series(1, len(lines))) AS i FROM sp),
-        |l AS (SELECT doc_id, i, lines[i] AS line,
-        |    lower(trim(lines[i])) AS norm FROM ix),
-        |df AS (SELECT norm, count(DISTINCT doc_id) AS ndocs FROM l
-        |  WHERE norm <> '' GROUP BY norm),
-        |k AS (SELECT l.doc_id, l.i, l.line FROM l LEFT JOIN df ON l.norm = df.norm
-        |  WHERE l.norm = '' OR coalesce(df.ndocs, 0) < 3),
-        |tot AS (SELECT doc_id, count(*) AS n FROM l GROUP BY doc_id),
-        |agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY i) AS text,
-        |    count(*) AS kept FROM k GROUP BY doc_id)
-        |SELECT tot.doc_id, coalesce(agg.text, '') AS text,
-        |  CAST(tot.n - coalesce(agg.kept, 0) AS BIGINT) AS n_dropped
-        |FROM tot LEFT JOIN agg USING (doc_id)
-        |ORDER BY tot.doc_id""".stripMargin,
-    // qc1: the same hash-space weights (md5-derived, mod-centered) summed
-    // per doc — integer margins, so the census is hash-exact.
-    "qc1_linear_classifier" ->
-      s"""WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
-        |w AS (SELECT doc_id, source,
-        |    list_transform(toks, tk -> ${sqlHexVal("md5('7|' || tk)", 6)} % 2001 - 1000) AS ws
-        |  FROM t),
-        |m AS (SELECT doc_id, source, CAST(coalesce(list_sum(ws), 0) AS BIGINT) AS margin FROM w)
-        |SELECT source, margin >= 0 AS predicted_keep, count(*) AS n_docs,
-        |  CAST(sum(margin) AS BIGINT) AS sum_margin
-        |FROM m GROUP BY source, predicted_keep ORDER BY source, predicted_keep""".stripMargin
-  )
+  val families: Seq[Family] = Seq(RelationalQueries, TpchQueries,
+    WindowQueries, CurveQueries, SpatialJoinQueries, CoverageQueries,
+    ClipQueries, ShapeQueries, GeoQueries, CrsQueries, TextQueries,
+    DedupQueries, SketchQueries, ImageQueries, JpegQueries, WebpQueries,
+    RasterQueries, MediaQueries, MlQueries, PipelineQueries)
+
+  /** Every query by name. Verify runs them in this map's iteration order. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    families.flatMap(_.all).map(q => q.name -> q.build).toMap
+
+  /** Each oracled query's DuckDB SQL, built on first read. */
+  lazy val oracleSql: Map[String, String] =
+    families.flatMap(_.all).flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

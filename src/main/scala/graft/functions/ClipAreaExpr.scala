@@ -875,8 +875,8 @@ object ClipExprs {
         throw new IllegalArgumentException(s"null ring at index $ri (malformed WKT?)")
       val r = rings.getArray(ri)
       val n = r.numElements()
-      var xs = new Array[Double](n)
-      var ys = new Array[Double](n)
+      val xs = new Array[Double](n)
+      val ys = new Array[Double](n)
       var i = 0
       while (i < n) {
         if (r.isNullAt(i))
@@ -950,8 +950,8 @@ object ClipExprs {
         throw new IllegalArgumentException(s"null ring at index $ri (malformed WKT?)")
       val r = rings.getArray(ri)
       val n = r.numElements()
-      var xs = new Array[Double](n)
-      var ys = new Array[Double](n)
+      val xs = new Array[Double](n)
+      val ys = new Array[Double](n)
       i = 0
       while (i < n) {
         if (r.isNullAt(i))
@@ -1037,9 +1037,6 @@ object ClipExprs {
       subjY(ri) = ys
       ri += 1
     }
-    def sideVal(px: Double, py: Double, ax: Double, ay: Double,
-        bx: Double, by: Double): Double =
-      (bx - ax) * (py - ay) - (by - ay) * (px - ax)
     // area(subject ∩ triangle a→b→c→a), the clipAreaConvex arithmetic
     // with the convexity re-verify elided (a strictly-convex ear IS one)
     def triArea(a: Int, b: Int, c: Int): Double = {

@@ -94,7 +94,6 @@ object GeohashExprs {
 
   /** Shared kernel: parse + deinterleave. Bits n=5p, lon gets ceil(n/2). */
   def quants(gh: UTF8String, precision: Int): Long = {
-    val n = 5 * precision
     if (gh.numChars() != precision)
       throw new IllegalArgumentException(
         s"geohash id must have exactly $precision characters, got '$gh'")

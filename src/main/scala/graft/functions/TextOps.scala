@@ -85,15 +85,6 @@ object TextOps {
     array_min(transform(hashArr, h => (lit(a) * h + lit(b)) % lit(MinhashP)))
   }
 
-  /** Full MinHash signature as named columns m0..m{n-1} (single-expression
-    * convenience; for bulk scans stage `shingleHashes` first as
-    * Dedup.minhashSignatures does).
-    */
-  def minhashSignature(text: Column, numHashes: Int, shingleK: Int = 3): Seq[Column] = {
-    val hs = shingleHashes(shingles(tokens(text), shingleK))
-    (0 until numHashes).map(j => minhashComponent(hs, j).as(s"m$j"))
-  }
-
   /** 16-bit token-hash array for SimHash: md5-derived, distinct tokens.
     * Materialize this as its OWN projection before `simhash16FromHashes` —
     * the 16 bit-vote aggregates each reference the array, and inlining it

@@ -84,10 +84,6 @@ object Composite {
         col("best.s").as(scoreCol)) ++
         bands.map(b => col(s"best.$b").as(b)): _*)
 
-  /** A3 — running max of a score per pixel (the scalar part of A2). */
-  def maxScore(scenes: DataFrame, pixelKey: Seq[String], scoreCol: String): DataFrame =
-    scenes.groupBy(pixelKey.map(col): _*).agg(max(col(scoreCol)).as(s"max_$scoreCol"))
-
   /** A4/M8 — 2%/98% contrast stretch of every `valueCols` channel per
     * group (image_segmentation.py:43-51), appending `<c>_8bit`. Two-pass:
     * ONE aggregation computes the cuts of all channels (one

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** COVERAGE (UNION) AREA — the dissolve measure zs2-style zonal rollups
@@ -477,7 +477,7 @@ object CoverageArea {
         val it = perPoly.iterator
         while (!in && it.hasNext) {
           var par = false
-          it.next().foreach { case (x1, y1, x2, y2) =>
+          it.next().foreach { case (x1, y1, _, y2) =>
             if ((y1 > my) != (y2 > my) && mx < x1) par = !par // vertical edge at x1==x2
           }
           in = par

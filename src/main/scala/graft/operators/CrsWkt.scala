@@ -266,7 +266,7 @@ object CrsWkt {
       // GDAL WKT1 + the ESRI per-aspect spellings + the WKT2 method name
       case "polar_stereographic" | "polar_stereographic_(variant_b)" |
           "stereographic_north_pole" | "stereographic_south_pole" => "ps"
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"PROJECTION/METHOD '$name' is not implemented (Transverse_Mercator/UTM, " +
           "Mercator_1SP/Pseudo-Mercator, Lambert_Conformal_Conic_2SP, " +
           "Albers_Conic_Equal_Area, Polar_Stereographic)")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 /** JPEG (ITU-T T.81) codec from the public spec — the last pixel-format
@@ -150,7 +150,7 @@ object Jpeg {
     def bit(): Int = {
       if (bitCnt == 0) {
         require(pos < data.length, "entropy stream ran out")
-        var b = data(pos) & 0xff; pos += 1
+        val b = data(pos) & 0xff; pos += 1
         if (b == 0xff) {
           require(pos < data.length, "truncated after 0xFF")
           val m = data(pos) & 0xff

@@ -77,7 +77,7 @@ object Maintenance {
     */
   private def checkedSwap(
       fs: org.apache.hadoop.fs.FileSystem, p: Path, next: Path,
-      retain: Boolean = false): Unit = {
+      retain: Boolean): Unit = {
     val old = new Path(p.toString + ".old")
     if (fs.exists(old)) fs.delete(old, true) // leftover from a crashed run
     val marker = new Path(p.toString + ".compacting")
@@ -341,7 +341,6 @@ object Maintenance {
       keyCols: Seq[String],
       targetFileBytes: Long = 128L << 20,
       retain: Boolean = false): (Long, Long, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     require(keyCols.nonEmpty, "upsertByKeys needs at least one key column")
     // pin ONE evaluation of `updates`: it feeds the dup-key check, the
     // count arithmetic, and the written union — three separate actions

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
@@ -474,7 +474,7 @@ object MultimodalOps {
 
   private def assemblePng(width: Int, height: Int, depth: Int, colorType: Int,
       plte: Option[Array[Byte]], idat: Array[Byte],
-      trns: Option[Array[Byte]] = None,
+      trns: Option[Array[Byte]],
       interlaced: Boolean = false): Array[Byte] = {
     val plteLen = plte.map(12 + _.length).getOrElse(0)
     val trnsLen = trns.map(12 + _.length).getOrElse(0)

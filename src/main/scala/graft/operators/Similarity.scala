@@ -22,12 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  def withCosine(
-      pairs: DataFrame,
-      qVec: String = "q_emb",
-      cVec: String = "c_emb"): DataFrame =
-    pairs.withColumn("score", CosineSimExpr.cosineSim(col(qVec), col(cVec)))
-
   /** Rank the per-query top-k: first prune to k rows per query with the
     * custom TopKPerKey operator (bounded heaps, O(n log k), shuffles at
     * most k rows per query per partition — never the full scored set),

@@ -435,7 +435,6 @@ object Vp8 {
     */
   private def predictB(plane: Array[Int], stride: Int, x0: Int, y0: Int,
       mode: Int, ar: Array[Int], mbY: Int, mbX: Int): Unit = {
-    @inline def px(c: Int, r: Int): Int = plane((y0 + r) * stride + x0 + c)
     @inline def set(c: Int, r: Int, v: Int): Unit =
       plane((y0 + r) * stride + x0 + c) = v
     // edge conventions: row -1 is 127 above the frame, col -1 is 129

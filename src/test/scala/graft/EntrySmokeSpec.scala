@@ -3,9 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** t1 smoke (SURVEY.md §5.1): every declared query runs at sf0.001 and the
-  * flagship returns rows. Oracle keys must be a subset of query keys and
-  * column names must line up with the oracle SQL aliases (the driver's
-  * compare sorts columns by name).
+  * flagship returns rows. The registry's shape is pinned: names unique
+  * across the family files, every oracle belongs to a query, and only the
+  * rows-only queries lack one.
   */
 class EntrySmokeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -70,9 +70,18 @@ class EntrySmokeSpec extends AnyFunSuite {
         "oracles) deliberately:\n" + drift.mkString("\n"))
   }
 
-  test("oracleSql keys ⊆ queries keys") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracle entries without queries: $missing")
+  test("registry shape: unique names across families, 334 queries, 332 oracled") {
+    // `queries` is a Map, so a name registered twice would silently keep
+    // only the last definition; count across the families instead.
+    val all = SparkEntry.families.flatMap(_.all)
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"names registered more than once: $dups")
+    assert(all.size == 334)
+    assert(SparkEntry.queries.keySet == all.map(_.name).toSet)
+    assert(SparkEntry.oracleSql.size == 332)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(all.filter(_.oracle.isEmpty).map(_.name).toSet ==
+      Set("m1_rf_classify", "m5_segment_polygonize"))
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>
