@@ -66,9 +66,16 @@ object BpeTrain {
     // and each round evaluates exactly ONE fold. localCheckpoint is
     // semantically transparent (BpeSpec + the bpe2 oracle gate both
     // cover it); the argmax total order makes the learned table
-    // partitioning-independent anyway.
-    var seg = words.select(col("w"), col("n"), split(col("w"), "").as("state"))
+    // partitioning-independent anyway. Each checkpoint's blocks are
+    // released once the next one has materialized (localCheckpoint is
+    // eager, and the new table has no lineage back to the old), and the
+    // last on return, so executor storage holds one table, not K.
+    def stored(df: DataFrame) = df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    var held = words.select(col("w"), col("n"), split(col("w"), "").as("state"))
       .localCheckpoint()
+    var seg = held
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var exhausted = false
     while (!exhausted && learned.size < k) {
@@ -101,10 +108,14 @@ object BpeTrain {
         seg = seg.withColumn("state", applyMerge(col("state"), l, r))
         // flatten the lineage every round (skip the last — nothing reads
         // it): one fold evaluated per round instead of a growing chain
-        if (learned.size < k)
+        if (learned.size < k) {
           seg = seg.localCheckpoint()
+          stored(held).foreach(_.unpersist(blocking = false))
+          held = seg
+        }
       }
     }
+    stored(held).foreach(_.unpersist(blocking = false))
     learned.toSeq
   }
 

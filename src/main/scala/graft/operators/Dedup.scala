@@ -561,12 +561,12 @@ object Dedup {
 
   /** SemDeDup-style SEMANTIC dedup (Abbas et al. 2023, arXiv:2303.09540 —
     * the embedding-space sibling of the MinHash family): quantize the
-    * corpus onto `centroidDf`'s cells (broadcast argmin, the e3c/km1
-    * quantizer), compute pairwise cosine WITHIN cells only, and of every
-    * near-dup pair (cos ≥ threshold) drop the vector MORE similar to its
-    * cell centroid — the paper keeps the most atypical member of a
-    * duplicate family, preserving diversity. Dominance is the one-pass
-    * pairwise rule (lexicographic (c_sim, id), deterministic tie-break);
+    * corpus onto `centroidDf`'s cells (the nearest-cell map over the
+    * collected table, the e3c/km1 quantizer), compute pairwise cosine
+    * WITHIN cells only, and of every near-dup pair (cos ≥ threshold)
+    * drop the vector MORE similar to its cell centroid — the paper keeps
+    * the most atypical member of a duplicate family, preserving
+    * diversity. Dominance is the one-pass pairwise rule (lexicographic (c_sim, id), deterministic tie-break);
     * the CC-exact family variant composes with Graph.connectedComponents
     * (cc1) when whole-family resolution is needed.
     *
@@ -576,7 +576,7 @@ object Dedup {
     * are unreachable BY CONTRACT (that is the recall/cost trade the
     * technique is). The assignment subtree is referenced THREE times in
     * the lazy plan (pair left, pair right, output spine) — deliberate:
-    * three linear argmin scans beat persisting a corpus-sized
+    * three linear nearest-cell maps beat persisting a corpus-sized
     * (id, vector, cell) intermediate at 100 TB, and the minimum for
     * pairwise semantics without a cache is exactly three. Returns
     * (idCol, cell, c_sim, dropped); zero vectors have NULL c_sim, never
@@ -589,8 +589,13 @@ object Dedup {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     import graft.functions.VectorOps
-    val withSim = Similarity.assignCellsKeepVec(corpus, centroidDf, idCol, vecCol)
-      .join(broadcast(centroidDf), Seq("cell"))
+    // the caller's centroid frame, collected once into a local relation:
+    // the assignment's table and the c_sim join both read it without a job
+    val cents = centroidDf.select("cell", "centroid")
+    val local = corpus.sparkSession.createDataFrame(
+      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
+    val withSim = Similarity.assignCellsKeepVec(corpus, local, idCol, vecCol)
+      .join(broadcast(local), Seq("cell"))
       .withColumn("c_sim", VectorOps.cosine(col(vecCol), col("centroid")))
       .select(col(idCol), col("cell"), col(vecCol), col("c_sim"))
     val lhs = withSim.select(col("cell"), col(idCol).as("a"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{CosineSimExpr, VectorOps}
+import graft.functions.{CentroidTable, CosineSimExpr, NearestCellsExpr, VectorOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,18 +95,20 @@ object Similarity {
       .select(col("query_id"), col("__lbl").as("pred_label"), col("votes"))
   }
 
-  /** IVF (inverted-file) ANN: KMeans-partition the corpus into `nLists`
-    * cells (seeded, deterministic), then search only each query's `nProbe`
-    * nearest cells. The 100 TB shape: the corpus is scanned once to build
-    * the index, probes touch nProbe/nLists of the data, centroids are a
-    * tiny broadcast table. Complements `lshTopK` (hash-based) with the
-    * geometry-aware variant.
-    */
-  /** KMeans cell assignment + centroid table for IVF. Index-build cost
-    * control: centroids only need to partition space, not converge — a
-    * handful of Lloyd iterations (random init: 1 pass, vs ~5 for
-    * k-means||) on a seeded, deterministic sample is how production IVF
-    * trains at corpus scale. Probing quality is governed by nProbe.
+  /** The IVF coarse quantizer, fitted on the driver from a bounded
+    * sample. One job collects the training sample: at most
+    * `256 · nLists` finite vectors (no NULL, NaN or infinite component;
+    * 256 points per centroid is FAISS's default cap), the ones with the
+    * smallest `xxhash64(id, seed)`, ties broken by id — so the sample,
+    * and the fit, are the same for any partitioning of the corpus. The
+    * driver then runs `maxIter` Lloyd rounds over it in double precision:
+    * the first `nLists` sample vectors in hash order are the initial
+    * centroids (a deterministic random init), each point goes to the
+    * centroid with the smallest in-order squared-L2 fold (ties to the
+    * lower cell), and a cell left empty keeps its centroid. The result
+    * is rounded to float, the type of the persisted sidecar, so the
+    * table a build assigns with is the table an append or a probe reads
+    * back. Cells are 0 until min(nLists, sample size).
     */
   private def fitIndex(
       corpus: DataFrame,
@@ -114,48 +116,75 @@ object Similarity {
       idCol: String,
       vecCol: String,
       seed: Long,
-      maxIter: Int,
-      trainSample: Double): (DataFrame, DataFrame) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val corpusVec = corpus.select(
-      col(idCol).as("neighbor_id"), col(vecCol).as("c_emb"),
-      array_to_vector(col(vecCol).cast("array<double>")).as("features"))
-    val trainSet =
-      if (trainSample >= 1.0) corpusVec
-      else corpusVec.sample(withReplacement = false, trainSample, seed)
-    val km = new KMeans().setK(nLists).setSeed(seed).setMaxIter(maxIter)
-      .setInitMode("random")
-      .setFeaturesCol("features")
-    val model = km.fit(trainSet)
-    val indexed = model.transform(corpusVec)
-      .select(col("neighbor_id"), col("c_emb"), col("prediction").as("cell"))
-
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat).toSeq)
+      maxIter: Int): CentroidTable = {
+    require(nLists >= 1, s"nLists must be >= 1, got $nLists")
+    // |x| < ∞ is NULL for a NULL vector or component and false for NaN
+    // (Spark orders NaN above ∞) or ±∞: only finite vectors train
+    val pts = corpus
+      .select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
+      .where(forall(col("__v"), x => abs(x) < lit(Double.PositiveInfinity)))
+      .orderBy(xxhash64(col(idCol), lit(seed)), col(idCol))
+      .limit(256 * nLists)
+      .collect()
+      .map(_.getSeq[Double](1).toArray)
+    require(pts.map(_.length).distinct.length <= 1, "IVF training vectors differ in length")
+    val k = math.min(nLists, pts.length)
+    val cent = pts.take(k).map(_.clone)
+    def sqDist(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
+      acc
     }
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    (indexed, centroids.toSeq.toDF("cell", "centroid"))
+    val dim = if (k == 0) 0 else pts(0).length
+    for (_ <- 0 until maxIter) {
+      val sums = Array.fill(k)(new Array[Double](dim))
+      val counts = new Array[Int](k)
+      for (p <- pts) {
+        var c = 0
+        var dc = sqDist(p, cent(0))
+        for (j <- 1 until k) {
+          val dj = sqDist(p, cent(j))
+          if (dj < dc) { c = j; dc = dj }
+        }
+        for (i <- 0 until dim) sums(c)(i) += p(i)
+        counts(c) += 1
+      }
+      for (c <- 0 until k if counts(c) > 0) cent(c) = sums(c).map(_ / counts(c))
+    }
+    new CentroidTable(Array.range(0, k), cent.map(_.map(_.toFloat.toDouble)))
   }
 
-  /** Route each query to its nProbe nearest cells (centroids broadcast). */
+  /** A caller's centroid frame (cell INT, centroid ARRAY of float or
+    * double) collected once to the driver: at most nLists rows of
+    * metadata, the same collect [[trainKMeans]] makes each round.
+    */
+  private[graft] def centroidTable(centroidDf: DataFrame): CentroidTable = {
+    require(centroidDf.schema("cell").dataType == org.apache.spark.sql.types.IntegerType,
+      s"a centroid table's cell must be INT, got ${centroidDf.schema("cell").dataType}")
+    val rows = centroidDf
+      .select(col("cell"), col("centroid").cast("array<double>"))
+      .collect()
+      .map { r =>
+        require(!r.isNullAt(0), "a centroid table's cell ids must not be NULL")
+        val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+        (r.getInt(0),
+          if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray)
+      }
+      .sortBy(_._1)
+    new CentroidTable(rows.map(_._1), rows.map(_._2))
+  }
+
+  /** Route each query to its nProbe nearest cells: one map over the
+    * queries exploding [[NearestCellsExpr]]'s nProbe cells. */
   private def probesOf(
       queries: DataFrame,
-      centroidDf: DataFrame,
+      table: CentroidTable,
       nProbe: Int,
       idCol: String,
-      vecCol: String): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_emb"))
-    val probeW = Window.partitionBy("query_id")
-      .orderBy(col("cdist").asc, col("cell").asc)
-    q.join(broadcast(centroidDf))
-      .withColumn("cdist", VectorOps.l2Distance(col("q_emb"), col("centroid")))
-      .withColumn("prank", row_number().over(probeW))
-      .filter(col("prank") <= nProbe)
-      .select("query_id", "q_emb", "cell")
-  }
+      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("q_emb"),
+      explode(NearestCellsExpr.nearestCells(col(vecCol), table, nProbe)).as("cell"))
 
   private def scoreAndRank(indexed: DataFrame, probes: DataFrame, k: Int): DataFrame = {
     val scored = indexed
@@ -165,6 +194,13 @@ object Similarity {
     rankTopK(scored, k)
   }
 
+  /** IVF (inverted-file) ANN: partition the corpus into `nLists` cells
+    * with the driver-fitted quantizer of [[fitIndex]], then search only
+    * each query's `nProbe` nearest cells. The 100 TB shape: the fit reads
+    * a bounded sample, the corpus is assigned to cells by one map (no
+    * shuffle), and probes touch nProbe/nLists of the data. Complements
+    * `lshTopK` (hash-based) with the geometry-aware variant.
+    */
   def ivfTopK(
       queries: DataFrame,
       corpus: DataFrame,
@@ -174,40 +210,37 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       seed: Long = 42L,
-      maxIter: Int = 5,
-      trainSample: Double = 1.0): DataFrame = {
-    val (indexed, centroidDf) = fitIndex(corpus, nLists, idCol, vecCol, seed, maxIter, trainSample)
-    scoreAndRank(indexed, probesOf(queries, centroidDf, nProbe, idCol, vecCol), k)
+      maxIter: Int = 5): DataFrame = {
+    val table = fitIndex(corpus, nLists, idCol, vecCol, seed, maxIter)
+    scoreAndRank(assignToCentroids(corpus, table, idCol, vecCol),
+      probesOf(queries, table, nProbe, idCol, vecCol), k)
   }
 
-  /** Assign each vector to its nearest centroid (broadcast argmin,
-    * deterministic tie-break on cell id) — the quantizer step shared by
-    * the custom-centroid query path and incremental index append.
+  /** Assign each vector to its nearest centroid — [[NearestCellsExpr]]
+    * with n = 1, one map over the input; the order (L2 distance, then
+    * cell) is the window argmin's, so ties go to the lower cell. The
+    * quantizer step shared by every IVF path and incremental append.
+    * An empty table assigns nothing.
     */
   private def assignToCentroids(
       vectors: DataFrame,
-      centroidDf: DataFrame,
+      table: CentroidTable,
       idCol: String,
       vecCol: String): DataFrame = {
-    val w = Window.partitionBy("neighbor_id").orderBy(col("cdist").asc, col("cell").asc)
-    vectors
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_emb"))
-      .join(broadcast(centroidDf))
-      .withColumn("cdist", VectorOps.l2Distance(col("c_emb"), col("centroid")))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
-      .select("neighbor_id", "c_emb", "cell")
+    val assigned = vectors.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_emb"),
+      NearestCellsExpr.nearestCells(col(vecCol), table, 1).getItem(0).as("cell"))
+    if (table.isEmpty) assigned.where(lit(false)) else assigned
   }
 
   /** IVF ANN with CALLER-PROVIDED centroids — the bring-your-own-quantizer
     * path (pretrained centroids, product-quantizer codebooks, or any
     * deterministic cell seeding). `centroidDf` must carry (cell INT,
-    * centroid ARRAY<FLOAT>); assignment is nearest-centroid with a
-    * deterministic tie-break, so given fixed centroids the PRUNED result
-    * is fully deterministic — which is what makes nProbe < nLists
-    * oracle-checkable (e3c), not just the full-probe identity (e3b).
-    * Same scale shape as [[ivfTopK]]: centroids broadcast, corpus scanned
-    * once, probes touch ~nProbe/nLists of the data.
+    * centroid ARRAY<FLOAT|DOUBLE>) and is collected once; assignment is
+    * nearest-centroid with a deterministic tie-break, so given fixed
+    * centroids the PRUNED result is fully deterministic — which is what
+    * makes nProbe < nLists oracle-checkable (e3c), not just the
+    * full-probe identity (e3b). Same scale shape as [[ivfTopK]]: corpus
+    * and queries each one map, probes touch ~nProbe/nLists of the data.
     */
   def ivfTopKWithCentroids(
       queries: DataFrame,
@@ -217,8 +250,9 @@ object Similarity {
       nProbe: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val indexed = assignToCentroids(corpus, centroidDf, idCol, vecCol)
-    scoreAndRank(indexed, probesOf(queries, centroidDf, nProbe, idCol, vecCol), k)
+    val table = centroidTable(centroidDf)
+    scoreAndRank(assignToCentroids(corpus, table, idCol, vecCol),
+      probesOf(queries, table, nProbe, idCol, vecCol), k)
   }
 
   /** Hard-negative mining for contrastive training (r16): per probe
@@ -226,8 +260,8 @@ object Similarity {
     * hard negative) beside the most-similar SAME-label vector (the
     * positive), both searched through the IVF probe shape
     * (bring-your-own centroids — the e3c/e3f contract), with the margin
-    * pos − neg. One corpus scan + the broadcast centroid argmin + a
-    * per-query window — the ANN scale path, not the all-pairs scorer.
+    * pos − neg. One corpus scan with the nearest-cell map + a per-query
+    * window — the ANN scale path, not the all-pairs scorer.
     * Queries lacking a candidate of either class inside their probed
     * cells DROP (inner join) — widen nProbe to recover them; rows whose
     * label is NULL join neither class (three-valued logic, documented).
@@ -244,8 +278,9 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
-    val indexed = assignToCentroids(corpus, centroidDf, idCol, vecCol)
-    val probes = probesOf(queries, centroidDf, nProbe, idCol, vecCol)
+    val table = centroidTable(centroidDf)
+    val indexed = assignToCentroids(corpus, table, idCol, vecCol)
+    val probes = probesOf(queries, table, nProbe, idCol, vecCol)
     val scored = indexed
       .join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -269,9 +304,9 @@ object Similarity {
   }
 
   /** Persist an IVF index: the cell-assigned corpus as parquet
-    * PARTITIONED BY cell plus a centroid sidecar. Build once, query many
-    * times — the write repartitions by cell so each cell is one compact
-    * file set.
+    * PARTITIONED BY cell plus the fitted centroid sidecar (cell INT,
+    * centroid ARRAY<FLOAT>). Build once, query many times — the write
+    * repartitions by cell so each cell is one compact file set.
     */
   def buildIvfIndex(
       corpus: DataFrame,
@@ -280,18 +315,21 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       seed: Long = 42L,
-      maxIter: Int = 5,
-      trainSample: Double = 1.0): Unit = {
-    val (indexed, centroidDf) = fitIndex(corpus, nLists, idCol, vecCol, seed, maxIter, trainSample)
-    indexed
+      maxIter: Int = 5): Unit = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val table = fitIndex(corpus, nLists, idCol, vecCol, seed, maxIter)
+    assignToCentroids(corpus, table, idCol, vecCol)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    centroidDf.write.mode("overwrite").parquet(s"$path/centroids")
+    table.cells.toSeq.zip(table.centroids.toSeq.map(_.map(_.toFloat).toSeq))
+      .toDF("cell", "centroid")
+      .write.mode("overwrite").parquet(s"$path/centroids")
   }
 
   /** Append new vectors to a persisted IVF index WITHOUT refitting: each
-    * vector is assigned to its nearest EXISTING centroid (broadcast
-    * argmin, deterministic tie-break on cell id) and appended into the
+    * vector is assigned to its nearest EXISTING centroid (the nearest-cell
+    * map, deterministic tie-break on cell id) and appended into the
     * cell partition layout — existing files are never rewritten. This is
     * the incremental-ingest path at corpus scale: centroids only
     * partition space, so assignment quality degrades slowly as the
@@ -303,9 +341,8 @@ object Similarity {
       path: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
-    val spark = newVectors.sparkSession
-    val centroidDf = spark.read.parquet(s"$path/centroids")
-    assignToCentroids(newVectors, centroidDf, idCol, vecCol)
+    val table = centroidTable(newVectors.sparkSession.read.parquet(s"$path/centroids"))
+    assignToCentroids(newVectors, table, idCol, vecCol)
       .repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
   }
@@ -332,8 +369,8 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val centroidDf = spark.read.parquet(s"$indexPath/centroids")
-    val probes = probesOf(queries, centroidDf, nProbe, idCol, vecCol)
+    val table = centroidTable(spark.read.parquet(s"$indexPath/centroids"))
+    val probes = probesOf(queries, table, nProbe, idCol, vecCol)
     val cells = probes.select("cell").distinct().collect().map(_.getInt(0))
     val indexed = spark.read.parquet(s"$indexPath/cells")
       .where(col("cell").isin(cells.map(Integer.valueOf): _*))
@@ -374,15 +411,15 @@ object Similarity {
   }
 
   /** Public cell assignment against a centroid table (cell INT, centroid
-    * ARRAY) — nearest-centroid argmin with the deterministic tie-break.
-    * Returns (idCol, cell).
+    * ARRAY), collected once — nearest-centroid argmin with the
+    * deterministic tie-break. Returns (idCol, cell).
     */
   def assignCells(
       corpus: DataFrame,
       centroidDf: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
-    assignToCentroids(corpus, centroidDf, idCol, vecCol)
+    assignToCentroids(corpus, centroidTable(centroidDf), idCol, vecCol)
       .select(col("neighbor_id").as(idCol), col("cell"))
 
   /** [[assignCells]] keeping the vector column — consumers that need the
@@ -394,24 +431,25 @@ object Similarity {
       centroidDf: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
-    assignToCentroids(corpus, centroidDf, idCol, vecCol)
+    assignToCentroids(corpus, centroidTable(centroidDf), idCol, vecCol)
       .select(col("neighbor_id").as(idCol), col("c_emb").as(vecCol), col("cell"))
 
   /** ONE Lloyd's k-means round as a verifiable relational job: assign
-    * every vector to its nearest centroid (broadcast argmin, deterministic
-    * tie-break), then recompute each cell's centroid with the FIXED-POINT
-    * mean ([[groupCentroids]] — integer sums commute, so the new centroid
-    * table is bit-identical under any partitioning and in the oracle).
-    * Iterating this is distributed k-means training whose whole trajectory
-    * is engine-exact — the deterministic counterpart of the seeded Spark
-    * ML fit that [[fitIndex]] uses where only behavior, not bits, matters.
+    * every vector to its nearest centroid (the nearest-cell map over the
+    * collected table, deterministic tie-break), then recompute each cell's
+    * centroid with the FIXED-POINT mean ([[groupCentroids]] — integer sums
+    * commute, so the new centroid table is bit-identical under any
+    * partitioning and in the oracle). Iterating this is distributed
+    * k-means training whose whole trajectory is engine-exact — the
+    * distributed counterpart of the sample fit on the driver that
+    * [[fitIndex]] uses where only behavior, not bits, matters.
     */
   def lloydRound(
       corpus: DataFrame,
       centroidDf: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val assigned = assignToCentroids(corpus, centroidDf, idCol, vecCol)
+    val assigned = assignToCentroids(corpus, centroidTable(centroidDf), idCol, vecCol)
     groupCentroids(assigned.select(col("cell"), col("c_emb").as(vecCol)), "cell",
         vecCol = vecCol)
       .select(col("cell"), col("centroid"))
@@ -424,7 +462,7 @@ object Similarity {
     * the driver (k·dim doubles — the adjudicated metadata-collect
     * class; Spark ML's own KMeans collects exactly this per iteration)
     * and re-seeding the next round from a LOCAL relation, so every
-    * round's plan is one corpus scan + a broadcast argmin + one
+    * round's plan is one corpus scan + the nearest-cell map + one
     * integer-fixed-point aggregation and the lineage stays FLAT at any
     * round count. The whole trajectory is engine-exact: integer
     * centroid sums commute (bit-identical under any partitioning), the
@@ -824,9 +862,10 @@ object Similarity {
       dSub: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val cells = assignToCentroids(corpus, centroidDf, idCol, vecCol)
+    val table = centroidTable(centroidDf)
+    val cells = assignToCentroids(corpus, table, idCol, vecCol)
       .select("neighbor_id", "cell")
-    val probes = probesOf(queries, centroidDf, nProbe, idCol, vecCol)
+    val probes = probesOf(queries, table, nProbe, idCol, vecCol)
       .select("query_id", "cell")
     // Restrict the code table to PROBED cells before the wide
     // (cell, m, code) ADC lookup: a broadcast LEFT SEMI on the distinct

@@ -68,9 +68,11 @@ object ZoneMap {
   /** Footer-stats build. Returns None when no requested column can be
     * served from footers (the all-fallback case — then the plain scan is
     * strictly simpler). Columns that cannot be served exactly are scanned
-    * (one pass, only those columns) and joined back on the file name —
-    * `input_file_name()` and `FileStatus.getPath.toUri.toString` render
-    * identically (probed: both `file:///...`), which the join relies on.
+    * (one pass, only those columns, collected: one row per file) and
+    * joined back on the file name — `input_file_name()` and
+    * `FileStatus.getPath.toUri.toString` render identically (probed: both
+    * `file:///...`). When the scanned file set differs from the footer
+    * listing's, this returns None and the caller scans every column.
     */
   private def buildFromFooters(
       spark: SparkSession,
@@ -95,36 +97,26 @@ object ZoneMap {
         uri: String, nRows: Long,
         bounds: Map[String, Option[(Any, Any)]], // col -> None=all-null
         failed: Set[String])
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, files.size)))
-    val perFile: Seq[FileStats] =
+    val perFile: Seq[FileStats] = boundedMap(files, math.min(16, math.max(1, files.size))) { st =>
+      import scala.jdk.CollectionConverters._
+      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
       try {
-        import scala.jdk.CollectionConverters._
-        val tasks = files.map { st =>
-          pool.submit(new java.util.concurrent.Callable[FileStats] {
-            def call(): FileStats = {
-              val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
-              try {
-                val md = rdr.getFooter
-                val blocks = md.getBlocks.asScala.toSeq
-                val nRows = blocks.map(_.getRowCount).sum
-                val schema = md.getFileMetaData.getSchema
-                var bounds = Map.empty[String, Option[(Any, Any)]]
-                var failed = Set.empty[String]
-                for (c <- cols) {
-                  footerBounds(c, fields, schema, blocks) match {
-                    case Some(b) => bounds += (c -> b)
-                    case None => failed += c
-                  }
-                }
-                FileStats(st.getPath.toUri.toString, nRows, bounds, failed)
-              } finally rdr.close()
-            }
-          })
+        val md = rdr.getFooter
+        val blocks = md.getBlocks.asScala.toSeq
+        val nRows = blocks.map(_.getRowCount).sum
+        val schema = md.getFileMetaData.getSchema
+        var bounds = Map.empty[String, Option[(Any, Any)]]
+        var failed = Set.empty[String]
+        for (c <- cols) {
+          footerBounds(c, fields, schema, blocks) match {
+            case Some(b) => bounds += (c -> b)
+            case None => failed += c
+          }
         }
-        tasks.map(_.get())
-      } finally pool.shutdown()
+        FileStats(st.getPath.toUri.toString, nRows, bounds, failed)
+      } finally rdr.close()
+    }
     val failedCols = perFile.iterator.flatMap(_.failed).toSet
     val servedCols = cols.filterNot(failedCols)
     if (servedCols.isEmpty) return None
@@ -156,11 +148,36 @@ object ZoneMap {
         val scanned = spark.read.parquet(dir)
           .groupBy(input_file_name().as("file"))
           .agg(fallbackAggs.head, fallbackAggs.tail: _*)
-        footerDf.join(scanned, Seq("file"))
+        // one row per file, like the index itself. The join matches two
+        // renderings of each path and the two listings' rules for hidden
+        // files; where they disagree a file would silently drop out of the
+        // index, so any difference in the file sets falls back to the scan
+        val scannedRows = scanned.collect()
+        if (scannedRows.map(_.getString(0)).toSet != live.map(_.uri).toSet) return None
+        footerDf.join(spark.createDataFrame(
+          java.util.Arrays.asList(scannedRows: _*), scanned.schema), Seq("file"))
       }
     // canonical column order regardless of which side served each column
     Some(joined.select(col("file") +: col("n_rows") +:
       cols.flatMap(c => Seq(col(s"${c}_min"), col(s"${c}_max"))): _*))
+  }
+
+  /** `f` over `items` on a pool of `threads`, results in input order. When
+    * a call throws, the calls still running are interrupted and those not
+    * started are dropped (`shutdownNow`) before the failure propagates, so
+    * no reader outlives the call.
+    */
+  private[graft] def boundedMap[A, B](items: Seq[A], threads: Int)(f: A => B): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    var done = false
+    try {
+      val tasks = items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = f(a)
+      }))
+      val out = tasks.map(_.get())
+      done = true
+      out
+    } finally if (done) pool.shutdown() else pool.shutdownNow()
   }
 
   /** Exact bounds for one column of one file from its footer, or None if

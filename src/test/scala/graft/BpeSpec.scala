@@ -164,6 +164,20 @@ class BpeSpec extends AnyFunSuite {
       s"expected clean exhaustion after 2 merges, got $merges")
   }
 
+  test("trainMerges leaves no checkpoint stored, whatever the merge count") {
+    import graft.operators.BpeTrain
+    val docs = (0 until 60).map(i => s"the rather thin theatre threw other themes $i")
+      .toDF("text")
+    val sc = spark.sparkContext
+    def stored = sc.getPersistentRDDs.keySet
+    val before = stored
+    for (k <- Seq(2, 9)) {
+      assert(BpeTrain.trainMerges(docs, col("text"), k).size == k)
+      val left = stored -- before
+      assert(left.isEmpty, s"k = $k left ${left.size} stored RDDs")
+    }
+  }
+
   test("countText sums word encodes; empty words and extra spaces contribute nothing") {
     val text = "  the when   hello  "
     val exp = Seq("the", "when", "hello")

@@ -77,25 +77,13 @@ class QueryAuditSpec extends AnyFunSuite {
   /** Queries whose intended semantics are all-pairs (or whose broadcast
     * side is bounded by INDEX METADATA rather than a statically provable
     * scalar frame):
-    * - e3/e3b: brute-force cosine top-k IS query×corpus by definition
-    *   (e3b's KMeans cells shrink the per-pair work, but the full-probe
-    *   oracle form scores all pairs); the bucketed/indexed variants are
-    *   the scale path and are plan-asserted in SimilaritySpec.
+    * - e3: brute-force cosine top-k IS query×corpus by definition; the
+    *   bucketed/indexed variants are the scale path. The IVF queries
+    *   (e3b, e3c, e3e, km1, e16, e16b) are not listed: their quantizer
+    *   assigns cells with a map against a collected centroid table, so
+    *   they plan no centroid cross at all.
     * - e8: exact pair scan (bits=0) — the RHP-bucketed form (bits>0) is
     *   the scale path, spec'd in DedupSpec.
-    * - e3c/e3e: corpus × centroid/codebook broadcast crosses are the
-    *   quantizer assignment itself — the small side is index METADATA
-    *   (≤ nLists coarse centroids, ≤ 2^codebits PQ codewords), a
-    *   GROUPED agg whose key domain is the index parameter, so the
-    *   static row-bound check can't prove it; SimilaritySpec asserts
-    *   the index shapes.
-    * - km1: one Lloyd round broadcasts the k current centroids (a
-    *   grouped agg keyed by cluster id ≤ k) against the corpus — the
-    *   assignment step's intended shape.
-    * - e16/e16b: SemDeDup assigns every doc to its nearest of ⌊√N⌋
-    *   centroids — a corpus × centroid-frame broadcast cross, the same
-    *   metadata-bounded shape as km1 (cells grow with √corpus, never
-    *   corpus).
     * - knn1: label transfer scores each unlabeled point against the
     *   broadcast LABELED EXEMPLAR set (a TopK-capped frame, k rows per
     *   class) — bounded by the model size, not the corpus.
@@ -104,23 +92,18 @@ class QueryAuditSpec extends AnyFunSuite {
     *   proves these.
     */
   private val allPairsByDesign = Set(
-    "e3_cosine_topk", "e3b_ivf_topk", "e3c_ivf_pruned", "e3e_ivfpq",
-    "e8_embedding_neardup", "km1_lloyd_round", "e16_semantic_dedup",
-    "e16b_semdedup_sqrtn", "knn1_label_transfer",
+    "e3_cosine_topk", "e8_embedding_neardup", "knn1_label_transfer",
     "tfidf1_top_terms", "pipe1_curation")
 
   /** The allowlist's index-metadata subgroup: their broadcast sides are
-    * centroid/codebook/seed/probe frames whose real shapes (judge-read
-    * from the plans) are either aggregates, caps, or SELECTIVE source
-    * scans with a pushed predicate (km1's `vec_id < 4` seed centroids,
-    * knn1's `vec_id % 10 = 0` probe subset). Selectivity is a data
+    * probe frames whose real shapes (judge-read from the plans) are
+    * either aggregates, caps, or SELECTIVE source scans with a pushed
+    * predicate (knn1's `vec_id % 10 = 0` probe subset). Selectivity is a data
     * property no static check can bound, so the machine gate here is
     * the tripwire that survives honestly: a BARE scan — no aggregate,
     * no cap, no filter at all — broadcast under one of these names is
     * always a bug (someone broadcast the whole corpus). */
-  private val metadataBounded = Set(
-    "e3c_ivf_pruned", "e3e_ivfpq", "km1_lloyd_round",
-    "e16_semantic_dedup", "e16b_semdedup_sqrtn", "knn1_label_transfer")
+  private val metadataBounded = Set("knn1_label_transfer")
 
   /** PATH-wise discipline (ADVICE r15: the old form passed when ANY
     * filter/aggregate existed ANYWHERE in the build side, so a

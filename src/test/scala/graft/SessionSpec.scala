@@ -19,17 +19,26 @@ class SessionSpec extends AnyFunSuite {
       .takeWhile(_ != null).find(d => new java.io.File(d, "build.sbt").isFile)
       .getOrElse(fail("no build.sbt above the working directory"))
 
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+    }
+
+  private def text(f: java.io.File) = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
   test("a session is built only in GraftSession.scala") {
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala"))
-      }
     val files = scalaFiles(new java.io.File(repoRoot, "src"))
     assert(files.exists(_.getName == "SessionSpec.scala"), "scan did not reach the test sources")
     val builderCall = "SparkSession\\s*\\.\\s*builder".r
-    val building = files.filter(f => builderCall.findFirstIn(
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).isDefined)
+    val building = files.filter(f => builderCall.findFirstIn(text(f)).isDefined)
     assert(building.map(_.getName) == Seq("GraftSession.scala"), building.mkString(", "))
+  }
+
+  test("no main source uses Spark ML clustering") {
+    val files = scalaFiles(new java.io.File(repoRoot, "src/main"))
+    assert(files.exists(_.getName == "Similarity.scala"), "scan did not reach the main sources")
+    val using = files.filter(f => text(f).contains("org.apache.spark.ml.clustering"))
+    assert(using.isEmpty, using.mkString(", "))
   }
 
   test("the test session plans with TopKStrategy and SpatialJoinRewrite and writes zstd") {

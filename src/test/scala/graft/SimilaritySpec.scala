@@ -1,8 +1,12 @@
 package graft
 
 import graft.operators.Similarity
-import graft.functions.VectorOps
+import graft.functions.{NearestCellsExpr, VectorOps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class SimilaritySpec extends AnyFunSuite {
@@ -137,6 +141,150 @@ class SimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pruned.nonEmpty)
     pruned.foreach { case (q, n) => assert(q % 3 == n % 3, s"($q,$n) crossed clusters") }
+  }
+
+  // ---- the nearest-cell kernel against the window argmin it replaced ----
+
+  /** The old formulation, kept as the oracle: broadcast cross join with
+    * every centroid, then the `n` first rows of the (L2 distance, cell)
+    * window per vector. */
+  private def windowNearest(vectors: DataFrame, centroids: DataFrame, n: Int): Seq[(Long, Int)] = {
+    val w = Window.partitionBy("vec_id").orderBy(col("cdist").asc, col("cell").asc)
+    vectors.join(broadcast(centroids))
+      .withColumn("cdist", VectorOps.l2Distance(col("embedding"), col("centroid")))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= n)
+      .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+  }
+
+  private def kernelNearest(vectors: DataFrame, centroids: DataFrame, n: Int): Seq[(Long, Int)] =
+    vectors.select(col("vec_id"), explode(NearestCellsExpr.nearestCells(col("embedding"),
+        Similarity.centroidTable(centroids), n)).as("cell"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+
+  private def kernelFixture: (DataFrame, DataFrame, DataFrame) = {
+    def f(x: Double) = java.lang.Float.valueOf(x.toFloat)
+    val rnd = new scala.util.Random(23)
+    val random = (0 until 40).map(i => Row(i.toLong, Seq.fill(3)(f(rnd.nextInt(9) * 0.5))))
+    val special = Seq(
+      Row(100L, Seq(f(1), f(0), f(0))),          // equidistant from cells 42 and -5
+      Row(101L, Seq(f(Double.NaN), f(0), f(0))), // NaN component: every distance NaN
+      Row(102L, null),                           // NULL embedding: every distance NULL
+      Row(103L, Seq(f(1), null, f(0))),          // NULL component
+      Row(104L, Seq(f(1), f(2))),                // shorter than the centroids
+      Row(105L, Seq(f(0), f(0), f(0))))
+    val vectors = spark.createDataFrame(java.util.Arrays.asList(random ++ special: _*),
+      StructType(Seq(StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)))))
+    // float centroids, cell ids unsorted, negative and far from 0..k-1
+    val floatCents = Seq((42, Array(0f, 0f, 0f)), (-5, Array(2f, 0f, 0f)),
+      (7, Array(0f, 3f, 0f)), (100, Array(2.5f, 2.5f, 2.5f))).toDF("cell", "centroid")
+    // double centroids: a NULL component sorts its cell first for every
+    // vector, a NaN component last
+    val doubleCents = spark.createDataFrame(java.util.Arrays.asList(
+        Row(6, Seq[Any](1.0, 1.0, 1.0)), Row(1, Seq[Any](0.0, 0.0, 0.0)),
+        Row(4, Seq[Any](1.0, null, 0.0)), Row(9, Seq[Any](Double.NaN, 0.0, 0.0)),
+        Row(2, Seq[Any](0.5, 0.5, 0.5))),
+      StructType(Seq(StructField("cell", IntegerType),
+        StructField("centroid", ArrayType(DoubleType)))))
+    (vectors, floatCents, doubleCents)
+  }
+
+  test("nearest-cell kernel assigns the window argmin's cell: ties, NaN, NULL, float and double centroids") {
+    val (vectors, floatCents, doubleCents) = kernelFixture
+    for (cents <- Seq(floatCents, doubleCents)) {
+      val oracle = windowNearest(vectors, cents, 1)
+      assert(oracle.size == 46)
+      assert(kernelNearest(vectors, cents, 1) == oracle)
+      assert(Similarity.assignCells(vectors, cents).collect()
+        .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted == oracle)
+    }
+    val byId = kernelNearest(vectors, floatCents, 1).toMap
+    assert(byId(100L) == -5, "an exact tie goes to the lower cell")
+    assert(Seq(101L, 102L, 103L, 104L).forall(byId(_) == -5), "NaN and NULL distances tie")
+    // a NULL distance sorts first; where every distance is NULL the lowest cell wins
+    assert(kernelNearest(vectors, doubleCents, 1).forall { case (id, cell) =>
+      cell == (if (Set(102L, 103L, 104L)(id)) 1 else 4)
+    })
+    // from 105 the squared distances are 1 and 1 + 2^-52, whose square
+    // roots are both 1.0: a tie, so the lower cell wins
+    val sqrtTie = Seq((10, Array(1f, 0f, 0f)), (3, Array(1f, math.pow(2, -26).toFloat, 0f)))
+      .toDF("cell", "centroid")
+    assert(kernelNearest(vectors, sqrtTie, 1) == windowNearest(vectors, sqrtTie, 1))
+    assert(kernelNearest(vectors, sqrtTie, 1).toMap.apply(105L) == 3)
+    // interpreted eval takes the same kernel as the generated code
+    val conf = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(kernelNearest(vectors, floatCents, 2) == windowNearest(vectors, floatCents, 2))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("nearest-cell kernel with n > 1 returns the window's probe set") {
+    val (vectors, floatCents, doubleCents) = kernelFixture
+    for (cents <- Seq(floatCents, doubleCents); n <- Seq(2, 3, 9)) {
+      val oracle = windowNearest(vectors, cents, n)
+      assert(oracle.size == 46 * math.min(n, cents.count().toInt))
+      assert(kernelNearest(vectors, cents, n) == oracle, s"n = $n")
+    }
+  }
+
+  test("the IVF fit is repeatable and independent of the corpus's partitioning") {
+    val rnd = new scala.util.Random(17)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_fit").toString + "/corpus"
+    (0L until 600L).map(i => (i, Array.fill(4)(rnd.nextFloat() * 2f - 1f)))
+      .toDF("vec_id", "embedding").repartition(5).write.parquet(dir)
+    // 600 rows over a sample cap of 256 · 2: the hash order picks the sample
+    def fit(corpus: DataFrame): (Seq[(Int, Seq[Int])], Seq[(Long, Int)]) = {
+      val path = java.nio.file.Files.createTempDirectory("graft_ivf_fit_idx").toString
+      Similarity.buildIvfIndex(corpus, path, nLists = 2)
+      (spark.read.parquet(s"$path/centroids").collect()
+          .map(r => (r.getInt(0), r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits))).toSeq.sortBy(_._1),
+        spark.read.parquet(s"$path/cells").select("neighbor_id", "cell").collect()
+          .map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted)
+    }
+    val one = fit(spark.read.parquet(dir).coalesce(1))
+    assert(one._1.map(_._1) == Seq(0, 1) && one._2.size == 600)
+    assert(one._2.map(_._2).distinct.size == 2, "both cells hold vectors")
+    assert(fit(spark.read.parquet(dir).coalesce(1)) == one)
+    assert(fit(spark.read.parquet(dir).repartition(7)) == one)
+  }
+
+  test("ivfTopK over a 2k-row frame fires at most 8 Spark jobs") {
+    val corpus = spark.range(2000).select(col("id").as("vec_id"),
+      array((1 to 16).map(j => sin(col("id") * j).cast("float")): _*).as("embedding"))
+    val sc = spark.sparkContext
+    val group = "ivf-job-count"
+    val marker = "ivf-job-count-drain"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => markerJob = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val n = try Similarity.ivfTopK(corpus.filter(col("vec_id") % 20 === 0), corpus,
+        k = 10, nLists = 16, nProbe = 4).collect().length
+      finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(n > 0 && n <= 100 * 10)
+      assert(jobs.get >= 1 && jobs.get <= 8, s"ivfTopK fired ${jobs.get} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("persisted IVF index matches the in-memory path and prunes at the source") {

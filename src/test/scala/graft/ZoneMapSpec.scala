@@ -182,6 +182,46 @@ class ZoneMapSpec extends AnyFunSuite {
       canon(ZoneMap.buildByScan(spark.read.parquet(pdir), Seq("k", "a"))))
   }
 
+  test("a footer/scan file-set mismatch falls back to the scan build, never a partial index") {
+    // Spark's file listing reads a root file named `_x=1.parquet` (a leading
+    // underscore hides a file only without `=`); the footer listing skips
+    // it. `s` is a fallback column, so the footer build joins on file names
+    val dir = java.nio.file.Files.createTempDirectory("zm_guard").toString
+    val df = (1 to 200).map(i => (i.toLong, s"tag$i")).toDF("k", "s")
+    df.repartitionByRange(2, col("k")).write.mode("overwrite").parquet(dir)
+    val other = java.nio.file.Files.createTempDirectory("zm_guard_src").toString
+    (500 to 520).map(i => (i.toLong, s"tag$i")).toDF("k", "s")
+      .coalesce(1).write.mode("overwrite").parquet(other)
+    val part = new java.io.File(other).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(part.toPath, new java.io.File(dir, "_x=1.parquet").toPath)
+    def canon(d: org.apache.spark.sql.DataFrame) = d.orderBy("file").collect().map(_.toSeq).toSeq
+    val scan = canon(ZoneMap.buildByScan(spark.read.parquet(dir), Seq("k", "s")))
+    assert(scan.size == 3, "the scan reads the underscore-equals file")
+    assert(canon(ZoneMap.build(spark, dir, Seq("k", "s"))) == scan)
+  }
+
+  test("a failing footer read cancels the reads still running before it propagates") {
+    val threads = 4
+    val started = new java.util.concurrent.CountDownLatch(threads - 1)
+    val interrupted = new java.util.concurrent.CountDownLatch(threads - 1)
+    val e = intercept[java.util.concurrent.ExecutionException] {
+      ZoneMap.boundedMap(0 until threads, threads) { i =>
+        if (i == 0) {
+          started.await(30, java.util.concurrent.TimeUnit.SECONDS)
+          throw new java.io.IOException("corrupt footer")
+        }
+        started.countDown()
+        try Thread.sleep(60000)
+        catch { case _: InterruptedException => interrupted.countDown() }
+        i
+      }
+    }
+    assert(e.getCause.getMessage == "corrupt footer")
+    assert(interrupted.await(10, java.util.concurrent.TimeUnit.SECONDS),
+      s"${interrupted.getCount} reads still running after the failure")
+    assert(ZoneMap.boundedMap(Seq(3, 1, 2), 2)(_ * 10) == Seq(30, 10, 20))
+  }
+
   test("all-NULL files are skipped for range predicates (NULL never matches)") {
     val dir = java.nio.file.Files.createTempDirectory("zm_null").toString
     val some = Seq((1L, java.lang.Long.valueOf(5L)), (2L, java.lang.Long.valueOf(9L)))
